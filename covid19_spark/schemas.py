@@ -90,16 +90,3 @@ def cast_statewise(df: DataFrame) -> DataFrame:
         F.col("recovered").cast("long").alias("recovered"),
         F.to_timestamp("lastupdatedtime", TS_FMT).alias("last_updated"),
     )
-
-
-def cast_districtwise(df: DataFrame) -> DataFrame:
-    longs = [
-        "confirmed", "active", "recovered", "deceased",
-        "deltaConfirmed", "deltaRecovered", "deltaDeceased",
-    ]
-    return df.select(
-        "state",
-        "district",
-        *[F.col(c).cast("long").alias(c) for c in longs],
-        "notes",
-    )

@@ -34,6 +34,12 @@ STATE_CODES = {
 }
 
 
+def _state_code(stat: dict) -> str:
+    """Short table label of ``stat["state"]``; "None" for a name outside
+    ``STATE_CODES`` (or no name at all)."""
+    return STATE_CODES.get(stat.get("state", ""), "None")
+
+
 def friendly_time(last_updated: str) -> str | None:
     """``d/MM/yyyy HH:mm:ss`` → ``MMMM dd, hh:mm a`` (``Utils.java:30-38``);
     tolerates 1- or 2-digit day; None on parse failure."""
@@ -214,7 +220,7 @@ def build_state_summary_alert_text(
         if not daily and c_c < 1 and c_r < 1 and c_d < 1:
             continue
         vals = (d_c, d_r, d_d) if daily else (c_c, c_r, c_d)
-        text += f"{STATE_CODES.get(stat['state']):<5}|{vals[0]:>7}|{vals[1]:>7}|{vals[2]:>6}\n"
+        text += f"{_state_code(stat):<5}|{vals[0]:>7}|{vals[1]:>7}|{vals[2]:>6}\n"
     text += "----------------------------\n"
     tvals = (
         (
@@ -229,8 +235,7 @@ def build_state_summary_alert_text(
             int(total.get("current_deaths") or 0),
         )
     )
-    code = STATE_CODES.get(total.get("state", ""), "None")
-    text += f"{code:<5}|{tvals[0]:>7}|{tvals[1]:>7}|{tvals[2]:>6}\n</pre>"
+    text += f"{_state_code(total):<5}|{tvals[0]:>7}|{tvals[1]:>7}|{tvals[2]:>6}\n</pre>"
     return text
 
 

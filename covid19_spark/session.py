@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
 
 def get_spark(
     app_name: str = "covid19_spark",
@@ -24,14 +28,6 @@ def get_spark(
     Env overrides: ``SPARK_GRAFT_CPUS`` → master local[N] and shuffle
     partition count, matching the driver's bench invocation.
     """
-    # Bridge google.protobuf from a vendored runtime BEFORE the JVM starts
-    # (workers inherit PYTHONPATH through the JVM env) so the
-    # transformWithStateInPandas binding is runnable; no-op where protobuf
-    # is properly installed or absent. See streaming/tws_delta.py.
-    from covid19_spark.streaming.tws_delta import ensure_protobuf_env
-
-    ensure_protobuf_env()
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -67,10 +63,7 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # Streaming state: RocksDB provider = disk-backed per-key state, the
         # analogue of the reference's RocksDB stores (SURVEY §4).
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -141,24 +141,6 @@ def read_topic_stream(
     return decode_json_value(raw, schema)
 
 
-def read_topic_batch(
-    spark: SparkSession,
-    topic: str,
-    schema: T.StructType,
-    bootstrap: str = "localhost:9092",
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
-    **kwargs,
-) -> DataFrame:
-    """Bounded batch read of one topic (poll-style S6 twin of
-    ``read_topic_stream``), JSON values decoded to ``schema``."""
-    spec = batch_reader_spec(
-        topic, bootstrap, starting_offsets, ending_offsets, **kwargs
-    )
-    raw = spark.read.format(spec["format"]).options(**spec["options"]).load()
-    return decode_json_value(raw, schema)
-
-
 def encode_json_value(
     df: DataFrame, key_col: Column, headers_col: Column | None = None
 ) -> DataFrame:

@@ -68,10 +68,3 @@ def write_meta_table(dirpath: str, table: pa.Table) -> None:
         table, os.path.join(dirpath, "part-00000-meta.snappy.parquet"),
         compression="snappy",
     )
-
-
-def spark_schema_to_arrow(schema_ddl: list[tuple[str, pa.DataType]]) -> pa.Schema:
-    """Build an arrow schema from (name, type) pairs — a tiny sugar so
-    callers state the Spark-equivalent schema explicitly (DOUBLE →
-    float64, STRING → string, INT → int32, BIGINT → int64)."""
-    return pa.schema(schema_ddl)

@@ -79,11 +79,11 @@ def asof_enrich_kernel(
     value_col: str,
     right_side: str,
 ) -> "tuple[pd.DataFrame | None, tuple]":
-    """Vectorized per-key as-of enrichment over one micro-batch's chunks —
-    shared by the ``applyInPandasWithState`` binding above and the
-    ``transformWithStateInPandas`` twin (``tws_ops``), so both bindings
-    carry identical semantics by construction (the ``delta_kernel``
-    pattern). Returns ``(out_frame_or_None, new_carried_triple)``."""
+    """Vectorized per-key as-of enrichment over one micro-batch's chunks,
+    run by the ``applyInPandasWithState`` binding above with the carried
+    state seeding records before the batch's first reference row (the
+    ``delta_kernel`` pattern). Returns ``(out_frame_or_None,
+    new_carried_triple)``."""
     if not chunks:
         return None, carried
     pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]

@@ -26,50 +26,17 @@ from covid19_spark.streaming.stateful_delta import streaming_running_delta
 from covid19_spark.streaming.windowed import daily_window_agg
 
 
-def stats_delta_stream(
-    snapshots: DataFrame, ts_col: str = "ts", binding: str = "auto"
-) -> DataFrame:
+def stats_delta_stream(snapshots: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Cumulative snapshot stream → per-state delta stream (A1).
 
     Input: state, ts, confirmed/recovered/deaths (cumulative longs).
-    Output adds delta_confirmed/delta_recovered/delta_deaths.
-
-    ``binding`` selects the stateful operator (VERDICT r08 task #5 — the
-    Spark 4 ``transformWithStateInPandas`` surface should be the exercised
-    default, not just a unit-tested twin): ``"auto"`` uses TWS when the
-    protobuf runtime probes available AND the session's state-store
-    provider is RocksDB (TWS refuses other providers; ``get_spark``
-    always configures RocksDB, so production sessions take the TWS path),
-    else ``applyInPandasWithState``; ``"tws"`` / ``"applyInPandas"``
-    force a binding. Both produce the identical output schema and values
-    (shared ``delta_kernel``; equivalence pinned in tests/test_streaming
-    and end-to-end in tests/test_system_integration)."""
-    kwargs = dict(
+    Output adds delta_confirmed/delta_recovered/delta_deaths."""
+    return streaming_running_delta(
+        snapshots,
         key_cols=["state"],
         ts_col=ts_col,
         value_cols=["confirmed", "recovered", "deaths"],
     )
-    if binding == "auto":
-        from covid19_spark.streaming.tws_delta import (
-            ROCKSDB_PROVIDER,
-            tws_runtime_available,
-        )
-
-        provider = snapshots.sparkSession.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        binding = (
-            "tws"
-            if provider == ROCKSDB_PROVIDER and tws_runtime_available()
-            else "applyInPandas"
-        )
-    if binding == "tws":
-        from covid19_spark.streaming.tws_delta import streaming_running_delta_tws
-
-        return streaming_running_delta_tws(snapshots, **kwargs)
-    if binding != "applyInPandas":
-        raise ValueError(f"unknown stateful binding {binding!r}")
-    return streaming_running_delta(snapshots, **kwargs)
 
 
 def daily_states_count(deltas: DataFrame, ts_col: str = "ts") -> DataFrame:

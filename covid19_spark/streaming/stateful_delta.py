@@ -35,13 +35,12 @@ def delta_kernel(
     value_cols: Sequence[str],
     delta_prefix: str,
 ) -> tuple[pd.DataFrame | None, list[float]]:
-    """Vectorized per-key delta kernel shared by both stateful bindings
-    (``applyInPandasWithState`` here, ``transformWithStateInPandas`` in
-    tws_delta.py). A key's micro-batch may arrive as several Arrow chunks:
-    concatenate FIRST, sort once globally by event time, then compute the
-    delta as ``value − shift(value)`` with the carried state seeding row 0.
-    (A per-chunk sort would compute deltas out of event-time order and
-    diverge from the batch lag operator both bindings claim equivalence
+    """Vectorized per-key delta kernel of ``streaming_running_delta``. A
+    key's micro-batch may arrive as several Arrow chunks: concatenate
+    FIRST, sort once globally by event time, then compute the delta as
+    ``value − shift(value)`` with the carried state seeding row 0. (A
+    per-chunk sort would compute deltas out of event-time order and
+    diverge from the batch lag operator the stream claims equivalence
     with.) Returns (output frame or None, updated state)."""
     prev = list(prev)
     if not chunks:

@@ -24,6 +24,8 @@ def test_today_summary_end_to_end(spark):
             ("Delhi", "DL", "5", "5", "0", "0", "08/04/2020 12:00:00"),
             ("Total", "TT", "13", "33", "2", "2", "08/04/2020 22:00:00"),
             ("Goa", "GA", "0", "0", "0", "0", "08/04/2020 09:00:00"),  # zero row skipped
+            # a name outside STATE_CODES gets the Total line's "None" label
+            ("Atlantis", "XX", "3", "3", "0", "0", "08/04/2020 11:00:00"),
         ],
         ["state", "statecode", "active", "confirmed", "deaths", "recovered", "lastupdatedtime"],
     )
@@ -65,6 +67,7 @@ def test_today_summary_end_to_end(spark):
     assert "Mah  |     28|      2|     2\n" in text
     assert "Delhi|      5|      0|     0\n" in text
     assert "Goa" not in text  # zero row skipped
+    assert "None |      3|      0|     0\n" in text
     # Total repositioned to the bottom
     assert text.rstrip("</pre>").rstrip().endswith("Total|     33|      2|     2")
 

@@ -220,75 +220,3 @@ def test_streaming_heavy_hitters_checkpoint_recovery(spark, tmp_path):
     assert est["hot"] > 150, est.get("hot")
     assert est["hot"] >= 250 - n // m
     assert est["hot"] <= 250
-
-
-def test_tws_heavy_hitters_matches_apply_twin(spark):
-    """MapState TWS twin: identical final per-shard summaries to the
-    applyInPandasWithState binding on the same two-batch feed (shared
-    mg_update kernel, same sharding) — and the same accumulation-across-
-    batches property for the global heavy hitter."""
-    import shutil
-    import tempfile
-
-    from covid19_spark.streaming.heavy_hitters_stream import streaming_heavy_hitters
-    from covid19_spark.streaming.tws_delta import (
-        ROCKSDB_PROVIDER,
-        tws_runtime_available,
-    )
-    from covid19_spark.streaming.tws_ops import streaming_heavy_hitters_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-
-    d = tempfile.mkdtemp(prefix="hhtws_")
-    m, shards = 16, 4
-    batch1 = ["hot"] * 200 + [f"tail{j}" for j in range(150)]
-    batch2 = ["hot"] * 300 + [f"mid{j}" for j in range(10) for _ in range(40)]
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        for i, items in enumerate((batch1, batch2)):
-            spark.createDataFrame(
-                [(x,) for x in items], "item string"
-            ).coalesce(1).write.parquet(f"{d}/src/f{i}")
-
-        def run(builder, name, ckpt):
-            stream = (
-                spark.readStream.schema("item string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{d}/src/*")
-            )
-            q = (
-                builder(stream, "item", capacity=m, shards=shards)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-            rows = spark.table(name).collect()
-            latest = {}
-            for r in rows:
-                latest[r.shard] = max(latest.get(r.shard, 0), r.emission)
-            return {
-                (r.shard, r.item): r.est
-                for r in rows
-                if r.emission == latest[r.shard]
-            }
-
-        tws = run(streaming_heavy_hitters_tws, "hh_tws", f"{d}/ck1")
-        ref = run(streaming_heavy_hitters, "hh_ref", f"{d}/ck2")
-        assert tws == ref
-        hot = {k: v for k, v in tws.items() if k[1] == "hot"}
-        assert len(hot) == 1 and next(iter(hot.values())) > 300 - (
-            len(batch1) + len(batch2)
-        ) // m
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-        shutil.rmtree(d, ignore_errors=True)

@@ -4,13 +4,13 @@ batch-vs-streaming equivalence for the stateful delta (SURVEY §7.3.3)."""
 import datetime as dt
 import shutil
 import tempfile
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid19_spark.operators.delta import running_delta
+from covid19_spark.operators.rollup import daily_rollup
 from covid19_spark.streaming.pipelines import (
     alert_fanout,
     daily_states_count,
@@ -90,7 +90,10 @@ def test_streaming_delta_equals_batch_lag(stream_env):
         ) == expected[(r.state, r.ts)], r
 
 
-def test_streaming_delta_state_carries_across_batches(stream_env):
+@pytest.mark.parametrize("provider", ["default", "rocksdb"])
+def test_streaming_delta_state_carries_across_batches(stream_env, provider, request):
+    if provider == "rocksdb":
+        request.getfixturevalue("rocksdb_state_store")
     spark, d, src, ckpt = stream_env
     import os
 
@@ -526,10 +529,9 @@ def test_streaming_asof_enrich_matches_batch_asof_join(stream_env):
 
 
 def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
-    """The shared stateful-delta kernel (used by BOTH the
-    applyInPandasWithState and transformWithStateInPandas bindings) must
-    concat-then-sort: chunked, out-of-order arrival gives the same deltas as
-    one sorted frame, with state seeding row 0."""
+    """The stateful-delta kernel must concat-then-sort: chunked,
+    out-of-order arrival gives the same deltas as one sorted frame, with
+    state seeding row 0."""
     import pandas as pd
 
     from covid19_spark.streaming.stateful_delta import delta_kernel
@@ -557,74 +559,6 @@ def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
     # empty input: state passes through untouched, no output frame
     out_e, prev_e = delta_kernel([], [5.0], ["state"], "ts", ["confirmed"], "delta_")
     assert out_e is None and prev_e == [5.0]
-
-
-def test_tws_delta_equals_batch_lag_and_carries_state(stream_env):
-    """transformWithStateInPandas twin (Spark 4.x StatefulProcessor): same
-    output as the batch lag operator, and state carries across micro-batches
-    on the RocksDB provider. Skips where the protobuf runtime TWS needs is
-    absent (this container); the shared kernel is covered above either way."""
-    from covid19_spark.streaming.tws_delta import (
-        ROCKSDB_PROVIDER,
-        streaming_running_delta_tws,
-        tws_runtime_available,
-    )
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-
-    spark, d, src, ckpt = stream_env
-    import os
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        os.makedirs(src)
-        spark.createDataFrame(SNAPSHOTS[:2], SNAP_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        stream = spark.readStream.schema(SNAP_SCHEMA).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
-        q = (
-            streaming_running_delta_tws(
-                stream, ["state"], "ts", ["confirmed", "recovered", "deaths"]
-            )
-            .writeStream.format("memory")
-            .queryName("tws_delta")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # late micro-batch: state must remember Assam confirmed=27
-            spark.createDataFrame(SNAPSHOTS[2:], SNAP_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            q.processAllAvailable()
-            out = spark.table("tws_delta").collect()
-        finally:
-            q.stop()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-    batch_df = spark.createDataFrame(SNAPSHOTS, SNAP_SCHEMA)
-    expected = {
-        (r.state, r.ts): (r.delta_confirmed, r.delta_recovered, r.delta_deaths)
-        for r in running_delta(
-            batch_df, ["state"], ["ts"], ["confirmed", "recovered", "deaths"]
-        ).collect()
-    }
-    got = {
-        (r.state, r.ts): (r.delta_confirmed, r.delta_recovered, r.delta_deaths)
-        for r in out
-    }
-    assert got == expected
-    assert got[("Assam", ts("2020-04-09T02:00:00"))][0] == 1.0  # 28 - 27 across batches
 
 
 def test_streaming_lsh_dedup_first_wins_across_batches(stream_env):
@@ -793,37 +727,6 @@ def test_streaming_lsh_store_probe_is_partition_pruned(stream_env):
     assert 200 not in accepted and 201 not in accepted
 
 
-def test_vendored_protobuf_root_appended_to_pythonpath():
-    """ADVICE r08: ensure_protobuf_env must APPEND the vendored App Engine
-    root to PYTHONPATH (as it does to sys.path), so Python workers resolve
-    stdlib/site-packages first — a prepended root would let its unrelated
-    top-level modules (api_server, lib, ...) shadow same-named imports on
-    workers. Run in a subprocess with a controlled PYTHONPATH so the
-    in-process bridge state doesn't mask the behavior."""
-    import os
-    import subprocess
-    import sys
-
-    code = (
-        "import os, sys\n"
-        "from covid19_spark.streaming import tws_delta as t\n"
-        "ok = t.ensure_protobuf_env()\n"
-        "parts = os.environ.get('PYTHONPATH', '').split(os.pathsep)\n"
-        "vend = [p for p in parts if p in t._VENDORED_PROTOBUF_ROOTS]\n"
-        "if ok and vend:\n"
-        "    assert parts.index('/tmp/__sentinel__') < parts.index(vend[0]), parts\n"
-        "    assert parts[-1] == vend[0], parts\n"
-        "print('OK', ok, bool(vend))\n"
-    )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["PYTHONPATH"] = os.pathsep.join(["/tmp/__sentinel__", os.getcwd()])
-    r = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True
-    )
-    assert r.returncode == 0, r.stderr
-    assert r.stdout.startswith("OK")
-
-
 def test_crawl_corpus_stream_cross_batch_dedup(stream_env):
     """Continuous crawl ingestion (streaming twin of crawl_to_corpus): the
     extraction chain runs per micro-batch and the URL/content dedups hold
@@ -976,49 +879,32 @@ def test_crawl_health_stream_classifies_and_windows(stream_env):
     assert len([k for k in out if k[0] == w0 and k[1].startswith("error:")]) == 1
 
 
-def test_chained_topology_equal_across_stateful_bindings(stream_env):
+def test_chained_topology_equals_batch_delta_rollup(stream_env, rocksdb_state_store):
     """The §3.1 chained topology (stateful delta -> daily windowed rollup,
-    one query) must produce IDENTICAL results whichever stateful binding
-    the delta stage uses — so the auto-selection (TWS on TWS-capable
-    sessions) can never change chained-pipeline semantics."""
-    from covid19_spark.streaming.tws_delta import (
-        ROCKSDB_PROVIDER,
-        tws_runtime_available,
-    )
+    one query, on get_spark's RocksDB state store) must equal the batch
+    ``running_delta`` followed by the batch ``daily_rollup``."""
+    spark, d, src, ckpt = stream_env
+    batch_df = spark.createDataFrame(SNAPSHOTS, SNAP_SCHEMA)
+    batch_df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(SNAP_SCHEMA).parquet(src)
+    sums = ["delta_confirmed", "delta_recovered", "delta_deaths"]
+    out = run_stream_to_memory(
+        spark, daily_states_count(stats_delta_stream(stream)), "chain", ckpt,
+        mode="update",
+    ).collect()
+    expected = daily_rollup(
+        running_delta(batch_df, ["state"], ["ts"], ["confirmed", "recovered", "deaths"]),
+        "ts", ["state"], sum_cols=sums, last_cols=["confirmed"],
+    ).collect()
 
-    spark, d, src_base, ckpt_base = stream_env
-    import os
+    def rows(rs):
+        return sorted(
+            (str(r.date), r.state, *(r[f"sum_{c}"] for c in sums), r.last_confirmed,
+             r.n_updates)
+            for r in rs
+        )
 
-    results = {}
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        bindings = ["applyInPandas"]
-        if tws_runtime_available():
-            bindings.append("tws")
-        for binding in bindings:
-            src, ckpt = f"{src_base}_{binding}", f"{ckpt_base}_{binding}"
-            os.makedirs(src)
-            spark.createDataFrame(SNAPSHOTS, SNAP_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = spark.readStream.schema(SNAP_SCHEMA).parquet(src)
-            chained = daily_states_count(stats_delta_stream(stream, binding=binding))
-            out = run_stream_to_memory(
-                spark, chained, f"chain_{binding}", ckpt, mode="update"
-            ).collect()
-            results[binding] = sorted(
-                (str(r.date), r.state, r.sum_delta_confirmed, r.last_confirmed)
-                for r in out
-            )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-    assert len(results["applyInPandas"]) == 4
-    if "tws" in results:
-        assert results["tws"] == results["applyInPandas"]
+    assert rows(out) == rows(expected)
 
 
 def test_crawl_corpus_stream_checkpoint_recovery(stream_env):
@@ -1216,108 +1102,6 @@ def test_stream_stream_full_outer_join_flushes_both_sides(stream_env):
     assert got == [(1, 2), (4, None), (None, 3)]
 
 
-@contextmanager
-def _rocksdb_provider(spark):
-    from covid19_spark.streaming.tws_delta import ROCKSDB_PROVIDER
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-
-
-def test_tws_asof_enrich_matches_apply_in_pandas_twin(stream_env):
-    """VERDICT r10 stretch #7: the transformWithStateInPandas as-of twin
-    shares asof_enrich_kernel with the applyInPandasWithState binding, so
-    the same two-micro-batch feed must produce the identical enrichment map
-    (incl. the carried-state match for event 5 and the equal-ts inclusive
-    match for event 7)."""
-    from covid19_spark.streaming.tws_delta import tws_runtime_available
-    from covid19_spark.streaming.tws_ops import streaming_asof_enrich_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    spark, d, src, ckpt = stream_env
-    import os
-
-    os.makedirs(src)
-    spark.createDataFrame(ASOF_EVENTS_B1, ASOF_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(ASOF_EVENTS_B2, ASOF_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(ASOF_SCHEMA).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    with _rocksdb_provider(spark):
-        out = run_stream_to_memory(
-            spark,
-            streaming_asof_enrich_tws(
-                stream, "user_id", "ts", "event_type", "event_id", "value", "view"
-            ),
-            "tws_asof_stream",
-            ckpt,
-        ).collect()
-    got = {r["event_id"]: (r["ref_id"], r["ref_value"]) for r in out}
-    assert got == {2: (1, 10.0), 4: (None, None), 5: (3, 11.0), 7: (6, 20.0)}
-
-
-def test_tws_dedup_first_wins_across_batches(stream_env):
-    """TWS first-wins dedup: in-batch dup keeps the earliest event time,
-    a cross-batch re-arrival drops against the persistent state row, and
-    a TTL-configured variant (processingTime timeMode) behaves identically
-    while the retention has not elapsed — the reference's 7-day windowed
-    dedup store expressed as native state TTL."""
-    from covid19_spark.streaming.tws_delta import tws_runtime_available
-    from covid19_spark.streaming.tws_ops import streaming_dedup_first_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    spark, d, src, ckpt = stream_env
-    import os
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("payload", T.StringType()),
-        ]
-    )
-    b1 = [
-        (1, ts("2024-01-01T10:05:00"), "later"),
-        (1, ts("2024-01-01T10:00:00"), "first"),   # earliest ts wins in-batch
-        (2, ts("2024-01-01T10:00:00"), "b"),
-    ]
-    b2 = [
-        (1, ts("2024-01-01T11:00:00"), "dup"),     # cross-batch dup: dropped
-        (3, ts("2024-01-01T11:00:00"), "c"),
-    ]
-    for ttl_ms, tag in ((None, "nottl"), (3_600_000, "ttl")):
-        sdir, cdir = f"{src}_{tag}", f"{ckpt}_{tag}"
-        os.makedirs(sdir)
-        spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(sdir)
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(sdir)
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(sdir)
-        with _rocksdb_provider(spark):
-            out = run_stream_to_memory(
-                spark,
-                streaming_dedup_first_tws(stream, ["doc_id"], "ts", ttl_ms=ttl_ms),
-                f"tws_dedup_{tag}",
-                cdir,
-            ).collect()
-        got = {r.doc_id: r.payload for r in out}
-        assert got == {1: "first", 2: "b", 3: "c"}, (tag, got)
-
-
 def test_observe_metrics_and_state_store_health(stream_env):
     """observe() metrics ride each micro-batch's progress event (n_rows,
     event-time bounds, null-key count) and stateOperators expose the store
@@ -1382,156 +1166,3 @@ def test_observe_metrics_and_state_store_health(stream_env):
     # dedup output: null keys pass through dropDuplicates as their own key
     out = {r.doc_id for r in spark.table("obs_dedup").collect()}
     assert out == {1, 2, None}
-
-
-def test_tws_sessionize_gap_and_timer_close(stream_env):
-    """TWS event-time timers: intra-batch gaps close sessions immediately
-    ('gap'); the trailing open session closes when the WATERMARK passes
-    end+gap ('timer' via handleExpiredTimer) — the canonical TWS pattern,
-    with one (start, end, n) summary row per key as state."""
-    from covid19_spark.streaming.tws_delta import tws_runtime_available
-    from covid19_spark.streaming.tws_ops import streaming_sessionize_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    spark, d, src, ckpt = stream_env
-    import os
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    feeds = [
-        # session A: 10:00-10:05; gap > 10 min -> session B opens at 11:00
-        [(1, ts("2024-01-01T10:00:00")), (1, ts("2024-01-01T10:05:00")),
-         (1, ts("2024-01-01T11:00:00"))],
-        # watermark advancers (other key, far future)
-        [(2, ts("2024-01-01T23:00:00"))],
-        [(2, ts("2024-01-01T23:30:00"))],
-    ]
-    os.makedirs(src)
-    for i, rows in enumerate(feeds):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/f{i}")
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(f"{src}/*")
-    with _rocksdb_provider(spark):
-        out = run_stream_to_memory(
-            spark,
-            streaming_sessionize_tws(
-                stream, "user_id", "ts", gap_seconds=600,
-                watermark_delay="10 minutes",
-            ),
-            "tws_sessions",
-            ckpt,
-        ).collect()
-    u1 = sorted(
-        (r.session_start, r.session_end, r.n_events, r.closed_by)
-        for r in out
-        if r.user_id == 1
-    )
-    assert u1 == [
-        (ts("2024-01-01T10:00:00"), ts("2024-01-01T10:05:00"), 2, "gap"),
-        (ts("2024-01-01T11:00:00"), ts("2024-01-01T11:00:00"), 1, "timer"),
-    ]
-
-
-def test_tws_sessionize_late_event_widens_session_start(stream_env):
-    """Round-11 review fix: a late-but-within-watermark event OLDER than
-    the open session's start must LOWER session_start (interval-merge
-    semantics). The previous (t − end) ≤ gap test absorbed the event but
-    kept the too-late start, reporting a wrong session span."""
-    from covid19_spark.streaming.tws_delta import tws_runtime_available
-    from covid19_spark.streaming.tws_ops import streaming_sessionize_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    spark, d, src, ckpt = stream_env
-    import os
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    feeds = [
-        [(1, ts("2024-01-01T10:10:00"))],
-        # late by 5 min (watermark delay 10 min): merges BEFORE the start
-        [(1, ts("2024-01-01T10:05:00"))],
-        # watermark advancers close the session by timer
-        [(2, ts("2024-01-01T23:00:00"))],
-        [(2, ts("2024-01-01T23:30:00"))],
-    ]
-    os.makedirs(src)
-    for i, rows in enumerate(feeds):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/f{i}")
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(f"{src}/*")
-    with _rocksdb_provider(spark):
-        out = run_stream_to_memory(
-            spark,
-            streaming_sessionize_tws(
-                stream, "user_id", "ts", gap_seconds=600,
-                watermark_delay="10 minutes",
-            ),
-            "tws_sessions_late",
-            ckpt,
-        ).collect()
-    u1 = [
-        (r.session_start, r.session_end, r.n_events, r.closed_by)
-        for r in out
-        if r.user_id == 1
-    ]
-    assert u1 == [
-        (ts("2024-01-01T10:05:00"), ts("2024-01-01T10:10:00"), 2, "timer")
-    ]
-
-
-def test_tws_last_n_buffer_truncates_and_carries(stream_env):
-    """TWS ListState: the per-key recent-events buffer appends across
-    micro-batches and truncates to the newest N by event time."""
-    from collections import Counter
-
-    from covid19_spark.streaming.tws_delta import tws_runtime_available
-    from covid19_spark.streaming.tws_ops import streaming_last_n_tws
-
-    if not tws_runtime_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-    spark, d, src, ckpt = stream_env
-    import os
-
-    schema = T.StructType(
-        [
-            T.StructField("uid", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    b1 = [(1, ts(f"2024-01-01T10:0{i}:00"), float(i)) for i in range(1, 6)]  # ts 1..5
-    b2 = [(1, ts(f"2024-01-01T10:0{i}:00"), float(i)) for i in range(6, 9)]  # ts 6..8
-    os.makedirs(src)
-    for i, rows in enumerate((b1, b2)):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{src}/f{i}")
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(f"{src}/*")
-    with _rocksdb_provider(spark):
-        out = run_stream_to_memory(
-            spark,
-            streaming_last_n_tws(stream, "uid", "ts", "v", n=4),
-            "tws_lastn",
-            ckpt,
-        ).collect()
-    counts = Counter(r.v for r in out)
-    # batch 1 emits the truncated buffer {2,3,4,5}; batch 2 emits {5,6,7,8}
-    assert counts == {2.0: 1, 3.0: 1, 4.0: 1, 5.0: 2, 6.0: 1, 7.0: 1, 8.0: 1}

@@ -41,38 +41,9 @@ def env(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.fixture()
-def binding_env(request, env):
-    """env + a stateful-binding selection (VERDICT r08 task #5): the full
-    system test runs over BOTH bindings — applyInPandasWithState and the
-    Spark 4 transformWithStateInPandas surface (live via the vendored
-    protobuf bridge). The TWS leg sets the RocksDB provider TWS requires,
-    exactly as a production get_spark session has it."""
+def test_stream_to_store_to_alert(env, rocksdb_state_store):
     spark, d = env
-    binding = request.param
-    prior = None
-    if binding == "tws":
-        from covid19_spark.streaming.tws_delta import (
-            ROCKSDB_PROVIDER,
-            tws_runtime_available,
-        )
-
-        if not tws_runtime_available():
-            pytest.skip("transformWithStateInPandas needs protobuf (not in env)")
-        prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    yield spark, d, binding
-    if binding == "tws":
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-
-@pytest.mark.parametrize("binding_env", ["applyInPandas", "tws"], indirect=True)
-def test_stream_to_store_to_alert(binding_env):
-    spark, d, binding = binding_env
-    src, ckpt = f"{d}/src_{binding}", f"{d}/ckpt_{binding}"
+    src, ckpt = f"{d}/src", f"{d}/ckpt"
     table_path = f"{d}/statewise_delta"
     os.makedirs(src)
 
@@ -87,7 +58,7 @@ def test_stream_to_store_to_alert(binding_env):
 
     stream = spark.readStream.schema(SNAP_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     q = (
-        stats_delta_stream(stream, binding=binding)
+        stats_delta_stream(stream)
         .writeStream.foreachBatch(upsert)
         .option("checkpointLocation", ckpt)
         .start()
@@ -284,40 +255,6 @@ def test_user_request_round_trip_over_emulated_topics(env):
     today_text = replies["chat-2"].text
     assert "Mah  |     18|      1|     1" in today_text
     assert "Delhi|      4|      1|     1" in today_text
-
-
-def test_stats_delta_auto_binding_selection(env):
-    """The pipeline default ("auto") must pick TWS exactly when the session
-    is TWS-capable: protobuf runtime present AND RocksDB provider set
-    (get_spark's production config). Otherwise applyInPandasWithState."""
-    from covid19_spark.streaming.tws_delta import (
-        ROCKSDB_PROVIDER,
-        tws_runtime_available,
-    )
-
-    spark, d = env
-    os.makedirs(f"{d}/autosrc", exist_ok=True)
-    stream = spark.readStream.schema(SNAP_SCHEMA).parquet(f"{d}/autosrc")
-
-    def op_of(df):
-        return df._jdf.queryExecution().logical().toString().splitlines()[0]
-
-    # conftest session: no provider conf -> auto must fall back
-    assert "FlatMapGroupsInPandasWithState" in op_of(stats_delta_stream(stream))
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        expected = (
-            "TransformWithState"
-            if tws_runtime_available()
-            else "FlatMapGroupsInPandasWithState"
-        )
-        assert expected in op_of(stats_delta_stream(stream))
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
 
 
 def test_crawl_stream_to_corpus_table(env):
