@@ -10,16 +10,20 @@ conversion.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
+from covid19_spark.measure import (  # noqa: E402
+    anchor,
+    nearest_anchor,
+    run,
+    settle,
+    spread_flags,
+    warm,
+)
 from covid19_spark.plans.registry import QUERY_REGISTRY  # noqa: E402
 from covid19_spark.session import get_spark  # noqa: E402
 
@@ -37,101 +41,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("covid19_spark_bench")
 
-    # Warm the JVM/FS/codegen paths so the first query isn't charged startup:
-    # count() over each fact table touches every parquet footer + page-cache
-    # block once, and the toy groupBy compiles the codegen pipeline.
-    from covid19_spark.sources.tables import load_table
-
-    for t in ("region", "lineitem", "orders", "documents", "embeddings", "events"):
-        load_table(spark, t, sf_dir).count()  # events needs the nanos loader
-    spark.range(1000).groupBy((F.col("id") % 2).alias("k")).count().collect()
-    # Warm the shared codegen/executor machinery (hash join, window, explode,
-    # array exprs, sort, shuffle write) with one tiny compound query so the
-    # FIRST timed query isn't charged for compiling templates every later
-    # query reuses. Toy data — runs in well under a second.
-    from pyspark.sql import Window as _W
-
-    a = spark.range(5000).select(
-        "id", (F.col("id") % 7).alias("k"),
-        F.array_repeat(F.col("id").cast("string"), 3).alias("arr"),
-    )
-    b = spark.range(500).select(F.col("id").alias("bid"), (F.col("id") % 7).alias("k"))
-    (
-        a.join(b, "k")
-        .select("id", "k", F.explode("arr").alias("x"))
-        .groupBy("k").agg(F.count(F.lit(1)).alias("c"), F.sum("id").alias("s"))
-        .withColumn("r", F.row_number().over(_W.partitionBy(F.lit(1)).orderBy(F.col("c").desc())))
-        .orderBy("k")
-        .write.format("noop").mode("overwrite").save()
-    )
-    # Warm the array higher-order-function machinery (aggregate/zip_with/
-    # transform/slice/sort_array-of-structs) that every ANN/dedup plan leans
-    # on — without this the alphabetically-first ANN query pays the one-time
-    # compile (ann_cosine_topk was spread-flagged for exactly this).
-    v = F.transform(F.sequence(F.lit(1), F.lit(16)), lambda i: i.cast("double"))
-    (
-        spark.range(2000)
-        .select(v.alias("v1"), F.reverse(v).alias("v2"))
-        .select(
-            F.aggregate(
-                F.zip_with("v1", "v2", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-            ).alias("dot"),
-            F.slice("v1", 2, 5).alias("s"),
-            F.sort_array(
-                F.transform("v1", lambda x: F.struct((-x).alias("n"), x.alias("x")))
-            )[0]["x"].alias("m"),
-        )
-        .groupBy().agg(F.sum("dot").alias("d"), F.count(F.lit(1)).alias("c"))
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    def _anchor_run() -> float:
-        # Calibration anchor (VERDICT r08 task #2): one FIXED pure-Spark
-        # workload — constant synthetic range, modular hash, 1000-key
-        # aggregate, noop sink; zero project code, zero IO — timed at sweep
-        # start and end. Its runtime moves only with box conditions
-        # (CPU contention, JVM heap state), so two rounds' sweeps can be
-        # compared via anchor-normalized query times instead of
-        # cross-referencing a separate quiet-box rerun (r07 and r08 both
-        # ran the official sweep on a ~1.3-1.4x hot box and the raw deltas
-        # needed a day of adjudication). ~1 s on a quiet local[32].
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 400_000_000, 1, 32)
-            .select(
-                (F.col("id") % 1000).alias("k"),
-                F.pmod(F.col("id") * 2654435761, F.lit(4294967296)).alias("h"),
-            )
-            .groupBy("k")
-            .agg(F.sum("h").alias("s"), F.count(F.lit(1)).alias("c"))
-            .write.format("noop").mode("overwrite").save()
-        )
-        return time.perf_counter() - t0
-
-    def _anchor() -> float:
-        # min of 2: the anchor tracks sustained load, not one GC spike
-        runs = [_anchor_run(), _anchor_run()]
-        return round(min(runs), 3)
-
-    def _settle() -> None:
-        # Queries that self-join cache intermediate frames (LSH signatures,
-        # normalized embeddings); drop them so later runs aren't charged for
-        # eviction/GC of a previous run's working set. clearCache does NOT
-        # free localCheckpoint RDDs (connected-components rounds) — those are
-        # cleaned by the ContextCleaner only after the Python-side DataFrame
-        # refs die, so collect Python garbage explicitly. The ContextCleaner
-        # removes dead broadcasts/RDD blocks ASYNCHRONOUSLY — without a
-        # settle step the removal storm (plus the eventual full GC of a 32 g
-        # heap) lands INSIDE the next timed section and charges one query for
-        # its predecessors' garbage (measured: the same query varies
-        # 0.7 s ↔ 10.9 s purely by bench position). Force the collection,
-        # run a trivial job so cleaner messages drain, and give the daemon a
-        # beat — all outside the timings.
-        spark.catalog.clearCache()
-        gc.collect()
-        spark._jvm.System.gc()
-        spark.range(1).count()
-        time.sleep(0.2)
+    warm(spark, sf_dir)
 
     # Each query is timed as min(2 runs) with a full cache-drop + settle
     # between them (VERDICT r05 task #2): the generic warmup above compiles
@@ -156,23 +66,15 @@ def main() -> None:
     anchor_samples: list[list[float]] = []  # [queries_completed, anchor_sec]
 
     def _sample_anchor(pos: int) -> float:
-        a = _anchor()
+        a = anchor(spark)
         anchor_samples.append([pos, a])
-        _settle()
+        settle(spark)
         return a
 
-    def _nearest_anchor(pos: int) -> float:
-        # Median of the 3 samples nearest pos (VERDICT r13 task #1): a
-        # single nearest sample inherits single-sample noise — r13's series
-        # carried one 0.575 s outlier (0.68x the sweep mean) that inflated
-        # ~25 sub-second queries' norms x1.8-x2.5 on unchanged plans. The
-        # median of the 3 nearest is robust to one bad sample while still
-        # tracking intra-sweep drift (the r12 failure a global mean anchor
-        # can't see). With <3 samples (early in the sweep) it degrades to
-        # the median of what exists.
-        near = sorted(anchor_samples, key=lambda s: abs(s[0] - pos))[:3]
-        vals = sorted(a for _, a in near)
-        return vals[len(vals) // 2]
+    def _timed(name: str) -> float:
+        sec = run(spark, QUERY_REGISTRY[name].fn, sf_dir)[0]
+        settle(spark)
+        return sec
 
     anchor_start = _sample_anchor(0)
     # Previous sweep's per-query mins + anchor, for CROSS-SWEEP drift
@@ -208,13 +110,7 @@ def main() -> None:
         if qi and qi % ANCHOR_EVERY == 0:
             _sample_anchor(qi)
         min_pos[name] = qi
-        fn = QUERY_REGISTRY[name].fn
-        runs: list[float] = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            _settle()
+        runs = [_timed(name), _timed(name)]
         # Two runs that disagree badly mean one was hit by a GC/cleaner
         # storm the settle didn't fully absorb (measured: the same query
         # varies 5.3 s ↔ 7.6 s between sweeps); one arbitration run bounds
@@ -226,10 +122,7 @@ def main() -> None:
         if min(runs) > 1.0 and (
             max(runs) > 1.4 * min(runs) or runs[1] > 1.15 * runs[0]
         ):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            _settle()
+            runs.append(_timed(name))
         timings[name] = round(min(runs), 3)
         all_runs[name] = [round(r, 3) for r in runs]
 
@@ -242,6 +135,16 @@ def main() -> None:
     # as a plan regression for a whole round.
     end_pos = len(BENCH_QUERIES)
     _sample_anchor(end_pos)
+
+    def _retime(name: str, record: dict[str, float]) -> None:
+        # one isolated end-of-sweep re-time; the headline min includes it
+        retime = _timed(name)
+        record[name] = round(retime, 3)
+        all_runs[name].append(round(retime, 3))
+        if retime < timings[name]:
+            min_pos[name] = end_pos
+        timings[name] = round(min(timings[name], retime), 3)
+
     drift_retimes: dict[str, float] = {}
     for name, t in sorted(timings.items()):
         prev = prev_norm.get(name)
@@ -261,19 +164,10 @@ def main() -> None:
         # ratio. Raw >2x vs the previous sweep's min earns the same single
         # end-of-sweep re-time even when the normalized ratio looks sane.
         praw = prev_raw.get(name)
-        if t / _nearest_anchor(min_pos[name]) > 1.5 * prev or (
+        if t / nearest_anchor(anchor_samples, min_pos[name]) > 1.5 * prev or (
             praw is not None and praw > 0 and t > 2.0 * praw
         ):
-            fn = QUERY_REGISTRY[name].fn
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            retime = time.perf_counter() - t0
-            _settle()
-            drift_retimes[name] = round(retime, 3)
-            all_runs[name].append(round(retime, 3))
-            if retime < timings[name]:
-                min_pos[name] = end_pos
-            timings[name] = round(min(timings[name], retime), 3)
+            _retime(name, drift_retimes)
 
     # Spread arbitration (VERDICT r11 #3): any query whose in-sweep runs
     # disagreed >1.5x gets ONE isolated re-time at the sweep's end — the
@@ -288,16 +182,7 @@ def main() -> None:
         rs = all_runs[name]
         if name in drift_retimes or min(rs) <= 0.5 or max(rs) <= 1.5 * min(rs):
             continue
-        fn = QUERY_REGISTRY[name].fn
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        retime = time.perf_counter() - t0
-        _settle()
-        spread_retimes[name] = round(retime, 3)
-        all_runs[name].append(round(retime, 3))
-        if retime < timings[name]:
-            min_pos[name] = end_pos
-        timings[name] = round(min(timings[name], retime), 3)
+        _retime(name, spread_retimes)
 
     anchor_end = _sample_anchor(end_pos + ANCHOR_EVERY)
     total = round(sum(timings.values()), 3)
@@ -311,7 +196,8 @@ def main() -> None:
         sum(a for _, a in anchor_samples) / len(anchor_samples), 3
     )
     queries_norm = {
-        n: round(t / _nearest_anchor(min_pos[n]), 3) for n, t in timings.items()
+        n: round(t / nearest_anchor(anchor_samples, min_pos[n]), 3)
+        for n, t in timings.items()
     }
     # "queries" stays min-per-query (round-over-round comparable); "runs"
     # carries every raw run so a load-sensitive query self-identifies
@@ -320,16 +206,13 @@ def main() -> None:
     # ~15 s of uniform environmental drift that a spread column shows at
     # a glance). "spread_flags" lists the queries whose runs disagreed
     # >2x this sweep.
-    spread_flags = sorted(
-        n for n, rs in all_runs.items() if min(rs) > 0.5 and max(rs) > 2.0 * min(rs)
-    )
     full = {
         "metric": "covid19_spark_headline_queries_total_runtime",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "runs": all_runs,
-        "spread_flags": spread_flags,
+        "spread_flags": spread_flags(all_runs),
         "spread_retimes": spread_retimes,
         "drift_retimes": drift_retimes,
         "anchor_sec": anchor_sec,

@@ -43,38 +43,22 @@ substring generalization).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-def _kgram_structs(toks: Column, k: int) -> Column:
-    """ARRAY<STRUCT<pos INT, kh STRING>> of 1-based k-gram window hashes.
+
+def _kgram_structs_sql(toks_sql: str, k: int) -> str:
+    """ARRAY<STRUCT<pos INT, kh STRING>> of 1-based k-gram window hashes
+    (md5 of the space-joined window) over a token-array SQL fragment, as SQL
+    text parsed once (construction-cost discipline, see
+    operators/similarity._E).
 
     Mirrors operators/text.word_shingles: the index sequence is built only
     under a ``size >= k`` guard (sequence() steps downward otherwise), and
     the token array is bound through ``transform(array(toks), ...)`` so the
     underlying split() is evaluated once per row — codegen does not share
-    common subexpressions inside higher-order-function lambdas.
-    """
-
-    def grams(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-        mk = lambda i: F.struct(  # noqa: E731
-            i.alias("pos"), F.md5(F.concat_ws(" ", F.slice(t, i, k))).alias("kh")
-        )
-        return F.when(F.size(t) >= k, F.transform(idx, mk)).otherwise(
-            F.array().cast("array<struct<pos:int,kh:string>>")
-        )
-
-    return F.flatten(F.transform(F.array(toks), grams))
-
-
-def _kgram_structs_sql(toks_sql: str, k: int) -> str:
-    """One-parse SQL twin of ``_kgram_structs`` over a token-array SQL
-    fragment — same guarded index sequence, same md5(concat_ws) windows
-    (construction-cost discipline, see operators/similarity._E). The
-    array+transform binding is preserved so the token expression still
-    evaluates once per row."""
+    common subexpressions inside higher-order-function lambdas."""
     return (
         f"flatten(transform(array({toks_sql}), t -> "
         f"CASE WHEN size(t) >= {k} THEN transform(sequence(1, size(t) - {k - 1}), "

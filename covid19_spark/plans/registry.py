@@ -116,78 +116,7 @@ def load_correctness_artifacts() -> dict[int, set[str]]:
 # at the next edit — a stale leftover costs one redundant sweep slot, never
 # a missed verification (the r05 stale-hand-list failure mode was the
 # opposite: fresh work parked forever).
-_CHANGED_IN_ROUND: dict[str, int] = {
-    # (r13 entries dropped: every one re-verified green in CORRECTNESS_r13.)
-    # r14: index v4 — postings gain the aligned `off` char-offset arrays,
-    # doclen gains per-doc toff/tlen; every query serving from the
-    # rebuilt store re-fronts (values provably unchanged locally — the
-    # driver re-proves), and search_snippets' PLAN changed outright
-    # (offset-served cut + collected-winner static doc_id pruning).
-    "search_snippets": 14,
-    "bm25_topk": 14,
-    "frequent_terms": 14,
-    "prf_expanded_bm25": 14,
-    "hybrid_rrf_topk": 14,
-    "inverted_index_stats": 14,
-    "bm25_incremental_index": 14,
-    "phrase_match": 14,
-    "proximity_match": 14,
-    "bm25_multi_query": 14,
-    "sdm_ranking": 14,
-    # (bm25f_ranking is new in r14: never-verified rank already leads.)
-    # r14 optimization batches 2-13 (OPTIMIZATION_r14.md): every query whose
-    # executed plan or expression construction materially changed — iterative
-    # probe fusion, blocked-verify repartition, SQL-text expression builders,
-    # the with_ordered_index window-offsets rewrite, and the one-SQL ANN
-    # serve statements. All were re-verified locally (full 214/214 sf0.01
-    # oracle on 2026-08-18 plus per-batch family checks); the driver
-    # re-proves. The forced set + the four never-verified r14 queries fill
-    # the 50-query sweep window EXACTLY (pinned by test_registry_order's
-    # window assertion). Seven changed queries are deliberately omitted to
-    # fit, each double-covered by a kept sibling exercising the identical
-    # changed fragment: ngram_jaccard (blocked-verify repartition ==
-    # fuzzy_name_match/containment_pairs), embedding_near_dup +
-    # hard_negatives (norm/cosine fragment == maxsim_topk/vector family),
-    # duplicated_spans (span k-gram text == span_dedup),
-    # simhash_banding_crosscheck / lsh_guard_crosscheck (banding/guard
-    # text == simhash_pairs / lsh_guard_report + lsh_banding_crosscheck),
-    # robots_policy_filter (robots match == frontier_policy_pipeline).
-    # All stay in the plain LRU rotation.
-    "lpa_communities": 14,
-    "pagerank_supply_graph": 14,
-    "dedup_clusters": 14,
-    "dedup_pipeline_e2e": 14,
-    "dedup_incremental": 14,
-    "semantic_dedup": 14,
-    "semantic_dedup_paper_policy": 14,
-    "sq8_cosine_topk": 14,
-    "pq_cosine_topk": 14,
-    "pq_adc_crosscheck": 14,
-    "ivf_cosine_topk": 14,
-    "ivf_probe_crosscheck": 14,
-    "ivfpq_cosine_topk": 14,
-    "ivfpq_probe_crosscheck": 14,
-    "ann_filtered_topk": 14,
-    "ann_index_persist_topk": 14,
-    "maxsim_topk": 14,
-    "part_type_cooccurrence": 14,
-    "trained_quality_filter": 14,
-    "fuzzy_name_match": 14,
-    "containment_pairs": 14,
-    "ivm_stream_replay": 14,
-    "lorenz_concentration": 14,
-    "approx_aggregates": 14,
-    "simhash_pairs": 14,
-    "minhash_lsh": 14,
-    "lsh_banding_crosscheck": 14,
-    "lsh_guard_report": 14,
-    "url_canonical_dedup": 14,
-    "domain_blocklist_filter": 14,
-    "frontier_policy_pipeline": 14,
-    "span_dedup": 14,
-    "topk_users": 14,
-    "zip_join": 14,
-}
+_CHANGED_IN_ROUND: dict[str, int] = {}
 
 
 def derive_front_list(

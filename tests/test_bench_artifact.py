@@ -8,7 +8,8 @@ regression from environmental drift.
 
 The full sweep takes minutes, so these tests exercise the artifact-building
 logic directly: the in-repo BENCH_LOCAL.json (written by the last sweep)
-must carry the schema, and the spread-flag rule is pinned as pure logic.
+must carry the schema, and the spread-flag and anchor-divisor rules that
+``bench.py`` imports from ``covid19_spark.measure`` are pinned as pure logic.
 """
 
 import json
@@ -16,15 +17,10 @@ import os
 
 import pytest
 
+from covid19_spark.measure import nearest_anchor, spread_flags
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH_LOCAL = os.path.join(REPO, "BENCH_LOCAL.json")
-
-
-def _flags(all_runs):
-    # mirror of bench.py's spread rule — keep the two in sync
-    return sorted(
-        n for n, rs in all_runs.items() if min(rs) > 0.5 and max(rs) > 2.0 * min(rs)
-    )
 
 
 def test_spread_flag_rule():
@@ -34,19 +30,16 @@ def test_spread_flag_rule():
         "tiny_noisy": [0.1, 0.4],  # sub-threshold absolute time → ignored
         "borderline": [2.0, 3.9],  # < 2x → not flagged
     }
-    assert _flags(runs) == ["load_sensitive"]
+    assert spread_flags(runs) == ["load_sensitive"]
 
 
 def test_median3_divisor_smooths_single_outlier():
-    # mirror of bench.py's _nearest_anchor — keep the two in sync.
     # r13's failure mode: one 0.575 s sample in an ~0.84 s series made every
     # query nearest that position read x1.5 "slower" on an unchanged plan.
     samples = [[0, 0.85], [25, 0.83], [50, 0.575], [75, 0.86], [100, 0.84]]
 
     def divisor(pos):
-        near = sorted(samples, key=lambda s: abs(s[0] - pos))[:3]
-        vals = sorted(a for _, a in near)
-        return vals[len(vals) // 2]
+        return nearest_anchor(samples, pos)
 
     # queries near the outlier position normalize by a neighboring healthy
     # sample, not the outlier itself
@@ -76,7 +69,7 @@ def test_bench_local_schema():
         assert isinstance(rs, list) and 2 <= len(rs) <= 4
         # the recorded headline number is the min of the raw runs
         assert abs(min(rs) - art["queries"][name]) < 1e-6, name
-    assert art["spread_flags"] == _flags(art["runs"])
+    assert art["spread_flags"] == spread_flags(art["runs"])
     # calibration anchor, interleaved form (VERDICT r08 task #2, reworked
     # r13 task #1): the fixed pure-Spark workload is re-sampled every
     # anchor_every queries; each query normalizes by the sample NEAREST
@@ -112,9 +105,7 @@ def test_bench_local_schema():
     def divisor(pos):
         if rule == "nearest1":
             return min(samples, key=lambda s: abs(s[0] - pos))[1]
-        near = sorted(samples, key=lambda s: abs(s[0] - pos))[:3]
-        vals = sorted(a for _, a in near)
-        return vals[len(vals) // 2]
+        return nearest_anchor(samples, pos)
 
     for name, norm in art["queries_norm"].items():
         want = round(art["queries"][name] / divisor(art["min_pos"][name]), 3)

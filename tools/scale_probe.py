@@ -26,6 +26,7 @@ SCALING.md.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import math
 import os
@@ -37,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from covid19_spark.measure import next_job_id, run, settle, stage_metrics  # noqa: E402
 from covid19_spark.plans.registry import QUERY_REGISTRY  # noqa: E402
 from covid19_spark.session import get_spark  # noqa: E402
 
@@ -188,7 +190,8 @@ def build_scaled_dir(spark, out_dir: str, factor: int) -> None:
 def image_probe(spark, n_ids: int):
     """The q_image_near_dup synth+hash+probe pipeline over n_ids images
     (plus ~24% planted JPEG re-encodes), without the registry's fixed
-    250-id cap."""
+    250-id cap. The hashes are cached and counted while the plan is built;
+    a settle drops them."""
     import numpy as np
     import pandas as pd
 
@@ -228,105 +231,92 @@ def image_probe(spark, n_ids: int):
     media = ids.mapInPandas(synth, schema=MEDIA_SCHEMA)
     hashes = image_dhash(media, use_fake=False).cache()
     hashes.count()
-    n = image_near_dup_pairs(hashes, "media_id", max_hamming=10).count()
-    hashes.unpersist()
-    return n
+    return image_near_dup_pairs(hashes, "media_id", max_hamming=10)
 
 
-
-def crawl_probe(spark, sf_dir: str):
-    """The crawl flagships past their fixture caps (VERDICT r09 task #5):
-    drive crawl_corpus_build / crawl_shards_audit / the blocklist gate over
-    the FULL documents table of ``sf_dir`` (the registry queries cap at
-    400/600 ids by design, so their bench times are scale-constant; the
-    probe scales the underlying pipeline the caps protect)."""
-    from covid19_spark.operators.web import domain_suffixes, host_of
-    from covid19_spark.plans.q_curation import crawl_corpus_build, crawl_shards_audit
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+def _crawl_docs(spark, sf_dir: str):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def corpus():
-        return crawl_corpus_build(docs).count()
 
-    def shards():
-        corpus_df = crawl_corpus_build(docs).select("doc_id", "clean_text")
-        return crawl_shards_audit(corpus_df).count()
+def crawl_to_corpus(spark, sf_dir: str):
+    from covid19_spark.plans.q_curation import crawl_corpus_build
 
-    def blocklist():
-        blocked = ["dom3.com", "dom7.com", "s1.dom4.com", "evil.net"]
-        d = F.col("doc_id")
-        url = F.concat(
-            F.lit("HTTPS://S"), (d % 4).cast("string"),
-            F.lit(".Dom"), (d % 10).cast("string"),
-            F.lit(".Com:443/p/"), d.cast("string"), F.lit("?utm_source=x"),
-        )
-        sfx = domain_suffixes(url)
-        matched = F.filter(sfx, lambda s: s.isin(*blocked))
-        return docs.select(
-            "doc_id",
-            host_of(url).alias("host"),
-            (F.size(matched) > 0).cast("long").alias("blocked"),
-            F.array_min(matched).alias("rule"),
-        ).count()
-
-    return {"crawl_to_corpus": corpus, "crawl_to_shards": shards,
-            "domain_blocklist_filter": blocklist}
+    return crawl_corpus_build(_crawl_docs(spark, sf_dir))
 
 
-def timed(fn, runs: int) -> float:
+def crawl_to_shards(spark, sf_dir: str):
+    from covid19_spark.plans.q_curation import crawl_shards_audit
+
+    corpus_df = crawl_to_corpus(spark, sf_dir).select("doc_id", "clean_text")
+    return crawl_shards_audit(corpus_df)
+
+
+def domain_blocklist_filter(spark, sf_dir: str):
+    from covid19_spark.operators.web import domain_suffixes, host_of
+
+    blocked = ["dom3.com", "dom7.com", "s1.dom4.com", "evil.net"]
+    d = F.col("doc_id")
+    url = F.concat(
+        F.lit("HTTPS://S"), (d % 4).cast("string"),
+        F.lit(".Dom"), (d % 10).cast("string"),
+        F.lit(".Com:443/p/"), d.cast("string"), F.lit("?utm_source=x"),
+    )
+    sfx = domain_suffixes(url)
+    matched = F.filter(sfx, lambda s: s.isin(*blocked))
+    return _crawl_docs(spark, sf_dir).select(
+        "doc_id",
+        host_of(url).alias("host"),
+        (F.size(matched) > 0).cast("long").alias("blocked"),
+        F.array_min(matched).alias("rule"),
+    )
+
+
+# The crawl flagships past their fixture caps: the crawl_corpus_build /
+# crawl_shards_audit / blocklist-gate pipelines over the FULL documents table
+# of an sf dir (the registry queries cap at 400/600 ids by design, so their
+# bench times are scale-constant; the probe scales the underlying pipeline
+# the caps protect).
+CRAWL_PROBES = {
+    "crawl_to_corpus": crawl_to_corpus,
+    "crawl_to_shards": crawl_to_shards,
+    "domain_blocklist_filter": domain_blocklist_filter,
+}
+
+
+def best_of(spark, fn, sf_dir: str, runs: int) -> float:
+    """Min wall seconds of ``runs`` noop-forced runs, settled between."""
     best = math.inf
     for _ in range(runs):
-        t0 = time.time()
-        fn()
-        best = min(best, time.time() - t0)
+        best = min(best, run(spark, fn, sf_dir)[0])
+        settle(spark)
     return best
 
 
-def _stage_metrics(spark) -> list[dict]:
-    """Per-stage IO metrics from the live AppStatusStore (the structure
-    behind the UI/REST API; populated even with spark.ui.enabled=false) —
-    no listener callback server needed from Python."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    store = sc._jsc.sc().statusStore()
-    stages = store.stageList(
-        jvm.java.util.ArrayList(), False, False,
-        gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-    )
-    out = []
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        out.append(
-            {
-                "stage": s.stageId(),
-                "name": s.name().split(" at ")[0][:48],
-                "shuffle_read": s.shuffleReadBytes(),
-                "shuffle_write": s.shuffleWriteBytes(),
-                "spill_mem": s.memoryBytesSpilled(),
-                "spill_disk": s.diskBytesSpilled(),
-                "input": s.inputBytes(),
-            }
-        )
-    return out
+def exponent_row(t1: float, t10: float, factor: int) -> dict:
+    alpha = math.log(t10 / t1) / math.log(factor)
+    return {"t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)}
+
+
+def print_scaling_block(results: dict) -> None:
+    print("\n--- SCALING.md block ---")
+    print("| family | t(1x) s | t(10x) s | exponent |")
+    print("|---|---|---|---|")
+    for name, r in results.items():
+        print(f"| {name} | {r['t1']} | {r['t10']} | {r['alpha']} |")
 
 
 def bytes_probe(spark, name: str, sf_dir: str, n_docs: int) -> dict:
     """Shuffle/storage BYTES for one full run of a registry query (VERDICT
     r08 task #6): wall-time exponents say dedup_pipeline_e2e is exactly
     linear, so its 100 TB cost is set by CONSTANTS — bytes moved per
-    document. Runs the query through a noop sink (full computation; the
-    wall-time probes' ``.count()`` lets Spark prune projections, which
-    would understate bytes), then reads per-stage shuffle read/write +
-    spill from the AppStatusStore and the peak persisted footprint from
-    the RDD storage listing (the eager localCheckpoints are still pinned
-    by the returned frame's lineage at sample time)."""
-    import gc
-    import time as _time
-
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
+    document. Runs the query through a noop sink (full computation), then
+    reads per-stage shuffle read/write + spill of the run's jobs from the
+    AppStatusStore and the peak persisted footprint from the RDD storage
+    listing (the eager localCheckpoints are still pinned by the frame's
+    lineage at sample time, which ``df`` keeps referenced)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
     # drain leftover storage from the PREVIOUS probe run first: the
     # ContextCleaner frees localCheckpoint blocks asynchronously, and a
     # stale block showing up in this run's rddList sample mislabels the
@@ -338,17 +328,16 @@ def bytes_probe(spark, name: str, sf_dir: str, n_docs: int) -> dict:
         if store.rddList(True).size() == 0:
             break
         spark._jvm.System.gc()
-        _time.sleep(0.1)
-    before = _stage_metrics(spark)
-    min_id = max((s["stage"] for s in before), default=-1) + 1
+        time.sleep(0.1)
+    j0 = next_job_id(spark)
     df = QUERY_REGISTRY[name].fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
+    run(spark, lambda *_: df, sf_dir)
     rdds = store.rddList(True)
     persisted = sum(
         rdds.apply(i).memoryUsed() + rdds.apply(i).diskUsed()
         for i in range(rdds.size())
     )
-    stages = [s for s in _stage_metrics(spark) if s["stage"] >= min_id]
+    stages = stage_metrics(spark, j0)
     tot_read = sum(s["shuffle_read"] for s in stages)
     tot_write = sum(s["shuffle_write"] for s in stages)
     tot_spill = sum(s["spill_mem"] + s["spill_disk"] for s in stages)
@@ -397,6 +386,15 @@ def main() -> None:
     print(f"ensuring {args.factor}x corpus at {x10_dir} ...", file=sys.stderr)
     build_scaled_dir(spark, x10_dir, args.factor)
 
+    def probe(results: dict, key: str, fn, fn_n=None) -> None:
+        # fn at 1x over SF_DIR vs fn_n (default: fn) at Nx over the scaled dir
+        results[key] = exponent_row(
+            best_of(spark, fn, SF_DIR, args.runs),
+            best_of(spark, fn_n or fn, x10_dir, args.runs),
+            args.factor,
+        )
+        print(json.dumps({"family": key, **results[key]}))
+
     # Bytes, not just seconds, for the linear dedup family (r08 task #6):
     # one full noop-sink run at 1x and at Nx, per-stage shuffle bytes from
     # the status store; bytes/doc flat across scales == the constants that
@@ -406,39 +404,15 @@ def main() -> None:
         # correlated-subquery / skew / unigram families
         results = {}
         for name in args.queries:
-            fn = QUERY_REGISTRY[name].fn
-            t1 = timed(lambda: fn(spark, SF_DIR).count(), args.runs)
-            spark.catalog.clearCache()
-            t10 = timed(lambda: fn(spark, x10_dir).count(), args.runs)
-            spark.catalog.clearCache()
-            alpha = math.log(t10 / t1) / math.log(args.factor)
-            results[name] = {"t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)}
-            print(json.dumps({"family": name, **results[name]}))
-        print("\n--- SCALING.md block ---")
-        print("| family | t(1x) s | t(10x) s | exponent |")
-        print("|---|---|---|---|")
-        for name, r in results.items():
-            print(f"| {name} | {r['t1']} | {r['t10']} | {r['alpha']} |")
+            probe(results, name, QUERY_REGISTRY[name].fn)
+        print_scaling_block(results)
         return
 
     if args.crawl_only:
         results = {}
-        probes_1x = crawl_probe(spark, SF_DIR)
-        probes_Nx = crawl_probe(spark, x10_dir)
-        for name in probes_1x:
-            t1 = timed(probes_1x[name], args.runs)
-            spark.catalog.clearCache()
-            t10 = timed(probes_Nx[name], args.runs)
-            spark.catalog.clearCache()
-            alpha = math.log(t10 / t1) / math.log(args.factor)
-            key = f"{name}(uncapped)"
-            results[key] = {"t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)}
-            print(json.dumps({"family": key, **results[key]}))
-        print("\n--- SCALING.md block ---")
-        print("| family | t(1x) s | t(10x) s | exponent |")
-        print("|---|---|---|---|")
-        for name, r in results.items():
-            print(f"| {name} | {r['t1']} | {r['t10']} | {r['alpha']} |")
+        for name, fn in CRAWL_PROBES.items():
+            probe(results, f"{name}(uncapped)", fn)
+        print_scaling_block(results)
         return
 
     n1 = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
@@ -476,40 +450,15 @@ def main() -> None:
         "span_dedup",
         "fuzzy_name_match",
     ):
-        fn = QUERY_REGISTRY[name].fn
-        t1 = timed(lambda: fn(spark, SF_DIR).count(), args.runs)
-        spark.catalog.clearCache()
-        t10 = timed(lambda: fn(spark, x10_dir).count(), args.runs)
-        spark.catalog.clearCache()
-        alpha = math.log(t10 / t1) / math.log(args.factor)
-        results[name] = {"t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)}
-        print(json.dumps({"family": name, **results[name]}))
-
-    probes_1x = crawl_probe(spark, SF_DIR)
-    probes_Nx = crawl_probe(spark, x10_dir)
-    for name in probes_1x:
-        t1 = timed(probes_1x[name], args.runs)
-        spark.catalog.clearCache()
-        t10 = timed(probes_Nx[name], args.runs)
-        spark.catalog.clearCache()
-        alpha = math.log(t10 / t1) / math.log(args.factor)
-        key = f"{name}(uncapped)"
-        results[key] = {"t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)}
-        print(json.dumps({"family": key, **results[key]}))
-
-    t1 = timed(lambda: image_probe(spark, 250), args.runs)
-    t10 = timed(lambda: image_probe(spark, 250 * args.factor), args.runs)
-    alpha = math.log(t10 / t1) / math.log(args.factor)
-    results["image_near_dup(operators)"] = {
-        "t1": round(t1, 2), "t10": round(t10, 2), "alpha": round(alpha, 2)
-    }
-    print(json.dumps({"family": "image_near_dup(operators)", **results['image_near_dup(operators)']}))
-
-    print("\n--- SCALING.md block ---")
-    print("| family | t(1x) s | t(10x) s | exponent |")
-    print("|---|---|---|---|")
-    for name, r in results.items():
-        print(f"| {name} | {r['t1']} | {r['t10']} | {r['alpha']} |")
+        probe(results, name, QUERY_REGISTRY[name].fn)
+    for name, fn in CRAWL_PROBES.items():
+        probe(results, f"{name}(uncapped)", fn)
+    probe(
+        results, "image_near_dup(operators)",
+        lambda s, _: image_probe(s, 250),
+        lambda s, _: image_probe(s, 250 * args.factor),
+    )
+    print_scaling_block(results)
     shutil.rmtree(args.workdir, ignore_errors=True) if os.environ.get(
         "SCALE_PROBE_CLEAN"
     ) else None
