@@ -37,14 +37,19 @@ USER_REQUEST_SCHEMA = T.StructType(
 
 
 def _one_shot_sections(frames: dict[str, DataFrame]) -> dict[str, list[dict]]:
-    """Collect several small store lookups in ONE Spark job.
+    """Collect several small store lookups with ONE ``collect``.
 
     Each lookup is tagged and serialized to a JSON payload column, the
     frames union into one plan, and a single ``collect`` fans the rows back
     out per section. The per-state request path batches its six store
-    lookups this way — one driver round-trip instead of six sequential jobs
-    (the reference pays six RocksDB point reads; a Spark job each is the
-    wrong currency for serving-path latency).
+    lookups this way — one driver round-trip instead of six sequential
+    collects (the reference pays six RocksDB point reads; a Spark job each
+    is the wrong currency for serving-path latency).
+
+    On warm store handles the union runs as two Spark jobs, not one: the
+    14-day as-of probe (``latest_within_lookback``) shuffles, and adaptive
+    execution runs that shuffle's map stage as a job of its own before the
+    result job.
 
     NULL fields are dropped by ``to_json`` — consumers read payload dicts
     with ``.get``; the serving tables carry no legitimately-NULL columns.
@@ -75,6 +80,17 @@ def _delta_row_to_dict(r) -> dict:
     }
 
 
+def _sorted_summary_rows(rows, value_col: str) -> list[dict]:
+    """Summary-table rows by ``value_col`` descending (NULLs last, as Spark's
+    descending ``orderBy``), ties by state name. Sorted on the driver: a
+    reply holds one row per state, and a Spark ``orderBy`` would add a
+    range-partition sampling job and leave the order of ties to the shuffle.
+    """
+    dicts = [r.asDict() for r in rows]
+    dicts.sort(key=lambda r: (r[value_col] is None, -(r[value_col] or 0), str(r["state"])))
+    return [_delta_row_to_dict(r) for r in dicts]
+
+
 def handle_user_request(
     reader: StoreReader,
     state: str,
@@ -87,26 +103,20 @@ def handle_user_request(
     alert text (photo attachment is the caller's concern).
     """
     if state.lower() == "summary":
-        rows = [
-            _delta_row_to_dict(r.asDict())
-            for r in reader._t("statewise_delta")
-            .orderBy("confirmed", ascending=False)
-            .collect()
-        ]
+        rows = _sorted_summary_rows(reader._t("statewise_delta").collect(), "confirmed")
         return fmt.build_state_summary_alert_text(rows, last_updated, daily=False)
 
     if state.lower() in ("today", "yesterday"):
         date = today if state.lower() == "today" else today - dt.timedelta(days=1)
-        daily = reader.daily_count_for(date=date).orderBy(
-            "sum_delta_confirmed", ascending=False
+        rows = _sorted_summary_rows(
+            reader.daily_count_for(date=date).collect(), "sum_delta_confirmed"
         )
-        rows = [_delta_row_to_dict(r.asDict()) for r in daily.collect()]
         return fmt.build_state_summary_alert_text(rows, last_updated, daily=True)
 
     # per-state block: six store lookups -> one summary block
     # (reference: delta, daily, news source, 14d test data, yesterday's
     # doubling rate, district dailies — UserRequestConsumer.java:108-128).
-    # All six collect in ONE batched job (_one_shot_sections).
+    # All six collect in one batched union (_one_shot_sections).
     yesterday = today - dt.timedelta(days=1)
     sections = _one_shot_sections(
         {

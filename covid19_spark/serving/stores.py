@@ -11,19 +11,32 @@ tables; the serving layer issues ordinary batch reads.
 ``StoreReader`` is the StateStoresManager-equivalent API. Point lookups push
 an equality predicate into the parquet scan; the 14-day as-of probe loop
 (``StateStoresManager.java:212-229``) becomes one range filter + max_by.
+
+Each lookup starts from the table's resolved parquet handle
+(``sources.tables.read_parquet_handle``, the memo ``load_table`` also uses),
+not a fresh ``spark.read.parquet``, which lists the directory and runs a
+footer/schema-inference job on every call. The handle is re-resolved
+whenever the ``os.stat`` stamp of the table directory changes. Both writers
+of these tables change it — ``Materializer._write`` recreates the
+directory, and ``upsert_batch_partitioned`` renames the rewritten bucket
+directories into its root — and no writer appends files into an existing
+table, so a reply never reads a stale file listing.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.utils import AnalysisException
 
 from covid19_spark.operators.asof import latest_within_lookback
 from covid19_spark.operators.delta import running_delta
 from covid19_spark.operators.rates import doubling_rate
 from covid19_spark.operators.rollup import daily_rollup
+from covid19_spark.sources.tables import read_parquet_handle
 
 TABLES = (
     "statewise_delta",      # latest delta per state        (delta-stats store)
@@ -115,9 +128,18 @@ class StoreReader:
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.out_dir = out_dir
+        # Open every table already materialized, as the reference's serving
+        # tier opens its stores before answering: the first requests pay no
+        # resolution jobs, and concurrent clients do not race to resolve the
+        # handles they share. A table that is missing or still being
+        # written is resolved on first use instead.
+        for name in TABLES:
+            if os.path.isdir(os.path.join(out_dir, name)):
+                with contextlib.suppress(AnalysisException):
+                    self._t(name)
 
     def _t(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, name))
+        return read_parquet_handle(self.spark, os.path.join(self.out_dir, name))
 
     # StateStoresManager.java:172-178
     def delta_stats_for_state(self, state: str) -> DataFrame:

@@ -84,10 +84,11 @@ def upsert_batch_partitioned(
        so every key maps to exactly one partition directory;
     2. a micro-batch's touched buckets are collected (≤ n_buckets ints of
        metadata — the analogue of Delta's touched-file stats);
-    3. ONLY those buckets are read back (partition-pruned scan), merged with
-       the batch keeping the newest row per key, and rewritten via dynamic
-       partition overwrite — untouched bucket directories are never read or
-       written.
+    3. ONLY those buckets are read back (partition-pruned scan, read with
+       the batch's schema, so each batch must keep the table's column
+       types), merged with the batch keeping the newest row per key, and
+       rewritten via dynamic partition overwrite — untouched bucket
+       directories are never read or written.
 
     Size ``n_buckets`` so table_size/n_buckets stays a comfortable task unit
     (e.g. 100 TB / 8192 buckets ≈ 12 GB touched-read worst case per hot
@@ -106,7 +107,9 @@ def upsert_batch_partitioned(
     if not touched:
         return []
     try:
-        current = spark.read.parquet(table_path).filter(
+        # the batch's schema (partition column included) is the table's, so
+        # no footer-inference job runs per micro-batch
+        current = spark.read.schema(bucketed.schema).parquet(table_path).filter(
             F.col(bucket_col).isin([int(b) for b in touched])
         )
         merged = current.unionByName(bucketed)

@@ -1,6 +1,7 @@
 """§3.2 user-request dispatch over materialized stores."""
 
 import datetime as dt
+import os
 import shutil
 import tempfile
 
@@ -8,6 +9,7 @@ import pytest
 
 from covid19_spark.serving.requests import handle_user_request
 from covid19_spark.serving.stores import Materializer, StoreReader
+from covid19_spark.streaming.table import upsert_batch_partitioned
 
 
 def ts(s):
@@ -81,3 +83,44 @@ def test_state_request_full_block(reader):
 
 def test_unknown_state(reader):
     assert handle_user_request(reader, "Atlantis", dt.date(2020, 4, 9)) == "No data for Atlantis"
+
+
+def test_summary_ties_ordered_by_state_name(spark):
+    """Kerala and Goa tie on the day's delta and on the running totals; both
+    summary tables list them by state name, whatever order Spark reads them."""
+    d = tempfile.mkdtemp(prefix="c19req_tie_")
+    try:
+        Materializer(spark, d).refresh_statewise(
+            spark.createDataFrame(
+                [
+                    ("Kerala", ts("2020-04-08T10:00:00"), 3, 0, 0),
+                    ("Kerala", ts("2020-04-09T10:00:00"), 10, 1, 0),
+                    ("Goa", ts("2020-04-08T11:00:00"), 3, 0, 0),
+                    ("Goa", ts("2020-04-09T11:00:00"), 10, 1, 0),
+                    ("Delhi", ts("2020-04-08T12:00:00"), 2, 0, 0),
+                    ("Delhi", ts("2020-04-09T12:00:00"), 4, 0, 0),
+                    ("Total", ts("2020-04-09T12:00:00"), 24, 2, 0),
+                ],
+                ["state", "last_updated", "confirmed", "recovered", "deaths"],
+            )
+        )
+        # the latest-delta table as the stream writes it: hash-bucketed, so
+        # Spark returns tied rows in bucket order (Kerala before Goa)
+        table = os.path.join(d, "statewise_delta")
+        shutil.move(table, os.path.join(d, "staged"))
+        upsert_batch_partitioned(
+            spark.read.parquet(os.path.join(d, "staged")), table, ["state"], "last_updated"
+        )
+        r = StoreReader(spark, d)
+        summary = handle_user_request(r, "Summary", dt.date(2020, 4, 9)).splitlines()
+        assert summary.index("Goa  |     10|      1|     0") + 1 == summary.index(
+            "Ker  |     10|      1|     0"
+        )
+        assert summary[summary.index("Ker  |     10|      1|     0") + 1].startswith("Delhi")
+        today = handle_user_request(r, "Today", dt.date(2020, 4, 9)).splitlines()
+        assert today.index("Goa  |      7|      1|     0") + 1 == today.index(
+            "Ker  |      7|      1|     0"
+        )
+        assert today[today.index("Ker  |      7|      1|     0") + 1].startswith("Delhi")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

@@ -1,13 +1,19 @@
 """Serving materializer + StateStoresManager-equivalent query API."""
 
 import datetime as dt
+import os
 import shutil
 import tempfile
+import threading
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql.utils import AnalysisException
 
+from covid19_spark import measure
+from covid19_spark.serving.requests import handle_user_request
 from covid19_spark.serving.stores import Materializer, StoreReader
+from covid19_spark.sources import tables
+from covid19_spark.streaming.table import upsert_batch_partitioned
 
 
 def ts(s):
@@ -95,3 +101,142 @@ def test_latest_test_data_within_14d(store_env):
     r = StoreReader(spark, d)
     out = r.latest_test_data_within_14d("Delhi", dt.date(2020, 4, 26)).collect()
     assert len(out) == 1 and out[0].totaltested == 53166
+
+
+def test_handle_memo_shared_across_threads(store_env):
+    """Two threads resolve one shared table and one table of their own 200
+    times each, each thread re-stamping its own table now and then: no
+    error, and one handle per (path, stamp)."""
+    spark, d = store_env
+    paths = {n: os.path.join(d, n) for n in ("shared", "a", "b")}
+    for p in paths.values():
+        spark.range(3).write.parquet(p)
+    seen: dict[tuple, set[int]] = {}
+    keep, errors = [], []  # keep: evicted handles stay alive, so ids stay unique
+    lock = threading.Lock()
+
+    def client(own: str) -> None:
+        try:
+            for i in range(200):
+                if i % 50 == 49:  # a writer replaced the table: new stamp
+                    os.utime(paths[own], ns=(i, i))
+                for p in (paths["shared"], paths[own]):
+                    st = os.stat(p)
+                    df = tables.read_parquet_handle(spark, p)
+                    with lock:
+                        keep.append(df)
+                        seen.setdefault((p, st.st_ino, st.st_mtime_ns), set()).add(id(df))
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(own,)) for own in ("a", "b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert all(len(ids) == 1 for ids in seen.values()), seen
+    assert len(seen) == 1 + 2 * 5  # shared once; a and b at 5 stamps each
+    live = [k[1] for k in tables._HANDLE_CACHE if k[1] in paths.values()]
+    assert sorted(live) == sorted(paths.values())  # older stamps evicted
+
+
+def _snapshots(spark, mh_confirmed):
+    return spark.createDataFrame(
+        [
+            ("Maharashtra", ts("2020-04-08T10:00:00"), 10, 1, 1),
+            ("Maharashtra", ts("2020-04-09T22:00:00"), mh_confirmed, 2, 2),
+            ("Delhi", ts("2020-04-09T12:00:00"), 9, 1, 1),
+            ("Total", ts("2020-04-09T22:00:00"), mh_confirmed + 9, 3, 3),
+        ],
+        ["state", "last_updated", "confirmed", "recovered", "deaths"],
+    )
+
+
+def _materialize_all(spark, d) -> Materializer:
+    """Every table a per-state request reads, Maharashtra at 28 cases."""
+    m = Materializer(spark, d)
+    m.refresh_statewise(_snapshots(spark, 28))
+    m.refresh_districtwise(
+        spark.createDataFrame(
+            [("Maharashtra", "Mumbai", ts("2020-04-09T10:00:00"), 20, 1, 1)],
+            ["state", "district", "ts", "confirmed", "recovered", "deceased"],
+        )
+    )
+    m.refresh_dimension(
+        spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"]),
+        "news_sources",
+    )
+    m.refresh_dimension(
+        spark.createDataFrame(
+            [("Maharashtra", dt.date(2020, 4, 8), "53166", "1621", "26/04/2020")],
+            ["state", "date", "totaltested", "positive", "updatedon"],
+        ),
+        "statewise_test_data",
+    )
+    return m
+
+
+TODAY = dt.date(2020, 4, 9)
+
+
+def test_warm_reader_sees_materializer_rewrite(store_env):
+    spark, d = store_env
+    m = _materialize_all(spark, d)
+    r = StoreReader(spark, d)
+    assert "Mah  |     28|      2|     2" in handle_user_request(r, "Summary", TODAY)
+    assert "Total cases  : (↑18) 28" in handle_user_request(r, "Maharashtra", TODAY)
+    m.refresh_statewise(_snapshots(spark, 41))
+    assert "Mah  |     41|      2|     2" in handle_user_request(r, "Summary", TODAY)
+    assert "Mah  |     31|      1|     1" in handle_user_request(r, "Today", TODAY)
+    assert "Total cases  : (↑31) 41" in handle_user_request(r, "Maharashtra", TODAY)
+
+
+def test_warm_reader_sees_upsert_commit(store_env):
+    spark, d = store_env
+    table = os.path.join(d, "statewise_delta")
+    _materialize_all(spark, d)
+    staged = os.path.join(d, "staged")
+    shutil.move(table, staged)
+    upsert_batch_partitioned(spark.read.parquet(staged), table, ["state"], "last_updated")
+    r = StoreReader(spark, d)
+    assert "Mah  |     28|      2|     2" in handle_user_request(r, "Summary", TODAY)
+    newer = spark.read.parquet(staged).filter("state = 'Maharashtra'").selectExpr(
+        "state", "last_updated + INTERVAL 1 HOUR AS last_updated", "50L AS confirmed",
+        "recovered", "deaths", "delta_confirmed", "delta_recovered", "delta_deaths",
+    )
+    upsert_batch_partitioned(newer, table, ["state"], "last_updated")
+    assert "Mah  |     50|      2|     2" in handle_user_request(r, "Summary", TODAY)
+    assert "Total cases  : (↑18) 50" in handle_user_request(r, "Maharashtra", TODAY)
+
+
+def test_table_created_after_failed_read_is_picked_up(store_env):
+    spark, d = store_env
+    r = StoreReader(spark, d)
+    with pytest.raises(AnalysisException):
+        r.news_source_for("Maharashtra").collect()
+    Materializer(spark, d).refresh_dimension(
+        spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"]),
+        "news_sources",
+    )
+    assert [x.url for x in r.news_source_for("Maharashtra").collect()] == [
+        "https://news.example/mh"
+    ]
+
+
+def test_warm_reader_job_counts(store_env):
+    """Jobs per request: the six lookups of a state request collect as one
+    union (two jobs, its as-of probe shuffles); Summary/Today one each."""
+    spark, d = store_env
+    _materialize_all(spark, d)
+    r = StoreReader(spark, d)
+
+    def jobs(request: str) -> int:
+        j0 = measure.next_job_id(spark)
+        handle_user_request(r, request, TODAY)
+        return measure.next_job_id(spark) - j0
+
+    # the reader opened its tables: even the first requests are warm
+    assert jobs("Maharashtra") <= 2
+    assert jobs("Summary") == 1
+    assert jobs("Today") == 1

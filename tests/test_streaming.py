@@ -284,6 +284,7 @@ def test_upsert_batch_partitioned_rewrites_only_touched_buckets(spark):
     import glob
     import os
 
+    from covid19_spark.measure import next_job_id
     from covid19_spark.streaming.table import upsert_batch_partitioned
 
     d = tempfile.mkdtemp()
@@ -305,7 +306,11 @@ def test_upsert_batch_partitioned_rewrites_only_touched_buckets(spark):
              ("k999", ts("2020-04-09T11:00:00"), 1.0)],
             ["state", "ts", "confirmed"],
         )
+        j0 = next_job_id(spark)
         touched = upsert_batch_partitioned(batch, table, ["state"], "ts", n_buckets=8)
+        # touched-bucket collect (2: AQE shuffle + result), merge shuffle (2),
+        # localCheckpoint, write; reading the table back infers no schema
+        assert next_job_id(spark) - j0 == 6
         # per-batch write cost bounded by the batch's keys, not table size
         assert 1 <= len(touched) <= 2
 
