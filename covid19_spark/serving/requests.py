@@ -46,10 +46,10 @@ def _one_shot_sections(frames: dict[str, DataFrame]) -> dict[str, list[dict]]:
     collects (the reference pays six RocksDB point reads; a Spark job each
     is the wrong currency for serving-path latency).
 
-    On warm store handles the union runs as two Spark jobs, not one: the
-    14-day as-of probe (``latest_within_lookback``) shuffles, and adaptive
-    execution runs that shuffle's map stage as a job of its own before the
-    result job.
+    On warm store handles the union runs as one Spark job: every section is
+    a filtered scan, with no shuffle. The 14-day as-of probe therefore joins
+    the union unreduced (at most 14 rows) and the caller picks its latest
+    row on the driver.
 
     NULL fields are dropped by ``to_json`` — consumers read payload dicts
     with ``.get``; the serving tables carry no legitimately-NULL columns.
@@ -122,7 +122,7 @@ def handle_user_request(
         {
             "delta": reader.delta_stats_for_state(state),
             "daily": reader.daily_count_for(date=today, state=state),
-            "test": reader.latest_test_data_within_14d(state, today),
+            "test": reader.test_data_within_14d(state, today),
             "rate": reader.doubling_rate_for(state, yesterday),
             "districts": reader.district_stats_for(state, daily=True),
             "news": reader.news_source_for(state),
@@ -138,8 +138,10 @@ def handle_user_request(
     )
     testing: dict[str, dict] = {}
     if sections["test"]:
-        testing[state] = dict(sections["test"][0])
-        testing[state].setdefault("updatedon", str(sections["test"][0].get("date")))
+        # latest_within_lookback's rule: the newest date wins, ties arbitrary
+        latest = max(sections["test"], key=lambda r: r["date"])
+        testing[state] = dict(latest)
+        testing[state].setdefault("updatedon", str(latest.get("date")))
     rate_rows = sections["rate"]
     rates = {
         state: (

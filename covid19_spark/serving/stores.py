@@ -10,7 +10,8 @@ tables; the serving layer issues ordinary batch reads.
 ``Materializer`` builds every table from the raw feeds in one pass;
 ``StoreReader`` is the StateStoresManager-equivalent API. Point lookups push
 an equality predicate into the parquet scan; the 14-day as-of probe loop
-(``StateStoresManager.java:212-229``) becomes one range filter + max_by.
+(``StateStoresManager.java:212-229``) becomes one range filter, whose at
+most 14 rows a request reduces to the latest on the driver.
 
 Each lookup starts from the table's resolved parquet handle
 (``sources.tables.read_parquet_handle``, the memo ``load_table`` also uses),
@@ -170,12 +171,17 @@ class StoreReader:
         return self._t(name).filter(F.col("state") == state)
 
     # StateStoresManager.java:212-229 — the 14-probe loop as one query
-    def latest_test_data_within_14d(self, state: str, today) -> DataFrame:
+    def test_data_within_14d(self, state: str, today) -> DataFrame:
+        """The state's test-data rows of the 14 days up to ``today``."""
         df = self._t("statewise_test_data").filter(F.col("state") == state)
-        lookback = df.filter(
+        return df.filter(
             F.col("date").between(F.date_sub(F.lit(today), 13), F.lit(today))
         )
-        return latest_within_lookback(lookback, ["state"], "date")
+
+    def latest_test_data_within_14d(self, state: str, today) -> DataFrame:
+        return latest_within_lookback(
+            self.test_data_within_14d(state, today), ["state"], "date"
+        )
 
     # StateStoresManager.java:159-170
     def zones_for(self, state: str) -> DataFrame:

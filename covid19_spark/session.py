@@ -15,6 +15,9 @@ from pyspark.sql import SparkSession
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+ROCKSDB_CHANGELOG_CONF = (
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+)
 
 
 def get_spark(
@@ -64,6 +67,10 @@ def get_spark(
         # Streaming state: RocksDB provider = disk-backed per-key state, the
         # analogue of the reference's RocksDB stores (SURVEY §4).
         .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        # Commit each batch's state as a changelog file instead of uploading
+        # a RocksDB checkpoint (snapshots are taken in the background): the
+        # stats_feed state commit fell from ~0.5-0.7 s to ~0.3 s per batch.
+        .config(ROCKSDB_CHANGELOG_CONF, "true")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -71,3 +78,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def partitions_for_bytes(spark: SparkSession, n_bytes: int) -> int:
+    """Partition (or bucket) count for ``n_bytes`` of data: one per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the size AQE
+    coalesces shuffle partitions to — clamped to ``[1, defaultParallelism]``.
+    """
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    target = spark._jsparkSession.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    return max(1, min(spark.sparkContext.defaultParallelism, -(-n_bytes // target)))

@@ -5,11 +5,8 @@ The streaming form of ``operators/ivm`` — each micro-batch is LIFTED to
 per-key state and ⊕-merged into a persisted state table, so the reporting
 aggregate is always a ``finalize`` away without ever rescanning history
 (the reference's running statewise totals — SURVEY §2.4 A1-A5 — kept in a
-warehouse table instead of RocksDB).  Mirrors the bucket-rewrite discipline
-of ``streaming/table.upsert_batch_partitioned``: the state table is
-hash-bucketed on the key, a batch touches only its keys' buckets, and only
-those bucket directories are read back, merged and dynamically overwritten
-— O(batch + touched buckets), never O(table).
+warehouse table instead of RocksDB).  The sink is the shared bucket-rewrite
+core ``streaming/table.merge_into_buckets`` with ⊕ as its merge.
 
 Exactness carries over from the batch algebra: DEC-carried sums make the
 merged state independent of how rows were split into micro-batches, so the
@@ -25,26 +22,9 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from covid19_spark.operators.ivm import (
-    agg_state,
-    finalize_agg_state,
-    merge_agg_state,
-)
-
-
-def _state_exists(spark, state_path: str) -> bool:
-    """True iff the state table directory exists.  Explicit existence
-    check (Hadoop FS, so it honours whatever scheme ``state_path`` uses)
-    rather than catching AnalysisException from the read: a schema
-    mismatch or a partially-written directory must surface as an error,
-    not silently take the first-batch lift-only path and then overwrite
-    prior accumulated state."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(state_path)
-    return p.getFileSystem(hconf).exists(p)
+from covid19_spark.operators.ivm import agg_state, finalize_agg_state, merge_agg_state
+from covid19_spark.streaming.table import merge_into_buckets
 
 
 def merge_state_batch(
@@ -52,62 +32,23 @@ def merge_state_batch(
     state_path: str,
     key_cols: Sequence[str],
     measure: str,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     bucket_col: str = "kb",
 ) -> list[int]:
     """Lift ``batch`` and ⊕-merge it into the bucketed state table at
     ``state_path``; returns the rewritten bucket ids."""
-    key_cols = list(key_cols)
-    spark = batch.sparkSession
-    from pyspark.sql import Observation
-
-    # The lift is materialized ONCE (eager localCheckpoint) and the
-    # touched-bucket set rides that job as an Observation metric — the
-    # former shape ran a dedicated distinct+collect job for the bucket
-    # list and then re-computed the whole lift inside the merge
-    # checkpoint (two lift evaluations + one extra fixed-cost job per
-    # micro-batch).
-    obs = Observation()
-    lifted = (
-        agg_state(batch, key_cols, measure)
-        .withColumn(
-            bucket_col,
-            F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int"),
-        )
-        .observe(obs, F.collect_set(bucket_col).alias("kb_set"))
-        .localCheckpoint(eager=True)
+    return merge_into_buckets(
+        agg_state(batch, key_cols, measure), state_path, key_cols,
+        lambda current, lifted: merge_agg_state(current, lifted, key_cols),
+        n_buckets, bucket_col,
     )
-    touched = sorted(int(b) for b in obs.get["kb_set"])
-    if not touched:
-        return []
-    if _state_exists(spark, state_path):
-        current = spark.read.parquet(state_path).filter(
-            F.col(bucket_col).isin([int(b) for b in touched])
-        )
-        merged = merge_agg_state(
-            current.drop(bucket_col), lifted.drop(bucket_col), key_cols
-        )
-    else:  # first batch: no state yet
-        merged = lifted.drop(bucket_col)
-    out = merged.withColumn(
-        bucket_col, F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-    )
-    # same read-before-overwrite materialization as upsert_batch_partitioned
-    out = out.repartition(len(touched), bucket_col).localCheckpoint(eager=True)
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col)
-        .parquet(state_path)
-    )
-    return [int(b) for b in touched]
 
 
 def make_state_merge_sink(
     state_path: str,
     key_cols: Sequence[str],
     measure: str,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` binding for :func:`merge_state_batch`."""
 

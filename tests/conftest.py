@@ -1,7 +1,7 @@
 import pytest
 from pyspark.sql import SparkSession
 
-from covid19_spark.session import ROCKSDB_PROVIDER
+from covid19_spark.session import ROCKSDB_CHANGELOG_CONF, ROCKSDB_PROVIDER
 
 SF_DIR = "/root/testdata/sf0.001"
 STATE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -23,12 +23,16 @@ def spark():
 
 @pytest.fixture()
 def rocksdb_state_store(spark):
-    """Run the test's streaming state on the RocksDB provider, as a
-    ``get_spark`` session does; the session's provider is restored after."""
-    prior = spark.conf.get(STATE_PROVIDER_CONF, None)
-    spark.conf.set(STATE_PROVIDER_CONF, ROCKSDB_PROVIDER)
+    """Run the test's streaming state on the RocksDB provider with changelog
+    checkpointing, as a ``get_spark`` session does; the session's confs are
+    restored after."""
+    confs = {STATE_PROVIDER_CONF: ROCKSDB_PROVIDER, ROCKSDB_CHANGELOG_CONF: "true"}
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     yield
-    if prior is None:
-        spark.conf.unset(STATE_PROVIDER_CONF)
-    else:
-        spark.conf.set(STATE_PROVIDER_CONF, prior)
+    for k, v in prior.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)

@@ -226,7 +226,7 @@ def test_table_created_after_failed_read_is_picked_up(store_env):
 
 def test_warm_reader_job_counts(store_env):
     """Jobs per request: the six lookups of a state request collect as one
-    union (two jobs, its as-of probe shuffles); Summary/Today one each."""
+    union of filtered scans (one job); Summary/Today one each."""
     spark, d = store_env
     _materialize_all(spark, d)
     r = StoreReader(spark, d)
@@ -237,6 +237,6 @@ def test_warm_reader_job_counts(store_env):
         return measure.next_job_id(spark) - j0
 
     # the reader opened its tables: even the first requests are warm
-    assert jobs("Maharashtra") <= 2
+    assert jobs("Maharashtra") == 1
     assert jobs("Summary") == 1
     assert jobs("Today") == 1

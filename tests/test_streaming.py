@@ -128,6 +128,39 @@ def test_streaming_delta_state_carries_across_batches(stream_env, provider, requ
     assert by_key[("Assam", ts("2020-04-09T02:00:00"))] == 1.0  # 28 - 27
 
 
+def test_rocksdb_delta_state_survives_restart(stream_env, rocksdb_state_store):
+    """The running delta's state is restored from the RocksDB changelog
+    checkpoint: a new query on the same checkpoint, started after batch 1's
+    query stopped, still knows Assam's confirmed=27."""
+    import os
+
+    spark, d, src, ckpt = stream_env
+    os.makedirs(src)
+
+    def run_once():
+        # the memory sink cannot restart from a checkpoint; foreachBatch can
+        rows = []
+        stream = spark.readStream.schema(SNAP_SCHEMA).parquet(src)
+        q = (
+            stats_delta_stream(stream).writeStream.outputMode("append")
+            .foreachBatch(lambda batch, _id: rows.extend(batch.collect()))
+            .option("checkpointLocation", ckpt).start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return rows
+
+    spark.createDataFrame(SNAPSHOTS[:2], SNAP_SCHEMA).coalesce(1).write.parquet(src, mode="append")
+    run_once()
+    spark.createDataFrame(SNAPSHOTS[2:3], SNAP_SCHEMA).coalesce(1).write.parquet(src, mode="append")
+    out = run_once()
+    assert [(r.state, r.ts, r.delta_confirmed) for r in out] == [
+        ("Assam", ts("2020-04-09T02:00:00"), 1.0)  # 28 - 27
+    ]
+
+
 def test_daily_window_rollup_stream(stream_env):
     spark, d, src, ckpt = stream_env
     spark.createDataFrame(SNAPSHOTS, SNAP_SCHEMA).coalesce(1).write.parquet(src)
@@ -308,9 +341,10 @@ def test_upsert_batch_partitioned_rewrites_only_touched_buckets(spark):
         )
         j0 = next_job_id(spark)
         touched = upsert_batch_partitioned(batch, table, ["state"], "ts", n_buckets=8)
-        # touched-bucket collect (2: AQE shuffle + result), merge shuffle (2),
-        # localCheckpoint, write; reading the table back infers no schema
-        assert next_job_id(spark) - j0 == 6
+        # bucketed-batch checkpoint (touched set observed on it), merge
+        # checkpoint (3: two AQE shuffle map stages + result), write; reading
+        # the table back infers no schema
+        assert next_job_id(spark) - j0 == 5
         # per-batch write cost bounded by the batch's keys, not table size
         assert 1 <= len(touched) <= 2
 
@@ -331,6 +365,48 @@ def test_upsert_batch_partitioned_rewrites_only_touched_buckets(spark):
         assert len(got) == 101
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_upsert_bucket_count_fixed_when_table_is_created(spark, tmp_path):
+    """A 3-row first batch sizes the table at one bucket; a 100x larger
+    later batch keeps that count (a changed count would strand each key's
+    old row in its old bucket) and leaves one row per key."""
+    import os
+
+    from covid19_spark.streaming.table import BUCKETS_RECORD, upsert_batch_partitioned
+
+    table = str(tmp_path / "ktable")
+    cols = ["state", "ts", "confirmed"]
+    first = [(f"k{i}", ts("2020-04-08T10:00:00"), float(i)) for i in range(3)]
+    assert upsert_batch_partitioned(spark.createDataFrame(first, cols), table, ["state"], "ts") == [0]
+    later = [(f"k{i}", ts("2020-04-09T10:00:00"), float(-i)) for i in range(300)]
+    assert upsert_batch_partitioned(spark.createDataFrame(later, cols), table, ["state"], "ts") == [0]
+    assert sorted(os.listdir(table)) == [BUCKETS_RECORD, "kb=0"]
+    rows = spark.read.parquet(table).collect()
+    assert len(rows) == 300 and len({r.state for r in rows}) == 300
+    assert {r.state: r.confirmed for r in rows}["k2"] == -2.0
+
+
+def test_upsert_explicit_bucket_count_must_match_record(spark, tmp_path):
+    from covid19_spark.streaming.table import upsert_batch_partitioned
+
+    table = str(tmp_path / "ktable")
+    batch = spark.createDataFrame([("k1", ts("2020-04-08T10:00:00"), 1.0)], ["state", "ts", "confirmed"])
+    upsert_batch_partitioned(batch, table, ["state"], "ts")  # sized: 1 bucket
+    with pytest.raises(ValueError, match="1 buckets, not 8"):
+        upsert_batch_partitioned(batch, table, ["state"], "ts", n_buckets=8)
+
+
+def test_upsert_refuses_table_without_bucket_record(spark, tmp_path):
+    """A directory the sink did not create is never overwritten."""
+    from covid19_spark.streaming.table import upsert_batch_partitioned
+
+    table = str(tmp_path / "ktable")
+    batch = spark.createDataFrame([("k1", ts("2020-04-08T10:00:00"), 1.0)], ["state", "ts", "confirmed"])
+    batch.write.parquet(table)
+    with pytest.raises(ValueError, match="no _buckets record"):
+        upsert_batch_partitioned(batch, table, ["state"], "ts")
+    assert spark.read.parquet(table).count() == 1
 
 
 def test_upsert_sink_via_foreachbatch(stream_env):
