@@ -224,24 +224,14 @@ def main() -> None:
         # sweep position of each query's recorded min (end-of-sweep when a
         # retime won) — lets an auditor recompute queries_norm exactly
         "min_pos": min_pos,
-        # per-query min / median-of-3-nearest anchor samples (r14 — robust
-        # to intra-sweep drift AND to a single outlier sample; r13 used the
-        # single nearest sample). "value_norm" is total / mean-of-ALL-anchor-
-        # samples — NOTE the denominator definition changed in r13 (r08-r12
-        # used mean(start, end) of two samples; r13+ averages the full
-        # interleaved series), so cross-round value_norm reads straddling
-        # r12/r13 compare slightly different statistics (ADVICE r13).
-        # "value_norm_legacy" recomputes the old mean(start, end) divisor
-        # for exact r08-r12 continuity. "value_norm_nearest" sums the
-        # per-query nearest-anchor norms.
+        # per-query min / median-of-3-nearest anchor samples (robust to
+        # intra-sweep drift AND to a single outlier sample). "value_norm"
+        # is total / mean-of-ALL-anchor-samples.
         "queries_norm": queries_norm,
-        # which per-query divisor rule produced queries_norm: "median3"
-        # (r14+, median of 3 nearest samples) vs "nearest1" (r13, absent
-        # key) — lets auditors/tests recompute old artifacts exactly.
+        # which per-query divisor rule produced queries_norm: "median3",
+        # the median of the 3 nearest anchor samples.
         "norm_rule": "median3",
         "value_norm": round(total / anchor_sec, 3),
-        "value_norm_legacy": round(total / ((anchor_start + anchor_end) / 2), 3),
-        "value_norm_nearest": round(sum(queries_norm.values()), 3),
         "sf": sf_val,
     }
     # The driver's artifact keeps only a TAIL of stdout, which decapitates a

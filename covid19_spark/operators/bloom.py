@@ -108,49 +108,3 @@ def bloom_might_contain(
     return candidates.join(
         hits.withColumnRenamed("__key", key_col), key_col, "left"
     ).fillna({"might_contain": False})
-
-
-def bloom_bitmap_words(bloom: DataFrame, m_bits: int) -> list[int]:
-    """Dense ``m_bits/64``-long word list of a built bitmap — a SANCTIONED
-    driver collect: the frame is ≤ m_bits/64 rows BY CONSTRUCTION (the
-    contract-small class; 2^18 bits → 4096 longs → KBs), independent of
-    corpus size. This is how a production gate ships the filter: the
-    bitmap bytes ride the task closure / broadcast, not a join."""
-    words = [0] * (m_bits // 64)
-    for r in bloom.collect():
-        words[int(r["word"])] = int(r["bits"])
-    return words
-
-
-def bloom_might_contain_inline(
-    candidates: DataFrame,
-    bitmap_words: list[int],
-    key_col: str,
-    m_bits: int = 1 << 20,
-    k: int = 7,
-    seed_base: int = 41,
-) -> DataFrame:
-    """Map-ONLY Bloom probe: the bitmap rides as an ``array<long>`` literal
-    and each candidate ANDs its ``k`` bit lookups in one expression — zero
-    joins, zero exchanges, the true 100 TB ingest-gate shape for bitmaps
-    small enough to inline (≲ 2^24 bits; above that use the broadcast-join
-    ``bloom_might_contain``). Identical verdicts to the join path (pinned
-    by test)."""
-    lit_words = F.array(*[F.lit(w).cast("long") for w in bitmap_words])
-    key = F.col(key_col)
-    checks = []
-    for i in range(k):
-        pos = F.pmod(F.xxhash64(key, F.lit(seed_base + i)), F.lit(m_bits))
-        word = F.element_at(lit_words, (pos / 64).cast("int") + 1)
-        # Column-API bit probe reusing the SAME `pos` column as the word
-        # index — an F.expr SQL fragment here would re-interpolate key_col
-        # raw, and a name needing backticks (space/hyphen/reserved word)
-        # would fail to parse or bind a different column than the word
-        # lookup.  bit_get accepts a Column position (shiftleft does not).
-        checks.append(
-            F.bit_get(word, F.pmod(pos, F.lit(64)).cast("int")) == 1
-        )
-    verdict = checks[0]
-    for c in checks[1:]:
-        verdict = verdict & c
-    return candidates.withColumn("might_contain", verdict)

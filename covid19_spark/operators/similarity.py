@@ -1600,120 +1600,3 @@ def semantic_dedup(
             (F.col("__rk") == 1).cast("long").alias("is_canonical"),
         )
     )
-
-
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``mapInArrow`` twin of ``cosine_topk``: the zero-copy Python fast
-    path for numeric array columns. Each Arrow batch's embedding column
-    flattens to ONE contiguous numpy matrix (no pandas materialization,
-    no per-row objects), scores against the closure-broadcast query
-    matrix as a single BLAS matmul, and emits only the per-batch local
-    top-k per query — the global exact rank then runs over
-    ≤ k × batches × |queries| candidate rows, never the full score
-    matrix.
-
-    Equivalence contract: same (query_id, rank, neighbor_id) results as
-    the JVM-expression path — including exact ties, whose local cut is
-    ordered (sim desc, neighbor_id asc) like the global rank; ``sim`` may
-    differ in the last float ulps (BLAS pairwise summation vs the SQL
-    left-to-right fold) — pinned by ``tests/test_similarity_arrow.py`` at
-    1e-9, which is why this binding backs no registry oracle (the JVM
-    path does) and exists as the measured fast path for wide embeddings.
-    One deliberate divergence: zero-norm vectors score NULL here and rank
-    last (the JVM expression RAISES under ANSI mode on the 0/0) —
-    strictly more permissive on degenerate inputs.
-    """
-    import pyarrow as pa
-
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).collect()  # contract-small: queries are the broadcast side by contract
-    if not q_rows:
-        # np.array([]).reshape(0, -1) cannot infer the trailing dim, so the
-        # empty-query case must short-circuit BEFORE building the matrix;
-        # an empty result frame with the output schema preserves downstream
-        # unions/joins.
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], schema="query_id long, rank int, neighbor_id long, sim double"
-        )
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["qv"] for r in q_rows], dtype=np.float64).reshape(len(q_rows), -1)
-    qn = np.linalg.norm(qm, axis=1) if len(q_rows) else np.zeros(0)
-    q_zero = qn == 0
-    qn_safe = np.where(q_zero, 1.0, qn)
-
-    out_schema_arrow = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("neighbor_id", pa.int64()),
-            pa.field("sim", pa.float64()),
-        ]
-    )
-
-    def score(batches):
-        if len(q_ids) == 0:
-            return
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            if len(ids) == 0:
-                continue
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):  # pragma: no cover - defensive
-                col = col.combine_chunks()
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            x = flat.reshape(len(ids), -1).astype(np.float64, copy=False)
-            xn = np.linalg.norm(x, axis=1)
-            x_zero = xn == 0
-            xn_safe = np.where(x_zero, 1.0, xn)
-            sims = (qm @ x.T) / qn_safe[:, None] / xn_safe[None, :]
-            for qi, qid in enumerate(q_ids):
-                s = sims[qi]
-                # 0/0 is NULL in the JVM twin (Spark div-by-zero) and NULL
-                # sorts LAST under the global (sim desc, id asc) rank — so
-                # null-sim candidates fill the local cut only AFTER every
-                # finite one, ordered by id, and emit as nulls
-                null_sim = x_zero | q_zero[qi]
-                cand = ids != qid
-                fin = np.nonzero(cand & ~null_sim)[0]
-                nul = np.nonzero(cand & null_sim)[0]
-                if len(fin) == 0 and len(nul) == 0:
-                    continue
-                # exact local order: (-sim, neighbor_id) — lexsort keys are
-                # last-key-primary, so pass (id, -sim)
-                fin = fin[np.lexsort((ids[fin], -s[fin]))][:k]
-                out_ids = list(ids[fin].astype(np.int64))
-                out_sims: list = list(s[fin])
-                if len(out_ids) < k and len(nul):
-                    nul = nul[np.argsort(ids[nul])][: k - len(out_ids)]
-                    out_ids += list(ids[nul].astype(np.int64))
-                    out_sims += [None] * len(nul)
-                yield pa.record_batch(
-                    [
-                        pa.array([int(qid)] * len(out_ids), type=pa.int64()),
-                        pa.array(out_ids, type=pa.int64()),
-                        pa.array(out_sims, type=pa.float64()),
-                    ],
-                    schema=out_schema_arrow,
-                )
-
-    cand = corpus.select(
-        F.col(id_col).cast("long").alias("nid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).mapInArrow(score, schema="query_id long, neighbor_id long, sim double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )

@@ -50,17 +50,10 @@ def _sq(pat: str) -> str:
     return "'" + pat.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-# ---------------------------------------------------------------------------
-# SQL-text builders (r14): the URL/robots expressions below run to dozens of
-# nodes, and building them through F.* calls costs one ~1 ms py4j round-trip
-# per node (guide §7.3 — plan construction is driver work; measured ~1.5 s
-# per frontier_policy_pipeline call). Each builder renders the SAME
-# expression as the Column form and F.expr parses it once. The Column forms
-# are kept for ad-hoc Column operands; tests pin both paths equal on the
-# golden URL corpus, and every registry query uses the SQL path end-to-end
-# against its DuckDB oracle. Repeated sub-fragments mirror the Column form
-# exactly: reusing a python Column variable also duplicates the subtree.
-# ---------------------------------------------------------------------------
+# URL builders render SQL text and F.expr parses it once: the expressions
+# run to dozens of nodes, and building them through F.* calls costs one
+# py4j round-trip per node (plan construction is driver work). Repeated
+# sub-fragments are plain text repeats of the same subtree.
 
 
 def canonical_url_sql(u: str) -> str:
@@ -124,53 +117,14 @@ def domain_suffixes_sql(u: str, max_labels: int = 6) -> str:
     )
 
 
-def canonical_url(url: "Column | str") -> Column:
-    """Canonical form of a URL column per the module-docstring spec.
-    Malformed inputs (no ``scheme://``) canonicalize on a best-effort
-    basis (treated as scheme-less host+path); NULL stays NULL.
-
-    Pass a SQL fragment string (column name / expression text) to build
-    the whole expression in ONE parse — the hot-path form every registry
-    query uses; a Column operand keeps the F.*-built twin (tests pin the
-    two paths equal on the golden URL corpus)."""
-    if isinstance(url, str):
-        return F.expr(canonical_url_sql(url))
-    u = F.split(F.trim(url), "#").getItem(0)  # fragment off first
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
-    rest = F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    # RFC 3986 userinfo never names a different resource — and keeping it
-    # would let 'https://x@bad.com/' dodge host-keyed policy (see host_of)
-    hostport = F.lower(
-        F.regexp_replace(F.regexp_extract(rest, r"^([^/?]*)", 1), r"^.*@", "")
-    )
-    hostport = F.when(
-        (scheme == "https") & hostport.endswith(":443"),
-        F.regexp_replace(hostport, ":443$", ""),
-    ).when(
-        (scheme == "http") & hostport.endswith(":80"),
-        F.regexp_replace(hostport, ":80$", ""),
-    ).otherwise(hostport)
-    # strip the host to get path+query: host chars are exactly the leading
-    # non-/? run, so one anchored regexp removes them
-    path_q = F.regexp_replace(rest, r"^[^/?]*", "")
-    path = F.regexp_extract(path_q, r"^([^?]*)", 1)
-    query = F.regexp_extract(path_q, r"\?(.*)$", 1)
-    path = F.regexp_replace(path, "/+$", "")
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    kept = F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "") & ~p.rlike(TRACKING_PARAM_RE),
-    )
-    qnorm = F.array_join(kept, "&")
-    return F.when(url.isNull(), F.lit(None).cast("string")).otherwise(
-        F.concat(
-            scheme,
-            F.when(scheme == "", F.lit("")).otherwise(F.lit("://")),
-            hostport,
-            path,
-            F.when(qnorm == "", F.lit("")).otherwise(F.concat(F.lit("?"), qnorm)),
-        )
-    )
+def canonical_url(url: str) -> Column:
+    """Canonical form of the URL SQL fragment ``url`` (a column name or
+    expression text) per the module-docstring spec. Malformed inputs (no
+    ``scheme://``) canonicalize on a best-effort basis (treated as
+    scheme-less host+path); NULL stays NULL. RFC 3986 userinfo is dropped:
+    it never names a different resource, and keeping it would let
+    ``https://x@bad.com/`` dodge host-keyed policy (see ``host_of``)."""
+    return F.expr(canonical_url_sql(url))
 
 
 def html_link_count(html: Column) -> Column:
@@ -234,26 +188,20 @@ def html_paragraphs(html: Column) -> Column:
     )
 
 
-def host_of(url: "Column | str") -> Column:
-    """Lowercased host of a URL column (userinfo and port stripped) — the
-    join key of domain-policy filters. Scheme-less inputs best-effort like
-    ``canonical_url``. A str operand is a SQL fragment built in one parse
-    (see ``canonical_url``).
+def host_of(url: str) -> Column:
+    """Lowercased host of the URL SQL fragment ``url`` (userinfo and port
+    stripped) — the join key of domain-policy filters. Scheme-less inputs
+    best-effort like ``canonical_url``.
 
     The RFC 3986 userinfo component (``user:pass@host``) MUST be stripped
     here: a blocklist gate that keys on the raw authority fails OPEN for
     ``https://x@bad.com/`` (the classic blocklist-bypass vector). Greedy
     ``^.*@`` within the authority matches to the LAST ``@`` — the WHATWG
     URL parsing of a userinfo that itself contains unencoded ``@``."""
-    if isinstance(url, str):
-        return F.expr(host_of_sql(url))
-    rest = F.regexp_replace(F.trim(url), r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    auth = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    host = F.regexp_replace(auth, r"^.*@", "")
-    return F.lower(F.regexp_extract(host, r"^([^:]*)", 1))
+    return F.expr(host_of_sql(url))
 
 
-def domain_suffixes(url: "Column | str", max_labels: int = 6) -> Column:
+def domain_suffixes(url: str, max_labels: int = 6) -> Column:
     """Array of registrable-suffix candidates of a URL's host, shortest
     first: for ``a.b.example.com`` → ``[com, example.com, b.example.com,
     a.b.example.com]`` (capped at ``max_labels`` labels). A blocklist entry
@@ -263,14 +211,7 @@ def domain_suffixes(url: "Column | str", max_labels: int = 6) -> Column:
     join explodes ≤ ``max_labels`` short strings per URL, hash-joinable
     against a broadcast blocklist — the 100 TB shape (a regex-per-entry
     scan would be |blocklist|×|corpus|)."""
-    if isinstance(url, str):
-        return F.expr(domain_suffixes_sql(url, max_labels))
-    labels = F.split(host_of(url), r"\.")
-    n = F.size(labels)
-    return F.transform(
-        F.sequence(F.lit(1), F.least(n, F.lit(max_labels))),
-        lambda k: F.array_join(F.slice(labels, n - k + 1, k), "."),
-    )
+    return F.expr(domain_suffixes_sql(url, max_labels))
 
 
 def filter_blocked_domains(
@@ -309,16 +250,12 @@ def filter_blocked_domains(
     )
 
 
-def path_of(url: "Column | str") -> Column:
-    """The path component of a URL (query/fragment stripped, empty → ``/``)
-    — the matching key of robots.txt rules. Case preserved (robots paths
-    are case-sensitive per the RFC 9309 match semantics). A str operand is
-    a SQL fragment built in one parse (see ``canonical_url``)."""
-    if isinstance(url, str):
-        return F.expr(path_of_sql(url))
-    rest = F.regexp_replace(F.trim(url), r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    path = F.regexp_extract(rest, r"^[^/?#]*(/[^?#]*)?", 1)
-    return F.when(path == "", F.lit("/")).otherwise(path)
+def path_of(url: str) -> Column:
+    """The path component of the URL SQL fragment ``url`` (query/fragment
+    stripped, empty → ``/``) — the matching key of robots.txt rules. Case
+    preserved (robots paths are case-sensitive per the RFC 9309 match
+    semantics)."""
+    return F.expr(path_of_sql(url))
 
 
 def robots_rules(

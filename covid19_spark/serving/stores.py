@@ -57,7 +57,8 @@ TABLES = (
 class Materializer:
     """Builds the serving tables from raw feeds (batch refresh; the streaming
     variant binds ``streaming.pipelines`` to the same paths via
-    ``foreachBatch`` + ``compact_batch_to_table``)."""
+    ``foreachBatch`` + ``streaming.table.make_upsert_sink``, which runs
+    ``upsert_batch_partitioned`` per batch)."""
 
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark

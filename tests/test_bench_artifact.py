@@ -78,7 +78,7 @@ def test_bench_local_schema():
     for key in (
         "anchor_sec", "anchor_start_sec", "anchor_end_sec",
         "anchor_samples", "anchor_every", "min_pos",
-        "queries_norm", "value_norm", "value_norm_nearest",
+        "queries_norm", "value_norm",
     ):
         assert key in art, f"bench artifact missing {key!r}"
     samples = art["anchor_samples"]
@@ -94,23 +94,11 @@ def test_bench_local_schema():
     assert set(art["queries_norm"]) == set(art["queries"])
     assert set(art["min_pos"]) == set(art["queries"])
 
-    # r14 (VERDICT r13 task #1): the per-query divisor is the MEDIAN of the
-    # 3 samples nearest the query's min_pos ("median3"), robust to a single
-    # outlier sample (r13's 0.575 s sample inflated ~25 sub-second queries'
-    # norms x1.8-x2.5). Artifacts record which rule produced queries_norm;
-    # an r13 artifact (no norm_rule key) recomputes under the old
-    # single-nearest rule.
-    rule = art.get("norm_rule", "nearest1")
-
-    def divisor(pos):
-        if rule == "nearest1":
-            return min(samples, key=lambda s: abs(s[0] - pos))[1]
-        return nearest_anchor(samples, pos)
-
+    # the per-query divisor is the MEDIAN of the 3 samples nearest the
+    # query's min_pos ("median3"), robust to a single outlier sample
+    assert art["norm_rule"] == "median3"
     for name, norm in art["queries_norm"].items():
-        want = round(art["queries"][name] / divisor(art["min_pos"][name]), 3)
+        want = round(
+            art["queries"][name] / nearest_anchor(samples, art["min_pos"][name]), 3
+        )
         assert abs(norm - want) < 1e-6, name
-    assert abs(
-        art["value_norm_nearest"]
-        - round(sum(art["queries_norm"].values()), 3)
-    ) < 1e-6

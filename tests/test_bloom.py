@@ -61,58 +61,18 @@ def test_probe_misses_empty_words(spark):
     assert all(r.might_contain is False for r in rows)  # sparse bitmap, no FPs here
 
 
-def test_inline_probe_matches_join_probe(spark):
-    from covid19_spark.operators.bloom import (
-        bloom_bitmap_words,
-        bloom_might_contain_inline,
-    )
 
-    m, k = 1 << 14, 5
-    indexed = _keys(spark, 0, 1500)
-    bloom = bloom_build(indexed, "key", m_bits=m, k=k)
-    words = bloom_bitmap_words(bloom, m)
-    assert len(words) == m // 64
-    cands = _keys(spark, 0, 3000)
-    a = {r.key: r.might_contain for r in bloom_might_contain(cands, bloom, "key", m_bits=m, k=k).collect()}
-    b = {r.key: r.might_contain for r in bloom_might_contain_inline(cands, words, "key", m_bits=m, k=k).collect()}
-    assert a == b
-    assert all(b[f"doc:{i}"] for i in range(1500))  # no false negatives
-
-
-def test_inline_probe_plan_is_map_only(spark):
-    from covid19_spark.operators.bloom import (
-        bloom_bitmap_words,
-        bloom_might_contain_inline,
-    )
-
-    m = 1 << 12
-    bloom = bloom_build(_keys(spark, 0, 100), "key", m_bits=m, k=3)
-    words = bloom_bitmap_words(bloom, m)
-    out = bloom_might_contain_inline(_keys(spark, 0, 200), words, "key", m_bits=m, k=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "Exchange" not in plan.replace(
-        "Exchange RoundRobin", ""
-    ), plan  # repartition from _keys is the only allowed exchange
-
-
-def test_inline_probe_handles_awkward_column_names(spark):
-    """ADVICE r10: the probe mask is built with the Column API (no SQL
-    string interpolation), so a key column whose name needs backticks in
-    SQL (space, hyphen) binds correctly and matches the join path."""
-    from covid19_spark.operators.bloom import (
-        bloom_bitmap_words,
-        bloom_might_contain_inline,
-    )
-
+def test_probe_handles_awkward_column_names(spark):
+    """A key column whose name needs backticks in SQL (space, hyphen)
+    binds correctly in the probe and gives the same verdicts as a plainly
+    named column."""
     m, k = 1 << 13, 4
-    indexed = _keys(spark, 0, 500)
-    bloom = bloom_build(indexed, "key", m_bits=m, k=k)
-    words = bloom_bitmap_words(bloom, m)
+    bloom = bloom_build(_keys(spark, 0, 500), "key", m_bits=m, k=k)
     cands = _keys(spark, 0, 1000).withColumnRenamed("key", "doc key-1")
     got = {
         r["doc key-1"]: r.might_contain
-        for r in bloom_might_contain_inline(
-            cands, words, "doc key-1", m_bits=m, k=k
+        for r in bloom_might_contain(
+            cands, bloom, "doc key-1", m_bits=m, k=k
         ).collect()
     }
     ref = {
@@ -121,5 +81,5 @@ def test_inline_probe_handles_awkward_column_names(spark):
             _keys(spark, 0, 1000), bloom, "key", m_bits=m, k=k
         ).collect()
     }
-    assert {k_: v for k_, v in got.items()} == ref
+    assert got == ref
     assert all(got[f"doc:{i}"] for i in range(500))

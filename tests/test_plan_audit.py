@@ -1,127 +1,99 @@
 """Global physical-plan audit over EVERY registered query.
 
 The per-query pins in test_plans.py freeze individual plan shapes; this
-module sweeps the whole registry once and enforces the repo-wide scale
-invariants that no single-query pin can guarantee stays true as queries
-are added:
+module sweeps the whole registry once and checks two things:
 
-- **No CartesianProduct, ever.** An unkeyed join that isn't a broadcast
-  is quadratic at 100 TB no matter what the query is.
-- **No row-at-a-time Python UDFs** (``BatchEvalPython``): SURVEY §2.8's
-  design goal — Python kernels must be Arrow-vectorized or absent.
-- **ArrowEvalPython only where declared**: the one pandas_udf in the
-  repo is the hyperplane LSH signer (operators/similarity.py); any new
-  Arrow eval node must be consciously added here.
-- **BroadcastNestedLoopJoin only where audited**: every BNLJ in the
-  registry is a crossJoin against a *one-row* aggregate (corpus-level
-  bounds, norms, thresholds) — broadcast cost O(1). A new BNLJ showing
-  up in any other query is, until proven otherwise, an accidental
-  unkeyed join; it must be audited for one-row-ness (see the dedicated
-  pins, e.g. test_top_revenue_suppliers_one_row_broadcast) and added to
-  the allowlist below before this audit passes.
+- **Whole-registry bans**, independent of any recorded shape:
+  - no CartesianProduct, ever: an unkeyed join that isn't a broadcast is
+    quadratic at 100 TB no matter what the query is;
+  - no row-at-a-time Python UDFs (``BatchEvalPython``): SURVEY §2.8's
+    design goal — Python kernels must be Arrow-vectorized or absent.
+- **One plan signature per query**, checked against
+  ``tests/plan_signatures.txt``: the counts of the plan nodes that decide
+  cost at scale (exchanges, join strategies, windows, Python execs, cache
+  scans). Any change in plan shape changes that query's line, so the test
+  fails until the new line is committed and the shape change shows as a
+  one-line review diff. The failure message lists every differing query as
+  ``name: <file> → <live>``; paste the live side into the file. Audit
+  notes (why a BroadcastNestedLoopJoin is a one-row broadcast, why an
+  ArrowEvalPython node is there) ride as ``#`` comments on their line.
 
-One sweep builds all plans at sf0.001 (~90 s: a handful of queries run
+One sweep builds all plans at sf0.001 (~100 s: a handful of queries run
 contract-small driver-side fits during construction) and reports every
-violation at once.
+difference at once.
 """
 
-import pytest
+import os
+import re
+from collections import Counter
 
 from covid19_spark.plans.registry import QUERY_REGISTRY
 
 SF = "/root/testdata/sf0.001"
+SIGNATURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_signatures.txt")
 
-# The only pandas_udf in the repo: the sign-LSH hyperplane signer.
-ARROW_EVAL_ALLOWED = {"ann_cosine_topk", "lshann_probe_crosscheck"}
-
-# Every query whose plan contains a BroadcastNestedLoopJoin. Each is a
-# crossJoin against a one-row aggregate (global norm / count / threshold
-# / code-grid literal) — audited in VERDICT r10 and pinned one-by-one in
-# test_plans.py where the one-row claim is load-bearing.
-BNLJ_ALLOWED = {
-    "adaptive_blocking",
-    "ann_filtered_topk",  # ivfpq family one-row norm/threshold broadcasts
-    "ann_index_persist_topk",
-    "array_prefs_fanout",
-    "asof_latest",
-    "bigram_backoff_lm",
-    "bloom_pruning_gain",  # broadcast 5-row probe set, non-equi zone check
-    "bigram_pmi",
-    # bm25_topk left this list in r12: index-served BM25 replaced the one-row
-    # n_docs/avgdl crossJoins with driver literals (orderBy+limit → TOAP)
-    "corpus_drift",
-    "cosine_topk",
-    "domain_mix_sample",
-    "hard_negatives",  # broadcast |queries|-row non-equi label-filter join
-    "heavy_hitters",
-    "hilbert_clustering",  # one-row grid-bounds broadcast (zorder twin)
-    "hybrid_rrf_topk",  # dense cosine side (broadcast |queries|-row non-equi)
-    # bm25f_ranking / dismax_fielded / lm_dirichlet_ranking / prefix_bm25 /
-    # prf_expanded_bm25 / topk_users / zip_join left this list in r14:
-    # with_ordered_index's cumulative offsets are now a window over the
-    # <= n_partitions-row counts frame joined back on _pid (equi, broadcast
-    # hash) instead of the triangular non-equi self-join that compiled to
-    # the BNLJ.
-    # search_snippets left this list in r14: the top-k is collected (bounded
-    # k rows) and re-seeded as a literal frame for static doc_id pruning, so
-    # top_k's per-partition-offset BNLJ no longer appears in the served plan
-    "idle_rich_customers",
-    "interpolate_revenue",
-    "ivf_cosine_topk",
-    "ivf_probe_crosscheck",
-    "ivfpq_cosine_topk",
-    "ivfpq_probe_crosscheck",
-    "key_skew_report",
-    "knn_exact_topk",
-    "layout_pruning_gain",
-    "leakage_safe_split",
-    "lorenz_concentration",  # one-row grand-total broadcast
-    "lsh_guard_report",
-    "matryoshka_recall",  # cosine_topk broadcast queries at 3 dim levels
-    "maxsim_topk",  # broadcast |queries|-row non-equi late-interaction join
-    "mmr_rerank",  # cosine_topk's broadcast |queries|-row non-equi join
-    "pq_adc_crosscheck",
-    "pq_cosine_topk",
-    "psi_drift",  # one-row bounds + one-row totals broadcasts  # one-row n_docs/avgdl scalar broadcasts (bm25 shape)
-    "scd2_point_in_time",
-    "semantic_dedup_paper_policy",
-    "sq8_cosine_topk",
-    "tfidf_top_terms",
-    "token_budget_mix",
-    "top_revenue_suppliers",
-    "triangle_count",
-    "unigram_logprob",
-    "zorder_clustering",
-    "zrange_spatial_join",  # broadcast Morton-interval frame (≤32×3 rows)
+#: plan node name → signature label, in signature order
+SIG_LABELS = {
+    "Exchange": "Exchange",
+    "BroadcastExchange": "BroadcastExchange",
+    "BroadcastHashJoin": "BHJ",
+    "SortMergeJoin": "SMJ",
+    "ShuffledHashJoin": "SHJ",
+    "BroadcastNestedLoopJoin": "BNLJ",
+    "Window": "Window",
+    "ArrowEvalPython": "ArrowEvalPython",
+    "InMemoryTableScan": "InMemoryTableScan",
 }
+#: every other Python exec (MapInPandas, FlatMapGroupsInPandas*, MapInArrow, ...)
+PYTHON_EXEC = re.compile(r"Pandas|Arrow|Python|PySpark")
+SIG_ORDER = [*SIG_LABELS.values(), "PythonExec"]
+# node name at the head of each tree line, after the branch glyphs and any
+# whole-stage-codegen id such as "*(3) "
+NODE = re.compile(r"^[\s:+|-]*(?:\*\(\d+\)\s+)?([A-Za-z]\w*)", re.M)
+
+
+def plan_signature(plan: str) -> str:
+    """``Label=count`` for each signature node in an executed-plan string,
+    in ``SIG_ORDER``; zero counts are omitted."""
+    counts = Counter()
+    for name in NODE.findall(plan):
+        if name in SIG_LABELS:
+            counts[SIG_LABELS[name]] += 1
+        elif PYTHON_EXEC.search(name):
+            counts["PythonExec"] += 1
+    return " ".join(f"{k}={counts[k]}" for k in SIG_ORDER if counts[k])
+
+
+def read_signatures(path: str) -> dict[str, str]:
+    """``name: signature  # note`` lines → {name: signature}."""
+    out = {}
+    with open(path) as f:
+        for line in f:
+            line = line.split("#", 1)[0].strip()
+            if line:
+                name, sig = line.split(":", 1)
+                out[name.strip()] = " ".join(sig.split())
+    return out
 
 
 def test_registry_wide_plan_invariants(spark):
-    violations = []
-    arrow_seen, bnlj_seen = set(), set()
+    violations, live = [], {}
     for name, spec in QUERY_REGISTRY.items():
         plan = spec.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             violations.append(f"{name}: CartesianProduct (unkeyed non-broadcast join)")
         if "BatchEvalPython" in plan:
             violations.append(f"{name}: BatchEvalPython (row-at-a-time Python UDF)")
-        if "ArrowEvalPython" in plan:
-            arrow_seen.add(name)
-            if name not in ARROW_EVAL_ALLOWED:
-                violations.append(f"{name}: undeclared ArrowEvalPython node")
-        if "BroadcastNestedLoopJoin" in plan:
-            bnlj_seen.add(name)
-            if name not in BNLJ_ALLOWED:
-                violations.append(
-                    f"{name}: unaudited BroadcastNestedLoopJoin — verify the "
-                    "broadcast side is a one-row bound, then allowlist"
-                )
+        live[name] = plan_signature(plan)
     assert not violations, "\n".join(violations)
-    # Allowlists must not rot: an entry whose query no longer produces the
-    # node (or left the registry) is stale evidence — prune it.
-    assert arrow_seen == ARROW_EVAL_ALLOWED & set(QUERY_REGISTRY), (
-        f"stale ArrowEvalPython allowlist: {sorted(ARROW_EVAL_ALLOWED - arrow_seen)}"
-    )
-    assert bnlj_seen == BNLJ_ALLOWED & set(QUERY_REGISTRY), (
-        f"stale BNLJ allowlist: {sorted(BNLJ_ALLOWED - bnlj_seen)}"
+
+    recorded = read_signatures(SIGNATURES)
+    diff = [
+        f"{name}: {recorded.get(name, '(absent)')} → {live.get(name, '(absent)')}"
+        for name in sorted(recorded.keys() | live.keys())
+        if recorded.get(name) != live.get(name)
+    ]
+    assert not diff, (
+        "plan signatures differ from tests/plan_signatures.txt "
+        "(file → live); commit the live side:\n" + "\n".join(diff)
     )

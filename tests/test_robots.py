@@ -90,7 +90,7 @@ def test_path_of(spark):
         ],
         "url string, want string",
     )
-    bad = df.filter(path_of(F.col("url")) != F.col("want")).count()
+    bad = df.filter(path_of("url") != F.col("want")).count()
     assert bad == 0
 
 

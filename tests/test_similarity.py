@@ -25,6 +25,20 @@ def test_cosine_topk_hand_case(spark):
     assert out[2].sim == -1.0
 
 
+def test_cosine_topk_exact_ties_rank_by_neighbor_id(spark):
+    """Duplicate corpus vectors give bit-identical sims; the rank breaks
+    the tie by neighbor_id ascending, also when k cuts inside the tie set
+    and the corpus is spread over several partitions."""
+    rows = [
+        (0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]),
+        (4, [1.0, 0.0]), (5, [-1.0, 0.0]), (6, [1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter("vec_id = 0")
+    out = cosine_topk(df.repartition(3), q, k=2).orderBy("rank").collect()
+    assert [(r.rank, r.neighbor_id) for r in out] == [(1, 1), (2, 4)]
+
+
 def _clustered(spark, n_clusters=8, per_cluster=40, dim=16, noise=0.15):
     rng = np.random.default_rng(123)
     centers = rng.normal(size=(n_clusters, dim))

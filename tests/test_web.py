@@ -9,7 +9,7 @@ from covid19_spark.operators.web import canonical_url, html_link_count, strip_ht
 
 def _canon(spark, urls):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    return [r[0] for r in df.select(canonical_url(F.col("url"))).collect()]
+    return [r[0] for r in df.select(canonical_url("url")).collect()]
 
 
 def test_canonical_url_spec_cases(spark):
@@ -47,7 +47,7 @@ def test_canonical_url_spec_cases(spark):
 
 def test_canonical_url_null(spark):
     df = spark.createDataFrame([(None,)], "url string")
-    assert df.select(canonical_url(F.col("url"))).collect()[0][0] is None
+    assert df.select(canonical_url("url")).collect()[0][0] is None
 
 
 def test_strip_html_and_link_count(spark):
@@ -105,9 +105,9 @@ def test_canonical_url_idempotent_property(spark):
 
     gather()
     df = spark.createDataFrame([(u,) for u in collected], "url string")
-    once = df.select(canonical_url(F.col("url")).alias("c1"))
+    once = df.select(canonical_url("url").alias("c1"))
     twice = once.select(
-        F.col("c1"), canonical_url(F.col("c1")).alias("c2")
+        F.col("c1"), canonical_url("c1").alias("c2")
     ).collect()
     for r in twice:
         assert r.c1 == r.c2, r
@@ -248,8 +248,8 @@ def test_domain_suffixes_label_boundary(spark):
         ],
         "u string",
     ).select(
-        host_of(F.col("u")).alias("h"),
-        domain_suffixes(F.col("u")).alias("s"),
+        host_of("u").alias("h"),
+        domain_suffixes("u").alias("s"),
     ).collect()
     assert rows[0].h == "a.b.example.com"
     assert rows[0].s == ["com", "example.com", "b.example.com", "a.b.example.com"]
@@ -274,9 +274,9 @@ def test_host_of_strips_userinfo(spark):
         ],
         "u string",
     ).select(
-        host_of(F.col("u")).alias("h"),
-        domain_suffixes(F.col("u")).alias("s"),
-        canonical_url(F.col("u")).alias("c"),
+        host_of("u").alias("h"),
+        domain_suffixes("u").alias("s"),
+        canonical_url("u").alias("c"),
     ).collect()
     assert rows[0].h == "bad.com" and "bad.com" in rows[0].s
     assert rows[1].h == "bad.com" and "bad.com" in rows[1].s
@@ -305,56 +305,3 @@ def test_blocklist_gate_closed_for_userinfo_urls(spark):
     kept = filter_blocked_domains(pages, blocked, url_col="url")
     assert [r.doc_id for r in kept.orderBy("doc_id").collect()] == [3]
 
-
-def test_sql_text_builders_match_column_forms(spark):
-    """The one-parse SQL builders (r14 construction-cost work) must be
-    value-identical to the F.*-built Column forms on the golden corpus —
-    the registry queries use the SQL path, the Column path stays for
-    ad-hoc operands, and this pin stops the two specs drifting."""
-    from covid19_spark.operators.web import (
-        canonical_url, domain_suffixes, host_of, path_of,
-    )
-
-    urls = [
-        "HTTPS://WWW.Example.COM:443/Path#frag",
-        "http://a.com:80/x",
-        "http://a.com:8080/x",
-        "https://a.com:80/x",
-        "https://a.com",
-        "https://a.com/x///",
-        "https://a.com/p?utm_source=x&b=2&utm_medium=y&a=1",
-        "https://a.com/p?gclid=1&fbclid=2&msclkid=3",
-        "https://a.com/p?q=utm_source",
-        "https://a.com?id=1",
-        "HTTP://A.com/CaseKept",
-        "  https://a.com/x  ",
-        "A.com/x/",
-        "https://u:p@Host.com/x?id=1",
-        "https://x@bad.com/",
-        "https://a@b@c.com/p",
-        "https://a.b.example.com/deep/path?x=1#f",
-        None,
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    out = df.select(
-        canonical_url(F.col("url")).alias("c_col"),
-        canonical_url("url").alias("c_sql"),
-        F.expr("url IS NULL").alias("is_null"),
-    ).collect()
-    for r in out:
-        assert r.c_col == r.c_sql, r
-    from covid19_spark.operators.web import (  # noqa: F401 (re-import ok)
-        domain_suffixes as _ds,
-    )
-    out2 = df.filter(F.col("url").isNotNull()).select(
-        host_of(F.col("url")).alias("h_col"),
-        host_of("url").alias("h_sql"),
-        path_of(F.col("url")).alias("p_col"),
-        path_of("url").alias("p_sql"),
-        domain_suffixes(F.col("url")).alias("s_col"),
-        domain_suffixes("url").alias("s_sql"),
-    ).collect()
-    for r in out2:
-        assert r.h_col == r.h_sql, r
-        assert r.p_col == r.p_sql, r
-        assert r.s_col == r.s_sql, r

@@ -254,22 +254,21 @@ def crawl_to_shards(spark, sf_dir: str):
 
 
 def domain_blocklist_filter(spark, sf_dir: str):
-    from covid19_spark.operators.web import domain_suffixes, host_of
+    from covid19_spark.operators.web import domain_suffixes_sql, host_of
 
     blocked = ["dom3.com", "dom7.com", "s1.dom4.com", "evil.net"]
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("HTTPS://S"), (d % 4).cast("string"),
-        F.lit(".Dom"), (d % 10).cast("string"),
-        F.lit(".Com:443/p/"), d.cast("string"), F.lit("?utm_source=x"),
+    url_sql = (
+        "concat('HTTPS://S', CAST(doc_id % 4 AS STRING), '.Dom', "
+        "CAST(doc_id % 10 AS STRING), '.Com:443/p/', "
+        "CAST(doc_id AS STRING), '?utm_source=x')"
     )
-    sfx = domain_suffixes(url)
-    matched = F.filter(sfx, lambda s: s.isin(*blocked))
+    in_list = ", ".join(f"'{b}'" for b in blocked)
+    matched = f"filter({domain_suffixes_sql(f'({url_sql})')}, s -> s IN ({in_list}))"
     return _crawl_docs(spark, sf_dir).select(
         "doc_id",
-        host_of(url).alias("host"),
-        (F.size(matched) > 0).cast("long").alias("blocked"),
-        F.array_min(matched).alias("rule"),
+        host_of(f"({url_sql})").alias("host"),
+        F.expr(f"CAST(size({matched}) > 0 AS BIGINT)").alias("blocked"),
+        F.expr(f"array_min({matched})").alias("rule"),
     )
 
 
