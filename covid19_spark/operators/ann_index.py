@@ -36,7 +36,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import NamedTuple
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from covid19_spark.operators.similarity import (
@@ -45,25 +44,12 @@ from covid19_spark.operators.similarity import (
     ivfpq_quantizers,
     ivfpq_search,
 )
-
-
-def _fast_committer(spark: SparkSession) -> None:
-    """Switch the session's Hadoop output committer to algorithm v2 before
-    index writes (idempotent, runtime-safe): v1's job-commit rename pass
-    costs a flat ~4.5 s per write on a local fs — 4 writes per index build
-    — while v2 commits at task level (measured 0.3 s). Set here, not only
-    in get_spark, because the index is written from whatever session the
-    caller owns (the driver's vanilla session included). Same partial-file
-    failure tradeoff as every object-store deployment; rebuilds are
-    overwrite-idempotent."""
-    try:
-        spark.sparkContext._jsc.hadoopConfiguration().set(
-            "mapreduce.fileoutputcommitter.algorithm.version", "2"
-        )
-    except Exception:
-        # No JVM-side context (e.g. Spark Connect): writes still work,
-        # just under whatever committer the cluster configured.
-        pass
+from covid19_spark.session import use_fast_committer
+from covid19_spark.sources.handles import invalidate_store
+from covid19_spark.sources.meta_io import (
+    meta_matches, read_meta_rows, write_meta_table,
+)
+from covid19_spark.sources.scratch import compact_parquet_dir, ensure_store
 
 
 class IvfPqIndex(NamedTuple):
@@ -106,7 +92,7 @@ def write_ivfpq_index(
         centroids=centroids, codebooks=codebooks,
     )
     spark = corpus.sparkSession
-    _fast_committer(spark)
+    use_fast_committer(spark)
     # meta is ONE row — written driver-side (meta_io); its dim field is
     # derived from a driver peek at the codebooks row instead of the
     # former dedicated limit(1).collect() job.  centroids/codebooks stay
@@ -116,8 +102,6 @@ def write_ivfpq_index(
     # existing fixture/index was built with — rewriting them driver-side
     # in collect order changed served results (measured, reverted).
     import pyarrow as pa
-
-    from covid19_spark.sources.meta_io import write_meta_table
 
     cb_first = codebooks.select("cvec").limit(1).collect()
     # dim is reconstructed as sub_dim·m — when the input dimension is not a
@@ -202,7 +186,7 @@ def append_ivfpq_index(
     from pyspark.sql import Observation
 
     spark = corpus_delta.sparkSession
-    _fast_committer(spark)
+    use_fast_committer(spark)
     idx = read_ivfpq_index(spark, path)
     meta = idx.meta
     # the count for the return value is OBSERVED on the encode pass
@@ -226,8 +210,6 @@ def append_ivfpq_index(
     )
     # append adds code files without touching meta, so the stamp-validated
     # handle cache cannot see it — invalidate explicitly
-    from covid19_spark.sources.handles import invalidate_store
-
     invalidate_store(path)
     return int(obs.get["n"]) if obs is not None else None
 
@@ -239,38 +221,25 @@ def compact_ivfpq_index(
     ``compact_inverted_index`` discipline applied to the codes store:
     each ``append_ivfpq_index`` adds one parquet fragment per touched
     list directory, and after enough micro-batches a probe's cost turns
-    file-listing/open bound (the FAISS segment-merge analogue).  Rewrites
-    ``codes/`` into one file per ``centroid_id`` when the fragment count
-    exceeds max(``file_threshold``, list-dir count — the compacted floor,
-    so a fully-compacted wide index never re-compacts), deduplicating
-    replayed-append rows on the index's id column.  Temp-write + atomic
-    rename; the ``centroid_id`` partitioning — and with it the probe's
-    static partition pruning — is preserved.  centroids/codebooks/meta
+    file-listing/open bound (the FAISS segment-merge analogue).
+    ``scratch.compact_parquet_dir`` rewrites ``codes/`` into one file per
+    ``centroid_id``, deduplicating replayed-append rows on the index's id
+    column; the partitioning — and with it the probe's static partition
+    pruning — is preserved.  centroids/codebooks/meta
     never fragment (rewritten wholesale on build).  Run between batches,
     not concurrent with an append or serve (the Delta/Iceberg OPTIMIZE
     maintenance-window contract).
 
     Returns {store: compacted?} for observability."""
-    import glob
-
-    from covid19_spark.operators.dedup import _compact_parquet_dir
-
-    from covid19_spark.sources.handles import invalidate_store
-
-    id_col = read_ivfpq_index(spark, path).meta["id_col"]
-    n_dirs = len(glob.glob(f"{path}/codes/centroid_id=*"))
-    out = {
-        "codes": _compact_parquet_dir(
+    return {
+        "codes": compact_parquet_dir(
             spark,
             f"{path}/codes",
-            [id_col],
+            [read_meta_rows(f"{path}/meta")[0]["id_col"]],
             partition_by="centroid_id",
-            file_threshold=max(file_threshold, n_dirs),
+            file_threshold=file_threshold,
         ),
     }
-    # fragment rewrite leaves meta untouched — see append_ivfpq_index
-    invalidate_store(path)
-    return out
 
 
 def read_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
@@ -279,8 +248,6 @@ def read_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
     one-row meta dataset is read driver-side (meta_io): every serve
     reopens the index, so the former one-row Spark collect was a fixed
     per-query job."""
-    from covid19_spark.sources.meta_io import read_meta_rows
-
     meta_row = read_meta_rows(f"{path}/meta")[0]
     meta = {
         "attr_cols": meta_row.get("attr_cols") or "",
@@ -320,74 +287,27 @@ def ensure_ivfpq_index(
     mismatched quantizer setup."""
     if not fingerprint:
         raise ValueError("ensure_ivfpq_index requires a non-empty fingerprint")
-    import shutil
-    import time
-
-    from covid19_spark.sources.scratch import (
-        build_scratch_path, publish_if_absent, replace_dir,
+    return ensure_store(
+        corpus.sparkSession,
+        path,
+        is_fresh=lambda: meta_matches(
+            f"{path}/meta",
+            fingerprint=fingerprint,
+            n_centroids=int(n_centroids),
+            m=int(m),
+            n_codes=int(n_codes),
+            id_col=id_col,
+            vec_col=vec_col,
+            attr_cols=",".join(attr_cols),
+        ),
+        build=lambda tmp: write_ivfpq_index(
+            corpus, tmp, n_centroids=n_centroids, m=m, n_codes=n_codes,
+            id_col=id_col, vec_col=vec_col, attr_cols=attr_cols,
+            fingerprint=fingerprint,
+        ),
+        open_store=read_ivfpq_index,
+        stamp_dirs=("meta",),
     )
-
-    spark = corpus.sparkSession
-
-    def _matches(meta: dict) -> bool:
-        return (
-            meta["fingerprint"] == fingerprint
-            and meta["n_centroids"] == int(n_centroids)
-            and meta["m"] == int(m)
-            and meta["n_codes"] == int(n_codes)
-            and meta["id_col"] == id_col
-            and meta["vec_col"] == vec_col
-            and meta["attr_cols"] == ",".join(attr_cols)
-        )
-
-    from covid19_spark.sources import handles
-
-    try:
-        # process-level handle cache (sources/handles): reopening costs
-        # ~3 spark.read.parquet calls of fixed per-serve overhead; the
-        # lazy handle is plan re-use, validated by the meta stamp
-        # (rebuilds rewrite meta) — appends/compaction invalidate
-        # explicitly since they leave meta untouched
-        stamp = handles.meta_stamp(f"{path}/meta")
-        cached = handles.get_store(spark, path, stamp)
-        if cached is not None and _matches(cached.meta):
-            return cached
-        idx = read_ivfpq_index(spark, path)
-        if _matches(idx.meta):
-            handles.put_store(spark, path, stamp, idx)
-            return idx
-    # absent/partial/stale-schema cache: rebuild below.  Narrow on purpose
-    # (ADVICE r12): genuine IO/permission/corruption errors must surface,
-    # not silently trigger a full rebuild.
-    except (AnalysisException, FileNotFoundError, IndexError, KeyError):
-        pass
-    # scratch build + rename publish (VERDICT r12 task #4): concurrent cold
-    # builds to the same cache path no longer interleave writes.  If the
-    # path filled in while we built: a concurrent MATCHING build won
-    # (discard ours — never delete files its returned readers still hold)
-    # or the mismatched build is still there (swap it out).
-    tmp = build_scratch_path(path)
-    write_ivfpq_index(
-        corpus, tmp, n_centroids=n_centroids, m=m, n_codes=n_codes,
-        id_col=id_col, vec_col=vec_col, attr_cols=attr_cols,
-        fingerprint=fingerprint,
-    )
-    if not publish_if_absent(tmp, path):
-        fresh = False
-        try:
-            fresh = _matches(read_ivfpq_index(spark, path).meta)
-        except (AnalysisException, FileNotFoundError, IndexError, KeyError):
-            fresh = False
-        if fresh:
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            replace_dir(tmp, path)
-    for _ in range(3):
-        try:
-            return read_ivfpq_index(spark, path)
-        except (AnalysisException, FileNotFoundError, IndexError, KeyError):
-            time.sleep(0.2)
-    return read_ivfpq_index(spark, path)
 
 
 def corpus_file_fingerprint(sf_dir: str, table: str = "embeddings") -> str:

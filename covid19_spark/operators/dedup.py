@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from covid19_spark.operators.text import word_shingles
+from covid19_spark.sources.scratch import compact_parquet_dir
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1054,51 +1055,6 @@ def incremental_dedup_against_index(
     return out
 
 
-def _compact_parquet_dir(
-    spark,
-    path: str,
-    dedup_cols: Sequence[str],
-    partition_by: str | Sequence[str] | None = None,
-    file_threshold: int = 8,
-    target_files: int = 1,
-) -> bool:
-    """Rewrite an append-only parquet directory into few large files when
-    its fragment count exceeds ``file_threshold``; returns True if it
-    compacted. Deduplicates on ``dedup_cols`` while rewriting (replayed
-    appends leave identical rows). Write-to-temp-then-rename swap: the
-    rewrite is materialized completely before the old directory is
-    replaced, so a crash mid-compaction leaves either the old store or the
-    new one, never a mix. Run between batches (not concurrent with an
-    append — a real deployment does this as Delta/Iceberg OPTIMIZE, which
-    is transactional; parquet-on-filesystem needs the maintenance window).
-    """
-    import glob
-    import os
-    import shutil
-
-    frags = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    if len(frags) <= file_threshold:
-        return False
-    df = spark.read.parquet(path).dropDuplicates(list(dedup_cols))
-    tmp = f"{path}__compacting"
-    old = f"{path}__old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    if partition_by is not None:
-        # repartition BY the partition column(s): every partition's rows
-        # land in one task → exactly one file per partition directory
-        part_cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        df.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(tmp)
-    else:
-        df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return True
-
-
 def compact_dedup_index(
     spark, path: str, file_threshold: int = 8
 ) -> dict[str, bool]:
@@ -1106,26 +1062,26 @@ def compact_dedup_index(
     (``build_dedup_index`` / ``append_to_dedup_index``): each appended batch
     adds parquet fragments to ``digests``/``buckets``/``shingles``, and probe
     cost eventually becomes file-listing/open bound rather than data bound.
-    Compacts every store whose fragment count exceeds ``file_threshold``,
-    deduplicating replayed-append rows in the same pass; screen results are
-    unchanged (equivalence pinned by test). ``buckets`` keeps its
-    partitioned-by-band layout (one file per band after compaction) so the
-    probe's partition pruning is preserved.
+    Compacts every store whose fragment count exceeds max(``file_threshold``,
+    its partition-dir count), deduplicating replayed-append rows in the
+    same pass; screen results are unchanged (equivalence pinned by test).
+    ``buckets`` keeps its partitioned-by-band layout (one file per band
+    after compaction) so the probe's partition pruning is preserved.
 
     Returns {store: compacted?} for observability.
     """
     return {
-        "digests": _compact_parquet_dir(
+        "digests": compact_parquet_dir(
             spark, f"{path}/digests", ["__th"], file_threshold=file_threshold
         ),
-        "buckets": _compact_parquet_dir(
+        "buckets": compact_parquet_dir(
             spark,
             f"{path}/buckets",
             ["__cid", "band", "bucket"],
             partition_by="band",
             file_threshold=file_threshold,
         ),
-        "shingles": _compact_parquet_dir(
+        "shingles": compact_parquet_dir(
             spark, f"{path}/shingles", ["__cid"], file_threshold=file_threshold
         ),
     }

@@ -1409,70 +1409,59 @@ def ensure_semantic_assignment(
     ensure_ivfpq_index stale-cache argument).  Returns (centroids,
     assigned) frames: (centroid_id, cvec) and (id_col, centroid_id, vec).
     """
-    import shutil
-    import time
+    import pyarrow as pa
 
-    from pyspark.errors import AnalysisException
-
-    from covid19_spark.operators.ann_index import _fast_committer
-    from covid19_spark.sources.scratch import (
-        build_scratch_path, publish_if_absent, replace_dir,
-    )
+    from covid19_spark.session import use_fast_committer
+    from covid19_spark.sources.meta_io import meta_matches, write_meta_table
+    from covid19_spark.sources.scratch import ensure_store
 
     if not fingerprint:
         raise ValueError(
             "ensure_semantic_assignment requires a non-empty fingerprint"
         )
     spark = corpus.sparkSession
-    _probe_errs = (AnalysisException, FileNotFoundError, IndexError, KeyError)
 
-    def _read(p: str) -> tuple[DataFrame, DataFrame]:
-        return (
-            spark.read.parquet(f"{p}/centroids"),
-            spark.read.parquet(f"{p}/assigned"),
+    def _build(tmp: str) -> None:
+        use_fast_committer(spark)
+        centroids = ivf_train_centroids(
+            corpus, n_centroids, id_col, vec_col, iterations
+        ).localCheckpoint(eager=False)
+        centroids.write.mode("overwrite").parquet(f"{tmp}/centroids")
+        centroids = spark.read.parquet(f"{tmp}/centroids")
+        ivf_assign(corpus, centroids, id_col, vec_col, n_probes=1).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/assigned")
+        write_meta_table(
+            f"{tmp}/meta",
+            pa.table(
+                {
+                    "fingerprint": pa.array([fingerprint], pa.string()),
+                    "n_centroids": pa.array([int(n_centroids)], pa.int32()),
+                    "iterations": pa.array([int(iterations)], pa.int32()),
+                    "id_col": pa.array([id_col], pa.string()),
+                    "vec_col": pa.array([vec_col], pa.string()),
+                }
+            ),
         )
 
-    def _is_fresh() -> bool:
-        try:
-            row = spark.read.parquet(f"{path}/meta").collect()[0]
-            return (
-                row["fingerprint"] == fingerprint
-                and row["n_centroids"] == int(n_centroids)
-                and row["iterations"] == int(iterations)
-                and row["id_col"] == id_col
-                and row["vec_col"] == vec_col
-            )
-        except _probe_errs:
-            return False
-
-    if _is_fresh():
-        return _read(path)
-    _fast_committer(spark)
-    tmp = build_scratch_path(path)
-    centroids = ivf_train_centroids(
-        corpus, n_centroids, id_col, vec_col, iterations
-    ).localCheckpoint(eager=False)
-    centroids.write.mode("overwrite").parquet(f"{tmp}/centroids")
-    centroids = spark.read.parquet(f"{tmp}/centroids")
-    ivf_assign(corpus, centroids, id_col, vec_col, n_probes=1).write.mode(
-        "overwrite"
-    ).parquet(f"{tmp}/assigned")
-    spark.createDataFrame(
-        [(fingerprint, int(n_centroids), int(iterations), id_col, vec_col)],
-        "fingerprint STRING, n_centroids INT, iterations INT, "
-        "id_col STRING, vec_col STRING",
-    ).repartition(1).write.mode("overwrite").parquet(f"{tmp}/meta")
-    if not publish_if_absent(tmp, path):
-        if _is_fresh():
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            replace_dir(tmp, path)
-    for _ in range(3):
-        try:
-            return _read(path)
-        except _probe_errs:
-            time.sleep(0.2)
-    return _read(path)
+    return ensure_store(
+        spark,
+        path,
+        is_fresh=lambda: meta_matches(
+            f"{path}/meta",
+            fingerprint=fingerprint,
+            n_centroids=int(n_centroids),
+            iterations=int(iterations),
+            id_col=id_col,
+            vec_col=vec_col,
+        ),
+        build=_build,
+        open_store=lambda s, p: (
+            s.read.parquet(f"{p}/centroids"),
+            s.read.parquet(f"{p}/assigned"),
+        ),
+        stamp_dirs=("meta",),
+    )
 
 
 def semantic_dedup(

@@ -18,6 +18,7 @@ ROCKSDB_PROVIDER = (
 ROCKSDB_CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
+COMMITTER_VERSION_CONF = "mapreduce.fileoutputcommitter.algorithm.version"
 
 
 def get_spark(
@@ -63,7 +64,7 @@ def get_spark(
         # partial task files in the destination — the standard Spark
         # setting for object stores, where real deployments use
         # cloud-native committers anyway.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .config(f"spark.hadoop.{COMMITTER_VERSION_CONF}", "2")
         # Streaming state: RocksDB provider = disk-backed per-key state, the
         # analogue of the reference's RocksDB stores (SURVEY §4).
         .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
@@ -78,6 +79,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def use_fast_committer(spark: SparkSession) -> None:
+    """Switch the session's Hadoop output committer to algorithm v2 before
+    store writes (idempotent, runtime-safe): v1's job-commit rename pass
+    costs a flat ~4.5 s per write on a local fs — 4 writes per index build
+    — while v2 commits at task level (measured 0.3 s). Set here, not only
+    in get_spark, because stores are written from whatever session the
+    caller owns (a plain session without get_spark's confs included). Same
+    partial-file failure tradeoff as every object-store deployment;
+    rebuilds are overwrite-idempotent."""
+    try:
+        spark.sparkContext._jsc.hadoopConfiguration().set(
+            COMMITTER_VERSION_CONF, "2"
+        )
+    except Exception:
+        # No JVM-side context (e.g. Spark Connect): writes still work,
+        # just under whatever committer the cluster configured.
+        pass
 
 
 def partitions_for_bytes(spark: SparkSession, n_bytes: int) -> int:

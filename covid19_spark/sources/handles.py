@@ -1,15 +1,16 @@
 """Process-level cache of persisted-store handles (guide §1.2/§5: cut
 fixed per-query driver work).
 
-Every index-served query reopens its persisted store (inverted index,
-fielded index, IVF-PQ index) via ``spark.read.parquet`` — a JVM
-round-trip + file listing + footer/schema read per dataset, ~0.1 s each
-on local[32], repeated for every serve of every query in a bench sweep.
-The handle (a LAZY DataFrame plus the store's contract-small metadata
-row) is pure logical plan: caching it computes nothing and pins no data
-— every action still scans the parquet files — so this is plan re-use,
-not result caching (the banned class), the same memo class as
-``index._BUCKET_CACHE``.
+Its one caller is ``scratch.ensure_store``: every index-served query
+reopens its persisted store (inverted index, fielded index, IVF-PQ index,
+SemDeDup assignment) through it, and an uncached open is a
+``spark.read.parquet`` per dataset — a JVM round-trip + file listing +
+footer/schema read, ~0.1 s each on local[32], repeated for every serve of
+every query in a bench sweep.  The handle (LAZY DataFrames plus the
+store's contract-small metadata row) is pure logical plan: caching it
+computes nothing and pins no data — every action still scans the parquet
+files — so this is plan re-use, not result caching (the banned class),
+the same memo class as ``index._BUCKET_CACHE``.
 
 Safety contract:
 - Keyed by (applicationId, path): a different SparkSession never sees
@@ -18,12 +19,12 @@ Safety contract:
   store's metadata files (size + mtime_ns): rebuilds and appends rewrite
   ``scalars``/``meta``, so they miss the cache automatically — even when
   another process performed them.
-- Mutators that do NOT touch the metadata dataset (compaction rewrites
-  postings/codes fragments in place) must call :func:`invalidate_store`;
-  all in-repo writers do.  Cross-process compaction during another
-  process's serve is excluded by the stores' existing maintenance-window
-  contract ("run between batches, not concurrent with an append or
-  serve").
+- Mutators that do NOT touch the metadata dataset (IVF-PQ appends to
+  ``codes``, ``scratch.compact_parquet_dir``) must call
+  :func:`invalidate_store`; all in-repo writers do.  Cross-process
+  compaction during another process's serve is excluded by the stores'
+  maintenance-window contract ("run between batches, not concurrent
+  with an append or serve").
 """
 
 from __future__ import annotations

@@ -66,6 +66,12 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from covid19_spark.session import use_fast_committer
+from covid19_spark.sources.handles import invalidate_store
+from covid19_spark.sources.meta_io import (
+    meta_matches, read_meta_rows, write_meta_table,
+)
+from covid19_spark.sources.scratch import compact_parquet_dir, ensure_store
 from covid19_spark.sources.tables import load_table
 
 N_TERM_BUCKETS = 64
@@ -228,8 +234,6 @@ def _rewrite_derived(
 
     from pyspark.sql import Observation
 
-    from covid19_spark.sources.meta_io import write_meta_table
-
     persisted = spark.read.parquet(f"{path}/postings")
     # degenerate store (zero posting rows): partitioned/agg writes of zero
     # rows emit NO files and the read-back cannot infer a schema — force
@@ -344,14 +348,12 @@ def build_inverted_index_from(
     would be recomputed and overwritten by the append anyway); such an
     index is not servable until an append (or ``_rewrite_derived``)
     lands the derived datasets."""
-    from covid19_spark.operators.ann_index import _fast_committer
-
     import glob
 
     from pyspark.sql import Observation
 
     spark = docs.sparkSession
-    _fast_committer(spark)  # 4 writes per build; v1 job-commit costs ~4.5s each
+    use_fast_committer(spark)  # 4 writes per build; v1 job-commit costs ~4.5s each
     # the document count is OBSERVED on the docs rows flowing into the
     # postings write (CollectMetrics above the caller's frame) instead of
     # a dedicated ``docs.count()`` job afterwards — the tokenize pass
@@ -421,16 +423,12 @@ def append_inverted_index(
     are exact integers and every derived stat is a deterministic function
     of the postings multiset (pinned by the ``bm25_incremental_index``
     registry differential)."""
-    from covid19_spark.operators.ann_index import _fast_committer
-
     import glob
 
     from pyspark.sql import Observation
 
-    from covid19_spark.sources.meta_io import read_meta_rows
-
     spark = docs_delta.sparkSession
-    _fast_committer(spark)
+    use_fast_committer(spark)
     if n_prev is None:  # derived-less base builds pass their count in
         n_prev = float(read_meta_rows(f"{path}/scalars")[0]["n"])
     # delta count observed on the append write (same job-count cut as the
@@ -463,8 +461,6 @@ def append_inverted_index(
     _rewrite_derived(
         spark, path, n_prev + float(obs.get["n"]), fingerprint
     )
-    from covid19_spark.sources.handles import invalidate_store
-
     invalidate_store(path)
 
 
@@ -532,12 +528,11 @@ def compact_inverted_index(
     ``append_inverted_index`` adds one parquet fragment per touched term
     bucket under ``postings/``, and after enough appends a term-pruned
     scan becomes file-listing/open bound instead of data bound (the
-    Lucene segment-merge problem at parquet granularity).  Rewrites
-    ``postings/`` into one file per ``tb`` bucket when its fragment count
-    exceeds ``file_threshold`` — temp-write + atomic rename, partitioning
-    preserved so the static ``tb IN (...)`` pruning is unchanged — via
-    the same ``_compact_parquet_dir`` discipline as the dedup index.
-    Replayed-append duplicates collapse on (doc_id, t) in the same pass.
+    Lucene segment-merge problem at parquet granularity).
+    ``scratch.compact_parquet_dir`` rewrites ``postings/`` into one file
+    per ``tb`` bucket, partitioning preserved so the static ``tb IN (...)``
+    pruning is unchanged; replayed-append duplicates collapse on
+    (doc_id, t) in the same pass.
 
     The derived datasets never need compaction: ``_rewrite_derived``
     rewrites doclen/termstats/scalars wholesale (mode=overwrite) on every
@@ -547,35 +542,18 @@ def compact_inverted_index(
 
     Returns {store: compacted?} for observability.
     """
-    import glob
-
-    from covid19_spark.operators.dedup import _compact_parquet_dir
-
-    # the compacted floor is ONE file per non-empty tb bucket, so the
-    # trigger is fragments > buckets (else a fully-compacted wide index
-    # would re-compact forever); ``file_threshold`` still floors sparse
-    # fixtures
-    from covid19_spark.sources.handles import invalidate_store
-
-    n_dirs = len(glob.glob(f"{path}/postings/tb=*"))
-    out = {
-        "postings": _compact_parquet_dir(
+    return {
+        "postings": compact_parquet_dir(
             spark,
             f"{path}/postings",
             ["doc_id", "t"],
             partition_by="tb",
-            file_threshold=max(file_threshold, n_dirs),
+            file_threshold=file_threshold,
         ),
     }
-    # compaction rewrites postings fragments without touching scalars, so
-    # the stamp-validated handle cache cannot see it — invalidate explicitly
-    invalidate_store(path)
-    return out
 
 
 def read_inverted_index(spark: SparkSession, path: str) -> InvertedIndex:
-    from covid19_spark.sources.meta_io import read_meta_rows
-
     # scalars is ONE metadata row by contract: read it driver-side instead
     # of submitting a Spark job per open (every serve query opens the
     # index, so this was a fixed per-query job)
@@ -597,66 +575,16 @@ def ensure_inverted_index(
     """Open the index for ``sf_dir``, building it first iff absent or
     stale (source-file fingerprint mismatch — the driver regenerates
     testdata between rounds, so a cached index must self-invalidate)."""
-    import shutil
-    import time
-
-    from pyspark.errors import AnalysisException
-
-    from covid19_spark.sources.scratch import (
-        build_scratch_path, publish_if_absent, replace_dir,
-    )
-
     path = path or default_index_path(sf_dir)
     want = corpus_fingerprint(sf_dir)
-
-    def _is_fresh() -> bool:
-        # absent/partial/stale-schema probes fall through to False.  Narrow
-        # on purpose (ADVICE r12): genuine IO/permission/corruption errors
-        # must surface, not silently trigger a full rebuild.  Driver-side
-        # metadata read (meta_io) — no Spark job per freshness probe.
-        from covid19_spark.sources.meta_io import read_meta_rows
-
-        try:
-            row = read_meta_rows(f"{path}/scalars")[0]
-            return row.get("fingerprint") == want
-        except (FileNotFoundError, IndexError):
-            return False
-
-    if _is_fresh():
-        # process-level handle cache (sources/handles): reopening the
-        # store costs ~3 spark.read.parquet calls (~0.25 s of fixed
-        # per-serve overhead); the lazy handle is plan re-use, validated
-        # by the scalars stamp (appends/rebuilds rewrite scalars) and
-        # invalidated by compaction
-        from covid19_spark.sources import handles
-
-        stamp = handles.meta_stamp(f"{path}/scalars")
-        idx = handles.get_store(spark, path, stamp)
-        if idx is None:
-            idx = read_inverted_index(spark, path)
-            handles.put_store(spark, path, stamp, idx)
-        return idx
-    # build into a unique scratch dir, then publish by rename (VERDICT r12
-    # task #4): concurrent cold builds to the SAME cache path no longer
-    # interleave Spark overwrites under a reader.  If the path filled in
-    # while we built: a concurrent FRESH build won (discard ours — never
-    # delete files its returned readers still hold) or the stale build is
-    # still there (swap it out).
-    tmp = build_scratch_path(path)
-    build_inverted_index(spark, sf_dir, tmp)
-    if not publish_if_absent(tmp, path):
-        if _is_fresh():
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            replace_dir(tmp, path)
-    # a concurrent replace leaves a brief path-absent window; retry the
-    # open a few times before letting the error surface
-    for _ in range(3):
-        try:
-            return read_inverted_index(spark, path)
-        except (AnalysisException, FileNotFoundError, IndexError):
-            time.sleep(0.2)
-    return read_inverted_index(spark, path)
+    return ensure_store(
+        spark,
+        path,
+        is_fresh=lambda: meta_matches(f"{path}/scalars", fingerprint=want),
+        build=lambda tmp: build_inverted_index(spark, sf_dir, tmp),
+        open_store=read_inverted_index,
+        stamp_dirs=("scalars",),
+    )
 
 
 _BUCKET_CACHE: dict[str, int] = {}
@@ -729,8 +657,6 @@ def _write_fielded_derived(
     with one tiny collect."""
     import pyarrow as pa
 
-    from covid19_spark.sources.meta_io import write_meta_table
-
     stats = (
         spark.read.parquet(f"{path}/fpostings")
         .groupBy("field")
@@ -798,14 +724,12 @@ def build_fielded_index_from(
     all-docs mean the unfielded index uses).  Exactness contract as the
     main index: tf/dl are integral counts, avgdl one IEEE division, the
     scoring expression lives in the query."""
-    from covid19_spark.operators.ann_index import _fast_committer
-
     import glob
 
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    _fast_committer(spark)
+    use_fast_committer(spark)
     parts = []
     for fname, expr in fields.items():
         col = F.expr(expr) if isinstance(expr, str) else expr
@@ -860,16 +784,12 @@ def append_fielded_index(
     into the fingerprint).  Bit-identical to a full rebuild over
     base ∪ delta — counts are exact integers and every derived stat is a
     deterministic function of the fpostings multiset (pinned by test)."""
-    from covid19_spark.operators.ann_index import _fast_committer
-
     import glob
 
     from pyspark.sql import Window
 
-    from covid19_spark.sources.meta_io import read_meta_rows
-
     spark = docs_delta.sparkSession
-    _fast_committer(spark)
+    use_fast_committer(spark)
     n_prev = float(read_meta_rows(f"{path}/scalars")[0]["n"])
     parts = []
     for fname, expr in fields.items():
@@ -907,8 +827,6 @@ def append_fielded_index(
     _write_fielded_derived(
         spark, path, n_prev + float(docs_delta.count()), fingerprint
     )
-    from covid19_spark.sources.handles import invalidate_store
-
     invalidate_store(path)
 
 
@@ -953,34 +871,20 @@ def compact_fielded_index(
     spark: SparkSession, path: str, file_threshold: int = 8
 ) -> dict[str, bool]:
     """``compact_inverted_index`` applied to the fielded store: rewrite
-    ``fpostings/`` to one file per term bucket once appends fragment it
-    past max(``file_threshold``, bucket-dir count), deduplicating
-    replayed-append rows on (doc_id, t, field).  Same temp-write +
-    atomic-rename, partitioning preserved."""
-    import glob
-
-    from covid19_spark.operators.dedup import _compact_parquet_dir
-
-    from covid19_spark.sources.handles import invalidate_store
-
-    n_dirs = len(glob.glob(f"{path}/fpostings/tb=*"))
-    out = {
-        "fpostings": _compact_parquet_dir(
+    ``fpostings/`` to one file per term bucket, deduplicating
+    replayed-append rows on (doc_id, t, field)."""
+    return {
+        "fpostings": compact_parquet_dir(
             spark,
             f"{path}/fpostings",
             ["doc_id", "t", "field"],
             partition_by="tb",
-            file_threshold=max(file_threshold, n_dirs),
+            file_threshold=file_threshold,
         ),
     }
-    # see compact_inverted_index: the stamp cannot see a fragment rewrite
-    invalidate_store(path)
-    return out
 
 
 def read_fielded_index(spark: SparkSession, path: str) -> FieldedIndex:
-    from covid19_spark.sources.meta_io import read_meta_rows
-
     # both datasets are contract-small metadata: driver-side reads, no
     # Spark job per open (see read_inverted_index)
     row = read_meta_rows(f"{path}/scalars")[0]
@@ -1009,51 +913,17 @@ def ensure_fielded_index(
     DEFINITIONS folded into the fingerprint (``fields_sig`` must change
     whenever the field expressions change; the corpus part self-updates
     from the source file)."""
-    import shutil
-    import time
-
-    from pyspark.errors import AnalysisException
-
-    from covid19_spark.sources.scratch import (
-        build_scratch_path, publish_if_absent, replace_dir,
-    )
-
     base = os.path.basename(sf_dir.rstrip("/"))
     path = path or f"/tmp/covid19_spark_fidx_{base}"
     want = f"{corpus_fingerprint(sf_dir)}:{fields_sig}"
-
-    def _is_fresh() -> bool:
-        from covid19_spark.sources.meta_io import read_meta_rows
-
-        try:
-            row = read_meta_rows(f"{path}/scalars")[0]
-            return row.get("fingerprint") == want
-        except (FileNotFoundError, IndexError):
-            return False
-
-    if _is_fresh():
-        # handle cache — see ensure_inverted_index
-        from covid19_spark.sources import handles
-
-        stamp = handles.meta_stamp(f"{path}/scalars", f"{path}/fieldstats")
-        idx = handles.get_store(spark, path, stamp)
-        if idx is None:
-            idx = read_fielded_index(spark, path)
-            handles.put_store(spark, path, stamp, idx)
-        return idx
-    tmp = build_scratch_path(path)
-    build_fielded_index_from(
-        load_table(spark, "documents", sf_dir), tmp, fields,
-        fingerprint=want,
+    return ensure_store(
+        spark,
+        path,
+        is_fresh=lambda: meta_matches(f"{path}/scalars", fingerprint=want),
+        build=lambda tmp: build_fielded_index_from(
+            load_table(spark, "documents", sf_dir), tmp, fields,
+            fingerprint=want,
+        ),
+        open_store=read_fielded_index,
+        stamp_dirs=("scalars", "fieldstats"),
     )
-    if not publish_if_absent(tmp, path):
-        if _is_fresh():
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            replace_dir(tmp, path)
-    for _ in range(3):
-        try:
-            return read_fielded_index(spark, path)
-        except (AnalysisException, FileNotFoundError, IndexError):
-            time.sleep(0.2)
-    return read_fielded_index(spark, path)

@@ -1,8 +1,11 @@
-"""Driver-side parquet I/O for contract-small index metadata.
+"""Driver-side parquet I/O for contract-small store metadata: four
+stores, one probe.
 
-The persisted index stores (inverted index, fielded index, IVF-PQ index)
-each carry a one-row ``scalars``/``meta`` dataset and, for the fielded
-index, a rows-per-field ``fieldstats`` dataset.  Reading one row through a
+The four build-once stores (inverted index, fielded index, IVF-PQ index,
+SemDeDup assignment) each carry a one-row ``scalars``/``meta`` dataset
+and, for the fielded index, a rows-per-field ``fieldstats`` dataset.
+``meta_matches`` is their one freshness probe (``scratch.ensure_store``
+calls it through each store's ``is_fresh``).  Reading one row through a
 distributed Spark job costs a full job submission (~0.1-0.3 s on an idle
 local[32], more under load) and WRITING one through
 ``createDataFrame(...).repartition(1).write.parquet`` costs a shuffle + a
@@ -39,8 +42,7 @@ def read_meta_rows(dirpath: str) -> list[dict]:
     Raises ``FileNotFoundError`` when the directory is absent or holds no
     parquet part-files (the same "not there yet" condition callers already
     handle for the Spark reader via AnalysisException/FileNotFoundError);
-    genuine corruption surfaces as a pyarrow error, matching the narrow
-    error-handling contract of the ensure_* callers (ADVICE r12)."""
+    genuine corruption surfaces as a pyarrow error."""
     files = sorted(
         f
         for f in glob.glob(os.path.join(dirpath, "*.parquet"))
@@ -52,6 +54,19 @@ def read_meta_rows(dirpath: str) -> list[dict]:
     for f in files:
         rows.extend(pq.read_table(f).to_pylist())
     return rows
+
+
+def meta_matches(dirpath: str, **expected) -> bool:
+    """True iff the first row of the meta dataset at ``dirpath`` holds every
+    ``expected`` field value.  An absent or partial store (no part-file, no
+    row) and an older layout (a missing field) read as not fresh; genuine
+    IO, permission or corruption errors surface instead of silently
+    triggering a rebuild."""
+    try:
+        row = read_meta_rows(dirpath)[0]
+    except (FileNotFoundError, IndexError):
+        return False
+    return all(row.get(k) == v for k, v in expected.items())
 
 
 def write_meta_table(dirpath: str, table: pa.Table) -> None:

@@ -49,12 +49,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from covid19_spark.operators.dedup import (
-    _compact_parquet_dir,
     band_buckets,
     dedup_clusters,
     lsh_candidate_pairs,
     minhash_signatures,
 )
+from covid19_spark.sources.scratch import compact_parquet_dir
 
 
 # Sub-partition fan-out of the bucket store: pmod(bucket, BUCKET_MODS) is the
@@ -213,10 +213,11 @@ def compact_lsh_store(
     """Maintenance job for the streaming near-dup store: every micro-batch
     appends a parquet fragment to ``sigs`` and ``buckets``, so steady-state
     ingestion degrades the history probe toward file-open overhead. Rewrites
-    any store whose fragment count exceeds ``file_threshold`` into
-    ``target_files`` large files, dropping replayed-batch duplicate rows in
-    the same pass — screen semantics are unchanged (a signature row is
-    probed identically wherever it lives; equivalence pinned by test).
+    any store whose fragment count exceeds max(``file_threshold``, its
+    (band, bucket_mod) dir count) into one file per partition dir, dropping
+    replayed-batch duplicate rows in the same pass — screen semantics are
+    unchanged (a signature row is probed identically wherever it lives;
+    equivalence pinned by test).
 
     Run between micro-batches (e.g. from a foreachBatch hook every N
     batches, or a scheduled maintenance job) — NOT concurrently with an
@@ -226,10 +227,10 @@ def compact_lsh_store(
     Returns {store: compacted?}.
     """
     return {
-        "sigs": _compact_parquet_dir(
+        "sigs": compact_parquet_dir(
             spark, f"{store_path}/sigs", [id_col], file_threshold=file_threshold
         ),
-        "buckets": _compact_parquet_dir(
+        "buckets": compact_parquet_dir(
             spark,
             f"{store_path}/buckets",
             [id_col, "band", "bucket"],

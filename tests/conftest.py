@@ -9,6 +9,14 @@ STATE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 @pytest.fixture(scope="session")
 def spark():
+    """A vanilla ``local[4]`` session, on purpose: like any plain session
+    that imports the query contract (``__spark_entry__.py``), it lacks
+    ``get_spark``'s confs, so a test that passes here does not depend on
+    them.  ``SPARK_GRAFT_CPUS`` therefore reaches only tests that call
+    ``session.get_spark``; the plan audit sees the same plans at any core
+    count, and a core-count-dependent plan is checked with
+    ``tools/time_queries.py`` or ``tools/scale_probe.py`` under
+    ``SPARK_GRAFT_CPUS`` instead."""
     s = (
         SparkSession.builder.master("local[4]")
         .appName("covid19_spark_tests")

@@ -179,6 +179,8 @@ def test_compact_inverted_index_serving_unchanged(spark, sf_dir, tmp_path):
     assert len(frag()) < n_before
     # partitioned-by-tb layout preserved: every file sits in a tb=N dir
     assert all("/tb=" in f for f in frag())
+    # the scratch rewrite and the swapped-out copy are both gone
+    assert glob.glob(f"{path}/postings__*") == []
     assert snapshot() == before
     # below threshold now: a second compaction is a no-op
     assert compact_inverted_index(spark, path) == {"postings": False}

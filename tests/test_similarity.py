@@ -194,6 +194,7 @@ def test_semantic_dedup_cached_assignment_bit_identical(spark, tmp_path):
 
     import pytest as _pytest
 
+    from covid19_spark import measure
     from covid19_spark.operators.similarity import (
         ensure_semantic_assignment, semantic_dedup,
     )
@@ -217,8 +218,10 @@ def test_semantic_dedup_cached_assignment_bit_identical(spark, tmp_path):
 
     assignment = ensure_semantic_assignment(corpus, path, "fp1", n_centroids=2)
     marker = os.path.getmtime(f"{path}/meta")
-    # fingerprint + params match: no rebuild
+    # fingerprint + params match: no rebuild, and no Spark job
+    j0 = measure.next_job_id(spark)
     ensure_semantic_assignment(corpus, path, "fp1", n_centroids=2)
+    assert measure.next_job_id(spark) - j0 == 0
     assert os.path.getmtime(f"{path}/meta") == marker
     for policy in ("min_id", "low_centroid_sim"):
         got = sorted(

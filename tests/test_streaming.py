@@ -748,6 +748,8 @@ def test_compact_lsh_store_preserves_dedup_semantics(stream_env):
     assert all(after_files[s] < before_files[s] for s in after_files)
     assert sig_set() == sig_rows
     assert {tuple(r) for r in spark.read.parquet(f"{store}/buckets").collect()} == bucket_rows
+    # one file per partition dir is the compacted floor: a second call is a no-op
+    assert compact_lsh_store(spark, store, "doc_id") == {"sigs": False, "buckets": False}
 
     # a near-copy of batch-3's doc is still dropped against the compacted store
     dup = " ".join(f"tok3_{j}" for j in range(20)).replace("tok3_9", "other")
