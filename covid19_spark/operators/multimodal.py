@@ -11,11 +11,12 @@ operators/jpeg_arith.py (oracle-green `jpeg_entropy_matrix`) — TIFF
 (incl. tiled + CCITT G3/G4), GIF, RIFF/WAVE audio (PCM 8/16/24/32-bit +
 IEEE float + G.711 A-law/mu-law + IMA ADPCM), and Motion-JPEG AVI video
 (RIFF container walk + per-frame JPEG decode, real frame sampling). The
-seams that truly remain ``NotImplementedError`` (with deterministic fakes
-for the test path) are compressed-audio-in-WAV (MP3/AAC payloads) and
-inter-frame video codecs (H.264/VP9) — formats whose decoders are out of
-pure-stdlib reach. Everything Spark-side is real and tested: schemas,
-batch iteration, partition sizing, UDF signatures.
+seams that truly remain ``NotImplementedError`` are compressed-audio-in-WAV
+(MP3/AAC payloads) and inter-frame video codecs (H.264/VP9) — formats whose
+decoders are out of pure-stdlib reach; a permissive-mode kernel reports
+them as ``unsupported`` rows. Every public kernel decodes: there is no fake
+path. They all run one per-blob loop (``_map_blobs``) that owns the
+fail/permissive policy.
 
 Scale design: media blobs dominate bytes, not rows — so (1) metadata-only
 predicates must prune *before* any decode (keep metadata in top-level columns,
@@ -1646,8 +1647,10 @@ def image_features_from_pixels(
 
 
 def fake_image_features(payload: bytes, dim: int = 8) -> np.ndarray:
-    """Deterministic fake feature extractor for tests: byte-histogram folded
-    to ``dim`` buckets, L2-normalized. Stands in for a CNN embedding."""
+    """Byte-histogram features of an undecoded payload: the 256 byte counts
+    folded to ``dim`` buckets, L2-normalized. This is what the
+    ``multimodal_features`` query computes over raw text bytes, which hold
+    no image format to decode; the kernels never fall back to it."""
     if payload is None or len(payload) == 0:
         return np.zeros(dim, dtype=np.float32)
     counts = np.bincount(np.frombuffer(payload, dtype=np.uint8), minlength=256)
@@ -1672,59 +1675,112 @@ def _check_on_error(on_error: str) -> None:
         )
 
 
-def extract_image_features(
-    media: DataFrame, use_fake: bool = True, on_error: str = "fail"
-) -> DataFrame:
-    """Per-blob feature extraction via ``mapInPandas`` (Arrow batches).
+#: pandas dtypes for integer output columns: nullable, so a NULL sentinel
+#: never turns a 64-bit hash column into float64
+_NULLABLE_INT = {"long": "Int64", "int": "Int32"}
 
-    Metadata-only columns pass through untouched; only the payload column is
-    read inside Python. ``use_fake=False`` is the REAL path: decode the blob
-    (pure-numpy BMP reader; other formats raise where a production codec
-    plugs in) and featurize the decoded pixels.
+
+def _n_bytes(payload) -> int:
+    return 0 if payload is None else len(payload)
+
+
+def _media_id_key(r) -> tuple:
+    return (r.media_id,)
+
+
+def _map_blobs(
+    media: DataFrame,
+    schema: str,
+    key,
+    decode,
+    on_error: str,
+    error_column: bool = False,
+) -> DataFrame:
+    """The one per-blob decode loop behind every media kernel, run through
+    ``mapInPandas`` (Arrow batches, only the payload decoded in Python).
+
+    For each input row ``r``, ``decode(r.payload)`` returns the blob's
+    value tuples — one for a per-blob kernel, one per sampled frame for
+    video — and each output row is ``key(r) + values``, in the column
+    order of ``schema`` (a flat ``"name type, ..."`` DDL string).
 
     ``on_error``: ``"fail"`` (default) lets a decode error fail the task —
     correct for curated corpora where a bad blob means a pipeline bug.
     ``"permissive"`` is the 100 TB-crawl contract: a corrupt or
-    unsupported payload yields ``feature = NULL`` plus an ``error`` string
-    column (appended to the schema ONLY in this mode, so default callers
-    see the identical schema as before) instead of killing the job — at
-    scale one bad blob per billion is a certainty, not an anomaly, and a
-    job that dies at 99% on it wastes the whole cluster pass. Decode
-    errors stay per-row observable (`WHERE error IS NOT NULL`), never
-    silently dropped."""
+    unsupported payload yields ONE sentinel row, ``key(r)`` with every
+    decoded column NULL, instead of killing the job — at scale one bad
+    blob per billion is a certainty, and a job that dies at 99% on it
+    wastes the whole cluster pass. The sentinel is blob-granular: a
+    container whose third frame fails keeps none of its frames (MJPEG
+    frames share the container's coding tables, so a bad frame means a
+    bad blob). With ``error_column`` the kernel also gets a classified
+    ``error`` string column, appended to the schema ONLY in permissive
+    mode, so default callers see the same schema either way."""
     _check_on_error(on_error)
     permissive = on_error == "permissive"
+    fields = [f.split() for f in schema.split(",")]
+    if permissive and error_column:
+        schema += ", error string"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats, errs = [], []
-            for p in pdf["payload"]:
+            rows, errors = [], []
+            for r in pdf.itertuples(index=False):
+                k = key(r)
                 try:
-                    if use_fake:
-                        feats.append(fake_image_features(p))
-                    else:
-                        px, peak = decode_image_with_peak(p)
-                        feats.append(image_features_from_pixels(px, peak=peak))
-                    errs.append(None)
+                    values, err = decode(r.payload), None
                 except Exception as exc:  # noqa: BLE001 — policy boundary
                     if not permissive:
                         raise
-                    feats.append(None)
-                    errs.append(_classify_decode_error(exc))
+                    values = [(None,) * (len(fields) - len(k))]
+                    err = _classify_decode_error(exc)
+                rows += [k + v for v in values]
+                errors += [err] * len(values)
+            cols = list(zip(*rows)) or [()] * len(fields)
             out = {
-                "media_id": pdf["media_id"],
-                "mime": pdf["mime"],
-                "width": pdf["width"],
-                "height": pdf["height"],
-                "n_bytes": pdf["payload"].map(lambda b: 0 if b is None else len(b)),
-                "feature": [None if f is None else f.tolist() for f in feats],
+                name: pd.array(col, dtype=_NULLABLE_INT[typ])
+                if typ in _NULLABLE_INT
+                else list(col)
+                for (name, typ), col in zip(fields, cols)
             }
-            if permissive:
-                out["error"] = errs
+            if permissive and error_column:
+                out["error"] = errors
             yield pd.DataFrame(out)
 
-    schema = IMAGE_FEATURES_SCHEMA + (", error string" if permissive else "")
     return media.mapInPandas(batches, schema=schema)
+
+
+def _image_features(media: DataFrame, featurize, on_error: str = "fail") -> DataFrame:
+    """``IMAGE_FEATURES_SCHEMA`` rows: pass-through metadata plus
+    ``featurize(payload)`` per blob, through the blob runner."""
+    return _map_blobs(
+        media,
+        IMAGE_FEATURES_SCHEMA,
+        lambda r: (r.media_id, r.mime, r.width, r.height, _n_bytes(r.payload)),
+        lambda p: [(featurize(p).tolist(),)],
+        on_error,
+        error_column=True,
+    )
+
+
+def _decoded_image_features(payload: bytes) -> np.ndarray:
+    pixels, peak = decode_image_with_peak(payload)
+    return image_features_from_pixels(pixels, peak=peak)
+
+
+def extract_image_features(media: DataFrame, on_error: str = "fail") -> DataFrame:
+    """Per-blob feature extraction via ``mapInPandas`` (Arrow batches).
+
+    Metadata-only columns pass through untouched; only the payload column
+    is read inside Python. Each blob is decoded by ``decode_image`` (BMP,
+    PNG, JPEG, GIF, TIFF; any other format raises ``NotImplementedError``)
+    and the decoded pixels are featurized at their true sample precision.
+
+    ``on_error="permissive"``: a corrupt or unsupported payload yields
+    ``feature = NULL`` plus an ``error`` column instead of failing the
+    task (see ``_map_blobs``). Decode errors stay per-row observable
+    (`WHERE error IS NOT NULL`), never silently dropped."""
+    return _image_features(media, _decoded_image_features, on_error)
 
 
 def encode_mjpeg_avi(
@@ -1878,79 +1934,29 @@ def extract_video_frames(
     media: DataFrame,
     every_ms: int = 1000,
     dim: int = 8,
-    use_fake: bool = True,
     on_error: str = "fail",
 ) -> DataFrame:
     """Sampled-frame feature extraction for video rows via ``mapInPandas``:
-    metadata (kind) prunes before any decode; the real path parses the
-    MJPEG AVI container and decodes each sampled frame with the module's
-    own JPEG decoder; the fake path derives deterministic features from
-    the payload bytes + timestamp (same output schema).
+    metadata (kind) prunes before any decode; each blob's MJPEG AVI
+    container is parsed and each sampled frame decoded with the module's
+    own JPEG decoder (``video_frame_features``).
 
     ``on_error="permissive"``: an undecodable container/frame yields ONE
     sentinel row for the blob (``frame_ts_ms``/``frame_index``/``feature``
     NULL, ``error`` set) instead of failing the task — the blob stays
-    observable in the output rather than silently vanishing. The error is
-    container-granular: MJPEG frames share the container's coding tables,
-    so a bad frame means a bad blob, not a salvageable remainder."""
+    observable in the output rather than silently vanishing."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive (got {every_ms})")
-    _check_on_error(on_error)
-    permissive = on_error == "permissive"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, tss, idxs, feats, errs = [], [], [], [], []
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                start = len(ids)
-                try:
-                    if use_fake:
-                        dur = int(dur) if dur is not None and not pd.isna(dur) else 0
-                        for ts in range(0, dur + 1, every_ms):
-                            ids.append(mid)
-                            tss.append(ts)
-                            idxs.append(ts // max(every_ms, 1))
-                            feats.append(
-                                fake_image_features(
-                                    (payload or b"") + ts.to_bytes(4, "little"), dim
-                                ).tolist()
-                            )
-                            errs.append(None)
-                    else:
-                        for ts, idx, feat in video_frame_features(
-                            payload, every_ms, dim
-                        ):
-                            ids.append(mid)
-                            tss.append(ts)
-                            idxs.append(idx)
-                            feats.append(feat.tolist())
-                            errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — policy boundary
-                    if not permissive:
-                        raise
-                    # drop any partial frames from this blob: one sentinel row
-                    del ids[start:], tss[start:], idxs[start:], feats[start:]
-                    del errs[start:]
-                    ids.append(mid)
-                    tss.append(None)
-                    idxs.append(None)
-                    feats.append(None)
-                    errs.append(_classify_decode_error(exc))
-            out = {
-                "media_id": ids,
-                "frame_ts_ms": pd.array(tss, dtype="Int64"),
-                "frame_index": pd.array(idxs, dtype="Int32"),
-                "feature": feats,
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = VIDEO_FRAME_SCHEMA + (", error string" if permissive else "")
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, schema=schema
+    return _map_blobs(
+        media.filter(F.col("kind") == "video"),
+        VIDEO_FRAME_SCHEMA,
+        _media_id_key,
+        lambda p: [
+            (ts, idx, feat.tolist())
+            for ts, idx, feat in video_frame_features(p, every_ms, dim)
+        ],
+        on_error,
+        error_column=True,
     )
 
 
@@ -1968,51 +1974,6 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             ).alias("frame_ts_ms"),
         )
     )
-
-
-RESIZED_SCHEMA = "media_id long, mime string, width int, height int, payload binary"
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, mime string, duration_ms long, n_bytes long, "
-    "n_windows int, feature array<float>"
-)
-
-
-def fake_resize(payload: bytes, target_w: int, target_h: int) -> bytes:
-    """Deterministic fake resize: fold/repeat the byte stream to exactly
-    ``target_w*target_h`` bytes. Stands in for a real interpolating resize;
-    preserves the binary-in → binary-out contract and output sizing."""
-    size = target_w * target_h
-    if payload is None or len(payload) == 0:
-        return bytes(size)
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    reps = -(-size // len(arr))  # ceil division
-    return bytes(np.tile(arr, reps)[:size])
-
-
-def resize_images(media: DataFrame, target_w: int, target_h: int, use_fake: bool = True) -> DataFrame:
-    """Batch image resize via ``mapInPandas``: binary in → binary out with
-    the metadata columns REWRITTEN to the target dimensions (metadata lives
-    outside the blob, so downstream pruning still never decodes). The real
-    path raises where a codec-backed resize plugs in; output payload size is
-    exactly ``target_w*target_h`` per row either way, keeping the shuffle
-    footprint predictable."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not use_fake:
-                decode_image(None)  # raises NotImplementedError at task level
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": [fake_resize(p, target_w, target_h) for p in pdf["payload"]],
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
 def _area_resize(gray: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
@@ -2071,13 +2032,11 @@ def dhash_pixels(pixels: "np.ndarray", hash_size: int = 8) -> int:
 
 def image_dhash(
     media: DataFrame,
-    use_fake: bool = True,
     hash_size: int = 8,
     on_error: str = "fail",
 ) -> DataFrame:
-    """``(media_id, dhash)`` per image row via ``mapInPandas`` — real path
-    decodes the payload (BMP/PNG/JPEG), fake path hashes a deterministic
-    pixel grid derived from the payload bytes (same schema).
+    """``(media_id, dhash)`` per image row via ``mapInPandas``: decode the
+    payload (``decode_image``) and hash its pixels.
 
     Deliberately does NOT use the DC thumbnail decode that
     ``video_frame_hashes`` rides: an image corpus mixes formats, and a
@@ -2087,42 +2046,17 @@ def image_dhash(
     hash through the SAME resolution path. Video can use the DC path
     because frames only ever compare against other frames decoded the
     same way. The full JPEG decode is ~3x faster since the LUT entropy
-    decoder, so the consistency choice stays cheap."""
+    decoder, so the consistency choice stays cheap.
 
-    def _real_pixels(payload):
-        return decode_image(payload)
-
-    _check_on_error(on_error)
-    permissive = on_error == "permissive"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes = []
-            for payload in pdf["payload"]:
-                try:
-                    if use_fake:
-                        raw = np.frombuffer(payload or b"\x00", dtype=np.uint8)
-                        side = max(int(len(raw) ** 0.5), 1)
-                        grid = np.resize(raw, (side, side)).astype(np.float64)
-                        hashes.append(dhash_pixels(grid, hash_size))
-                    else:
-                        hashes.append(dhash_pixels(_real_pixels(payload), hash_size))
-                except Exception:  # noqa: BLE001 — policy boundary
-                    if not permissive:
-                        raise
-                    # NULL hash, not a dropped row: the bad blob stays
-                    # countable downstream, and the near-dup probe filters
-                    # nulls before banding.
-                    hashes.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dhash": pd.array(hashes, dtype="Int64"),
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, schema="media_id long, dhash long"
+    ``on_error="permissive"``: an undecodable payload gets a NULL hash, not
+    a dropped row — the bad blob stays countable downstream, and the
+    near-dup probe filters nulls before banding."""
+    return _map_blobs(
+        media.filter(F.col("kind") == "image"),
+        "media_id long, dhash long",
+        _media_id_key,
+        lambda p: [(dhash_pixels(decode_image(p), hash_size),)],
+        on_error,
     )
 
 
@@ -2207,44 +2141,25 @@ def video_frame_hashes(
         )
     min_h, min_w = 8 * hash_size, 8 * (hash_size + 1)
 
-    _check_on_error(on_error)
-    permissive = on_error == "permissive"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ranks, hashes = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                start = len(ids)
-                try:
-                    for rank, (_ts, _idx, jpeg) in enumerate(
-                        _sampled_avi_frames(payload, every_ms)
-                    ):
-                        fh, fw = peek_jpeg_dims(jpeg)
-                        use_dc = decode_path == "dc" or (
-                            decode_path == "auto" and fh >= min_h and fw >= min_w
-                        )
-                        px = decode_jpeg_dc(jpeg) if use_dc else decode_jpeg(jpeg)
-                        ids.append(mid)
-                        ranks.append(rank)
-                        hashes.append(dhash_pixels(px, hash_size))
-                except Exception:  # noqa: BLE001 — policy boundary
-                    if not permissive:
-                        raise
-                    # container-granular NULL sentinel (see extract_video_frames)
-                    del ids[start:], ranks[start:], hashes[start:]
-                    ids.append(mid)
-                    ranks.append(None)
-                    hashes.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_rank": pd.array(ranks, dtype="Int32"),
-                    "dhash": pd.array(hashes, dtype="Int64"),
-                }
+    def decode(payload):
+        hashes = []
+        for rank, (_ts, _idx, jpeg) in enumerate(
+            _sampled_avi_frames(payload, every_ms)
+        ):
+            fh, fw = peek_jpeg_dims(jpeg)
+            use_dc = decode_path == "dc" or (
+                decode_path == "auto" and fh >= min_h and fw >= min_w
             )
+            px = decode_jpeg_dc(jpeg) if use_dc else decode_jpeg(jpeg)
+            hashes.append((rank, dhash_pixels(px, hash_size)))
+        return hashes
 
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, schema="media_id long, frame_rank int, dhash long"
+    return _map_blobs(
+        media.filter(F.col("kind") == "video"),
+        "media_id long, frame_rank int, dhash long",
+        _media_id_key,
+        decode,
+        on_error,
     )
 
 
@@ -2827,41 +2742,18 @@ def audio_fingerprint(samples: "np.ndarray", n_windows: int = 9, n_bands: int = 
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_fingerprints(
-    media: DataFrame, use_fake: bool = True, on_error: str = "fail"
-) -> DataFrame:
-    """``(media_id, afp)`` per audio row via ``mapInPandas`` — real path
-    decodes the WAV payload; fake path fingerprints a deterministic sample
-    stream derived from the payload bytes (same schema).
+def audio_fingerprints(media: DataFrame, on_error: str = "fail") -> DataFrame:
+    """``(media_id, afp)`` per audio row via ``mapInPandas``: decode the WAV
+    payload and fingerprint its samples (``audio_fingerprint``).
     ``on_error="permissive"``: undecodable payload → NULL fingerprint
     (filtered before banding by ``audio_near_dup_pairs``, countable by the
     caller) instead of a task failure."""
-    _check_on_error(on_error)
-    permissive = on_error == "permissive"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fps = []
-            for payload in pdf["payload"]:
-                try:
-                    if use_fake:
-                        raw = np.frombuffer(payload or b"\x00", dtype=np.uint8)
-                        fps.append(audio_fingerprint(raw.astype(np.float64) - 128.0))
-                    else:
-                        fps.append(audio_fingerprint(decode_wav(payload)[0]))
-                except Exception:  # noqa: BLE001 — policy boundary
-                    if not permissive:
-                        raise
-                    fps.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "afp": pd.array(fps, dtype="Int64"),
-                }
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, schema="media_id long, afp long"
+    return _map_blobs(
+        media.filter(F.col("kind") == "audio"),
+        "media_id long, afp long",
+        _media_id_key,
+        lambda p: [(audio_fingerprint(decode_wav(p)[0]),)],
+        on_error,
     )
 
 
@@ -2894,8 +2786,7 @@ def audio_near_dup_pairs(
 
 def audio_features_from_samples(samples: "np.ndarray", n_windows: int = 16) -> np.ndarray:
     """Fixed-width features from DECODED audio: per-window RMS energy over
-    the mono mix, peak-normalized — the real-decode twin of
-    ``fake_audio_features`` (same output shape and [0, 1] contract)."""
+    the mono mix, peak-normalized to [0, 1]."""
     mono = np.asarray(samples, dtype=np.float32)
     if mono.ndim == 2:
         mono = mono.mean(axis=1)
@@ -2910,72 +2801,52 @@ def audio_features_from_samples(samples: "np.ndarray", n_windows: int = 16) -> n
     return (rms / peak if peak > 0 else rms).astype(np.float32)
 
 
-def fake_audio_features(payload: bytes, n_windows: int = 16) -> np.ndarray:
-    """Deterministic fake audio features: window the byte stream into
-    ``n_windows`` frames and emit per-frame mean energy (RMS-ish),
-    normalized. Stands in for MFCC/mel features; fixed output width."""
-    if payload is None or len(payload) == 0:
-        return np.zeros(n_windows, dtype=np.float32)
-    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float32) - 128.0
-    pad = -len(arr) % n_windows
-    if pad:
-        arr = np.pad(arr, (0, pad))
-    frames = arr.reshape(n_windows, -1)
-    rms = np.sqrt((frames * frames).mean(axis=1))
-    peak = float(rms.max())
-    return (rms / peak if peak > 0 else rms).astype(np.float32)
+AUDIO_FEATURES_SCHEMA = (
+    "media_id long, mime string, duration_ms long, n_bytes long, "
+    "n_windows int, feature array<float>"
+)
 
 
 def extract_audio_features(
     media: DataFrame,
     n_windows: int = 16,
-    use_fake: bool = True,
     on_error: str = "fail",
 ) -> DataFrame:
-    """Windowed audio feature extraction via ``mapInPandas`` — same
+    """Windowed audio feature extraction via ``mapInPandas``: decode each
+    WAV payload (``decode_wav``) and featurize its samples — same
     metadata-prunes-before-decode and fixed-width-output contract as the
-    image kernel.  ``on_error="permissive"`` matches
+    image kernel. ``on_error="permissive"`` matches
     ``extract_image_features``: bad payloads yield ``feature = NULL`` plus
     an ``error`` column instead of failing the task (schema unchanged in
     the default ``"fail"`` mode)."""
-    _check_on_error(on_error)
-    permissive = on_error == "permissive"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats, errs = [], []
-            for p in pdf["payload"]:
-                try:
-                    feats.append(
-                        fake_audio_features(p, n_windows)
-                        if use_fake
-                        # real decode: RIFF/WAVE via the pure-stdlib codec
-                        else audio_features_from_samples(
-                            decode_wav(p)[0], n_windows
-                        )
-                    )
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — policy boundary
-                    if not permissive:
-                        raise
-                    feats.append(None)
-                    errs.append(_classify_decode_error(exc))
-            out = {
-                "media_id": pdf["media_id"],
-                "mime": pdf["mime"],
-                "duration_ms": pdf["duration_ms"],
-                "n_bytes": pdf["payload"].map(lambda b: 0 if b is None else len(b)),
-                "n_windows": n_windows,
-                "feature": [None if f is None else f.tolist() for f in feats],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = AUDIO_FEATURES_SCHEMA + (", error string" if permissive else "")
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, schema=schema
+    return _map_blobs(
+        media.filter(F.col("kind") == "audio"),
+        AUDIO_FEATURES_SCHEMA,
+        lambda r: (r.media_id, r.mime, r.duration_ms, _n_bytes(r.payload), n_windows),
+        lambda p: [
+            (audio_features_from_samples(decode_wav(p)[0], n_windows).tolist(),)
+        ],
+        on_error,
+        error_column=True,
     )
+
+
+def media_from_docs(docs: DataFrame, blobs) -> DataFrame:
+    """A ``MEDIA_SCHEMA`` frame synthesized per document: ``blobs(doc_id)``
+    returns that doc's media rows as ``MEDIA_SCHEMA``-ordered tuples (any
+    number of them — a planted near-dup or a codec variant is one more
+    row). Runs inside ``mapInPandas``, so the per-row encode work spreads
+    over ``docs``' partitions."""
+    names = MEDIA_SCHEMA.fieldNames()
+
+    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [row for did in pdf["doc_id"] for row in blobs(int(did))],
+                columns=names,
+            )
+
+    return docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
 
 
 def synthesize_media(spark, n: int = 64, seed: int = 7) -> DataFrame:

@@ -1557,12 +1557,94 @@ QUERY_REGISTRY["sq8_cosine_topk"] = QuerySpec(
 )
 
 
+def _feature_columns(feats: DataFrame, *cols: str, order=("media_id",)) -> DataFrame:
+    """The decoded-feature fixture shape: ``cols`` plus the first and last
+    feature components rounded to 4 places (``f0``/``f7``), sorted."""
+    return feats.select(
+        *cols,
+        F.round(F.element_at("feature", 1), 4).alias("f0"),
+        F.round(F.element_at("feature", 8), 4).alias("f7"),
+    ).orderBy(*order)
+
+
+def _feature_fixture_oracle(name: str, cols: str, order: str = "b.media_id") -> str:
+    """Decoded-feature oracle (VERDICT r08 task #4, the
+    permissive_decode_stats pattern): DuckDB cannot decode a codec payload,
+    but it CAN read the checked-in per-blob expected-feature parquet —
+    generated by tools/make_fixtures.py from the same decode the codec
+    pytest vectors pin — and join it to the live documents domain. This
+    upgrades the driver check from rows-only to a full
+    rows+schema+value-hash match; an unintended codec/feature change fails
+    the driver differential, not just the pytest fixture."""
+    return f"""
+SELECT {cols}, b.f0, b.f7
+FROM read_parquet('{fixture_path(f"{name}_sf0.01.parquet")}') b
+JOIN documents d ON b.media_id = d.doc_id
+ORDER BY {order}
+"""
+
+
+def _variant_agreement(feats: DataFrame, feature: Column) -> DataFrame:
+    """``(variant, n_docs, n_match)`` for a codec cross-validation matrix.
+    ``feats`` holds one featurized blob per (doc, variant), with media_id
+    ``doc_id * 100 + vi`` and the variant name in ``mime``; ``feature``
+    (an expression over its ``feature`` column) must equal the same
+    expression for the baseline of the variant's group on the same doc —
+    vi 0 anchors vi 0-49, vi 50 anchors vi 50-99.
+
+    Eager localCheckpoint: the baseline branch and the all-variants side
+    both consume the features — without it the synth+decode pass runs
+    twice (the q_minhash_lsh lifecycle; no CacheManager entry left)."""
+    feats = feats.select(
+        (F.col("media_id") / 100).cast("long").alias("doc_id"),
+        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
+        F.col("mime").alias("variant"),
+        feature.alias("__f"),
+    ).localCheckpoint(eager=True)
+    group = (F.col("__vi") / 50).cast("int").alias("__grp")
+    base = feats.filter(F.col("__vi").isin(0, 50)).select(
+        "doc_id", group, F.col("__f").alias("__base")
+    )
+    return (
+        feats.select("*", group)
+        .join(base, ["doc_id", "__grp"])
+        .groupBy("variant")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.when(F.col("__f") == F.col("__base"), 1).otherwise(0))
+            .cast("long").alias("n_match"),
+        )
+        .orderBy("variant")
+    )
+
+
+def _variant_agreement_oracle(*variants: str) -> str:
+    """The matrix contract in SQL: every listed variant matches its
+    baseline on every doc_id < 120, derived from the live documents domain
+    rather than hardcoded counts. Each oracle passes its variant names as
+    literals, never the query's own list, so it stays independent of the
+    code it checks."""
+    values = ", ".join(f"('{v}')" for v in variants)
+    return f"""
+SELECT v.variant,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(count(*) AS BIGINT) AS n_match
+FROM (VALUES {values}) v(variant)
+CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
+GROUP BY v.variant
+ORDER BY v.variant
+"""
+
+
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary-column plumbing: documents' text bytes treated as an
-    opaque payload, features extracted via Arrow-batched mapInPandas (the
-    decode kernel is the deterministic fake; the real-codec path raises
-    NotImplementedError — see operators/multimodal.py). Rows-only check."""
-    from covid19_spark.operators.multimodal import extract_image_features
+    opaque payload, featurized by ``fake_image_features`` (a byte histogram
+    — text is no image format, so there is nothing to decode) through the
+    same per-blob runner as the decoding kernels. Rows-only check."""
+    from covid19_spark.operators.multimodal import (
+        _image_features,
+        fake_image_features,
+    )
 
     docs = _t(spark, sf_dir, "documents")
     media = docs.select(
@@ -1574,82 +1656,46 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("duration_ms"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-    feats = extract_image_features(media, use_fake=True)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = _image_features(media, fake_image_features)
+    return _feature_columns(feats, "media_id", "n_bytes")
 
 
 def q_bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec multimodal path end-to-end: synthesize valid uncompressed
     24-bpp BMP payloads whose pixels derive deterministically from doc_id
     (seeded generator inside a mapInPandas kernel), decode them with the
-    pure-numpy BMP reader (``use_fake=False`` — no fake anywhere), and
-    featurize the decoded pixel arrays. Bounded to 500 blobs so the payload
-    synthesis stays a demo; the decode/feature plumbing is the production
-    path. Non-SQL-expressible (binary format parsing) → the per-blob expected
-    features are a checked-in parquet DuckDB joins to the live doc domain
-    (full value-hash oracle) + exact fixture pytest."""
+    pure-numpy BMP reader, and featurize the decoded pixel arrays. Bounded
+    to 500 blobs so the payload synthesis stays a demo; the decode/feature
+    plumbing is the production path. Non-SQL-expressible (binary format
+    parsing) → the per-blob expected features are a checked-in parquet
+    DuckDB joins to the live doc domain (full value-hash oracle) + exact
+    fixture pytest."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_bmp,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 500)
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                rng = np.random.default_rng(int(did))
-                h, w = 8 + int(did) % 8, 8 + int(did) % 5
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                rows.append(
-                    (int(did), "image", "image/bmp", w, h, None, encode_bmp(img))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d)
+        h, w = 8 + d % 8, 8 + d % 5
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        return [(d, "image", "image/bmp", w, h, None, encode_bmp(img))]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _feature_columns(feats, "media_id", "width", "height", "n_bytes")
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode a BMP, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_BMP_IMAGE_FEATURES = f"""
-SELECT b.media_id, b.width, b.height, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("bmp_image_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
 
 QUERY_REGISTRY["bmp_image_features"] = QuerySpec(
-    q_bmp_image_features, ORACLE_BMP_IMAGE_FEATURES, "real BMP decode -> features vs fixture oracle"
+    q_bmp_image_features,
+    _feature_fixture_oracle(
+        "bmp_image_features", "b.media_id, b.width, b.height, b.n_bytes"
+    ),
+    "real BMP decode -> features vs fixture oracle",
 )
 
 
@@ -1658,18 +1704,16 @@ def q_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually serves (covid19-visualizer Visualizer.java:469,520 requests "png" charts via ChartRequest.java:23):
     synthesize valid 8-bit RGB PNGs whose pixels derive deterministically
     from doc_id, rotating through all five scanline filter types so every
-    unfilter branch of the stdlib decoder runs distributed, decode with
-    ``use_fake=False`` and featurize. Non-SQL-expressible (binary format
-    parsing) → the per-blob expected features are a checked-in parquet
-    DuckDB joins to the live doc domain (full value-hash oracle) + exact
-    fixture pytest."""
+    unfilter branch of the stdlib decoder runs distributed, decode and
+    featurize. Non-SQL-expressible (binary format parsing) → the per-blob
+    expected features are a checked-in parquet DuckDB joins to the live
+    doc domain (full value-hash oracle) + exact fixture pytest."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_png,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -1680,55 +1724,23 @@ def q_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                rng = np.random.default_rng(int(did) + 1_000_000)
-                h, w = 8 + int(did) % 8, 8 + int(did) % 5
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                rows.append(
-                    (
-                        int(did), "image", "image/png", w, h, None,
-                        encode_png(img, filter_type=int(did) % 5),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 1_000_000)
+        h, w = 8 + d % 8, 8 + d % 5
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        payload = encode_png(img, filter_type=d % 5)
+        return [(d, "image", "image/png", w, h, None, payload)]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _feature_columns(feats, "media_id", "width", "height", "n_bytes")
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode a PNG, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_PNG_IMAGE_FEATURES = f"""
-SELECT b.media_id, b.width, b.height, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("png_image_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
 
 QUERY_REGISTRY["png_image_features"] = QuerySpec(
-    q_png_image_features, ORACLE_PNG_IMAGE_FEATURES, "real PNG decode (stdlib codec) -> features vs fixture oracle"
+    q_png_image_features,
+    _feature_fixture_oracle(
+        "png_image_features", "b.media_id, b.width, b.height, b.n_bytes"
+    ),
+    "real PNG decode (stdlib codec) -> features vs fixture oracle",
 )
 
 
@@ -1736,19 +1748,18 @@ def q_gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec GIF path end-to-end — the web-crawl image format the
     other codecs don't cover: synthesize palette-bounded GIF89a payloads
     whose pixels derive deterministically from doc_id (palette size cycles
-    4..64 so the LZW width machinery varies per row), decode with
-    ``use_fake=False`` through ``decode_image``'s GIF dispatch, featurize.
-    The per-blob expected features are a checked-in parquet DuckDB joins
-    to the live doc domain (full value-hash oracle) + exact fixture pytest. Same map-only scale shape as the PNG/BMP
-    twins: synthesis+decode spread across cores, no shuffle but the output
-    sort."""
+    4..64 so the LZW width machinery varies per row), decode through
+    ``decode_image``'s GIF dispatch, featurize. The per-blob expected
+    features are a checked-in parquet DuckDB joins to the live doc domain
+    (full value-hash oracle) + exact fixture pytest. Same map-only scale
+    shape as the PNG/BMP twins: synthesis+decode spread across cores, no
+    shuffle but the output sort."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_gif,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -1757,55 +1768,24 @@ def q_gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 3_000_000)
-                h, w = 8 + d % 8, 8 + d % 5
-                n_colors = 4 + (d % 61)
-                palette = rng.integers(0, 256, size=(n_colors, 3), dtype=np.uint8)
-                img = palette[rng.integers(0, n_colors, size=(h, w))]
-                rows.append(
-                    (d, "image", "image/gif", w, h, None, encode_gif(img))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 3_000_000)
+        h, w = 8 + d % 8, 8 + d % 5
+        n_colors = 4 + (d % 61)
+        palette = rng.integers(0, 256, size=(n_colors, 3), dtype=np.uint8)
+        img = palette[rng.integers(0, n_colors, size=(h, w))]
+        return [(d, "image", "image/gif", w, h, None, encode_gif(img))]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _feature_columns(feats, "media_id", "width", "height", "n_bytes")
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode a GIF, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_GIF_IMAGE_FEATURES = f"""
-SELECT b.media_id, b.width, b.height, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("gif_image_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
 
 QUERY_REGISTRY["gif_image_features"] = QuerySpec(
-    q_gif_image_features, ORACLE_GIF_IMAGE_FEATURES, "real GIF decode (stdlib LZW codec) -> features vs fixture oracle"
+    q_gif_image_features,
+    _feature_fixture_oracle(
+        "gif_image_features", "b.media_id, b.width, b.height, b.n_bytes"
+    ),
+    "real GIF decode (stdlib LZW codec) -> features vs fixture oracle",
 )
 
 
@@ -1816,18 +1796,17 @@ def q_tiff_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme (none / PackBits / LZW), the strip height, AND (every 4th doc)
     the TILED organization with a per-doc tile size plus predictor 2 — so
     every strip- and tile-reassembly branch of the stdlib decoder runs
-    distributed. Decode with ``use_fake=False`` through ``decode_image``'s
-    TIFF dispatch, featurize. Non-SQL-expressible (binary format parsing)
-    → fixture-parquet oracle (see the ORACLE_* block). Same map-only
+    distributed. Decode through ``decode_image``'s TIFF dispatch,
+    featurize. Non-SQL-expressible (binary format parsing) →
+    fixture-parquet oracle (``_feature_fixture_oracle``). Same map-only
     scale shape as the PNG/BMP/GIF twins: synthesis+decode spread across
     cores, no shuffle but the output sort."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_tiff,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -1836,77 +1815,43 @@ def q_tiff_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 4_000_000)
-                h, w = 8 + d % 8, 8 + d % 5
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                comp = ("none", "packbits", "lzw")[d % 3]
-                if d % 25 == 21:  # CCITT G4 bilevel scan (compression 4)
-                    ink = (img.mean(axis=2) < 128).astype(np.uint8)
-                    payload = encode_tiff(
-                        ink, compression="g4", bits=1, rows_per_strip=4 + d % 5
-                    )
-                elif d % 10 == 7:  # new-style JPEG-in-TIFF (compression 7)
-                    payload = encode_tiff(
-                        img, compression="jpeg", rows_per_strip=8
-                    )
-                elif d % 10 == 3:  # Adobe deflate strips (compression 8)
-                    payload = encode_tiff(
-                        img, compression="deflate", rows_per_strip=2 + d % 7,
-                        predictor=2 if d % 20 == 3 else 1,
-                    )
-                elif d % 4 == 0:  # tiled organization (TIFF 6.0 §15)
-                    payload = encode_tiff(
-                        img,
-                        compression=("none", "packbits", "lzw", "deflate")[(d // 4) % 4],
-                        tile=(4 + d % 5, 4 + d % 3),
-                        predictor=2 if d % 8 == 0 else 1,
-                    )
-                else:
-                    payload = encode_tiff(
-                        img, compression=comp, rows_per_strip=2 + d % 7
-                    )
-                rows.append((d, "image", "image/tiff", w, h, None, payload))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
+    def blobs(d):
+        rng = np.random.default_rng(d + 4_000_000)
+        h, w = 8 + d % 8, 8 + d % 5
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        comp = ("none", "packbits", "lzw")[d % 3]
+        if d % 25 == 21:  # CCITT G4 bilevel scan (compression 4)
+            ink = (img.mean(axis=2) < 128).astype(np.uint8)
+            payload = encode_tiff(
+                ink, compression="g4", bits=1, rows_per_strip=4 + d % 5
             )
+        elif d % 10 == 7:  # new-style JPEG-in-TIFF (compression 7)
+            payload = encode_tiff(img, compression="jpeg", rows_per_strip=8)
+        elif d % 10 == 3:  # Adobe deflate strips (compression 8)
+            payload = encode_tiff(
+                img, compression="deflate", rows_per_strip=2 + d % 7,
+                predictor=2 if d % 20 == 3 else 1,
+            )
+        elif d % 4 == 0:  # tiled organization (TIFF 6.0 §15)
+            payload = encode_tiff(
+                img,
+                compression=("none", "packbits", "lzw", "deflate")[(d // 4) % 4],
+                tile=(4 + d % 5, 4 + d % 3),
+                predictor=2 if d % 8 == 0 else 1,
+            )
+        else:
+            payload = encode_tiff(img, compression=comp, rows_per_strip=2 + d % 7)
+        return [(d, "image", "image/tiff", w, h, None, payload)]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _feature_columns(feats, "media_id", "width", "height", "n_bytes")
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode a TIFF, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_TIFF_IMAGE_FEATURES = f"""
-SELECT b.media_id, b.width, b.height, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("tiff_image_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
 
 QUERY_REGISTRY["tiff_image_features"] = QuerySpec(
-    q_tiff_image_features, ORACLE_TIFF_IMAGE_FEATURES,
+    q_tiff_image_features,
+    _feature_fixture_oracle(
+        "tiff_image_features", "b.media_id, b.width, b.height, b.n_bytes"
+    ),
     "real TIFF decode (strip/tiled/deflate/JPEG/G4 variants) -> features vs fixture oracle",
 )
 
@@ -1953,12 +1898,11 @@ def q_tiff_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     match. Scale shape: map-only synth+decode, one |variants|-row
     aggregate after an 8-row-per-doc broadcast-free groupBy."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_tiff,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -1966,87 +1910,36 @@ def q_tiff_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 120)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    variants = _TIFF_MATRIX_VARIANTS
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 6_000_000)
-                h, w = 9 + d % 7, 8 + d % 6
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                for vi, (vname, kwargs) in enumerate(variants):
-                    rows.append(
-                        (d * 100 + vi, "image", vname, w, h, None,
-                         encode_tiff(img, **kwargs))
-                    )
-                # bilevel group (vi 50+): noisy ink so the g3_uncomp
-                # variant actually takes the literal escape on most lines
-                ink = rng.integers(0, 2, size=(h, w), dtype=np.uint8)
-                for vi, (vname, kwargs) in enumerate(_TIFF_BILEVEL_VARIANTS):
-                    rows.append(
-                        (d * 100 + 50 + vi, "image", vname, w, h, None,
-                         encode_tiff(ink, **kwargs))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 6_000_000)
+        h, w = 9 + d % 7, 8 + d % 6
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        rows = [
+            (d * 100 + vi, "image", vname, w, h, None, encode_tiff(img, **kwargs))
+            for vi, (vname, kwargs) in enumerate(_TIFF_MATRIX_VARIANTS)
+        ]
+        # bilevel group (vi 50+): noisy ink so the g3_uncomp variant
+        # actually takes the literal escape on most lines
+        ink = rng.integers(0, 2, size=(h, w), dtype=np.uint8)
+        rows += [
+            (d * 100 + 50 + vi, "image", vname, w, h, None, encode_tiff(ink, **kwargs))
+            for vi, (vname, kwargs) in enumerate(_TIFF_BILEVEL_VARIANTS)
+        ]
+        return rows
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    # eager localCheckpoint: the baseline branch and the all-variants side
-    # both consume this frame — without it the synth+decode pass runs
-    # twice (the q_minhash_lsh lifecycle; no CacheManager entry left)
-    feats = extract_image_features(media, use_fake=False).select(
-        (F.col("media_id") / 100).cast("long").alias("doc_id"),
-        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
-        F.col("mime").alias("variant"),
-        "feature",
-    ).localCheckpoint(eager=True)
-    # per-group baselines: vi 0 anchors the RGB organizations, vi 50 the
-    # bilevel (fax) codings — each variant must match ITS group's decode
-    base = feats.filter(F.col("__vi").isin(0, 50)).select(
-        "doc_id",
-        (F.col("__vi") / 50).cast("int").alias("__grp"),
-        F.col("feature").alias("__base"),
-    )
-    return (
-        feats.withColumn("__grp", (F.col("__vi") / 50).cast("int"))
-        .join(base, ["doc_id", "__grp"])
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(
-                F.when(F.col("feature") == F.col("__base"), 1).otherwise(0)
-            ).cast("long").alias("n_match"),
-        )
-        .orderBy("variant")
-    )
-
-
-# the expected-agreement contract in SQL: every variant matches its baseline
-# on every doc — derived from the live documents domain, not hardcoded counts
-ORACLE_TIFF_CODEC_MATRIX = """
-SELECT v.variant,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM (VALUES ('a_none_strip'), ('b_packbits_strip'), ('c_lzw_strip'),
-             ('d_deflate_strip'), ('e_none_tile'), ('f_lzw_tile_pred2'),
-             ('g_deflate_planar'), ('h_lzw_planar_tile'),
-             ('m_bilevel_mh'), ('n_bilevel_g3'), ('o_bilevel_g3_2d'),
-             ('p_bilevel_g3_uncomp'), ('q_bilevel_g4')) v(variant)
-CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
-GROUP BY v.variant
-ORDER BY v.variant
-"""
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _variant_agreement(feats, F.col("feature"))
 
 
 QUERY_REGISTRY["tiff_codec_matrix"] = QuerySpec(
-    q_tiff_codec_matrix, ORACLE_TIFF_CODEC_MATRIX,
+    q_tiff_codec_matrix,
+    _variant_agreement_oracle(
+        "a_none_strip", "b_packbits_strip", "c_lzw_strip", "d_deflate_strip",
+        "e_none_tile", "f_lzw_tile_pred2", "g_deflate_planar",
+        "h_lzw_planar_tile", "m_bilevel_mh", "n_bilevel_g3",
+        "o_bilevel_g3_2d", "p_bilevel_g3_uncomp", "q_bilevel_g4",
+    ),
     "13-way lossless TIFF organization cross-validation incl. CCITT fax group (oracle)",
 )
 
@@ -2067,16 +1960,15 @@ def q_image_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, as in ``tiff_codec_matrix``. Scale shape: map-only
     synth+decode, |variants|-row aggregate."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.jpeg import encode_jpeg_lossless
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_bmp,
         encode_gif,
         encode_png,
         encode_tiff,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -2085,72 +1977,35 @@ def q_image_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 6_500_000)
-                h, w = 9 + d % 7, 8 + d % 6  # < 256 pixels -> GIF-safe
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                img16 = img.astype(np.uint16) * 257
-                for vi, (vname, payload) in enumerate([
-                    ("a_bmp", encode_bmp(img)),
-                    ("b_png8", encode_png(img)),
-                    ("c_png16", encode_png(img16)),
-                    ("d_gif", encode_gif(img)),
-                    ("e_tiff_lzw_tile", encode_tiff(img, compression="lzw", tile=(6, 5))),
-                    ("f_jpeg_lossless8", encode_jpeg_lossless(img, predictor=4)),
-                    ("g_jpeg_lossless16", encode_jpeg_lossless(img16, predictor=4)),
-                ]):
-                    rows.append((d * 100 + vi, "image", vname, w, h, None, payload))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 6_500_000)
+        h, w = 9 + d % 7, 8 + d % 6  # < 256 pixels -> GIF-safe
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        img16 = img.astype(np.uint16) * 257
+        return [
+            (d * 100 + vi, "image", vname, w, h, None, payload)
+            for vi, (vname, payload) in enumerate([
+                ("a_bmp", encode_bmp(img)),
+                ("b_png8", encode_png(img)),
+                ("c_png16", encode_png(img16)),
+                ("d_gif", encode_gif(img)),
+                ("e_tiff_lzw_tile", encode_tiff(img, compression="lzw", tile=(6, 5))),
+                ("f_jpeg_lossless8", encode_jpeg_lossless(img, predictor=4)),
+                ("g_jpeg_lossless16", encode_jpeg_lossless(img16, predictor=4)),
+            ])
+        ]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
     rounded = F.transform(F.col("feature"), lambda x: F.round(x, 4))
-    # eager localCheckpoint — see q_tiff_codec_matrix
-    feats = extract_image_features(media, use_fake=False).select(
-        (F.col("media_id") / 100).cast("long").alias("doc_id"),
-        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
-        F.col("mime").alias("variant"),
-        rounded.alias("__f"),
-    ).localCheckpoint(eager=True)
-    base = feats.filter(F.col("__vi") == 0).select(
-        "doc_id", F.col("__f").alias("__base")
-    )
-    return (
-        feats.join(base, "doc_id")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("__f") == F.col("__base"), 1).otherwise(0))
-            .cast("long").alias("n_match"),
-        )
-        .orderBy("variant")
-    )
-
-
-ORACLE_IMAGE_CODEC_MATRIX = """
-SELECT v.variant,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM (VALUES ('a_bmp'), ('b_png8'), ('c_png16'), ('d_gif'),
-             ('e_tiff_lzw_tile'), ('f_jpeg_lossless8'),
-             ('g_jpeg_lossless16')) v(variant)
-CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
-GROUP BY v.variant
-ORDER BY v.variant
-"""
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _variant_agreement(feats, rounded)
 
 
 QUERY_REGISTRY["image_codec_matrix"] = QuerySpec(
-    q_image_codec_matrix, ORACLE_IMAGE_CODEC_MATRIX,
+    q_image_codec_matrix,
+    _variant_agreement_oracle(
+        "a_bmp", "b_png8", "c_png16", "d_gif", "e_tiff_lzw_tile",
+        "f_jpeg_lossless8", "g_jpeg_lossless16",
+    ),
     "6-codec cross-format lossless image consistency (oracle)",
 )
 
@@ -2175,13 +2030,12 @@ def q_jpeg_entropy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     any failure shows as n_match < n_docs). Scale shape: map-only
     synth+decode behind one eager materialization, |variants|-row agg."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.jpeg import encode_jpeg
     from covid19_spark.operators.jpeg_arith import encode_jpeg_arith
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -2190,72 +2044,34 @@ def q_jpeg_entropy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 7_200_000)
-                h, w = 12 + d % 9, 11 + d % 7
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                q = 60 + (d % 4) * 10
-                for vi, (vname, payload) in enumerate([
-                    ("a_huff_baseline", encode_jpeg(img, quality=q)),
-                    ("b_huff_progressive",
-                     encode_jpeg(img, quality=q, progressive=True)),
-                    ("c_arith", encode_jpeg_arith(img, quality=q)),
-                    ("d_arith_restart",
-                     encode_jpeg_arith(img, quality=q, restart_interval=2)),
-                ]):
-                    rows.append(
-                        (d * 100 + vi, "image", vname, w, h, None, payload)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 7_200_000)
+        h, w = 12 + d % 9, 11 + d % 7
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        q = 60 + (d % 4) * 10
+        return [
+            (d * 100 + vi, "image", vname, w, h, None, payload)
+            for vi, (vname, payload) in enumerate([
+                ("a_huff_baseline", encode_jpeg(img, quality=q)),
+                ("b_huff_progressive",
+                 encode_jpeg(img, quality=q, progressive=True)),
+                ("c_arith", encode_jpeg_arith(img, quality=q)),
+                ("d_arith_restart",
+                 encode_jpeg_arith(img, quality=q, restart_interval=2)),
+            ])
+        ]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
     # entropy modes are losslessly interchangeable: compare UNROUNDED
     # features (bit-identical pixels -> bit-identical float32 features)
-    feats = extract_image_features(media, use_fake=False).select(
-        (F.col("media_id") / 100).cast("long").alias("doc_id"),
-        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
-        F.col("mime").alias("variant"),
-        F.col("feature").alias("__f"),
-    ).localCheckpoint(eager=True)
-    base = feats.filter(F.col("__vi") == 0).select(
-        "doc_id", F.col("__f").alias("__base")
-    )
-    return (
-        feats.join(base, "doc_id")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("__f") == F.col("__base"), 1).otherwise(0))
-            .cast("long").alias("n_match"),
-        )
-        .orderBy("variant")
-    )
-
-
-ORACLE_JPEG_ENTROPY_MATRIX = """
-SELECT v.variant,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM (VALUES ('a_huff_baseline'), ('b_huff_progressive'),
-             ('c_arith'), ('d_arith_restart')) v(variant)
-CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
-GROUP BY v.variant
-ORDER BY v.variant
-"""
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _variant_agreement(feats, F.col("feature"))
 
 
 QUERY_REGISTRY["jpeg_entropy_matrix"] = QuerySpec(
-    q_jpeg_entropy_matrix, ORACLE_JPEG_ENTROPY_MATRIX,
+    q_jpeg_entropy_matrix,
+    _variant_agreement_oracle(
+        "a_huff_baseline", "b_huff_progressive", "c_arith", "d_arith_restart"
+    ),
     "JPEG entropy-mode cross-validation: Huffman vs arithmetic (oracle)",
 )
 
@@ -2271,12 +2087,11 @@ def q_wav_depth_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: derived expected counts, as in the image/TIFF matrices."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_wav,
         extract_audio_features,
+        media_from_docs,
     )
 
     docs = (
@@ -2285,67 +2100,27 @@ def q_wav_depth_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 6_600_000)
-                t = np.arange(1600, dtype=np.float64)
-                freq = 200 + (d % 17) * 40
-                sig = (
-                    11000 * np.sin(2 * np.pi * freq * t / 8000)
-                    + rng.integers(-800, 800, 1600)
-                ).astype(np.int16)
-                for vi, dt in enumerate(("i16", "i24", "i32", "f32", "f64")):
-                    rows.append(
-                        (d * 100 + vi, "audio", f"{chr(97 + vi)}_{dt}", None,
-                         None, 200, encode_wav(sig, 8000, dtype=dt))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        rng = np.random.default_rng(d + 6_600_000)
+        t = np.arange(1600, dtype=np.float64)
+        freq = 200 + (d % 17) * 40
+        sig = (
+            11000 * np.sin(2 * np.pi * freq * t / 8000)
+            + rng.integers(-800, 800, 1600)
+        ).astype(np.int16)
+        return [
+            (d * 100 + vi, "audio", f"{chr(97 + vi)}_{dt}", None, None, 200,
+             encode_wav(sig, 8000, dtype=dt))
+            for vi, dt in enumerate(("i16", "i24", "i32", "f32", "f64"))
+        ]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    # eager localCheckpoint — see q_tiff_codec_matrix
-    feats = extract_audio_features(media, use_fake=False).select(
-        (F.col("media_id") / 100).cast("long").alias("doc_id"),
-        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
-        F.col("mime").alias("variant"),
-        F.col("feature").alias("__f"),
-    ).localCheckpoint(eager=True)
-    base = feats.filter(F.col("__vi") == 0).select(
-        "doc_id", F.col("__f").alias("__base")
-    )
-    return (
-        feats.join(base, "doc_id")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("__f") == F.col("__base"), 1).otherwise(0))
-            .cast("long").alias("n_match"),
-        )
-        .orderBy("variant")
-    )
-
-
-ORACLE_WAV_DEPTH_MATRIX = """
-SELECT v.variant,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM (VALUES ('a_i16'), ('b_i24'), ('c_i32'), ('d_f32'), ('e_f64')) v(variant)
-CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
-GROUP BY v.variant
-ORDER BY v.variant
-"""
+    feats = extract_audio_features(media_from_docs(docs, blobs))
+    return _variant_agreement(feats, F.col("feature"))
 
 
 QUERY_REGISTRY["wav_depth_matrix"] = QuerySpec(
-    q_wav_depth_matrix, ORACLE_WAV_DEPTH_MATRIX,
+    q_wav_depth_matrix,
+    _variant_agreement_oracle("a_i16", "b_i24", "c_i32", "d_f32", "e_f64"),
     "PCM depth cross-validation: 5 container depths, bit-identical decode (oracle)",
 )
 
@@ -2363,15 +2138,14 @@ def permissive_decode_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-blob verdict parquet, upgrading the check from rows-only to a
     full value-hash match)."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_bmp,
         encode_gif,
         encode_png,
         encode_tiff,
         extract_image_features,
+        media_from_docs,
     )
 
     docs = (
@@ -2380,42 +2154,30 @@ def permissive_decode_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 5_000_000)
-                h, w = 8 + d % 8, 8 + d % 5
-                img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                fmt = d % 4
-                if fmt == 0:
-                    mime, payload = "image/bmp", encode_bmp(img)
-                elif fmt == 1:
-                    mime, payload = "image/png", encode_png(img)
-                elif fmt == 2:
-                    mime, payload = "image/gif", encode_gif(
-                        np.asarray(img) // 64 * 64
-                    )
-                else:
-                    mime, payload = "image/tiff", encode_tiff(
-                        img, compression=("none", "packbits", "lzw")[d % 3]
-                    )
-                if d % 13 == 0:
-                    mime, payload = "image/x-alien", b"\x7fALIEN" + payload[:16]
-                elif d % 7 == 0:
-                    payload = payload[: max(4, len(payload) // 3)]
-                rows.append((d, "image", mime, w, h, None, payload))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
+    def blobs(d):
+        rng = np.random.default_rng(d + 5_000_000)
+        h, w = 8 + d % 8, 8 + d % 5
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        fmt = d % 4
+        if fmt == 0:
+            mime, payload = "image/bmp", encode_bmp(img)
+        elif fmt == 1:
+            mime, payload = "image/png", encode_png(img)
+        elif fmt == 2:
+            mime, payload = "image/gif", encode_gif(np.asarray(img) // 64 * 64)
+        else:
+            mime, payload = "image/tiff", encode_tiff(
+                img, compression=("none", "packbits", "lzw")[d % 3]
             )
+        if d % 13 == 0:
+            mime, payload = "image/x-alien", b"\x7fALIEN" + payload[:16]
+        elif d % 7 == 0:
+            payload = payload[: max(4, len(payload) // 3)]
+        return [(d, "image", mime, w, h, None, payload)]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False, on_error="permissive")
+    feats = extract_image_features(
+        media_from_docs(docs, blobs), on_error="permissive"
+    )
     return feats.select(
         "media_id",
         "mime",
@@ -2470,69 +2232,41 @@ QUERY_REGISTRY["permissive_decode_stats"] = QuerySpec(
 def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec audio path end-to-end: synthesize valid RIFF/WAVE PCM
     payloads (a deterministic int16 tone per doc_id), decode them with the
-    pure-stdlib WAV reader inside ``mapInPandas`` (``use_fake=False``) and
-    featurize the sample stream (per-window RMS, peak-normalized).
-    Non-SQL-expressible (binary container parsing) → the per-blob expected
-    features are a checked-in parquet DuckDB joins to the live doc domain
-    (full value-hash oracle) + exact fixture pytest."""
+    pure-stdlib WAV reader inside ``mapInPandas`` and featurize the sample
+    stream (per-window RMS, peak-normalized). Non-SQL-expressible (binary
+    container parsing) → the per-blob expected features are a checked-in
+    parquet DuckDB joins to the live doc domain (full value-hash oracle) +
+    exact fixture pytest."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_wav,
         extract_audio_features,
+        media_from_docs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 500)
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                n = 2000 + (int(did) % 7) * 500
-                t = np.arange(n)
-                freq = 100 + (int(did) % 40) * 10
-                tone = (9000 * np.sin(2 * np.pi * freq * t / 8000)).astype(np.int16)
-                rows.append(
-                    (int(did), "audio", "audio/wav", None, None, int(n * 1000 / 8000),
-                     encode_wav(tone, 8000))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        n = 2000 + (d % 7) * 500
+        t = np.arange(n)
+        freq = 100 + (d % 40) * 10
+        tone = (9000 * np.sin(2 * np.pi * freq * t / 8000)).astype(np.int16)
+        return [
+            (d, "audio", "audio/wav", None, None, int(n * 1000 / 8000),
+             encode_wav(tone, 8000))
+        ]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_audio_features(media, n_windows=8, use_fake=False)
-    return feats.select(
-        "media_id",
-        "duration_ms",
-        "n_bytes",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id")
+    feats = extract_audio_features(media_from_docs(docs, blobs), n_windows=8)
+    return _feature_columns(feats, "media_id", "duration_ms", "n_bytes")
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode a WAV, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_WAV_AUDIO_FEATURES = f"""
-SELECT b.media_id, b.duration_ms, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("wav_audio_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
 
 QUERY_REGISTRY["wav_audio_features"] = QuerySpec(
-    q_wav_audio_features, ORACLE_WAV_AUDIO_FEATURES, "real WAV decode (stdlib codec) -> features vs fixture oracle"
+    q_wav_audio_features,
+    _feature_fixture_oracle(
+        "wav_audio_features", "b.media_id, b.duration_ms, b.n_bytes"
+    ),
+    "real WAV decode (stdlib codec) -> features vs fixture oracle",
 )
 
 
@@ -2541,17 +2275,16 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads (3-6 deterministic gradient frames per doc_id, each a real
     baseline JPEG), walk the RIFF container, sample one frame per 500 ms of
     timeline, decode the sampled JPEGs and featurize the pixels — all
-    inside ``mapInPandas`` with ``use_fake=False``. Bounded to 200 blobs
-    (the per-frame JPEG encode in the synthesizer is the demo part; the
-    container walk + decode is the production path). Non-SQL-expressible →
-    rows-only driver check + exact checked-in fixture."""
+    inside ``mapInPandas``. Bounded to 200 blobs (the per-frame JPEG encode
+    in the synthesizer is the demo part; the container walk + decode is the
+    production path). Non-SQL-expressible → rows-only driver check + exact
+    checked-in fixture."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_mjpeg_avi,
         extract_video_frames,
+        media_from_docs,
     )
 
     docs = (
@@ -2560,60 +2293,33 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # see q_image_near_dup
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n_frames = 3 + d % 4
-                frames = []
-                for i in range(n_frames):
-                    yy, xx = np.mgrid[0:16, 0:16]
-                    img = np.stack(
-                        [(xx * 9 + i * 30 + d) % 256, (yy * 11 + d) % 256,
-                         ((xx + yy) * 5 + i * 17) % 256],
-                        axis=2,
-                    ).astype(np.uint8)
-                    frames.append(img)
-                payload = encode_mjpeg_avi(frames, fps=4, quality=85)
-                rows.append(
-                    (d, "video", "video/avi", 16, 16, int(n_frames * 250), payload)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
+    def blobs(d):
+        n_frames = 3 + d % 4
+        frames = []
+        for i in range(n_frames):
+            yy, xx = np.mgrid[0:16, 0:16]
+            img = np.stack(
+                [(xx * 9 + i * 30 + d) % 256, (yy * 11 + d) % 256,
+                 ((xx + yy) * 5 + i * 17) % 256],
+                axis=2,
+            ).astype(np.uint8)
+            frames.append(img)
+        payload = encode_mjpeg_avi(frames, fps=4, quality=85)
+        return [(d, "video", "video/avi", 16, 16, int(n_frames * 250), payload)]
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    frames = extract_video_frames(media, every_ms=500, use_fake=False)
-    return frames.select(
-        "media_id",
-        "frame_ts_ms",
-        "frame_index",
-        F.round(F.element_at("feature", 1), 4).alias("f0"),
-        F.round(F.element_at("feature", 8), 4).alias("f7"),
-    ).orderBy("media_id", "frame_ts_ms")
+    frames = extract_video_frames(media_from_docs(docs, blobs), every_ms=500)
+    return _feature_columns(
+        frames, "media_id", "frame_ts_ms", "frame_index",
+        order=("media_id", "frame_ts_ms"),
+    )
 
-
-# Decoded-feature oracle (VERDICT r08 task #4, the permissive_decode_stats
-# pattern): DuckDB cannot decode an MJPEG-AVI, but it CAN read the checked-in
-# per-blob expected-feature parquet — generated by tools/make_fixtures.py
-# from the same decode the codec pytest vectors pin — and join it to the
-# live documents domain. This upgrades the driver check from rows-only to
-# a full rows+schema+value-hash match; an unintended codec/feature change
-# now fails the driver differential, not just the pytest fixture.
-ORACLE_VIDEO_FRAME_FEATURES = f"""
-SELECT b.media_id, b.frame_ts_ms, b.frame_index, b.f0, b.f7
-FROM read_parquet('{fixture_path("video_frame_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id, b.frame_index
-"""
 
 QUERY_REGISTRY["video_frame_features"] = QuerySpec(
-    q_video_frame_features, ORACLE_VIDEO_FRAME_FEATURES,
+    q_video_frame_features,
+    _feature_fixture_oracle(
+        "video_frame_features", "b.media_id, b.frame_ts_ms, b.frame_index",
+        order="b.media_id, b.frame_index",
+    ),
     "real MJPEG-AVI decode (container walk + per-frame JPEG) -> sampled frame features vs fixture oracle",
 )
 
@@ -2697,14 +2403,13 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     find candidate pairs via the banded 64-bit Hamming probe shared with
     SimHash. Non-SQL-expressible → rows-only driver check + exact fixture."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.jpeg import encode_jpeg
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_bmp,
         image_dhash,
         image_near_dup_pairs,
+        media_from_docs,
     )
 
     # repartition: the documents scan is one parquet split, which would run
@@ -2715,37 +2420,26 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 7_000_000)
-                h, w = 24 + d % 9, 32 + d % 7
-                # smooth random field (tiled blocks) so the perceptual hash
-                # is meaningful — iid noise has no structure to survive
-                base = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
-                img = np.repeat(np.repeat(base, -(-h // 6), axis=0), -(-w // 8), axis=1)[:h, :w]
-                rows.append((d, "image", "image/bmp", w, h, None, encode_bmp(img)))
-                if d < 60:  # planted near-dup: same pixels, lossy re-encode
-                    rows.append(
-                        (100000 + d, "image", "image/jpeg", w, h, None,
-                         encode_jpeg(img, quality=80))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
+    def blobs(d):
+        rng = np.random.default_rng(d + 7_000_000)
+        h, w = 24 + d % 9, 32 + d % 7
+        # smooth random field (tiled blocks) so the perceptual hash
+        # is meaningful — iid noise has no structure to survive
+        base = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
+        img = np.repeat(np.repeat(base, -(-h // 6), axis=0), -(-w // 8), axis=1)[:h, :w]
+        rows = [(d, "image", "image/bmp", w, h, None, encode_bmp(img))]
+        if d < 60:  # planted near-dup: same pixels, lossy re-encode
+            rows.append(
+                (100000 + d, "image", "image/jpeg", w, h, None,
+                 encode_jpeg(img, quality=80))
             )
+        return rows
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
     # eager localCheckpoint: the banded self-join + oversized-bucket count
     # consume the hash frame three times; it is |media| rows of 2 longs
     # (KB-scale), while one evaluation costs a full synth+decode pass
     # (the q_minhash_lsh lifecycle — no CacheManager entry left behind)
-    hashes = image_dhash(media, use_fake=False).localCheckpoint(eager=True)
+    hashes = image_dhash(media_from_docs(docs, blobs)).localCheckpoint(eager=True)
     return image_near_dup_pairs(hashes, "media_id", max_hamming=10).orderBy(
         "doc_a", "doc_b"
     )
@@ -2785,13 +2479,12 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit Hamming probe shared with SimHash/dHash. Non-SQL-expressible →
     rows-only driver check + exact fixture."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         audio_fingerprints,
         audio_near_dup_pairs,
         encode_wav,
+        media_from_docs,
     )
 
     docs = (
@@ -2800,40 +2493,29 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # see q_image_near_dup
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n = 6000 + (d % 5) * 1000
-                t = np.arange(n)
-                f0, rate_ = 150 + (d % 37) * 13, 2 + d % 3
-                sig = np.sin(2 * np.pi * (f0 + t / 180) * t / 8000) * (
-                    0.5 + 0.5 * np.sin(2 * np.pi * rate_ * t / 8000)
-                )
-                s16 = (20000 * sig).astype(np.int16)
-                rows.append(
-                    (d, "audio", "audio/wav", None, None, int(n * 1000 / 8000),
-                     encode_wav(s16, 8000))
-                )
-                if d < 60:  # planted near-dup: half gain + 8-bit requantize
-                    v16 = ((s16 // 2) // 256 * 256).astype(np.int16)
-                    rows.append(
-                        (100000 + d, "audio", "audio/wav", None, None,
-                         int(n * 1000 / 8000), encode_wav(v16, 8000))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
+    def blobs(d):
+        n = 6000 + (d % 5) * 1000
+        t = np.arange(n)
+        f0, rate_ = 150 + (d % 37) * 13, 2 + d % 3
+        sig = np.sin(2 * np.pi * (f0 + t / 180) * t / 8000) * (
+            0.5 + 0.5 * np.sin(2 * np.pi * rate_ * t / 8000)
+        )
+        s16 = (20000 * sig).astype(np.int16)
+        rows = [
+            (d, "audio", "audio/wav", None, None, int(n * 1000 / 8000),
+             encode_wav(s16, 8000))
+        ]
+        if d < 60:  # planted near-dup: half gain + 8-bit requantize
+            v16 = ((s16 // 2) // 256 * 256).astype(np.int16)
+            rows.append(
+                (100000 + d, "audio", "audio/wav", None, None,
+                 int(n * 1000 / 8000), encode_wav(v16, 8000))
             )
+        return rows
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
     # eager localCheckpoint: three consumers of a KB-scale frame (see
     # q_image_near_dup)
-    fps = audio_fingerprints(media, use_fake=False).localCheckpoint(eager=True)
+    fps = audio_fingerprints(media_from_docs(docs, blobs)).localCheckpoint(eager=True)
     return audio_near_dup_pairs(fps, "media_id", max_hamming=8).orderBy(
         "doc_a", "doc_b"
     )
@@ -2866,11 +2548,10 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifting-field frames land past the per-frame threshold at q70, the
     candidate-generator recall contract shared with the audio probe)."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_mjpeg_avi,
+        media_from_docs,
         video_frame_hashes,
         video_near_dup_pairs,
     )
@@ -2881,45 +2562,36 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # see q_image_near_dup
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 9_000_000)
-                n_frames = 4 + d % 3
-                frames = []
-                base = rng.integers(0, 256, size=(8, 10, 3), dtype=np.uint8)
-                for i in range(n_frames):
-                    # smooth tiled field drifting per frame: structured
-                    # content the perceptual hash can track. 80x64 frames:
-                    # large enough that the 1/8-scale DC-only decode path
-                    # covers the 8x9 dHash grid (video_frame_hashes engages
-                    # it above 64x72), so the benched workload measures the
-                    # thumbnail-decode fast path a real corpus would ride.
-                    img = np.repeat(np.repeat(np.roll(base, i, axis=1), 8, axis=0), 8, axis=1)
-                    frames.append(img)
-                rows.append(
-                    (d, "video", "video/avi", 80, 64, int(n_frames * 250),
-                     encode_mjpeg_avi(frames, fps=4, quality=88))
-                )
-                if d < 40:  # planted near-dup: same frames, harsher quality
-                    rows.append(
-                        (100000 + d, "video", "video/avi", 80, 64,
-                         int(n_frames * 250), encode_mjpeg_avi(frames, fps=4, quality=70))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
+    def blobs(d):
+        rng = np.random.default_rng(d + 9_000_000)
+        n_frames = 4 + d % 3
+        base = rng.integers(0, 256, size=(8, 10, 3), dtype=np.uint8)
+        # smooth tiled field drifting per frame: structured content the
+        # perceptual hash can track. 80x64 frames: large enough that the
+        # 1/8-scale DC-only decode path covers the 8x9 dHash grid
+        # (video_frame_hashes engages it above 64x72), so the benched
+        # workload measures the thumbnail-decode fast path a real corpus
+        # would ride.
+        frames = [
+            np.repeat(np.repeat(np.roll(base, i, axis=1), 8, axis=0), 8, axis=1)
+            for i in range(n_frames)
+        ]
+        rows = [
+            (d, "video", "video/avi", 80, 64, int(n_frames * 250),
+             encode_mjpeg_avi(frames, fps=4, quality=88))
+        ]
+        if d < 40:  # planted near-dup: same frames, harsher quality
+            rows.append(
+                (100000 + d, "video", "video/avi", 80, 64,
+                 int(n_frames * 250), encode_mjpeg_avi(frames, fps=4, quality=70))
             )
+        return rows
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
     # eager localCheckpoint: three consumers of a KB-scale frame (see
     # q_image_near_dup)
-    hashes = video_frame_hashes(media, every_ms=500).localCheckpoint(eager=True)
+    hashes = video_frame_hashes(
+        media_from_docs(docs, blobs), every_ms=500
+    ).localCheckpoint(eager=True)
     return video_near_dup_pairs(
         hashes, "media_id", max_hamming=10, min_matching_frames=3
     ).orderBy("doc_a", "doc_b")
@@ -2968,13 +2640,6 @@ JOIN embeddings e ON b.neighbor_id = e.vec_id
 ORDER BY b.query_id, b.rank
 """
 
-ORACLE_MULTIMODAL_FEATURES = f"""
-SELECT b.media_id, b.n_bytes, b.f0, b.f7
-FROM read_parquet('{fixture_path("multimodal_features_sf0.01.parquet")}') b
-JOIN documents d ON b.media_id = d.doc_id
-ORDER BY b.media_id
-"""
-
 QUERY_REGISTRY.update(
     {
         "text_quality": QuerySpec(q_text_quality, ORACLE_TEXT_QUALITY, "text quality scoring"),
@@ -2993,7 +2658,8 @@ QUERY_REGISTRY.update(
             q_ann_cosine_topk, ORACLE_ANN_COSINE_TOPK, "LSH ANN top-k vs fixture oracle"
         ),
         "multimodal_features": QuerySpec(
-            q_multimodal_features, ORACLE_MULTIMODAL_FEATURES,
+            q_multimodal_features,
+            _feature_fixture_oracle("multimodal_features", "b.media_id, b.n_bytes"),
             "binary payload features vs fixture oracle",
         ),
     }
@@ -3440,12 +3106,11 @@ def q_old_jpeg_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
 
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.jpeg import encode_jpeg
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         extract_image_features,
+        media_from_docs,
     )
 
     def jpeg_split(stream: bytes):
@@ -3545,96 +3210,59 @@ def q_old_jpeg_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 8_300_000)
-                h, w = 13 + d % 8, 12 + d % 6
-                gray = d % 3 == 0
-                img = rng.integers(
-                    0, 256, size=(h, w) if gray else (h, w, 3), dtype=np.uint8
-                )
-                spp = 1 if gray else 3
-                photo = 1 if gray else 6
-                subs = "444" if gray or d % 2 else "420"
-                sub = None if gray else {"444": (1, 1), "420": (2, 2)}[subs]
-                q = 70 + (d % 3) * 10
-                full = encode_jpeg(img, quality=q, subsampling=subs)
-                qt, dc, ac, _, entropy = jpeg_split(full)
-                fr = encode_jpeg(img, quality=q, subsampling=subs, restart_interval=2)
-                _, _, _, dri_r, entropy_r = jpeg_split(fr)
-                common = base_tags(w, h, spp, photo)
-                variants = [
-                    ("a_interchange", tiff_le(
-                        common + [(513, 4, [("b", full)]), (514, 4, [len(full)]),
-                                  (278, 3, [h])])),
-                    ("b_chunk_soi", tiff_le(
-                        common + [(273, 4, [("b", full)]), (279, 4, [len(full)]),
-                                  (278, 3, [h])])),
-                    ("c_split_strip", tiff_le(
-                        common + split_tags(qt, dc, ac, spp, sub)
-                        + [(273, 4, [("b", entropy)]), (279, 4, [len(entropy)]),
-                           (278, 3, [h])])),
-                    ("d_split_tiled", tiff_le(
-                        common + split_tags(qt, dc, ac, spp, sub)
-                        + [(322, 4, [w]), (323, 4, [h]),
-                           (324, 4, [("b", entropy)]), (325, 4, [len(entropy)])])),
-                    ("e_split_restart", tiff_le(
-                        common + split_tags(qt, dc, ac, spp, sub)
-                        + [(515, 4, [dri_r]),
-                           (273, 4, [("b", entropy_r)]), (279, 4, [len(entropy_r)]),
-                           (278, 3, [h])])),
-                ]
-                for vi, (vname, payload) in enumerate(variants):
-                    rows.append(
-                        (d * 100 + vi, "image", vname, w, h, None, payload)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "mime", "width", "height",
-                    "duration_ms", "payload",
-                ],
-            )
-
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    feats = extract_image_features(media, use_fake=False).select(
-        (F.col("media_id") / 100).cast("long").alias("doc_id"),
-        F.pmod(F.col("media_id"), F.lit(100)).cast("int").alias("__vi"),
-        F.col("mime").alias("variant"),
-        F.col("feature").alias("__f"),
-    ).localCheckpoint(eager=True)
-    base = feats.filter(F.col("__vi") == 0).select(
-        "doc_id", F.col("__f").alias("__base")
-    )
-    return (
-        feats.join(base, "doc_id")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("__f") == F.col("__base"), 1).otherwise(0))
-            .cast("long").alias("n_match"),
+    def blobs(d):
+        rng = np.random.default_rng(d + 8_300_000)
+        h, w = 13 + d % 8, 12 + d % 6
+        gray = d % 3 == 0
+        img = rng.integers(
+            0, 256, size=(h, w) if gray else (h, w, 3), dtype=np.uint8
         )
-        .orderBy("variant")
-    )
+        spp = 1 if gray else 3
+        photo = 1 if gray else 6
+        subs = "444" if gray or d % 2 else "420"
+        sub = None if gray else {"444": (1, 1), "420": (2, 2)}[subs]
+        q = 70 + (d % 3) * 10
+        full = encode_jpeg(img, quality=q, subsampling=subs)
+        qt, dc, ac, _, entropy = jpeg_split(full)
+        fr = encode_jpeg(img, quality=q, subsampling=subs, restart_interval=2)
+        _, _, _, dri_r, entropy_r = jpeg_split(fr)
+        common = base_tags(w, h, spp, photo)
+        variants = [
+            ("a_interchange", tiff_le(
+                common + [(513, 4, [("b", full)]), (514, 4, [len(full)]),
+                          (278, 3, [h])])),
+            ("b_chunk_soi", tiff_le(
+                common + [(273, 4, [("b", full)]), (279, 4, [len(full)]),
+                          (278, 3, [h])])),
+            ("c_split_strip", tiff_le(
+                common + split_tags(qt, dc, ac, spp, sub)
+                + [(273, 4, [("b", entropy)]), (279, 4, [len(entropy)]),
+                   (278, 3, [h])])),
+            ("d_split_tiled", tiff_le(
+                common + split_tags(qt, dc, ac, spp, sub)
+                + [(322, 4, [w]), (323, 4, [h]),
+                   (324, 4, [("b", entropy)]), (325, 4, [len(entropy)])])),
+            ("e_split_restart", tiff_le(
+                common + split_tags(qt, dc, ac, spp, sub)
+                + [(515, 4, [dri_r]),
+                   (273, 4, [("b", entropy_r)]), (279, 4, [len(entropy_r)]),
+                   (278, 3, [h])])),
+        ]
+        return [
+            (d * 100 + vi, "image", vname, w, h, None, payload)
+            for vi, (vname, payload) in enumerate(variants)
+        ]
 
-
-ORACLE_OLD_JPEG_MATRIX = """
-SELECT v.variant,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_match
-FROM (VALUES ('a_interchange'), ('b_chunk_soi'), ('c_split_strip'),
-             ('d_split_tiled'), ('e_split_restart')) v(variant)
-CROSS JOIN (SELECT doc_id FROM documents WHERE doc_id < 120) d
-GROUP BY v.variant
-ORDER BY v.variant
-"""
+    feats = extract_image_features(media_from_docs(docs, blobs))
+    return _variant_agreement(feats, F.col("feature"))
 
 
 QUERY_REGISTRY["old_jpeg_matrix"] = QuerySpec(
-    q_old_jpeg_matrix, ORACLE_OLD_JPEG_MATRIX,
+    q_old_jpeg_matrix,
+    _variant_agreement_oracle(
+        "a_interchange", "b_chunk_soi", "c_split_strip", "d_split_tiled",
+        "e_split_restart",
+    ),
     "old-style JPEG-in-TIFF: 5 framings of one entropy stream decode identically (oracle)",
 )
 

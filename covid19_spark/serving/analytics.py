@@ -145,13 +145,3 @@ def states_history_since(
         "state",
         F.sum("sum_delta_confirmed").over(w).alias("cumulative_confirmed"),
     ).orderBy("state", "date")
-
-
-def post_chart_request(chart_request_json: str, service_url: str) -> bytes:
-    """S7 external HTTP sink (``VisualizationService.java:38-43``): POST one
-    assembled chart-request document, return the rendered bytes. Driver-side
-    convenience wrapper; the distributed form is
-    ``serving.http_sink.post_chart_documents``."""
-    from covid19_spark.serving.http_sink import post_document
-
-    return post_document(chart_request_json.encode("utf-8"), service_url)

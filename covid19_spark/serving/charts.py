@@ -14,8 +14,9 @@ thousands of charts is produced distributed, one row per chart, with no
 driver-side loop. ``to_json`` matches Gson's defaults: compact output, field
 order = struct declaration order, nulls omitted.
 
-The HTTP POST itself stays a driver-side stub
-(``analytics.post_chart_request``) — no chart service in this environment.
+The HTTP POST to the rendering service (``VisualizationService.java:38-43``)
+is ``serving.http_sink``: ``post_document`` for one document from the
+driver, ``post_chart_documents`` for a whole chart frame from the executors.
 """
 
 from __future__ import annotations

@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 from covid19_spark.serving.analytics import testing_trend as build_testing_trend
 from covid19_spark.serving.analytics import (
     daily_history_chart,
-    post_chart_request,
     states_history_since,
     top_states_series,
 )
+from covid19_spark.serving.http_sink import post_document
 
 
 @pytest.fixture()
@@ -76,4 +76,4 @@ def test_chart_post_unreachable_service_raises():
     # real transport now (see test_http_sink.py for the served path): a
     # connection failure surfaces after bounded retries, not a stub error
     with pytest.raises(Exception):
-        post_chart_request("{}", "http://127.0.0.1:9/unroutable")
+        post_document(b"{}", "http://127.0.0.1:9/unroutable")

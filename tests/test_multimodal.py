@@ -41,15 +41,46 @@ def test_decode_stub_raises():
 
 
 def test_extract_features_end_to_end(spark):
-    media = synthesize_media(spark, n=12)
-    out = extract_image_features(media).collect()
-    assert len(out) == 12
-    r = {x.media_id: x for x in out}
-    assert r[0].n_bytes == 128
-    assert len(r[0].feature) == 8
-    # deterministic across runs
-    again = {x.media_id: x for x in extract_image_features(media).collect()}
-    assert r[3].feature == again[3].feature
+    """Kernels decode by default: called with no flag on real payloads (a
+    BMP image, a WAV clip), each returns the real-decode output, never the
+    byte-histogram stand-in."""
+    from covid19_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        audio_features_from_samples,
+        audio_fingerprint,
+        audio_fingerprints,
+        decode_wav,
+        dhash_pixels,
+        encode_bmp,
+        encode_wav,
+        extract_audio_features,
+        image_dhash,
+        image_features_from_pixels,
+    )
+
+    img = np.random.default_rng(3).integers(0, 256, size=(12, 9, 3), dtype=np.uint8)
+    bmp = encode_bmp(img)
+    tone = (8000 * np.sin(np.arange(3000) / 7.0)).astype(np.int16)
+    wav = encode_wav(tone, 8000)
+    media = spark.createDataFrame(
+        [
+            (0, "image", "image/bmp", 9, 12, None, bmp),
+            (1, "audio", "audio/wav", None, None, 375, wav),
+        ],
+        MEDIA_SCHEMA,
+    )
+    (feat,) = extract_image_features(media.filter("kind = 'image'")).collect()
+    assert feat.n_bytes == len(bmp)
+    assert np.allclose(feat.feature, image_features_from_pixels(img), atol=1e-6)
+    assert not np.allclose(feat.feature, fake_image_features(bmp), atol=1e-3)
+    (h,) = image_dhash(media).collect()
+    assert h.dhash == dhash_pixels(img)
+
+    samples = decode_wav(wav)[0]
+    (afeat,) = extract_audio_features(media, n_windows=8).collect()
+    assert np.allclose(afeat.feature, audio_features_from_samples(samples, 8), atol=1e-6)
+    (afp,) = audio_fingerprints(media).collect()
+    assert afp.afp == audio_fingerprint(samples)
 
 
 def test_frame_sample_plan(spark):
@@ -63,34 +94,26 @@ def test_frame_sample_plan(spark):
     assert all(mid % 3 == 2 for mid in counts)  # kind == video
 
 
-def test_resize_images_contract(spark):
-    from covid19_spark.operators.multimodal import resize_images, synthesize_media
-
-    media = synthesize_media(spark, n=30)
-    n_images = media.filter("kind = 'image'").count()
-    out = resize_images(media, 16, 12).collect()
-    assert len(out) == n_images
-    for r in out:
-        assert r.width == 16 and r.height == 12
-        assert len(r.payload) == 16 * 12  # exact output sizing
-    # deterministic
-    again = resize_images(synthesize_media(spark, n=30), 16, 12).collect()
-    assert {r.media_id: bytes(r.payload) for r in out} == {
-        r.media_id: bytes(r.payload) for r in again
-    }
-
-
 def test_audio_features_contract(spark):
-    from covid19_spark.operators.multimodal import extract_audio_features, synthesize_media
+    from covid19_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        encode_wav,
+        extract_audio_features,
+    )
 
-    media = synthesize_media(spark, n=30)
-    n_audio = media.filter("kind = 'audio'").count()
-    rows = extract_audio_features(media, n_windows=8).collect()
-    assert len(rows) == n_audio
-    for r in rows:
+    rows = []
+    for i in range(5):
+        clip = (4000 * np.sin(np.arange(1200 + 300 * i) * (0.05 + 0.02 * i))).astype(np.int16)
+        rows.append((i, "audio", "audio/wav", None, None, 150 + 40 * i, encode_wav(clip, 8000)))
+    rows.append((9, "image", "image/bmp", 1, 1, None, b"BM"))  # pruned by kind
+    rows_out = extract_audio_features(spark.createDataFrame(rows, MEDIA_SCHEMA), n_windows=8).collect()
+    assert sorted(r.media_id for r in rows_out) == list(range(5))
+    for r in rows_out:
         assert r.n_windows == 8 and len(r.feature) == 8
         assert all(0.0 <= x <= 1.0 for x in r.feature)  # peak-normalized
-        assert r.n_bytes > 0
+        assert max(r.feature) == 1.0
+        assert r.n_bytes == len(rows[r.media_id][6])
+        assert r.duration_ms == rows[r.media_id][5]
 
 
 def test_real_codec_paths_raise(spark):
@@ -98,17 +121,14 @@ def test_real_codec_paths_raise(spark):
 
     from covid19_spark.operators.multimodal import (
         extract_audio_features,
-        resize_images,
         synthesize_media,
     )
 
     # synthesize_media payloads are random bytes, not real containers: the
-    # real-decode paths must fail loudly, not featurize garbage
+    # decode paths must fail loudly, not featurize garbage
     media = synthesize_media(spark, n=6)
-    with pytest.raises(Exception, match="NotImplementedError|image codec"):
-        resize_images(media, 8, 8, use_fake=False).collect()
     with pytest.raises(Exception, match="not a WAV"):
-        extract_audio_features(media, use_fake=False).collect()
+        extract_audio_features(media).collect()
 
 
 def test_bmp_roundtrip_exact():
@@ -142,7 +162,7 @@ def test_bmp_top_down_and_rejects():
 
 
 def test_real_decode_path_end_to_end_exact_features(spark):
-    """use_fake=False exercised for real: generated BMPs decode through the
+    """The decode path exercised for real: generated BMPs decode through the
     pure-numpy reader inside mapInPandas and produce the exact features
     computed locally from the known pixel arrays."""
     from covid19_spark.operators.multimodal import (
@@ -158,7 +178,7 @@ def test_real_decode_path_end_to_end_exact_features(spark):
         for i in range(8)
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in extract_image_features(media, use_fake=False).collect()}
+    out = {r.media_id: r for r in extract_image_features(media).collect()}
     assert len(out) == 8
     for i, img in imgs.items():
         expected = image_features_from_pixels(img)
@@ -244,7 +264,7 @@ def test_png_rejects_corrupt_and_unsupported():
 
 
 def test_png_real_decode_path_end_to_end(spark):
-    """use_fake=False over PNG payloads: generated PNGs decode through the
+    """Real PNG payloads: generated PNGs decode through the
     stdlib codec inside mapInPandas and featurize identically to decoding
     the same pixels locally."""
     from covid19_spark.operators.multimodal import (
@@ -262,7 +282,7 @@ def test_png_real_decode_path_end_to_end(spark):
         for i in imgs
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in extract_image_features(media, use_fake=False).collect()}
+    out = {r.media_id: r for r in extract_image_features(media).collect()}
     for i, img in imgs.items():
         expected = image_features_from_pixels(img)
         assert np.allclose(np.array(out[i].feature), expected, atol=1e-6), i
@@ -449,7 +469,7 @@ def test_wav_other_depths_and_float():
 
 
 def test_audio_real_decode_end_to_end(spark):
-    """use_fake=False over REAL WAV payloads: features computed in
+    """REAL WAV payloads: features computed in
     mapInPandas equal those computed locally from the same samples."""
     from covid19_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -469,7 +489,7 @@ def test_audio_real_decode_end_to_end(spark):
         wavs[i] = payload
         rows.append((i, "audio", "audio/wav", None, None, 500, payload))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in extract_audio_features(media, n_windows=8, use_fake=False).collect()}
+    out = {r.media_id: r for r in extract_audio_features(media, n_windows=8).collect()}
     assert len(out) == 6
     for i, payload in wavs.items():
         expected = audio_features_from_samples(decode_wav(payload)[0], 8)
@@ -530,7 +550,7 @@ def test_avi_rejects():
 
 
 def test_video_real_decode_end_to_end(spark):
-    """use_fake=False over REAL MJPEG AVI payloads in mapInPandas: sampled
+    """REAL MJPEG AVI payloads in mapInPandas: sampled
     frame features equal those computed locally from the same container."""
     from covid19_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -549,7 +569,7 @@ def test_video_real_decode_end_to_end(spark):
     # a non-video row that must be pruned before any decode
     rows.append((99, "image", "image/bmp", 8, 8, None, b"garbage"))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = extract_video_frames(media, every_ms=500, use_fake=False).collect()
+    out = extract_video_frames(media, every_ms=500).collect()
     got = {}
     for r in out:
         got.setdefault(r.media_id, []).append((r.frame_ts_ms, r.frame_index, r.feature))
@@ -562,19 +582,28 @@ def test_video_real_decode_end_to_end(spark):
             assert np.allclose(f_got, f_exp, atol=1e-6)
 
 
-def test_video_fake_path_matches_plan_fanout(spark):
-    """The fake path's row fan-out equals the declarative frame_sample_plan
-    (same duration/every_ms arithmetic)."""
-    from covid19_spark.operators.multimodal import extract_video_frames
+def test_video_frames_fanout_matches_plan(spark):
+    """The decoded frame fan-out equals the declarative frame_sample_plan
+    when ``duration_ms`` is the container's own ``int(n_frames*1000/fps)``:
+    both sample on an inclusive bound."""
+    from covid19_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        encode_mjpeg_avi,
+        extract_video_frames,
+    )
 
-    media = synthesize_media(spark, n=12)
-    plan_counts = {}
+    rows = []
+    for i, (n_frames, fps) in enumerate([(3, 4), (8, 4), (12, 4), (7, 3), (5, 10)]):
+        payload = encode_mjpeg_avi(_mk_frames(n_frames, h=8, w=8), fps=fps)
+        rows.append((i, "video", "video/avi", 8, 8, int(n_frames * 1000 / fps), payload))
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    plan_counts, frame_counts = {}, {}
     for r in frame_sample_plan(media, every_ms=1000).collect():
         plan_counts[r.media_id] = plan_counts.get(r.media_id, 0) + 1
-    fake_counts = {}
-    for r in extract_video_frames(media, every_ms=1000, use_fake=True).collect():
-        fake_counts[r.media_id] = fake_counts.get(r.media_id, 0) + 1
-    assert fake_counts == plan_counts
+    for r in extract_video_frames(media, every_ms=1000).collect():
+        frame_counts[r.media_id] = frame_counts.get(r.media_id, 0) + 1
+    assert frame_counts == plan_counts
+    assert set(frame_counts.values()) == {1, 3, 4}  # 750/2000/3000/2333/500 ms
 
 
 def test_video_every_ms_must_be_positive(spark):
@@ -678,7 +707,7 @@ def test_image_near_dup_finds_reencodes_distributed(spark):
         rows.append((i, "image", "image/bmp", 48, 36, None, encode_bmp(img)))
         rows.append((100 + i, "image", "image/jpeg", 48, 36, None, encode_jpeg(img, quality=80)))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    hashes = image_dhash(media, use_fake=False)
+    hashes = image_dhash(media)
     pairs = {(r.doc_a, r.doc_b) for r in image_near_dup_pairs(hashes, max_hamming=10).collect()}
     for i in range(8):
         assert (i, 100 + i) in pairs, i
@@ -741,7 +770,7 @@ def test_audio_near_dup_finds_variants_distributed(spark):
         v16 = ((s16 // 2) // 256 * 256).astype(np.int16)  # half gain + 8-bit
         rows.append((100 + i, "audio", "audio/wav", None, None, 1000, encode_wav(v16, 8000)))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    fps = audio_fingerprints(media, use_fake=False)
+    fps = audio_fingerprints(media)
     pairs = {(r.doc_a, r.doc_b) for r in audio_near_dup_pairs(fps, max_hamming=10).collect()}
     for i in range(6):
         assert (i, 100 + i) in pairs, i
@@ -997,7 +1026,7 @@ def test_g711_wav_feeds_audio_features(spark):
         "media_id long, kind string, mime string, width int, height int, "
         "duration_ms long, payload binary",
     )
-    rows = extract_audio_features(media, use_fake=False).collect()
+    rows = extract_audio_features(media).collect()
     assert len(rows) == 1
     feats = rows[0]["feature"]
     assert len(feats) == 16 and max(feats) == 1.0  # peak-normalized RMS
@@ -1035,7 +1064,7 @@ def test_ima_adpcm_wav_roundtrip(spark):
         "media_id long, kind string, mime string, width int, height int, "
         "duration_ms long, payload binary",
     )
-    rows = extract_audio_features(media, use_fake=False).collect()
+    rows = extract_audio_features(media).collect()
     assert len(rows) == 1 and len(rows[0]["feature"]) == 16
 
 
@@ -1083,7 +1112,7 @@ def test_image_dhash_uses_one_resolution_path_across_formats(spark):
         "media_id long, kind string, mime string, width int, height int, "
         "duration_ms long, payload binary",
     )
-    got = {r.media_id: r.dhash for r in image_dhash(media, use_fake=False).collect()}
+    got = {r.media_id: r.dhash for r in image_dhash(media).collect()}
     assert got[1] == dhash_pixels(decode_jpeg(bytes(rows[0][6])))
     ham = bin((got[1] ^ got[3]) & (2**64 - 1)).count("1")
     assert ham <= 4, ham
@@ -1385,7 +1414,7 @@ def test_ms_adpcm_wav_roundtrip(spark):
         "media_id long, kind string, mime string, width int, height int, "
         "duration_ms long, payload binary",
     )
-    rows = extract_audio_features(media, use_fake=False).collect()
+    rows = extract_audio_features(media).collect()
     assert len(rows) == 1 and len(rows[0]["feature"]) == 16
 
 
@@ -1482,7 +1511,6 @@ def test_permissive_decode_image_features(spark):
     """on_error='permissive': corrupt/unsupported blobs yield NULL feature +
     classified error instead of a task failure; default 'fail' mode is
     unchanged (same schema, raises on the same corpus)."""
-    import pandas as pd
     import pytest
 
     from covid19_spark.operators.multimodal import (
@@ -1504,7 +1532,7 @@ def test_permissive_decode_image_features(spark):
     ]
     media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
-    out = extract_image_features(media, use_fake=False, on_error="permissive")
+    out = extract_image_features(media, on_error="permissive")
     assert "error" in out.columns
     got = {r.media_id: r for r in out.collect()}
     assert len(got) == 5
@@ -1515,7 +1543,7 @@ def test_permissive_decode_image_features(spark):
     assert got[4].feature is None and got[4].error.startswith("unsupported:")
 
     # default mode: schema has NO error column, and the bad corpus raises
-    strict = extract_image_features(media, use_fake=False)
+    strict = extract_image_features(media)
     assert "error" not in strict.columns
     with pytest.raises(Exception, match="corrupt|PNG|unpack"):
         strict.collect()
@@ -1524,7 +1552,6 @@ def test_permissive_decode_image_features(spark):
 
 
 def test_permissive_decode_audio_and_video(spark):
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -1552,7 +1579,7 @@ def test_permissive_decode_audio_and_video(spark):
     a = {
         r.media_id: r
         for r in extract_audio_features(
-            audio, use_fake=False, on_error="permissive"
+            audio, on_error="permissive"
         ).collect()
     }
     assert a[0].error is None and len(a[0].feature) == 16
@@ -1566,7 +1593,7 @@ def test_permissive_decode_audio_and_video(spark):
         schema=MEDIA_SCHEMA,
     )
     v = extract_video_frames(
-        video, every_ms=100, use_fake=False, on_error="permissive"
+        video, every_ms=100, on_error="permissive"
     ).collect()
     ok = [r for r in v if r.media_id == 0]
     bad = [r for r in v if r.media_id == 1]
@@ -1579,7 +1606,6 @@ def test_permissive_hash_kernels_and_near_dup_filter(spark):
     """Permissive hash kernels emit NULL hashes for bad blobs; the near-dup
     probes exclude NULLs from banding (no spurious bucket in the dropped
     report) while good pairs still match."""
-    import pandas as pd
 
     from covid19_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -1607,7 +1633,7 @@ def test_permissive_hash_kernels_and_near_dup_filter(spark):
         ],
         schema=MEDIA_SCHEMA,
     )
-    hashes = image_dhash(imgs, use_fake=False, on_error="permissive")
+    hashes = image_dhash(imgs, on_error="permissive")
     hrows = {r.media_id: r.dhash for r in hashes.collect()}
     assert hrows[2] is None and hrows[0] is not None
     report = []
@@ -1628,7 +1654,7 @@ def test_permissive_hash_kernels_and_near_dup_filter(spark):
         ],
         schema=MEDIA_SCHEMA,
     )
-    fps = audio_fingerprints(auds, use_fake=False, on_error="permissive")
+    fps = audio_fingerprints(auds, on_error="permissive")
     assert {r.media_id: r.afp for r in fps.collect()}[2] is None
     apairs = audio_near_dup_pairs(fps).collect()
     assert {(r.doc_a, r.doc_b) for r in apairs} == {(0, 1)}

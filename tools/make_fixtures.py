@@ -1,14 +1,16 @@
 """Regenerate the self-oracle fixtures for the non-SQL-expressible queries.
 
-DuckDB has no xxhash64, so ``minhash_lsh``, ``simhash_pairs`` and
-``ann_cosine_topk`` get only rows-only driver checks. But their outputs are
-fully deterministic (fixed xxhash64 seeds over fixed sf0.01 parquet), so a
-checked-in expected-output parquet upgrades the pytest coverage to exact
-value assertions — any change to shingling, banding, hashing or candidate
-capping shows up as a fixture diff that must be reviewed and regenerated
-here, never silently.
+DuckDB has no xxhash64, no codecs and no iterative tokenizer trainers, so
+the 28 queries in ``FIXTURE_QUERIES`` (MinHash/SimHash/ANN dedup, the image,
+audio and video codec paths, the perceptual near-dup probes, BPE and
+unigram tokenizers, and a few more) cannot be recomputed in SQL. Their
+outputs are fully deterministic (fixed seeds over fixed sf0.01 parquet), so
+each has a checked-in expected-output parquet that its oracle SQL joins back
+to the live tables, and the pytest fixtures assert exact values — any change
+to shingling, banding, hashing, decoding or candidate capping shows up as a
+fixture diff that must be reviewed and regenerated here, never silently.
 
-Usage: python tools/make_fixtures.py
+Usage: python tools/make_fixtures.py [query_name ...]
 """
 
 from __future__ import annotations

@@ -193,43 +193,33 @@ def image_probe(spark, n_ids: int):
     250-id cap. The hashes are cached and counted while the plan is built;
     a settle drops them."""
     import numpy as np
-    import pandas as pd
 
     from covid19_spark.operators.jpeg import encode_jpeg
     from covid19_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         encode_bmp,
         image_dhash,
         image_near_dup_pairs,
+        media_from_docs,
     )
 
     ids = spark.range(n_ids).select(F.col("id").alias("doc_id")).repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def synth(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                rng = np.random.default_rng(d + 7_000_000)
-                h, w = 24 + d % 9, 32 + d % 7
-                base = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
-                img = np.repeat(np.repeat(base, -(-h // 6), axis=0), -(-w // 8), axis=1)[:h, :w]
-                rows.append((d, "image", "image/bmp", w, h, None, encode_bmp(img)))
-                if d % 25 < 6:  # planted near-dup, same 24% rate as the registry query
-                    rows.append(
-                        (REP_OFFSET + d, "image", "image/jpeg", w, h, None,
-                         encode_jpeg(img, quality=80))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "mime", "width", "height",
-                         "duration_ms", "payload"],
+    def blobs(d):
+        rng = np.random.default_rng(d + 7_000_000)
+        h, w = 24 + d % 9, 32 + d % 7
+        base = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
+        img = np.repeat(np.repeat(base, -(-h // 6), axis=0), -(-w // 8), axis=1)[:h, :w]
+        rows = [(d, "image", "image/bmp", w, h, None, encode_bmp(img))]
+        if d % 25 < 6:  # planted near-dup, same 24% rate as the registry query
+            rows.append(
+                (REP_OFFSET + d, "image", "image/jpeg", w, h, None,
+                 encode_jpeg(img, quality=80))
             )
+        return rows
 
-    media = ids.mapInPandas(synth, schema=MEDIA_SCHEMA)
-    hashes = image_dhash(media, use_fake=False).cache()
+    hashes = image_dhash(media_from_docs(ids, blobs)).cache()
     hashes.count()
     return image_near_dup_pairs(hashes, "media_id", max_hamming=10)
 
