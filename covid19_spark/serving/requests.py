@@ -5,23 +5,20 @@ Reference: ``UserRequestConsumer.listenForUserRequests``
 Summary → full-scan summary, Today/Yesterday → per-date summary (+ chart),
 else per-state block assembled from six store lookups.
 
-Spark shape: each branch is a handful of batch queries against the
-materialized serving tables (``serving.stores.StoreReader``) plus the golden
-format functions — the Kafka request/response round-trip is transport, not
-engine (SURVEY §3.2: "capability to preserve = the queries"). Chart bytes
-come from the visualizations table when present (S7 produces them).
+Spark shape: each branch is a handful of lookups in the driver-side
+snapshots of the materialized serving tables (``serving.stores.StoreReader``;
+a warm request runs no Spark job) plus the golden format functions — the
+Kafka request/response round-trip is transport, not engine (SURVEY §3.2:
+"capability to preserve = the queries"). Chart bytes come from the
+visualizations table when present (S7 produces them).
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import json
-from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from covid19_spark.serving import format as fmt
@@ -36,38 +33,6 @@ USER_REQUEST_SCHEMA = T.StructType(
 )
 
 
-def _one_shot_sections(frames: dict[str, DataFrame]) -> dict[str, list[dict]]:
-    """Collect several small store lookups with ONE ``collect``.
-
-    Each lookup is tagged and serialized to a JSON payload column, the
-    frames union into one plan, and a single ``collect`` fans the rows back
-    out per section. The per-state request path batches its six store
-    lookups this way — one driver round-trip instead of six sequential
-    collects (the reference pays six RocksDB point reads; a Spark job each
-    is the wrong currency for serving-path latency).
-
-    On warm store handles the union runs as one Spark job: every section is
-    a filtered scan, with no shuffle. The 14-day as-of probe therefore joins
-    the union unreduced (at most 14 rows) and the caller picks its latest
-    row on the driver.
-
-    NULL fields are dropped by ``to_json`` — consumers read payload dicts
-    with ``.get``; the serving tables carry no legitimately-NULL columns.
-    """
-    tagged = [
-        df.select(
-            F.lit(name).alias("__section"),
-            F.to_json(F.struct(*df.columns)).alias("__payload"),
-        )
-        for name, df in frames.items()
-    ]
-    union = reduce(lambda a, b: a.unionByName(b), tagged)
-    out: dict[str, list[dict]] = {name: [] for name in frames}
-    for r in union.collect():
-        out[r["__section"]].append(json.loads(r["__payload"]))
-    return out
-
-
 def _delta_row_to_dict(r) -> dict:
     return {
         "state": r["state"],
@@ -80,15 +45,13 @@ def _delta_row_to_dict(r) -> dict:
     }
 
 
-def _sorted_summary_rows(rows, value_col: str) -> list[dict]:
+def _sorted_summary_rows(rows: list[dict], value_col: str) -> list[dict]:
     """Summary-table rows by ``value_col`` descending (NULLs last, as Spark's
-    descending ``orderBy``), ties by state name. Sorted on the driver: a
-    reply holds one row per state, and a Spark ``orderBy`` would add a
-    range-partition sampling job and leave the order of ties to the shuffle.
-    """
-    dicts = [r.asDict() for r in rows]
-    dicts.sort(key=lambda r: (r[value_col] is None, -(r[value_col] or 0), str(r["state"])))
-    return [_delta_row_to_dict(r) for r in dicts]
+    descending ``orderBy``), ties by state name."""
+    rows = sorted(
+        rows, key=lambda r: (r.get(value_col) is None, -(r.get(value_col) or 0), str(r["state"]))
+    )
+    return [_delta_row_to_dict(r) for r in rows]
 
 
 def handle_user_request(
@@ -103,46 +66,33 @@ def handle_user_request(
     alert text (photo attachment is the caller's concern).
     """
     if state.lower() == "summary":
-        rows = _sorted_summary_rows(reader._t("statewise_delta").collect(), "confirmed")
+        rows = _sorted_summary_rows(reader.rows("statewise_delta"), "confirmed")
         return fmt.build_state_summary_alert_text(rows, last_updated, daily=False)
 
     if state.lower() in ("today", "yesterday"):
         date = today if state.lower() == "today" else today - dt.timedelta(days=1)
-        rows = _sorted_summary_rows(
-            reader.daily_count_for(date=date).collect(), "sum_delta_confirmed"
-        )
+        rows = _sorted_summary_rows(reader.daily_count_for(date=date), "sum_delta_confirmed")
         return fmt.build_state_summary_alert_text(rows, last_updated, daily=True)
 
     # per-state block: six store lookups -> one summary block
     # (reference: delta, daily, news source, 14d test data, yesterday's
     # doubling rate, district dailies — UserRequestConsumer.java:108-128).
-    # All six collect in one batched union (_one_shot_sections).
-    yesterday = today - dt.timedelta(days=1)
-    sections = _one_shot_sections(
-        {
-            "delta": reader.delta_stats_for_state(state),
-            "daily": reader.daily_count_for(date=today, state=state),
-            "test": reader.test_data_within_14d(state, today),
-            "rate": reader.doubling_rate_for(state, yesterday),
-            "districts": reader.district_stats_for(state, daily=True),
-            "news": reader.news_source_for(state),
-        }
-    )
-    if not sections["delta"]:
+    delta_rows = reader.delta_stats_for_state(state)
+    if not delta_rows:
         return f"No data for {state}"
-    delta = _delta_row_to_dict(sections["delta"][0])
+    delta = _delta_row_to_dict(delta_rows[0])
+    daily_rows = reader.daily_count_for(date=today, state=state)
     daily = (
-        _delta_row_to_dict(sections["daily"][0])
-        if sections["daily"]
+        _delta_row_to_dict(daily_rows[0])
+        if daily_rows
         else {"state": state, "delta_confirmed": 0, "delta_recovered": 0, "delta_deaths": 0}
     )
     testing: dict[str, dict] = {}
-    if sections["test"]:
-        # latest_within_lookback's rule: the newest date wins, ties arbitrary
-        latest = max(sections["test"], key=lambda r: r["date"])
+    latest = reader.latest_test_data_within_14d(state, today)
+    if latest is not None:
         testing[state] = dict(latest)
         testing[state].setdefault("updatedon", str(latest.get("date")))
-    rate_rows = sections["rate"]
+    rate_rows = reader.doubling_rate_for(state, today - dt.timedelta(days=1))
     rates = {
         state: (
             str(int(rate_rows[0]["doubling_days"]))
@@ -151,7 +101,7 @@ def handle_user_request(
         )
     }
     districts = sorted(
-        sections["districts"],
+        reader.district_stats_for(state, daily=True),
         key=lambda d: (-(d.get("sum_delta_confirmed") or 0), d.get("district") or ""),
     )
     district_dicts = [
@@ -166,7 +116,7 @@ def handle_user_request(
     text = fmt.build_summary_alert_block(
         [delta], [daily], testing, rates, {state: district_dicts}
     )
-    news = sections["news"]
+    news = reader.news_source_for(state)
     if state.lower() != "total" and news:
         text += f"\nSource: {news[0]['url']}"
     return text

@@ -5,30 +5,38 @@ Reference: the telegram-bot materializes 11 KTables into RocksDB stores
 ``StateStoresManager`` (``StateStoresManager.java:109-265``). In Spark the
 queryable-state role maps to materialized tables (SURVEY §1.1 #3, T7):
 streaming queries (or batch refresh jobs) maintain parquet/Delta snapshot
-tables; the serving layer issues ordinary batch reads.
+tables; the serving layer answers from driver-side snapshots of them.
 
-``Materializer`` builds every table from the raw feeds in one pass;
-``StoreReader`` is the StateStoresManager-equivalent API. Point lookups push
-an equality predicate into the parquet scan; the 14-day as-of probe loop
-(``StateStoresManager.java:212-229``) becomes one range filter, whose at
-most 14 rows a request reduces to the latest on the driver.
+``Materializer`` builds every table from the raw feeds in one pass, each
+written into a scratch directory and renamed into place
+(``sources.scratch``), so a failed refresh leaves the previous table served.
+``StoreReader`` is the StateStoresManager-equivalent API. A lookup filters a
+driver-side Arrow snapshot of the table (``StoreReader.rows``) — the
+reference answers with RocksDB point reads, and a Spark job per lookup is
+the wrong unit for tables this small (39 ``statewise_delta`` rows, about
+91k ``districtwise_daily`` rows at reference scale). The 14-day as-of probe
+loop (``StateStoresManager.java:212-229``) is one pick over the state's rows.
 
-Each lookup starts from the table's resolved parquet handle
-(``sources.tables.read_parquet_handle``, the memo ``load_table`` also uses),
-not a fresh ``spark.read.parquet``, which lists the directory and runs a
-footer/schema-inference job on every call. The handle is re-resolved
-whenever the ``os.stat`` stamp of the table directory changes. Both writers
-of these tables change it — ``Materializer._write`` recreates the
-directory, and ``upsert_batch_partitioned`` renames the rewritten bucket
-directories into its root — and no writer appends files into an existing
-table, so a reply never reads a stale file listing.
+A snapshot is taken from the table's resolved parquet handle
+(``sources.tables.read_parquet_handle``, the memo ``load_table`` also uses)
+and retaken only when that memo returns a different handle, which it does
+exactly when the ``os.stat`` stamp of the table directory changes. Both
+writers of these tables change it — ``Materializer._write`` renames a new
+directory into place, and ``upsert_batch_partitioned`` renames the
+rewritten bucket directories into its root — and no writer appends files
+into an existing table, so a reply never reads a stale snapshot.
 """
 
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import os
+import shutil
+import threading
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -37,6 +45,7 @@ from covid19_spark.operators.asof import latest_within_lookback
 from covid19_spark.operators.delta import running_delta
 from covid19_spark.operators.rates import doubling_rate
 from covid19_spark.operators.rollup import daily_rollup
+from covid19_spark.sources.scratch import build_scratch_path, replace_dir
 from covid19_spark.sources.tables import read_parquet_handle
 
 TABLES = (
@@ -65,7 +74,14 @@ class Materializer:
         self.out_dir = out_dir
 
     def _write(self, df: DataFrame, name: str) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(self.out_dir, name))
+        path = os.path.join(self.out_dir, name)
+        tmp = build_scratch_path(path)
+        try:
+            df.write.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        replace_dir(tmp, path)
 
     def refresh_statewise(self, snapshots: DataFrame, ts_col: str = "last_updated") -> None:
         """snapshots: typed statewise rows (cast_statewise output) →
@@ -125,68 +141,78 @@ class Materializer:
 
 
 class StoreReader:
-    """StateStoresManager-equivalent query API over the materialized dir."""
+    """StateStoresManager-equivalent query API over the materialized dir.
+    Lookups return lists of dicts; a NULL field is left out of its dict."""
 
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.out_dir = out_dir
-        # Open every table already materialized, as the reference's serving
-        # tier opens its stores before answering: the first requests pay no
-        # resolution jobs, and concurrent clients do not race to resolve the
-        # handles they share. A table that is missing or still being
-        # written is resolved on first use instead.
+        # name -> (the handle it was taken from, its Arrow snapshot)
+        self._snapshots: dict[str, tuple[DataFrame, pa.Table]] = {}
+        self._lock = threading.Lock()
+        # Snapshot every table already materialized, as the reference's
+        # serving tier opens its stores before answering: the first
+        # requests run no Spark job. A table that is missing or still being
+        # written is read on first use instead.
         for name in TABLES:
             if os.path.isdir(os.path.join(out_dir, name)):
                 with contextlib.suppress(AnalysisException):
-                    self._t(name)
+                    self._snapshot(name)
 
     def _t(self, name: str) -> DataFrame:
         return read_parquet_handle(self.spark, os.path.join(self.out_dir, name))
 
+    def _snapshot(self, name: str) -> pa.Table:
+        # the serving clients share the reader; the handle is resolved
+        # under the lock too, so a client holding an older stamp's handle
+        # never retakes over a newer snapshot
+        with self._lock:
+            handle = self._t(name)
+            held = self._snapshots.get(name)
+            if held is None or held[0] is not handle:
+                held = self._snapshots[name] = (handle, handle.toArrow())
+            return held[1]
+
+    def rows(self, name: str, **equals) -> list[dict]:
+        """The rows of table ``name`` whose columns equal ``equals`` (a None
+        value leaves its column unfiltered), NULL fields dropped."""
+        table = self._snapshot(name)
+        for col, value in equals.items():
+            if value is not None:
+                table = table.filter(pc.equal(table[col], value))
+        return [{k: v for k, v in r.items() if v is not None} for r in table.to_pylist()]
+
     # StateStoresManager.java:172-178
-    def delta_stats_for_state(self, state: str) -> DataFrame:
-        return self._t("statewise_delta").filter(F.col("state") == state)
+    def delta_stats_for_state(self, state: str) -> list[dict]:
+        return self.rows("statewise_delta", state=state)
 
     # StateStoresManager.java:192-206
-    def daily_count_for(self, date=None, state: str | None = None) -> DataFrame:
-        df = self._t("statewise_daily")
-        if date is not None:
-            df = df.filter(F.col("date") == F.lit(date))
-        if state is not None:
-            df = df.filter(F.col("state") == state)
-        return df
+    def daily_count_for(self, date=None, state: str | None = None) -> list[dict]:
+        return self.rows("statewise_daily", date=date, state=state)
 
     # StateStoresManager.java:184-186
-    def doubling_rate_for(self, state: str, date) -> DataFrame:
-        return self._t("doubling_rate").filter(
-            (F.col("state") == state) & (F.col("date") == F.lit(date))
-        )
+    def doubling_rate_for(self, state: str, date) -> list[dict]:
+        return self.rows("doubling_rate", state=state, date=date)
 
     # StateStoresManager.java:180-182
-    def news_source_for(self, state: str) -> DataFrame:
-        return self._t("news_sources").filter(F.col("state") == state)
+    def news_source_for(self, state: str) -> list[dict]:
+        return self.rows("news_sources", state=state)
 
     # StateStoresManager.java:129-155
-    def district_stats_for(self, state: str, daily: bool = False) -> DataFrame:
-        name = "districtwise_daily" if daily else "districtwise_delta"
-        return self._t(name).filter(F.col("state") == state)
+    def district_stats_for(self, state: str, daily: bool = False) -> list[dict]:
+        return self.rows("districtwise_daily" if daily else "districtwise_delta", state=state)
 
-    # StateStoresManager.java:212-229 — the 14-probe loop as one query
-    def test_data_within_14d(self, state: str, today) -> DataFrame:
-        """The state's test-data rows of the 14 days up to ``today``."""
-        df = self._t("statewise_test_data").filter(F.col("state") == state)
-        return df.filter(
-            F.col("date").between(F.date_sub(F.lit(today), 13), F.lit(today))
-        )
-
-    def latest_test_data_within_14d(self, state: str, today) -> DataFrame:
-        return latest_within_lookback(
-            self.test_data_within_14d(state, today), ["state"], "date"
-        )
+    # StateStoresManager.java:212-229 — the 14-probe loop as one pick
+    def latest_test_data_within_14d(self, state: str, today: dt.date) -> dict | None:
+        """The state's test-data row with the newest ``date`` in
+        [today−13, today] (ties arbitrary), or None."""
+        since = today - dt.timedelta(days=13)
+        found = [
+            r for r in self.rows("statewise_test_data", state=state)
+            if "date" in r and since <= r["date"] <= today
+        ]
+        return max(found, key=lambda r: r["date"], default=None)
 
     # StateStoresManager.java:159-170
-    def zones_for(self, state: str) -> DataFrame:
-        return self._t("zones").filter(F.col("state") == state)
-
-    def user_prefs(self) -> DataFrame:
-        return self._t("user_prefs")
+    def zones_for(self, state: str) -> list[dict]:
+        return self.rows("zones", state=state)

@@ -19,9 +19,10 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from covid19_spark.operators.asof import latest_within_lookback
 from covid19_spark.session import partitions_for_bytes
 from covid19_spark.sources.scratch import build_scratch_path, publish_if_absent
 
@@ -63,12 +64,7 @@ def compact_batch_to_table(
     physical incremental sink is :func:`upsert_batch_partitioned`, which
     applies it per touched bucket instead of over the whole table."""
     merged = batch if existing is None else existing.unionByName(batch)
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col).desc())
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return latest_within_lookback(merged, key_cols, ts_col)
 
 
 def _state_exists(spark, table_path: str) -> bool:

@@ -124,3 +124,68 @@ def test_summary_ties_ordered_by_state_name(spark):
         assert today[today.index("Ker  |      7|      1|     0") + 1].startswith("Delhi")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_state_request_null_fields(spark):
+    """NULL store fields read as the reference's defaults: a NULL negative
+    count prints N/A, and a NULL district sum or doubling rate counts as 0."""
+    d = tempfile.mkdtemp(prefix="c19req_null_")
+    try:
+        m = Materializer(spark, d)
+        m.refresh_statewise(
+            spark.createDataFrame(
+                [
+                    ("Goa", ts("2020-04-08T10:00:00"), 10, 1, 0),
+                    ("Goa", ts("2020-04-09T10:00:00"), 15, 2, 1),
+                ],
+                ["state", "last_updated", "confirmed", "recovered", "deaths"],
+            )
+        )
+        m.refresh_dimension(
+            spark.createDataFrame(
+                [
+                    ("Goa", "North Goa", dt.date(2020, 4, 9), 5, None, 1, 12),
+                    ("Goa", "South Goa", dt.date(2020, 4, 9), None, 2, None, 3),
+                ],
+                "state string, district string, date date, sum_delta_confirmed bigint, "
+                "sum_delta_recovered bigint, sum_delta_deceased bigint, last_confirmed bigint",
+            ),
+            "districtwise_daily",
+        )
+        m.refresh_dimension(
+            spark.createDataFrame(
+                [("Goa", dt.date(2020, 4, 9), "400", "15", None)],
+                "state string, date date, totaltested string, positive string, negative string",
+            ),
+            "statewise_test_data",
+        )
+        m.refresh_dimension(
+            spark.createDataFrame([("Goa", dt.date(2020, 4, 8), None)],
+                                  "state string, date date, doubling_days double"),
+            "doubling_rate",
+        )
+        m.refresh_dimension(
+            spark.createDataFrame([], "state string, url string"), "news_sources"
+        )
+        out = handle_user_request(StoreReader(spark, d), "Goa", dt.date(2020, 4, 9))
+        assert out == (
+            "\n<b>Goa</b>\n<pre>\n"
+            "Total cases  : (↑5) 15\n"
+            "Active       : (↑3) 12\n"
+            "Recovered    : (↑1) 2\n"
+            "Deaths       : (↑1) 1\n"
+            "Doubling rate: 0 days\n"
+            "</pre>\n<pre>"
+            "Total tested   : (↑?) 400\n"
+            "Positive       : (↑?) 15\n"
+            "Negative       : N/A\n"
+            "Unconfirmed    : N/A\n"
+            "Positivity rate: 3.75%\n"
+            "Last updated   : 2020-04-09\n"
+            "</pre>\n"
+            "<b>District-wise breakup (today)</b>\n"
+            "5 new cases, 1 death in North Goa\n"
+            "2 recoveries in South Goa\n"
+        )
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

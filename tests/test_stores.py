@@ -3,10 +3,12 @@
 import datetime as dt
 import os
 import shutil
+import sys
 import tempfile
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from covid19_spark import measure
@@ -43,17 +45,17 @@ def test_materialize_and_query_statewise(store_env):
     r = StoreReader(spark, d)
 
     # point lookup: latest delta per state
-    delta = r.delta_stats_for_state("Assam").collect()
+    delta = r.delta_stats_for_state("Assam")
     assert len(delta) == 1
-    assert delta[0].confirmed == 28 and delta[0].delta_confirmed == 1
+    assert delta[0]["confirmed"] == 28 and delta[0]["delta_confirmed"] == 1
 
     # daily count per (date, state)
-    daily = r.daily_count_for(date=dt.date(2020, 4, 8), state="Assam").collect()
-    assert daily[0].sum_delta_confirmed == 27 and daily[0].last_confirmed == 27
+    daily = r.daily_count_for(date=dt.date(2020, 4, 8), state="Assam")
+    assert daily[0]["sum_delta_confirmed"] == 27 and daily[0]["last_confirmed"] == 27
 
     # doubling rate materialized per (date, state)
-    dr = r.doubling_rate_for("Assam", dt.date(2020, 4, 9)).collect()
-    assert dr[0].doubling_days == 20  # round(70/(100*1/28))
+    dr = r.doubling_rate_for("Assam", dt.date(2020, 4, 9))
+    assert dr[0]["doubling_days"] == 20  # round(70/(100*1/28))
 
 
 def test_materialize_districts_and_dimensions(store_env):
@@ -75,11 +77,11 @@ def test_materialize_districts_and_dimensions(store_env):
     m.refresh_dimension(zones, "zones")
 
     r = StoreReader(spark, d)
-    dd = {x.district: x for x in r.district_stats_for("Maharashtra").collect()}
-    assert dd["Mumbai"].confirmed == 40 and dd["Mumbai"].delta_confirmed == 12
-    assert dd["Nagpur"].confirmed == 17
+    dd = {x["district"]: x for x in r.district_stats_for("Maharashtra")}
+    assert dd["Mumbai"]["confirmed"] == 40 and dd["Mumbai"]["delta_confirmed"] == 12
+    assert dd["Nagpur"]["confirmed"] == 17
 
-    z = {x.district: x.zone for x in r.zones_for("Maharashtra").collect()}
+    z = {x["district"]: x["zone"] for x in r.zones_for("Maharashtra")}
     assert z == {"Mumbai": "RED", "Nagpur": "ORANGE"}
 
     with pytest.raises(KeyError):
@@ -99,8 +101,8 @@ def test_latest_test_data_within_14d(store_env):
     )
     Materializer(spark, d).refresh_dimension(test_rows, "statewise_test_data")
     r = StoreReader(spark, d)
-    out = r.latest_test_data_within_14d("Delhi", dt.date(2020, 4, 26)).collect()
-    assert len(out) == 1 and out[0].totaltested == 53166
+    out = r.latest_test_data_within_14d("Delhi", dt.date(2020, 4, 26))
+    assert out["totaltested"] == 53166
 
 
 def test_handle_memo_shared_across_threads(store_env):
@@ -139,6 +141,49 @@ def test_handle_memo_shared_across_threads(store_env):
     assert len(seen) == 1 + 2 * 5  # shared once; a and b at 5 stamps each
     live = [k[1] for k in tables._HANDLE_CACHE if k[1] in paths.values()]
     assert sorted(live) == sorted(paths.values())  # older stamps evicted
+
+
+def test_snapshot_retake_shared_across_threads(store_env):
+    """Six clients read one table while one of them re-stamps it now and
+    then: every read is right, and each stamp is snapshot at most once."""
+    spark, d = store_env
+    Materializer(spark, d).refresh_dimension(
+        spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"]),
+        "news_sources",
+    )
+    path = os.path.join(d, "news_sources")
+    r = StoreReader(spark, d)
+    j0 = measure.next_job_id(spark)
+    os.utime(path, ns=(1, 1))
+    r.rows("news_sources")
+    jobs_per_snapshot = measure.next_job_id(spark) - j0
+    restamps, errors = 5, []
+
+    def client(i: int) -> None:
+        try:
+            for k in range(50):
+                if i == 0 and k % 10 == 9:
+                    os.utime(path, ns=(k + 2, k + 2))
+                assert [x["url"] for x in r.news_source_for("Maharashtra")] == [
+                    "https://news.example/mh"
+                ]
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        j0 = measure.next_job_id(spark)
+        threads = [threading.Thread(target=client, args=(i,)) for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert measure.next_job_id(spark) - j0 <= restamps * jobs_per_snapshot
 
 
 def _snapshots(spark, mh_confirmed):
@@ -214,19 +259,45 @@ def test_table_created_after_failed_read_is_picked_up(store_env):
     spark, d = store_env
     r = StoreReader(spark, d)
     with pytest.raises(AnalysisException):
-        r.news_source_for("Maharashtra").collect()
+        r.news_source_for("Maharashtra")
     Materializer(spark, d).refresh_dimension(
         spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"]),
         "news_sources",
     )
-    assert [x.url for x in r.news_source_for("Maharashtra").collect()] == [
+    assert [x["url"] for x in r.news_source_for("Maharashtra")] == [
         "https://news.example/mh"
     ]
 
 
+def test_failed_refresh_keeps_previous_table(store_env):
+    """A refresh whose write job fails leaves the previous table in place:
+    the new table is written into a scratch dir and only then renamed in."""
+    spark, d = store_env
+    m = Materializer(spark, d)
+    m.refresh_dimension(
+        spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"]),
+        "news_sources",
+    )
+    r = StoreReader(spark, d)
+    # raise_error keyed on a row value: the optimizer cannot fold it, so it
+    # fires inside the write job
+    broken = spark.range(3).select(
+        F.lit("Maharashtra").alias("state"),
+        F.when(F.col("id") == 2, F.raise_error(F.lit("feed broke")))
+        .otherwise(F.lit("https://news.example/new"))
+        .alias("url"),
+    )
+    with pytest.raises(Exception, match="feed broke"):
+        m.refresh_dimension(broken, "news_sources")
+    assert os.listdir(d) == ["news_sources"]  # no scratch dir left behind
+    served = spark.read.parquet(os.path.join(d, "news_sources")).collect()
+    assert [x.url for x in served] == ["https://news.example/mh"]
+    assert [x["url"] for x in r.news_source_for("Maharashtra")] == ["https://news.example/mh"]
+
+
 def test_warm_reader_job_counts(store_env):
-    """Jobs per request: the six lookups of a state request collect as one
-    union of filtered scans (one job); Summary/Today one each."""
+    """A warm reader answers every request kind from its snapshots: no
+    Spark job."""
     spark, d = store_env
     _materialize_all(spark, d)
     r = StoreReader(spark, d)
@@ -236,7 +307,8 @@ def test_warm_reader_job_counts(store_env):
         handle_user_request(r, request, TODAY)
         return measure.next_job_id(spark) - j0
 
-    # the reader opened its tables: even the first requests are warm
-    assert jobs("Maharashtra") == 1
-    assert jobs("Summary") == 1
-    assert jobs("Today") == 1
+    # the reader took its snapshots when it opened: even the first requests are warm
+    assert jobs("Maharashtra") == 0
+    assert jobs("Summary") == 0
+    assert jobs("Today") == 0
+    assert jobs("Yesterday") == 0

@@ -7,12 +7,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from covid19_spark.plans.registry import QUERY_REGISTRY  # noqa: E402
 from covid19_spark.session import get_spark  # noqa: E402

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from covid19_spark.plans.registry import QUERY_REGISTRY  # noqa: E402
 from covid19_spark.session import get_spark  # noqa: E402
