@@ -45,11 +45,10 @@ from covid19_spark.operators.similarity import (
     ivfpq_search,
 )
 from covid19_spark.session import use_fast_committer
-from covid19_spark.sources.handles import invalidate_store
 from covid19_spark.sources.meta_io import (
     meta_matches, read_meta_rows, write_meta_table,
 )
-from covid19_spark.sources.scratch import compact_parquet_dir, ensure_store
+from covid19_spark.sources.scratch import ensure_store
 
 
 class IvfPqIndex(NamedTuple):
@@ -165,83 +164,6 @@ def write_ivfpq_index(
     return meta
 
 
-def append_ivfpq_index(
-    corpus_delta: DataFrame, path: str, return_count: bool = True
-) -> "int | None":
-    """Add new vectors to an EXISTING index without touching what's there —
-    the FAISS ``add()`` story at parquet granularity: the delta is encoded
-    with the index's OWN persisted quantizers (never refit — refitting
-    would silently shift every existing code's meaning) and appended into
-    the same list-partitioned layout. At 100 TB this is the daily-ingest
-    shape: the encode pass scans only the delta, and append mode writes
-    only the probed-by-nobody new files; existing list directories gain
-    files, they are never rewritten. Returns the number of rows appended
-    (``return_count=False`` skips that extra delta scan and returns None).
-
-    Caller contract: delta ids must be new (the index is id-keyed but
-    append does not dedup — run exact dedup upstream, the same contract
-    as the corpus itself). Quantizer drift is the refresh seam: when the
-    corpus distribution moves far enough that recall sags, rebuild with
-    ``write_ivfpq_index`` (overwrite) — the classic reindex tradeoff."""
-    from pyspark.sql import Observation
-
-    spark = corpus_delta.sparkSession
-    use_fast_committer(spark)
-    idx = read_ivfpq_index(spark, path)
-    meta = idx.meta
-    # the count for the return value is OBSERVED on the encode pass
-    # (CollectMetrics on the delta rows flowing into the append write)
-    # instead of a dedicated second scan of the delta
-    obs = None
-    if return_count:
-        obs = Observation()
-        corpus_delta = corpus_delta.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        )
-    (
-        ivfpq_encode(
-            corpus_delta, idx.centroids, idx.codebooks, meta["m"],
-            id_col=meta["id_col"], vec_col=meta["vec_col"],
-        )
-        .repartition("centroid_id")  # same fan-out control as the build
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/codes")
-    )
-    # append adds code files without touching meta, so the stamp-validated
-    # handle cache cannot see it — invalidate explicitly
-    invalidate_store(path)
-    return int(obs.get["n"]) if obs is not None else None
-
-
-def compact_ivfpq_index(
-    spark: SparkSession, path: str, file_threshold: int = 8
-) -> dict[str, bool]:
-    """Maintenance job for the appended IVF-PQ index — the
-    ``compact_inverted_index`` discipline applied to the codes store:
-    each ``append_ivfpq_index`` adds one parquet fragment per touched
-    list directory, and after enough micro-batches a probe's cost turns
-    file-listing/open bound (the FAISS segment-merge analogue).
-    ``scratch.compact_parquet_dir`` rewrites ``codes/`` into one file per
-    ``centroid_id``, deduplicating replayed-append rows on the index's id
-    column; the partitioning — and with it the probe's static partition
-    pruning — is preserved.  centroids/codebooks/meta
-    never fragment (rewritten wholesale on build).  Run between batches,
-    not concurrent with an append or serve (the Delta/Iceberg OPTIMIZE
-    maintenance-window contract).
-
-    Returns {store: compacted?} for observability."""
-    return {
-        "codes": compact_parquet_dir(
-            spark,
-            f"{path}/codes",
-            [read_meta_rows(f"{path}/meta")[0]["id_col"]],
-            partition_by="centroid_id",
-            file_threshold=file_threshold,
-        ),
-    }
-
-
 def read_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
     """Reopen a persisted index. The codes frame is a lazy parquet scan —
     nothing corpus-sized is materialized until a query prunes it.  The
@@ -320,86 +242,6 @@ def corpus_file_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     return f"{st.st_size}:{st.st_mtime_ns}"
 
 
-def make_ann_query_sink(
-    index_path: str,
-    corpus: "DataFrame | str",
-    results_path: str,
-    k: int = 10,
-    n_probes: int = 3,
-    shortlist: int = 50,
-    codes_filter: "str | None" = None,
-):
-    """foreachBatch sink serving a STREAM of query vectors against the
-    persisted index: each micro-batch is answered with ``ivfpq_index_topk``
-    (so per-batch file pruning applies — a batch probing 3 of 64k lists
-    opens 3 directories) and appended to ``results_path`` with its
-    ``batch_id``. The index is reopened per batch ON PURPOSE: meta/
-    centroids/codebooks are KB-sized reads, and a fresh codes scan is what
-    makes rows ingested by ``make_ann_ingest_sink`` between batches
-    immediately searchable — an index frame opened once outside the loop
-    would pin the file listing of the first batch.
-
-    ``corpus`` is the full-precision cold store for the exact rerank. Pass
-    a PATH (reopened per batch) whenever the cold store grows alongside
-    the index — a DataFrame pins its file listing at sink creation, so
-    freshly-ingested vectors would reach the ADC shortlist but silently
-    VANISH at the rerank's inner join. A DataFrame argument is only right
-    for a truly static corpus."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        idx = read_ivfpq_index(spark, index_path)
-        cold = spark.read.parquet(corpus) if isinstance(corpus, str) else corpus
-        (
-            ivfpq_index_topk(
-                idx, cold, batch_df, k=k, n_probes=n_probes,
-                shortlist=shortlist, codes_filter=codes_filter,
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append").parquet(results_path)
-        )
-
-    return sink
-
-
-def make_ann_ingest_sink(
-    index_path: str,
-    compact_every: int | None = 8,
-    file_threshold: int = 8,
-):
-    """foreachBatch sink streaming NEW vectors into the persisted index:
-    each micro-batch is encoded with the index's persisted quantizers and
-    appended (``append_ivfpq_index`` semantics — never refits, see its
-    contract note on upstream dedup). Exactly-once at the ingest level
-    comes from the stream's checkpoint: a replayed batch re-appends, so
-    pair with dedup_within_watermark upstream or idempotent ids when the
-    source can replay.
-
-    Auto-compaction (VERDICT r13 task #2, the ``make_index_ingest_sink``
-    discipline): after every ``compact_every``-th append the sink runs
-    ``compact_ivfpq_index`` itself — the fragment-count check is gated by
-    the cadence, the rewrite by the threshold — so a long-lived ingest
-    stream keeps ``codes/`` at ~one file per list directory without an
-    external maintenance job.  ``compact_every=None`` restores the manual
-    discipline."""
-
-    appends_seen = [0]  # driver-side state: foreachBatch runs on the driver
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.take(1):
-            append_ivfpq_index(batch_df, index_path, return_count=False)
-            appends_seen[0] += 1
-            if compact_every and appends_seen[0] % compact_every == 0:
-                compact_ivfpq_index(
-                    batch_df.sparkSession, index_path,
-                    file_threshold=file_threshold,
-                )
-
-    return sink
-
-
 def ivfpq_index_topk(
     index: IvfPqIndex,
     corpus: DataFrame,
@@ -424,10 +266,10 @@ def ivfpq_index_topk(
     warrant more probes (the standard filtered-ANN tradeoff).
 
     ``prune="static"`` (default) collects the batch's DISTINCT probed list
-    ids — at most ``n_centroids`` ints however large the batch, the same
-    sanctioned contract-small class as dedup_lsh_stream's bucket keys — and
-    filters codes with ``isin`` so the parquet scan carries a static
-    ``PartitionFilters`` and untouched list directories are never opened.
+    ids — at most ``n_centroids`` ints however large the batch, a
+    contract-small driver list — and filters codes with ``isin`` so the
+    parquet scan carries a static ``PartitionFilters`` and untouched list
+    directories are never opened.
     ``prune="none"`` leaves pruning to the runtime join (full scan; useful
     when the batch probes nearly every list and the filter buys nothing).
 

@@ -1,6 +1,6 @@
 """Corpus-curation operators for training-data pipelines: deterministic hash
-sampling, stratified quotas, domain-mixture resampling, PII redaction and
-benchmark decontamination.
+sampling, stratified quotas, PII redaction and benchmark contamination
+probes.
 
 These are the selection/cleaning stages that sit between raw crawl and
 tokenizer in an LLM data pipeline (reference analogue: the per-record clean /
@@ -11,8 +11,6 @@ Scale design (100 TB):
 - every sampling decision is a *deterministic pure function of the row's id*
   (md5 prefix), so sampling is map-only — no shuffle, no RNG state, rerunnable,
   and the same rows are kept on every engine and every run;
-- domain-mixture resampling needs one tiny aggregate (|domains| rows) that is
-  broadcast back — the corpus-side pass stays map-only;
 - PII redaction is a chain of JVM `regexp_replace` calls — whole-stage
   codegen, embarrassingly parallel;
 - decontamination broadcasts the *benchmark* shingle set (eval suites are
@@ -23,7 +21,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import math
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -133,48 +131,6 @@ def stratified_quota_sample(
     )
 
 
-def weighted_domain_mix(
-    df: DataFrame,
-    domain_col: str,
-    id_col: str,
-    weights: Mapping[str, float],
-    target_rows: int,
-) -> DataFrame:
-    """Resample toward a target domain mixture: domain ``d`` keeps
-    ``min(1, share_d * target_rows / |d|)`` of its rows, where ``share_d`` is
-    ``weights[d]`` normalized over the observed domains.
-
-    Plan: one tiny per-domain count aggregate (|domains| rows) joined back by
-    broadcast; the corpus-side keep decision is the same map-only md5 compare
-    as :func:`hash_sample`, with the threshold computed per-domain via
-    ``printf('%04x', ...)``. Domains absent from ``weights`` get weight 0
-    (dropped). No corpus shuffle.
-    """
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(k, float(v)) for k, v in weights.items()], f"{domain_col} string, weight double"
-    )
-    total_w = sum(float(v) for v in weights.values())
-    counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("n_domain"))
-    rates = (
-        counts.join(F.broadcast(wdf), domain_col, "left")
-        .withColumn("weight", F.coalesce(F.col("weight"), F.lit(0.0)))
-        .withColumn(
-            "keep_rate",
-            F.least(
-                F.lit(1.0),
-                F.col("weight") / F.lit(total_w) * F.lit(float(target_rows)) / F.col("n_domain"),
-            ),
-        )
-        .withColumn("thr_bucket", F.floor(F.col("keep_rate") * F.lit(_BUCKETS)).cast("long"))
-    )
-    joined = df.join(F.broadcast(rates), domain_col)
-    keep = (F.col("thr_bucket") >= F.lit(_BUCKETS)) | (
-        md5_uniform(F.col(id_col)) < F.format_string(f"%0{HASH_CHARS}x", F.col("thr_bucket"))
-    )
-    return joined.filter(keep).drop("weight", "keep_rate", "thr_bucket", "n_domain")
-
-
 # ---------------------------------------------------------------------------
 # PII redaction
 # ---------------------------------------------------------------------------
@@ -241,26 +197,6 @@ def contamination_hits(
         .groupBy(id_col)
         .agg(F.count_distinct(F.col("shingle")).cast("long").alias("bench_hits"))
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 13,
-    max_hits: int = 0,
-) -> DataFrame:
-    """Drop corpus documents sharing more than ``max_hits`` distinct word
-    ``n``-grams with a benchmark corpus (n=13 is the common eval-overlap
-    window). Returns the clean corpus.
-
-    The contaminated-id set is tiny → broadcast anti-join back onto the
-    corpus keeps the final pass shuffle-free too.
-    """
-    hits = contamination_hits(corpus, benchmark_shingles(bench, text_col, n), id_col, text_col, n)
-    bad = hits.filter(F.col("bench_hits") > F.lit(max_hits)).select(id_col)
-    return corpus.join(F.broadcast(bad), id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -628,57 +564,6 @@ def corpus_shard(id_col: Column, n_shards: int, salt: str = "sh") -> Column:
         raise ValueError(f"n_shards must divide 4096 (got {n_shards})")
     hex3 = F.conv(F.substring(shuffle_key(id_col, salt), 1, 3), 16, 10)
     return F.floor(hex3.cast("long") / (4096 // n_shards)).cast("int")
-
-
-def corpus_shuffle(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = 64,
-    salt: str = "sh",
-) -> DataFrame:
-    """Global order-randomizing shuffle + shard assignment — the LAST stage
-    of a training-data pipeline (training wants documents in random order,
-    sharded into same-sized files; GPT/LLaMA-style data loaders consume
-    exactly this layout). Adds ``shuffle_key`` (md5 of the salted id) and
-    ``shard`` columns, clusters rows so each shard is contiguous, and
-    key-sorts within shards — every property deterministic in (ids, salt):
-    re-running produces the identical layout, and a different salt is a
-    full epoch reshuffle.
-
-    Scale shape: ONE hash exchange on the shard id + an in-partition sort
-    — the same shuffle any writer would pay; no global sort barrier (a
-    ``repartitionByRange`` would add a sampling pass and make boundaries
-    data-dependent, breaking cross-engine determinism). At 100 TB with
-    n_shards sized to ~1 GB files, the write is
-    ``write_corpus_shards`` = this + ``partitionBy("shard")`` +
-    ``maxRecordsPerFile`` as the straggler backstop.
-
-    Reference behavior anchor: beyond-reference LLM-pipeline mandate (the
-    reference's Kafka topology has no batch corpus writer)."""
-    out = df.withColumn("shuffle_key", shuffle_key(F.col(id_col), salt)).withColumn(
-        "shard", corpus_shard(F.col(id_col), n_shards, salt)
-    )
-    return out.repartition(n_shards, "shard").sortWithinPartitions(
-        "shard", "shuffle_key", id_col
-    )
-
-
-def write_corpus_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 64,
-    salt: str = "sh",
-    records_per_file: int | None = None,
-) -> None:
-    """Materialize the shuffled corpus as ``path/shard=K/*.parquet``:
-    deterministic membership (see ``corpus_shard``), key-sorted rows within
-    each file, ``maxRecordsPerFile`` bounding any straggler shard. Two runs
-    over the same rows produce byte-identical row orders per shard."""
-    w = corpus_shuffle(df, id_col, n_shards, salt).write.mode("overwrite")
-    if records_per_file:
-        w = w.option("maxRecordsPerFile", int(records_per_file))
-    w.partitionBy("shard").parquet(path)
 
 
 def md5_u01_exact(id_col: Column) -> Column:

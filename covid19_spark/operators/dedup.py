@@ -22,14 +22,13 @@ no Python UDFs anywhere.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from covid19_spark.operators.text import word_shingles
-from covid19_spark.sources.scratch import compact_parquet_dir
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -263,7 +262,6 @@ def minhash_signatures_from_shingles(
     id_col: str,
     shingle_col: str = "__sh",
     num_hashes: int = 32,
-    repartition_input: bool = False,
 ) -> DataFrame:
     """id → array of ``num_hashes`` minhash values, from a precomputed
     shingle-array frame (``shingle_frame``).
@@ -276,25 +274,18 @@ def minhash_signatures_from_shingles(
     once per shingle, not relying on codegen subexpression elimination).
     Map-side combine keeps the shuffle at |docs|·k longs.
 
-    The input is NOT repartitioned by default: the documented contract is
-    that it comes from ``shingle_frame``, which already hash-partitions by
+    The input is NOT repartitioned: the documented contract is that it
+    comes from ``shingle_frame``, which already hash-partitions by
     ``id_col`` before the (usually persisted) shingle expression — and a
     second ``repartition`` here cannot be collapsed with that one across a
     persist() boundary, so every consumer of the cache would pay a full
     extra Exchange of the heavy shingle arrays (measured: dedup_pipeline_e2e
-    7.5 s → 23.8 s in the r04 driver bench). Pass
-    ``repartition_input=True`` only when the shingle frame arrives with
-    unknown partitioning (e.g. read back from parquet) AND is skew-prone or
-    pinned to too few scan partitions.
+    7.5 s → 23.8 s in the r04 driver bench).
 
     Docs with an empty shingle array (< n tokens) get no signature row —
     identical to the direct-from-text path (explode drops empty arrays).
     """
-    sh = sh_df
-    if repartition_input:
-        n_parts = sh_df.sparkSession.sparkContext.defaultParallelism
-        sh = sh_df.repartition(n_parts, id_col)
-    sh = sh.select(F.col(id_col), F.explode(F.col(shingle_col)).alias("sh"))
+    sh = sh_df.select(F.col(id_col), F.explode(F.col(shingle_col)).alias("sh"))
     hashed = sh.select(id_col, F.xxhash64(F.col("sh")).alias("h0"))
     # SQL-text construction (one parse per agg instead of ~4 py4j
     # round-trips each — see similarity._E): same min(xxhash64(h0, i))
@@ -327,9 +318,9 @@ def band_buckets(
 ) -> DataFrame:
     """Banded LSH bucket keys for a signature frame: (id, band, bucket) —
     one row per band, ``bucket = xxhash64`` of the band's signature slice.
-    Map-only; the shared candidate-keying step of both the batch self-join
-    (``lsh_candidate_pairs``) and the streaming history probe
-    (``streaming/dedup_lsh_stream``)."""
+    Map-only; the shared candidate-keying step of the batch self-join
+    (``lsh_candidate_pairs``) and the incremental screen
+    (``incremental_dedup_against_corpus``)."""
     rows_per_band = num_hashes // bands
     # SQL-text construction (one parse instead of ~8 py4j round-trips per
     # band struct): same per-band xxhash64 over the same element_at slots
@@ -572,75 +563,6 @@ def simhash_candidate_pairs(
     )
 
 
-def lsh_verified_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    materialize: bool = False,
-) -> DataFrame:
-    """MinHash-LSH discovery → exact-Jaccard verification: the shared
-    pre-clustering stage of ``lsh_dedup_pipeline``, exposed so its plan can
-    be audited end-to-end (the pipeline's own plan is truncated by the
-    connected-components checkpoints).
-
-    ``materialize=True`` evaluates the pairs eagerly (localCheckpoint) and
-    releases the internal shingle/signature caches — use it when calling
-    repeatedly in one session; the lazy default keeps the caches alive
-    until the result is consumed (a lazy frame cannot outlive what it
-    reads).
-
-    One shingle pass: ``shingle_frame`` is persisted and feeds BOTH the
-    signature derivation and the two verify-join sides, so the plan contains
-    zero uncached shingle computations — every shingle expression sits under
-    an ``InMemoryTableScan`` (pinned by ``test_plans.py``).
-
-    Output: verified pairs ``(doc_a, doc_b, jaccard)`` with jaccard ≥
-    ``threshold``.
-    """
-    verified, caches = _lsh_verified_pairs_with_handle(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket
-    )
-    if materialize:
-        verified = verified.localCheckpoint(eager=True)
-        for c in caches:
-            c.unpersist()
-    return verified
-
-
-def lsh_verified_pairs_releasable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-) -> "tuple[DataFrame, Callable[[], None]]":
-    """Lazy ``lsh_verified_pairs`` WITH a cache-release handle: returns
-    ``(pairs, release)`` where ``release()`` unpersists the internal
-    shingle/signature caches. The plain lazy API keeps those caches alive
-    with no public handle (a lazy result cannot outlive what it reads), so
-    repeated lazy calls in one session accumulate unreleasable cached
-    frames (r05 advisory). Call ``release()`` after the pairs frame has
-    been consumed (collected/written) — consuming it afterwards recomputes
-    from scratch, still correct but paying the shingle pass again."""
-    verified, caches = _lsh_verified_pairs_with_handle(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket
-    )
-
-    def release() -> None:
-        for c in caches:
-            c.unpersist()
-
-    return verified, release
-
-
 def _lsh_verified_pairs_with_handle(
     df: DataFrame,
     id_col: str,
@@ -652,8 +574,16 @@ def _lsh_verified_pairs_with_handle(
     max_bucket: int | None = 10_000,
     dropped_report: list | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """(verified pairs, persisted-frame handles) — the handles let a caller
-    that evaluates the pairs eagerly unpersist the caches."""
+    """MinHash-LSH discovery → exact-Jaccard verification, the pre-clustering
+    stage of ``lsh_dedup_pipeline``: (verified pairs ``(doc_a, doc_b,
+    jaccard)`` with jaccard ≥ ``threshold``, persisted-frame handles) — the
+    handles let a caller that evaluates the pairs eagerly unpersist the
+    caches.
+
+    One shingle pass: ``shingle_frame`` is persisted and feeds BOTH the
+    signature derivation and the two verify-join sides, so the plan contains
+    zero uncached shingle computations — every shingle expression sits under
+    an ``InMemoryTableScan`` (pinned by ``test_plans.py``)."""
     sh = shingle_frame(df, id_col, text_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -756,32 +686,70 @@ def lsh_dedup_pipeline(
     )
 
 
-def _screen_batch_against_index(
+def incremental_dedup_against_corpus(
+    corpus: DataFrame,
     batch: DataFrame,
-    c_digests: DataFrame,  # (__th)
-    c_buckets: DataFrame,  # (__cid, band, bucket)
-    c_shingles: DataFrame,  # (__cid, __csh)
     id_col: str,
     text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    threshold: float,
-    max_bucket: int | None,
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+    threshold: float = 0.5,
+    max_bucket: int | None = 10_000,
     containment_threshold: float | None = None,
+    materialize: bool = False,
 ) -> DataFrame:
-    """Shared core of the incremental screen: probe a new batch against a
-    corpus index given as three frames (digest set, bucket index, shingle
-    store) — inline-derived by ``incremental_dedup_against_corpus``, loaded
-    from parquet by ``incremental_dedup_against_index``. Returns
-    ``(screen result, [internal persisted frames])`` so the public wrappers
-    can release the caches when asked to materialize.
+    """Screen a NEW batch of documents against an EXISTING deduplicated
+    corpus without ever pairing corpus↔corpus or batch↔batch rows — the
+    cost is proportional to the batch, not the corpus.
 
-    ``c_digests`` is deduplicated on ``__th`` before the probe join: the
-    persisted-index path appends digests per batch and a REPLAYED append
-    duplicates digest rows; without the distinct the left join would fan out
-    one output row per duplicate digest instead of flagging once."""
-    c_digests = c_digests.dropDuplicates(["__th"])
+    ``materialize=True`` evaluates the screen eagerly (localCheckpoint) and
+    releases the internal corpus shingle/signature and batch shingle caches
+    immediately — the session-hygiene mode for the steady-state ingestion
+    loop (screen batch N → append → screen batch N+1), where the lazy
+    default would pin one corpus-sized cache set per screened batch until
+    the session clears its cache.
+
+    Stages (all batch-bounded):
+      1. exact first-wins: anti-probe of md5(text) against the corpus digest
+         set (the reference's DeduplicationTransformer semantics,
+         DeduplicationTransformer.java:37-88, generalized to a second corpus);
+      2. near-dup probe: batch band buckets hash-join the corpus bucket
+         index on (band, bucket);
+      3. exact verify on candidates only: n-gram Jaccard, plus containment
+         (|batch∩corpus| / |batch|) as a second verify axis when
+         ``containment_threshold`` is set — that is what catches a new doc
+         that is a near-subset of an existing one even when symmetric
+         Jaccard is low. With the default ``containment_threshold=None``,
+         pairs verify on Jaccard alone and ``best_containment`` is reported
+         only for Jaccard-verified pairs.
+
+    Output: one row per batch document —
+    (id_col, is_exact_dup, near_dup_of, best_jaccard, best_containment, keep)
+    where ``near_dup_of`` is the smallest corpus id among verified hits
+    (-1 if none), and ``keep`` = not exact-dup and no verified hit.
+    """
+    c_digests = corpus.select(F.md5(F.col(text_col)).alias("__th")).distinct()
+    # ONE shingle pass over the corpus text: the bucket index and the verify
+    # shingle store both derive from this persisted frame, so deriving them
+    # inline never pays a second corpus scan.
+    c_sh = shingle_frame(corpus, id_col, text_col, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # The bucket index is consumed twice by the screen (the oversized-bucket
+    # aggregate and the anti-joined probe side are separate branches), so an
+    # uncached signature lineage would re-run the explode + k-hash
+    # aggregation per branch — persist the thin (|docs| x k longs) frame,
+    # mirroring the verified-pairs builder.
+    c_sig = minhash_signatures_from_shingles(c_sh, id_col, "__sh", num_hashes).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    c_buckets = band_buckets(c_sig, id_col, num_hashes, bands).select(
+        F.col(id_col).alias("__cid"), "band", "bucket"
+    )
+    c_shingles = c_sh.select(
+        F.col(id_col).alias("__cid"), F.col("__sh").alias("__csh")
+    )
     b_base = batch.select(
         F.col(id_col), F.md5(F.col(text_col)).alias("__th")
     ).join(
@@ -858,233 +826,11 @@ def _screen_batch_against_index(
             (F.col("is_exact_dup") == 0) & F.coalesce("__ndof", F.lit(-1)).eqNullSafe(F.lit(-1))
         ).cast("long").alias("keep"),
     )
-    return out, [b_shingles]
-
-
-def incremental_dedup_against_corpus(
-    corpus: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    containment_threshold: float | None = None,
-    materialize: bool = False,
-) -> DataFrame:
-    """Batch twin of the streaming LSH dedup filter
-    (``streaming/dedup_lsh_stream``): screen a NEW batch of documents against
-    an EXISTING deduplicated corpus without ever pairing corpus↔corpus or
-    batch↔batch rows — the cost is proportional to the batch, not the corpus.
-
-    ``materialize=True`` evaluates the screen eagerly (localCheckpoint) and
-    releases the internal corpus shingle/signature and batch shingle caches
-    immediately — the session-hygiene mode for the steady-state ingestion
-    loop (screen batch N → append → screen batch N+1), where the lazy
-    default would pin one corpus-sized cache set per screened batch until
-    the session clears its cache.
-
-    Stages (all batch-bounded):
-      1. exact first-wins: anti-probe of md5(text) against the corpus digest
-         set (the reference's DeduplicationTransformer semantics,
-         DeduplicationTransformer.java:37-88, generalized to a second corpus);
-      2. near-dup probe: batch band buckets hash-join the corpus bucket
-         index on (band, bucket) — at scale the corpus side is a
-         precomputed, persisted index, so only the batch is signed fresh;
-      3. exact verify on candidates only: n-gram Jaccard, plus containment
-         (|batch∩corpus| / |batch|) as a second verify axis when
-         ``containment_threshold`` is set — that is what catches a new doc
-         that is a near-subset of an existing one even when symmetric
-         Jaccard is low. With the default ``containment_threshold=None``,
-         pairs verify on Jaccard alone and ``best_containment`` is reported
-         only for Jaccard-verified pairs.
-
-    Output: one row per batch document —
-    (id_col, is_exact_dup, near_dup_of, best_jaccard, best_containment, keep)
-    where ``near_dup_of`` is the smallest corpus id among verified hits
-    (-1 if none), and ``keep`` = not exact-dup and no verified hit.
-    """
-    c_digests = corpus.select(F.md5(F.col(text_col)).alias("__th")).distinct()
-    # ONE shingle pass over the corpus text: the bucket index and the verify
-    # shingle store both derive from this persisted frame (at real scale both
-    # are precomputed by build_dedup_index; inline derivation must not pay a
-    # second corpus scan either).
-    c_sh = shingle_frame(corpus, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # The bucket index is consumed twice by the screen (the oversized-bucket
-    # aggregate and the anti-joined probe side are separate branches), so an
-    # uncached signature lineage would re-run the explode + k-hash
-    # aggregation per branch — persist the thin (|docs| x k longs) frame,
-    # mirroring the verified-pairs builder.
-    c_sig = minhash_signatures_from_shingles(c_sh, id_col, "__sh", num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    c_buckets = band_buckets(c_sig, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("__cid"), "band", "bucket"
-    )
-    c_shingles = c_sh.select(
-        F.col(id_col).alias("__cid"), F.col("__sh").alias("__csh")
-    )
-    out, screen_caches = _screen_batch_against_index(
-        batch, c_digests, c_buckets, c_shingles,
-        id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket,
-        containment_threshold,
-    )
     if materialize:
         out = out.localCheckpoint(eager=True)
-        for c in [c_sh, c_sig, *screen_caches]:
+        for c in [c_sh, c_sig, b_shingles]:
             c.unpersist()
     return out
-
-
-def build_dedup_index(
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> None:
-    """Persist the corpus dedup index the incremental screen probes — the
-    write-once artifact that makes admitting a new batch O(batch) instead of
-    O(corpus):
-
-      ``{path}/digests``  — distinct md5 text digests (exact first-wins set);
-      ``{path}/buckets``  — (band, bucket, id) rows PARTITIONED BY band, so a
-                            probe's (band, bucket) equi-join prunes to the
-                            band's files before any IO;
-      ``{path}/shingles`` — (id, shingle array) for the exact-verify stage.
-
-    The streaming twin (``streaming/dedup_lsh_stream``) maintains the same
-    index incrementally per micro-batch; this is the batch bootstrap.
-    """
-    corpus.select(F.md5(F.col(text_col)).alias("__th")).distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{path}/digests")
-    # One shingle pass: write the shingle store first, then derive the
-    # signature/bucket index by READING IT BACK — the second pass scans the
-    # (already tokenized) parquet arrays, not the raw corpus text.
-    sh = shingle_frame(corpus, id_col, text_col, shingle_n).select(
-        F.col(id_col).alias("__cid"), F.col("__sh").alias("__csh")
-    )
-    sh.write.mode("overwrite").parquet(f"{path}/shingles")
-    sh_back = corpus.sparkSession.read.parquet(f"{path}/shingles").select(
-        F.col("__cid").alias(id_col), F.col("__csh").alias("__sh")
-    )
-    sig = minhash_signatures_from_shingles(
-        sh_back, id_col, "__sh", num_hashes, repartition_input=True
-    )
-    band_buckets(sig, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("__cid"), "band", "bucket"
-    ).write.mode("overwrite").partitionBy("band").parquet(f"{path}/buckets")
-
-
-def append_to_dedup_index(
-    accepted: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> None:
-    """Index maintenance: after screening a batch, append the ACCEPTED
-    documents' digests/buckets/shingles to the persisted index so the next
-    batch screens against them too — the steady-state ingestion loop:
-
-        screen batch N → keep survivors → append survivors to index →
-        screen batch N+1 → ...
-
-    Appends are idempotent for dedup semantics (a replayed append can only
-    cause extra drops, never false accepts — same argument as the streaming
-    sink). On a real deployment the parquet appends become Delta/Iceberg
-    appends with the identical plan.
-    """
-    accepted.select(F.md5(F.col(text_col)).alias("__th")).distinct().write.mode(
-        "append"
-    ).parquet(f"{path}/digests")
-    sh = shingle_frame(accepted, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig = minhash_signatures_from_shingles(sh, id_col, "__sh", num_hashes)
-    band_buckets(sig, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("__cid"), "band", "bucket"
-    ).write.mode("append").partitionBy("band").parquet(f"{path}/buckets")
-    sh.select(
-        F.col(id_col).alias("__cid"), F.col("__sh").alias("__csh")
-    ).write.mode("append").parquet(f"{path}/shingles")
-    sh.unpersist()
-
-
-def incremental_dedup_against_index(
-    batch: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    containment_threshold: float | None = None,
-    materialize: bool = False,
-) -> DataFrame:
-    """Screen a new batch against a PERSISTED corpus index written by
-    ``build_dedup_index`` — identical output to
-    ``incremental_dedup_against_corpus`` without touching corpus text at all;
-    the hash parameters must match the ones the index was built with.
-    ``materialize=True`` evaluates eagerly and releases the internal batch
-    shingle cache (session hygiene for the ingestion loop)."""
-    spark = batch.sparkSession
-    out, screen_caches = _screen_batch_against_index(
-        batch,
-        spark.read.parquet(f"{index_path}/digests"),
-        spark.read.parquet(f"{index_path}/buckets").select("__cid", "band", "bucket"),
-        spark.read.parquet(f"{index_path}/shingles"),
-        id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket,
-        containment_threshold,
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        for c in screen_caches:
-            c.unpersist()
-    return out
-
-
-def compact_dedup_index(
-    spark, path: str, file_threshold: int = 8
-) -> dict[str, bool]:
-    """Maintenance job for the persisted incremental-dedup index
-    (``build_dedup_index`` / ``append_to_dedup_index``): each appended batch
-    adds parquet fragments to ``digests``/``buckets``/``shingles``, and probe
-    cost eventually becomes file-listing/open bound rather than data bound.
-    Compacts every store whose fragment count exceeds max(``file_threshold``,
-    its partition-dir count), deduplicating replayed-append rows in the
-    same pass; screen results are unchanged (equivalence pinned by test).
-    ``buckets`` keeps its partitioned-by-band layout (one file per band
-    after compaction) so the probe's partition pruning is preserved.
-
-    Returns {store: compacted?} for observability.
-    """
-    return {
-        "digests": compact_parquet_dir(
-            spark, f"{path}/digests", ["__th"], file_threshold=file_threshold
-        ),
-        "buckets": compact_parquet_dir(
-            spark,
-            f"{path}/buckets",
-            ["__cid", "band", "bucket"],
-            partition_by="band",
-            file_threshold=file_threshold,
-        ),
-        "shingles": compact_parquet_dir(
-            spark, f"{path}/shingles", ["__cid"], file_threshold=file_threshold
-        ),
-    }
 
 
 def _two_phase_components(edges: DataFrame, max_iter: int) -> DataFrame:

@@ -91,42 +91,6 @@ def morton_interleave_sql(col_names: Sequence[str], bits: int) -> str:
     return " + ".join(terms)
 
 
-def zorder_code(
-    df: DataFrame, cols: Sequence[str], bits: int = 8, z_col: str = "z"
-) -> DataFrame:
-    """Attach the Z-order code of ``cols`` (numeric/date-ordinal columns)
-    as ``z_col``. One aggregate computes every column's min/max in a
-    single pass; the one-row result broadcasts back (a literal-sized
-    cross join), so the whole op is scan → map — no shuffle of the fact
-    rows."""
-    cols = list(cols)
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"__mn_{c}"))
-        aggs.append(F.max(c).alias(f"__mx_{c}"))
-    bounds = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(bounds))
-    buckets = [
-        int_bucket(F.col(c), F.col(f"__mn_{c}"), F.col(f"__mx_{c}"), bits)
-        for c in cols
-    ]
-    out = out.withColumn(z_col, morton_interleave(buckets, bits))
-    return out.drop(*[f"__mn_{c}" for c in cols], *[f"__mx_{c}" for c in cols])
-
-
-def zorder_layout(
-    df: DataFrame, cols: Sequence[str], num_files: int, bits: int = 8
-) -> DataFrame:
-    """The write-side layout op: range-partition by Z-code into
-    ``num_files`` output splits and sort within each — what an
-    ``OPTIMIZE ZORDER BY`` rewrite does before handing files to the
-    writer. Range partitioning (sampled boundaries) keeps output files
-    near-equal-sized even when the Z-space is unevenly populated; the
-    plan is pinned to exactly one rangepartitioning exchange."""
-    coded = zorder_code(df, cols, bits)
-    return coded.repartitionByRange(num_files, "z").sortWithinPartitions("z")
-
-
 def compaction_bins(
     files: DataFrame,
     size_col: str,

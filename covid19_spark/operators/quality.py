@@ -1,11 +1,10 @@
 """Declarative data-quality checks: single-pass constraint validation.
 
 The expectations layer of a production pipeline (Deequ / Great-Expectations
-shape, rebuilt Spark-first): declare row-level constraints, get (a) a
-violation report computed in ONE aggregation pass over the table and (b) a
-clean/quarantine row split — bad rows are data to audit and reprocess, not
-a reason to kill a 1000-executor job at hour three (same philosophy as
-``sources/ingest``'s corrupt-record quarantine).
+shape, rebuilt Spark-first): declare row-level constraints, get a
+violation report computed in ONE aggregation pass over the table — bad
+rows are data to audit and reprocess, not a reason to kill a
+1000-executor job at hour three.
 
 Scale notes:
 - The report is one map-side-combined agg: every row-level rule folds to
@@ -17,10 +16,6 @@ Scale notes:
   ``count(*) − count(DISTINCT key)`` inside the SAME agg pass (exact
   distinct; swap to approx_count_distinct at the 100 TB+ point where a ~2%
   dup-count error is acceptable).
-- The quarantine split is map-only (the rules evaluate per row), so it
-  pipelines into the scan with zero extra passes; uniqueness violations are
-  intentionally NOT part of the row split (a duplicate is a property of the
-  pair, not the row — dedup is its own operator family).
 
 Reference analogue: the scattered empty/null/zero guards
 (`BotUtils.java:241-247`, `Covid19PatientAnalyzer.java:101-110`, SURVEY
@@ -106,30 +101,6 @@ def quality_report(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
         .otherwise(1.0 - F.col("violations") / F.col("n_rows"))
         .alias("pass_rate"),
     )
-
-
-def quarantine_split(
-    df: DataFrame, rules: Sequence[Rule]
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantine) row split over the row-level rules (uniqueness
-    rules are ignored here — see module docstring). Quarantined rows carry a
-    ``violated_rules`` array naming every rule they break. Map-only."""
-    row_rules = [r for r in rules if r.unique_cols is None]
-    if not row_rules:
-        raise ValueError("quarantine_split needs at least one row-level rule")
-    viol = F.filter(
-        F.array(
-            *[
-                F.when(~F.coalesce(r.ok, F.lit(False)), F.lit(r.name))
-                for r in row_rules
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    tagged = df.withColumn("violated_rules", viol)
-    clean = tagged.filter(F.size("violated_rules") == 0).drop("violated_rules")
-    quarantine = tagged.filter(F.size("violated_rules") > 0)
-    return clean, quarantine
 
 
 def mad_outlier_report(df, group_col: str, value_col: str, k: float = 3.0):

@@ -434,9 +434,8 @@ def bm25_topk_multi(
     never-asked are indistinguishable downstream.  ``include_empty=True``
     anti-joins the query frame back and emits ONE marker row per
     hitless query (query_id, doc_id=NULL, rank=NULL, score=NULL), so a
-    consumer can assert every asked query was answered;
-    ``make_bm25_query_sink`` turns this on — a stream's results log must
-    distinguish 'answered with zero hits' from 'query lost'.
+    consumer can assert every asked query was answered — a results log
+    must distinguish 'answered with zero hits' from 'query lost'.
 
     Plan shape: the batch's DISTINCT terms prune the postings ONCE
     (broadcast (tb, t) join via ``postings_for_terms``); df and the
@@ -512,50 +511,6 @@ def bm25_topk_multi(
         )
         out = out.unionByName(hitless)
     return out
-
-
-def make_bm25_query_sink(
-    index_path: str,
-    results_path: str,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-):
-    """foreachBatch sink serving a STREAM of term-list queries from the
-    persisted inverted index — the lexical twin of
-    ``ann_index.make_ann_query_sink``: each micro-batch is answered with
-    ``bm25_topk_multi`` (per-batch term-bucket pruning: a batch touching
-    7 terms opens ≤7 of the bucket directories) and appended to
-    ``results_path`` with its ``batch_id``.  The index is reopened per
-    batch ON PURPOSE — scalars are a one-row read, and a fresh postings
-    scan is what makes documents ingested by ``make_index_ingest_sink``
-    between batches immediately searchable; an index opened once outside
-    the loop would pin the first batch's file listing.
-
-    Every query in the batch appears in the results log: hitless queries
-    land as a NULL-marker row (``include_empty=True`` — ADVICE r13: a
-    consumer must be able to distinguish 'answered with zero hits' from
-    'query lost')."""
-    from covid19_spark.sources.index import read_inverted_index
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        idx = read_inverted_index(spark, index_path)
-        (
-            bm25_topk_multi(
-                spark, idx, batch_df, k=k, k1=k1, b=b,
-                query_id_col=query_id_col, terms_col=terms_col,
-                include_empty=True,
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append").parquet(results_path)
-        )
-
-    return sink
 
 
 def proximity_match_from_index(

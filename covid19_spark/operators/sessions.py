@@ -10,8 +10,8 @@ Scale: both windows partition by the key — ONE hash exchange total (Catalyst
 reuses the partitioning for the second window since it has the same
 partition spec). Per-key history is processed independently.
 
-Streaming form: ``F.session_window(ts, gap)`` in
-``streaming/windowed.py``-style aggregations covers the windowed-agg case.
+Streaming form: a watermarked ``groupBy(F.session_window(ts, gap), key)``
+covers the windowed-agg case.
 """
 
 from __future__ import annotations

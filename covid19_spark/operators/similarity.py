@@ -277,8 +277,7 @@ def hyperplane_signatures_udf(dim: int, num_planes: int, num_tables: int, seed: 
     This is the sanctioned Python slow-path exception: expressing
     tables×planes dot products as per-row SQL folds builds an enormous
     expression tree (measured ~10× slower); a numpy matmul over an Arrow
-    batch is a single BLAS call. Planes derive from ``_plane_component`` so
-    the pure-SQL ``hyperplane_signature`` and this kernel agree bit-for-bit.
+    batch is a single BLAS call. Planes derive from ``_plane_component``.
     """
     planes = np.array(
         [
@@ -300,29 +299,6 @@ def hyperplane_signatures_udf(dim: int, num_planes: int, num_tables: int, seed: 
         buckets = (bits * weights).sum(axis=2)  # (batch, tables)
         return pd.Series(list(buckets))
 
-    return sig
-
-
-def hyperplane_signature(
-    vec: Column, dim: int, num_planes: int = 16, seed: int = 42
-) -> Column:
-    """Sign-bit LSH signature: bit i = (v · h_i) >= 0 for pseudo-random unit
-    hyperplanes h_i derived deterministically from ``seed`` (no RNG state —
-    resumable and identical across executors). Pure-SQL variant of the
-    vectorized ``hyperplane_signatures_udf`` kernel; both draw planes from
-    ``_plane_component`` and produce identical buckets."""
-    bits = []
-    for i in range(num_planes):
-        plane = [_plane_component(seed, i, j) for j in range(dim)]
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(p) for p in plane]), lambda x, h: x * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
     return sig
 
 

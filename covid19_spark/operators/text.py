@@ -1,7 +1,7 @@
 """Text analysis operators for large-scale training-data pipelines.
 
-Language-ID (stopword n-gram heuristic), quality scoring, token counting
-(whitespace + BPE-ish regex estimate), document fingerprinting — all pure
+Tokenizing and token counting, typography normalization, repetition
+statistics, shingling, TF-IDF, chunking, document fingerprinting — all pure
 ``pyspark.sql.functions`` column expressions: JVM-side, whole-stage-codegen'd,
 no Python in the hot path. At 100 TB these are embarrassingly parallel
 map-only transforms — no shuffle at all.
@@ -9,12 +9,11 @@ map-only transforms — no shuffle at all.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Minimal per-language stopword sets for the heuristic language-ID.
+# Minimal per-language stopword sets for the registry's heuristic
+# language-ID queries.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a", "in", "is"),
     "de": ("der", "die", "und", "das", "ist", "ein"),
@@ -32,19 +31,6 @@ def tokenize(text: Column, lowercase: bool = True) -> Column:
 def token_count(text: Column) -> Column:
     """Whitespace token count (non-empty tokens)."""
     return F.size(F.filter(tokenize(text), lambda t: t != ""))
-
-
-def bpe_token_estimate(text: Column) -> Column:
-    """BPE-ish subword token estimate: regex word/number/symbol pieces plus a
-    length penalty (~4 chars/token heuristic used by tokenizer sizing)."""
-    pieces = F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
-    return F.greatest(pieces, F.ceil(F.length(text) / 4).cast("int"))
-
-
-def stopword_hits(text: Column, stopwords: Sequence[str]) -> Column:
-    """Number of tokens that are in ``stopwords``."""
-    toks = tokenize(text)
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
 
 
 def normalize_text(text: Column) -> Column:
@@ -95,67 +81,6 @@ def fingerprint(text: Column, length: int = 16) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text,
     truncated. The rolling-hash equivalent for near-canonical dedup keys."""
     return F.substring(F.md5(normalize_text(text)), 1, length)
-
-
-def lang_scores(text: Column, stopword_map: Mapping[str, Sequence[str]] | None = None) -> dict[str, Column]:
-    """Per-language stopword hit counts."""
-    stopword_map = stopword_map or LANG_STOPWORDS
-    return {lang: stopword_hits(text, words) for lang, words in stopword_map.items()}
-
-
-def predict_lang(text: Column, stopword_map: Mapping[str, Sequence[str]] | None = None) -> Column:
-    """Argmax language by stopword hits, ties broken by language-code order
-    (deterministic CASE chain — no UDF)."""
-    scores = lang_scores(text, stopword_map)
-    langs = sorted(scores)  # deterministic preference order on ties
-    expr = F.lit(langs[-1])
-    for lang in reversed(langs[:-1]):
-        cond = None
-        for other in langs:
-            if other == lang:
-                continue
-            # '>=' for langs after ours in order, '>' would flip tie handling:
-            # earlier lang wins ties because it is checked first.
-            c = scores[lang] >= scores[other]
-            cond = c if cond is None else (cond & c)
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def quality_columns(text: Column, rounded: bool = True) -> dict[str, Column]:
-    """Quality-scoring feature set: length, token stats, punctuation and
-    stopword ratios, and a composite [0,1] score.
-
-    ``rounded=False`` leaves raw doubles — used by the differential-tested
-    query so both engines compare bit-identical results with no second
-    rounding step to diverge on.
-    """
-    n_chars = F.length(text)
-    n_toks = token_count(text)
-    n_punct = F.regexp_count(text, F.lit(r"[^A-Za-z0-9\s]"))
-    stop_hits = stopword_hits(text, LANG_STOPWORDS["en"])
-    mean_tok_len = F.when(n_toks > 0, (n_chars - (n_toks - 1)) / n_toks)
-    stop_ratio = F.when(n_toks > 0, stop_hits / n_toks)
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars)
-    # Heuristic composite: reward stopword presence and 3-12 char tokens,
-    # penalize punctuation soup (the usual C4/Gopher-style gates).
-    score = (
-        F.lit(0.5) * F.least(F.coalesce(stop_ratio, F.lit(0.0)) * 4, F.lit(1.0))
-        + F.lit(0.3)
-        * F.when((mean_tok_len >= 3) & (mean_tok_len <= 12), 1.0).otherwise(0.0)
-        + F.lit(0.2) * (1 - F.least(F.coalesce(punct_ratio, F.lit(0.0)) * 5, F.lit(1.0)))
-    )
-    maybe_round = (lambda c: F.round(c, 6)) if rounded else (lambda c: c)
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_toks,
-        "n_punct": n_punct,
-        "stop_hits": stop_hits,
-        "mean_token_len": maybe_round(mean_tok_len),
-        "stop_ratio": maybe_round(stop_ratio),
-        "punct_ratio": maybe_round(punct_ratio),
-        "quality_score": maybe_round(score),
-    }
 
 
 def repetition_stats(df, id_col: str, text_col: str):

@@ -241,22 +241,3 @@ def unigram_tokenize(
             "nll double, tokens array<string>"
         ),
     )
-
-
-def save_vocab(vocab: "list[tuple[str, float]]", spark, path: str) -> None:
-    """Persist a trained unigram vocabulary as parquet — the pretrained
-    seam: train once on the training cluster, ship the artifact, encode
-    anywhere (the same contract as the IVF/PQ codebooks and BPE merges).
-    """
-    spark.createDataFrame(vocab, "piece string, logprob double").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_vocab(spark, path: str) -> "list[tuple[str, float]]":
-    """Load a vocabulary saved by ``save_vocab`` (sorted by piece — the
-    trainer's output order, so save→load round-trips exactly)."""
-    return [
-        (r.piece, r.logprob)
-        for r in spark.read.parquet(path).orderBy("piece").collect()
-    ]

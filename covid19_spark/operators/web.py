@@ -108,7 +108,9 @@ def path_of_sql(u: str) -> str:
 
 
 def domain_suffixes_sql(u: str, max_labels: int = 6) -> str:
-    """SQL text of ``domain_suffixes`` over the SQL fragment ``u``."""
+    """SQL text of a host's label suffixes, longest last, at most
+    ``max_labels`` of them (``a.b.com`` -> ``com``, ``b.com``,
+    ``a.b.com``), over the SQL fragment ``u``."""
     dot_re = _sq(r"\.")
     labels = f"split({host_of_sql(u)}, {dot_re})"
     return (
@@ -199,55 +201,6 @@ def host_of(url: str) -> Column:
     ``^.*@`` within the authority matches to the LAST ``@`` — the WHATWG
     URL parsing of a userinfo that itself contains unencoded ``@``."""
     return F.expr(host_of_sql(url))
-
-
-def domain_suffixes(url: str, max_labels: int = 6) -> Column:
-    """Array of registrable-suffix candidates of a URL's host, shortest
-    first: for ``a.b.example.com`` → ``[com, example.com, b.example.com,
-    a.b.example.com]`` (capped at ``max_labels`` labels). A blocklist entry
-    blocks a URL iff it equals ONE of these — label-boundary suffix
-    semantics, so ``example.com`` blocks every subdomain but never
-    ``notexample.com``. Pure array expressions over one split: the filter
-    join explodes ≤ ``max_labels`` short strings per URL, hash-joinable
-    against a broadcast blocklist — the 100 TB shape (a regex-per-entry
-    scan would be |blocklist|×|corpus|)."""
-    return F.expr(domain_suffixes_sql(url, max_labels))
-
-
-def filter_blocked_domains(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Rows whose URL host matches NO blocklist entry on a label boundary —
-    the reusable crawl-policy gate behind ``domain_blocklist_filter``
-    (userinfo-bearing URLs included: ``host_of`` strips ``user:pass@``
-    before suffix expansion, closing the ADVICE r09 bypass).
-
-    Shape for 100 TB: the distinct URL set explodes into ≤ ``max_labels``
-    short suffix candidates, hash SEMI-joins the broadcast blocklist, and
-    the blocked-URL set anti-joins back on URL equality (two identical
-    URLs share one verdict, so URL is a sound row key — no synthesized
-    ids). Never a regex-per-entry scan (|blocklist|×|corpus|)."""
-    u, s = F.col("_fbd_url"), F.col("_fbd_sfx")
-    cand = (
-        df.select(F.col(url_col).alias("_fbd_url"))
-        .distinct()
-        .select(u, F.explode(domain_suffixes("_fbd_url")).alias("_fbd_sfx"))
-    )
-    blocked = (
-        cand.join(
-            F.broadcast(blocklist.select(F.col(domain_col).alias("_fbd_sfx"))),
-            "_fbd_sfx",
-            "left_semi",
-        )
-        .select(u)
-        .distinct()
-    )
-    return df.join(
-        blocked.withColumnRenamed("_fbd_url", url_col), url_col, "left_anti"
-    )
 
 
 def path_of(url: str) -> Column:

@@ -1854,8 +1854,7 @@ def q_corpus_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only key/shard derivation on the scan + one groupBy
     on the 64-value shard id; the ordered collect is per-shard bounded
-    (|docs|/64). The production write is ``write_corpus_shards`` (same
-    key, same shard column, partitionBy + maxRecordsPerFile)."""
+    (|docs|/64)."""
     from covid19_spark.operators.curation import corpus_shard, shuffle_key
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
@@ -1937,8 +1936,7 @@ def q_crawl_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the crawl pipeline's plan (single documents scan, two
     dedup exchanges) plus the shuffle's one groupBy on the 16-value shard
-    id; the ordered collect is per-shard bounded. The production write is
-    ``write_corpus_shards`` on the corpus frame (same key, same shards)."""
+    id; the ordered collect is per-shard bounded."""
     corpus = q_crawl_to_corpus(spark, sf_dir).select("doc_id", "clean_text")
     return crawl_shards_audit(corpus)
 
@@ -1978,8 +1976,9 @@ def crawl_shards_audit(corpus: DataFrame, n_shards: int = 16) -> DataFrame:
 
 
 # the crawl CTEs restate q_crawl_to_corpus's construction arithmetic (see
-# ORACLE_CRAWL_TO_CORPUS); the shard/key arithmetic is the corpus_shuffle
-# contract replayed in SQL - one oracle pins the WHOLE build
+# ORACLE_CRAWL_TO_CORPUS); the shard/key arithmetic is the
+# shuffle_key/corpus_shard contract replayed in SQL - one oracle pins the
+# WHOLE build
 ORACLE_CRAWL_TO_SHARDS = """
 WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
 cand AS (
@@ -2052,7 +2051,7 @@ def q_domain_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus applies before any content work (spam/adult/malware domain
     lists): a blocklist entry blocks a URL iff it matches the host on a
     LABEL BOUNDARY, so ``dom3.com`` blocks ``s1.dom3.com`` but never
-    ``notdom3.com``. Implementation: ``domain_suffixes`` expands each host
+    ``notdom3.com``. Implementation: ``domain_suffixes_sql`` expands each host
     into its <= 6 label-suffix candidates (one split + array expressions,
     map-only) and membership-tests them against the broadcast blocklist —
     the 100 TB shape (hash semi-join per short suffix; a regex-per-entry

@@ -690,8 +690,7 @@ def q_bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 top-20 from the maintained index.  The oracle is the FULL-corpus
     BM25 (`bm25_topk`'s SQL verbatim), so the driver hash pins
     ``append(build(base), delta) == build(base ∪ delta)`` bit-for-bit —
-    the lexical twin of `ivm_stream_replay`'s state-table invariant and
-    `append_ivfpq_index`'s never-refit contract.
+    the lexical twin of `ivm_stream_replay`'s state-table invariant.
 
     Scale: the append pass scans only the delta; the derived-stat rewrite
     is index-sized.  The build here runs per query run (replay must start
@@ -851,8 +850,7 @@ QUERY_REGISTRY["proximity_match"] = QuerySpec(
 
 
 def q_bm25_multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BM25 serving (`operators/retrieval.bm25_topk_multi` — the
-    body of the streaming query sink `make_bm25_query_sink`): THREE
+    """Batched BM25 serving (`operators/retrieval.bm25_topk_multi`): THREE
     term-list queries answered by ONE pruned postings scan — the batch's
     distinct terms prune once, df and the per-(term, doc) partial score
     are computed on the per-(t, doc)-unique frame BEFORE the query
@@ -922,7 +920,7 @@ ORDER BY query_id, rank
 QUERY_REGISTRY["bm25_multi_query"] = QuerySpec(
     q_bm25_multi_query,
     _oracle_bm25_multi_query(),
-    "batched multi-query BM25 from one pruned postings scan (streaming query-sink body)",
+    "batched multi-query BM25 from one pruned postings scan",
 )
 
 

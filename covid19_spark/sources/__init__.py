@@ -1,3 +1,3 @@
-from covid19_spark.sources.tables import TABLE_NAMES, load_table, load_tables, register_views
+from covid19_spark.sources.tables import TABLE_NAMES, load_table, register_views
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLE_NAMES", "load_table", "register_views"]

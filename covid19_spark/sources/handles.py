@@ -19,12 +19,11 @@ Safety contract:
   store's metadata files (size + mtime_ns): rebuilds and appends rewrite
   ``scalars``/``meta``, so they miss the cache automatically — even when
   another process performed them.
-- Mutators that do NOT touch the metadata dataset (IVF-PQ appends to
-  ``codes``, ``scratch.compact_parquet_dir``) must call
-  :func:`invalidate_store`; all in-repo writers do.  Cross-process
-  compaction during another process's serve is excluded by the stores'
-  maintenance-window contract ("run between batches, not concurrent
-  with an append or serve").
+- A writer that changes a published store in place also calls
+  :func:`invalidate_store`, so a stamp that happens to repeat never
+  serves the old handle.  The one such writer is
+  ``index.append_inverted_index``; every other write builds in scratch
+  and publishes by rename (``sources/scratch.py``).
 """
 
 from __future__ import annotations
@@ -70,8 +69,7 @@ def put_store(spark, path: str, stamp: tuple, obj) -> None:
 
 
 def invalidate_store(path: str) -> None:
-    """Drop every session's handle for ``path`` — called by writers whose
-    rewrite does not touch the metadata dataset (compaction), and
-    defensively by append/replace paths."""
+    """Drop every session's handle for ``path`` — called by the in-place
+    append (``index.append_inverted_index``)."""
     for k in [k for k in _CACHE if k[1] == path]:
         del _CACHE[k]

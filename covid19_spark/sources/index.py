@@ -71,7 +71,7 @@ from covid19_spark.sources.handles import invalidate_store
 from covid19_spark.sources.meta_io import (
     meta_matches, read_meta_rows, write_meta_table,
 )
-from covid19_spark.sources.scratch import compact_parquet_dir, ensure_store
+from covid19_spark.sources.scratch import ensure_store
 from covid19_spark.sources.tables import load_table
 
 N_TERM_BUCKETS = 64
@@ -108,43 +108,18 @@ def default_index_path(sf_dir: str) -> str:
     return f"/tmp/covid19_spark_invidx_{base}"
 
 
-def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """The ONE tokenization of the lexical family: lowercase,
-    space-split, empty tokens dropped — must stay in lockstep with the
-    registry oracles' ``string_split(lower(text), ' ')`` filter."""
-    return docs.select(
-        id_col,
-        F.explode(
-            F.filter(F.split(F.lower(text_col), " "), lambda t: t != "")
-        ).alias("t"),
-    )
-
-
-def tokenize_pos(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """``tokenize`` with 0-based token positions (indices into the
-    FILTERED token sequence — the DuckDB twin is
-    ``generate_subscripts(list_filter(...), 1) - 1``)."""
-    return docs.select(
-        id_col,
-        F.posexplode(
-            F.filter(F.split(F.lower(text_col), " "), lambda t: t != "")
-        ).alias("p", "t"),
-    )
-
-
 def tokenize_pos_off(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """``tokenize_pos`` plus each token's START char offset into
+    """(id, p, t, off): every non-empty token of the lowercased,
+    space-split text, with its position ``p`` among the surviving tokens
+    (row_number in raw order) and its START char offset ``off`` into
     ``lower(text)`` (0-based).  The raw single-space split is position-
     exact by construction: token ``i``'s offset is the prefix sum of
     ``len + 1`` over the UNFILTERED tokens before it (empty tokens are
     zero-length but still consume their separator), computed as one
     per-doc window prefix sum — the same doc-keyed exchange the postings
-    group-by needs anyway.  ``p`` keeps the FILTERED-sequence semantics
-    of ``tokenize_pos`` (row_number over surviving tokens in raw order),
+    group-by needs anyway.  ``p`` keeps the FILTERED-sequence semantics,
     so downstream ``pos`` arrays are bit-identical to the v3 build."""
     from pyspark.sql import Window
 
@@ -195,8 +170,8 @@ def _delta_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     append write.  dl rides on every posting row (the Lucene-norms
     denormalization), computed by a per-doc window over the (doc, t)
     frame; correct for an append because postings are DOC-granular and
-    append deltas carry only new doc ids (caller contract, same as
-    ``ann_index.append_ivfpq_index``)."""
+    append deltas carry only new doc ids (``append_inverted_index``'s
+    caller contract)."""
     from pyspark.sql import Window
 
     grouped = (
@@ -418,7 +393,7 @@ def append_inverted_index(
     persisted postings — never a corpus re-tokenize.
 
     Caller contract: delta ids must be new (append does not dedup — run
-    exact dedup upstream, the ``append_ivfpq_index`` contract).  The
+    exact dedup upstream).  The
     result is bit-identical to a full rebuild over base ∪ delta: counts
     are exact integers and every derived stat is a deterministic function
     of the postings multiset (pinned by the ``bm25_incremental_index``
@@ -462,95 +437,6 @@ def append_inverted_index(
         spark, path, n_prev + float(obs.get["n"]), fingerprint
     )
     invalidate_store(path)
-
-
-def make_index_ingest_sink(
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    compact_every: int | None = 8,
-    file_threshold: int = 8,
-):
-    """foreachBatch sink streaming NEW documents into the persisted
-    inverted index — crawl → searchable-index as a continuous pipeline
-    (VERDICT r12 task #5; the ``make_ann_ingest_sink`` shape for lexical
-    retrieval).  The first non-empty batch BUILDS the index; every later
-    batch appends (``append_inverted_index`` — the delta alone is
-    tokenized, derived stats recomputed index-sized), so a
-    ``bm25_scores_from_index`` serve between batches sees everything
-    ingested so far: a fresh ``read_inverted_index`` per serve is the
-    reopen-per-batch contract of the ANN query sink.
-
-    Exactly-once at the ingest level comes from the stream's checkpoint;
-    a REPLAYED batch re-appends, so chain after a stateful dedup
-    (``crawl_corpus_stream`` already dedups per canonical URL and content
-    fingerprint) or idempotent ids when the source can replay.
-
-    Auto-compaction (VERDICT r13 task #2): after every ``compact_every``-th
-    append the sink runs ``compact_inverted_index`` itself, so a long-lived
-    stream keeps the postings store at ~one file per term bucket without an
-    external maintenance job — the Lucene background-merge analogue, run in
-    the between-batches window foreachBatch already guarantees (the sink is
-    the only writer; serves reopen per query and tolerate the rename swap).
-    The cadence only gates the fragment-count CHECK; the rewrite itself
-    still fires only when fragments exceed max(``file_threshold``,
-    bucket-dir count).  ``compact_every=None`` restores the manual
-    discipline (caller runs compaction in its own window)."""
-    import os
-
-    appends_seen = [0]  # driver-side state: foreachBatch runs on the driver
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if os.path.isdir(f"{index_path}/scalars"):
-            append_inverted_index(
-                batch_df, index_path, id_col=id_col, text_col=text_col
-            )
-            appends_seen[0] += 1
-            if compact_every and appends_seen[0] % compact_every == 0:
-                compact_inverted_index(
-                    batch_df.sparkSession, index_path,
-                    file_threshold=file_threshold,
-                )
-        else:
-            build_inverted_index_from(
-                batch_df, index_path, id_col=id_col, text_col=text_col
-            )
-
-    return sink
-
-
-def compact_inverted_index(
-    spark: SparkSession, path: str, file_threshold: int = 8
-) -> dict[str, bool]:
-    """Maintenance job for the appended inverted index: each
-    ``append_inverted_index`` adds one parquet fragment per touched term
-    bucket under ``postings/``, and after enough appends a term-pruned
-    scan becomes file-listing/open bound instead of data bound (the
-    Lucene segment-merge problem at parquet granularity).
-    ``scratch.compact_parquet_dir`` rewrites ``postings/`` into one file
-    per ``tb`` bucket, partitioning preserved so the static ``tb IN (...)``
-    pruning is unchanged; replayed-append duplicates collapse on
-    (doc_id, t) in the same pass.
-
-    The derived datasets never need compaction: ``_rewrite_derived``
-    rewrites doclen/termstats/scalars wholesale (mode=overwrite) on every
-    append.  Serving equivalence and ``inverted_index_stats`` stability
-    are pinned by test.  Run between batches, not concurrent with an
-    append (the Delta/Iceberg OPTIMIZE maintenance-window contract).
-
-    Returns {store: compacted?} for observability.
-    """
-    return {
-        "postings": compact_parquet_dir(
-            spark,
-            f"{path}/postings",
-            ["doc_id", "t"],
-            partition_by="tb",
-            file_threshold=file_threshold,
-        ),
-    }
 
 
 def read_inverted_index(spark: SparkSession, path: str) -> InvertedIndex:
@@ -765,123 +651,6 @@ def build_fielded_index_from(
     n = float(docs.count())
     _write_fielded_derived(spark, path, n, fingerprint)
     return n
-
-
-def append_fielded_index(
-    docs_delta: DataFrame,
-    path: str,
-    fields: dict,
-    fingerprint: str = "",
-    id_col: str = "doc_id",
-) -> None:
-    """Add NEW documents to an existing fielded index — the
-    ``append_inverted_index`` contract per field: the delta alone is
-    tokenized (per-field postings are doc-granular, so new docs append
-    whole rows), fieldstats/scalars recomputed from the PERSISTED
-    fpostings (index-sized, never a corpus re-tokenize).  Caller
-    contract: delta ids must be new, and ``fields`` must be the SAME
-    definitions the base was built with (the ensure-cache folds them
-    into the fingerprint).  Bit-identical to a full rebuild over
-    base ∪ delta — counts are exact integers and every derived stat is a
-    deterministic function of the fpostings multiset (pinned by test)."""
-    import glob
-
-    from pyspark.sql import Window
-
-    spark = docs_delta.sparkSession
-    use_fast_committer(spark)
-    n_prev = float(read_meta_rows(f"{path}/scalars")[0]["n"])
-    parts = []
-    for fname, expr in fields.items():
-        col = F.expr(expr) if isinstance(expr, str) else expr
-        toks = docs_delta.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.filter(F.split(F.lower(col), " "), lambda t: t != "")
-            ).alias("t"),
-        )
-        grouped = (
-            toks.groupBy("doc_id", "t")
-            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-            .withColumn("dl", F.sum("tf").over(Window.partitionBy("doc_id")))
-            .withColumn("field", F.lit(fname))
-        )
-        parts.append(grouped.select("doc_id", "t", "field", "tf", "dl"))
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p)
-    delta = delta.withColumn("tb", term_bucket(F.col("t")))
-    empty_base = not glob.glob(f"{path}/fpostings/tb=*") and (
-        spark.read.parquet(f"{path}/fpostings").take(1) == []
-    )
-    (
-        delta.repartition("tb")
-        .write.mode("overwrite" if empty_base else "append")
-        .partitionBy("tb")
-        .parquet(f"{path}/fpostings")
-    )
-    if empty_base and not glob.glob(f"{path}/fpostings/tb=*"):
-        delta.repartition(1).write.mode("overwrite").parquet(
-            f"{path}/fpostings"
-        )
-    _write_fielded_derived(
-        spark, path, n_prev + float(docs_delta.count()), fingerprint
-    )
-    invalidate_store(path)
-
-
-def make_fielded_ingest_sink(
-    index_path: str,
-    fields: dict,
-    id_col: str = "doc_id",
-    compact_every: int | None = 8,
-    file_threshold: int = 8,
-):
-    """foreachBatch sink streaming NEW documents into the persisted
-    FIELDED index — ``make_index_ingest_sink`` for the BM25F/DisMax
-    store: first non-empty batch builds, later batches append
-    (delta-only per-field tokenize), and the sink auto-compacts itself
-    every ``compact_every`` appends.  Same exactly-once caveat (chain
-    after dedup or idempotent ids); a BM25F serve between batches
-    reopens via ``read_fielded_index`` and sees everything ingested."""
-    import os
-
-    appends_seen = [0]  # driver-side state: foreachBatch runs on the driver
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if os.path.isdir(f"{index_path}/scalars"):
-            append_fielded_index(batch_df, index_path, fields, id_col=id_col)
-            appends_seen[0] += 1
-            if compact_every and appends_seen[0] % compact_every == 0:
-                compact_fielded_index(
-                    batch_df.sparkSession, index_path,
-                    file_threshold=file_threshold,
-                )
-        else:
-            build_fielded_index_from(
-                batch_df, index_path, fields, id_col=id_col
-            )
-
-    return sink
-
-
-def compact_fielded_index(
-    spark: SparkSession, path: str, file_threshold: int = 8
-) -> dict[str, bool]:
-    """``compact_inverted_index`` applied to the fielded store: rewrite
-    ``fpostings/`` to one file per term bucket, deduplicating
-    replayed-append rows on (doc_id, t, field)."""
-    return {
-        "fpostings": compact_parquet_dir(
-            spark,
-            f"{path}/fpostings",
-            ["doc_id", "t", "field"],
-            partition_by="tb",
-            file_threshold=file_threshold,
-        ),
-    }
 
 
 def read_fielded_index(spark: SparkSession, path: str) -> FieldedIndex:

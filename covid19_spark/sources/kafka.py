@@ -72,29 +72,6 @@ def reader_options(
     return opts
 
 
-def batch_reader_options(
-    topic: str,
-    bootstrap: str = "localhost:9092",
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
-    include_headers: bool = False,
-    subscribe_mode: str = "subscribe",
-) -> dict[str, str]:
-    """Batch (``spark.read``) twin of ``reader_options`` — a bounded
-    offset range via ``endingOffsets`` (the reference's poll-style batch
-    consumers, ``application.yml:23``); no trigger-rate key because a
-    batch read has no trigger."""
-    opts = reader_options(
-        topic,
-        bootstrap,
-        starting_offsets,
-        include_headers=include_headers,
-        subscribe_mode=subscribe_mode,
-    )
-    opts["endingOffsets"] = ending_offsets
-    return opts
-
-
 def reader_spec(
     topic: str,
     bootstrap: str = "localhost:9092",
@@ -108,22 +85,6 @@ def reader_spec(
     return {
         "format": "kafka",
         "options": reader_options(topic, bootstrap, starting_offsets, **kwargs),
-    }
-
-
-def batch_reader_spec(
-    topic: str,
-    bootstrap: str = "localhost:9092",
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
-    **kwargs,
-) -> dict:
-    """COMPLETE batch-reader assembly (see ``reader_spec``)."""
-    return {
-        "format": "kafka",
-        "options": batch_reader_options(
-            topic, bootstrap, starting_offsets, ending_offsets, **kwargs
-        ),
     }
 
 

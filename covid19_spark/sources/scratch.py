@@ -1,5 +1,5 @@
 """The one store protocol: every persisted store is built in scratch,
-published by rename, reopened and compacted through this module.
+published by rename and reopened through this module.
 
 A store is a directory of parquet datasets.  The build-once stores (the
 inverted and fielded indexes, the IVF-PQ index, the SemDeDup assignment)
@@ -16,8 +16,6 @@ model), so one atomic publish rule serves all of them:
   same store), and a stale store is renamed aside and replaced.  Renames
   are atomic on one filesystem, so a reader sees the old store or the new
   one, never a mix.
-- **compact** (``compact_parquet_dir``): an append-fragmented dataset is
-  rewritten into scratch and swapped in with ``replace_dir``.
 
 ``pid_scratch_path`` gives per-run replay state (``q_bm25_incremental_index``,
 ``q_ivm_stream_replay``) a directory unique to the process: concurrent
@@ -35,7 +33,6 @@ parquet-on-local-fs gets the rename-based miniature.
 
 from __future__ import annotations
 
-import glob
 import os
 import re
 import shutil
@@ -193,10 +190,16 @@ def ensure_store(
     ``spark.read.parquet`` runs one footer-reading job).  A build publishes
     by rename: if the path filled while we built, a concurrent fresh build
     won (discard ours — never delete files its returned readers still
-    hold) or the stale store is still there (swap it out)."""
+    hold) or the stale store is still there (swap it out).  A build that
+    raises removes its own scratch dir and nothing else: a dead writer's
+    ``__old_`` sibling can be the only complete copy of the store."""
     if not is_fresh():
         tmp = build_scratch_path(path)
-        build(tmp)
+        try:
+            build(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         if not publish_if_absent(tmp, path):
             if is_fresh():
                 shutil.rmtree(tmp, ignore_errors=True)
@@ -219,40 +222,3 @@ def ensure_store(
     return store
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    dedup_cols: Sequence[str],
-    partition_by: str | Sequence[str] | None = None,
-    file_threshold: int = 8,
-) -> bool:
-    """Rewrite an append-only parquet dataset into one file per leaf
-    partition dir (one file when unpartitioned) when its fragment count
-    exceeds max(``file_threshold``, leaf dirs) — that floor is the
-    compacted state, so a compacted wide store never re-compacts.  Returns
-    True if it compacted.  Deduplicates on ``dedup_cols`` while rewriting
-    (replayed appends leave identical rows).
-
-    The rewrite is written completely into ``build_scratch_path(path)`` and
-    swapped in with ``replace_dir``, so a crash leaves the old dataset or
-    the new one, never a mix.  Compaction leaves the store's meta
-    untouched, so the memoized handle of the store root (``path``'s parent)
-    is dropped here.  Run between batches, not concurrent with an append:
-    a real deployment does this as a transactional Delta/Iceberg OPTIMIZE.
-    """
-    frags = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    leaf_dirs = {os.path.dirname(f) for f in frags}
-    if len(frags) <= max(file_threshold, len(leaf_dirs)):
-        return False
-    df = spark.read.parquet(path).dropDuplicates(list(dedup_cols))
-    tmp = build_scratch_path(path)
-    if partition_by is not None:
-        # repartition BY the partition column(s): every partition's rows
-        # land in one task → exactly one file per partition directory
-        part_cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        df.repartition(*part_cols).write.partitionBy(*part_cols).parquet(tmp)
-    else:
-        df.repartition(1).write.parquet(tmp)
-    replace_dir(tmp, path)
-    handles.invalidate_store(os.path.dirname(path))
-    return True

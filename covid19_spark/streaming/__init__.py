@@ -6,8 +6,8 @@ Mapping (SURVEY §1.1, §2.7):
 - KTable             → latest-by-key compaction (update-mode agg / MERGE sink)
 - aggregator A1/A2   → per-key state in ``stateful_delta``
 - custom state       → ``applyInPandasWithState``, the one stateful binding
-                       (delta, as-of, heavy hitters, ...): state commits once
-                       per micro-batch and recovers from the checkpoint;
+                       (the running delta): state commits once per
+                       micro-batch and recovers from the checkpoint;
                        ``get_spark`` backs it with the RocksDB provider
 - 1-day window A3/A4 → ``windowed.daily_window_agg`` (watermark + tumbling window)
 - dedup T2/T3        → ``dedup_stream`` (dropDuplicatesWithinWatermark)

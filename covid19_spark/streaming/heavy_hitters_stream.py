@@ -1,32 +1,16 @@
-"""Continuous Misra-Gries heavy hitters: the streaming twin of
-``operators/sketch.py``.
+"""The Misra-Gries counter fold a micro-batch stream threads through its
+state: ``q_mg_stream_replay`` shards items by ``pmod(xxhash64(item),
+shards)`` and replays this fold over three micro-batches, so an item's
+counters accumulate across batches in exactly one shard.
 
-Items hash-shard into ``shards`` groups (deterministic ``xxhash64 %
-shards``, so an item's counters live in exactly ONE shard's state); each
-shard carries a capacity-bounded counter dict in the state store and
-re-emits its full current summary every micro-batch, tagged with a
-per-shard emission counter so a sink (or test) can select the newest
-summary per shard.
-
-Guarantees mirror the batch operator, accumulated ACROSS micro-batches:
-with capacity ``m`` and ``N_g`` items seen by shard ``g`` since stream
-start, ``true − N_g/m ≤ est ≤ true`` for every item of that shard (and
-``N_g ≤ N``, so the global ``true − N/m`` bound holds too); every item
-with ``count·m > N`` is present in its shard's summary.
-
-State: ≤ ``m`` (item, count) pairs per shard — bounded by contract, like
-the batch summaries; the state store shards the groups across executors.
+With capacity ``m`` and ``N_g`` items folded into shard ``g``,
+``true − N_g/m ≤ est ≤ true`` for every item of that shard, and every
+item with ``count·m > N_g`` is present in its shard's counters.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def mg_update(counters: dict[str, int], items: Iterator[str], capacity: int) -> None:
@@ -50,51 +34,3 @@ def mg_update(counters: dict[str, int], items: Iterator[str], capacity: int) -> 
                 del counters[k]
 
 
-def streaming_heavy_hitters(
-    stream: DataFrame,
-    item_col: str,
-    capacity: int = 256,
-    shards: int = 8,
-) -> DataFrame:
-    """``(shard, emission, item, est)`` — each micro-batch, every shard
-    that saw data re-emits its whole ≤ ``capacity``-row summary with an
-    incremented ``emission`` counter (take the max-emission rows per
-    shard for the current sketch)."""
-
-    sharded = stream.select(
-        F.pmod(F.xxhash64(F.col(item_col)), F.lit(shards)).cast("int").alias("shard"),
-        F.col(item_col).cast("string").alias("item"),
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            items, counts, emission = state.get
-            counters = dict(zip(list(items), [int(c) for c in counts]))
-        else:
-            counters, emission = {}, 0
-        saw = False
-        for pdf in pdfs:
-            if len(pdf):
-                saw = True
-                mg_update(counters, iter(pdf["item"]), capacity)
-        emission += int(saw)
-        state.update((list(counters.keys()), list(counters.values()), emission))
-        if saw and counters:
-            yield pd.DataFrame(
-                {
-                    "shard": key[0],
-                    "emission": emission,
-                    "item": list(counters.keys()),
-                    "est": list(counters.values()),
-                }
-            )
-
-    return sharded.groupBy("shard").applyInPandasWithState(
-        fn,
-        outputStructType="shard int, emission int, item string, est long",
-        stateStructType="items array<string>, counts array<long>, emission int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -11,10 +11,10 @@ core ``streaming/table.merge_into_buckets`` with ⊕ as its merge.
 Exactness carries over from the batch algebra: DEC-carried sums make the
 merged state independent of how rows were split into micro-batches, so the
 streamed state equals the one-shot batch lift bit-for-bit (pinned in
-tests).  Replays are idempotent ONLY per full batch sequence — foreachBatch
-may re-run a batch on failure, so production tables pair this with the
-batch-id high-watermark column (same caveat as every roll-your-own parquet
-MERGE; on Delta/Iceberg this collapses to MERGE with a txn id).
+tests).  The merge is NOT replay-safe: foreachBatch re-runs a batch when
+the process dies between the sink and the offset commit, and the re-run
+⊕-merges that batch a second time.  Nothing here records which batch ids
+were applied yet (on Delta/Iceberg that is MERGE with a txn id).
 """
 
 from __future__ import annotations

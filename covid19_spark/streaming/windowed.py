@@ -51,31 +51,3 @@ def daily_window_agg(
     )
 
 
-def session_window_agg(
-    stream: DataFrame,
-    ts_col: str,
-    key_cols: Sequence[str],
-    gap: str = "30 minutes",
-    sum_cols: Sequence[str] = (),
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Gap-based session windows, streaming form (``F.session_window``).
-
-    The streaming twin of ``operators.sessions.sessionize``: state holds only
-    open sessions (merged as events arrive, closed when the watermark passes
-    the gap), so state size tracks concurrent sessions, not history.
-    """
-    aggs = [F.sum(c).alias(f"sum_{c}") for c in sum_cols]
-    aggs.append(F.count(F.lit(1)).alias("n_events"))
-    windowed = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), *key_cols)
-        .agg(*aggs)
-    )
-    return windowed.select(
-        *key_cols,
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        *[F.col(f"sum_{c}") for c in sum_cols],
-        "n_events",
-    )

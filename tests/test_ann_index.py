@@ -11,10 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from covid19_spark.operators.ann_index import (
-    append_ivfpq_index,
     ivfpq_index_topk,
-    make_ann_ingest_sink,
-    make_ann_query_sink,
     read_ivfpq_index,
     write_ivfpq_index,
 )
@@ -109,149 +106,6 @@ def test_prune_none_same_answer_and_bad_mode_raises(spark, index_path):
     assert a == b
     with pytest.raises(ValueError, match="prune"):
         ivfpq_index_topk(idx, emb, queries, prune="dynamic", **PARAMS)
-
-
-def test_compact_ivfpq_index_serving_unchanged(spark, tmp_path):
-    """Compaction contract for the codes store: repeated appends fragment
-    the list directories; compaction rewrites codes/ to one file per list
-    with query answers, code rows, and the centroid_id partition layout
-    all unchanged — and a fully-compacted index does not re-compact."""
-    import glob
-
-    from covid19_spark.operators.ann_index import compact_ivfpq_index
-
-    emb, queries = _emb_and_queries(spark)
-    path = str(tmp_path / "compidx")
-    write_ivfpq_index(
-        emb.filter(F.col("vec_id") % 4 == 0), path,
-        n_centroids=16, m=8, n_codes=16,
-    )
-    for r in (1, 2, 3):
-        append_ivfpq_index(
-            emb.filter(F.col("vec_id") % 4 == r), path, return_count=False
-        )
-
-    def snapshot():
-        idx = read_ivfpq_index(spark, path)
-        return (
-            sorted(
-                (r.query_id, r.rank, r.neighbor_id, r.sim)
-                for r in ivfpq_index_topk(idx, emb, queries, **PARAMS).collect()
-            ),
-            sorted(
-                (r.vec_id, r.centroid_id, tuple(r.codes))
-                for r in idx.codes.collect()
-            ),
-        )
-
-    frag = lambda: glob.glob(f"{path}/codes/**/*.parquet", recursive=True)  # noqa: E731
-    before = snapshot()
-    n_before = len(frag())
-    assert n_before > 16  # base + 3 appends across 16 lists: fragmented
-    assert compact_ivfpq_index(spark, path) == {"codes": True}
-    assert len(frag()) < n_before
-    assert all("/centroid_id=" in f for f in frag())
-    assert snapshot() == before
-    assert compact_ivfpq_index(spark, path) == {"codes": False}
-
-
-def test_append_equals_full_build_on_same_quantizers(spark, tmp_path):
-    """Incremental ingest: build on half the corpus, append the other half —
-    queries must answer EXACTLY as a one-shot build over the full corpus
-    with the same quantizers (append encodes with the persisted quantizers,
-    so codes are identical rows, just written later)."""
-    emb, queries = _emb_and_queries(spark)
-    old = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter(F.col("vec_id") % 2 == 1)
-    inc_path = str(tmp_path / "inc")
-    write_ivfpq_index(old, inc_path, n_centroids=16, m=8, n_codes=16)
-    idx_half = read_ivfpq_index(spark, inc_path)
-    n_before = idx_half.codes.count()
-    appended = append_ivfpq_index(new, inc_path)
-    assert appended == new.count()
-    idx = read_ivfpq_index(spark, inc_path)
-    assert idx.codes.count() == n_before + appended
-    full_path = str(tmp_path / "full")
-    # one-shot build over everything, pinned to the SAME quantizers the
-    # incremental index fitted on its first half
-    write_ivfpq_index(
-        emb, full_path, n_centroids=16, m=8, n_codes=16,
-        centroids=idx.centroids, codebooks=idx.codebooks,
-    )
-    idx_full = read_ivfpq_index(spark, full_path)
-    got = (
-        ivfpq_index_topk(idx, emb, queries, **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    want = (
-        ivfpq_index_topk(idx_full, emb, queries, **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    assert got == want
-
-
-def test_streaming_serve_and_ingest_roundtrip(spark, index_path, tmp_path):
-    """The full serving loop on streams: (1) a query-vector stream answered
-    per micro-batch against the persisted index matches the batch answers;
-    (2) vectors ingested by the ingest sink between batches are searchable
-    by the NEXT query batch (the reopen-per-batch contract) — INCLUDING at
-    the exact rerank, which is why the cold store goes to the sink as a
-    PATH that grows alongside the index, not a pinned DataFrame."""
-    emb, _ = _emb_and_queries(spark)
-    # own index copy — this test mutates it via the ingest sink
-    idx_path = str(tmp_path / "serveidx")
-    corpus_dir = str(tmp_path / "cold_store")
-    old = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 200))
-    write_ivfpq_index(old, idx_path, n_centroids=16, m=8, n_codes=16)
-    old.write.parquet(corpus_dir)  # cold store holds only OLD at sink creation
-
-    # ingest stream: one file = one micro-batch of new vectors
-    ingest_src = str(tmp_path / "ingest_src")
-    new.coalesce(1).write.parquet(ingest_src)
-    ingest = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(ingest_src)
-        .writeStream.foreachBatch(make_ann_ingest_sink(idx_path))
-        .option("checkpointLocation", str(tmp_path / "ingest_ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    ingest.awaitTermination(120)
-    # the raw-data landing that in reality PRECEDES indexing: the cold
-    # store gains the same vectors the ingest stream just indexed
-    new.write.mode("append").parquet(corpus_dir)
-
-    # query stream against the (now grown) index; the sink reopens the
-    # cold store per batch from the PATH, so rerank sees the new vectors
-    q_src = str(tmp_path / "q_src")
-    queries = emb.filter(F.col("vec_id") < 8)
-    queries.coalesce(1).write.parquet(q_src)
-    results_path = str(tmp_path / "results")
-    serve = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1").parquet(q_src)
-        .writeStream.foreachBatch(
-            make_ann_query_sink(idx_path, corpus_dir, results_path, **PARAMS)
-        )
-        .option("checkpointLocation", str(tmp_path / "serve_ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    serve.awaitTermination(120)
-
-    got = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-        for r in spark.read.parquet(results_path).collect()
-    )
-    idx = read_ivfpq_index(spark, idx_path)
-    want = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-        for r in ivfpq_index_topk(
-            idx, spark.read.parquet(corpus_dir), queries, **PARAMS
-        ).collect()
-    )
-    assert got == want
-    # ingested (odd-id) vectors are actually being retrieved
-    assert any(n % 2 == 1 for (_, _, n, _) in got)
 
 
 def test_rebuild_in_place_overwrites(spark, index_path):
@@ -418,58 +272,6 @@ def test_meta_attr_cols_backward_compat(spark, tmp_path):
     assert read_ivfpq_index(spark, path).meta["attr_cols"] == ""
 
 
-def test_streaming_filtered_serve(spark, tmp_path):
-    """codes_filter flows through the streaming query sink: every served
-    neighbor satisfies the predicate, and the batch answers equal the
-    batch-path filtered query for the same vectors."""
-    from pyspark.sql import functions as F
-
-    from covid19_spark.operators.ann_index import (
-        ivfpq_index_topk,
-        make_ann_query_sink,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx_path = str(tmp_path / "fsidx")
-    cold = str(tmp_path / "cold")
-    res = str(tmp_path / "res")
-    emb.write.parquet(cold)
-    write_ivfpq_index(emb, idx_path, n_centroids=8, m=8, n_codes=16,
-                      attr_cols=("label",))
-
-    src = str(tmp_path / "qsrc")
-    ckpt = str(tmp_path / "ckpt")
-    emb.filter(F.col("vec_id") < 4).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(emb.schema).parquet(src)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            make_ann_query_sink(idx_path, cold, res, k=5, n_probes=3,
-                                codes_filter="label = 1")
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    served = spark.read.parquet(res)
-    labels = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
-    rows = served.collect()
-    assert rows and all(labels[r.neighbor_id] == 1 for r in rows)
-
-    idx = read_ivfpq_index(spark, idx_path)
-    batch = ivfpq_index_topk(
-        idx, spark.read.parquet(cold), emb.filter(F.col("vec_id") < 4),
-        k=5, n_probes=3, codes_filter="label = 1",
-    ).collect()
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    assert sorted((r.query_id, r.rank, r.neighbor_id, r.sim) for r in rows) == \
-        sorted((r.query_id, r.rank, r.neighbor_id, r.sim) for r in batch)
-
-
 def test_ensure_reuses_matching_index_and_rebuilds_on_change(spark, tmp_path):
     """ensure_ivfpq_index contract (r12): reuse iff persisted fingerprint
     AND quantizer params match; rebuild on either changing; refuse an
@@ -532,50 +334,3 @@ def test_concurrent_cold_ensure_ivfpq(spark, tmp_path):
     assert glob.glob(f"{path}__old_*") == []
 
 
-def test_ingest_sink_auto_compaction(spark, tmp_path):
-    """In-sink auto-compaction for the ANN ingest path (VERDICT r13 task
-    #2): 20 micro-batch appends through make_ann_ingest_sink with
-    compact_every=4 keep the codes store near one file per list directory
-    — and compaction never changes answers (the appended+auto-compacted
-    index returns the same top-k as an identical append run with the
-    manual discipline turned off)."""
-    import glob
-
-    emb, queries = _emb_and_queries(spark)
-    base = emb.filter(F.col("vec_id") < 400)
-    deltas = [
-        emb.filter((F.col("vec_id") >= 400 + 30 * i) & (F.col("vec_id") < 430 + 30 * i))
-        for i in range(20)
-    ]
-
-    auto_path = str(tmp_path / "auto")
-    manual_path = str(tmp_path / "manual")
-    for p in (auto_path, manual_path):
-        write_ivfpq_index(base, p, n_centroids=16, m=8, n_codes=16)
-
-    auto_sink = make_ann_ingest_sink(auto_path, compact_every=4, file_threshold=4)
-    manual_sink = make_ann_ingest_sink(manual_path, compact_every=None)
-    for i, delta in enumerate(deltas):
-        auto_sink(delta, i)
-        manual_sink(delta, i)
-
-    def frags(p):
-        return len(glob.glob(f"{p}/codes/**/*.parquet", recursive=True))
-
-    n_dirs = len(glob.glob(f"{auto_path}/codes/centroid_id=*"))
-    # bounded: compacted floor (one file per list dir) + at most
-    # compact_every un-compacted appends (each append touches <= n_dirs
-    # list dirs). The manual run keeps every append's fragments.
-    assert frags(auto_path) <= n_dirs * 5, (frags(auto_path), n_dirs)
-    assert frags(manual_path) > frags(auto_path)
-
-    cold = emb  # full-precision store covers base + all deltas
-    got = (
-        ivfpq_index_topk(read_ivfpq_index(spark, auto_path), cold, queries, **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    want = (
-        ivfpq_index_topk(read_ivfpq_index(spark, manual_path), cold, queries, **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    assert got == want

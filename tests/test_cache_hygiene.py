@@ -14,8 +14,7 @@ ContextCleaner once the result frame dies.
 This test pins the contract two ways:
   1. the session CacheManager is EMPTY after each formerly-leaking query is
      built and materialized (the leak class that survives for the session);
-  2. no non-test source file outside the documented ``sources/ingest.py``
-     opt-in staging fallback calls ``.cache()`` at all.
+  2. no package source file calls ``.cache()`` at all.
 """
 
 import pathlib
@@ -65,8 +64,4 @@ def test_no_cache_calls_in_package_source():
             code = line.split("#", 1)[0]
             if re.search(r"\.cache\(\)", code):
                 offenders.append(f"{py.relative_to(pkg.parent)}:{i}")
-    # sources/ingest.py keeps ONE documented opt-in: the no-staging-path
-    # interactive fallback, where a session-lifetime cache is the caller's
-    # explicit choice.
-    offenders = [o for o in offenders if not o.startswith("covid19_spark/sources/ingest.py")]
     assert offenders == [], f"unexpected .cache() sites: {offenders}"

@@ -531,40 +531,6 @@ def test_incremental_dedup_against_corpus(spark):
     assert out[12].best_jaccard == 0.0
 
 
-def test_persisted_dedup_index_equals_inline_screen(spark, tmp_path):
-    """build_dedup_index -> incremental_dedup_against_index reproduces the
-    inline screen exactly, the bucket store is partitioned by band (partition
-    pruning for probes), and screening never reads corpus text."""
-    import os
-
-    from covid19_spark.operators.dedup import (
-        build_dedup_index,
-        incremental_dedup_against_corpus,
-        incremental_dedup_against_index,
-    )
-    from covid19_spark.sources.tables import load_table
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    corpus = docs.filter(F.col("doc_id") % 4 < 3)
-    batch = docs.filter(F.col("doc_id") % 4 == 3)
-    idx = str(tmp_path / "dedup_index")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-    assert os.path.isdir(os.path.join(idx, "buckets", "band=0"))
-    assert os.path.isdir(os.path.join(idx, "digests"))
-
-    inline = {
-        r.doc_id: r
-        for r in incremental_dedup_against_corpus(corpus, batch, "doc_id", "text").collect()
-    }
-    from_index = {
-        r.doc_id: r
-        for r in incremental_dedup_against_index(batch, idx, "doc_id", "text").collect()
-    }
-    assert set(inline) == set(from_index)
-    for k in inline:
-        assert inline[k] == from_index[k], k
-
-
 def test_pq_cosine_topk_matches_fixture(spark):
     _assert_matches_fixture(spark, "pq_cosine_topk", ["query_id", "rank"])
 
@@ -578,83 +544,6 @@ def test_approx_aggregates_matches_fixture(spark):
     # input — merge order does not change the result (verified across
     # parallelism levels), so exact value pinning is sound
     _assert_matches_fixture(spark, "approx_aggregates", ["event_type"])
-
-
-def test_index_maintenance_loop_catches_cross_batch_dups(spark, tmp_path):
-    """The steady-state ingestion loop: screen batch1, append its survivors
-    to the index, screen batch2 — batch2's dup OF A BATCH1 DOC must now be
-    caught, and batch2's fresh doc must keep."""
-    from covid19_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        incremental_dedup_against_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta")], ["doc_id", "text"]
-    )
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-
-    batch1 = spark.createDataFrame(
-        [
-            (10, "machine learning pipelines need careful partitioning design"),
-            (11, "alpha beta gamma delta epsilon zeta eta theta"),  # dup of corpus
-        ],
-        ["doc_id", "text"],
-    )
-    r1 = {r.doc_id: r for r in incremental_dedup_against_index(batch1, idx, "doc_id", "text").collect()}
-    assert r1[10].keep == 1 and r1[11].keep == 0
-    kept1 = batch1.filter(F.col("doc_id").isin([d for d, r in r1.items() if r.keep == 1]))
-    append_to_dedup_index(kept1, "doc_id", "text", idx)
-
-    batch2 = spark.createDataFrame(
-        [
-            (20, "machine learning pipelines need careful partitioning design"),  # dup of 10
-            (21, "completely novel content about stream processing watermarks"),
-        ],
-        ["doc_id", "text"],
-    )
-    r2 = {r.doc_id: r for r in incremental_dedup_against_index(batch2, idx, "doc_id", "text").collect()}
-    assert r2[20].keep == 0 and r2[20].is_exact_dup == 1 and r2[20].near_dup_of == 10
-    assert r2[21].keep == 1
-
-
-def test_replayed_append_is_duplicate_safe(spark, tmp_path):
-    """A REPLAYED append (failure-retry writing the same batch twice) must
-    not change screen semantics: the digest probe dedups the index side, so
-    the next batch still gets exactly one output row per document with the
-    same verdicts — duplicate digest rows may not fan out the left join."""
-    from covid19_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        incremental_dedup_against_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta")], ["doc_id", "text"]
-    )
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-    kept = spark.createDataFrame(
-        [(10, "machine learning pipelines need careful partitioning design")],
-        ["doc_id", "text"],
-    )
-    append_to_dedup_index(kept, "doc_id", "text", idx)
-    append_to_dedup_index(kept, "doc_id", "text", idx)  # replay
-
-    batch = spark.createDataFrame(
-        [
-            (20, "machine learning pipelines need careful partitioning design"),
-            (21, "completely novel content about stream processing watermarks"),
-        ],
-        ["doc_id", "text"],
-    )
-    rows = incremental_dedup_against_index(batch, idx, "doc_id", "text").collect()
-    assert len(rows) == 2, "replayed append fanned out screen rows"
-    out = {r.doc_id: r for r in rows}
-    assert out[20].is_exact_dup == 1 and out[20].keep == 0 and out[20].near_dup_of == 10
-    assert out[21].keep == 1
 
 
 def test_containment_threshold_catches_subset_docs(spark):
@@ -686,71 +575,6 @@ def test_containment_threshold_catches_subset_docs(spark):
     assert flagged.keep == 0 and flagged.near_dup_of == 0
     assert flagged.best_containment >= 0.9
     assert flagged.best_jaccard < 0.5
-
-
-def test_compact_dedup_index_preserves_screen(spark, tmp_path):
-    """Steady-state ingestion appends a parquet fragment per batch to each
-    index store; compaction must rewrite them into few files WITHOUT changing
-    screen results — same verdict rows before and after, band partitioning
-    preserved, fragment counts reduced."""
-    import glob
-    import os
-
-    from covid19_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        compact_dedup_index,
-        incremental_dedup_against_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta")], ["doc_id", "text"]
-    )
-    idx = str(tmp_path / "idx")
-    build_dedup_index(corpus, "doc_id", "text", idx)
-    for i in range(9):
-        append_to_dedup_index(
-            spark.createDataFrame(
-                [(10 + i, f"unique document number {i} about topic {i} with words w{i} x{i} y{i} z{i}")],
-                ["doc_id", "text"],
-            ),
-            "doc_id",
-            "text",
-            idx,
-        )
-
-    def n_frags(sub):
-        return len(glob.glob(os.path.join(idx, sub, "**", "*.parquet"), recursive=True))
-
-    before_files = {s: n_frags(s) for s in ("digests", "buckets", "shingles")}
-    assert all(n > 8 for n in before_files.values()), before_files
-
-    batch = spark.createDataFrame(
-        [
-            (100, "alpha beta gamma delta epsilon zeta eta theta"),  # dup of 0
-            (101, "unique document number 3 about topic 3 with words w3 x3 y3 z3"),  # dup of 13
-            (102, "entirely fresh content never appended before at all"),
-        ],
-        ["doc_id", "text"],
-    )
-    before = sorted(
-        incremental_dedup_against_index(batch, idx, "doc_id", "text").collect()
-    )
-
-    compacted = compact_dedup_index(spark, idx)
-    assert compacted == {"digests": True, "buckets": True, "shingles": True}
-    after_files = {s: n_frags(s) for s in ("digests", "buckets", "shingles")}
-    assert all(after_files[s] < before_files[s] for s in after_files), (before_files, after_files)
-    assert os.path.isdir(os.path.join(idx, "buckets", "band=0"))  # pruning layout kept
-
-    after = sorted(
-        incremental_dedup_against_index(batch, idx, "doc_id", "text").collect()
-    )
-    assert before == after
-    # under-threshold stores are left alone
-    assert compact_dedup_index(spark, idx) == {
-        "digests": False, "buckets": False, "shingles": False,
-    }
 
 
 def test_wav_audio_features_matches_fixture(spark):
@@ -802,32 +626,6 @@ def test_audio_near_dup_matches_fixture(spark):
 
 def test_video_near_dup_matches_fixture(spark):
     _assert_matches_fixture(spark, "video_near_dup", ["doc_a", "doc_b"])
-
-
-def test_lsh_verified_pairs_releasable_frees_caches(spark):
-    """The lazy pipeline entry must expose a cache handle (r05 advisory):
-    release() drops the internal shingle/signature caches, and the already-
-    collected result is unaffected."""
-    from covid19_spark.operators.dedup import lsh_verified_pairs_releasable
-
-    jsc = spark.sparkContext._jsc
-
-    def rdd_ids():
-        # delta-based, not count-based: the session is shared across tests,
-        # so unrelated persistent RDDs (earlier tests' localCheckpoints
-        # awaiting the async ContextCleaner) may appear or vanish
-        # concurrently — only THIS call's additions are asserted on
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = rdd_ids()
-    docs = _docs(spark)
-    pairs, release = lsh_verified_pairs_releasable(docs, "doc_id", "text")
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    assert (0, 1) in got  # exact dup pair verified
-    added = rdd_ids() - before
-    assert added  # caches were live
-    release()
-    assert not (added & rdd_ids())  # every cache this call added is gone
 
 
 def test_lsh_guard_report_query_surfaces_planted_cluster(spark):

@@ -1,97 +1,4 @@
-"""JSONL/CSV ingest with corrupt-record quarantine (sources/ingest.py)."""
-
-import json
-
-from pyspark.sql import functions as F
-
-from covid19_spark.sources.ingest import (
-    normalize_to_parquet,
-    read_documents_csv,
-    read_documents_jsonl,
-    split_quarantine,
-)
-
-
-def _write_jsonl(tmp_path, lines):
-    p = tmp_path / "docs.jsonl"
-    p.write_text("\n".join(lines) + "\n")
-    return str(p)
-
-
-def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
-    good = [
-        json.dumps({"doc_id": i, "text": f"doc {i} text", "lang": "en", "source": "s0", "n_chars": 10})
-        for i in range(5)
-    ]
-    bad = ['{"doc_id": 99, "text": unquoted-garbage}', "not json at all"]
-    path = _write_jsonl(tmp_path, good[:3] + [bad[0]] + good[3:] + [bad[1]])
-    df = read_documents_jsonl(spark, path)
-    clean, quarantined = split_quarantine(df, staging_path=str(tmp_path / "staged"))
-    assert clean.count() == 5
-    assert sorted(r.doc_id for r in clean.select("doc_id").collect()) == [0, 1, 2, 3, 4]
-    assert "_corrupt" not in clean.columns
-    raws = [r.raw_line for r in quarantined.collect()]
-    assert len(raws) == 2 and any("unquoted-garbage" in r for r in raws)
-
-
-def test_jsonl_schema_is_explicit(spark, tmp_path):
-    # a field outside the schema is dropped, not inferred
-    path = _write_jsonl(
-        tmp_path,
-        [json.dumps({"doc_id": 1, "text": "t", "lang": "en", "source": "s", "n_chars": 1, "extra": True})],
-    )
-    df = read_documents_jsonl(spark, path)
-    assert "extra" not in df.columns
-    assert [f.name for f in df.schema.fields][:5] == ["doc_id", "text", "lang", "source", "n_chars"]
-
-
-def test_csv_reader_quarantine(spark, tmp_path):
-    p = tmp_path / "docs.csv"
-    p.write_text(
-        "doc_id,text,lang,source,n_chars\n"
-        "1,hello world,en,s0,11\n"
-        "not-a-number,broken,en,s0,abc\n"
-        "2,more text,fr,s1,9\n"
-    )
-    clean, bad = split_quarantine(read_documents_csv(spark, str(p)))
-    assert sorted(r.doc_id for r in clean.select("doc_id").collect()) == [1, 2]
-    assert bad.count() == 1
-
-
-def test_normalize_to_parquet_partitioned(spark, tmp_path):
-    path = _write_jsonl(
-        tmp_path,
-        [
-            json.dumps({"doc_id": i, "text": "x", "lang": lang, "source": "s", "n_chars": 1})
-            for i, lang in enumerate(["en", "en", "fr"])
-        ],
-    )
-    clean, _ = split_quarantine(read_documents_jsonl(spark, path))
-    out = str(tmp_path / "normalized")
-    normalize_to_parquet(clean, out, partition_by="lang")
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    assert sorted(r.lang for r in back.select("lang").distinct().collect()) == ["en", "fr"]
-    # partition pruning: a lang filter reads only that partition directory
-    plan = back.filter(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or back.filter(F.col("lang") == "en").count() == 2
-
-
-def test_orc_round_trip(spark, tmp_path):
-    from covid19_spark.sources.ingest import read_documents_orc, write_documents_orc
-    from covid19_spark.sources.tables import load_table
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    out = str(tmp_path / "docs_orc")
-    write_documents_orc(docs, out)
-    back = read_documents_orc(spark, out)
-    assert back.count() == docs.count()
-    a = sorted(docs.collect(), key=lambda r: r["doc_id"])
-    b = sorted(back.collect(), key=lambda r: r["doc_id"])
-    assert a == b
-    # pushdown reaches the ORC scan like parquet
-    plan = back.filter(F.col("doc_id") == 5)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,5)]" in plan
+"""Parquet schema evolution across ingest generations."""
 
 
 def test_schema_evolution_merge_across_generations(spark, tmp_path):

@@ -123,69 +123,6 @@ def test_bucket_cache_matches_catalyst(spark):
     assert "window" in _BUCKET_CACHE
 
 
-def test_compact_inverted_index_serving_unchanged(spark, sf_dir, tmp_path):
-    """Compaction contract (VERDICT r12 task #3): repeated appends fragment
-    the term buckets; compaction rewrites postings/ to one file per bucket
-    with BM25 scores, phrase matches, postings rows, and derived stats all
-    bit-identical — and the static tb partition pruning layout preserved."""
-    import glob
-
-    from covid19_spark.operators.retrieval import (
-        bm25_scores_from_index, phrase_match_from_index,
-    )
-    from covid19_spark.sources.index import (
-        append_inverted_index, build_inverted_index,
-        compact_inverted_index, read_inverted_index,
-    )
-
-    path = str(tmp_path / "idx")
-    build_inverted_index(spark, sf_dir, path)
-    for i, txt in enumerate(
-        ["spark shuffle hash", "filter scan spark", "hash join spark table"]
-    ):
-        append_inverted_index(
-            spark.createDataFrame([(100 + i, txt)], "doc_id long, text string"),
-            path,
-        )
-
-    def snapshot():
-        idx = read_inverted_index(spark, path)
-        return (
-            sorted(
-                (r.t, r.doc_id, r.tf, r.dl, tuple(r.pos))
-                for r in idx.postings.collect()
-            ),
-            sorted(
-                (r.doc_id, r.score)
-                for r in bm25_scores_from_index(
-                    spark, idx, ["spark", "hash"]
-                ).collect()
-            ),
-            sorted(
-                (r.doc_id, r.n_occurrences)
-                for r in phrase_match_from_index(
-                    spark, idx, ["hash", "spark"]
-                ).collect()
-            ),
-            sorted((r.t, r.df, r.cg) for r in idx.termstats.collect()),
-            (idx.n_docs, idx.avgdl),
-        )
-
-    frag = lambda: glob.glob(f"{path}/postings/**/*.parquet", recursive=True)  # noqa: E731
-    before = snapshot()
-    n_before = len(frag())
-    assert n_before > 8  # base + 3 appends across buckets: fragmented
-    assert compact_inverted_index(spark, path) == {"postings": True}
-    assert len(frag()) < n_before
-    # partitioned-by-tb layout preserved: every file sits in a tb=N dir
-    assert all("/tb=" in f for f in frag())
-    # the scratch rewrite and the swapped-out copy are both gone
-    assert glob.glob(f"{path}/postings__*") == []
-    assert snapshot() == before
-    # below threshold now: a second compaction is a no-op
-    assert compact_inverted_index(spark, path) == {"postings": False}
-
-
 def test_phrase_match_positions(spark, sf_dir, tmp_path):
     """Positional phrase retrieval: adjacency counts, 3-term phrases, and
     repeated-term phrases, hand-checked on the fixture corpus."""

@@ -239,7 +239,7 @@ def test_reader_full_option_surface_golden_values():
     not on the first live cluster."""
     import pytest
 
-    from covid19_spark.sources.kafka import batch_reader_options, reader_options
+    from covid19_spark.sources.kafka import reader_options
 
     assert reader_options(
         "covid19-patients",
@@ -266,31 +266,6 @@ def test_reader_full_option_surface_golden_values():
     # optional keys stay ABSENT (not empty strings) when unset
     base = reader_options("t")
     assert set(base) == {"kafka.bootstrap.servers", "subscribe", "startingOffsets"}
-    assert batch_reader_options(
-        "covid19-patients",
-        starting_offsets='{"covid19-patients":{"0":42}}',
-        ending_offsets='{"covid19-patients":{"0":142}}',
-    ) == {
-        "kafka.bootstrap.servers": "localhost:9092",
-        "subscribe": "covid19-patients",
-        "startingOffsets": '{"covid19-patients":{"0":42}}',
-        "endingOffsets": '{"covid19-patients":{"0":142}}',
-    }
-
-
-def test_batch_reader_spec_golden_values():
-    from covid19_spark.sources.kafka import batch_reader_spec
-
-    assert batch_reader_spec("covid19-stats", include_headers=True) == {
-        "format": "kafka",
-        "options": {
-            "kafka.bootstrap.servers": "localhost:9092",
-            "subscribe": "covid19-stats",
-            "startingOffsets": "earliest",
-            "endingOffsets": "latest",
-            "includeHeaders": "true",
-        },
-    }
 
 
 def test_encode_headers_and_key_routing_wire_shape(spark):

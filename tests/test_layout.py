@@ -11,7 +11,6 @@ from covid19_spark.operators.layout import (
     int_bucket,
     morton_interleave,
     morton_interleave_sql,
-    zorder_layout,
 )
 
 
@@ -52,17 +51,6 @@ def test_int_bucket_bounds_and_monotonicity(spark):
     rows = sorted((r.x, r.b) for r in b.collect())
     assert rows[0][1] == 0 and rows[-1][1] == 15  # min -> 0, max -> top bucket
     assert all(b2 >= b1 for (_, b1), (_, b2) in zip(rows, rows[1:]))  # monotone
-
-
-def test_zorder_layout_plan_is_one_range_exchange(spark):
-    df = spark.range(1000).select(
-        (F.col("id") % 37).alias("a"), (F.col("id") % 53).alias("b")
-    )
-    out = zorder_layout(df, ["a", "b"], num_files=8, bits=6)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("rangepartitioning") == 1, plan
-    # the bounds agg broadcasts; the fact side never hash-shuffles
-    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_compaction_bins_first_fit_hand_case(spark):

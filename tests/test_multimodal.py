@@ -9,9 +9,8 @@ from covid19_spark.operators.multimodal import (
     decode_image,
     extract_image_features,
     fake_image_features,
-    frame_sample_plan,
-    synthesize_media,
 )
+from tests.media_gen import frame_sample_plan, synthesize_media
 
 
 def test_fake_features_deterministic():
@@ -119,10 +118,8 @@ def test_audio_features_contract(spark):
 def test_real_codec_paths_raise(spark):
     import pytest
 
-    from covid19_spark.operators.multimodal import (
-        extract_audio_features,
-        synthesize_media,
-    )
+    from covid19_spark.operators.multimodal import extract_audio_features
+    from tests.media_gen import synthesize_media
 
     # synthesize_media payloads are random bytes, not real containers: the
     # decode paths must fail loudly, not featurize garbage
@@ -974,13 +971,8 @@ def test_g711_wav_decode_roundtrip_and_anchors():
     NotImplementedError seam): spec anchor values, round-trip through the
     companding encoder within the 8-bit companding error bound, and the
     full container path (encode_wav_g711 -> decode_wav)."""
-    from covid19_spark.operators.multimodal import (
-        _ALAW_TABLE,
-        _MULAW_TABLE,
-        decode_wav,
-        encode_wav_g711,
-        g711_encode,
-    )
+    from covid19_spark.operators.multimodal import _ALAW_TABLE, _MULAW_TABLE, decode_wav
+    from tests.media_gen import encode_wav_g711, g711_encode
 
     # spec anchors: mu-law code 0xFF decodes to 0; 0x7F is the most negative
     # step of the same magnitude bucket; A-law code 0x55 decodes to -8/32768
@@ -1013,10 +1005,8 @@ def test_g711_wav_decode_roundtrip_and_anchors():
 def test_g711_wav_feeds_audio_features(spark):
     """A format-7 (mu-law) WAV flows through the real-decode feature
     extractor like any PCM file — the seam is genuinely closed Spark-side."""
-    from covid19_spark.operators.multimodal import (
-        encode_wav_g711,
-        extract_audio_features,
-    )
+    from covid19_spark.operators.multimodal import extract_audio_features
+    from tests.media_gen import encode_wav_g711
 
     t = np.arange(8000, dtype=np.float32)
     sig = (0.5 * np.sin(2 * np.pi * 330 * t / 8000)).astype(np.float32)
@@ -1038,11 +1028,8 @@ def test_ima_adpcm_wav_roundtrip(spark):
     step-adaptive error bound, block headers resync exactly (sample 0 of
     every block is verbatim), and the payload feeds the real-decode
     feature extractor."""
-    from covid19_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ima_adpcm,
-        extract_audio_features,
-    )
+    from covid19_spark.operators.multimodal import decode_wav, extract_audio_features
+    from tests.media_gen import encode_wav_ima_adpcm
 
     t = np.arange(4040, dtype=np.float32)
     sig16 = (12000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)
@@ -1074,7 +1061,8 @@ def test_ima_adpcm_partial_block_roundtrips_exact_length():
     chunk with the true sample count and decode_wav trims the final block's
     zero-nibble padding to it (a 100-sample input used to come back as 505
     samples)."""
-    from covid19_spark.operators.multimodal import decode_wav, encode_wav_ima_adpcm
+    from covid19_spark.operators.multimodal import decode_wav
+    from tests.media_gen import encode_wav_ima_adpcm
 
     sig16 = (1000 * np.sin(np.arange(100) / 5.0)).astype(np.int16)
     wav = encode_wav_ima_adpcm(sig16, sample_rate=8000, block_samples=505)
@@ -1340,7 +1328,8 @@ def test_ms_adpcm_full_range_input_encodes():
     clamped to 32767 so the encode succeeds (advisor finding: struct.error
     instead of a WAV). The decode must still return the right shape with
     seeds verbatim."""
-    from covid19_spark.operators.multimodal import decode_wav, encode_wav_ms_adpcm
+    from covid19_spark.operators.multimodal import decode_wav
+    from tests.media_gen import encode_wav_ms_adpcm
 
     sig = np.tile(np.array([32767, -32768], dtype=np.int16), 500)
     wav = encode_wav_ms_adpcm(sig, sample_rate=8000, block_samples=500)
@@ -1388,11 +1377,8 @@ def test_ms_adpcm_wav_roundtrip(spark):
     extractor distributed."""
     import math
 
-    from covid19_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ms_adpcm,
-        extract_audio_features,
-    )
+    from covid19_spark.operators.multimodal import decode_wav, extract_audio_features
+    from tests.media_gen import encode_wav_ms_adpcm
 
     t = np.arange(4000, dtype=np.float32)
     sig16 = (12000 * np.sin(2 * np.pi * 440 * t / 8000)).astype(np.int16)

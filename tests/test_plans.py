@@ -298,6 +298,18 @@ def test_dedup_pipelines_never_go_quadratic(spark):
     assert "band" in plan and "bucket" in plan
 
 
+def _e2e_verified_pairs(docs):
+    """The discovery→verify stage ``lsh_dedup_pipeline`` runs for the
+    registry's ``dedup_pipeline_e2e`` (same parameters), lazy: the
+    pipeline's own plan is cut at the connected-components checkpoint.
+    Returns (pairs, the stage's persisted frames)."""
+    from covid19_spark.operators.dedup import _lsh_verified_pairs_with_handle
+
+    return _lsh_verified_pairs_with_handle(
+        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3, threshold=0.5
+    )
+
+
 def test_dedup_pipelines_shingle_text_exactly_once(spark):
     """The corpus text must be tokenized+shingled ONCE per pipeline: the
     shingle frame is persisted and every consumer (signature pass, verify
@@ -313,16 +325,12 @@ def test_dedup_pipelines_shingle_text_exactly_once(spark):
     earlier tests nest extra InMemoryTableScans inside these plans and the
     substring counts double (the r04 suite failed 16 == 8 in full-suite
     order while passing in isolation)."""
-    from covid19_spark.operators.dedup import lsh_verified_pairs
-
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = (
-        lsh_verified_pairs(docs, "doc_id", "text")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    pairs, caches = _e2e_verified_pairs(docs)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    for c in caches:
+        c.unpersist()
     assert plan.count("array_distinct(flatten") > 0, "expected the shingle expression"
     assert uncached_occurrences(plan, "array_distinct(flatten") == 0, (
         "uncached shingle computation(s): the shingle frame must be "
@@ -357,18 +365,13 @@ def test_no_exchange_directly_above_cached_shingles(spark):
     re-partition of the cached heavy shingle arrays — the r04 dedup-family
     bench regression (dedup_pipeline_e2e 7.5 s → 23.8 s; VERDICT r04
     §What's wrong #2)."""
-    from covid19_spark.operators.dedup import (
-        incremental_dedup_against_corpus,
-        lsh_verified_pairs,
-    )
+    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
 
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    pairs, caches = _e2e_verified_pairs(docs)
     plans = [
-        lsh_verified_pairs(docs, "doc_id", "text")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString(),
+        pairs._jdf.queryExecution().executedPlan().toString(),
         incremental_dedup_against_corpus(
             docs.filter(F.col("doc_id") % 4 < 3),
             docs.filter(F.col("doc_id") % 4 == 3),
@@ -376,6 +379,8 @@ def test_no_exchange_directly_above_cached_shingles(spark):
             threshold=0.5, materialize=False,
         )._jdf.queryExecution().executedPlan().toString(),
     ]
+    for c in caches:
+        c.unpersist()
     for plan in plans:
         lines = plan.splitlines()
         for i, ln in enumerate(lines):

@@ -382,7 +382,8 @@ def test_g711_companding_error_bound_property(n, law, seed):
     segment step, the clip distance above the top codeword) — for mu-law
     the top codeword is 32124/32768, so inputs near ±1 clip by up to
     1 - 0.9803 = 0.0197, which dominates the 0.0156 half-step."""
-    from covid19_spark.operators.multimodal import decode_wav, encode_wav_g711
+    from covid19_spark.operators.multimodal import decode_wav
+    from tests.media_gen import encode_wav_g711
 
     sig = (
         np.random.default_rng(seed).uniform(-1.0, 1.0, size=n).astype(np.float32)
@@ -486,7 +487,8 @@ def test_gif_roundtrip_property(h, w, ncolors, seed):
 def test_ms_adpcm_length_and_seed_property(n, seed):
     """For any sample count, MS-ADPCM round-trips to EXACTLY n samples
     (fact-chunk trim) with the per-block seed samples bit-exact."""
-    from covid19_spark.operators.multimodal import decode_wav, encode_wav_ms_adpcm
+    from covid19_spark.operators.multimodal import decode_wav
+    from tests.media_gen import encode_wav_ms_adpcm
 
     rng = np.random.default_rng(seed)
     sig = (rng.standard_normal(n) * 3000).astype(np.int16)

@@ -10,7 +10,6 @@ from covid19_spark.operators.quality import (
     expect_not_null,
     expect_unique,
     quality_report,
-    quarantine_split,
 )
 
 ROWS = [
@@ -54,20 +53,6 @@ def test_quality_report_is_single_pass(spark):
     # single-partial-row agg exchange
     assert "Join" not in plan
     assert plan.count("Scan") <= 1
-
-
-def test_quarantine_split_semantics(spark):
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    clean, quarantine = quarantine_split(df, rules())
-    assert {r["id"] for r in clean.collect()} == {1, 4}  # dup id 4 row w/ good fields stays
-    q = {r["email"]: set(r["violated_rules"]) for r in quarantine.collect()}
-    assert q[None] == {"email_not_null", "email_matches"}
-    assert q["c@x.com"] == {"price_in_range"}
-    assert q["d@x.com"] == {"status_in_set"}
-    # clean + quarantine partition the table
-    assert clean.count() + quarantine.count() == df.count()
-    with pytest.raises(ValueError, match="row-level"):
-        quarantine_split(df, [expect_unique("id")])
 
 
 def test_mad_outlier_report_flags_planted_outliers(spark):

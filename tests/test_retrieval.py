@@ -199,79 +199,6 @@ def test_bm25_topk_multi_matches_single_query(spark, tmp_path):
     assert 13 not in by_q  # no postings -> no rows
 
 
-def test_bm25_query_sink_serves_stream_and_sees_ingest(spark, tmp_path):
-    """The lexical serving loop on streams (make_bm25_query_sink): a
-    query-term stream answered per micro-batch matches the batch answers,
-    and documents ingested by make_index_ingest_sink BETWEEN query batches
-    are searchable by the next batch (the reopen-per-batch contract)."""
-    from covid19_spark.operators.retrieval import (
-        bm25_topk_multi, make_bm25_query_sink,
-    )
-    from covid19_spark.sources.index import append_inverted_index, read_inverted_index
-
-    idx_path, _ = _mk_index(spark, tmp_path)
-    schema = "query_id long, terms array<string>"
-    q_src = str(tmp_path / "q_src")
-    results = str(tmp_path / "results")
-
-    # batch 1: two queries against the base corpus
-    spark.createDataFrame(
-        [(10, ["spark", "hash"]), (11, ["eviction"])], schema
-    ).coalesce(1).write.mode("append").parquet(q_src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(q_src)
-        .writeStream.foreachBatch(make_bm25_query_sink(idx_path, results, k=3))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        stream.processAllAvailable()
-        r1 = spark.read.parquet(results).collect()
-        # EVERY asked query appears (ADVICE r13): "eviction" is unknown
-        # yet, so query 11 lands as the NULL marker row — answered with
-        # zero hits, not lost
-        assert {r.query_id for r in r1} == {10, 11}
-        markers = [r for r in r1 if r.query_id == 11]
-        assert len(markers) == 1 and markers[0].doc_id is None
-        assert markers[0].rank is None and markers[0].score is None
-        assert all(r.doc_id is not None for r in r1 if r.query_id == 10)
-        # ingest a new doc between batches, then re-ask for "eviction"
-        append_inverted_index(
-            spark.createDataFrame(
-                [(100, "eviction policy spark")], "doc_id long, text string"
-            ),
-            idx_path,
-        )
-        spark.createDataFrame(
-            [(12, ["eviction"]), (13, ["spark", "hash"])], schema
-        ).coalesce(1).write.mode("append").parquet(q_src)
-        stream.processAllAvailable()
-    finally:
-        stream.stop()
-
-    rows = spark.read.parquet(results).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
-    assert [d for _, d, _ in sorted(by_q[12])] == [100]  # ingested doc found
-    # batch answers == the batch twin over the CURRENT index
-    idx_now = read_inverted_index(spark, idx_path)
-    want = {
-        (r.query_id, r.rank, r.doc_id, r.score)
-        for r in bm25_topk_multi(
-            spark, idx_now,
-            spark.createDataFrame([(13, ["spark", "hash"])], schema), k=3,
-        ).collect()
-    }
-    got = {(13, r, d, s) for r, d, s in by_q[13]}
-    assert got == want
-    # query 10 ran BEFORE the ingest: its recorded scores reflect the
-    # 4-doc corpus (n/avgdl moved with the append), so replaying it now
-    # would differ — the results table is an audit log, not a cache
-    assert sorted(by_q[10]) != sorted(by_q[13])
-
-
 def test_bm25_term_frame_join_equals_literal_filter(spark, tmp_path):
     """The index-served BM25 must score identically through BOTH term
     seams (data-dependent term frame — the prf path — and literal list
@@ -700,121 +627,3 @@ def test_dismax_guards(spark, tmp_path):
         )
 
 
-def test_fielded_append_equals_rebuild_and_compaction(spark, tmp_path):
-    """Fielded-index maintenance parity with the main index: an append
-    is bit-identical to a one-shot rebuild over base ∪ delta (postings
-    multiset, field avgdl, and DisMax/BM25F serving), and compaction
-    bounds the fragment count without moving a score."""
-    import glob
-
-    from covid19_spark.operators.retrieval import bm25f_scores_from_index
-    from covid19_spark.sources.index import (
-        append_fielded_index,
-        build_fielded_index_from,
-        compact_fielded_index,
-        read_fielded_index,
-    )
-
-    fields = {"title": F.col("title"), "body": F.col("body")}
-    schema = "doc_id long, title string, body string"
-    base = spark.createDataFrame(
-        [(1, "spark hash", "join scan exchange"), (2, "window", "spark hash row")],
-        schema,
-    )
-    deltas = [
-        spark.createDataFrame([(3 + i, f"spark d{i}", f"hash body d{i} join")], schema)
-        for i in range(6)
-    ]
-    inc = str(tmp_path / "finc")
-    build_fielded_index_from(base, inc, fields)
-    for d in deltas:
-        append_fielded_index(d, inc, fields)
-    oneshot = str(tmp_path / "fone")
-    all_docs = base
-    for d in deltas:
-        all_docs = all_docs.unionByName(d)
-    build_fielded_index_from(all_docs, oneshot, fields)
-
-    got_idx, want_idx = read_fielded_index(spark, inc), read_fielded_index(spark, oneshot)
-    assert got_idx.n_docs == want_idx.n_docs == 8.0
-    assert got_idx.avgdl == want_idx.avgdl
-
-    def postings_set(idx):
-        return sorted(
-            (r.t, r.field, r.doc_id, r.tf, r.dl) for r in idx.postings.collect()
-        )
-
-    assert postings_set(got_idx) == postings_set(want_idx)
-    w = {"title": 2.0, "body": 1.0}
-    serve = lambda idx: sorted(  # noqa: E731
-        (r.doc_id, r.score)
-        for r in bm25f_scores_from_index(spark, idx, ["spark", "hash"], weights=w).collect()
-    )
-    assert serve(got_idx) == serve(want_idx)
-
-    # compaction: fragments bounded to one file per bucket, serving fixed
-    before = len(glob.glob(f"{inc}/fpostings/**/*.parquet", recursive=True))
-    res = compact_fielded_index(spark, inc, file_threshold=2)
-    after = len(glob.glob(f"{inc}/fpostings/**/*.parquet", recursive=True))
-    n_dirs = len(glob.glob(f"{inc}/fpostings/tb=*"))
-    assert res["fpostings"] and after == n_dirs and after < before
-    assert serve(read_fielded_index(spark, inc)) == serve(want_idx)
-
-
-def test_fielded_ingest_sink_stream(spark, tmp_path):
-    """Streaming ingest into the fielded index (make_fielded_ingest_sink):
-    build-then-append through a real file-source stream, post-stream
-    serving equals a one-shot build, auto-compaction keeps fragments at
-    the one-file-per-bucket floor."""
-    import glob
-    import os
-
-    from covid19_spark.operators.retrieval import bm25f_scores_from_index
-    from covid19_spark.sources.index import (
-        build_fielded_index_from,
-        make_fielded_ingest_sink,
-        read_fielded_index,
-    )
-
-    fields = {"title": F.col("title"), "body": F.col("body")}
-    schema = "doc_id long, title string, body string"
-    rows = [
-        (i, f"spark title{i}", f"hash join body{i} word{i % 3}")
-        for i in range(10)
-    ]
-    src = str(tmp_path / "fsrc")
-    os.makedirs(src)
-    for r in rows:
-        spark.createDataFrame([r], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    idx_path = str(tmp_path / "fstream_idx")
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(
-            make_fielded_ingest_sink(
-                idx_path, fields, compact_every=3, file_threshold=3
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "fckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    oneshot = str(tmp_path / "fstream_one")
-    build_fielded_index_from(spark.createDataFrame(rows, schema), oneshot, fields)
-    w = {"title": 2.0, "body": 1.0}
-    serve = lambda p: sorted(  # noqa: E731
-        (r.doc_id, r.score)
-        for r in bm25f_scores_from_index(
-            spark, read_fielded_index(spark, p), ["spark", "hash"], weights=w
-        ).collect()
-    )
-    assert serve(idx_path) == serve(oneshot)
-    frags = len(glob.glob(f"{idx_path}/fpostings/**/*.parquet", recursive=True))
-    n_dirs = len(glob.glob(f"{idx_path}/fpostings/tb=*"))
-    # 9 appends, compactions at 3/6/9: at most compact_every appends'
-    # fragments above the one-file-per-bucket floor
-    assert frags <= n_dirs + 3 * 4, (frags, n_dirs)

@@ -1,5 +1,6 @@
-"""Scratch-dir lifecycle (sources/scratch.py): stale-PID reaping and the
-replace_dir failed-publish restore (VERDICT r13 task #3, ADVICE r13).
+"""Scratch-dir lifecycle (sources/scratch.py): stale-PID reaping, the
+replace_dir failed-publish restore (VERDICT r13 task #3, ADVICE r13), and a
+failed build removing only its own scratch dir.
 
 No Spark needed — this is pure directory-protocol logic."""
 
@@ -119,3 +120,29 @@ def test_replace_dir_failed_publish_restores_stale(tmp_path, monkeypatch):
     assert open(os.path.join(path, "v")).read() == "stale"
     assert not os.path.exists(tmp)
     assert [n for n in os.listdir(str(tmp_path)) if "__old_" in n] == []
+
+
+def test_failed_build_removes_only_its_own_scratch(tmp_path):
+    """A build that raises leaves no ``__build_`` sibling behind, and the
+    error still surfaces.  A dead writer's ``__old_`` sibling survives:
+    after a crash between ``replace_dir``'s two renames it is the only
+    complete copy of the store."""
+    import pytest
+
+    path = str(tmp_path / "idx")
+    old = f"{path}__old_{_dead_pid()}_89efcdab"
+    os.makedirs(old)
+    with open(os.path.join(old, "marker"), "w") as f:
+        f.write("x")
+
+    def build(tmp):
+        os.makedirs(os.path.join(tmp, "postings"))
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        scratch.ensure_store(
+            None, path, is_fresh=lambda: False, build=build,
+            open_store=lambda spark, p: p, stamp_dirs=(),
+        )
+    assert sorted(os.listdir(tmp_path)) == [os.path.basename(old)]
+    assert os.path.isfile(os.path.join(old, "marker"))

@@ -104,119 +104,3 @@ def test_nulls_are_ignored(spark):
     assert got == {"a": 2}
 
 
-def test_streaming_heavy_hitters_accumulates_across_batches(spark):
-    """The streaming twin: Misra-Gries state carries across micro-batches,
-    the newest per-shard emission satisfies the batch operator's bounds
-    against the EXACT counts of everything streamed so far, and every
-    global heavy hitter is present in its shard's summary."""
-    import shutil
-    import tempfile
-
-    from covid19_spark.streaming.heavy_hitters_stream import streaming_heavy_hitters
-
-    d = tempfile.mkdtemp(prefix="hhstream_")
-    src, ckpt = f"{d}/src", f"{d}/ckpt"
-    m, shards = 16, 4
-    batch1 = ["hot"] * 200 + [f"tail{j}" for j in range(150)]
-    batch2 = ["hot"] * 300 + [f"mid{j}" for j in range(10) for _ in range(40)]
-    try:
-        for i, items in enumerate((batch1, batch2)):
-            spark.createDataFrame(
-                [(x,) for x in items], "item string"
-            ).coalesce(1).write.parquet(f"{src}/f{i}")
-        stream = (
-            spark.readStream.schema("item string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        sk = streaming_heavy_hitters(stream, "item", capacity=m, shards=shards)
-        q = (
-            sk.writeStream.format("memory")
-            .queryName("hh_stream")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        rows = spark.table("hh_stream").collect()
-        latest_emission = {}
-        for r in rows:
-            latest_emission[r.shard] = max(latest_emission.get(r.shard, 0), r.emission)
-        est = {
-            r.item: r.est
-            for r in rows
-            if r.emission == latest_emission[r.shard]
-        }
-        truth = Counter(batch1 + batch2)
-        n = len(batch1) + len(batch2)
-        for item, cnt in truth.items():
-            e = est.get(item, 0)
-            assert e <= cnt, item
-            assert e * m >= cnt * m - n, item
-            if cnt * m > n:
-                assert item in est and est[item] > 0, item
-        # 'hot' spans both batches: state must have accumulated, so its
-        # estimate exceeds anything a single batch could produce alone
-        assert est["hot"] > 300 - n // m
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_streaming_heavy_hitters_checkpoint_recovery(spark, tmp_path):
-    """The sketch counters must survive a kill/restart from checkpoint:
-    batch 2 (processed by a FRESH query object on the same checkpoint)
-    builds on batch 1's counters, so the post-restart estimate for an
-    item spanning both batches reflects BOTH — not a cold restart."""
-    from covid19_spark.streaming.heavy_hitters_stream import streaming_heavy_hitters
-
-    import os
-
-    d = str(tmp_path)
-    src, ckpt, out = f"{d}/src", f"{d}/ckpt", f"{d}/out"
-    os.makedirs(src)
-    m, shards = 16, 2
-
-    def start():
-        stream = spark.readStream.schema("item string").parquet(src)
-        return (
-            streaming_heavy_hitters(stream, "item", capacity=m, shards=shards)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    batch1 = ["hot"] * 100 + [f"a{j}" for j in range(40)]
-    batch2 = ["hot"] * 150 + [f"b{j}" for j in range(40)]
-
-    q1 = start()
-    try:
-        spark.createDataFrame([(x,) for x in batch1], "item string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        q1.processAllAvailable()
-    finally:
-        q1.stop()  # mid-stream kill
-
-    spark.createDataFrame([(x,) for x in batch2], "item string").coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    q2 = start()  # fresh query, SAME checkpoint
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    rows = spark.read.parquet(out).collect()
-    latest = {}
-    for r in rows:
-        latest[r.shard] = max(latest.get(r.shard, 0), r.emission)
-    est = {r.item: r.est for r in rows if r.emission == latest[r.shard]}
-    n = len(batch1) + len(batch2)
-    # 250 true 'hot' occurrences; a cold restart could report at most
-    # 150; the carried state must push it above that even after MG decay
-    assert est["hot"] > 150, est.get("hot")
-    assert est["hot"] >= 250 - n // m
-    assert est["hot"] <= 250

@@ -6,7 +6,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from covid19_spark.operators.delta import running_delta
@@ -452,26 +451,6 @@ def test_alert_fanout_semantics(stream_env):
     assert [(r.userId, r.state) for r in out] == [("u1", "Assam")]
 
 
-def test_session_window_stream(stream_env):
-    from covid19_spark.streaming.windowed import session_window_agg
-
-    spark, d, src, ckpt = stream_env
-    rows = [
-        ("Assam", ts("2020-04-08T10:00:00"), 1.0, 0.0, 0.0),
-        ("Assam", ts("2020-04-08T10:10:00"), 2.0, 0.0, 0.0),  # same session
-        ("Assam", ts("2020-04-08T12:00:00"), 3.0, 0.0, 0.0),  # new session
-    ]
-    spark.createDataFrame(rows, SNAP_SCHEMA).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(SNAP_SCHEMA).parquet(src)
-    sessions = session_window_agg(
-        stream, "ts", ["state"], gap="30 minutes", sum_cols=["confirmed"]
-    )
-    out = run_stream_to_memory(spark, sessions, "sessions_stream", ckpt, mode="complete").collect()
-    got = {(r.state, r.session_start): (r.n_events, r.sum_confirmed) for r in out}
-    assert got[("Assam", ts("2020-04-08T10:00:00"))] == (2, 3.0)
-    assert got[("Assam", ts("2020-04-08T12:00:00"))] == (1, 3.0)
-
-
 def test_stream_stream_interval_join(stream_env):
     """Stream-stream attribution: purchases match clicks within the window,
     across micro-batches, with watermark-bounded state."""
@@ -543,72 +522,6 @@ def test_upsert_sequence_equals_global_latest(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-ASOF_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-ASOF_EVENTS_B1 = [
-    (1, ts("2024-01-01T10:00:00"), "view", 1, 10.0),
-    (1, ts("2024-01-01T10:30:00"), "purchase", 2, 99.0),   # -> view 1
-    (1, ts("2024-01-01T11:00:00"), "view", 3, 11.0),
-    (2, ts("2024-01-01T10:00:00"), "purchase", 4, 50.0),   # no view yet -> null
-]
-ASOF_EVENTS_B2 = [
-    (1, ts("2024-01-01T12:00:00"), "purchase", 5, 77.0),   # -> view 3 (carried state)
-    (2, ts("2024-01-01T12:00:00"), "view", 6, 20.0),
-    (2, ts("2024-01-01T12:00:00"), "purchase", 7, 60.0),   # equal ts -> inclusive, view 6
-]
-
-
-def test_streaming_asof_enrich_matches_batch_asof_join(stream_env):
-    from covid19_spark.operators.asof import asof_join
-    from covid19_spark.streaming.asof_stream import streaming_asof_enrich
-
-    spark, d, src, ckpt = stream_env
-    import os
-
-    os.makedirs(src)
-    # two micro-batches: state must carry user 1's latest view across them
-    spark.createDataFrame(ASOF_EVENTS_B1, ASOF_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame(ASOF_EVENTS_B2, ASOF_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(ASOF_SCHEMA).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    out = run_stream_to_memory(
-        spark,
-        streaming_asof_enrich(
-            stream, "user_id", "ts", "event_type", "event_id", "value", "view"
-        ),
-        "asof_stream",
-        ckpt,
-    ).collect()
-    got = {r["event_id"]: (r["ref_id"], r["ref_value"]) for r in out}
-    assert got == {2: (1, 10.0), 4: (None, None), 5: (3, 11.0), 7: (6, 20.0)}
-
-    # batch twin over the union of both batches gives identical matches
-    all_ev = spark.createDataFrame(ASOF_EVENTS_B1 + ASOF_EVENTS_B2, ASOF_SCHEMA)
-    purchases = all_ev.filter(F.col("event_type") == "purchase")
-    views = all_ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    batch = asof_join(
-        purchases, views, ["user_id"], "ts", "ts",
-        right_payload=["ts", "event_id", "value"], right_tiebreak="event_id",
-    )
-    batch_got = {r["event_id"]: (r["event_id_r"], r["value_r"]) for r in batch.collect()}
-    assert batch_got == got
-
-
 def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
     """The stateful-delta kernel must concat-then-sort: chunked,
     out-of-order arrival gives the same deltas as one sorted frame, with
@@ -642,326 +555,6 @@ def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
     assert out_e is None and prev_e == [5.0]
 
 
-def test_streaming_lsh_dedup_first_wins_across_batches(stream_env):
-    """Continuous near-dup filter: batch 2's near-copy of a batch-1 doc is
-    dropped against the persistent signature store; an in-batch near-dup
-    pair keeps only its smallest id; distinct docs always pass."""
-    from covid19_spark.streaming.dedup_lsh_stream import make_lsh_dedup_sink
-
-    spark, d, src, ckpt = stream_env
-    import os
-
-    os.makedirs(src)
-    text_a = " ".join(f"alpha{i}" for i in range(20))
-    text_a_near = text_a.replace("alpha9", "beta9")  # 1 of 20 words changed
-    text_b = " ".join(f"bravo{i}" for i in range(20))
-    text_c = " ".join(f"charlie{i}" for i in range(20))
-    text_d = " ".join(f"delta{i}" for i in range(20))
-    text_d_near = text_d.replace("delta3", "omega3")
-
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [(1, text_a), (2, text_b)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(3, text_a_near), (4, text_c), (5, text_d), (6, text_d_near)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    out_path, store = f"{d}/accepted", f"{d}/store"
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(
-            make_lsh_dedup_sink(
-                out_path, store, "doc_id", "text", threshold=0.5
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    accepted = {r["doc_id"] for r in spark.read.parquet(out_path).collect()}
-    assert accepted == {1, 2, 4, 5}  # 3 ≈ 1 (history), 6 ≈ 5 (in batch)
-    # store holds signatures/buckets ONLY for accepted docs
-    sig_ids = {r["doc_id"] for r in spark.read.parquet(f"{store}/sigs").collect()}
-    assert sig_ids == {1, 2, 4, 5}
-    # a third batch re-offering a dropped text is still rejected
-    spark.createDataFrame([(7, text_a)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q2 = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(
-            make_lsh_dedup_sink(out_path, store, "doc_id", "text", threshold=0.5)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(180)
-    accepted = {r["doc_id"] for r in spark.read.parquet(out_path).collect()}
-    assert accepted == {1, 2, 4, 5}  # 7 == text_a verbatim -> dropped
-
-
-def test_compact_lsh_store_preserves_dedup_semantics(stream_env):
-    """The streaming store grows one fragment per micro-batch; compaction
-    rewrites it into few files with identical content — the distinct
-    signature/bucket row sets are unchanged and a re-offered duplicate is
-    still rejected afterwards."""
-    import glob
-    import os
-
-    from covid19_spark.streaming.dedup_lsh_stream import (
-        compact_lsh_store,
-        make_lsh_dedup_sink,
-    )
-
-    spark, d, _src, _ckpt = stream_env
-    out_path, store = f"{d}/accepted", f"{d}/store"
-    sink = make_lsh_dedup_sink(out_path, store, "doc_id", "text", threshold=0.5)
-    schema = "doc_id long, text string"
-    # 10 one-doc micro-batches -> >8 fragments in each store
-    for i in range(10):
-        text = " ".join(f"tok{i}_{j}" for j in range(20))
-        sink(spark.createDataFrame([(i, text)], schema), i)
-
-    def n_frags(sub):
-        return len(glob.glob(os.path.join(store, sub, "**", "*.parquet"), recursive=True))
-
-    before_files = {s: n_frags(s) for s in ("sigs", "buckets")}
-    assert all(n > 8 for n in before_files.values()), before_files
-    def sig_set():
-        return {
-            (r["doc_id"], tuple(r["sig"]))
-            for r in spark.read.parquet(f"{store}/sigs").collect()
-        }
-
-    sig_rows = sig_set()
-    bucket_rows = {tuple(r) for r in spark.read.parquet(f"{store}/buckets").collect()}
-
-    assert compact_lsh_store(spark, store, "doc_id") == {"sigs": True, "buckets": True}
-    after_files = {s: n_frags(s) for s in ("sigs", "buckets")}
-    assert all(after_files[s] < before_files[s] for s in after_files)
-    assert sig_set() == sig_rows
-    assert {tuple(r) for r in spark.read.parquet(f"{store}/buckets").collect()} == bucket_rows
-    # one file per partition dir is the compacted floor: a second call is a no-op
-    assert compact_lsh_store(spark, store, "doc_id") == {"sigs": False, "buckets": False}
-
-    # a near-copy of batch-3's doc is still dropped against the compacted store
-    dup = " ".join(f"tok3_{j}" for j in range(20)).replace("tok3_9", "other")
-    sink(spark.createDataFrame([(100, dup), (101, "totally fresh words entirely")], schema), 10)
-    accepted = {r["doc_id"] for r in spark.read.parquet(out_path).collect()}
-    assert 100 not in accepted and 101 in accepted
-
-
-def test_streaming_lsh_store_probe_is_partition_pruned(stream_env):
-    """The history probe must not read the whole bucket store: the store is
-    partitioned by (band, bucket_mod) and the probe filter prunes to the
-    batch's own keys — a one-doc probe batch reads a strict subset of the
-    store's files, and the predicate lands in the scan's PartitionFilters
-    (pruning before IO, not a post-scan filter)."""
-    from covid19_spark.operators.dedup import band_buckets, minhash_signatures
-    from covid19_spark.streaming.dedup_lsh_stream import (
-        make_lsh_dedup_sink,
-        pruned_bucket_store,
-    )
-
-    spark, d, _src, _ckpt = stream_env
-    out_path, store = f"{d}/accepted", f"{d}/store"
-    sink = make_lsh_dedup_sink(out_path, store, "doc_id", "text", threshold=0.5)
-    schema = "doc_id long, text string"
-    # a wide history: 30 distinct docs spread buckets over many partitions
-    rows = [
-        (i, " ".join(f"word{i}_{j}" for j in range(20))) for i in range(30)
-    ]
-    sink(spark.createDataFrame(rows, schema), 0)
-
-    def files_read(df):
-        # input_file_name over the EXECUTED scan — inputFiles() reports the
-        # unpruned relation and would not see partition pruning
-        return {
-            r[0]
-            for r in df.select(F.input_file_name()).distinct().collect()
-        }
-
-    all_files = files_read(spark.read.parquet(f"{store}/buckets"))
-    assert len(all_files) > 8  # the spread actually happened
-
-    probe = spark.createDataFrame(
-        [(100, " ".join(f"fresh{j}" for j in range(20)))], schema
-    )
-    banded = band_buckets(
-        minhash_signatures(probe, "doc_id", "text", 32, 3), "doc_id", 32, 8
-    )
-    pruned = pruned_bucket_store(spark, store, banded)
-    probe_files = files_read(pruned)
-    assert probe_files < all_files, (len(probe_files), len(all_files))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # and dedup semantics through the pruned probe are unchanged: a
-    # near-copy of a history doc is still dropped, fresh text accepted
-    dup = rows[7][1].replace("word7_9", "changed")
-    sink(spark.createDataFrame([(200, dup), (201, rows[7][1])], schema), 1)
-    accepted = {r["doc_id"] for r in spark.read.parquet(out_path).collect()}
-    assert 200 not in accepted and 201 not in accepted
-
-
-def test_crawl_corpus_stream_cross_batch_dedup(stream_env):
-    """Continuous crawl ingestion (streaming twin of crawl_to_corpus): the
-    extraction chain runs per micro-batch and the URL/content dedups hold
-    ACROSS batches — a page re-crawled under the same canonical URL in a
-    later batch is dropped, as is a different URL carrying already-seen
-    content; genuinely new pages survive. First-arrival-wins (the crawl
-    frontier semantic), vs the batch query's lowest-doc_id policy."""
-    import os
-
-    from covid19_spark.sources.warc import (
-        encode_warc,
-        encode_warc_record,
-        http_response_block,
-    )
-    from covid19_spark.streaming.crawl_stream import crawl_corpus_stream
-
-    spark, d, src, ckpt = stream_env
-    os.makedirs(src)
-
-    def page(words):
-        return (
-            "<html><head><script>if (a<2){}</script></head><body>"
-            "<div>Home</div><p>" + words + "</p><p>was — cited</p>"
-            "<p>was - cited</p><div>Home</div></body></html>"
-        ).encode()
-
-    def blob(wid, url, body, status=200):
-        block = http_response_block(status, "OK" if status == 200 else "Bad", body)
-        return encode_warc(
-            [
-                encode_warc_record(
-                    "response", f"r{wid}", block, target_uri=url,
-                    content_type="application/http; msgtype=response",
-                )
-            ],
-            gzip_per_record=wid % 2 == 1,
-        )
-
-    schema = "warc_id long, payload binary, fetched_at timestamp"
-    batch1 = [
-        (1, blob(1, "HTTPS://A.Example:443/p1/?utm_source=x", page("alpha beta gamma delta")), ts("2024-01-01T10:00:00")),
-        (2, blob(2, "https://b.example/p2", page("epsilon zeta eta theta")), ts("2024-01-01T10:01:00")),
-        (3, blob(3, "https://c.example/p404", b"nope", 404), ts("2024-01-01T10:02:00")),
-        (4, blob(4, "https://d.example/short", "<p>tiny</p>".encode()), ts("2024-01-01T10:03:00")),
-    ]
-    batch2 = [
-        # same canonical URL as doc 1 (case/port/utm variants) -> dropped
-        (5, blob(5, "https://a.example/p1", page("totally new words here")), ts("2024-01-01T11:00:00")),
-        # new URL, same CONTENT as doc 2 -> dropped by the fingerprint dedup
-        (6, blob(6, "https://e.example/p6", page("epsilon zeta eta theta")), ts("2024-01-01T11:01:00")),
-        # genuinely new -> survives
-        (7, blob(7, "https://f.example/p7", page("iota kappa lambda mu")), ts("2024-01-01T11:02:00")),
-    ]
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        crawl_corpus_stream(stream, retention="2 days")
-        .writeStream.format("memory")
-        .queryName("crawl_corpus")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        out = {r.doc_id: r for r in spark.table("crawl_corpus").collect()}
-    finally:
-        q.stop()
-
-    assert sorted(out) == [1, 2, 7]  # 3 = 404, 4 = short, 5 = URL dup, 6 = content dup
-    assert out[1].canonical == "https://a.example/p1"
-    assert out[1].clean_text == "Home\n\nalpha beta gamma delta\n\nwas - cited"
-    assert out[1].n_words == 8
-    assert out[7].clean_text == "Home\n\niota kappa lambda mu\n\nwas - cited"
-
-
-def test_crawl_health_stream_classifies_and_windows(stream_env):
-    """The permissive ingest monitor: torn/non-WARC archives become
-    classified error rows (the stream survives), response statuses roll up
-    by class per tumbling window, and counts are correct on window close."""
-    import os
-
-    from covid19_spark.sources.warc import (
-        encode_warc,
-        encode_warc_record,
-        http_response_block,
-    )
-    from covid19_spark.streaming.crawl_stream import crawl_health_stream
-
-    spark, d, src, ckpt = stream_env
-    os.makedirs(src)
-
-    def blob(wid, status=200):
-        recs = [
-            encode_warc_record(
-                "request", f"q{wid}", b"GET / HTTP/1.1\r\n\r\n",
-                target_uri=f"https://h{wid}.example/",
-                content_type="application/http; msgtype=request",
-            ),
-            encode_warc_record(
-                "response", f"r{wid}",
-                http_response_block(status, "S", b"x"),
-                target_uri=f"https://h{wid}.example/",
-                content_type="application/http; msgtype=response",
-            ),
-        ]
-        return encode_warc(recs, gzip_per_record=wid % 2 == 1)
-
-    schema = "warc_id long, payload binary, fetched_at timestamp"
-    t0 = ts("2024-01-01T10:00:00")
-    rows = [
-        (1, blob(1, 200), t0),
-        (2, blob(2, 404), t0),
-        (3, b"\x7fNOTWARC" + blob(3)[:24], t0),  # classified, not fatal
-        (4, blob(4, 200), t0),
-        # a later-window record whose arrival CLOSES the first window
-        (5, blob(5, 200), ts("2024-01-01T12:00:00")),
-    ]
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        crawl_health_stream(stream, watermark="30 minutes", window_duration="10 minutes")
-        .writeStream.format("memory")
-        .queryName("crawl_health")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        spark.createDataFrame(rows[:4], schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        spark.createDataFrame(rows[4:], schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        out = {
-            (r.window_start.isoformat(), r.outcome): r.n
-            for r in spark.table("crawl_health").collect()
-        }
-    finally:
-        q.stop()
-
-    w0 = "2024-01-01T10:00:00"
-    assert out[(w0, "http_2xx")] == 2
-    assert out[(w0, "http_4xx")] == 1
-    assert out[(w0, "rec:request")] == 3  # the torn blob parses no records
-    assert len([k for k in out if k[0] == w0 and k[1].startswith("error:")]) == 1
-
-
 def test_chained_topology_equals_batch_delta_rollup(stream_env, rocksdb_state_store):
     """The §3.1 chained topology (stateful delta -> daily windowed rollup,
     one query, on get_spark's RocksDB state store) must equal the batch
@@ -988,90 +581,6 @@ def test_chained_topology_equals_batch_delta_rollup(stream_env, rocksdb_state_st
         )
 
     assert rows(out) == rows(expected)
-
-
-def test_crawl_corpus_stream_checkpoint_recovery(stream_env):
-    """VERDICT r09 task #6: the crawl-frontier guarantee must survive a
-    restart — kill the query after batch 1, start a NEW query from the same
-    checkpoint, and both stateful dedups (canonical URL and content
-    fingerprint) must still drop batch-2 duplicates of batch-1 pages.
-    The reference's dedup transformer survives restarts via changelog
-    restore (DeduplicationTransformer.java:37-88); here the state store +
-    checkpoint carry the same first-arrival-wins contract."""
-    import os
-
-    from covid19_spark.sources.warc import (
-        encode_warc,
-        encode_warc_record,
-        http_response_block,
-    )
-    from covid19_spark.streaming.crawl_stream import crawl_corpus_stream
-
-    spark, d, src, ckpt = stream_env
-    os.makedirs(src)
-
-    def page(words):
-        return f"<html><body><p>{words}</p></body></html>".encode()
-
-    def blob(wid, url, body):
-        block = http_response_block(200, "OK", body)
-        return encode_warc(
-            [
-                encode_warc_record(
-                    "response", f"r{wid}", block, target_uri=url,
-                    content_type="application/http; msgtype=response",
-                )
-            ]
-        )
-
-    schema = "warc_id long, payload binary, fetched_at timestamp"
-    batch1 = [
-        (1, blob(1, "https://a.example/p1", page("alpha beta gamma delta epsilon")), ts("2024-01-01T10:00:00")),
-        (2, blob(2, "https://b.example/p2", page("zeta eta theta iota kappa")), ts("2024-01-01T10:01:00")),
-    ]
-    batch2 = [
-        # URL dup of doc 1 (state from BEFORE the restart must catch it)
-        (5, blob(5, "https://a.example/p1", page("all new words after restart ok")), ts("2024-01-01T11:00:00")),
-        # content dup of doc 2 under a fresh URL (fingerprint state likewise)
-        (6, blob(6, "https://e.example/p6", page("zeta eta theta iota kappa")), ts("2024-01-01T11:01:00")),
-        # genuinely new -> must survive
-        (7, blob(7, "https://f.example/p7", page("lambda mu nu xi omicron")), ts("2024-01-01T11:02:00")),
-    ]
-
-    out_dir = f"{d}/out"
-
-    def start():
-        # file sink: the one built-in sink that SUPPORTS checkpoint
-        # recovery (memory/console refuse), and the production shape anyway
-        stream = spark.readStream.schema(schema).parquet(src)
-        return (
-            crawl_corpus_stream(stream, retention="2 days")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start()
-    try:
-        spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
-        q1.processAllAvailable()
-    finally:
-        q1.stop()  # the mid-stream kill
-    got1 = sorted(r.doc_id for r in spark.read.parquet(out_dir).collect())
-    assert got1 == [1, 2]
-
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-    q2 = start()  # fresh query object, SAME checkpoint
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    got2 = sorted(r.doc_id for r in spark.read.parquet(out_dir).collect())
-    # 5 (URL dup of 1) and 6 (content dup of 2) must still be dropped by
-    # state restored from the checkpoint; only 7 is new
-    assert got2 == [1, 2, 7], "batch-1 dedup state must survive the restart"
 
 
 def test_stream_stream_left_outer_join_flushes_unmatched(stream_env):

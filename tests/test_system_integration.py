@@ -257,300 +257,3 @@ def test_user_request_round_trip_over_emulated_topics(env):
     assert "Delhi|      4|      1|     1" in today_text
 
 
-def test_crawl_stream_to_corpus_table(env):
-    """Full crawl system: continuous WARC ingestion (crawl_corpus_stream)
-    feeding the incremental hash-bucketed upsert sink into a queryable
-    corpus table — a recrawl of an already-ingested canonical URL inside
-    the dedup horizon never reaches the table, and the table end-state is
-    one row per surviving page with the cleaned text."""
-    import datetime as _dt
-
-    from covid19_spark.sources.warc import (
-        encode_warc,
-        encode_warc_record,
-        http_response_block,
-    )
-    from covid19_spark.streaming.crawl_stream import crawl_corpus_stream
-    from covid19_spark.streaming.table import make_upsert_sink
-
-    spark, d = env
-    src, ckpt, table = f"{d}/crawl_src", f"{d}/crawl_ckpt", f"{d}/corpus"
-    os.makedirs(src)
-    t = _dt.datetime.fromisoformat
-
-    def blob(wid, url, words):
-        html = (
-            "<html><body><div>Home</div><p>" + words + "</p>"
-            "<p>was — cited</p><p>was - cited</p><div>Home</div></body></html>"
-        ).encode()
-        return encode_warc(
-            [
-                encode_warc_record(
-                    "response", f"r{wid}", http_response_block(200, "OK", html),
-                    target_uri=url,
-                    content_type="application/http; msgtype=response",
-                )
-            ],
-            gzip_per_record=wid % 2 == 1,
-        )
-
-    schema = "warc_id long, payload binary, fetched_at timestamp"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        crawl_corpus_stream(stream, retention="1 day")
-        .writeStream.foreachBatch(
-            make_upsert_sink(table, ["canonical"], "fetched_at", n_buckets=4)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        spark.createDataFrame(
-            [
-                (1, blob(1, "https://a.example/p", "alpha beta gamma delta"), t("2024-02-01T10:00:00")),
-                (2, blob(2, "https://b.example/p", "epsilon zeta eta theta"), t("2024-02-01T10:01:00")),
-            ],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        spark.createDataFrame(
-            [
-                # recrawl of a.example within the horizon: never reaches the sink
-                (3, blob(3, "HTTPS://A.Example:443/p", "different words now here"), t("2024-02-01T11:00:00")),
-                (4, blob(4, "https://c.example/p", "iota kappa lambda mu"), t("2024-02-01T11:01:00")),
-            ],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = {r.canonical: r for r in spark.read.parquet(table).collect()}
-    assert sorted(rows) == [
-        "https://a.example/p", "https://b.example/p", "https://c.example/p"
-    ]
-    assert rows["https://a.example/p"].doc_id == 1  # the recrawl never landed
-    assert rows["https://a.example/p"].clean_text == (
-        "Home\n\nalpha beta gamma delta\n\nwas - cited"
-    )
-    assert rows["https://c.example/p"].doc_id == 4
-
-
-def test_crawl_stream_to_searchable_index(env):
-    """Crawl → searchable-index, continuously (VERDICT r12 task #5): the
-    clean-corpus stream feeds make_index_ingest_sink, BM25 serves from the
-    maintained index BETWEEN batches (post-batch-N searches see batch-N
-    docs), and the final index is bit-identical to a one-shot build over
-    the same corpus — the bm25_incremental_index equivalence, driven
-    through Structured Streaming."""
-    import datetime as _dt
-
-    from covid19_spark.operators.retrieval import bm25_scores_from_index
-    from covid19_spark.sources.index import (
-        build_inverted_index_from,
-        make_index_ingest_sink,
-        read_inverted_index,
-    )
-    from covid19_spark.sources.warc import (
-        encode_warc,
-        encode_warc_record,
-        http_response_block,
-    )
-    from covid19_spark.streaming.crawl_stream import crawl_corpus_stream
-
-    spark, d = env
-    src, ckpt, idx_path = f"{d}/crawl_src", f"{d}/crawl_ckpt", f"{d}/searchidx"
-    os.makedirs(src)
-    t = _dt.datetime.fromisoformat
-
-    def blob(wid, url, words):
-        html = f"<html><body><p>{words}</p></body></html>".encode()
-        return encode_warc(
-            [
-                encode_warc_record(
-                    "response", f"r{wid}", http_response_block(200, "OK", html),
-                    target_uri=url,
-                    content_type="application/http; msgtype=response",
-                )
-            ]
-        )
-
-    def bm25(terms):
-        idx = read_inverted_index(spark, idx_path)  # reopen-per-serve
-        return {
-            r.doc_id: r.score
-            for r in bm25_scores_from_index(spark, idx, terms).collect()
-        }
-
-    schema = "warc_id long, payload binary, fetched_at timestamp"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (
-        crawl_corpus_stream(stream, retention="1 day")
-        .select("doc_id", "clean_text")
-        .writeStream.foreachBatch(
-            make_index_ingest_sink(idx_path, text_col="clean_text")
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        spark.createDataFrame(
-            [
-                (1, blob(1, "https://a.example/p", "shuffle exchange hash join partition"), t("2024-02-01T10:00:00")),
-                (2, blob(2, "https://b.example/p", "codegen stage whole plan fusion"), t("2024-02-01T10:01:00")),
-            ],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        # post-batch-1 serve: batch-1 docs searchable, batch-2 terms absent
-        assert set(bm25(["shuffle", "codegen"])) == {1, 2}
-        assert bm25(["watermark"]) == {}
-        spark.createDataFrame(
-            [
-                (3, blob(3, "https://c.example/p", "watermark state store shuffle eviction"), t("2024-02-01T11:00:00")),
-            ],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # post-batch-2: the new doc is searchable, and scores SHIFTED for old
-    # docs too (df/avgdl rewrites are corpus-global — a stale index would
-    # keep batch-1 scores)
-    after = bm25(["shuffle", "watermark"])
-    assert set(after) == {1, 3}
-    # equivalence: streamed-in index == one-shot build over the same corpus
-    idx = read_inverted_index(spark, idx_path)
-    oneshot_path = f"{d}/oneshot"
-    docs_now = spark.createDataFrame(
-        [
-            (1, "shuffle exchange hash join partition"),
-            (2, "codegen stage whole plan fusion"),
-            (3, "watermark state store shuffle eviction"),
-        ],
-        "doc_id long, text string",
-    )
-    build_inverted_index_from(docs_now, oneshot_path)
-    want_idx = read_inverted_index(spark, oneshot_path)
-    assert (idx.n_docs, idx.avgdl) == (want_idx.n_docs, want_idx.avgdl)
-    got_postings = sorted(
-        (r.t, r.doc_id, r.tf, r.dl, tuple(r.pos)) for r in idx.postings.collect()
-    )
-    want_postings = sorted(
-        (r.t, r.doc_id, r.tf, r.dl, tuple(r.pos)) for r in want_idx.postings.collect()
-    )
-    assert got_postings == want_postings
-    assert sorted(
-        (r.doc_id, r.score)
-        for r in bm25_scores_from_index(spark, idx, ["shuffle", "state"]).collect()
-    ) == sorted(
-        (r.doc_id, r.score)
-        for r in bm25_scores_from_index(spark, want_idx, ["shuffle", "state"]).collect()
-    )
-
-
-def test_long_run_ingest_auto_compaction(env):
-    """Long-run streaming ingest with in-sink auto-compaction (VERDICT r13
-    task #2): 21 micro-batches (1 build + 20 appends) through
-    make_index_ingest_sink with compact_every=4.  Without compaction every
-    append leaves one fragment per touched term bucket and the postings
-    store grows file-listing-bound; with the sink compacting itself the
-    fragment count stays bounded near one file per non-empty bucket.
-    Serving equivalence is pinned MID-stream (right after an in-sink
-    compaction) and at the end: the streamed+auto-compacted index is
-    bit-identical to a one-shot build over the same corpus."""
-    import glob
-
-    from covid19_spark.operators.retrieval import bm25_scores_from_index
-    from covid19_spark.sources.index import (
-        build_inverted_index_from,
-        make_index_ingest_sink,
-        read_inverted_index,
-    )
-
-    spark, d = env
-    src, ckpt, idx_path = f"{d}/ingest_src", f"{d}/ingest_ckpt", f"{d}/autoidx"
-    os.makedirs(src)
-
-    def doc(i):
-        # small, overlapping vocabulary: every batch touches the "shared"
-        # bucket plus its own terms, so fragments accumulate bucket-wise
-        return (i, f"shared alpha{i % 3} term{i} tail{i % 5}")
-
-    def write_batch_files(lo, hi):
-        for i in range(lo, hi):
-            spark.createDataFrame(
-                [doc(i)], "doc_id long, text string"
-            ).coalesce(1).write.mode("append").parquet(src)
-
-    def fragments():
-        return len(glob.glob(f"{idx_path}/postings/**/*.parquet", recursive=True))
-
-    def serve_equiv(n_docs_now, terms):
-        idx = read_inverted_index(spark, idx_path)  # reopen-per-serve
-        oneshot = f"{d}/oneshot_{n_docs_now}"
-        build_inverted_index_from(
-            spark.createDataFrame(
-                [doc(i) for i in range(n_docs_now)], "doc_id long, text string"
-            ),
-            oneshot,
-        )
-        want = read_inverted_index(spark, oneshot)
-        assert (idx.n_docs, idx.avgdl) == (want.n_docs, want.avgdl)
-        got = sorted(
-            (r.doc_id, r.score)
-            for r in bm25_scores_from_index(spark, idx, terms).collect()
-        )
-        exp = sorted(
-            (r.doc_id, r.score)
-            for r in bm25_scores_from_index(spark, want, terms).collect()
-        )
-        assert got == exp
-        return idx, want
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_index_ingest_sink(idx_path, compact_every=4, file_threshold=4)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        # phase 1: 13 batches (1 build + 12 appends → 3 in-sink compactions)
-        write_batch_files(0, 13)
-        q.processAllAvailable()
-        mid_frags = fragments()
-        serve_equiv(13, ["shared", "term7"])
-        # phase 2: 8 more appends (compactions at append 16 and 20)
-        write_batch_files(13, 21)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    end_frags = fragments()
-    n_dirs = len(glob.glob(f"{idx_path}/postings/tb=*"))
-    # bounded: never more than one compacted file per bucket plus the
-    # fragments of at most compact_every un-compacted appends (each append
-    # touches <= 4 term buckets).  A no-compaction run of 21 batches leaves
-    # ~4 fragments per batch (~80+); the in-sink discipline keeps it near
-    # the floor at both probe points.
-    bound = n_dirs + 4 * 4
-    assert mid_frags <= bound, (mid_frags, bound)
-    assert end_frags <= bound, (end_frags, bound)
-    # final equivalence: postings bit-identical to the one-shot build
-    idx, want = serve_equiv(21, ["shared", "term19", "tail3"])
-    assert sorted(
-        (r.t, r.doc_id, r.tf, r.dl, tuple(r.pos)) for r in idx.postings.collect()
-    ) == sorted(
-        (r.t, r.doc_id, r.tf, r.dl, tuple(r.pos)) for r in want.postings.collect()
-    )

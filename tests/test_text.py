@@ -3,11 +3,8 @@
 from pyspark.sql import functions as F
 
 from covid19_spark.operators.text import (
-    bpe_token_estimate,
     fingerprint,
     normalize_text,
-    predict_lang,
-    quality_columns,
     token_count,
     word_shingles,
 )
@@ -22,36 +19,11 @@ def test_token_count(spark):
     assert one(spark, "", token_count(F.col("t"))) == 0
 
 
-def test_bpe_estimate_floor(spark):
-    # "hello world" → 2 regex pieces but 11 chars → ceil(11/4)=3
-    assert one(spark, "hello world", bpe_token_estimate(F.col("t"))) == 3
-    assert one(spark, "a,b!c", bpe_token_estimate(F.col("t"))) == 5
-
-
 def test_normalize_and_fingerprint(spark):
     a = one(spark, "Hello,   World!", fingerprint(F.col("t")))
     b = one(spark, "hello world", fingerprint(F.col("t")))
     assert a == b and len(a) == 16
     assert one(spark, "Hello,   World!", normalize_text(F.col("t"))) == "hello world"
-
-
-def test_predict_lang(spark):
-    assert one(spark, "the cat and the dog of a house", predict_lang(F.col("t"))) == "en"
-    assert one(spark, "der hund und die katze ist ein tier", predict_lang(F.col("t"))) == "de"
-    assert one(spark, "le chat et la maison est grande les", predict_lang(F.col("t"))) == "fr"
-
-
-def test_quality_scores_bounded(spark):
-    cols = quality_columns(F.col("t"))
-    df = spark.createDataFrame(
-        [("the cat sat on the mat in a hat",), ("!!! ??? ,,,",), ("",)], ["t"]
-    ).select(*[c.alias(n) for n, c in cols.items()])
-    rows = df.collect()
-    good, punct, empty = rows
-    assert 0.0 <= good.quality_score <= 1.0
-    assert good.quality_score > punct.quality_score
-    assert good.stop_ratio > 0.3
-    assert punct.punct_ratio > 0.5
 
 
 def test_word_shingles(spark):

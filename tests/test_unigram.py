@@ -144,19 +144,3 @@ def test_unigram_tokenize_matches_fixture(spark):
     _assert_matches_fixture(spark, "unigram_tokenize", ["doc_id"])
 
 
-def test_vocab_save_load_round_trip_and_encode_parity(spark, tmp_path):
-    """The pretrained seam: a saved+reloaded vocabulary is bit-identical
-    and the encoder produces identical segmentations from it."""
-    from covid19_spark.operators.unigram import load_vocab, save_vocab
-
-    df = _corpus(spark, ["persist the trained pieces", "trained pieces persist"])
-    vocab = train_unigram(df, vocab_size=40)
-    p = str(tmp_path / "vocab")
-    save_vocab(vocab, spark, p)
-    back = load_vocab(spark, p)
-    assert back == vocab
-    a = unigram_tokenize(df, vocab).orderBy("doc_id").collect()
-    b = unigram_tokenize(df, back).orderBy("doc_id").collect()
-    assert [(r.doc_id, r.tokens, r.nll) for r in a] == [
-        (r.doc_id, r.tokens, r.nll) for r in b
-    ]

