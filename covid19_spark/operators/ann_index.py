@@ -228,7 +228,6 @@ def ensure_ivfpq_index(
             fingerprint=fingerprint,
         ),
         open_store=read_ivfpq_index,
-        stamp_dirs=("meta",),
     )
 
 

@@ -696,7 +696,6 @@ def incremental_dedup_against_corpus(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_bucket: int | None = 10_000,
-    containment_threshold: float | None = None,
     materialize: bool = False,
 ) -> DataFrame:
     """Screen a NEW batch of documents against an EXISTING deduplicated
@@ -716,13 +715,9 @@ def incremental_dedup_against_corpus(
          DeduplicationTransformer.java:37-88, generalized to a second corpus);
       2. near-dup probe: batch band buckets hash-join the corpus bucket
          index on (band, bucket);
-      3. exact verify on candidates only: n-gram Jaccard, plus containment
-         (|batch∩corpus| / |batch|) as a second verify axis when
-         ``containment_threshold`` is set — that is what catches a new doc
-         that is a near-subset of an existing one even when symmetric
-         Jaccard is low. With the default ``containment_threshold=None``,
-         pairs verify on Jaccard alone and ``best_containment`` is reported
-         only for Jaccard-verified pairs.
+      3. exact verify on candidates only: n-gram Jaccard; containment
+         (|batch∩corpus| / |batch|) is reported as ``best_containment`` for
+         the Jaccard-verified pairs.
 
     Output: one row per batch document —
     (id_col, is_exact_dup, near_dup_of, best_jaccard, best_containment, keep)
@@ -799,16 +794,9 @@ def incremental_dedup_against_corpus(
     # Aggregate ONLY over verified pairs: candidate-set membership below the
     # threshold is an LSH implementation detail a SQL oracle cannot reproduce,
     # but the ≥-threshold pair set is deterministic (recall ≈ 1 at this
-    # banding for the j ≥ 0.9 dups real corpora plant). A pair verifies on
-    # Jaccard ≥ threshold, or — when ``containment_threshold`` is set — on
-    # containment |batch∩corpus|/|batch| ≥ containment_threshold, which
-    # catches a new doc that is a near-subset of an existing one even when
-    # symmetric Jaccard is low (the subset mode Jaccard alone misses).
-    verify_cond = F.col("__j") >= threshold
-    if containment_threshold is not None:
-        verify_cond = verify_cond | (F.col("__c") >= containment_threshold)
+    # banding for the j ≥ 0.9 dups real corpora plant).
     hits = (
-        scored.filter(verify_cond)
+        scored.filter(F.col("__j") >= threshold)
         .groupBy("__bid")
         .agg(
             F.min("__cid").alias("__ndof"),

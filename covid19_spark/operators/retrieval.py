@@ -420,22 +420,14 @@ def bm25_topk_multi(
     b: float = 0.75,
     query_id_col: str = "query_id",
     terms_col: str = "terms",
-    include_empty: bool = False,
 ) -> DataFrame:
     """BM25 top-k for a BATCH of queries from the persisted inverted
     index — one pruned postings scan answers every query at once.
     ``queries``: (query_id_col, terms_col ARRAY<STRING>).  Output:
     (query_id, doc_id, rank, score), rank 1-based per query
     (score desc, doc_id asc — fully tiebroken), rows with rank > k
-    dropped.
-
-    Absent-query contract (ADVICE r13): by default a query whose terms
-    match NO postings contributes no output rows at all — zero-hit and
-    never-asked are indistinguishable downstream.  ``include_empty=True``
-    anti-joins the query frame back and emits ONE marker row per
-    hitless query (query_id, doc_id=NULL, rank=NULL, score=NULL), so a
-    consumer can assert every asked query was answered — a results log
-    must distinguish 'answered with zero hits' from 'query lost'.
+    dropped.  A query whose terms match no postings contributes no
+    output rows.
 
     Plan shape: the batch's DISTINCT terms prune the postings ONCE
     (broadcast (tb, t) join via ``postings_for_terms``); df and the
@@ -485,32 +477,11 @@ def bm25_topk_multi(
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
-    out = (
+    return (
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id_col, "doc_id", "rank", "score")
     )
-    if include_empty:
-        # one NULL-marker row per query that matched nothing: batch-sized
-        # anti-join (the scored side is the broadcast — ≤ |batch| distinct
-        # query ids survive the top-k)
-        hitless = (
-            qt.select(query_id_col)
-            .distinct()
-            .join(
-                F.broadcast(out.select(query_id_col).distinct()),
-                query_id_col,
-                "left_anti",
-            )
-            .select(
-                query_id_col,
-                F.lit(None).cast(dict(out.dtypes)["doc_id"]).alias("doc_id"),
-                F.lit(None).cast("int").alias("rank"),
-                F.lit(None).cast("double").alias("score"),
-            )
-        )
-        out = out.unionByName(hitless)
-    return out
 
 
 def proximity_match_from_index(

@@ -1436,7 +1436,6 @@ def ensure_semantic_assignment(
             s.read.parquet(f"{p}/centroids"),
             s.read.parquet(f"{p}/assigned"),
         ),
-        stamp_dirs=("meta",),
     )
 
 

@@ -28,7 +28,7 @@ mirroring the ``approx_aggregates`` error-envelope pattern.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

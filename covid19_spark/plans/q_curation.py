@@ -2,10 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid19_spark.plans.base import DEC, QUERY_REGISTRY, QuerySpec, _t, fixture_path
+from covid19_spark.plans.base import QUERY_REGISTRY, QuerySpec, _t, fixture_path
 
 
 def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,7 +3,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from covid19_spark.plans.base import DEC, QUERY_REGISTRY, QuerySpec, _dsum, _t
@@ -11,7 +11,7 @@ from covid19_spark.operators.asof import latest_within_lookback
 from covid19_spark.operators.delta import running_delta
 from covid19_spark.operators.rates import doubling_rate, moving_average
 from covid19_spark.operators.rollup import daily_rollup
-from covid19_spark.operators.series import date_spine, top_k
+from covid19_spark.operators.series import top_k
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@ wider SQL surface (cube / set operations / exact quantiles)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid19_spark.plans.base import DEC, QUERY_REGISTRY, QuerySpec, _dsum, _t

@@ -3,10 +3,10 @@ spans and the remaining catalog tail."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from covid19_spark.plans.base import DEC, QUERY_REGISTRY, QuerySpec, _dsum, _t, fixture_path
+from covid19_spark.plans.base import QUERY_REGISTRY, QuerySpec, _dsum, _t, fixture_path
 
 
 

@@ -17,14 +17,14 @@ the wrong unit for tables this small (39 ``statewise_delta`` rows, about
 91k ``districtwise_daily`` rows at reference scale). The 14-day as-of probe
 loop (``StateStoresManager.java:212-229``) is one pick over the state's rows.
 
-A snapshot is taken from the table's resolved parquet handle
-(``sources.tables.read_parquet_handle``, the memo ``load_table`` also uses)
-and retaken only when that memo returns a different handle, which it does
-exactly when the ``os.stat`` stamp of the table directory changes. Both
-writers of these tables change it — ``Materializer._write`` renames a new
-directory into place, and ``upsert_batch_partitioned`` renames the
-rewritten bucket directories into its root — and no writer appends files
-into an existing table, so a reply never reads a stale snapshot.
+A table's handle and its Arrow snapshot are held together in the stamped
+handle memo (``sources.tables.open_stamped``, which ``load_table`` and the
+persisted stores also use) and retaken exactly when the ``os.stat`` stamp
+of the table directory changes. Both writers of these tables change it —
+``Materializer._write`` renames a new directory into place, and
+``upsert_batch_partitioned`` renames the rewritten bucket directories into
+its root — and no writer appends files into an existing table, so a reply
+never reads a stale snapshot.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ import contextlib
 import datetime as dt
 import os
 import shutil
-import threading
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -46,7 +45,7 @@ from covid19_spark.operators.delta import running_delta
 from covid19_spark.operators.rates import doubling_rate
 from covid19_spark.operators.rollup import daily_rollup
 from covid19_spark.sources.scratch import build_scratch_path, replace_dir
-from covid19_spark.sources.tables import read_parquet_handle
+from covid19_spark.sources.tables import open_stamped
 
 TABLES = (
     "statewise_delta",      # latest delta per state        (delta-stats store)
@@ -147,9 +146,6 @@ class StoreReader:
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.out_dir = out_dir
-        # name -> (the handle it was taken from, its Arrow snapshot)
-        self._snapshots: dict[str, tuple[DataFrame, pa.Table]] = {}
-        self._lock = threading.Lock()
         # Snapshot every table already materialized, as the reference's
         # serving tier opens its stores before answering: the first
         # requests run no Spark job. A table that is missing or still being
@@ -157,26 +153,25 @@ class StoreReader:
         for name in TABLES:
             if os.path.isdir(os.path.join(out_dir, name)):
                 with contextlib.suppress(AnalysisException):
-                    self._snapshot(name)
+                    self._open(name)
+
+    def _open(self, name: str) -> tuple[DataFrame, pa.Table]:
+        """The table's handle and its Arrow snapshot, taken once per stamp."""
+        path = os.path.join(self.out_dir, name)
+
+        def take() -> tuple[DataFrame, pa.Table]:
+            handle = self.spark.read.parquet(path)
+            return handle, handle.toArrow()
+
+        return open_stamped(self.spark, path, take)
 
     def _t(self, name: str) -> DataFrame:
-        return read_parquet_handle(self.spark, os.path.join(self.out_dir, name))
-
-    def _snapshot(self, name: str) -> pa.Table:
-        # the serving clients share the reader; the handle is resolved
-        # under the lock too, so a client holding an older stamp's handle
-        # never retakes over a newer snapshot
-        with self._lock:
-            handle = self._t(name)
-            held = self._snapshots.get(name)
-            if held is None or held[0] is not handle:
-                held = self._snapshots[name] = (handle, handle.toArrow())
-            return held[1]
+        return self._open(name)[0]
 
     def rows(self, name: str, **equals) -> list[dict]:
         """The rows of table ``name`` whose columns equal ``equals`` (a None
         value leaves its column unfiltered), NULL fields dropped."""
-        table = self._snapshot(name)
+        table = self._open(name)[1]
         for col, value in equals.items():
             if value is not None:
                 table = table.filter(pc.equal(table[col], value))

@@ -67,7 +67,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid19_spark.session import use_fast_committer
-from covid19_spark.sources.handles import invalidate_store
 from covid19_spark.sources.meta_io import (
     meta_matches, read_meta_rows, write_meta_table,
 )
@@ -436,7 +435,6 @@ def append_inverted_index(
     _rewrite_derived(
         spark, path, n_prev + float(obs.get["n"]), fingerprint
     )
-    invalidate_store(path)
 
 
 def read_inverted_index(spark: SparkSession, path: str) -> InvertedIndex:
@@ -469,7 +467,6 @@ def ensure_inverted_index(
         is_fresh=lambda: meta_matches(f"{path}/scalars", fingerprint=want),
         build=lambda tmp: build_inverted_index(spark, sf_dir, tmp),
         open_store=read_inverted_index,
-        stamp_dirs=("scalars",),
     )
 
 
@@ -694,5 +691,4 @@ def ensure_fielded_index(
             fingerprint=want,
         ),
         open_store=read_fielded_index,
-        stamp_dirs=("scalars", "fieldstats"),
     )

@@ -7,9 +7,13 @@ are rebuilt deterministically from their inputs (the D-Streams recovery
 model), so one atomic publish rule serves all of them:
 
 - **ensure** (``ensure_store``): probe the store's meta
-  (``meta_io.meta_matches``); a fresh store opens through the ``handles``
-  memo, so a warm call runs no Spark job; otherwise build into
-  ``build_scratch_path``, publish, reopen.
+  (``meta_io.meta_matches``); a fresh store opens through the stamped
+  handle memo (``tables.open_stamped``), so a warm call runs no Spark job;
+  otherwise build into ``build_scratch_path``, publish, reopen.  A publish
+  renames a new directory in as the store root, which gives the root a new
+  inode; the in-place ``index.append_inverted_index`` re-creates datasets
+  under the root, which changes its mtime.  Either changes the root's
+  ``os.stat`` stamp, so the memo reopens the store on the next call.
 - **publish** (``publish_if_absent`` / ``replace_dir``): two sessions racing
   a cold miss each build into their own sibling scratch dir; the first
   rename wins, a loser whose rival is fresh discards its copy (same inputs,
@@ -38,13 +42,13 @@ import re
 import shutil
 import time
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from covid19_spark.sources import handles
+from covid19_spark.sources.tables import open_stamped
 
 _SCRATCH_ROOT = "/tmp"
 # every transient dir this module mints embeds the creating PID in one of
@@ -177,16 +181,14 @@ def ensure_store(
     is_fresh: Callable[[], bool],
     build: Callable[[str], object],
     open_store: Callable[[SparkSession, str], T],
-    stamp_dirs: Sequence[str],
 ) -> T:
     """Open the build-once store at ``path``, building it first iff
     ``is_fresh()`` is False (absent, partial, or built from other inputs).
 
     ``build(tmp)`` writes a complete store into a scratch dir;
-    ``open_store(spark, p)`` returns the handle served from ``p``;
-    ``stamp_dirs`` name the meta datasets under ``path`` that every rebuild
-    or append rewrites — their stamp validates the ``handles`` memo, so a
-    warm call reopens nothing and runs no Spark job (each uncached
+    ``open_store(spark, p)`` returns the handle served from ``p``, memoized
+    per ``os.stat`` stamp of ``path`` (``tables.open_stamped``), so a warm
+    call reopens nothing and runs no Spark job (each uncached
     ``spark.read.parquet`` runs one footer-reading job).  A build publishes
     by rename: if the path filled while we built, a concurrent fresh build
     won (discard ours — never delete files its returned readers still
@@ -205,20 +207,15 @@ def ensure_store(
                 shutil.rmtree(tmp, ignore_errors=True)
             else:
                 replace_dir(tmp, path)
-    stamp = handles.meta_stamp(*(f"{path}/{d}" for d in stamp_dirs))
-    store = handles.get_store(spark, path, stamp)
-    if store is None:
+
+    def open_with_retry() -> T:
         # a concurrent replace leaves a brief path-absent window; retry the
         # open a few times before letting the error surface
         for _ in range(3):
             try:
-                store = open_store(spark, path)
-                break
+                return open_store(spark, path)
             except _OPEN_ERRORS:
                 time.sleep(0.2)
-        else:
-            store = open_store(spark, path)
-        handles.put_store(spark, path, stamp, store)
-    return store
+        return open_store(spark, path)
 
-
+    return open_stamped(spark, path, open_with_retry)

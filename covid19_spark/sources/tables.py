@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import os
 import threading
+from collections.abc import Callable
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,53 +33,77 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+H = TypeVar("H")
 
-# Handle memo: (applicationId, path, st_ino, st_size, st_mtime_ns) -> lazy
-# DataFrame, shared by ``load_table`` and the serving ``StoreReader``.
+# Handle memo: (applicationId, path) -> (stamp, handle), one dict under one
+# lock for every opener of a path:
+# - ``load_table`` / ``read_parquet_handle``: a lazy parquet DataFrame;
+# - ``scratch.ensure_store``: a persisted store's handle (the inverted and
+#   fielded indexes, the IVF-PQ index, the SemDeDup assignment);
+# - the serving ``StoreReader``: a table's DataFrame with its Arrow snapshot.
+# Each path has one opener, so a key always holds the same kind of handle.
 #
 # ``spark.read.parquet`` costs ~100 ms per call on local[32] — a JVM
 # round-trip plus file listing and a footer/schema-inference Spark job —
 # and its ONLY product is a logical plan. The bench calls ``load_table``
-# inside every timed region, and the serving path resolves up to six tables
-# per bot request, so re-resolving on every call is pure driver overhead.
-# Re-using the handle is plan re-use: nothing is computed or pinned — every
-# action still scans the parquet files — so this is NOT result caching.
+# inside every timed region, every index-served query reopens its store,
+# and the serving path reads up to six tables per bot request, so
+# re-resolving on every call is pure driver overhead. Re-using a handle is
+# plan re-use: nothing is computed or pinned — every action still scans the
+# parquet files — so this is NOT result caching. The serving snapshot is
+# the one copy of data held, and it is retaken on every new stamp.
 #
-# Stamp rule: the key carries the ``os.stat`` stamp of ``path`` itself (the
-# file, or a table directory's root), so every lookup revalidates. A
-# regenerated testdata file or a rewritten table misses and is re-resolved,
-# so a stale file listing is never served. For a directory this relies on
-# writers replacing entries at the table root:
-# ``mode("overwrite")`` recreates the directory, and a dynamic partition
-# overwrite renames partition directories into the root — both change its
-# stamp. No writer appends files into an existing serving table. Keyed by
-# applicationId so one SparkSession never sees another's handle. Failures
-# are not cached, and a path ``os.stat`` cannot see (a URI scheme, or one
-# not yet created) is read fresh on every call.
-_HANDLE_CACHE: dict[tuple, DataFrame] = {}
+# Stamp rule: the entry carries the ``os.stat`` stamp (inode, size,
+# mtime_ns) of ``path`` itself (the file, or a directory's root), so every
+# lookup revalidates. Every writer changes that stamp:
+# - a store build and ``Materializer._write`` publish by renaming a scratch
+#   directory into place, which gives the root a new inode;
+# - the in-place ``index.append_inverted_index`` re-creates ``scalars/``
+#   (and the other derived datasets) under the store root, which changes
+#   the root's mtime;
+# - ``mode("overwrite")`` recreates a directory, and
+#   ``upsert_batch_partitioned`` renames rewritten bucket directories into
+#   its root.
+# No writer appends files into an existing serving table. The stamp is
+# taken under the lock and before the open, so stamps stay ordered: a
+# handle opened from newer files under an older stamp is reopened on the
+# next lookup, and an older stamp never replaces a newer entry. Keyed by
+# applicationId so one SparkSession never sees another's handle; entries of
+# dead sessions are evicted. Failures are not cached, and a path
+# ``os.stat`` cannot see (a URI scheme, or one not yet created) is opened
+# fresh on every call.
+_HANDLE_CACHE: dict[tuple[str, str], tuple[tuple, Any]] = {}
 _HANDLE_LOCK = threading.Lock()
+
+
+def open_stamped(spark: SparkSession, path: str, open_handle: Callable[[], H]) -> H:
+    """``open_handle()``, called once per session and ``os.stat`` stamp of
+    ``path``; later calls with the same stamp return the same handle."""
+    app = spark.sparkContext.applicationId
+    key = (app, path)
+    # one lock over stamp, lookup, open and insert: the serving clients
+    # share the memo across threads, and a cold miss opens once per stamp
+    with _HANDLE_LOCK:
+        try:
+            st = os.stat(path)
+        except OSError:
+            pass
+        else:
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+            hit = _HANDLE_CACHE.get(key)
+            if hit is not None and hit[0] == stamp:
+                return hit[1]
+            handle = open_handle()
+            for k in [k for k in _HANDLE_CACHE if k[0] != app]:
+                del _HANDLE_CACHE[k]
+            _HANDLE_CACHE[key] = (stamp, handle)
+            return handle
+    return open_handle()
 
 
 def read_parquet_handle(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, resolved once per stamp of ``path``."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return spark.read.parquet(path)
-    app = spark.sparkContext.applicationId
-    key = (app, path, st.st_ino, st.st_size, st.st_mtime_ns)
-    # one lock over lookup, eviction and insert: the serving clients share
-    # the memo across threads, and a cold miss resolves once per stamp
-    with _HANDLE_LOCK:
-        df = _HANDLE_CACHE.get(key)
-        if df is None:
-            df = spark.read.parquet(path)
-            # drop entries from dead sessions / older stamps of this path so
-            # the memo stays bounded by the live (session, table) set
-            for k in [k for k in _HANDLE_CACHE if k[0] != app or k[1] == path]:
-                del _HANDLE_CACHE[k]
-            _HANDLE_CACHE[key] = df
-    return df
+    return open_stamped(spark, path, lambda: spark.read.parquet(path))
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

@@ -28,8 +28,8 @@ Format facts implemented from the public spec:
 
 Scale shape: parsing is per-blob Python inside Arrow-batched
 ``mapInPandas`` (exactly the codec-kernel contract of
-operators/multimodal.py) — metadata columns pass through untouched, one
-input blob explodes to one row per record, and the ``on_error``
+operators/multimodal.py) — one input blob explodes to one row per
+record, and the ``on_error``
 permissive mode yields a classified ``error`` instead of failing the task
 (the 100 TB-crawl contract: a torn record per billion is a certainty). At
 cluster scale each task parses its own WARC segments; nothing here
@@ -39,7 +39,6 @@ shuffles.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Sequence
 from typing import Iterator
 
 import pandas as pd
@@ -213,46 +212,23 @@ def warc_records(
     id_col: str = "warc_id",
     payload_col: str = "payload",
     on_error: str = "fail",
-    keep_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Explode a frame of WARC blobs into one row per record via
     Arrow-batched ``mapInPandas``. ``on_error="permissive"`` follows the
     multimodal kernel contract: an unparseable blob yields ONE row with
     NULL fields and a classified ``error`` column (schema gains the column
-    only in this mode). ``keep_cols`` are per-blob metadata columns
-    (fetch timestamp, crawl source, ...) carried verbatim onto every
-    exploded record — crawl pipelines always need these downstream, and a
-    passthrough here keeps STREAMING consumers join-free (re-attaching
-    metadata by id after the explode would be a stream-stream join with
-    unbounded state)."""
+    only in this mode)."""
     if on_error not in ("fail", "permissive"):
         raise ValueError(f"on_error must be 'fail' or 'permissive' (got {on_error!r})")
     permissive = on_error == "permissive"
-    base = _PERMISSIVE_SCHEMA if permissive else WARC_RECORD_SCHEMA
-    keep_cols = list(keep_cols)
-    # ADVICE r09: fail fast on keep_cols that are missing from the input
-    # (raw KeyError otherwise) or that collide with the record schema —
-    # a duplicate StructType field name makes downstream references
-    # ambiguous or silently wrong.
-    record_names = {f.name for f in base.fields}
-    collisions = [c for c in keep_cols if c in record_names]
-    if collisions:
-        raise ValueError(
-            f"keep_cols collide with WARC record schema fields: {collisions}"
-        )
-    missing = [c for c in keep_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"keep_cols not in input frame: {missing}")
-    schema = StructType(base.fields + [df.schema[c] for c in keep_cols])
+    schema = _PERMISSIVE_SCHEMA if permissive else WARC_RECORD_SCHEMA
     cols = [f.name for f in schema.fields]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            keeps = [pdf[c] for c in keep_cols]
-            for j, (wid, p) in enumerate(zip(pdf[id_col], pdf[payload_col])):
+            for wid, p in zip(pdf[id_col], pdf[payload_col]):
                 wid = int(wid)
-                kept = tuple(k.iloc[j] for k in keeps)
                 try:
                     recs = parse_warc(p)
                 except Exception as e:  # noqa: BLE001 — classified below
@@ -260,7 +236,7 @@ def warc_records(
                         raise
                     rows.append(
                         (wid, None, None, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}") + kept
+                         f"{type(e).__name__}: {e}")
                     )
                     continue
                 for i, r in enumerate(recs):
@@ -269,9 +245,9 @@ def warc_records(
                         r["content_length"], r["http_status"],
                         r["http_content_type"], r["body"],
                     )
-                    rows.append((row + (None,) if permissive else row) + kept)
+                    rows.append(row + (None,) if permissive else row)
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, payload_col, *keep_cols).mapInPandas(
+    return df.select(id_col, payload_col).mapInPandas(
         batches, schema=schema
     )

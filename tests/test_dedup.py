@@ -546,37 +546,6 @@ def test_approx_aggregates_matches_fixture(spark):
     _assert_matches_fixture(spark, "approx_aggregates", ["event_type"])
 
 
-def test_containment_threshold_catches_subset_docs(spark):
-    """A batch doc that is a near-subset of a corpus doc has high containment
-    but low symmetric Jaccard. Default screen (Jaccard-only verify) keeps it;
-    with containment_threshold set it is flagged and dropped."""
-    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
-
-    long_text = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon "
-        "phi chi psi omega one two three four five six "
-        "seven eight nine ten eleven twelve thirteen fourteen fifteen sixteen"
-    )
-    subset_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame([(0, long_text)], ["doc_id", "text"])
-    batch = spark.createDataFrame([(10, subset_text)], ["doc_id", "text"])
-    kw = dict(shingle_n=2, threshold=0.5, num_hashes=32, bands=32)
-
-    default = incremental_dedup_against_corpus(
-        corpus, batch, "doc_id", "text", **kw
-    ).collect()[0]
-    assert default.is_exact_dup == 0 and default.keep == 1
-    assert default.near_dup_of == -1  # symmetric Jaccard below threshold
-
-    flagged = incremental_dedup_against_corpus(
-        corpus, batch, "doc_id", "text", containment_threshold=0.9, **kw
-    ).collect()[0]
-    assert flagged.keep == 0 and flagged.near_dup_of == 0
-    assert flagged.best_containment >= 0.9
-    assert flagged.best_jaccard < 0.5
-
-
 def test_wav_audio_features_matches_fixture(spark):
     _assert_matches_fixture(spark, "wav_audio_features", ["media_id"])
 

@@ -60,6 +60,23 @@ def test_ensure_reuses_then_rebuilds_on_staleness(spark, sf_dir, tmp_path):
     assert os.path.getmtime(f"{path}/scalars") > marker
 
 
+def test_inplace_append_seen_by_next_ensure(spark, sf_dir, tmp_path):
+    """An in-place append re-creates the store's derived datasets under its
+    root, which changes the root's stamp: the next ensure reopens the store
+    and serves base + delta documents."""
+    from covid19_spark.sources.index import append_inverted_index, ensure_inverted_index
+    from covid19_spark.sources.meta_io import read_meta_rows
+
+    path = str(tmp_path / "idx")
+    assert ensure_inverted_index(spark, sf_dir, path).n_docs == 5.0
+    delta = spark.createDataFrame(
+        [(6, "spark window"), (7, "hash join")], "doc_id long, text string"
+    )
+    fingerprint = read_meta_rows(f"{path}/scalars")[0]["fingerprint"]
+    append_inverted_index(delta, path, fingerprint=fingerprint)
+    assert ensure_inverted_index(spark, sf_dir, path).n_docs == 7.0
+
+
 def test_concurrent_cold_ensure_builds(spark, sf_dir, tmp_path):
     """Two sessions cold-missing the same cache path concurrently (VERDICT
     r12 task #4): each builds into its own scratch dir and atomic-renames

@@ -15,6 +15,11 @@ A def, class or module the walk does not reach is reached only by tests,
 or by nothing, and fails the test unless ``KEEP`` names it with a reason.
 A keep entry is an extra root, so what a kept def calls is live too, and
 a module entry keeps all of its defs.
+
+A second check fails on any top-level import a package module (other than
+an ``__init__``) binds and never uses.  A name counts as used when the
+module's code loads it, or a string annotation names it; an import line
+marked ``# noqa: F401`` is a deliberate re-export.
 """
 
 from __future__ import annotations
@@ -279,3 +284,58 @@ def test_keep_entries_are_needed_and_carry_a_reason():
         assert _REASON.match(reason), f"{entry}: reason {reason!r}"
         key = graph.resolve(f"{PACKAGE}.{entry}")
         assert key not in program, f"{entry} has a program caller; drop it from KEEP"
+
+
+def _string_annotation_names(tree: ast.Module) -> set[str]:
+    """Names inside the string constants of every annotation in ``tree``."""
+    annotations = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.arg):
+            annotations.append(node.annotation)
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            annotations.append(node.returns)
+        elif isinstance(node, ast.AnnAssign):
+            annotations.append(node.annotation)
+    names = set()
+    for ann in filter(None, annotations):
+        for node in ast.walk(ann):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                try:
+                    expr = ast.parse(node.value, mode="eval")
+                except SyntaxError:
+                    continue
+                names |= {n.id for n in ast.walk(expr) if isinstance(n, ast.Name)}
+    return names
+
+
+def unused_imports() -> list[str]:
+    """``path:line: name`` for each top-level import of a package module
+    (``__init__`` files aside) whose bound name the module never uses."""
+    out = []
+    for path in sorted((ROOT / PACKAGE).rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        source = path.read_text()
+        lines = source.splitlines()
+        tree = ast.parse(source, str(path))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        used |= _string_annotation_names(tree)
+        for stmt in tree.body:
+            if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                continue
+            for alias in stmt.names:
+                name = alias.asname or alias.name.partition(".")[0]
+                marked = (lines[stmt.lineno - 1], lines[alias.lineno - 1])
+                if name not in used and not any("noqa: F401" in ln for ln in marked):
+                    out.append(f"{path.relative_to(ROOT)}:{alias.lineno}: {name}")
+    return out
+
+
+def test_no_unused_package_imports():
+    unused = unused_imports()
+    assert not unused, (
+        "imported and never used; delete the import, or mark a deliberate "
+        "re-export with # noqa: F401:\n  " + "\n  ".join(unused)
+    )

@@ -412,34 +412,6 @@ def test_bm25f_guards(spark, tmp_path):
         )
 
 
-def test_bm25_topk_multi_include_empty_markers(spark, tmp_path):
-    """Absent-query contract (ADVICE r13): default drops hitless queries;
-    include_empty=True emits exactly one NULL marker row each, and
-    hit-bearing queries' rows are unchanged either way."""
-    from covid19_spark.operators.retrieval import bm25_topk_multi
-    from covid19_spark.sources.index import read_inverted_index
-
-    idx_path, _ = _mk_index(spark, tmp_path)
-    idx = read_inverted_index(spark, idx_path)
-    queries = spark.createDataFrame(
-        [(1, ["spark"]), (2, ["zzz_nothing"]), (3, ["also_absent"])],
-        "query_id long, terms array<string>",
-    )
-    dropped = bm25_topk_multi(spark, idx, queries, k=3).collect()
-    assert {r.query_id for r in dropped} == {1}
-    kept = bm25_topk_multi(
-        spark, idx, queries, k=3, include_empty=True
-    ).collect()
-    assert {r.query_id for r in kept} == {1, 2, 3}
-    markers = sorted(
-        (r.query_id,) for r in kept if r.doc_id is None
-    )
-    assert markers == [(2,), (3,)]
-    assert sorted(
-        (r.query_id, r.rank, r.doc_id, r.score) for r in kept if r.doc_id is not None
-    ) == sorted((r.query_id, r.rank, r.doc_id, r.score) for r in dropped)
-
-
 # --- LM Dirichlet + prefix queries --------------------------------------
 
 

@@ -142,7 +142,7 @@ def test_failed_build_removes_only_its_own_scratch(tmp_path):
     with pytest.raises(RuntimeError, match="build failed"):
         scratch.ensure_store(
             None, path, is_fresh=lambda: False, build=build,
-            open_store=lambda spark, p: p, stamp_dirs=(),
+            open_store=lambda spark, p: p,
         )
     assert sorted(os.listdir(tmp_path)) == [os.path.basename(old)]
     assert os.path.isfile(os.path.join(old, "marker"))

@@ -14,7 +14,7 @@ from pyspark.sql.utils import AnalysisException
 from covid19_spark import measure
 from covid19_spark.serving.requests import handle_user_request
 from covid19_spark.serving.stores import Materializer, StoreReader
-from covid19_spark.sources import tables
+from covid19_spark.sources import scratch, tables
 from covid19_spark.streaming.table import upsert_batch_partitioned
 
 
@@ -106,13 +106,34 @@ def test_latest_test_data_within_14d(store_env):
 
 
 def test_handle_memo_shared_across_threads(store_env):
-    """Two threads resolve one shared table and one table of their own 200
-    times each, each thread re-stamping its own table now and then: no
-    error, and one handle per (path, stamp)."""
+    """Two threads each open, 200 times, every kind of handle the one memo
+    holds: a ``load_table`` table, an ``ensure_store`` store and a
+    ``StoreReader`` snapshot, one shared and one of its own of each kind.
+    Each thread re-stamps its own paths now and then: no error, one handle
+    per (path, stamp), and older stamps evicted."""
     spark, d = store_env
-    paths = {n: os.path.join(d, n) for n in ("shared", "a", "b")}
-    for p in paths.values():
-        spark.range(3).write.parquet(p)
+    news = spark.createDataFrame([("Maharashtra", "https://news.example/mh")], ["state", "url"])
+    openers, paths = {}, {}
+    for who in ("shared", "a", "b"):
+        sf = os.path.join(d, who, "sf")
+        spark.range(3).write.parquet(os.path.join(sf, "region.parquet"))
+        store = os.path.join(d, who, "store")
+        spark.range(3).write.parquet(store)
+        serving = os.path.join(d, who, "serving")
+        Materializer(spark, serving).refresh_dimension(news, "news_sources")
+        reader = StoreReader(spark, serving)
+        paths[who] = [
+            os.path.join(sf, "region.parquet"), store, os.path.join(serving, "news_sources")
+        ]
+        openers[who] = [
+            lambda sf=sf: tables.load_table(spark, "region", sf),
+            lambda store=store: scratch.ensure_store(
+                spark, store, is_fresh=lambda: os.path.isdir(store),
+                build=lambda tmp: None,
+                open_store=lambda s, p: s.read.parquet(p),
+            ),
+            lambda reader=reader: reader._open("news_sources"),
+        ]
     seen: dict[tuple, set[int]] = {}
     keep, errors = [], []  # keep: evicted handles stay alive, so ids stay unique
     lock = threading.Lock()
@@ -120,14 +141,16 @@ def test_handle_memo_shared_across_threads(store_env):
     def client(own: str) -> None:
         try:
             for i in range(200):
-                if i % 50 == 49:  # a writer replaced the table: new stamp
-                    os.utime(paths[own], ns=(i, i))
-                for p in (paths["shared"], paths[own]):
-                    st = os.stat(p)
-                    df = tables.read_parquet_handle(spark, p)
-                    with lock:
-                        keep.append(df)
-                        seen.setdefault((p, st.st_ino, st.st_mtime_ns), set()).add(id(df))
+                if i % 50 == 49:  # a writer replaced the tables: new stamps
+                    for p in paths[own]:
+                        os.utime(p, ns=(i, i))
+                for who in ("shared", own):
+                    for p, open_handle in zip(paths[who], openers[who]):
+                        st = os.stat(p)
+                        handle = open_handle()
+                        with lock:
+                            keep.append(handle)
+                            seen.setdefault((p, st.st_ino, st.st_mtime_ns), set()).add(id(handle))
         except Exception as e:  # noqa: BLE001 - reported by the assert below
             errors.append(e)
 
@@ -135,12 +158,15 @@ def test_handle_memo_shared_across_threads(store_env):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    assert not errors
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
     assert all(len(ids) == 1 for ids in seen.values()), seen
-    assert len(seen) == 1 + 2 * 5  # shared once; a and b at 5 stamps each
-    live = [k[1] for k in tables._HANDLE_CACHE if k[1] in paths.values()]
-    assert sorted(live) == sorted(paths.values())  # older stamps evicted
+    assert len(set().union(*seen.values())) == len(seen)  # a new stamp reopens
+    assert len(seen) == 3 * (1 + 2 * 5)  # shared once; a and b at 5 stamps each
+    every = [p for ps in paths.values() for p in ps]
+    live = [k[1] for k in tables._HANDLE_CACHE if k[1] in every]
+    assert sorted(live) == sorted(every)  # older stamps evicted
 
 
 def test_snapshot_retake_shared_across_threads(store_env):
@@ -186,7 +212,7 @@ def test_snapshot_retake_shared_across_threads(store_env):
     assert measure.next_job_id(spark) - j0 <= restamps * jobs_per_snapshot
 
 
-def _snapshots(spark, mh_confirmed):
+def _statewise_rows(spark, mh_confirmed):
     return spark.createDataFrame(
         [
             ("Maharashtra", ts("2020-04-08T10:00:00"), 10, 1, 1),
@@ -201,7 +227,7 @@ def _snapshots(spark, mh_confirmed):
 def _materialize_all(spark, d) -> Materializer:
     """Every table a per-state request reads, Maharashtra at 28 cases."""
     m = Materializer(spark, d)
-    m.refresh_statewise(_snapshots(spark, 28))
+    m.refresh_statewise(_statewise_rows(spark, 28))
     m.refresh_districtwise(
         spark.createDataFrame(
             [("Maharashtra", "Mumbai", ts("2020-04-09T10:00:00"), 20, 1, 1)],
@@ -231,7 +257,7 @@ def test_warm_reader_sees_materializer_rewrite(store_env):
     r = StoreReader(spark, d)
     assert "Mah  |     28|      2|     2" in handle_user_request(r, "Summary", TODAY)
     assert "Total cases  : (↑18) 28" in handle_user_request(r, "Maharashtra", TODAY)
-    m.refresh_statewise(_snapshots(spark, 41))
+    m.refresh_statewise(_statewise_rows(spark, 41))
     assert "Mah  |     41|      2|     2" in handle_user_request(r, "Summary", TODAY)
     assert "Mah  |     31|      1|     1" in handle_user_request(r, "Today", TODAY)
     assert "Total cases  : (↑31) 41" in handle_user_request(r, "Maharashtra", TODAY)

@@ -102,27 +102,3 @@ def test_warc_records_permissive(spark):
     assert bad[0].warc_id == 1 and "ValueError" in bad[0].error
     with pytest.raises(ValueError, match="on_error"):
         warc_records(df, on_error="nope")
-
-
-def test_warc_records_rejects_bad_keep_cols(spark):
-    """ADVICE r09: keep_cols validation — a missing column or one shadowing
-    a record-schema field must raise a clear ValueError, not a raw
-    KeyError / ambiguous duplicate column."""
-    import pytest
-
-    from covid19_spark.sources.warc import warc_records
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b""), "c1")], "warc_id long, payload binary, src string"
-    )
-    with pytest.raises(ValueError, match="not in input frame"):
-        warc_records(df, keep_cols=["nope"])
-    with pytest.raises(ValueError, match="collide"):
-        warc_records(df, keep_cols=["body"])
-    with pytest.raises(ValueError, match="collide"):
-        warc_records(df, keep_cols=["warc_id"])
-    with pytest.raises(ValueError, match="collide"):
-        warc_records(df, on_error="permissive", keep_cols=["error"])
-    # a legitimate passthrough still works
-    out = warc_records(df, keep_cols=["src"])
-    assert "src" in out.columns
