@@ -66,17 +66,11 @@ def write_ivfpq_index(
     n_centroids: int = 16,
     m: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample_mod: "int | str | None" = "auto",
-    centroids: DataFrame | None = None,
-    codebooks: DataFrame | None = None,
     attr_cols: "Sequence[str]" = (),
     fingerprint: str = "",
 ) -> dict:
-    """Build the index at ``path`` (overwrite): fit quantizers (or take
-    pre-trained ones via ``centroids=``/``codebooks=``), encode the corpus
-    in one map pass, write codes partitioned by IVF list. The only
+    """Build the index at ``path`` (overwrite): fit quantizers, encode the
+    corpus (``vec_id``, ``embedding``) in one map pass, write codes partitioned by IVF list. The only
     corpus-sized work is the encode scan; everything else is KB-sized.
     Returns the meta dict that was persisted.
 
@@ -84,12 +78,7 @@ def write_ivfpq_index(
     the id in the build pass) — the filtered-vector-search seam: a serving
     predicate on these columns applies directly to the codes scan, before
     any distance work (see ``ivfpq_index_topk(codes_filter=...)``)."""
-    centroids, codebooks = ivfpq_quantizers(
-        corpus, n_centroids, m, n_codes,
-        id_col=id_col, vec_col=vec_col,
-        train_sample_mod=train_sample_mod,
-        centroids=centroids, codebooks=codebooks,
-    )
+    centroids, codebooks = ivfpq_quantizers(corpus, n_centroids, m, n_codes)
     spark = corpus.sparkSession
     use_fast_committer(spark)
     # meta is ONE row — written driver-side (meta_io); its dim field is
@@ -113,8 +102,8 @@ def write_ivfpq_index(
         "m": int(m),
         "n_codes": int(n_codes),
         "dim": int(dim),
-        "id_col": id_col,
-        "vec_col": vec_col,
+        "id_col": "vec_id",
+        "vec_col": "embedding",
         "attr_cols": ",".join(attr_cols),
         "fingerprint": fingerprint,
     }
@@ -140,14 +129,12 @@ def write_ivfpq_index(
             }
         ),
     )
-    encoded = ivfpq_encode(
-        corpus, centroids, codebooks, m, id_col=id_col, vec_col=vec_col
-    )
+    encoded = ivfpq_encode(corpus, centroids, codebooks, m)
     if attr_cols:
         # one build-time co-shuffle on the id glues the serving attributes
         # onto the code rows; queries then never touch the vector store to
         # evaluate predicates
-        encoded = encoded.join(corpus.select(id_col, *attr_cols), id_col)
+        encoded = encoded.join(corpus.select("vec_id", *attr_cols), "vec_id")
     (
         encoded
         # shuffle onto the list id before the partitioned write: without
@@ -194,8 +181,6 @@ def ensure_ivfpq_index(
     n_centroids: int = 16,
     m: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     attr_cols: "Sequence[str]" = (),
 ) -> IvfPqIndex:
     """Open the index at ``path``, (re)building it first iff absent,
@@ -218,13 +203,13 @@ def ensure_ivfpq_index(
             n_centroids=int(n_centroids),
             m=int(m),
             n_codes=int(n_codes),
-            id_col=id_col,
-            vec_col=vec_col,
+            id_col="vec_id",
+            vec_col="embedding",
             attr_cols=",".join(attr_cols),
         ),
         build=lambda tmp: write_ivfpq_index(
             corpus, tmp, n_centroids=n_centroids, m=m, n_codes=n_codes,
-            id_col=id_col, vec_col=vec_col, attr_cols=attr_cols,
+            attr_cols=attr_cols,
             fingerprint=fingerprint,
         ),
         open_store=read_ivfpq_index,
@@ -248,7 +233,6 @@ def ivfpq_index_topk(
     k: int = 10,
     n_probes: int = 3,
     shortlist: int = 50,
-    prune: str = "static",
     codes_filter=None,
 ) -> DataFrame:
     """Serve a query batch from a persisted index: probe → ADC over probed
@@ -264,28 +248,21 @@ def ivfpq_index_topk(
     probes exactly as in the unfiltered case; highly selective predicates
     warrant more probes (the standard filtered-ANN tradeoff).
 
-    ``prune="static"`` (default) collects the batch's DISTINCT probed list
-    ids — at most ``n_centroids`` ints however large the batch, a
-    contract-small driver list — and filters codes with ``isin`` so the
-    parquet scan carries a static ``PartitionFilters`` and untouched list
-    directories are never opened.
-    ``prune="none"`` leaves pruning to the runtime join (full scan; useful
-    when the batch probes nearly every list and the filter buys nothing).
+    The batch's DISTINCT probed list ids — at most ``n_centroids`` ints
+    however large the batch, a contract-small driver list — filter the
+    codes with ``isin``, so the parquet scan carries a static
+    ``PartitionFilters`` and untouched list directories are never opened.
 
     Output (query_id, rank, neighbor_id, sim) is bit-identical to
     ``ivfpq_cosine_topk`` with the same quantizers."""
     meta = index.meta
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    codes = index.codes
-    if prune == "static":
-        probed = ivf_assign(
-            queries, index.centroids, id_col, vec_col, n_probes=n_probes
-        ).select("centroid_id").distinct().collect()
-        codes = codes.filter(
-            F.col("centroid_id").isin(sorted(int(r["centroid_id"]) for r in probed))
-        )
-    elif prune != "none":
-        raise ValueError(f"prune must be 'static' or 'none', got {prune!r}")
+    probed = ivf_assign(
+        queries, index.centroids, id_col, vec_col, n_probes=n_probes
+    ).select("centroid_id").distinct().collect()
+    codes = index.codes.filter(
+        F.col("centroid_id").isin(sorted(int(r["centroid_id"]) for r in probed))
+    )
     if codes_filter is not None:
         codes = codes.filter(
             F.expr(codes_filter) if isinstance(codes_filter, str) else codes_filter

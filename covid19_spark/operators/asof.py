@@ -8,8 +8,7 @@ the row with rank 1 by recency per key.
 
 ``asof_join`` generalizes that to two full event tables (pandas
 ``merge_asof`` / kdb ``aj`` semantics): every left row picks up the nearest
-right row at-or-before (backward) or at-or-after (forward) its timestamp,
-per key. Implemented with the union trick — tag sides, sort once per key,
+right row at-or-before its timestamp, per key. Implemented with the union trick — tag sides, sort once per key,
 carry the last-seen right payload forward with an ignore-nulls window —
 so it costs ONE hash exchange on the key and streams through a single
 sort-based window, with NO broadcast requirement: both sides can be 100 TB
@@ -26,7 +25,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -34,15 +33,13 @@ def latest_within_lookback(
     df: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
-    lookback_filter: Column | None = None,
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Keep each key's most recent row (optionally within a lookback window).
+    """Keep each key's most recent row; a lookback window is a filter the
+    caller applies first.
 
     ``tiebreak_cols`` breaks timestamp ties deterministically (descending).
     """
-    if lookback_filter is not None:
-        df = df.filter(lookback_filter)
     order = [F.col(ts_col).desc()] + [F.col(c).desc() for c in tiebreak_cols]
     w = Window.partitionBy(*key_cols).orderBy(*order)
     return (
@@ -60,26 +57,22 @@ def asof_join(
     right_ts: str,
     right_payload: Sequence[str],
     right_tiebreak: str,
-    direction: str = "backward",
-    suffix: str = "_r",
 ) -> DataFrame:
-    """Left as-of join: nearest right row per key at-or-before (backward) /
-    at-or-after (forward) each left row's timestamp. Left join semantics —
-    unmatched left rows keep NULL right payload.
+    """Left as-of join: nearest right row per key at-or-before each left
+    row's timestamp. Left join semantics — unmatched left rows keep NULL
+    right payload.
 
     ``on`` names key columns present in BOTH frames. ``right_tiebreak`` must
     be unique within (key, right_ts) groups; ties at the same timestamp
-    resolve to the max tiebreak (backward) / min tiebreak (forward), so the
-    result is deterministic even with duplicate right timestamps.
+    resolve to the max tiebreak, so the result is deterministic even with
+    duplicate right timestamps.
 
     Plan: union the tagged sides, one hash exchange on ``on``, one sort per
     partition, ``last(..., ignorenulls)`` carries the right payload struct
     across to left rows. The right payload travels as ONE struct column so a
     legitimately-NULL payload field is never "skipped over" by ignorenulls.
-    Right payload columns that collide with left names get ``suffix``.
+    Right payload columns that collide with left names get an ``_r`` suffix.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     keys = list(on)
     payload = list(right_payload)
     if right_ts not in payload:
@@ -109,12 +102,9 @@ def asof_join(
     lrow_type = l_tagged.schema["__lrow"].dataType
     r_tagged = r_tagged.withColumn("__lrow", F.lit(None).cast(lrow_type))
 
-    if direction == "backward":
-        # right (side 0) sorts before left at equal ts -> inclusive match;
-        # max tiebreak among duplicate right timestamps wins (last in order).
-        order = [F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc()]
-    else:
-        order = [F.col("__ts").desc(), F.col("__side").asc(), F.col("__tb").desc()]
+    # right (side 0) sorts before left at equal ts -> inclusive match;
+    # max tiebreak among duplicate right timestamps wins (last in order).
+    order = [F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc()]
     w = (
         Window.partitionBy(*keys)
         .orderBy(*order)
@@ -128,6 +118,6 @@ def asof_join(
     left_names = set(left.columns)
     out_cols = [F.col(f"__lrow.{c}").alias(c) for c in left.columns]
     for c in payload:
-        out = f"{c}{suffix}" if c in left_names else c
+        out = f"{c}_r" if c in left_names else c
         out_cols.append(F.col(f"__match.{c}").alias(out))
     return carried.select(*out_cols)

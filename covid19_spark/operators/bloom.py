@@ -34,12 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _positions(key, m_bits: int, k: int, seed_base: int):
+def _positions(key, m_bits: int, k: int):
     """Array of the ``k`` bit positions of a key column (xxhash64 family,
-    seeds ``seed_base .. seed_base+k-1``)."""
+    seeds ``41 .. 40+k``)."""
     return F.array(
         *[
-            F.pmod(F.xxhash64(key, F.lit(seed_base + i)), F.lit(m_bits))
+            F.pmod(F.xxhash64(key, F.lit(41 + i)), F.lit(m_bits))
             for i in range(k)
         ]
     )
@@ -50,12 +50,11 @@ def bloom_build(
     key_col: str,
     m_bits: int = 1 << 20,
     k: int = 7,
-    seed_base: int = 41,
 ) -> DataFrame:
     """``(word, bits)`` Bloom bitmap of ``df[key_col]``: word = position
     div 64 (long), bits = OR of the 64-bit masks landing in that word.
     At most ``m_bits/64`` rows — broadcastable at any corpus size."""
-    pos = F.explode(_positions(F.col(key_col), m_bits, k, seed_base)).alias("__pos")
+    pos = F.explode(_positions(F.col(key_col), m_bits, k)).alias("__pos")
     return (
         df.select(pos)
         .select(
@@ -73,7 +72,6 @@ def bloom_might_contain(
     key_col: str,
     m_bits: int = 1 << 20,
     k: int = 7,
-    seed_base: int = 41,
 ) -> DataFrame:
     """``candidates`` + a ``might_contain`` boolean: true iff ALL ``k``
     probe bits are set. Guarantees: no false negatives (an indexed key
@@ -85,7 +83,7 @@ def bloom_might_contain(
     to one row per candidate."""
     probe = candidates.select(
         F.col(key_col).alias("__key"),
-        F.posexplode(_positions(F.col(key_col), m_bits, k, seed_base)).alias(
+        F.posexplode(_positions(F.col(key_col), m_bits, k)).alias(
             "__i", "__pos"
         ),
     ).select(

@@ -71,7 +71,6 @@ def train_bpe(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 200,
-    min_freq: int = 1,
     max_vocab_candidates: int = 5_000_000,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from a corpus.
@@ -92,10 +91,12 @@ def train_bpe(
     below any pair a 10⁵-merge vocabulary would learn. Deterministic: the
     (cnt, word) order is total, so the kept set is a pure function of the
     corpus."""
-    wc = word_counts(df, text_col).filter(F.col("cnt") >= min_freq)
-    if max_vocab_candidates is not None:
-        wc = wc.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab_candidates)
-    wc = wc.collect()
+    wc = (
+        word_counts(df, text_col)
+        .orderBy(F.desc("cnt"), F.asc("word"))
+        .limit(max_vocab_candidates)
+        .collect()
+    )
     agg: dict[tuple, int] = {}
     for row in wc:
         symbols = tuple(row["word"]) + (END,)

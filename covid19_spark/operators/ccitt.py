@@ -287,8 +287,9 @@ def _emit_uncompressed(bw: _BitWriter, row: "np.ndarray", next_color: int) -> No
     bw.put("1" if next_color else "0")
 
 
-def g4_encode(bitmap: "np.ndarray", eofb: bool = True) -> bytes:
-    """Encode a (H, W) array of 0/1 samples (0 = white) as a T.6 G4 block.
+def g4_encode(bitmap: "np.ndarray") -> bytes:
+    """Encode a (H, W) array of 0/1 samples (0 = white) as a T.6 G4 block
+    ending in EOFB.
     Deterministic; vertical mode is preferred whenever |a1-b1| ≤ 3 (the
     spec's own coding procedure, T.6 §4.2.1.3)."""
     arr = np.asarray(bitmap)
@@ -302,8 +303,7 @@ def g4_encode(bitmap: "np.ndarray", eofb: bool = True) -> bytes:
     for y in range(h):
         _encode_2d_line(bw, arr[y], ref_changes)
         ref_changes = _changes(arr[y])
-    if eofb:
-        bw.put("000000000001" * 2)  # EOFB = two EOLs (T.6 §4.2.2)
+    bw.put("000000000001" * 2)  # EOFB = two EOLs (T.6 §4.2.2)
     return bw.finish()
 
 
@@ -438,13 +438,12 @@ def _decode_2d_line(br: _BitReader, out_row: "np.ndarray", ref_changes: list,
 
 
 def g3_encode(
-    bitmap: "np.ndarray", two_d: bool = False, k: int = 2,
-    uncompressed: bool = False,
+    bitmap: "np.ndarray", two_d: bool = False, uncompressed: bool = False,
 ) -> bytes:
     """TIFF compression 3 — CCITT Group 3 (ITU-T T.4) with EOL codes.
     1D: every line is EOL + MH runs. 2D (``two_d=True``, T4Options bit 0):
     every EOL carries a tag bit — 1 selects a 1D line, 0 a 2D line coded
-    against the previous line; every ``k``-th line is 1D (the fax error-
+    against the previous line; every second line is 1D (the fax error-
     resilience ladder, T.4 §4.2.2). Ends with RTC (6 EOLs).
 
     ``uncompressed=True`` (T4Options bit 1, §4.2.1.3.5): a line whose
@@ -482,7 +481,7 @@ def g3_encode(
     for y, row in enumerate(arr):
         bw.put(_EOL)
         if two_d:
-            one_d = (y % k) == 0
+            one_d = (y % 2) == 0
             bw.put("1" if one_d else "0")
             bw.put(line_bits(row, one_d))
         else:

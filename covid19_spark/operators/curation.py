@@ -38,52 +38,50 @@ HASH_CHARS = 4
 _BUCKETS = 16**HASH_CHARS
 
 
-def md5_uniform(id_col: Column, chars: int = HASH_CHARS) -> Column:
-    """First ``chars`` lowercase-hex chars of ``md5(cast(id as string))`` — a
-    deterministic uniform draw over ``16**chars`` buckets.
+def md5_uniform(id_col: Column) -> Column:
+    """First ``HASH_CHARS`` lowercase-hex chars of ``md5(cast(id as
+    string))`` — a deterministic uniform draw over ``16**HASH_CHARS``
+    buckets.
 
     Fixed-width lowercase hex compares lexicographically == numerically, so a
     plain string ``<`` against a hex threshold is a Bernoulli keep-decision
     with no hex→int conversion, identical across engines (DuckDB md5 matches
     Spark's bit-for-bit).
     """
-    return F.substring(F.md5(id_col.cast("string")), 1, chars)
+    return F.substring(F.md5(id_col.cast("string")), 1, HASH_CHARS)
 
 
-def hex_threshold(rate: float, chars: int = HASH_CHARS) -> str:
+def hex_threshold(rate: float) -> str:
     """Hex-string threshold such that ``md5_uniform(id) < threshold`` keeps
     ~``rate`` of rows. ``rate >= 1`` returns ``"g"`` ( > every hex string)."""
-    buckets = 16**chars
-    t = math.floor(rate * buckets)
-    if t >= buckets:
+    t = math.floor(rate * _BUCKETS)
+    if t >= _BUCKETS:
         return "g"
-    return format(max(t, 0), f"0{chars}x")
+    return format(max(t, 0), f"0{HASH_CHARS}x")
 
 
 def grouped_split(
     df: DataFrame,
     group_col: str,
     fractions: "list[tuple[str, float]]",
-    salt: str = "split",
-    out_col: str = "split",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: every row of a GROUP (url
     domain, author, conversation, source document of chunks, ...) lands in
     the same split, because the draw is ``md5(group # salt)`` — splitting
     per-row instead leaks near-identical rows across the train/eval
     boundary, the classic contamination bug of naive `randomSplit`.
+    The assignment lands in a ``split`` column.
 
     ``fractions``: ordered ``[(name, frac), ...]`` summing to 1; the draw
     falls through ascending cumulative hex thresholds (quantized to
     16^-HASH_CHARS like every sampler here), the last split takes the
     remainder. Map-only, no shuffle, no RNG state: the same groups route
     to the same split on every run, partition layout, and engine (DuckDB
-    md5 matches bit-for-bit — oracle-checked). ``salt`` re-deals the
-    assignment without touching group identity.
+    md5 matches bit-for-bit — oracle-checked).
     """
     if not fractions or abs(sum(f for _, f in fractions) - 1.0) > 1e-9:
         raise ValueError("fractions must be non-empty and sum to 1")
-    u = md5_uniform(F.concat(F.col(group_col).cast("string"), F.lit("#" + salt)))
+    u = md5_uniform(F.concat(F.col(group_col).cast("string"), F.lit("#split")))
     acc = 0.0
     chain = None
     for name, frac in fractions[:-1]:
@@ -92,7 +90,7 @@ def grouped_split(
         chain = F.when(cond, name) if chain is None else chain.when(cond, name)
     last = fractions[-1][0]
     assigned = chain.otherwise(last) if chain is not None else F.lit(last)
-    return df.withColumn(out_col, assigned)
+    return df.withColumn("split", assigned)
 
 
 def hash_sample(df: DataFrame, id_col: str, rate: float) -> DataFrame:
@@ -112,10 +110,10 @@ def stratified_quota_sample(
     strata_cols: Sequence[str],
     id_col: str,
     quota: int,
-    rank_col: str = "sample_rank",
 ) -> DataFrame:
     """Up to ``quota`` rows per stratum, chosen by md5-of-id order — a
-    deterministic pseudo-random draw with an *exact* per-stratum count.
+    deterministic pseudo-random draw with an *exact* per-stratum count,
+    numbered in ``sample_rank``.
 
     One shuffle on the strata key; per-stratum sort is bounded by the stratum
     size. For massive strata at 100 TB, pre-thin with :func:`hash_sample` at
@@ -126,8 +124,8 @@ def stratified_quota_sample(
     """
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     w = Window.partitionBy(*strata_cols).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= F.lit(quota)
+    return df.withColumn("sample_rank", F.row_number().over(w)).filter(
+        F.col("sample_rank") <= F.lit(quota)
     )
 
 
@@ -203,19 +201,13 @@ def contamination_hits(
 # Line-level corpus dedup (RefinedWeb/MassiveText boilerplate removal)
 # ---------------------------------------------------------------------------
 
-def line_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-    delim: str = "\n",
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Remove lines that appear in ≥ ``min_docs`` distinct documents —
     corpus-level boilerplate stripping (nav bars, cookie banners, footers),
     the line-dedup stage of RefinedWeb (Penedo et al., 2023) / MassiveText.
 
-    Returns ``(id_col, text, n_lines, n_lines_removed)`` with surviving lines
-    rejoined in original order.
+    Lines of ``text`` split on ``\\n``.  Returns ``(doc_id, text, n_lines,
+    n_lines_removed)`` with surviving lines rejoined in original order.
 
     Scale design:
     - lines are keyed by ``md5(line)`` so the boilerplate groupBy and the
@@ -229,34 +221,34 @@ def line_dedup(
       chart assembly uses), one groupBy on the doc id.
     """
     lines = docs.select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), delim)).alias("pos", "line"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("line_key", F.md5(F.col("line")))
     boiler = (
         lines.groupBy("line_key")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select("line_key")
     )
     kept = lines.join(F.broadcast(boiler), "line_key", "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda x: x["line"],
             ),
-            delim,
-        ).alias(text_col),
+            "\n",
+        ).alias("text"),
         F.count(F.lit(1)).cast("long").alias("n_lines_kept"),
     )
     totals = docs.select(
-        id_col, F.size(F.split(F.col(text_col), delim)).cast("long").alias("n_lines")
+        "doc_id", F.size(F.split(F.col("text"), "\n")).cast("long").alias("n_lines")
     )
     return (
-        totals.join(rebuilt, id_col, "left")
+        totals.join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+            "doc_id",
+            F.coalesce(F.col("text"), F.lit("")).alias("text"),
             "n_lines",
             (F.col("n_lines") - F.coalesce(F.col("n_lines_kept"), F.lit(0))).alias(
                 "n_lines_removed"
@@ -269,7 +261,7 @@ def line_dedup(
 # Unigram-LM quality scoring (CCNet-style perplexity proxy)
 # ---------------------------------------------------------------------------
 
-def unigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_model(docs: DataFrame) -> DataFrame:
     """Corpus unigram language model: one row per token with its corpus
     frequency ``tf`` and the corpus ``total`` token count.
 
@@ -281,7 +273,7 @@ def unigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from covid19_spark.operators.text import tokenize
 
-    toks = docs.select(F.explode(tokenize(F.col(text_col))).alias("token")).filter(
+    toks = docs.select(F.explode(tokenize(F.col("text"))).alias("token")).filter(
         F.col("token") != ""
     )
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("tf"))
@@ -289,15 +281,10 @@ def unigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return vocab.crossJoin(F.broadcast(total))
 
 
-def unigram_logprob_score(
-    docs: DataFrame,
-    model: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_nats: float | None = None,
-) -> DataFrame:
-    """Per-document negative log-likelihood under a unigram LM: ``n_tokens``,
-    ``neg_logprob_sum`` (nats) and ``nats_per_token`` (lower = more typical).
+def unigram_logprob_score(docs: DataFrame) -> DataFrame:
+    """Per-document (``doc_id``) negative log-likelihood of ``text`` under
+    the corpus's own unigram LM: ``n_tokens``, ``neg_logprob_sum`` (nats)
+    and ``nats_per_token`` (lower = more typical).
 
     The CCNet recipe keeps the middle perplexity band (head = boilerplate,
     tail = gibberish); this emits the score so callers band it.
@@ -308,26 +295,19 @@ def unigram_logprob_score(
     double division of the exact sum — bit-stable across engines and runs.
 
     Scale: explode (map-only) → join on token (broadcast when the vocab fits,
-    else a shuffle hash join AQE picks) → one groupBy on ``id_col``. No
-    window, no driver collect. ``oov_nats`` (default: drop OOV tokens) is the
-    charge for tokens absent from ``model`` when scoring against a foreign
-    corpus' LM.
+    else a shuffle hash join AQE picks) → one groupBy on ``doc_id``. No
+    window, no driver collect.
     """
     from covid19_spark.operators.text import tokenize
 
-    if model is None:
-        model = unigram_model(docs, text_col)
-    toks = docs.select(id_col, F.explode(tokenize(F.col(text_col))).alias("token")).filter(
+    model = unigram_model(docs)
+    toks = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("token")).filter(
         F.col("token") != ""
     )
     nl = -F.log(F.col("tf").cast("double") / F.col("total").cast("double"))
-    if oov_nats is None:
-        scored = toks.join(model, "token")
-    else:
-        scored = toks.join(model, "token", "left")
-        nl = F.coalesce(nl, F.lit(float(oov_nats)))
-    per_token = scored.select(id_col, nl.cast("decimal(38,6)").alias("nl"))
-    return per_token.groupBy(id_col).agg(
+    scored = toks.join(model, "token")
+    per_token = scored.select("doc_id", nl.cast("decimal(38,6)").alias("nl"))
+    return per_token.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("nl").cast("double").alias("neg_logprob_sum"),
         (F.sum("nl").cast("double") / F.count(F.lit(1)).cast("double")).alias(
@@ -339,14 +319,12 @@ def unigram_logprob_score(
 def bigram_backoff_score(
     docs: DataFrame,
     model_docs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.4,
 ) -> DataFrame:
-    """Per-document negative log-likelihood under a bigram LM with Stupid
+    """Per-document (``doc_id``) negative log-likelihood of ``text`` under
+    a bigram LM with Stupid
     Backoff (Brants et al. 2007, "Large language models in machine
     translation" §4): S(w2|w1) = c(w1 w2)/c(w1) when the bigram was seen in
-    the model corpus, else ``alpha``·c(w2)/T — the web-scale backoff that
+    the model corpus, else 0.4·c(w2)/T — the web-scale backoff that
     skips discounting because at corpus scale the score quality matches
     Kneser-Ney at a fraction of the cost. This upgrades the unigram CCNet
     proxy (``unigram_logprob_score``) with transition structure: shuffled
@@ -359,12 +337,12 @@ def bigram_backoff_score(
     ``unigram_logprob_score`` default); documents with < 2 tokens emit no
     row.
 
-    Output: (id_col, n_bigrams, neg_logprob_sum, nats_per_bigram).
+    Output: (doc_id, n_bigrams, neg_logprob_sum, nats_per_bigram).
 
     Determinism contract: each transition's ``-ln(S)`` casts to
     DECIMAL(38,6) before the order-independent exact sum (ln differs in
     the last ulp across engines); the backoff product evaluates strictly
-    left-associative (``(alpha·tf)/T``) to match the oracle bit-for-bit.
+    left-associative (``(0.4·tf)/T``) to match the oracle bit-for-bit.
 
     Scale: bigram pairing is map-only (zip of adjacent tokens — no
     self-join); model counts are token-keyed aggregations whose outputs are
@@ -378,7 +356,7 @@ def bigram_backoff_score(
         model_docs = docs
 
     def _toks(df):
-        return F.filter(tokenize(F.col(text_col)), lambda t: t != "")
+        return F.filter(tokenize(F.col("text")), lambda t: t != "")
 
     def _pairs(df, *extra):
         # materialize the token array ONCE per row before indexing into it:
@@ -414,7 +392,7 @@ def bigram_backoff_score(
     total = uni.agg(F.sum("tf").alias("total"))
 
     scored = (
-        _pairs(docs, id_col)
+        _pairs(docs, "doc_id")
         .join(bg_counts, ["w1", "w2"], "left")
         .join(
             uni.select(F.col("token").alias("w1"), F.col("tf").alias("tf1")),
@@ -434,15 +412,15 @@ def bigram_backoff_score(
     ).when(
         F.col("tf2").isNotNull(),
         -F.log(
-            F.lit(float(alpha))
+            F.lit(0.4)
             * F.col("tf2").cast("double")
             / F.col("total").cast("double")
         ),
     )
     per_pair = scored.select(
-        id_col, nl.cast("decimal(38,6)").alias("nl")
+        "doc_id", nl.cast("decimal(38,6)").alias("nl")
     ).filter(F.col("nl").isNotNull())
-    return per_pair.groupBy(id_col).agg(
+    return per_pair.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("nl").cast("double").alias("neg_logprob_sum"),
         (F.sum("nl").cast("double") / F.count(F.lit(1)).cast("double")).alias(
@@ -460,30 +438,26 @@ def pack_greedy(
     id_col: str,
     token_col: str,
     ctx_len: int,
-    shard_chars: int = 1,
-    shard_col: str = "shard",
-    bin_col: str = "bin",
 ) -> DataFrame:
-    """Sequence packing: assign documents to fixed-token-budget bins for
-    training-batch assembly. Documents are split into ``16**shard_chars``
-    independent shards by md5(id), ordered deterministically within the
-    shard (md5 order = uniform pseudo-random interleave of domains), and
+    """Sequence packing: assign documents to fixed-token-budget bins
+    (``bin``) for training-batch assembly. Documents are split into 16
+    independent shards (``shard``) by the first hex char of md5(id),
+    ordered deterministically within the shard (md5 order = uniform pseudo-random interleave of domains), and
     packed contiguously: ``bin = floor(exclusive_prefix_tokens / ctx_len)``,
     i.e. a document opens the next bin once the running total crosses the
     budget.
 
     Scale: one shuffle on the shard key, then a per-shard window sum —
-    shards are independent streams, so parallelism = shard count; size
-    ``shard_chars`` so a shard's documents fit one task (2 hex chars → 256
-    shards ≈ 400 GB/shard at 100 TB; pair with date/domain partitioning for
-    finer grain). Deterministic: the same corpus always packs identically.
+    shards are independent streams, so parallelism = shard count; at
+    100 TB pair it with date/domain partitioning so a shard's documents
+    fit one task. Deterministic: the same corpus always packs identically.
     """
     h = F.md5(F.col(id_col).cast("string"))
-    out = df.withColumn(shard_col, F.substring(h, 1, shard_chars))
-    w = Window.partitionBy(shard_col).orderBy(h, F.col(id_col))
+    out = df.withColumn("shard", F.substring(h, 1, 1))
+    w = Window.partitionBy("shard").orderBy(h, F.col(id_col))
     cum = F.sum(F.col(token_col)).over(w)
     return out.withColumn(
-        bin_col,
+        "bin",
         F.floor((cum - F.col(token_col)) / F.lit(float(ctx_len))).cast("long"),
     )
 
@@ -496,15 +470,15 @@ def pack_greedy(
 CLASSIFIER_BUCKETS = 2001
 
 
-def hashed_token_weight(tok: Column, buckets: int = CLASSIFIER_BUCKETS) -> Column:
-    """Deterministic integer weight in [-(buckets-1)/2, (buckets-1)/2] from
+def hashed_token_weight(tok: Column) -> Column:
+    """Deterministic integer weight in ±(CLASSIFIER_BUCKETS-1)/2 from
     the token's md5 prefix — the hashing-trick weight lookup of a linear
     text classifier, with the weight table replaced by a pure hash function
     so the score is reproducible on any engine with md5 (fixture-free
     differential testing; swap in a broadcast real-weight map in production).
     """
     bucket = F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
-    return (bucket % buckets) - (buckets - 1) // 2
+    return (bucket % CLASSIFIER_BUCKETS) - (CLASSIFIER_BUCKETS - 1) // 2
 
 
 def linear_classifier_columns(text: Column) -> dict[str, Column]:
@@ -527,10 +501,8 @@ def linear_classifier_columns(text: Column) -> dict[str, Column]:
     the identical ``('0x' || substr(md5(x),1,8))::BIGINT`` weight).
     """
     toks = F.filter(F.split(F.lower(text), " "), lambda t: t != "")
-    # single-arg lambda: F.transform would otherwise bind the element index
-    # to hashed_token_weight's ``buckets`` parameter
     wsum = F.aggregate(
-        F.transform(toks, lambda t: hashed_token_weight(t)),
+        F.transform(toks, hashed_token_weight),
         F.lit(0).cast("long"),
         lambda acc, w: acc + w,
     )
@@ -585,9 +557,9 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    rank_col: str = "sample_rank",
 ) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, ``k`` rows per stratum —
+    """Weighted sampling WITHOUT replacement, ``k`` rows per stratum
+    (numbered in ``sample_rank``) —
     Efraimidis & Spirakis 2006: each row draws ``u ~ U(0,1)`` and the top-k
     by ``u^(1/w)`` is an exact weighted sample (a row's inclusion odds are
     proportional to its weight, no replacement, single pass). The corpus-
@@ -612,7 +584,7 @@ def weighted_sample(
         F.col("__es_key").desc(), F.col(id_col).asc()
     )
     return (
-        keyed.withColumn(rank_col, F.row_number().over(win))
-        .filter(F.col(rank_col) <= k)
+        keyed.withColumn("sample_rank", F.row_number().over(win))
+        .filter(F.col("sample_rank") <= k)
         .drop("__es_key")
     )

@@ -113,7 +113,6 @@ def containment_pairs(
     block_cols: Sequence[str],
     n: int = 2,
     threshold: float = 0.5,
-    max_block: int | None = 10_000,
 ) -> DataFrame:
     """Directional Jaccard CONTAINMENT ``|A∩B| / |A|`` over distinct word
     n-gram shingles for same-block pairs — the asymmetric companion of
@@ -124,7 +123,7 @@ def containment_pairs(
     inclusion) a resemblance threshold misses.
 
     Same blocked-verify contract as the resemblance operator: empty
-    ``block_cols`` refused, oversized blocks dropped via the broadcast
+    ``block_cols`` refused, blocks over 10,000 rows dropped via the broadcast
     anti-join guard, pairwise work only inside blocks. Emits pairs where
     ``max(containment_a_in_b, containment_b_in_a) >= threshold``, with both
     directions reported.
@@ -141,14 +140,13 @@ def containment_pairs(
     sh = df.repartition(n_parts, *block_cols).select(
         F.col(id_col), *[F.col(c) for c in block_cols], word_shingles(F.col(text_col), n).alias("sh")
     )
-    if max_block is not None:
-        oversized = (
-            sh.groupBy(*block_cols)
-            .agg(F.count(F.lit(1)).alias("__bs"))
-            .filter(F.col("__bs") > max_block)
-            .select(*block_cols)
-        )
-        sh = sh.join(F.broadcast(oversized), block_cols, "left_anti")
+    oversized = (
+        sh.groupBy(*block_cols)
+        .agg(F.count(F.lit(1)).alias("__bs"))
+        .filter(F.col("__bs") > 10_000)
+        .select(*block_cols)
+    )
+    sh = sh.join(F.broadcast(oversized), block_cols, "left_anti")
     a = sh.alias("a")
     b = sh.alias("b")
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
@@ -347,26 +345,20 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """Band the signatures and self-join on (band, bucket-hash).
 
     Returns distinct candidate (doc_a, doc_b) pairs with the fraction of
     agreeing minhashes as ``est_jaccard`` (unbiased Jaccard estimator).
 
-    ``max_bucket`` drops degenerate buckets (e.g. empty/boilerplate
-    documents all hashing identically) before the self-join — a bucket of
-    size B produces B² candidate pairs, so one pathological bucket turns the
-    join quadratic. Dropped buckets are precisely giant duplicate clusters;
-    at scale those are handled by exact-hash dedup first, then sampled.
-    Pass ``None`` to disable; pass ``dropped_report=[]`` to receive a
-    ``(band, bucket, bucket_size)`` frame of what the guard removed (see
-    ``drop_oversized_buckets``).
+    Buckets over 10,000 rows (e.g. empty/boilerplate documents all hashing
+    identically) are dropped before the self-join — a bucket of size B
+    produces B² candidate pairs, so one pathological bucket turns the join
+    quadratic. Dropped buckets are precisely giant duplicate clusters; at
+    scale those are handled by exact-hash dedup first, then sampled (see
+    ``lsh_candidate_pair_ids`` for the cap and its report).
     """
-    pairs = lsh_candidate_pair_ids(
-        sig_df, id_col, num_hashes, bands, max_bucket, dropped_report
-    )
+    pairs = lsh_candidate_pair_ids(sig_df, id_col, num_hashes, bands)
     sig_a = sig_df.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
     sig_b = sig_df.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
     scored = pairs.join(sig_a, "doc_a").join(sig_b, "doc_b")
@@ -395,8 +387,10 @@ def lsh_candidate_pair_ids(
     frame and discarding the score still paid both joins.
 
     The band self-join carries ONLY (id, band, bucket) — thin fixed-width
-    rows; one pathological bucket is removed by the ``max_bucket`` guard
-    before the join (see ``lsh_candidate_pairs``).
+    rows; ``max_bucket`` drops degenerate buckets before the join (``None``
+    disables the guard); pass ``dropped_report=[]`` to receive a ``(band,
+    bucket, bucket_size)`` frame of what the guard removed (see
+    ``drop_oversized_buckets``).
     """
     banded = band_buckets(sig_df, id_col, num_hashes, bands)
     banded = drop_oversized_buckets(
@@ -528,7 +522,6 @@ def simhash_candidate_pairs(
     id_col: str,
     max_hamming: int = 3,
     max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """Near-dup candidates: pairs sharing ≥1 of four 16-bit sub-bands, kept if
     Hamming distance ≤ ``max_hamming`` (``bit_count(a XOR b)``).
@@ -536,14 +529,12 @@ def simhash_candidate_pairs(
     ``max_bucket`` drops degenerate (band, key) groups before the self-join
     (see ``drop_oversized_buckets``) — without it, media corpora with many
     constant inputs (black frames, silence) would make one sub-band bucket
-    hold a large corpus fraction and the probe quadratic within it. Pass
-    ``dropped_report=[]`` to receive a ``(band, key, bucket_size)`` frame of
-    the dropped groups instead of losing them silently."""
+    hold a large corpus fraction and the probe quadratic within it."""
     bands = hamming_band_keys("simhash")
     banded = sig_df.select(id_col, "simhash", F.explode(bands).alias("bb")).select(
         id_col, "simhash", "bb.band", "bb.key"
     )
-    banded = drop_oversized_buckets(banded, ["band", "key"], max_bucket, dropped_report)
+    banded = drop_oversized_buckets(banded, ["band", "key"], max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
@@ -571,8 +562,6 @@ def _lsh_verified_pairs_with_handle(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """MinHash-LSH discovery → exact-Jaccard verification, the pre-clustering
     stage of ``lsh_dedup_pipeline``: (verified pairs ``(doc_a, doc_b,
@@ -597,9 +586,7 @@ def _lsh_verified_pairs_with_handle(
     # id pairs only — the exact-Jaccard verify below supersedes the
     # est_jaccard estimator, so the scored form's two signature re-joins
     # would be pure waste (see lsh_candidate_pair_ids)
-    cands = lsh_candidate_pair_ids(
-        sigs, id_col, num_hashes, bands, max_bucket, dropped_report
-    )
+    cands = lsh_candidate_pair_ids(sigs, id_col, num_hashes, bands)
     a = sh.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sh_a"))
     b = sh.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
@@ -622,9 +609,6 @@ def lsh_dedup_pipeline(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    cc_algorithm: str = "label",
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """End-to-end near-duplicate removal at corpus scale: MinHash-LSH
     discovery → exact n-gram-Jaccard verification of ONLY the candidate
@@ -655,22 +639,12 @@ def lsh_dedup_pipeline(
     Output: one row per input document — (id_col, cluster_id,
     cluster_size, is_canonical); singletons keep their own id with
     cluster_size 1. Keep policy: smallest id per cluster.
-
-    ``dropped_report=[]`` receives the (band, bucket, bucket_size) frame of
-    buckets the degenerate-cap guard removed (see ``drop_oversized_buckets``)
-    — evaluate it BEFORE long-running downstream work if cost matters: the
-    pipeline releases its internal caches once clustering materializes, so
-    a later evaluation recomputes the banding from source (correct, one
-    extra scan).
     """
     verified, caches = _lsh_verified_pairs_with_handle(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket,
-        dropped_report,
+        df, id_col, text_col, num_hashes, bands, shingle_n, threshold
     )
-    clusters = dedup_clusters(
-        verified.select("doc_a", "doc_b"), algorithm=cc_algorithm
-    )
-    # Both CC variants eagerly localCheckpoint the edge frame at entry, so by
+    clusters = dedup_clusters(verified.select("doc_a", "doc_b"))
+    # Connected components eagerly localCheckpoints the edge frame, so by
     # now the verify join has fully materialized and nothing downstream reads
     # the shingle/signature caches — release them instead of leaking them.
     for c in caches:
@@ -695,19 +669,17 @@ def incremental_dedup_against_corpus(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
-    materialize: bool = False,
 ) -> DataFrame:
     """Screen a NEW batch of documents against an EXISTING deduplicated
     corpus without ever pairing corpus↔corpus or batch↔batch rows — the
     cost is proportional to the batch, not the corpus.
 
-    ``materialize=True`` evaluates the screen eagerly (localCheckpoint) and
-    releases the internal corpus shingle/signature and batch shingle caches
-    immediately — the session-hygiene mode for the steady-state ingestion
-    loop (screen batch N → append → screen batch N+1), where the lazy
-    default would pin one corpus-sized cache set per screened batch until
-    the session clears its cache.
+    The screen is evaluated eagerly (localCheckpoint) and the internal
+    corpus shingle/signature and batch shingle caches are released at once
+    — session hygiene for the steady-state ingestion loop (screen batch N
+    → append → screen batch N+1), where a lazy result would pin one
+    corpus-sized cache set per screened batch until the session clears its
+    cache.
 
     Stages (all batch-bounded):
       1. exact first-wins: anti-probe of md5(text) against the corpus digest
@@ -724,6 +696,28 @@ def incremental_dedup_against_corpus(
     where ``near_dup_of`` is the smallest corpus id among verified hits
     (-1 if none), and ``keep`` = not exact-dup and no verified hit.
     """
+    out, caches = _incremental_screen_with_handle(
+        corpus, batch, id_col, text_col, num_hashes, bands, shingle_n, threshold
+    )
+    out = out.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
+    return out
+
+
+def _incremental_screen_with_handle(
+    corpus: DataFrame,
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    threshold: float,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The lazy screen of ``incremental_dedup_against_corpus`` and its
+    persisted-frame handles, which the caller unpersists once it has
+    evaluated the screen."""
     c_digests = corpus.select(F.md5(F.col(text_col)).alias("__th")).distinct()
     # ONE shingle pass over the corpus text: the bucket index and the verify
     # shingle store both derive from this persisted frame, so deriving them
@@ -753,15 +747,14 @@ def incremental_dedup_against_corpus(
         F.col(id_col), F.coalesce("__exact", F.lit(0)).cast("long").alias("is_exact_dup")
     )
 
-    cb = c_buckets
-    if max_bucket is not None:
-        oversized = (
-            cb.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bs"))
-            .filter(F.col("__bs") > max_bucket)
-            .select("band", "bucket")
-        )
-        cb = cb.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
+    # buckets over 10,000 corpus rows are degenerate (see lsh_candidate_pairs)
+    oversized = (
+        c_buckets.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("__bs"))
+        .filter(F.col("__bs") > 10_000)
+        .select("band", "bucket")
+    )
+    cb = c_buckets.join(F.broadcast(oversized), ["band", "bucket"], "left_anti")
     # ONE shingle pass over the batch text, persisted: the signature pass and
     # the verify join both read it (the batch side is small relative to the
     # corpus, but the no-double-scan contract is the same as the e2e pipeline).
@@ -814,140 +807,37 @@ def incremental_dedup_against_corpus(
             (F.col("is_exact_dup") == 0) & F.coalesce("__ndof", F.lit(-1)).eqNullSafe(F.lit(-1))
         ).cast("long").alias("keep"),
     )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        for c in [c_sh, c_sig, b_shingles]:
-            c.unpersist()
-    return out
-
-
-def _two_phase_components(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. 2014, "Connected components in MapReduce and beyond") — the
-    O(log n)-round path for adversarial long-chain graphs where min-label
-    propagation needs O(diameter) rounds.
-
-    Edge frame invariant: canonical directed ``(u, v)`` with ``u > v``
-    (child → smaller parent). Per round:
-      - large-star: every node connects its STRICTLY LARGER neighbors to
-        the minimum of its closed neighborhood min(Γ(u) ∪ {u});
-      - small-star: every node connects its smaller-or-equal neighbors
-        (and itself) to its minimum neighbor.
-    Both are one groupBy-min + one join over the edge frame — the same
-    shuffle primitives as label propagation, but the round count is
-    logarithmic in component size instead of linear in diameter. Fixpoint
-    when the canonical edge set is unchanged (count + order-insensitive
-    bit_xor-of-xxhash64 checksum). At fixpoint the graph is a star forest centered at
-    each component's minimum node.
-
-    Input: (u, v) pairs, u != v (either orientation). Output: (node, comp).
-    """
-    from pyspark.sql import Observation
-
-    canon = (
-        edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev: tuple | None = None
-    for _ in range(max_iter):
-        nbrs = canon.union(
-            canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        lmins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least("u", "__mv").alias("m"))
-        )
-        large = (
-            nbrs.filter(F.col("v") > F.col("u"))
-            .join(lmins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(smins.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # bit_xor (not sum) as the set checksum: order-insensitive over the
-        # distinct edge set and cannot overflow under ANSI arithmetic.
-        # Observed ON the checkpoint job (r14) instead of a separate
-        # agg().first() action per round — metrics ride the same execution.
-        obs = Observation()
-        canon = small.observe(
-            obs,
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).localCheckpoint(eager=True)
-        m = obs.get
-        cur = (m["c"], m["h"])
-        if cur == prev:
-            break
-        prev = cur
-    stars = (
-        canon.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-        .union(canon.select(F.col("v").alias("node"), F.col("v").alias("comp")))
-        .distinct()
-    )
-    # Self-loop-only nodes were dropped by the canonical filter but are
-    # still their own singleton component (parity with label propagation).
-    nodes = edges.select(F.col("u").alias("node")).distinct()
-    return nodes.join(stars, "node", "left").select(
-        "node", F.coalesce("comp", F.col("node")).alias("comp")
-    )
+    return out, [c_sh, c_sig, b_shingles]
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over an undirected edge list → ``(node,
     component)`` where ``component`` is the smallest node id reachable —
     the cluster-canonicalization stage of a dedup pipeline (near-dup pairs
     → duplicate clusters → keep one document per cluster).
 
-    ``algorithm="label"`` (default): min-label propagation to fixpoint —
-    each round joins current labels across edges and takes the per-node
+    Min-label propagation to fixpoint (at most 20 rounds) — each round joins current labels across edges and takes the per-node
     min. Dedup graphs have tiny diameters (LSH+verify emits near-cliques),
     so convergence is O(diameter) rounds ≈ 2-4; each round is one join +
     one min-agg shuffle over the *pair graph* (≪ corpus).
     ``localCheckpoint(eager=True)`` truncates lineage per round so the plan
     stays flat. The per-round fixpoint probe counts changed labels (an
     action on |nodes| rows — no data is collected).
-
-    ``algorithm="star"``: alternating large-star/small-star (Kiveris et
-    al. 2014) — same join/agg primitives, O(log n) rounds regardless of
-    diameter; use for adversarial long-chain graphs (entity-resolution
-    chains, citation paths) where label propagation's O(diameter) rounds
-    are the scale ceiling.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
-    # Checkpoint the symmetrized edge frame BEFORE branching: both variants
-    # derive everything (rounds AND the final node/singleton recovery) from
-    # it, so this is the single point where the caller's — possibly
-    # cache-backed — edge lineage is severed. lsh_dedup_pipeline relies on
-    # this to unpersist its shingle/signature caches right after this
-    # function returns; the star path previously built its `nodes` frame
-    # from the raw input and kept the whole verify-join lineage alive.
+    # Checkpoint the symmetrized edge frame first: everything (rounds AND
+    # the node set) derives from it, so this is the single point where the
+    # caller's — possibly cache-backed — edge lineage is severed.
+    # lsh_dedup_pipeline relies on this to unpersist its shingle/signature
+    # caches right after this function returns.
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .localCheckpoint(eager=True)
     )
-    if algorithm == "star":
-        return _two_phase_components(sym, max_iter)
     from pyspark.sql import Observation
 
     labels = (
@@ -965,7 +855,7 @@ def connected_components(
     # round at bench scale, a full |nodes| join at cluster scale).
     # DECIMAL(38,0) keeps the sum exact for any node-id magnitude.
     prev_sum = None
-    for i in range(max_iter):
+    for _ in range(20):
         nbr = sym.join(labels, sym["v"] == labels["node"]).select(
             sym["u"].alias("node"), F.col("comp")
         )
@@ -990,15 +880,12 @@ def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Near-dup pairs → per-document cluster assignment with size and a
     canonical-keep flag: ``(doc_id, cluster_id, cluster_size, is_canonical)``.
     ``is_canonical`` marks the one document per cluster (smallest id) a
-    curation pipeline keeps; the rest are dropped as duplicates.
-    ``algorithm`` selects the connected-components strategy (see
-    ``connected_components``)."""
-    cc = connected_components(pairs, src=id_a, dst=id_b, algorithm=algorithm)
+    curation pipeline keeps; the rest are dropped as duplicates."""
+    cc = connected_components(pairs, src=id_a, dst=id_b)
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
     # No broadcast hint on sizes: it is O(#clusters) and a pathological corpus
     # (everything near-duplicated) makes it as big as the clustered-doc set,

@@ -29,16 +29,14 @@ def running_delta(
     key_cols: Sequence[str],
     order_cols: Sequence[str],
     value_cols: Sequence[str],
-    delta_prefix: str = "delta_",
-    first_delta_is_value: bool = True,
 ) -> DataFrame:
     """Per-key difference between successive cumulative snapshots.
 
-    For each column ``c`` in ``value_cols`` adds ``{delta_prefix}{c}`` =
+    For each column ``c`` in ``value_cols`` adds ``delta_{c}`` =
     ``c - lag(c)``. For a key's first snapshot the reference seeds the
     aggregate with zeros (``Covid19Stats.java:227-231`` initializes
     ``StatewiseDelta::new`` with 0s), so the first delta equals the first
-    cumulative value when ``first_delta_is_value`` (else null).
+    cumulative value.
 
     ``order_cols`` must be a deterministic total order within each key
     (include a tiebreaker id column if the timestamp can collide).
@@ -46,7 +44,6 @@ def running_delta(
     w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).asc() for c in order_cols])
     out = df
     for c in value_cols:
-        prev = F.lag(F.col(c)).over(w)
-        seed = F.coalesce(prev, F.lit(0)) if first_delta_is_value else prev
-        out = out.withColumn(f"{delta_prefix}{c}", F.col(c) - seed)
+        prev = F.coalesce(F.lag(F.col(c)).over(w), F.lit(0))
+        out = out.withColumn(f"delta_{c}", F.col(c) - prev)
     return out

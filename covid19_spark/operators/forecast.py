@@ -91,9 +91,6 @@ def holt_winters_additive(
     order_col: str,
     y_col: str,
     period: int = 7,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    gamma: float = 0.25,
     horizon: int = 7,
 ) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing (Winters 1960) — the
@@ -116,17 +113,17 @@ def holt_winters_additive(
     as an array, rotated with slice+concat each step.  Zero Python, zero
     per-row state.
 
-    Determinism: binary-exact default coefficients (α=0.5, β=0.25,
-    γ=0.25), left-to-right double folds everywhere (the period means are
+    Determinism: binary-exact coefficients (α=0.5, β=0.25, γ=0.25),
+    left-to-right double folds everywhere (the period means are
     folds too, NOT avg()), so the DuckDB recursive-CTE replay of the
     textually-identical expressions hash-matches at full precision."""
     key_cols = list(key_cols)
     m = int(period)
     if m < 2:
         raise ValueError(f"holt_winters: period must be >= 2, got {m}")
-    a, one_a = float(alpha), 1.0 - float(alpha)
-    b_, one_b = float(beta), 1.0 - float(beta)
-    g, one_g = float(gamma), 1.0 - float(gamma)
+    a, one_a = 0.5, 0.5
+    b_, one_b = 0.25, 0.75
+    g, one_g = 0.25, 0.75
 
     series = (
         df.groupBy(*key_cols)
@@ -193,15 +190,13 @@ def cusum_alarms(
     order_col: str,
     y_col: str,
     baseline: int = 28,
-    k_frac: float = 0.125,
-    h_frac: float = 1.0,
 ) -> DataFrame:
     """One-sided CUSUM changepoint detection (Page 1954) per key:
 
         s₀ = 0;   sₜ = max(0, sₜ₋₁ + (yₜ − μ₀ − k))
 
     with target μ₀ = mean of the first ``baseline`` observations, slack
-    ``k = k_frac·μ₀`` and alarm threshold ``h = h_frac·μ₀`` — the
+    ``k = 0.125·μ₀`` and alarm threshold ``h = 1.0·μ₀`` — the
     level-shift monitor that catches a sustained drift long before any
     single point trips a z-score gate.  The recurrence runs from
     observation ``baseline+1``; keys shorter than ``baseline+1`` are
@@ -211,7 +206,7 @@ def cusum_alarms(
     (collected ordered series, ``F.aggregate``), state carrying the
     running statistic, the 1-based index of the FIRST alarm (0 = never)
     and the alarm-day count.  Determinism: μ₀ is a left-to-right fold
-    mean (not avg()), ``k_frac``/``h_frac`` default binary-exact, and
+    mean (not avg()), the slack and threshold factors are binary-exact, and
     max(0, ·) is exact — the whole recurrence replays verbatim in a
     recursive CTE, no rounding exceptions needed.
 
@@ -238,8 +233,8 @@ def cusum_alarms(
         F.aggregate(F.slice(ys, 1, b), F.lit(0.0), lambda acc, y: acc + y)
         / F.lit(float(b))
     )
-    kk = F.lit(float(k_frac)) * mu0
-    hh = F.lit(float(h_frac)) * mu0
+    kk = F.lit(0.125) * mu0
+    hh = F.lit(1.0) * mu0
     init = F.struct(
         F.lit(0.0).alias("cs"),
         F.lit(b).cast("int").alias("t"),

@@ -44,12 +44,10 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
     checkpoint_every: int = 4,
 ) -> DataFrame:
-    """``(node, rank)`` after ``iterations`` weighted-PageRank rounds.
+    """``(node, rank)`` after ``iterations`` weighted-PageRank rounds over
+    ``(src, dst, w)`` edges.
 
     ``edges`` must cover every node with at least one OUT-edge (dangling
     nodes are the caller's modeling decision — the registry query builds a
@@ -64,9 +62,7 @@ def pagerank(
     (plan and timing unchanged); values are unaffected either way because
     a checkpoint only materializes the exact grid-summed doubles."""
     edges = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
+        "src", "dst", F.col("w").cast("double").alias("w")
     ).localCheckpoint(eager=True)
 
     # w is integral (a count): double partial sums are EXACT below 2^53,
@@ -125,12 +121,10 @@ def pagerank(
     return ranks
 
 
-def triangle_count(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """One-row ``(n_nodes, n_edges, n_triangles)`` for the undirected
-    simple graph induced by ``edges`` (direction/duplicates/self-loops
-    normalized away).
+    simple graph induced by ``(src, dst)`` edges (direction/duplicates/
+    self-loops normalized away).
 
     Degree-ordered orientation (Chiba & Nishizeki 1985; the MapReduce
     formulation of Suri & Vassilvitskii 2011): each undirected edge
@@ -144,8 +138,8 @@ def triangle_count(
     """
     und = (
         edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -201,8 +195,6 @@ def triangle_count(
 def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan 2007),
@@ -213,8 +205,8 @@ def label_propagation(
     iteration count — convergence detection would add a count() action per
     round for no semantic gain at small k.
 
-    ``edges`` must already contain both directions of each undirected
-    edge (the callers' symmetrized form).  Per round: one edge-list join +
+    ``edges`` ``(src, dst)`` must already contain both directions of each
+    undirected edge (the callers' symmetrized form).  Per round: one edge-list join +
     ONE aggregation — ``mode(label, deterministic=true)`` is exactly
     "highest neighbor count, ties to the smallest label", and as a typed
     imperative aggregate it builds per-node label→count maps MAP-SIDE and
@@ -236,7 +228,7 @@ def label_propagation(
     # One eager localCheckpoint materializes it exactly once — the same
     # lineage rule pagerank/connected_components already apply.
     edges = edges.select(
-        F.col(src).alias("node"), F.col(dst).alias("nbr")
+        F.col("src").alias("node"), F.col("dst").alias("nbr")
     ).localCheckpoint(eager=True)
     # edges carry both directions by caller contract, so src alone covers
     # every node — the former src∪dst union scanned the frame twice.

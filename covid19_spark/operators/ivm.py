@@ -22,12 +22,9 @@ merged result depend on batch boundaries.
 
 Scale: lift is one map-side-combined agg per batch (shuffle carries
 |keys|); merge is a union of two |keys|-sized frames + one agg — history
-is NEVER rescanned.  min/max/count/sum/avg are fully algebraic; for
-distinct counts use the sketch column (``with_distinct``): Spark's
-HLL state (``hll_sketch_agg``) merges with ``hll_union_agg`` under the
-same ⊕ — approximate, mergeable, bounded-size (the holistic exact
-distinct is the one aggregate that CANNOT be maintained incrementally
-without keeping the full key set).
+is NEVER rescanned.  min/max/count/sum/avg are fully algebraic (the
+holistic exact distinct is the one aggregate that CANNOT be maintained
+incrementally without keeping the full key set).
 """
 
 from __future__ import annotations
@@ -44,20 +41,15 @@ def agg_state(
     df: DataFrame,
     keys: Sequence[str],
     measure: str,
-    with_distinct: str | None = None,
 ) -> DataFrame:
     """Lift a batch to per-key mergeable state: n_rows, exact DEC sum,
-    min, max of ``measure`` (+ optionally an HLL sketch of column
-    ``with_distinct``)."""
-    aggs = [
+    min, max of ``measure``."""
+    return df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col(measure).cast(DEC)).alias("sum_dec"),
         F.min(measure).alias("min_v"),
         F.max(measure).alias("max_v"),
-    ]
-    if with_distinct is not None:
-        aggs.append(F.hll_sketch_agg(with_distinct).alias("distinct_sketch"))
-    return df.groupBy(*keys).agg(*aggs)
+    )
 
 
 def merge_agg_state(
@@ -67,19 +59,14 @@ def merge_agg_state(
     lift) into one.  Associative and commutative, so batches may arrive
     in any order and states may be pre-merged hierarchically (per hour →
     per day → total) — union + one |keys|-sized agg, no history rescan."""
-    merged = a.unionByName(b)
-    has_sketch = "distinct_sketch" in merged.columns
-    aggs = [
+    return a.unionByName(b).groupBy(*keys).agg(
         F.sum("n_rows").alias("n_rows"),
         # sum of DEC partials is exact → merged state is independent of
         # how rows were split into batches
         F.sum("sum_dec").cast(DEC).alias("sum_dec"),
         F.min("min_v").alias("min_v"),
         F.max("max_v").alias("max_v"),
-    ]
-    if has_sketch:
-        aggs.append(F.hll_union_agg("distinct_sketch").alias("distinct_sketch"))
-    return merged.groupBy(*keys).agg(*aggs)
+    )
 
 
 def finalize_agg_state(
@@ -87,7 +74,7 @@ def finalize_agg_state(
 ) -> DataFrame:
     """Lower state to the report: count, sum, min, max, avg (exact DEC
     sum divided by the count, cast once — identical to what a full
-    recompute yields).  The sketch, if present, lowers to its estimate.
+    recompute yields).
 
     ``keys``: the grouping columns.  Pass them explicitly when a key
     column could collide with a measure name; when omitted they are
@@ -102,12 +89,8 @@ def finalize_agg_state(
     if keys is None:
         keys = [
             c for c in state.columns
-            if c not in {"n_rows", "sum_dec", "min_v", "max_v", "distinct_sketch"}
+            if c not in {"n_rows", "sum_dec", "min_v", "max_v"}
         ]
     else:
         keys = list(keys)
-    if "distinct_sketch" in state.columns:
-        cols.append(
-            F.hll_sketch_estimate("distinct_sketch").alias("approx_distinct")
-        )
     return state.select(*keys, *cols)

@@ -96,11 +96,10 @@ def compaction_bins(
     size_col: str,
     order_cols: Sequence[str],
     target_bytes: int,
-    bin_col: str = "bin",
 ) -> DataFrame:
-    """Assign manifest rows (files) to compaction bins: walk files in
-    ``order_cols`` order, cut a new bin whenever the running byte total
-    crosses ``target_bytes`` — ``bin = floor(cum_bytes_before / target)``,
+    """Assign manifest rows (files) to compaction bins (``bin``): walk
+    files in ``order_cols`` order, cut a new bin whenever the running byte
+    total crosses ``target_bytes`` — ``bin = floor(cum_bytes_before / target)``,
     the streaming first-fit plan every table-maintenance service runs.
 
     Deliberately a GLOBAL-ORDER window: the input is a file MANIFEST
@@ -115,7 +114,7 @@ def compaction_bins(
     )
     cum_before = F.sum(size_col).over(w) - F.col(size_col)
     return files.withColumn(
-        bin_col,
+        "bin",
         F.floor(cum_before.cast("double") / F.lit(float(target_bytes))).cast("long"),
     )
 
@@ -189,10 +188,8 @@ def _hilbert_level_exprs(s: int, side: int):
     return quad, nx, ny
 
 
-def hilbert_code(
-    df: DataFrame, x: str, y: str, bits: int, out: str = "h"
-) -> DataFrame:
-    """Hilbert-curve index of the 2-D grid cell (``x``, ``y``), both in
+def hilbert_code(df: DataFrame, x: str, y: str, bits: int) -> DataFrame:
+    """Hilbert-curve index ``h`` of the 2-D grid cell (``x``, ``y``), both in
     ``[0, 2^bits)`` (quantize with ``int_bucket`` first): the standard
     iterative xy2d walk (one rotate/reflect step per bit level, MSB
     down), unrolled as ``bits`` chained projections — linear expression
@@ -226,7 +223,7 @@ def hilbert_code(
                 "__hy": F.expr(ny),
             }
         )
-    return work.withColumn(out, F.col("__hd").cast("long")).drop(
+    return work.withColumn("h", F.col("__hd").cast("long")).drop(
         "__hx", "__hy", "__hd"
     )
 

@@ -538,9 +538,9 @@ def _gif_lzw_decode(data: bytes, min_code: int, expect: int) -> bytes:
     return bytes(out[:expect])
 
 
-def encode_gif(pixels: "np.ndarray", delays_ms=None) -> bytes:
+def encode_gif(pixels: "np.ndarray") -> bytes:
     """Encode one (H, W, 3) uint8 frame — or a list of same-size frames as
-    an animation — as GIF89a with a shared palette built from the distinct
+    an animation with zero frame delays — as GIF89a with a shared palette built from the distinct
     colors (> 256 distinct colors raises: GIF is palette-bound; production
     quantizes first). Round-trips bit-exactly through ``decode_gif``."""
     import struct
@@ -565,11 +565,9 @@ def encode_gif(pixels: "np.ndarray", delays_ms=None) -> bytes:
     out += bytes([0x80 | (depth - 1), 0, 0])  # GCT present, bg 0, square px
     out += palette.tobytes()
     min_code = max(depth, 2)
-    if delays_ms is None:
-        delays_ms = [0] * len(frames)
-    for f, delay in zip(frames, delays_ms):
-        if len(frames) > 1 or delay:
-            out += bytes([0x21, 0xF9, 4, 0x00]) + struct.pack("<H", delay // 10) + bytes([0, 0])
+    for f in frames:
+        if len(frames) > 1:
+            out += bytes([0x21, 0xF9, 4, 0x00, 0, 0, 0, 0])
         out += bytes([0x2C]) + struct.pack("<HHHH", 0, 0, w, h) + bytes([0])
         idx = np.array(
             [lut[tuple(px)] for px in f.reshape(-1, 3)], dtype=np.uint16
@@ -1912,15 +1910,15 @@ def _sampled_avi_frames(payload: bytes, every_ms: int):
 
 
 def video_frame_features(
-    payload: bytes, every_ms: int, dim: int = 8
+    payload: bytes, every_ms: int
 ) -> "list[tuple[int, int, np.ndarray]]":
     """Real video path: decode the MJPEG AVI, sample one frame per
     ``every_ms`` of timeline, decode each sampled JPEG and featurize its
-    pixels. Returns [(frame_ts_ms, frame_index, feature)]."""
+    pixels (8 x 8 grid). Returns [(frame_ts_ms, frame_index, feature)]."""
     from covid19_spark.operators.jpeg import decode_jpeg
 
     return [
-        (ts, idx, image_features_from_pixels(decode_jpeg(jpeg), dim))
+        (ts, idx, image_features_from_pixels(decode_jpeg(jpeg), 8))
         for ts, idx, jpeg in _sampled_avi_frames(payload, every_ms)
     ]
 
@@ -1933,18 +1931,11 @@ VIDEO_FRAME_SCHEMA = (
 def extract_video_frames(
     media: DataFrame,
     every_ms: int = 1000,
-    dim: int = 8,
-    on_error: str = "fail",
 ) -> DataFrame:
     """Sampled-frame feature extraction for video rows via ``mapInPandas``:
     metadata (kind) prunes before any decode; each blob's MJPEG AVI
     container is parsed and each sampled frame decoded with the module's
-    own JPEG decoder (``video_frame_features``).
-
-    ``on_error="permissive"``: an undecodable container/frame yields ONE
-    sentinel row for the blob (``frame_ts_ms``/``frame_index``/``feature``
-    NULL, ``error`` set) instead of failing the task — the blob stays
-    observable in the output rather than silently vanishing."""
+    own JPEG decoder (``video_frame_features``)."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive (got {every_ms})")
     return _map_blobs(
@@ -1953,9 +1944,9 @@ def extract_video_frames(
         _media_id_key,
         lambda p: [
             (ts, idx, feat.tolist())
-            for ts, idx, feat in video_frame_features(p, every_ms, dim)
+            for ts, idx, feat in video_frame_features(p, every_ms)
         ],
-        on_error,
+        "fail",
         error_column=True,
     )
 
@@ -1986,26 +1977,17 @@ def _area_resize(gray: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
     return out
 
 
-def dhash_pixels(pixels: "np.ndarray", hash_size: int = 8) -> int:
+def dhash_pixels(pixels: "np.ndarray") -> int:
     """Difference hash (dHash) of decoded pixels: grayscale → area-resize to
-    (hash_size, hash_size+1) → horizontal gradient sign bits → signed int64
-    (bit 63 as the sign bit, matching the SimHash storage convention so the
-    banded Hamming probe operates on plain BIGINT columns). Robust to
-    re-encoding, mild noise, and rescaling — the standard perceptual
-    near-dup key for image corpora.
-
-    ``hash_size`` is pinned to 8: the downstream 4 x 16-bit banded probe
-    assumes EXACTLY 64 bits — more would overflow the int64 packing, fewer
-    would zero out whole sub-bands and turn the band self-join into a
-    near cross join."""
-    if hash_size != 8:
-        raise ValueError(
-            "hash_size must be 8: the 64-bit banded Hamming probe assumes "
-            "exactly 8x8 gradient bits"
-        )
+    8 x 9 → horizontal gradient sign bits → signed int64 (bit 63 as the
+    sign bit, matching the SimHash storage convention so the banded Hamming
+    probe operates on plain BIGINT columns). Robust to re-encoding, mild
+    noise, and rescaling — the standard perceptual near-dup key for image
+    corpora.  The downstream 4 x 16-bit banded probe assumes EXACTLY these
+    64 bits."""
     arr = np.asarray(pixels, dtype=np.float64)
     gray = arr.mean(axis=2) if arr.ndim == 3 else arr
-    small = _area_resize(gray, hash_size, hash_size + 1)
+    small = _area_resize(gray, 8, 9)
     bits = (small[:, 1:] > small[:, :-1]).reshape(-1)
     v = 0
     for i, b in enumerate(bits):
@@ -2014,11 +1996,7 @@ def dhash_pixels(pixels: "np.ndarray", hash_size: int = 8) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def image_dhash(
-    media: DataFrame,
-    hash_size: int = 8,
-    on_error: str = "fail",
-) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """``(media_id, dhash)`` per image row via ``mapInPandas``: decode the
     payload (``decode_image``) and hash its pixels.
 
@@ -2030,17 +2008,13 @@ def image_dhash(
     hash through the SAME resolution path. Video can use the DC path
     because frames only ever compare against other frames decoded the
     same way. The full JPEG decode is ~3x faster since the LUT entropy
-    decoder, so the consistency choice stays cheap.
-
-    ``on_error="permissive"``: an undecodable payload gets a NULL hash, not
-    a dropped row — the bad blob stays countable downstream, and the
-    near-dup probe filters nulls before banding."""
+    decoder, so the consistency choice stays cheap."""
     return _map_blobs(
         media.filter(F.col("kind") == "image"),
         "media_id long, dhash long",
         _media_id_key,
-        lambda p: [(dhash_pixels(decode_image(p), hash_size),)],
-        on_error,
+        lambda p: [(dhash_pixels(decode_image(p)),)],
+        "fail",
     )
 
 
@@ -2048,8 +2022,6 @@ def image_near_dup_pairs(
     hash_df: DataFrame,
     id_col: str = "media_id",
     max_hamming: int = 10,
-    max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """Perceptual near-duplicate candidate pairs over a dHash frame: the
     64-bit hashes ride the SAME banded Hamming probe as SimHash text dedup
@@ -2057,30 +2029,25 @@ def image_near_dup_pairs(
     <= 3 (a distance-4 pair can spread one bit per band and never meet);
     pairs at 4..max_hamming are recalled probabilistically — this is a
     CANDIDATE generator, not a certifier. One thin self-join, never O(n²)
-    over the image corpus; ``max_bucket`` guards the common degenerate case
-    (black/constant images all share a sub-band key — see
-    ``drop_oversized_buckets``)."""
+    over the image corpus; the probe's 10,000-row bucket cap guards the
+    common degenerate case (black/constant images all share a sub-band key
+    — see ``drop_oversized_buckets``)."""
     from covid19_spark.operators.dedup import simhash_candidate_pairs
 
     return simhash_candidate_pairs(
-        # NULL hashes are permissive-mode decode failures: not bandable,
-        # excluded here so they never masquerade as a degenerate bucket.
+        # a NULL hash is not bandable: excluded so it never masquerades as
+        # a degenerate bucket
         hash_df.filter(F.col("dhash").isNotNull()).select(
             F.col(id_col), F.col("dhash").alias("simhash")
         ),
         id_col,
         max_hamming=max_hamming,
-        max_bucket=max_bucket,
-        dropped_report=dropped_report,
     )
 
 
 def video_frame_hashes(
     media: DataFrame,
     every_ms: int = 1000,
-    hash_size: int = 8,
-    decode_path: str = "auto",
-    on_error: str = "fail",
 ) -> DataFrame:
     """``(media_id, frame_rank, dhash)`` — one perceptual hash per sampled
     video frame (real MJPEG-AVI decode; ``frame_rank`` is the 0-based index
@@ -2094,23 +2061,18 @@ def video_frame_hashes(
     block means ARE an area-mean, so the hash sees the same signal while
     the decoder skips AC materialization + IDCT + color upsampling
     (measured ~5x per frame). The DC path only engages when the DC image
-    covers the dHash grid (frame >= 8*hash_size tall and
-    8*(hash_size+1) wide — below that the 1/8-scale image UNDERSAMPLES the
+    covers the 8 x 9 dHash grid (frame >= 64 tall and 72 wide — below that the 1/8-scale image UNDERSAMPLES the
     hash and recall collapses; measured: planted-pair recall 20/40 on
     32x24 frames vs 40/40 on 80x64); smaller frames take the full decode,
     itself ~3x faster since the LUT entropy decoder. ``test_multimodal.py``
     pins DC-path/full-decode pair-set equality on the registry corpus.
 
-    ``decode_path`` (r06 ADVICE): ``"auto"`` picks per frame by the size
-    threshold above — correct when near-dup candidates share a size class,
-    the normal video case (re-encodes keep resolution). But a DC-hashed
+    The per-frame choice is correct when near-dup candidates share a size
+    class, the normal video case (re-encodes keep resolution). A DC-hashed
     frame and a full-decode-hashed frame of the SAME content land ~19 bits
     apart (the measured cross-path inconsistency of ``image_dhash``), so a
-    corpus whose near-dup pairs STRADDLE the threshold (e.g. originals next
-    to downscaled copies) silently loses recall under "auto". For such
-    mixed-resolution corpora pass ``"full"`` (every frame full-decodes —
-    consistent at any size) or ``"dc"`` (every frame DC-decodes — fastest,
-    but small frames undersample the hash grid)."""
+    corpus whose near-dup pairs STRADDLE the threshold (originals next to
+    downscaled copies) loses recall."""
     from covid19_spark.operators.jpeg import (
         decode_jpeg,
         decode_jpeg_dc,
@@ -2119,23 +2081,15 @@ def video_frame_hashes(
 
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive (got {every_ms})")
-    if decode_path not in ("auto", "dc", "full"):
-        raise ValueError(
-            f"decode_path must be 'auto', 'dc', or 'full' (got {decode_path!r})"
-        )
-    min_h, min_w = 8 * hash_size, 8 * (hash_size + 1)
-
     def decode(payload):
         hashes = []
         for rank, (_ts, _idx, jpeg) in enumerate(
             _sampled_avi_frames(payload, every_ms)
         ):
             fh, fw = peek_jpeg_dims(jpeg)
-            use_dc = decode_path == "dc" or (
-                decode_path == "auto" and fh >= min_h and fw >= min_w
-            )
+            use_dc = fh >= 64 and fw >= 72
             px = decode_jpeg_dc(jpeg) if use_dc else decode_jpeg(jpeg)
-            hashes.append((rank, dhash_pixels(px, hash_size)))
+            hashes.append((rank, dhash_pixels(px)))
         return hashes
 
     return _map_blobs(
@@ -2143,7 +2097,7 @@ def video_frame_hashes(
         "media_id long, frame_rank int, dhash long",
         _media_id_key,
         decode,
-        on_error,
+        "fail",
     )
 
 
@@ -2153,7 +2107,6 @@ def video_near_dup_pairs(
     max_hamming: int = 10,
     min_matching_frames: int = 3,
     max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """Video-level near-duplicates from per-frame perceptual hashes: frames
     align on ``frame_rank`` and candidate-join via the 4 x 16-bit sub-band
@@ -2175,13 +2128,13 @@ def video_near_dup_pairs(
 
     bands = hamming_band_keys("dhash")
     banded = (
-        # NULL frame hashes are permissive-mode sentinels — not bandable.
+        # a NULL frame hash is not bandable
         frame_hash_df.filter(F.col("dhash").isNotNull())
         .select(id_col, "frame_rank", "dhash", F.explode(bands).alias("bb"))
         .select(id_col, "frame_rank", "dhash", "bb.band", "bb.key")
     )
     banded = drop_oversized_buckets(
-        banded, ["frame_rank", "band", "key"], max_bucket, dropped_report
+        banded, ["frame_rank", "band", "key"], max_bucket
     )
     a, b = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(F.col("a.dhash").bitwiseXOR(F.col("b.dhash")))
@@ -2521,7 +2474,7 @@ def decode_wav(payload: bytes) -> "tuple[np.ndarray, int]":
     return arr[:n].reshape(-1, ch), rate
 
 
-def audio_fingerprint(samples: "np.ndarray", n_windows: int = 9, n_bands: int = 8) -> int:
+def audio_fingerprint(samples: "np.ndarray") -> int:
     """Chromaprint-style perceptual audio fingerprint: mono mix → 9 equal
     time windows → per-window spectral energy in 8 log-spaced bands (rfft)
     → sign of the time-delta per band → 8 x 8 = 64 bits packed into a
@@ -2534,6 +2487,7 @@ def audio_fingerprint(samples: "np.ndarray", n_windows: int = 9, n_bands: int = 
     gives planted gain/requant copies Hamming <= 6 while unrelated signals
     stay >= 10 (finer bands separate carrier frequencies; fewer windows
     keep per-window spectra stable)."""
+    n_windows, n_bands = 9, 8
     mono = np.asarray(samples, dtype=np.float64)
     if mono.ndim == 2:
         mono = mono.mean(axis=1)
@@ -2560,18 +2514,15 @@ def audio_fingerprint(samples: "np.ndarray", n_windows: int = 9, n_bands: int = 
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_fingerprints(media: DataFrame, on_error: str = "fail") -> DataFrame:
+def audio_fingerprints(media: DataFrame) -> DataFrame:
     """``(media_id, afp)`` per audio row via ``mapInPandas``: decode the WAV
-    payload and fingerprint its samples (``audio_fingerprint``).
-    ``on_error="permissive"``: undecodable payload → NULL fingerprint
-    (filtered before banding by ``audio_near_dup_pairs``, countable by the
-    caller) instead of a task failure."""
+    payload and fingerprint its samples (``audio_fingerprint``)."""
     return _map_blobs(
         media.filter(F.col("kind") == "audio"),
         "media_id long, afp long",
         _media_id_key,
         lambda p: [(audio_fingerprint(decode_wav(p)[0]),)],
-        on_error,
+        "fail",
     )
 
 
@@ -2579,26 +2530,21 @@ def audio_near_dup_pairs(
     fp_df: DataFrame,
     id_col: str = "media_id",
     max_hamming: int = 10,
-    max_bucket: int | None = 10_000,
-    dropped_report: list | None = None,
 ) -> DataFrame:
     """Perceptual audio near-duplicate candidates: the 64-bit fingerprints
     ride the same banded 16-bit-sub-band Hamming probe as SimHash/dHash —
-    one thin self-join, never O(n²) over the audio corpus (``max_bucket``
-    drops degenerate keys — digital silence fingerprints identically — see
-    ``drop_oversized_buckets``)."""
+    one thin self-join, never O(n²) over the audio corpus (the probe's
+    10,000-row bucket cap drops degenerate keys — digital silence
+    fingerprints identically — see ``drop_oversized_buckets``)."""
     from covid19_spark.operators.dedup import simhash_candidate_pairs
 
     return simhash_candidate_pairs(
-        # NULL fingerprints are permissive-mode decode failures (see
-        # image_near_dup_pairs).
+        # a NULL fingerprint is not bandable (see image_near_dup_pairs)
         fp_df.filter(F.col("afp").isNotNull()).select(
             F.col(id_col), F.col("afp").alias("simhash")
         ),
         id_col,
         max_hamming=max_hamming,
-        max_bucket=max_bucket,
-        dropped_report=dropped_report,
     )
 
 
@@ -2628,15 +2574,11 @@ AUDIO_FEATURES_SCHEMA = (
 def extract_audio_features(
     media: DataFrame,
     n_windows: int = 16,
-    on_error: str = "fail",
 ) -> DataFrame:
     """Windowed audio feature extraction via ``mapInPandas``: decode each
     WAV payload (``decode_wav``) and featurize its samples — same
     metadata-prunes-before-decode and fixed-width-output contract as the
-    image kernel. ``on_error="permissive"`` matches
-    ``extract_image_features``: bad payloads yield ``feature = NULL`` plus
-    an ``error`` column instead of failing the task (schema unchanged in
-    the default ``"fail"`` mode)."""
+    image kernel."""
     return _map_blobs(
         media.filter(F.col("kind") == "audio"),
         AUDIO_FEATURES_SCHEMA,
@@ -2644,7 +2586,7 @@ def extract_audio_features(
         lambda p: [
             (audio_features_from_samples(decode_wav(p)[0], n_windows).tolist(),)
         ],
-        on_error,
+        "fail",
         error_column=True,
     )
 

@@ -40,13 +40,11 @@ def equivalence_classes(
     return df.groupBy(*quasi_cols).agg(*aggs)
 
 
-def anonymity_report(
-    classes: DataFrame, k_threshold: int = 5, l_threshold: int = 2
-) -> DataFrame:
+def anonymity_report(classes: DataFrame) -> DataFrame:
     """Collapse a class frame to the one-row risk report: class count,
-    min/max k, rows in classes below ``k_threshold`` (the re-identifiable
+    min/max k, rows in classes below k = 5 (the re-identifiable
     population), and — when ``l`` is present — rows in homogeneity-risk
-    classes (``l < l_threshold``).  Exact integer counts plus one IEEE
+    classes (l < 2).  Exact integer counts plus one IEEE
     ratio division."""
     has_l = "l" in classes.columns
     aggs = [
@@ -54,13 +52,13 @@ def anonymity_report(
         F.min("k").cast("long").alias("min_k"),
         F.max("k").cast("long").alias("max_k"),
         F.sum("k").cast("long").alias("n_rows"),
-        F.sum(F.when(F.col("k") < k_threshold, F.col("k")).otherwise(0))
+        F.sum(F.when(F.col("k") < 5, F.col("k")).otherwise(0))
         .cast("long")
         .alias("rows_at_risk"),
     ]
     if has_l:
         aggs.append(
-            F.sum(F.when(F.col("l") < l_threshold, F.col("k")).otherwise(0))
+            F.sum(F.when(F.col("l") < 2, F.col("k")).otherwise(0))
             .cast("long")
             .alias("rows_homogeneous")
         )

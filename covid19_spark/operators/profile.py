@@ -19,25 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_columns(
-    df: DataFrame, cols: Sequence[str] | None = None, exact: bool = True
-) -> DataFrame:
-    """One row per column: n_rows, n_nulls, n_distinct (NULLs excluded).
-
-    ``exact=False`` uses ``approx_count_distinct`` (HLL++) — the 100 TB
-    path, where exact multi-column distincts would multiply the scan via
-    Expand.
-    """
-    cols = list(cols) if cols is not None else list(df.columns)
-    distinct = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact
-        else (lambda c: F.approx_count_distinct(F.col(c)))
-    )
+def profile_columns(df: DataFrame) -> DataFrame:
+    """One row per column of ``df``: n_rows, n_nulls, n_distinct (exact,
+    NULLs excluded)."""
+    cols = list(df.columns)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"__nulls_{c}"))
-        aggs.append(distinct(c).alias(f"__dist_{c}"))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"__dist_{c}"))
     one = df.agg(*aggs)
     stack_args = ", ".join(
         f"'{c}', __nulls_{c}, __dist_{c}" for c in cols

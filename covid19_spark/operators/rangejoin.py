@@ -11,8 +11,8 @@ the exact range predicate as a residual filter.
 Cost model: |points| map-only binning + Σ⌈len/bin_width⌉ exploded interval
 rows + ONE hash shuffle on the bin id. Choosing ``bin_width`` ≈ the typical
 interval length keeps the explode factor ~2 and each bin's candidate set
-small. Degenerate giant intervals (explode factor → ∞) are refused in-plan
-via ``max_bins_per_interval`` rather than silently going quadratic — same
+small. Degenerate giant intervals (explode factor → ∞, over 1024 bins) are
+refused in-plan rather than silently going quadratic — same
 spirit as the LSH bucket cap in ``operators/dedup.py``.
 
 Reference analogue: the date-window containment probes the bot serves
@@ -42,14 +42,12 @@ def binned_range_join(
     lo_col: str,
     hi_col: str,
     bin_width: float,
-    max_bins_per_interval: int = 1024,
 ) -> DataFrame:
     """Inner-join each point row to every interval row with
     ``lo <= value <= hi``, as a bin-keyed hash join.
 
     Column names must be disjoint between the two frames (rename before
-    calling). Intervals wider than ``max_bins_per_interval * bin_width``
-    raise in-plan — widen the bins or route outliers through a broadcast
+    calling). Intervals wider than ``1024 * bin_width`` raise in-plan — widen the bins or route outliers through a broadcast
     side-channel instead of letting one 10⁶-bin interval recreate the
     nested loop.
     """
@@ -59,12 +57,12 @@ def binned_range_join(
     hi_bin = _bin_of(F.col(hi_col), bin_width)
     n_bins = hi_bin - lo_bin + F.lit(1)
     guarded = F.when(
-        n_bins > max_bins_per_interval,
+        n_bins > 1024,
         F.raise_error(
             F.format_string(
                 "interval spans more than %d bins; widen bin_width or "
                 "broadcast outlier intervals separately",
-                F.lit(max_bins_per_interval),
+                F.lit(1024),
             )
         ).cast("long"),
     ).otherwise(hi_bin)

@@ -34,19 +34,21 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: BM25 term-frequency saturation and length normalization (the Robertson
+#: defaults), shared by every index scorer below.
+K1, B = 1.2, 0.75
+
 
 def bm25_scores_from_index(
     spark,
     index,
     terms,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 (doc_id, score) for a term set served from a persisted
     inverted index (``sources/index.InvertedIndex``) — the production
     twin of the inline-tokenize BM25 plans, hash-identical to them
     because the index stores exact integral statistics and the score
-    expression (idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)), DEC-summed
+    expression (idf · tf·(K1+1) / (tf + K1·(1−B+B·dl/avgdl)), DEC-summed
     per doc, round(6)) lives HERE, not in the files.
 
     ``terms``: literal list/tuple (→ static term-bucket PartitionFilters
@@ -73,10 +75,10 @@ def bm25_scores_from_index(
         "doc_id",
         (
             idf
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.lit(index.avgdl))
+                + K1 * (1 - B + B * F.col("dl") / F.lit(index.avgdl))
             )
         ).alias("s"),
     )
@@ -190,29 +192,23 @@ def bm25f_scores_from_index(
     index,
     terms: Sequence[str],
     weights: dict,
-    k1: float = 1.2,
-    b=0.75,
 ) -> DataFrame:
     """BM25F (doc_id, score) for a term set served from a persisted
     FIELDED index (``sources/index.FieldedIndex``) — the weighted
     multi-field extension of Robertson, Zaragoza & Taylor (CIKM 2004,
     "Simple BM25 extension to multiple weighted fields"), the Lucene
     multi-field query shape: per-field term frequencies are
-    length-normalized with THEIR field's b and avgdl, combined as the
-    weighted sum ``tfc = Σ_f w_f · tf_f / (1 − b_f + b_f·dl_f/avgdl_f)``,
+    length-normalized with THEIR field's avgdl (``B`` for every field),
+    combined as the weighted sum ``tfc = Σ_f w_f · tf_f / (1 − b_f + b_f·dl_f/avgdl_f)``,
     then saturated ONCE per (term, doc):
-    ``score = Σ_t idf(t) · tfc·(k1+1) / (k1 + tfc)``.
+    ``score = Σ_t idf(t) · tfc·(K1+1) / (K1 + tfc)``.
 
     ``weights``: field → weight (fields absent from the dict score 0 and
-    are pruned from the scan).  ``b``: one float for every field or a
-    per-field dict.  idf uses the document frequency over ANY field
+    are pruned from the scan).  idf uses the document frequency over ANY field
     (count of distinct docs containing the term — the combined frame's
     window count), with the main index's (N − df + 0.5)/(df + 0.5) + 1
-    shape.  Degenerate equivalences pinned by test: ONE field covering
-    the whole text ≡ plain BM25, and any field PARTITION of the token
-    stream with equal weights at b=0 ≡ plain BM25 at b=0 (length
-    normalization is the only thing fields change when weights are
-    flat).
+    shape.  Degenerate equivalence pinned by test: ONE field covering
+    the whole text ≡ plain BM25.
 
     Scale shape: the main index's one-scan discipline — a single
     term-bucket-pruned fpostings scan (static ``tb IN``/``t IN`` +
@@ -225,7 +221,7 @@ def bm25f_scores_from_index(
     fields = list(weights)
     if not fields:
         raise ValueError("bm25f needs at least one weighted field")
-    b_of = dict(b) if isinstance(b, dict) else {f: float(b) for f in fields}
+    b_of = {f: B for f in fields}
     missing = [f for f in fields if f not in index.avgdl]
     if missing:
         raise ValueError(f"fields absent from the index: {missing}")
@@ -263,7 +259,7 @@ def bm25f_scores_from_index(
     )
     per_term = combined.select(
         "doc_id",
-        (idf * F.col("tfc") * (k1 + 1) / (F.col("tfc") + k1)).alias("s"),
+        (idf * F.col("tfc") * (K1 + 1) / (F.col("tfc") + K1)).alias("s"),
     )
     return per_term.groupBy("doc_id").agg(
         F.round(
@@ -278,8 +274,6 @@ def dismax_scores_from_index(
     terms: Sequence[str],
     weights: dict,
     tie_break: float = 0.0,
-    k1: float = 1.2,
-    b=0.75,
 ) -> DataFrame:
     """Disjunction-max fielded scoring (Lucene ``DisjunctionMaxQuery``,
     the other half of the fielded surface next to BM25F): per (term,
@@ -288,8 +282,8 @@ def dismax_scores_from_index(
 
         dmax(t, d) = max_f s_f + tie_break · (Σ_f s_f − max_f s_f),
         s_f = w_f · idf_f-free per-field BM25 kernel
-            = w_f · tfn_f·(k1+1)/(k1 + tfn_f),
-        tfn_f = tf_f / (1 − b_f + b_f·dl_f/avgdl_f)
+            = w_f · tfn_f·(K1+1)/(K1 + tfn_f),
+        tfn_f = tf_f / (1 − B + B·dl_f/avgdl_f)
 
     and the document score is ``Σ_t idf(t) · dmax(t, d)`` (idf over
     any-field df, as BM25F).  ``tie_break=0`` is pure best-field —
@@ -311,7 +305,7 @@ def dismax_scores_from_index(
         raise ValueError("dismax needs at least one weighted field")
     if not (0.0 <= tie_break <= 1.0):
         raise ValueError(f"tie_break must be in [0, 1], got {tie_break}")
-    b_of = dict(b) if isinstance(b, dict) else {f: float(b) for f in fields}
+    b_of = {f: B for f in fields}
     missing = [f for f in fields if f not in index.avgdl]
     if missing:
         raise ValueError(f"fields absent from the index: {missing}")
@@ -332,7 +326,7 @@ def dismax_scores_from_index(
     bb = chain(b_of)
     wgt = chain({f: float(weights[f]) for f in fields})
     tfn = F.col("tf") / (F.lit(1.0) - bb + bb * F.col("dl") / avgdl)
-    kernel = wgt * (tfn * (k1 + 1) / (tfn + k1))
+    kernel = wgt * (tfn * (K1 + 1) / (tfn + K1))
     combined = (
         pruned.select("t", "doc_id", kernel.alias("s_f"))
         .groupBy("t", "doc_id")
@@ -416,14 +410,10 @@ def bm25_topk_multi(
     index,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
 ) -> DataFrame:
     """BM25 top-k for a BATCH of queries from the persisted inverted
     index — one pruned postings scan answers every query at once.
-    ``queries``: (query_id_col, terms_col ARRAY<STRING>).  Output:
+    ``queries``: (query_id, terms ARRAY<STRING>).  Output:
     (query_id, doc_id, rank, score), rank 1-based per query
     (score desc, doc_id asc — fully tiebroken), rows with rank > k
     dropped.  A query whose terms match no postings contributes no
@@ -444,8 +434,8 @@ def bm25_topk_multi(
     from covid19_spark.sources.index import postings_for_terms
 
     qt = queries.select(
-        F.col(query_id_col), F.explode(terms_col).alias("t")
-    ).dropDuplicates([query_id_col, "t"])
+        F.col("query_id"), F.explode("terms").alias("t")
+    ).dropDuplicates(["query_id", "t"])
     tf = postings_for_terms(spark, index, qt.select("t"))
     tf = tf.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("t")).cast("double")
@@ -458,29 +448,29 @@ def bm25_topk_multi(
         "doc_id",
         (
             idf
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.lit(index.avgdl))
+                + K1 * (1 - B + B * F.col("dl") / F.lit(index.avgdl))
             )
         ).alias("s"),
     )
     scores = (
         per_term.join(F.broadcast(qt), "t")
-        .groupBy(query_id_col, "doc_id")
+        .groupBy("query_id", "doc_id")
         .agg(
             F.round(
                 F.sum(F.col("s").cast("decimal(38,18)")).cast("double"), 6
             ).alias("score")
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "doc_id", "rank", "score")
+        .select("query_id", "doc_id", "rank", "score")
     )
 
 
@@ -606,9 +596,6 @@ def snippet_windows_from_index(
     terms: Sequence[str],
     k: int = 10,
     width: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    use_offsets: bool = True,
 ) -> DataFrame:
     """Search-result snippet extraction (hit highlighting) from the
     positional index: for the BM25 top-``k`` documents, find the
@@ -623,18 +610,16 @@ def snippet_windows_from_index(
     BM25 score itself.
 
     Scale shape: ranking + positions are index-served (term-pruned
-    scans), and with ``use_offsets=True`` (default; index v4, VERDICT r13
-    task #4) the cut itself is too: the window's tokens are sliced from
+    scans), and (index v4, VERDICT r13 task #4) the cut itself is too: the window's tokens are sliced from
     the index's per-doc start-offset/length arrays (``doclen.toff`` /
     ``doclen.tlen`` — Lucene's stored offsets) and extracted with
     per-token ``substr`` against the document text, so NOTHING is
     re-tokenized — the serve reads ``width`` tokens' worth of chars from
     each of the k winners however long the documents are.  Token-wise
     extraction (not one start-to-end substring) is what keeps the output
-    bit-identical to the re-tokenize path: runs of separators collapse to
-    the single spaces ``array_join`` emits.  ``use_offsets=False`` keeps
-    the v3 re-tokenize fallback (top-k-sized, for offset-less indexes);
-    equality of the two paths is pinned by test.
+    bit-identical to re-tokenizing the ``text``: runs of separators
+    collapse to the single spaces ``array_join`` emits (pinned by test
+    against a re-tokenize reference).
 
     The k winners are COLLECTED driver-side (k rows — the sanctioned
     bounded class of the PRF term collect / the ANN probed-list collect)
@@ -700,39 +685,28 @@ def snippet_windows_from_index(
         best["h"].cast("long").alias("n_hits"),
     )
     joined = scored.join(
-        docs.filter(F.col(id_col).isin(doc_ids)).select(
-            F.col(id_col).alias("doc_id"), text_col
+        docs.filter(F.col("doc_id").isin(doc_ids)).select("doc_id", "text"),
+        "doc_id",
+    )
+    # slice the window's (start, len) pairs from the index's per-doc offset
+    # arrays and substr each token out of the text — zero tokenization at
+    # serve time.  The doclen scan is statically pruned to the k winners
+    # (column pruning keeps dl-only readers unaffected by toff/tlen).
+    joined = joined.join(
+        index.doclen.filter(F.col("doc_id").isin(doc_ids)).select(
+            "doc_id", "toff", "tlen"
         ),
         "doc_id",
     )
-    if use_offsets:
-        # v4 serving path: slice the window's (start, len) pairs from the
-        # index's per-doc offset arrays and substr each token out of the
-        # text — zero tokenization at serve time.  The doclen scan is
-        # statically pruned to the k winners (column pruning keeps
-        # dl-only readers unaffected by toff/tlen).
-        joined = joined.join(
-            index.doclen.filter(F.col("doc_id").isin(doc_ids)).select(
-                "doc_id", "toff", "tlen"
-            ),
-            "doc_id",
-        )
-        lowered = F.lower(F.col(text_col))
-        snippet = F.array_join(
-            F.zip_with(
-                F.slice("toff", F.col("best_start") + 1, width),
-                F.slice("tlen", F.col("best_start") + 1, width),
-                lambda o, l: lowered.substr(o + 1, l),
-            ),
-            " ",
-        )
-    else:
-        toks = F.filter(
-            F.split(F.lower(F.col(text_col)), " "), lambda t: t != ""
-        )
-        snippet = F.array_join(
-            F.slice(toks, F.col("best_start") + 1, width), " "
-        )
+    lowered = F.lower(F.col("text"))
+    snippet = F.array_join(
+        F.zip_with(
+            F.slice("toff", F.col("best_start") + 1, width),
+            F.slice("tlen", F.col("best_start") + 1, width),
+            lambda o, l: lowered.substr(o + 1, l),
+        ),
+        " ",
+    )
     return (
         joined.select(
             "doc_id", "score",
@@ -748,14 +722,11 @@ def rrf_fuse(
     ranked: Sequence[tuple[str, DataFrame]],
     k0: int = 60,
     top_k: int = 10,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Fuse named rank lists into one RRF-ordered list per query.
 
-    ``ranked``: (name, frame) pairs; each frame has ``query_col``,
-    ``id_col`` and an integer ``rank_col`` (1-based, UNIQUE per query —
+    ``ranked``: (name, frame) pairs; each frame has ``query_id``,
+    ``doc_id`` and an integer ``rank`` (1-based, UNIQUE per query —
     a duplicated (query, id) row would fan out through the full-outer
     merge chain).
     Output: one row per (query, doc) seen by ANY retriever, with each
@@ -781,12 +752,12 @@ def rrf_fuse(
     out: DataFrame | None = None
     for name, df in ranked:
         side = df.select(
-            F.col(query_col),
-            F.col(id_col),
-            F.col(rank_col).cast("long").alias(f"{name}_rank"),
+            F.col("query_id"),
+            F.col("doc_id"),
+            F.col("rank").cast("long").alias(f"{name}_rank"),
         )
         out = side if out is None else out.join(
-            side, [query_col, id_col], "full_outer"
+            side, ["query_id", "doc_id"], "full_outer"
         )
 
     score: Column | None = None
@@ -798,8 +769,8 @@ def rrf_fuse(
         score = term if score is None else score + term
     out = out.withColumn("rrf_score", score)
 
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rrf_score").desc(), F.col("doc_id").asc()
     )
     return (
         out.withColumn("fused_rank", F.row_number().over(w))
@@ -813,8 +784,6 @@ def mmr_rerank(
     k: int = 10,
     shortlist: int = 20,
     lam: float = 0.75,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified re-ranking (Carbonell &
     Goldstein, SIGIR 1998): greedily pick the candidate maximizing
@@ -837,7 +806,7 @@ def mmr_rerank(
     Output: query_id, mmr_rank (1-based selection order), doc_id,
     rel (query-candidate cosine), mmr (marginal score at selection).
 
-    Constraint: ``id_col`` must be an integral type that fits in BIGINT —
+    Constraint: ``vec_id`` must be an integral type that fits in BIGINT —
     the fold state is typed ``struct<id:bigint,...>`` and the argmax
     tiebreak negates the id (``-id``), so string or wider ids are
     rejected here rather than silently cast.
@@ -850,16 +819,16 @@ def mmr_rerank(
         # sequence(1, 0) DESCENDS in Spark ([1, 0]) — a k=0 fold would run
         # two phantom steps instead of zero
         raise ValueError(f"k must be >= 1, got {k}")
-    id_t = dict(corpus.dtypes).get(id_col)
+    id_t = dict(corpus.dtypes).get("vec_id")
     if id_t not in {"tinyint", "smallint", "int", "bigint"}:
         raise TypeError(
-            f"mmr_rerank requires an integral {id_col!r} (fold state is "
+            "mmr_rerank requires an integral 'vec_id' (fold state is "
             f"struct<id:bigint,...> and the tiebreak negates it); got {id_t}"
         )
-    cands = cosine_topk(corpus, queries, k=shortlist, id_col=id_col, vec_col=vec_col)
+    cands = cosine_topk(corpus, queries, k=shortlist)
     cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     perq = (
         cands.join(cvecs, "neighbor_id")

@@ -28,10 +28,10 @@ def daily_rollup(
     key_cols: Sequence[str],
     sum_cols: Sequence[str] = (),
     last_cols: Sequence[str] = (),
-    date_col: str = "date",
     exact: bool = False,
 ) -> DataFrame:
-    """Tumbling 1-day rollup: sum deltas, carry latest cumulative.
+    """Tumbling 1-day rollup keyed by ``date``: sum deltas, carry latest
+    cumulative.
 
     ``sum_cols`` are summed within the (day, key) group; for ``last_cols`` the
     value belonging to the max ``ts_col`` in the group is kept (``max_by`` —
@@ -52,8 +52,8 @@ def daily_rollup(
     aggs += [F.max_by(F.col(c), F.col(ts_col)).alias(f"last_{c}") for c in last_cols]
     aggs.append(F.count(F.lit(1)).alias("n_updates"))
     return (
-        df.withColumn(date_col, F.to_date(F.col(ts_col)))
-        .groupBy(date_col, *key_cols)
+        df.withColumn("date", F.to_date(F.col(ts_col)))
+        .groupBy("date", *key_cols)
         .agg(*aggs)
     )
 

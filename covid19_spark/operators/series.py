@@ -134,65 +134,46 @@ def zip_positional(
     b: DataFrame,
     order_a: Sequence,
     order_b: Sequence,
-    how: str = "error",
-    idx_col: str = "idx",
 ) -> DataFrame:
     """Positional zip of two ordered frames — the reference's ``Utils.zip``
     (``Utils.java:17-28``), which THROWS when the lists' lengths differ
     (SURVEY §7.5.4 asks for the same assertion on the positional join).
 
     Both sides get a dense global index via ``with_ordered_index`` (no
-    single-partition window), then join on it. ``how`` picks the
-    length-mismatch behavior:
-
-    - ``"error"`` (reference semantics): full-outer join wrapped in a
-      lazy ``raise_error`` on any one-sided position — the throw happens
-      DISTRIBUTED at execution, with zero extra driver-side count jobs,
-      and fires even when the mismatch is discovered mid-scan;
-    - ``"outer"``: keep one-sided positions with nulls plus a boolean
-      ``matched`` flag (the audit form — silent truncation is how a
-      positional pairing bug ships);
-    - ``"inner"``: truncate to the shorter side (the caller asserts
-      lengths some other way, e.g. both sides derive from one frame).
+    single-partition window), then full-outer join on it, with a lazy
+    ``raise_error`` on any one-sided position — the throw happens
+    DISTRIBUTED at execution, with zero extra driver-side count jobs, and
+    fires even when the mismatch is discovered mid-scan.
 
     Column layout: ``idx`` then a's columns then b's; name collisions on
     b's side get a ``_b`` suffix."""
-    if how not in ("error", "outer", "inner"):
-        raise ValueError(f"zip_positional: unknown how={how!r}")
-    ia = with_ordered_index(a, order_a, idx_col=idx_col)
-    ib = with_ordered_index(b, order_b, idx_col=idx_col)
-    taken = set(a.columns) | {idx_col}
+    ia = with_ordered_index(a, order_a)
+    ib = with_ordered_index(b, order_b)
+    taken = set(a.columns) | {"idx"}
     renames = {c: (c + "_b" if c in taken else c) for c in b.columns}
-    ib = ib.select(
-        idx_col, *[F.col(c).alias(renames[c]) for c in b.columns]
-    )
-    join_how = "inner" if how == "inner" else "full_outer"
+    ib = ib.select("idx", *[F.col(c).alias(renames[c]) for c in b.columns])
     # one-sided-ness must be detected on a NON-NULLABLE marker, not on the
     # payload columns (which may be legitimately null)
     ia = ia.withColumn("__pa", F.lit(True))
     ib = ib.withColumn("__pb", F.lit(True))
-    out = ia.join(ib, idx_col, join_how)
+    out = ia.join(ib, "idx", "full_outer")
     matched = F.col("__pa").isNotNull() & F.col("__pb").isNotNull()
-    cols = [idx_col, *a.columns, *[renames[c] for c in b.columns]]
-    if how == "error":
-        # The guard lives in a FILTER, not a projected column: a projected
-        # raise_error is silently DROPPED by column pruning the moment a
-        # caller selects a subset without it (select('va','vb') would then
-        # null-pad instead of throwing). A filter predicate always
-        # executes; matched rows pass as plain TRUE.
-        guard = F.when(matched, F.lit(True)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("zip_positional: length mismatch at position "),
-                    F.col(idx_col).cast("string"),
-                    F.lit(" (reference Utils.zip throws on unequal lengths)"),
-                )
-            ).cast("boolean")
-        )
-        return out.filter(guard).select(*cols)
-    if how == "outer":
-        return out.withColumn("matched", matched).select(*cols, "matched")
-    return out.select(*cols)
+    cols = ["idx", *a.columns, *[renames[c] for c in b.columns]]
+    # The guard lives in a FILTER, not a projected column: a projected
+    # raise_error is silently DROPPED by column pruning the moment a caller
+    # selects a subset without it (select('va','vb') would then null-pad
+    # instead of throwing). A filter predicate always executes; matched
+    # rows pass as plain TRUE.
+    guard = F.when(matched, F.lit(True)).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("zip_positional: length mismatch at position "),
+                F.col("idx").cast("string"),
+                F.lit(" (reference Utils.zip throws on unequal lengths)"),
+            )
+        ).cast("boolean")
+    )
+    return out.filter(guard).select(*cols)
 
 
 def top_k(

@@ -28,9 +28,9 @@ def sessionize(
     ts_col: str,
     gap: str = "30 minutes",
     tiebreak_cols: Sequence[str] = (),
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Assign a per-key session index (1-based) to every event.
+    """Assign a per-key session index (1-based, ``session_id``) to every
+    event.
 
     A session break occurs when ``ts - lag(ts) > gap`` (or at the key's first
     event). ``gap`` is an INTERVAL string.
@@ -45,7 +45,7 @@ def sessionize(
     running = Window.partitionBy(*key_cols).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    return df.withColumn(session_col, F.sum(is_start).over(running))
+    return df.withColumn("session_id", F.sum(is_start).over(running))
 
 
 def session_stats(

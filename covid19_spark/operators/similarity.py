@@ -88,12 +88,13 @@ def _norm_sql(vec_col: str, guard: bool = True) -> str:
     )
 
 
-def _nearest_centroids_sql(v: str = "__v", cs: str = "__cs") -> str:
-    """Sorted array<struct<negs, centroid_id>> over a broadcast centroid
-    struct-array column — the shared ``ivf_assign`` ranking expression."""
+def _nearest_centroids_sql() -> str:
+    """Sorted array<struct<negs, centroid_id>> of vector ``__v`` over the
+    broadcast centroid struct-array column ``__cs`` — the shared
+    ``ivf_assign`` ranking expression."""
     return (
-        f"sort_array(transform({cs}, cc -> named_struct("
-        f"'negs', -{_dot_sql(v, 'cc.__c')}, 'centroid_id', cc.centroid_id)))"
+        f"sort_array(transform(__cs, cc -> named_struct("
+        f"'negs', -{_dot_sql('__v', 'cc.__c')}, 'centroid_id', cc.centroid_id)))"
     )
 
 
@@ -103,30 +104,32 @@ def _sub_slice_sql(nv: str, m: int, s: str) -> str:
     return f"slice({nv}, CAST({s} * {w} + 1 AS INT), {w})"
 
 
-def _pq_codes_sql(m: int, nv_col: str = "__nv", cb_col: str = "__cb") -> str:
+def _pq_codes_sql(m: int) -> str:
     """SQL text of ``_pq_codes_expr`` (see its docstring for semantics)."""
     return (
         f"transform(sequence(0, {m - 1}), s -> element_at(sort_array(transform("
-        f"filter({cb_col}, e -> e.sub = s), e -> named_struct('d2', "
-        f"aggregate(zip_with({_sub_slice_sql(nv_col, m, 's')}, e.cvec, (a, b) -> a - b), "
+        f"filter(__cb, e -> e.sub = s), e -> named_struct('d2', "
+        f"aggregate(zip_with({_sub_slice_sql('__nv', m, 's')}, e.cvec, (a, b) -> a - b), "
         f"0.0D, (a, x) -> a + x * x), 'code', e.code))), 1).code)"
     )
 
 
-def _adc_tab_sql(m: int, qn: str = "__qn", cb: str = "__cb") -> str:
-    """Flat ADC lookup table: dot(q_sub(s), codeword) ordered by (sub, code)."""
+def _adc_tab_sql(m: int) -> str:
+    """Flat ADC lookup table over the normalized query ``__qn`` and the
+    codebook column ``__cb``: dot(q_sub(s), codeword) ordered by (sub,
+    code)."""
     return (
-        f"transform(sort_array(transform({cb}, e -> struct(e.sub, e.code, e.cvec))), "
-        f"e -> aggregate(zip_with({_sub_slice_sql(qn, m, 'e.sub')}, e.cvec, "
+        f"transform(sort_array(transform(__cb, e -> struct(e.sub, e.code, e.cvec))), "
+        f"e -> aggregate(zip_with({_sub_slice_sql('__qn', m, 'e.sub')}, e.cvec, "
         f"(a, b) -> a * b), 0.0D, (a, x) -> a + x))"
     )
 
 
-def _adc_score_sql(m: int, n_codes: int, tab: str = "__tab", codes: str = "codes") -> str:
+def _adc_score_sql(m: int, n_codes: int, tab: str) -> str:
     """Σ_s tab[s * n_codes + codes[s]] — the m-lookup ADC score fold."""
     return (
         f"aggregate(sequence(0, {m - 1}), 0.0D, (acc, s) -> acc + element_at({tab}, "
-        f"CAST(s * {n_codes} + element_at({codes}, CAST(s + 1 AS INT)) + 1 AS INT)))"
+        f"CAST(s * {n_codes} + element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))"
     )
 
 
@@ -230,8 +233,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of each query vector against the corpus.
 
@@ -239,10 +240,10 @@ def cosine_topk(
     excluded. Output: query_id, rank, neighbor_id, sim.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("cv")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv")
     )
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
@@ -310,8 +311,6 @@ def ann_cosine_topk(
     num_planes: int = 8,
     num_tables: int = 4,
     multi_probe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k via multi-table sign-LSH.
 
@@ -329,11 +328,11 @@ def ann_cosine_topk(
     """
     sig_kernel = hyperplane_signatures_udf(dim, num_planes, num_tables, seed=42)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ).withColumn("sigs", sig_kernel("cv"))
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv")
     ).withColumn("sigs", sig_kernel("qv"))
     c_banded = c.select(
         "neighbor_id", "cv", F.posexplode("sigs").alias("tbl", "bucket")
@@ -431,10 +430,7 @@ def _elementwise_mean(assigned: DataFrame, group_cols: list[str], arr_col: str) 
 def ivf_train_centroids(
     corpus: DataFrame,
     n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     iterations: int = 1,
-    rounds_out: list | None = None,
 ) -> DataFrame:
     """Deterministic distributed k-means for the IVF coarse quantizer.
 
@@ -449,9 +445,7 @@ def ivf_train_centroids(
 
     Convergence early-exit (``iterations`` > 1): a round whose assignments
     equal the previous round's is a fixed point — training stops before the
-    redundant mean recomputation. ``rounds_out``, when given a list, is
-    appended the number of UPDATE rounds actually executed (deterministic:
-    a pure function of the data). The stability check costs one
+    redundant mean recomputation. The stability check costs one
     localCheckpoint + join-count per round, so single-round callers
     (the registry default) pay nothing.
     """
@@ -460,7 +454,7 @@ def ivf_train_centroids(
     # row_number (single-partition WindowExec + its warning).
     seeds_row = (
         corpus.select(
-            F.col(id_col).alias("__sid"), F.col(vec_col).cast("array<double>").alias("cvec")
+            F.col("vec_id").alias("__sid"), F.col("embedding").cast("array<double>").alias("cvec")
         )
         .orderBy("__sid")
         .limit(n_centroids)
@@ -471,22 +465,20 @@ def ivf_train_centroids(
     ).select((F.col("__pos") + 1).alias("centroid_id"), F.col("__s.cvec").alias("cvec"))
     check_convergence = iterations > 1
     prev_assign = None
-    rounds = 0
     for _ in range(iterations):
-        assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_probes=1)
+        assigned = ivf_assign(corpus, centroids, n_probes=1)
         if check_convergence:
             assigned = assigned.localCheckpoint(eager=True)
-            cur = assigned.select(id_col, "centroid_id")
+            cur = assigned.select("vec_id", "centroid_id")
             if prev_assign is not None:
                 changed = (
                     cur.alias("c")
-                    .join(prev_assign.alias("p"), id_col)
+                    .join(prev_assign.alias("p"), "vec_id")
                     .filter(F.col("c.centroid_id") != F.col("p.centroid_id"))
                 )
                 if changed.isEmpty():
                     break  # fixed point: the update would reproduce itself
             prev_assign = cur
-        rounds += 1
         means = _elementwise_mean(assigned, ["centroid_id"], "vec")
         # Empty-cluster guard: keep the previous centroid when no vector
         # assigned to it this round, so the centroid count never shrinks
@@ -499,8 +491,6 @@ def ivf_train_centroids(
                 F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
             )
         )
-    if rounds_out is not None:
-        rounds_out.append(rounds)
     return centroids
 
 
@@ -510,8 +500,6 @@ def ivf_cosine_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probes: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate nearest neighbours: the clustering twin of the
@@ -528,9 +516,9 @@ def ivf_cosine_topk(
     if centroids is None:
         # two consumers (lists + probes) of a k-row frame whose lineage is
         # the whole Lloyd chain — train once (see ivfpq_cosine_topk)
-        centroids = ivf_train_centroids(
-            corpus, n_centroids, id_col, vec_col
-        ).localCheckpoint(eager=False)
+        centroids = ivf_train_centroids(corpus, n_centroids).localCheckpoint(
+            eager=False
+        )
     # One spark.sql statement for assign + candidate join + rerank (the
     # ivfpq_search construction-cost rationale — see its docstring): the
     # lists/probes CTEs are ``ivf_assign``'s exact expression text
@@ -547,14 +535,14 @@ WITH __crow AS (
   FROM {{__centroids}}
 ),
 __lists AS (
-  SELECT /*+ BROADCAST(c) */ `{id_col}` AS neighbor_id, __p.centroid_id AS centroid_id, __v AS cv
-  FROM (SELECT `{id_col}`, CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS __v FROM {{__corpus}}) v
+  SELECT /*+ BROADCAST(c) */ `vec_id` AS neighbor_id, __p.centroid_id AS centroid_id, __v AS cv
+  FROM (SELECT `vec_id`, CAST(`embedding` AS ARRAY<DOUBLE>) AS __v FROM {{__corpus}}) v
   CROSS JOIN __crow c
   LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, 1)) AS __p
 ),
 __probes AS (
-  SELECT /*+ BROADCAST(c) */ `{id_col}` AS query_id, __p.centroid_id AS centroid_id, __v AS qv
-  FROM (SELECT `{id_col}`, CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS __v FROM {{__queries}}) q
+  SELECT /*+ BROADCAST(c) */ `vec_id` AS query_id, __p.centroid_id AS centroid_id, __v AS qv
+  FROM (SELECT `vec_id`, CAST(`embedding` AS ARRAY<DOUBLE>) AS __v FROM {{__queries}}) q
   CROSS JOIN __crow c
   LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {int(n_probes)})) AS __p
 ),
@@ -657,9 +645,6 @@ def ivfpq_cosine_topk(
     m: int = 8,
     n_codes: int = 16,
     shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample_mod: "int | str | None" = "auto",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
@@ -691,16 +676,12 @@ def ivfpq_cosine_topk(
     # ``codebooks=`` seam, which the ``ivfpq_probe_crosscheck`` oracle
     # verifies the composite through.
     centroids, codebooks = ivfpq_quantizers(
-        corpus, n_centroids, m, n_codes,
-        id_col=id_col, vec_col=vec_col,
-        train_sample_mod=train_sample_mod,
-        centroids=centroids, codebooks=codebooks,
+        corpus, n_centroids, m, n_codes, centroids=centroids, codebooks=codebooks
     )
-    codes = ivfpq_encode(corpus, centroids, codebooks, m, id_col=id_col, vec_col=vec_col)
+    codes = ivfpq_encode(corpus, centroids, codebooks, m)
     return ivfpq_search(
         codes, centroids, codebooks, corpus, queries,
         k=k, n_probes=n_probes, m=m, n_codes=n_codes, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -709,9 +690,6 @@ def ivfpq_quantizers(
     n_centroids: int,
     m: int,
     n_codes: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample_mod: "int | str | None" = "auto",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> "tuple[DataFrame, DataFrame]":
@@ -722,8 +700,8 @@ def ivfpq_quantizers(
     (centroid_id INT, cvec ARRAY<DOUBLE>) and (sub, code, cvec)."""
     if centroids is None or codebooks is None:
         rows = (
-            quantizer_training_sample(corpus, id_col, train_sample_mod)
-            .select(F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v"))
+            quantizer_training_sample(corpus, "vec_id", "auto")
+            .select(F.col("vec_id").alias("__id"), F.col("embedding").cast("array<double>").alias("__v"))
             .collect()
         )
         cents, cbs = _fit_quantizers_driver(
@@ -752,8 +730,6 @@ def ivfpq_encode(
     centroids: DataFrame,
     codebooks: DataFrame,
     m: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Build the resident IVF-PQ index rows (id, centroid_id, codes) in ONE
     map pass: list assignment (top-1 centroid, identical expression to
@@ -768,14 +744,14 @@ def ivfpq_encode(
     ).agg(F.collect_list(F.struct("centroid_id", "__c")).alias("__cs"))
     return (
         corpus.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-            _normalized_vec(vec_col).alias("__nv"),
+            F.col("vec_id"),
+            F.col("embedding").cast("array<double>").alias("__v"),
+            _normalized_vec("embedding").alias("__nv"),
         )
         .crossJoin(F.broadcast(c_row))
         .crossJoin(F.broadcast(cb_row))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             _E(f"element_at({_nearest_centroids_sql()}, 1).centroid_id").alias(
                 "centroid_id"
             ),
@@ -898,7 +874,7 @@ def pq_train_codebooks(
     a single pass per round (the subvector explode keys the shuffle by
     subspace) — m never multiplies the job count. ``iterations`` > 1 adds
     an assignment-stability early-exit; ``rounds_out`` records the executed
-    update rounds (see ``ivf_train_centroids``).
+    update rounds.
 
     Output: (subspace, code, cvec array<double>) — EXACTLY m·k rows: a
     Lloyd round that leaves a code's cluster empty keeps the previous
@@ -1024,15 +1000,16 @@ def _normalized_vec(vec_col: str):
     return _E(_norm_sql(vec_col))
 
 
-def _pq_codes_expr(m: int, nv_col: str = "__nv", cb_col: str = "__cb"):
-    """``codes`` array expression over a normalized vector column and a
-    broadcast codebook struct-array column: for each subspace, the nearest
+def _pq_codes_expr(m: int):
+    """``codes`` array expression over the normalized vector column
+    ``__nv`` and the broadcast codebook struct-array column ``__cb``: for
+    each subspace, the nearest
     codeword by squared L2 with ties to the lowest code — the SAME metric,
     slicing, and tie-break as ``_pq_assign``, evaluated per row with zero
     explode/groupBy. This keeps corpus encoding a pure map pass: the
     earlier explode→assign→groupBy(id) reassembly shuffled |corpus|·m rows
     just to glue codes back together. Built as SQL text (one parse)."""
-    return _E(_pq_codes_sql(m, nv_col, cb_col))
+    return _E(_pq_codes_sql(m))
 
 
 def pq_encode(
@@ -1061,9 +1038,7 @@ def pq_encode(
     )
 
 
-def sq8_minmax(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def sq8_minmax(corpus: DataFrame) -> DataFrame:
     """Per-dimension min/max over RAW corpus values, collapsed to one row
     of (mins, maxs) double arrays — the whole training state of a scalar
     quantizer (FAISS ``SQ8`` / Milvus ``SQ8``: byte-per-dimension, 4×
@@ -1081,7 +1056,7 @@ def sq8_minmax(
     partial aggregation combines to ≤dim rows per task before the exchange
     — the shuffle is dim × n_partitions rows, independent of corpus size."""
     per_dim = (
-        corpus.select(F.posexplode(_normalized_vec(vec_col)).alias("pos", "v"))
+        corpus.select(F.posexplode(_normalized_vec("embedding")).alias("pos", "v"))
         .groupBy("pos")
         .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
     )
@@ -1107,9 +1082,10 @@ def _sq8_codes_expr(vec_col: str) -> Column:
     # re-inline the whole normalization subexpression once per element
     # (64× tree duplication — measured 100+ s of codegen/eval on a 2k-row
     # corpus), while zip_with evaluates each input array once per row.
-    # Clamp BOTH ends (FAISS semantics): with pretrained ``minmax=`` bounds,
-    # serving-time vectors can fall outside the trained range — below-min
-    # must saturate to 0, not go negative and break the byte contract.
+    # Clamp BOTH ends (FAISS semantics): with bounds trained on another
+    # corpus, serving-time vectors can fall outside the trained range —
+    # below-min must saturate to 0, not go negative and break the byte
+    # contract.
     # Inline-trained corpora never hit either clamp's off-branch, so the
     # cross-engine oracle is unchanged.
     return _E(_sq8_codes_sql(vec_col))
@@ -1131,9 +1107,6 @@ def sq8_topk(
     queries: DataFrame,
     k: int = 10,
     shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    minmax: DataFrame | None = None,
 ) -> DataFrame:
     """SQ8 ANN: scalar-quantize the corpus to a byte per dimension, scan
     with the FAISS-style ASYMMETRIC distance — full-precision normalized
@@ -1155,26 +1128,25 @@ def sq8_topk(
 
     Scale: one corpus scan for codes (map-only after the one-row minmax
     broadcast), |Q| broadcast, per-partition partial top-k via the rank
-    window; ``minmax=`` takes a pre-trained bounds row (the persisted-index
-    pattern) so serving never re-scans the corpus for training."""
+    window."""
     from pyspark.sql import Window
 
-    mm = minmax if minmax is not None else sq8_minmax(corpus, id_col, vec_col)
+    mm = sq8_minmax(corpus)
     # decode ONCE per corpus row (query-independent), so the per-pair scan
     # work collapses to a plain zip_with dot — without this the ADC decode
     # re-evaluates |Q|× per neighbor and the scan is ~5× the flops of
     # brute-force cosine instead of matching it
     decoded = corpus.crossJoin(F.broadcast(mm)).select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         _E(
-            f"zip_with(zip_with({_sq8_codes_sql(vec_col)}, mins, "
+            f"zip_with(zip_with({_sq8_codes_sql('embedding')}, mins, "
             f"(c, mn) -> named_struct('c', c, 'mn', mn)), maxs, "
             f"(s, mx) -> s.mn + (s.c + 0.5D) * (mx - s.mn) / 256.0D)"
         ).alias("dv"),
     )
     # queries stay full precision (normalized)
     qn = queries.select(
-        F.col(id_col).alias("query_id"), _normalized_vec(vec_col).alias("qn")
+        F.col("vec_id").alias("query_id"), _normalized_vec("embedding").alias("qn")
     )
     scored = decoded.join(
         F.broadcast(qn), F.col("neighbor_id") != F.col("query_id")
@@ -1192,10 +1164,10 @@ def sq8_topk(
         .select("query_id", "neighbor_id")
     )
     c_full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("cv")
     )
     q_full = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qv")
     )
     reranked = (
         short.join(c_full, "neighbor_id")
@@ -1249,8 +1221,6 @@ def pq_cosine_topk(
     m: int = 8,
     n_codes: int = 16,
     shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebooks: DataFrame | None = None,
     train_sample_mod: "int | str | None" = "auto",
 ) -> DataFrame:
@@ -1290,10 +1260,10 @@ def pq_cosine_topk(
         # path), and corpora under the target train on every row (mod=1),
         # bit-identical small-scale results.
         rows = (
-            quantizer_training_sample(corpus, id_col, train_sample_mod)
+            quantizer_training_sample(corpus, "vec_id", train_sample_mod)
             .select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("__v"),
+                F.col("vec_id").alias("__id"),
+                F.col("embedding").cast("array<double>").alias("__v"),
             )
             .collect()
         )
@@ -1321,20 +1291,20 @@ WITH __cbrow AS (
   FROM {{__codebooks}}
 ),
 __codes AS (
-  SELECT /*+ BROADCAST(cb) */ `{id_col}`, {_pq_codes_sql(m)} AS codes
-  FROM (SELECT `{id_col}`, {_norm_sql(vec_col)} AS __nv FROM {{__corpus}}) v
+  SELECT /*+ BROADCAST(cb) */ `vec_id`, {_pq_codes_sql(m)} AS codes
+  FROM (SELECT `vec_id`, {_norm_sql("embedding")} AS __nv FROM {{__corpus}}) v
   CROSS JOIN __cbrow cb
 ),
 __qtabs AS (
   SELECT /*+ BROADCAST(cb) */ query_id, {_adc_tab_sql(m)} AS __tab
-  FROM (SELECT `{id_col}` AS query_id, {_norm_sql(vec_col, guard=False)} AS __qn FROM {{__queries}}) q
+  FROM (SELECT `vec_id` AS query_id, {_norm_sql("embedding", guard=False)} AS __qn FROM {{__queries}}) q
   CROSS JOIN __cbrow cb
 ),
 __adc AS (
-  SELECT /*+ BROADCAST(t) */ t.query_id, c.`{id_col}` AS neighbor_id,
+  SELECT /*+ BROADCAST(t) */ t.query_id, c.`vec_id` AS neighbor_id,
          {_adc_score_sql(m, n_codes, tab='t.__tab')} AS adc_score
   FROM __codes c CROSS JOIN __qtabs t
-  WHERE c.`{id_col}` != t.query_id
+  WHERE c.`vec_id` != t.query_id
 ),
 __short AS (
   SELECT query_id, neighbor_id
@@ -1346,9 +1316,9 @@ __short AS (
 __rr AS (
   SELECT /*+ BROADCAST(q) */ s.query_id, s.neighbor_id, {_cos_sql('q.qv', 'c.cv')} AS sim
   FROM __short s
-  JOIN (SELECT `{id_col}` AS neighbor_id, CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS cv FROM {{__corpus}}) c
+  JOIN (SELECT `vec_id` AS neighbor_id, CAST(`embedding` AS ARRAY<DOUBLE>) AS cv FROM {{__corpus}}) c
     USING (neighbor_id)
-  JOIN (SELECT `{id_col}` AS query_id, CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS qv FROM {{__queries}}) q
+  JOIN (SELECT `vec_id` AS query_id, CAST(`embedding` AS ARRAY<DOUBLE>) AS qv FROM {{__queries}}) q
     USING (query_id)
 )
 SELECT query_id, rank, neighbor_id, sim
@@ -1368,8 +1338,6 @@ def ensure_semantic_assignment(
     fingerprint: str,
     n_centroids: int = 64,
     iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Persisted k-means clustering for the SemDeDup family — the
     ``ensure_ivfpq_index`` caching contract applied to the (centroids,
@@ -1383,7 +1351,7 @@ def ensure_semantic_assignment(
 
     ``fingerprint`` names the corpus snapshot and must be non-empty (the
     ensure_ivfpq_index stale-cache argument).  Returns (centroids,
-    assigned) frames: (centroid_id, cvec) and (id_col, centroid_id, vec).
+    assigned) frames: (centroid_id, cvec) and (vec_id, centroid_id, vec).
     """
     import pyarrow as pa
 
@@ -1400,11 +1368,11 @@ def ensure_semantic_assignment(
     def _build(tmp: str) -> None:
         use_fast_committer(spark)
         centroids = ivf_train_centroids(
-            corpus, n_centroids, id_col, vec_col, iterations
+            corpus, n_centroids, iterations=iterations
         ).localCheckpoint(eager=False)
         centroids.write.mode("overwrite").parquet(f"{tmp}/centroids")
         centroids = spark.read.parquet(f"{tmp}/centroids")
-        ivf_assign(corpus, centroids, id_col, vec_col, n_probes=1).write.mode(
+        ivf_assign(corpus, centroids, n_probes=1).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/assigned")
         write_meta_table(
@@ -1414,8 +1382,8 @@ def ensure_semantic_assignment(
                     "fingerprint": pa.array([fingerprint], pa.string()),
                     "n_centroids": pa.array([int(n_centroids)], pa.int32()),
                     "iterations": pa.array([int(iterations)], pa.int32()),
-                    "id_col": pa.array([id_col], pa.string()),
-                    "vec_col": pa.array([vec_col], pa.string()),
+                    "id_col": pa.array(["vec_id"], pa.string()),
+                    "vec_col": pa.array(["embedding"], pa.string()),
                 }
             ),
         )
@@ -1428,8 +1396,8 @@ def ensure_semantic_assignment(
             fingerprint=fingerprint,
             n_centroids=int(n_centroids),
             iterations=int(iterations),
-            id_col=id_col,
-            vec_col=vec_col,
+            id_col="vec_id",
+            vec_col="embedding",
         ),
         build=_build,
         open_store=lambda s, p: (
@@ -1443,13 +1411,11 @@ def semantic_dedup(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 64,
+    *,
+    assignment: tuple[DataFrame, DataFrame],
     threshold: float = 0.95,
-    iterations: int = 1,
-    max_block: int | None = 10_000,
     salt_buckets: int | None = None,
     keep_policy: str = "min_id",
-    assignment: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -1458,13 +1424,14 @@ def semantic_dedup(
     into duplicate groups, keep one representative per group.
 
     Composition of the existing scale-safe stages — nothing new shuffles:
-      1. ``ivf_train_centroids`` (deterministic Lloyd, lowest-id seeds);
-      2. ``ivf_assign`` — map-only nearest-centroid labeling (broadcast
-         centroids, no shuffle);
+      1-2. ``assignment``: the (centroids, assigned) pair from
+         ``ensure_semantic_assignment`` (deterministic Lloyd, lowest-id
+         seeds; map-only nearest-centroid labeling) — the shared-clustering
+         seam every keep policy over one corpus reads;
       3. ``cosine_near_dup_pairs`` blocked on ``centroid_id`` — the cluster
          IS the block, so the pair space is Σ|cluster|² ≈ n²/k for balanced
-         clusters, with the degenerate-cluster ``max_block`` cap and
-         optional pair-space salting;
+         clusters, with the degenerate-cluster cap and optional pair-space
+         salting;
       4. ``dedup_clusters`` (min-label connected components) for transitive
          closure + canonical flag.
 
@@ -1479,12 +1446,6 @@ def semantic_dedup(
 
     Output: one row per corpus vector — (id_col, cluster_id, cluster_size,
     is_canonical); singletons keep their own id with cluster_size 1.
-
-    ``assignment``: optional pre-computed (centroids, assigned) pair from
-    ``ensure_semantic_assignment`` — the shared-clustering seam for
-    running several keep policies over one corpus; when given,
-    ``n_centroids``/``iterations`` are ignored (they are baked into the
-    assignment).
     """
     from covid19_spark.operators.dedup import dedup_clusters
 
@@ -1492,32 +1453,15 @@ def semantic_dedup(
         raise ValueError(
             f"unknown keep_policy {keep_policy!r}: use 'min_id' or 'low_centroid_sim'"
         )
-    if assignment is not None:
-        # parquet-backed frames: re-scans across plan branches are pruned
-        # column reads, no checkpoint needed
-        centroids, assigned = assignment
-    else:
-        # BOTH policies consume these frames multiply — centroids feeds the
-        # assignment and (paper policy) the similarity pass; assigned feeds
-        # the pair generator whose self-join alone reads it from several
-        # plan branches. Cut the Lloyd-chain lineage unconditionally so
-        # training and assignment run once (r09: the min_id policy WITHOUT
-        # these checkpoints measured SLOWER than the strictly-more-work
-        # paper policy WITH them — 4.6 vs 3.2 s — pure recompute).
-        # localCheckpoint blocks are freed by the ContextCleaner when the
-        # frames go out of scope.
-        centroids = ivf_train_centroids(
-            corpus, n_centroids, id_col, vec_col, iterations
-        ).localCheckpoint(eager=False)
-        assigned = ivf_assign(corpus, centroids, id_col, vec_col, n_probes=1)
-        assigned = assigned.localCheckpoint(eager=False)
+    # parquet-backed frames: re-scans across plan branches are pruned
+    # column reads, no checkpoint needed
+    centroids, assigned = assignment
     pairs = cosine_near_dup_pairs(
         assigned.select(F.col(id_col), "centroid_id", F.col("vec").alias(vec_col)),
         id_col,
         vec_col,
         threshold,
         block_cols=["centroid_id"],
-        max_block=max_block,
         salt_buckets=salt_buckets,
     )
     clusters = dedup_clusters(pairs.select("id_a", "id_b"), "id_a", "id_b")

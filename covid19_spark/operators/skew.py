@@ -35,9 +35,9 @@ def salted_join(
     key_cols: Sequence[str],
     salt_source: str,
     buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side's rows spread over ``buckets`` salts.
+    """Inner equi-join with the big side's rows spread over ``buckets``
+    salts.
 
     ``salt_source``: a high-cardinality big-side column (row id, event id)
     hashed to derive the salt deterministically — results are reproducible
@@ -48,7 +48,7 @@ def salted_join(
     )
     salts = F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
     small_replicated = small.withColumn(SALT, salts)
-    joined = big_salted.join(small_replicated, [*key_cols, SALT], how)
+    joined = big_salted.join(small_replicated, [*key_cols, SALT])
     return joined.drop(SALT)
 
 
@@ -57,18 +57,16 @@ def two_phase_agg(
     key_cols: Sequence[str],
     salt_source: str,
     sums: Sequence[str] = (),
-    counts: bool = True,
     buckets: int = 16,
 ) -> DataFrame:
-    """Skew-safe sum/count aggregation: (key, salt) partials → key combine."""
+    """Skew-safe sum/count aggregation: (key, salt) partials → key combine;
+    ``n_rows`` counts each key's rows."""
     salted = df.withColumn(
         SALT, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(buckets)).cast("int")
     )
     partial_aggs = [F.sum(c).alias(f"__p_sum_{c}") for c in sums]
-    if counts:
-        partial_aggs.append(F.count(F.lit(1)).alias("__p_count"))
+    partial_aggs.append(F.count(F.lit(1)).alias("__p_count"))
     partials = salted.groupBy(*key_cols, SALT).agg(*partial_aggs)
     final_aggs = [F.sum(f"__p_sum_{c}").alias(f"sum_{c}") for c in sums]
-    if counts:
-        final_aggs.append(F.sum("__p_count").alias("n_rows"))
+    final_aggs.append(F.sum("__p_count").alias("n_rows"))
     return partials.groupBy(*key_cols).agg(*final_aggs)

@@ -82,14 +82,12 @@ def kgram_stream_from_tokens(
     )
 
 
-def kgram_stream(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
-) -> DataFrame:
-    """``(id_col, pos, kh)`` — one row per k-gram window occurrence,
-    tokenizing ``text_col`` inline. Map-only explode."""
-    toks = F.expr(f"split(lower(`{text_col}`), ' ')")  # tokenize(), one parse
+def kgram_stream(df: DataFrame, k: int = 8) -> DataFrame:
+    """``(doc_id, pos, kh)`` — one row per k-gram window occurrence,
+    tokenizing ``text`` inline. Map-only explode."""
+    toks = F.expr("split(lower(`text`), ' ')")  # tokenize(), one parse
     return kgram_stream_from_tokens(
-        df.select(id_col, toks.alias("__toks")), id_col, "__toks", k
+        df.select("doc_id", toks.alias("__toks")), "doc_id", "__toks", k
     )
 
 
@@ -133,63 +131,56 @@ def _spans_from_grams(
     )
 
 
-def duplicated_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_docs: int = 2,
-    keep_first: bool = False,
-    materialize: bool = False,
-) -> DataFrame:
-    """Maximal duplicated spans per document.
+def duplicated_spans(df: DataFrame, k: int = 8, min_docs: int = 2) -> DataFrame:
+    """Maximal duplicated spans per document (``doc_id``, ``text``).
 
-    Returns ``(id_col, span_start, span_end, span_tokens)`` (1-based token
+    Returns ``(doc_id, span_start, span_end, span_tokens)`` (1-based token
     positions, inclusive, BIGINT): every maximal run of tokens covered by
-    k-gram windows whose hash occurs in >= ``min_docs`` distinct documents.
-
-    ``keep_first=True`` applies the Lee et al. keep-one-occurrence policy:
-    for each duplicated hash the document with the minimum id is the
-    canonical owner and its windows are NOT marked, so the canonical copy
-    of a duplicated passage reports/loses nothing while every other copy
-    does. (With the default ``keep_first=False`` the spans are reported in
-    every document that carries them — the detection/report shape.)
+    k-gram windows whose hash occurs in >= ``min_docs`` distinct documents,
+    reported in every document that carries it (the detection/report
+    shape; ``span_dedup`` applies the keep-one-occurrence policy).
 
     Plan: the gram stream (tokenize + k-gram explode, the dominant cost) is
     persisted memory-and-disk so its two consumers — the duplicated-hash
     aggregate and the join-back — read ONE materialization instead of
     re-scanning the corpus per branch (the executed plan shows a single
-    documents scan; pinned by tests/test_plans.py).
-    ``materialize=True`` evaluates the spans eagerly (localCheckpoint) and
-    releases the gram cache immediately; the lazy default keeps it until
-    the session drops it (a lazy result cannot outlive what it reads).
+    documents scan; pinned by tests/test_plans.py).  The spans are
+    evaluated eagerly (localCheckpoint) and the gram cache is released at
+    once, so no session-lifetime cache entry outlives the call.
     """
-    grams = kgram_stream(df, id_col, text_col, k).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out = _spans_from_grams(grams, id_col, k, min_docs, keep_first)
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        grams.unpersist()
+    out, caches = _duplicated_spans_with_handle(df, k, min_docs)
+    out = out.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
     return out
+
+
+def _duplicated_spans_with_handle(
+    df: DataFrame, k: int, min_docs: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The lazy spans ``duplicated_spans`` checkpoints, and the persisted
+    gram frame the caller unpersists once it has evaluated them."""
+    grams = kgram_stream(df, k).persist(StorageLevel.MEMORY_AND_DISK)
+    return _spans_from_grams(grams, "doc_id", k, min_docs, False), [grams]
 
 
 def span_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_docs: int = 2,
     keep_first: bool = True,
-    materialize: bool = False,
 ) -> DataFrame:
     """Strip duplicated spans and report per-doc damage.
 
-    Returns ``(id_col, text, n_tokens, dup_tokens, n_spans, dup_frac)``:
+    Returns ``(doc_id, text, n_tokens, dup_tokens, n_spans, dup_frac)``:
     the rebuilt text with every token inside a duplicated span removed
     (under the ``keep_first`` policy of :func:`duplicated_spans` — default
     True, i.e. the min-id copy of each duplicated passage survives intact),
     plus BIGINT token/span counts and the duplicated-token fraction.
+    ``keep_first=True`` is the Lee et al. keep-one-occurrence policy: for
+    each duplicated hash the document with the minimum id is the canonical
+    owner and its windows are NOT marked, so the canonical copy of a
+    duplicated passage loses nothing while every other copy does.
 
     Single corpus scan: the token frame is persisted and feeds BOTH the
     gram stream (itself persisted, consumed by the aggregate and join-back)
@@ -201,22 +192,35 @@ def span_dedup(
     filters the token array positionally — per-doc work is
     O(tokens x spans), spans per doc being the handful of merged islands.
     Docs with no duplicated span pass through verbatim (lowercased, since
-    spans are computed over the lowercased token stream).
+    spans are computed over the lowercased token stream).  Evaluated
+    eagerly, releasing both caches, like ``duplicated_spans``.
     """
+    out, caches = _span_dedup_with_handle(df, k, min_docs, keep_first)
+    out = out.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
+    return out
+
+
+def _span_dedup_with_handle(
+    df: DataFrame, k: int, min_docs: int, keep_first: bool
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The lazy rebuild ``span_dedup`` checkpoints, and the persisted gram
+    and token frames the caller unpersists once it has evaluated it."""
     base = df.select(
-        F.col(id_col),
-        F.expr(f"split(lower(`{text_col}`), ' ')").alias("__toks"),
+        F.col("doc_id"),
+        F.expr("split(lower(`text`), ' ')").alias("__toks"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    grams = kgram_stream_from_tokens(base, id_col, "__toks", k).persist(
+    grams = kgram_stream_from_tokens(base, "doc_id", "__toks", k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    spans = _spans_from_grams(grams, id_col, k, min_docs, keep_first)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = _spans_from_grams(grams, "doc_id", k, min_docs, keep_first)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans"),
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("span_tokens").alias("dup_tokens"),
     )
-    joined = base.join(per_doc, id_col, "left")
+    joined = base.join(per_doc, "doc_id", "left")
     # one-parse SQL twins of the former F.* rebuild expressions — same
     # coalesce(empty-array) guard, same (t, i) positional filter
     sp = (
@@ -228,16 +232,11 @@ def span_dedup(
         f"s -> i + 1 >= s.span_start AND i + 1 <= s.span_end))"
     )
     out = joined.select(
-        id_col,
+        "doc_id",
         F.expr(f"concat_ws(' ', {kept})").alias("text"),
         F.expr("CAST(size(__toks) AS BIGINT)").alias("n_tokens"),
         F.expr("CAST(coalesce(dup_tokens, 0) AS BIGINT)").alias("dup_tokens"),
         F.expr("CAST(coalesce(n_spans, 0) AS BIGINT)").alias("n_spans"),
         F.expr("coalesce(dup_tokens, 0) / size(__toks)").alias("dup_frac"),
     )
-    if materialize:
-        # session hygiene: evaluate eagerly and release both heavy caches
-        out = out.localCheckpoint(eager=True)
-        grams.unpersist()
-        base.unpersist()
-    return out
+    return out, [grams, base]

@@ -23,7 +23,6 @@ recursive-CTE oracle, full precision, no rounding exceptions.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,21 +32,17 @@ def kaplan_meier(
     df: DataFrame,
     duration_col: str,
     event_col: str,
-    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Kaplan-Meier curve per group: one output row per EVENT time —
-    (group..., t, n_risk, d, survival).  ``event_col`` is 1 for an
+    """Kaplan-Meier curve: one output row per EVENT time —
+    (t, n_risk, d, survival).  ``event_col`` is 1 for an
     observed event, 0 for right-censored.  Censored-only times emit no
     row but still shrink the risk set (the estimator's whole point).
     """
-    group_cols = list(group_cols)
-    by_t = df.groupBy(
-        *group_cols, F.col(duration_col).alias("t")
-    ).agg(
+    by_t = df.groupBy(F.col(duration_col).alias("t")).agg(
         F.sum(F.col(event_col).cast("long")).alias("d"),
         F.count(F.lit(1)).alias("c"),
     )
-    collected = by_t.groupBy(*group_cols).agg(
+    collected = by_t.groupBy().agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("t"), F.col("d"), F.col("c")))
         ).alias("arr"),
@@ -80,10 +75,7 @@ def kaplan_meier(
         )
 
     folded = F.aggregate(F.col("arr"), init, step)
-    return collected.select(
-        *group_cols, F.explode(folded["out"]).alias("o")
-    ).select(
-        *group_cols,
+    return collected.select(F.explode(folded["out"]).alias("o")).select(
         F.col("o.t").alias("t"),
         F.col("o.n_risk").alias("n_risk"),
         F.col("o.d").alias("d"),

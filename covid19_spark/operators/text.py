@@ -77,10 +77,11 @@ def normalize_typography(text: Column) -> Column:
     return F.trim(F.regexp_replace(t, r"\s+", " "))
 
 
-def fingerprint(text: Column, length: int = 16) -> Column:
+def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text,
-    truncated. The rolling-hash equivalent for near-canonical dedup keys."""
-    return F.substring(F.md5(normalize_text(text)), 1, length)
+    truncated to 16 hex chars. The rolling-hash equivalent for
+    near-canonical dedup keys."""
+    return F.substring(F.md5(normalize_text(text)), 1, 16)
 
 
 def repetition_stats(df, id_col: str, text_col: str):
@@ -157,15 +158,13 @@ def tf_idf_top_terms(
     id_col: str,
     text_col: str,
     top_n: int = 3,
-    idf_mode: str = "rational",
 ) -> DataFrame:
     """Per-document top-N terms by TF-IDF.
 
-    ``idf_mode='log'`` is the textbook ln((N+1)/(df+1)) weighting for
-    production; ``'rational'`` uses (N+1)/(df+1) directly — same exact-int
-    inputs, one double division, reproducible bit-for-bit across engines
-    (ln() differs in the last ulp between libm implementations, so the
-    differential-tested query uses the rational form).
+    The idf is the rational (N+1)/(df+1), not the textbook
+    ln((N+1)/(df+1)): same exact-int inputs, one double division,
+    reproducible bit-for-bit across engines (ln() differs in the last ulp
+    between libm implementations).
 
     Plan (100 TB): explode → (doc, term) partial-agg counts; document
     frequency is a second partial agg keyed by term; the tf⋈df join is a
@@ -174,8 +173,6 @@ def tf_idf_top_terms(
     one broadcast scalar row. Final per-doc top-N is a rank window on the
     doc key.
     """
-    if idf_mode not in ("log", "rational"):
-        raise ValueError(f"idf_mode must be log|rational, got {idf_mode!r}")
     toks = docs.select(
         F.col(id_col),
         F.explode(F.filter(tokenize(F.col(text_col)), lambda t: t != "")).alias("term"),
@@ -183,8 +180,7 @@ def tf_idf_top_terms(
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.countDistinct(F.col(id_col)).alias("__n"))
-    ratio = (F.col("__n") + F.lit(1)) / (F.col("df") + F.lit(1))
-    idf = F.log(ratio) if idf_mode == "log" else ratio
+    idf = (F.col("__n") + F.lit(1)) / (F.col("df") + F.lit(1))
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
@@ -262,8 +258,9 @@ def chunk_documents(
     )
 
 
-def dedup_paragraphs(text: Column, sep: str = "\n\n") -> Column:
-    """Order-preserving intra-document paragraph dedup: split on ``sep``,
+def dedup_paragraphs(text: Column) -> Column:
+    """Order-preserving intra-document paragraph dedup: split on blank
+    lines (``\\n\\n``),
     keep only the FIRST occurrence of each paragraph, rejoin — the
     MassiveText/RefinedWeb cleanup for boilerplate repeated inside one
     document (nav blocks, footers), complementary to corpus-level
@@ -278,6 +275,7 @@ def dedup_paragraphs(text: Column, sep: str = "\n\n") -> Column:
     NULL stays NULL."""
     import re as _re
 
+    sep = "\n\n"
     paras = F.filter(F.split(text, _re.escape(sep)), lambda p: p != "")
     kept = F.filter(
         paras,

@@ -94,29 +94,28 @@ def with_intercept(
     labels: DataFrame,
     id_col: str,
     n_buckets: int,
-    bias_cnt: int = 16,
 ) -> DataFrame:
-    """Append the bias feature: virtual bucket ``n_buckets`` with count
-    ``bias_cnt`` for EVERY labeled doc (docs with no tokens included) —
-    without it a count-feature model can only separate through the
-    origin.  ``bias_cnt`` should sit near the typical per-bucket count
-    magnitude: a unit intercept against ~60-count token features makes
+    """Append the bias feature: virtual bucket ``n_buckets`` with count 16
+    for EVERY labeled doc (docs with no tokens included) — without it a
+    count-feature model can only separate through the origin.  The bias
+    count sits near the typical per-bucket count magnitude: a unit
+    intercept against ~60-count token features makes
     the loss surface so ill-conditioned that full-batch GD stalls at the
-    majority baseline (measured: 0.51 with bias_cnt=1 vs 0.97 with 16 on
+    majority baseline (measured: 0.51 with a bias count of 1 vs 0.97 with 16 on
     the length-gate task)."""
     bias = labels.select(
         F.col(id_col),
         F.lit(n_buckets).cast("long").alias("bucket"),
-        F.lit(bias_cnt).cast("long").alias("cnt"),
+        F.lit(16).cast("long").alias("cnt"),
     )
     return feats.select(id_col, "bucket", "cnt").unionByName(bias)
 
 
-def hard_sigmoid_int(z: Column, scale: int = SCALE) -> Column:
-    """``p_int = clamp(S/2 + floor(z/4), 0, S)`` — the exact-integer hard
-    sigmoid (z in micro-units)."""
-    p = F.lit(scale // 2) + F.floor(z / F.lit(4.0)).cast("long")
-    return F.least(F.lit(scale).cast("long"), F.greatest(F.lit(0).cast("long"), p))
+def hard_sigmoid_int(z: Column) -> Column:
+    """``p_int = clamp(S/2 + floor(z/4), 0, S)`` with S = ``SCALE`` — the
+    exact-integer hard sigmoid (z in micro-units)."""
+    p = F.lit(SCALE // 2) + F.floor(z / F.lit(4.0)).cast("long")
+    return F.least(F.lit(SCALE).cast("long"), F.greatest(F.lit(0).cast("long"), p))
 
 
 def train_quantized_lr(
@@ -124,12 +123,9 @@ def train_quantized_lr(
     labels: DataFrame,
     id_col: str,
     n_buckets: int,
-    iterations: int = 6,
-    lr_den: int = 64,
-    scale: int = SCALE,
 ) -> list[int]:
     """Full-batch quantized GD; returns the final integer weight vector.
-    Defaults (6 iterations, lr 1/64) reach 0.95-0.97 accuracy on the
+    6 iterations at lr 1/64 reach 0.95-0.97 accuracy on the
     distilled length-gate task at every tested scale (sf0.001-0.1).
 
     ``feats``: (id, bucket, cnt) rows (run :func:`with_intercept` first —
@@ -173,8 +169,8 @@ def train_quantized_lr(
         .localCheckpoint(eager=True)
     )
     w = [0] * n_buckets
-    half = scale // 2
-    for _ in range(iterations):
+    scale, half = SCALE, SCALE // 2
+    for _ in range(6):
         arr_sql = "array(" + ",".join(f"{v}L" for v in w) + ")"
         grad = spark.sql(
             f"""
@@ -196,7 +192,7 @@ def train_quantized_lr(
         for row in grad:
             # floor of an IEEE division of exact integers — replayed
             # verbatim by the oracle SQL
-            w[int(row.bucket)] -= math.floor(row.g / float(lr_den * n_docs))
+            w[int(row.bucket)] -= math.floor(row.g / float(64 * n_docs))
     return w
 
 
@@ -205,7 +201,6 @@ def score_quantized_lr(
     labels: DataFrame,
     id_col: str,
     weights: list[int],
-    scale: int = SCALE,
 ) -> DataFrame:
     """Map-only scoring pass with the learned vector: per-doc margin
     ``z``, hard-sigmoid activation ``p`` (micro-units), predicted label.
@@ -223,9 +218,9 @@ def score_quantized_lr(
             F.col("y").cast("long").alias("y"),
             F.coalesce(F.col("z"), F.lit(0)).cast("long").alias("z"),
         )
-        .withColumn("p", hard_sigmoid_int(F.col("z"), scale))
+        .withColumn("p", hard_sigmoid_int(F.col("z")))
         .withColumn(
-            "pred", (F.col("p") >= F.lit(scale // 2)).cast("long")
+            "pred", (F.col("p") >= F.lit(SCALE // 2)).cast("long")
         )
     )
 
@@ -237,7 +232,6 @@ def quantized_lr_sql(
     n_buckets: int,
     iterations: int,
     lr_den: int = 64,
-    scale: int = SCALE,
 ) -> str:
     """Generate the unrolled CTE chain replaying the ENTIRE training run +
     scoring pass in DuckDB: w0 = zeros; per iteration k — margins from
@@ -247,7 +241,7 @@ def quantized_lr_sql(
 
     ``feats_cte``/``labels_cte``: names of CTEs (or tables) exposing
     (id, bucket) and (id, y).  Result columns: id, y, z, p, pred."""
-    half = scale // 2
+    scale, half = SCALE, SCALE // 2
     parts = [
         f"w0 AS (SELECT CAST(range AS BIGINT) AS bucket, CAST(0 AS BIGINT) AS w "
         f"FROM range({n_buckets}))",

@@ -94,28 +94,27 @@ def train_unigram(
     text_col: str = "text",
     vocab_size: int = 400,
     max_piece_len: int = 6,
-    n_em_iters: int = 2,
-    shrink: float = 0.75,
-    seed_factor: int = 8,
-    min_freq: int = 1,
-    max_vocab_candidates: int = 5_000_000,
 ) -> list[tuple[str, float]]:
     """Learn a ``vocab_size`` unigram-LM piece vocabulary from a corpus.
 
-    Seed: every substring of every (capped) word up to ``max_piece_len``,
-    scored by occurrence-count × word-frequency; all seen single chars are
-    kept unconditionally (coverage guarantee), multi-char seeds keep the
-    top ``seed_factor × vocab_size``. Fit: Viterbi (hard) EM — expected
-    counts from each word's best segmentation, weighted by word frequency
-    — alternating with pruning multi-char pieces by fitted count (factor
-    ``shrink`` per round) until the vocabulary reaches ``vocab_size``.
+    Seed: every substring of every word up to ``max_piece_len``, scored by
+    occurrence-count × word-frequency; all seen single chars are kept
+    unconditionally (coverage guarantee), multi-char seeds keep the top
+    ``8 × vocab_size``. Fit: Viterbi (hard) EM, two rounds at a time —
+    expected counts from each word's best segmentation, weighted by word
+    frequency — alternating with pruning multi-char pieces by fitted count
+    (to 3/4 per step) until the vocabulary reaches ``vocab_size``.  The
+    word table is capped to the 5M most frequent words (the ``train_bpe``
+    collect bound).
 
     Returns ``[(piece, logprob), ...]`` sorted by piece.
     """
-    wc = word_counts(df, text_col).filter(F.col("cnt") >= min_freq)
-    if max_vocab_candidates is not None:
-        wc = wc.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab_candidates)
-    rows = wc.collect()
+    rows = (
+        word_counts(df, text_col)
+        .orderBy(F.desc("cnt"), F.asc("word"))
+        .limit(5_000_000)
+        .collect()
+    )
     words: list[tuple[str, int]] = sorted((r["word"], int(r["cnt"])) for r in rows)
 
     # ---- seed vocabulary -------------------------------------------------
@@ -131,7 +130,7 @@ def train_unigram(
     multi = sorted(
         ((p, s) for p, s in seed_scores.items() if len(p) > 1),
         key=lambda kv: (-kv[1], kv[0]),
-    )[: seed_factor * vocab_size]
+    )[: 8 * vocab_size]
     vocab: dict[str, float] = {}
     total = float(sum(s for _, s in seed_scores.items())) or 1.0
     for c in chars:
@@ -161,7 +160,7 @@ def train_unigram(
     n_single = len(chars)
     target_multi = max(0, vocab_size - n_single)
     while True:
-        for _ in range(n_em_iters):
+        for _ in range(2):
             vocab = em_round(vocab)
         multi_now = sorted(
             ((p, lp) for p, lp in vocab.items() if len(p) > 1),
@@ -169,7 +168,7 @@ def train_unigram(
         )
         if len(multi_now) <= target_multi:
             break
-        keep = max(target_multi, int(len(multi_now) * shrink))
+        keep = max(target_multi, int(len(multi_now) * 0.75))
         kept = dict(multi_now[:keep])
         vocab = {p: lp for p, lp in vocab.items() if len(p) == 1 or p in kept}
     return sorted(vocab.items())
@@ -180,10 +179,10 @@ def unigram_tokenize(
     vocab: list[tuple[str, float]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_piece_len: int = 6,
 ) -> DataFrame:
     """``(id_col, n_words, n_tokens, nll, tokens)`` — Arrow-batched Viterbi
-    encoder under a trained unigram LM.
+    encoder under a trained unigram LM (pieces of at most 6 chars, the
+    ``train_unigram`` default).
 
     The vocab ships in the task closure (vocab-sized — KBs); each batch
     keeps a word→segmentation cache. Map-only: no shuffle at any corpus
@@ -202,7 +201,7 @@ def unigram_tokenize(
         def enc(word: str) -> tuple[list[str], float]:
             hit = cache.get(word)
             if hit is None:
-                hit = _viterbi(word, logp, max_piece_len)
+                hit = _viterbi(word, logp, 6)
                 cache[word] = hit
             return hit
 

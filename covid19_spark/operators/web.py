@@ -107,14 +107,14 @@ def path_of_sql(u: str) -> str:
     return f"CASE WHEN {path} = '' THEN '/' ELSE {path} END"
 
 
-def domain_suffixes_sql(u: str, max_labels: int = 6) -> str:
-    """SQL text of a host's label suffixes, longest last, at most
-    ``max_labels`` of them (``a.b.com`` -> ``com``, ``b.com``,
+def domain_suffixes_sql(u: str) -> str:
+    """SQL text of a host's label suffixes, longest last, at most six of
+    them (``a.b.com`` -> ``com``, ``b.com``,
     ``a.b.com``), over the SQL fragment ``u``."""
     dot_re = _sq(r"\.")
     labels = f"split({host_of_sql(u)}, {dot_re})"
     return (
-        f"transform(sequence(1, least(size({labels}), {int(max_labels)})), "
+        f"transform(sequence(1, least(size({labels}), 6)), "
         f"k -> array_join(slice({labels}, size({labels}) - k + 1, k), '.'))"
     )
 
@@ -211,11 +211,9 @@ def path_of(url: str) -> Column:
     return F.expr(path_of_sql(url))
 
 
-def robots_rules(
-    robots: DataFrame, host_col: str = "host", body_col: str = "robots_txt"
-) -> DataFrame:
-    """Parse robots.txt bodies into ``(host, agent, directive, path)`` rule
-    rows — fully declarative (split / posexplode / regexp / window), no
+def robots_rules(robots: DataFrame) -> DataFrame:
+    """Parse robots.txt bodies (``host``, ``robots_txt``) into ``(host,
+    agent, directive, path)`` rule rows — fully declarative (split / posexplode / regexp / window), no
     Python in the parse path.
 
     Grammar subset (RFC 9309 §2): ``User-agent`` lines open a group
@@ -232,7 +230,7 @@ def robots_rules(
     output rule table is dimension-sized (rules-per-host × hosts) and
     broadcastable into the URL-side gate.
     """
-    grouped, agents = _robots_directive_groups(robots, host_col, body_col)
+    grouped, agents = _robots_directive_groups(robots)
     rules = grouped.filter(
         F.col("kind").isin("allow", "disallow") & (F.col("value") != "")
     ).select("host", "grp", F.col("kind").alias("directive"), F.col("value").alias("path"))
@@ -246,9 +244,7 @@ def robots_rules(
     )
 
 
-def _robots_directive_groups(
-    robots: DataFrame, host_col: str, body_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _robots_directive_groups(robots: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared robots.txt line/group machinery: (grouped directive lines
     with ``grp`` ids, agents-per-group frame). Group ids increment at the
     FIRST user-agent line of each stacked header block."""
@@ -256,8 +252,8 @@ def _robots_directive_groups(
     value_re = _sq(r"(?i)^(?:user-agent|allow|disallow|crawl-delay)\s*:\s*(\S*)")
     lines = (
         robots.select(
-            F.col(host_col).alias("host"),
-            F.posexplode(F.split(F.col(body_col), "\n")).alias("pos", "line"),
+            F.col("host"),
+            F.posexplode(F.split(F.col("robots_txt"), "\n")).alias("pos", "line"),
         )
         .withColumn("line", F.expr("trim(regexp_replace(line, '#.*', ''))"))
         .withColumn("kind", F.expr(f"lower(regexp_extract(line, {kind_re}, 1))"))
@@ -284,15 +280,13 @@ def _robots_directive_groups(
     return grouped, agents
 
 
-def robots_crawl_delays(
-    robots: DataFrame, host_col: str = "host", body_col: str = "robots_txt"
-) -> DataFrame:
+def robots_crawl_delays(robots: DataFrame) -> DataFrame:
     """``(host, agent, delay_s)`` — Crawl-delay directives per UA group
     (the de-facto extension most crawlers honor; not in RFC 9309 but in
     every production politeness layer). Non-numeric values are dropped;
     several delays in one group keep the LARGEST (the conservative
     reading)."""
-    grouped, agents = _robots_directive_groups(robots, host_col, body_col)
+    grouped, agents = _robots_directive_groups(robots)
     delays = (
         grouped.filter(
             (F.col("kind") == "crawl-delay")
@@ -309,9 +303,8 @@ def robots_allowed(
     urls: DataFrame,
     rules: DataFrame,
     agent: str,
-    url_col: str = "url",
 ) -> DataFrame:
-    """Per-URL robots verdict under RFC 9309 group-selection and
+    """Per-``url`` robots verdict under RFC 9309 group-selection and
     longest-match semantics: input rows gain ``allowed`` (boolean) and
     ``matched_rule`` (the winning rule path, null when no rule matched).
 
@@ -360,8 +353,8 @@ def robots_allowed(
             "'rule', path) END)"
         ).alias("_rules")
     )
-    u = urls.withColumn("_r_host", host_of(f"`{url_col}`")).withColumn(
-        "_r_path", path_of(f"`{url_col}`")
+    u = urls.withColumn("_r_host", host_of("`url`")).withColumn(
+        "_r_path", path_of("`url`")
     )
     joined = u.join(
         F.broadcast(host_rules), u["_r_host"] == host_rules["host"], "left"
@@ -381,10 +374,9 @@ def politeness_schedule(
     delays: DataFrame,
     agent: str,
     default_delay_s: float = 1.0,
-    url_col: str = "url",
     tiebreak_cols: "Sequence[str]" = (),
 ) -> DataFrame:
-    """Per-host fetch scheduling under Crawl-delay politeness: input rows
+    """Per-host ``url`` fetch scheduling under Crawl-delay politeness: input rows
     gain ``slot`` (0-based per-host fetch position, deterministic — URLs
     order lexicographically within a host; pass ``tiebreak_cols`` (e.g. a
     row id) whenever the frontier can contain DUPLICATE URLs, or the slot
@@ -417,8 +409,8 @@ def politeness_schedule(
         )
         .select("host", F.coalesce(F.col("_ad"), F.col("_sd")).alias("delay_s"))
     )
-    u = urls.withColumn("_p_host", host_of(f"`{url_col}`"))
-    order = [F.col(url_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
+    u = urls.withColumn("_p_host", host_of("`url`"))
+    order = [F.col("url").asc()] + [F.col(c).asc() for c in tiebreak_cols]
     slot = (
         F.row_number().over(Window.partitionBy("_p_host").orderBy(*order)) - 1
     )

@@ -418,10 +418,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 4 < 3)
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    # materialize=True for cache hygiene — see tests/test_cache_hygiene.py
+    # the screen evaluates eagerly for cache hygiene — see
+    # tests/test_cache_hygiene.py
     return incremental_dedup_against_corpus(
         corpus, batch, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3,
-        threshold=0.5, materialize=True,
+        threshold=0.5,
     ).orderBy("doc_id")
 
 
@@ -477,8 +478,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing audit: shard by md5(doc_id), pack documents
     contiguously into 256-token bins in deterministic md5 order, report
     per-(shard, bin) doc and token counts. One shuffle on the shard key;
-    per-shard window sum (16 independent streams here; size shard_chars up
-    for cluster parallelism)."""
+    per-shard window sum (16 independent streams here)."""
     from covid19_spark.operators.curation import pack_greedy
     from covid19_spark.operators.text import token_count
 
@@ -1941,8 +1941,8 @@ def q_crawl_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl_shards_audit(corpus)
 
 
-def crawl_shards_audit(corpus: DataFrame, n_shards: int = 16) -> DataFrame:
-    """The shard/audit stage behind ``crawl_to_shards`` (input: a
+def crawl_shards_audit(corpus: DataFrame) -> DataFrame:
+    """The 16-shard audit stage behind ``crawl_to_shards`` (input: a
     ``(doc_id, clean_text)`` corpus frame) — split out for the same
     scale-probe reason as ``crawl_corpus_build``."""
     from covid19_spark.operators.curation import corpus_shard, shuffle_key
@@ -1951,7 +1951,7 @@ def crawl_shards_audit(corpus: DataFrame, n_shards: int = 16) -> DataFrame:
         "doc_id",
         "clean_text",
         shuffle_key(F.col("doc_id"), "crawl9").alias("__k"),
-        corpus_shard(F.col("doc_id"), n_shards, "crawl9").alias("shard"),
+        corpus_shard(F.col("doc_id"), 16, "crawl9").alias("shard"),
     )
     return (
         keyed.groupBy("shard")

@@ -391,21 +391,21 @@ QUERY_REGISTRY["window_rank_suite"] = QuerySpec(
 
 
 
-def _morton_col(x: Column, y: Column, bits: int = 8) -> Column:
-    """Morton (Z-order) interleave of two ``bits``-bit non-negative ints —
+def _morton_col(x: Column, y: Column) -> Column:
+    """Morton (Z-order) interleave of two 8-bit non-negative ints —
     delegates to the shared ``operators/layout`` generator (round 11
     refactor: one (bit, column) walk feeds this query, the layout operator
     family, AND both engines' SQL, so the interleave can never drift
     between consumers). x occupies even bit positions, y odd."""
     from covid19_spark.operators.layout import morton_interleave
 
-    return morton_interleave([x, y], bits)
+    return morton_interleave([x, y], 8)
 
 
-def _morton_sql(x: str, y: str, bits: int = 8) -> str:
+def _morton_sql(x: str, y: str) -> str:
     from covid19_spark.operators.layout import morton_interleave_sql
 
-    return morton_interleave_sql([x, y], bits)
+    return morton_interleave_sql([x, y], 8)
 
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1352,7 +1352,7 @@ def q_pq_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus lives as 8 code bytes per vector (64× smaller than raw
     floats), queries score codes via ADC table lookups, and only the
     shortlist touches full-precision vectors. Codebooks fit driver-side on
-    a contract-small training sample (``train_sample_mod="auto"`` bounds it
+    a contract-small training sample (the "auto" sample bounds it
     at ~200k rows; at this SF that is the whole corpus, so results are
     unchanged) with deterministic lowest-id seeding + one Lloyd round —
     the FAISS build-index pattern; the distributed trainer stays reachable

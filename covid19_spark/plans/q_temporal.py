@@ -318,8 +318,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF terms over the corpus — the keyword-
     extraction stage of a text pipeline. Rational idf (N+1)/(df+1): exact
     integer inputs, one double division — bit-reproducible across engines
-    (ln() drifts in the last ulp between libms; operators/text.tf_idf_top_terms
-    offers idf_mode='log' for production). Ties break on term asc.
+    (ln() drifts in the last ulp between libms). Ties break on term asc.
     """
     from covid19_spark.operators.text import tf_idf_top_terms
 
@@ -1295,10 +1294,10 @@ def q_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.spans import duplicated_spans
 
     docs = _t(spark, sf_dir, "documents")
-    # materialize=True: evaluate eagerly and release the gram cache — a
-    # registry query must not leave session-lifetime cache entries behind
-    # (the VERDICT r07 item #2 contract, pinned by tests/test_cache_hygiene.py)
-    return duplicated_spans(docs, k=8, min_docs=2, materialize=True).orderBy(
+    # the spans evaluate eagerly and release the gram cache — a registry
+    # query must not leave session-lifetime cache entries behind (the
+    # VERDICT r07 item #2 contract, pinned by tests/test_cache_hygiene.py)
+    return duplicated_spans(docs, k=8, min_docs=2).orderBy(
         "doc_id", "span_start"
     )
 
@@ -1344,10 +1343,8 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.spans import span_dedup
 
     docs = _t(spark, sf_dir, "documents")
-    # materialize=True for cache hygiene — see q_duplicated_spans
-    return span_dedup(
-        docs, k=8, min_docs=2, keep_first=True, materialize=True
-    ).orderBy("doc_id")
+    # evaluated eagerly for cache hygiene — see q_duplicated_spans
+    return span_dedup(docs, k=8, min_docs=2, keep_first=True).orderBy("doc_id")
 
 
 ORACLE_SPAN_DEDUP = """

@@ -155,23 +155,17 @@ class StoreReader:
                 with contextlib.suppress(AnalysisException):
                     self._open(name)
 
-    def _open(self, name: str) -> tuple[DataFrame, pa.Table]:
-        """The table's handle and its Arrow snapshot, taken once per stamp."""
+    def _open(self, name: str) -> pa.Table:
+        """The table's Arrow snapshot, taken once per stamp."""
         path = os.path.join(self.out_dir, name)
-
-        def take() -> tuple[DataFrame, pa.Table]:
-            handle = self.spark.read.parquet(path)
-            return handle, handle.toArrow()
-
-        return open_stamped(self.spark, path, take)
-
-    def _t(self, name: str) -> DataFrame:
-        return self._open(name)[0]
+        return open_stamped(
+            self.spark, path, lambda: self.spark.read.parquet(path).toArrow()
+        )
 
     def rows(self, name: str, **equals) -> list[dict]:
         """The rows of table ``name`` whose columns equal ``equals`` (a None
         value leaves its column unfiltered), NULL fields dropped."""
-        table = self._open(name)[1]
+        table = self._open(name)
         for col, value in equals.items():
             if value is not None:
                 table = table.filter(pc.equal(table[col], value))

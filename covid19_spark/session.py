@@ -24,7 +24,6 @@ COMMITTER_VERSION_CONF = "mapreduce.fileoutputcommitter.algorithm.version"
 def get_spark(
     app_name: str = "covid19_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -35,8 +34,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = (
         SparkSession.builder.master(master)

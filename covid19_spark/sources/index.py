@@ -310,11 +310,9 @@ def build_inverted_index_from(
     docs: DataFrame,
     path: str,
     fingerprint: str = "",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     derived: bool = True,
 ) -> float:
-    """One corpus pass over an arbitrary document FRAME → the four
+    """One corpus pass over a ``(doc_id, text)`` document FRAME → the four
     datasets.  The only corpus-sized work is the tokenize + (doc_id, t)
     combine; everything else derives from the grouped postings.  Returns
     the document count.  ``derived=False`` writes ONLY the postings — for
@@ -333,10 +331,10 @@ def build_inverted_index_from(
     # a dedicated ``docs.count()`` job afterwards — the tokenize pass
     # already reads every doc row exactly once (r14 job-count cut)
     obs = Observation()
-    docs = docs.select(F.col(id_col), F.col(text_col)).observe(
+    docs = docs.select("doc_id", "text").observe(
         obs, F.count(F.lit(1)).alias("n")
     )
-    postings = _delta_postings(docs, id_col, text_col)
+    postings = _delta_postings(docs, "doc_id", "text")
     # one shuffle onto the bucket id before the partitioned write — the
     # files-per-partition control of ann_index.write_ivfpq_index
     (
@@ -378,12 +376,10 @@ def build_inverted_index(
 def append_inverted_index(
     docs_delta: DataFrame,
     path: str,
-    fingerprint: str = "",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_prev: float | None = None,
 ) -> None:
-    """Add NEW documents to an existing index without touching its rows —
+    """Add NEW ``(doc_id, text)`` documents to an existing index without
+    touching its rows —
     the daily-ingest shape (Lucene's new-segment story at parquet
     granularity): the delta is tokenized/grouped alone (postings are
     doc-granular, so new docs append whole rows; nothing existing is
@@ -396,22 +392,28 @@ def append_inverted_index(
     result is bit-identical to a full rebuild over base ∪ delta: counts
     are exact integers and every derived stat is a deterministic function
     of the postings multiset (pinned by the ``bm25_incremental_index``
-    registry differential)."""
+    registry differential).
+
+    A servable base keeps its fingerprint (read from its scalars with its
+    count); a derived-less base build passes its count in ``n_prev`` and
+    has no fingerprint."""
     import glob
 
     from pyspark.sql import Observation
 
     spark = docs_delta.sparkSession
     use_fast_committer(spark)
-    if n_prev is None:  # derived-less base builds pass their count in
-        n_prev = float(read_meta_rows(f"{path}/scalars")[0]["n"])
+    fingerprint = ""
+    if n_prev is None:
+        scalars = read_meta_rows(f"{path}/scalars")[0]
+        n_prev, fingerprint = float(scalars["n"]), scalars["fingerprint"]
     # delta count observed on the append write (same job-count cut as the
     # build path)
     obs = Observation()
-    docs_delta = docs_delta.select(F.col(id_col), F.col(text_col)).observe(
+    docs_delta = docs_delta.select("doc_id", "text").observe(
         obs, F.count(F.lit(1)).alias("n")
     )
-    delta = _delta_postings(docs_delta, id_col, text_col)
+    delta = _delta_postings(docs_delta, "doc_id", "text")
     # a degenerate (zero-token) base is stored as ONE schema-only
     # unpartitioned file (see build_inverted_index_from); the first real
     # append must establish the partitioned layout with OVERWRITE — an
@@ -583,7 +585,6 @@ def build_fielded_index_from(
     docs: DataFrame,
     path: str,
     fields: dict,
-    id_col: str = "doc_id",
     fingerprint: str = "",
 ) -> float:
     """Per-field postings for BM25F (Robertson, Zaragoza & Taylor, CIKM
@@ -617,7 +618,7 @@ def build_fielded_index_from(
     for fname, expr in fields.items():
         col = F.expr(expr) if isinstance(expr, str) else expr
         toks = docs.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.explode(
                 F.filter(F.split(F.lower(col), " "), lambda t: t != "")
             ).alias("t"),

@@ -20,16 +20,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def decode_json_value(df: DataFrame, schema: T.StructType, ts_from_kafka: bool = True) -> DataFrame:
+def decode_json_value(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Kafka wire format → typed columns: key string, value via from_json,
-    event time from the Kafka record timestamp (reference T5 uses
+    event time ``ts`` from the Kafka record timestamp (reference T5 uses
     ``context.timestamp()``)."""
     out = df.select(
         F.col("key").cast("string").alias("key"),
         F.from_json(F.col("value").cast("string"), schema).alias("v"),
-        *([F.col("timestamp").alias("ts")] if ts_from_kafka else []),
+        F.col("timestamp").alias("ts"),
     )
-    return out.select("key", *(["ts"] if ts_from_kafka else []), "v.*")
+    return out.select("key", "ts", "v.*")
 
 
 def reader_options(
@@ -161,7 +161,6 @@ def build_topic_writer(
     bootstrap: str = "localhost:9092",
     checkpoint: str | None = None,
     trigger_seconds: int = 10,
-    headers_col: Column | None = None,
 ):
     """Fully-configured (unstarted) Kafka DataStreamWriter — serde applied,
     format/options/trigger set. Split from ``write_topic`` so the whole
@@ -169,7 +168,7 @@ def build_topic_writer(
     exercisable in tests."""
     spec = writer_spec(topic, bootstrap, checkpoint, trigger_seconds)
     return (
-        encode_json_value(df, key_col, headers_col)
+        encode_json_value(df, key_col)
         .writeStream.format(spec["format"])
         .options(**spec["options"])
         .trigger(**spec["trigger"])

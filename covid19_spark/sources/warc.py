@@ -58,15 +58,15 @@ def encode_warc_record(
     record_id: str,
     block: bytes,
     target_uri: str | None = None,
-    date: str = "2024-01-01T00:00:00Z",
     content_type: str | None = None,
 ) -> bytes:
-    """One spec-shaped WARC/1.0 record (round-trip twin of the parser)."""
+    """One spec-shaped WARC/1.0 record (round-trip twin of the parser),
+    dated 2024-01-01T00:00:00Z."""
     h = [
         b"WARC/1.0",
         b"WARC-Type: " + rec_type.encode(),
         b"WARC-Record-ID: <urn:uuid:" + record_id.encode() + b">",
-        b"WARC-Date: " + date.encode(),
+        b"WARC-Date: 2024-01-01T00:00:00Z",
     ]
     if target_uri is not None:
         h.append(b"WARC-Target-URI: " + target_uri.encode())
@@ -76,13 +76,12 @@ def encode_warc_record(
     return _CRLF.join(h) + _CRLF + _CRLF + block + _CRLF + _CRLF
 
 
-def http_response_block(
-    status: int, reason: str, body: bytes, content_type: str = "text/plain"
-) -> bytes:
-    """HTTP/1.1 response message for a ``response`` record's block."""
+def http_response_block(status: int, reason: str, body: bytes) -> bytes:
+    """HTTP/1.1 ``text/plain`` response message for a ``response`` record's
+    block."""
     return (
         f"HTTP/1.1 {status} {reason}".encode() + _CRLF
-        + f"Content-Type: {content_type}".encode() + _CRLF
+        + b"Content-Type: text/plain" + _CRLF
         + f"Content-Length: {len(body)}".encode() + _CRLF + _CRLF
         + body
     )
@@ -209,11 +208,10 @@ _PERMISSIVE_SCHEMA = StructType(
 
 def warc_records(
     df: DataFrame,
-    id_col: str = "warc_id",
-    payload_col: str = "payload",
     on_error: str = "fail",
 ) -> DataFrame:
-    """Explode a frame of WARC blobs into one row per record via
+    """Explode a frame of WARC blobs (``warc_id``, ``payload``) into one
+    row per record via
     Arrow-batched ``mapInPandas``. ``on_error="permissive"`` follows the
     multimodal kernel contract: an unparseable blob yields ONE row with
     NULL fields and a classified ``error`` column (schema gains the column
@@ -227,7 +225,7 @@ def warc_records(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for wid, p in zip(pdf[id_col], pdf[payload_col]):
+            for wid, p in zip(pdf["warc_id"], pdf["payload"]):
                 wid = int(wid)
                 try:
                     recs = parse_warc(p)
@@ -248,6 +246,6 @@ def warc_records(
                     rows.append(row + (None,) if permissive else row)
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("warc_id", "payload").mapInPandas(
         batches, schema=schema
     )

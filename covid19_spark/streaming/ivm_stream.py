@@ -33,14 +33,13 @@ def merge_state_batch(
     key_cols: Sequence[str],
     measure: str,
     n_buckets: int | None = None,
-    bucket_col: str = "kb",
 ) -> list[int]:
     """Lift ``batch`` and ⊕-merge it into the bucketed state table at
     ``state_path``; returns the rewritten bucket ids."""
     return merge_into_buckets(
         agg_state(batch, key_cols, measure), state_path, key_cols,
         lambda current, lifted: merge_agg_state(current, lifted, key_cols),
-        n_buckets, bucket_col,
+        n_buckets,
     )
 
 
@@ -61,12 +60,11 @@ def make_state_merge_sink(
 def read_report(
     spark,
     state_path: str,
-    bucket_col: str = "kb",
     key_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """The always-current report: ``finalize`` over the persisted state.
     Pass ``key_cols`` explicitly when a key name could collide with a
     state measure column."""
     return finalize_agg_state(
-        spark.read.parquet(state_path).drop(bucket_col), keys=key_cols
+        spark.read.parquet(state_path).drop("kb"), keys=key_cols
     )

@@ -10,7 +10,7 @@ triggering event within a time window (click → purchase within N minutes).
 
 State account: each side holds only rows younger than its watermark; the
 interval condition lets Spark evict aggressively (left rows older than
-``max_delay`` past the watermark can never match future right rows).
+the 30-minute delay past the watermark can never match future right rows).
 """
 
 from __future__ import annotations
@@ -25,44 +25,36 @@ def interval_join(
     key_col: str,
     left_ts: str,
     right_ts: str,
-    max_delay: str = "30 minutes",
-    watermark: str = "1 hour",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join right-events to left-events on ``key_col`` where
-    ``left_ts <= right_ts <= left_ts + max_delay``.
+    """Inner-join right-events to left-events on ``key_col`` where
+    ``left_ts <= right_ts <= left_ts + 30 minutes``, each side watermarked
+    one hour behind its event time.
 
     Both inputs must be streaming DataFrames (or both batch — the same
     expression works for backfill, the usual batch/stream symmetry).
     """
-    l = left.withWatermark(left_ts, watermark).alias("l")
-    r = right.withWatermark(right_ts, watermark).alias("r")
+    l = left.withWatermark(left_ts, "1 hour").alias("l")
+    r = right.withWatermark(right_ts, "1 hour").alias("r")
     cond = (
         (F.col(f"l.{key_col}") == F.col(f"r.{key_col}"))
         & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {max_delay}"))
+        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}") + F.expr("INTERVAL 30 minutes"))
     )
-    return l.join(r, cond, how)
+    return l.join(r, cond)
 
 
-def click_purchase_attribution(
-    events: DataFrame,
-    ts_col: str = "ts",
-    attribution_window: str = "30 minutes",
-) -> DataFrame:
-    """Attribute each purchase to the clicks that preceded it within the
-    window, per user. Output: one row per (click, purchase) candidate pair
+def click_purchase_attribution(events: DataFrame) -> DataFrame:
+    """Attribute each purchase to the clicks that preceded it by at most 30
+    minutes (event time ``ts``), per user. Output: one row per (click, purchase) candidate pair
     with the lag between them."""
     clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id"), F.col(ts_col).alias("click_ts"), F.col("event_id").alias("click_id")
+        F.col("user_id"), F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
     )
     purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"), F.col(ts_col).alias("purchase_ts"),
+        F.col("user_id"), F.col("ts").alias("purchase_ts"),
         F.col("event_id").alias("purchase_id"), F.col("value").alias("purchase_value"),
     )
-    joined = interval_join(
-        clicks, purchases, "user_id", "click_ts", "purchase_ts", attribution_window
-    )
+    joined = interval_join(clicks, purchases, "user_id", "click_ts", "purchase_ts")
     return joined.select(
         F.col("l.user_id").alias("user_id"),
         "click_id",

@@ -26,7 +26,7 @@ from covid19_spark.streaming.stateful_delta import streaming_running_delta
 from covid19_spark.streaming.windowed import daily_window_agg
 
 
-def stats_delta_stream(snapshots: DataFrame, ts_col: str = "ts") -> DataFrame:
+def stats_delta_stream(snapshots: DataFrame) -> DataFrame:
     """Cumulative snapshot stream → per-state delta stream (A1).
 
     Input: state, ts, confirmed/recovered/deaths (cumulative longs).
@@ -34,7 +34,7 @@ def stats_delta_stream(snapshots: DataFrame, ts_col: str = "ts") -> DataFrame:
     return streaming_running_delta(
         snapshots,
         key_cols=["state"],
-        ts_col=ts_col,
+        ts_col="ts",
         value_cols=["confirmed", "recovered", "deaths"],
     )
 

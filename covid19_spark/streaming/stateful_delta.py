@@ -33,7 +33,6 @@ def delta_kernel(
     key_cols: Sequence[str],
     ts_col: str,
     value_cols: Sequence[str],
-    delta_prefix: str,
 ) -> tuple[pd.DataFrame | None, list[float]]:
     """Vectorized per-key delta kernel of ``streaming_running_delta``. A
     key's micro-batch may arrive as several Arrow chunks: concatenate
@@ -52,7 +51,7 @@ def delta_kernel(
         vals = pdf[c].astype("float64")
         shifted = vals.shift(1)
         shifted.iloc[0] = prev[i]
-        out[f"{delta_prefix}{c}"] = vals - shifted
+        out[f"delta_{c}"] = vals - shifted
         prev[i] = float(vals.iloc[-1])
     return out, prev
 
@@ -62,7 +61,6 @@ def streaming_running_delta(
     key_cols: Sequence[str],
     ts_col: str,
     value_cols: Sequence[str],
-    delta_prefix: str = "delta_",
 ) -> DataFrame:
     """Per-key running delta over a streaming DataFrame.
 
@@ -77,7 +75,7 @@ def streaming_running_delta(
         [f"{c} string" for c in key_cols]
         + [f"{ts_col} timestamp"]
         + [f"{c} double" for c in value_cols]
-        + [f"{delta_prefix}{c} double" for c in value_cols]
+        + [f"delta_{c} double" for c in value_cols]
     )
     out_schema = ", ".join(fields)
     state_schema = ", ".join(f"{c} double" for c in value_cols)
@@ -87,9 +85,7 @@ def streaming_running_delta(
     ) -> Iterator[pd.DataFrame]:
         prev = list(state.get) if state.exists else [0.0] * len(value_cols)
         chunks = [pdf for pdf in pdfs if len(pdf)]
-        out, prev = delta_kernel(
-            chunks, prev, key_cols, ts_col, value_cols, delta_prefix
-        )
+        out, prev = delta_kernel(chunks, prev, key_cols, ts_col, value_cols)
         state.update(tuple(prev))
         if out is not None:
             yield out

@@ -110,7 +110,6 @@ def merge_into_buckets(
     key_cols: Sequence[str],
     merge: Callable[[DataFrame, DataFrame], DataFrame],
     n_buckets: int | None = None,
-    bucket_col: str = "kb",
 ) -> list[int]:
     """Incremental merge of ``rows`` into a hash-bucketed parquet table.
 
@@ -142,23 +141,23 @@ def merge_into_buckets(
     bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n)).cast("int")
     obs = Observation()
     bucketed = (
-        rows.withColumn(bucket_col, bucket)
-        .observe(obs, F.collect_set(bucket_col).alias("touched"))
+        rows.withColumn("kb", bucket)
+        .observe(obs, F.collect_set("kb").alias("touched"))
         .localCheckpoint(eager=True)
     )
     touched = sorted(int(b) for b in obs.get["touched"])
     if not touched:
         return []
     current = rows.sparkSession.read.schema(bucketed.schema).parquet(table_path)
-    current = current.filter(F.col(bucket_col).isin(touched)).drop(bucket_col)
-    out = merge(current, bucketed.drop(bucket_col)).withColumn(bucket_col, bucket)
+    current = current.filter(F.col("kb").isin(touched)).drop("kb")
+    out = merge(current, bucketed.drop("kb")).withColumn("kb", bucket)
     # Materialize before writing: Spark refuses (or corrupts) an overwrite of
     # a path that is also being read. localCheckpoint truncates the lineage
     # so the read completes first; only the touched buckets' rows are held.
-    out = out.repartition(len(touched), bucket_col).localCheckpoint(eager=True)
+    out = out.repartition(len(touched), "kb").localCheckpoint(eager=True)
     (
         out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col).parquet(table_path)
+        .partitionBy("kb").parquet(table_path)
     )
     return touched
 
@@ -169,7 +168,6 @@ def upsert_batch_partitioned(
     key_cols: Sequence[str],
     ts_col: str,
     n_buckets: int | None = None,
-    bucket_col: str = "kb",
 ) -> list[int]:
     """MERGE-style upsert of ``batch`` into the bucketed table at
     ``table_path``: :func:`merge_into_buckets` keeping the newest row per
@@ -177,7 +175,7 @@ def upsert_batch_partitioned(
     return merge_into_buckets(
         batch, table_path, key_cols,
         lambda current, rows: compact_batch_to_table(rows, current, key_cols, ts_col),
-        n_buckets, bucket_col,
+        n_buckets,
     )
 
 

@@ -26,10 +26,9 @@ def daily_window_agg(
     key_cols: Sequence[str],
     sum_cols: Sequence[str] = (),
     last_cols: Sequence[str] = (),
-    watermark: str = "2 days",
-    window_duration: str = "1 day",
 ) -> DataFrame:
-    """Watermarked tumbling-window rollup: sum deltas, carry latest value.
+    """Tumbling 1-day rollup, watermarked 2 days behind event time: sum
+    deltas, carry latest value.
 
     Output: date (window start, formatted), key_cols, sum_<c>, last_<c>,
     n_updates — the streaming twin of ``operators.rollup.daily_rollup``.
@@ -38,8 +37,8 @@ def daily_window_agg(
     aggs += [F.max_by(F.col(c), F.col(ts_col)).alias(f"last_{c}") for c in last_cols]
     aggs.append(F.count(F.lit(1)).alias("n_updates"))
     windowed = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), *key_cols)
+        stream.withWatermark(ts_col, "2 days")
+        .groupBy(F.window(F.col(ts_col), "1 day").alias("w"), *key_cols)
         .agg(*aggs)
     )
     return windowed.select(

@@ -92,22 +92,6 @@ def test_probe_is_static_partition_pruning(spark, index_path):
     assert survived == probed
 
 
-def test_prune_none_same_answer_and_bad_mode_raises(spark, index_path):
-    emb, queries = _emb_and_queries(spark)
-    idx = read_ivfpq_index(spark, index_path)
-    a = (
-        ivfpq_index_topk(idx, emb, queries, prune="none", **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    b = (
-        ivfpq_index_topk(idx, emb, queries, prune="static", **PARAMS)
-        .orderBy("query_id", "rank").collect()
-    )
-    assert a == b
-    with pytest.raises(ValueError, match="prune"):
-        ivfpq_index_topk(idx, emb, queries, prune="dynamic", **PARAMS)
-
-
 def test_rebuild_in_place_overwrites(spark, index_path):
     """A second build at the same path replaces the index (mode=overwrite
     everywhere) — the refresh story for a periodically re-encoded corpus."""
@@ -332,5 +316,3 @@ def test_concurrent_cold_ensure_ivfpq(spark, tmp_path):
         assert idx.codes.count() == n
     assert glob.glob(f"{path}__build_*") == []
     assert glob.glob(f"{path}__old_*") == []
-
-

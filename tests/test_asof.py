@@ -56,42 +56,6 @@ def test_backward_semantics(spark, frames):
     assert len(rows) == 5                                        # left join: no row loss
 
 
-def test_forward_semantics(spark, frames):
-    left, right = frames
-    out = asof_join(
-        left, right, on=["k"], left_ts="ts", right_ts="ts",
-        right_payload=["ts", "rid", "v"], right_tiebreak="rid",
-        direction="forward",
-    )
-    rows = {r["lid"]: r for r in out.collect()}
-    assert rows[1]["rid"] == 2                                   # equal ts inclusive
-    assert rows[2]["rid"] == 2                                   # next at-or-after 09:00
-    assert rows[3]["rid"] is None                                # nothing after 12:30
-    assert rows[4]["rid"] is None                                # b has nothing >= 11:00
-    assert rows[5]["rid"] is None
-
-
-def test_forward_tie_takes_min_tiebreak(spark):
-    left = spark.createDataFrame(
-        [(1, "a", _ts("2024-01-01 10:00:00"))], "lid long, k string, ts timestamp"
-    )
-    right = spark.createDataFrame(
-        [(7, "a", _ts("2024-01-01 11:00:00"), 1.0), (8, "a", _ts("2024-01-01 11:00:00"), 2.0)],
-        "rid long, k string, ts timestamp, v double",
-    )
-    out = asof_join(
-        left, right, on=["k"], left_ts="ts", right_ts="ts",
-        right_payload=["rid", "v"], right_tiebreak="rid", direction="forward",
-    ).collect()
-    assert out[0]["rid"] == 7 and out[0]["v"] == 1.0
-
-
-def test_bad_direction_rejected(spark, frames):
-    left, right = frames
-    with pytest.raises(ValueError, match="backward|forward"):
-        asof_join(left, right, ["k"], "ts", "ts", ["rid"], "rid", direction="nearest")
-
-
 def test_single_exchange_plan(spark, frames):
     """The union trick costs ONE hash exchange on the key (both sides can be
     100 TB facts); assert no extra shuffle or broadcast crept in."""

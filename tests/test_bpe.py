@@ -104,6 +104,11 @@ def test_tokenize_preserves_id_column_type(spark):
     assert out["doc-a"].n_words == 2
 
 
+def _n_words(df) -> int:
+    """A cap that keeps every distinct word: the uncapped reference."""
+    return word_counts(df, "text").count()
+
+
 def test_vocab_candidate_cap_engages(spark):
     """The driver-collect bound (VERDICT r09 task #4): with
     max_vocab_candidates=N only the top-N words by (cnt desc, word asc)
@@ -121,7 +126,7 @@ def test_vocab_candidate_cap_engages(spark):
         "doc_id long, text string",
     )
     capped = train_bpe(df, "text", n_merges=10, max_vocab_candidates=2)
-    manual = train_bpe(kept, "text", n_merges=10, max_vocab_candidates=None)
+    manual = train_bpe(kept, "text", n_merges=10, max_vocab_candidates=_n_words(kept))
     assert capped == manual
     # and the cap's tie-break is (cnt desc, word asc): raising it to 3
     # admits exactly 'gamma' (cnt 2 beats the three hapaxes)
@@ -130,7 +135,9 @@ def test_vocab_candidate_cap_engages(spark):
         [(i, w) for i, w in enumerate(["alpha"] * 9 + ["beta"] * 7 + ["gamma"] * 2)],
         "doc_id long, text string",
     )
-    assert capped3 == train_bpe(kept3, "text", n_merges=10, max_vocab_candidates=None)
+    assert capped3 == train_bpe(
+        kept3, "text", n_merges=10, max_vocab_candidates=_n_words(kept3)
+    )
 
 
 def test_vocab_cap_default_does_not_engage_at_test_scale(spark):
@@ -138,5 +145,5 @@ def test_vocab_cap_default_does_not_engage_at_test_scale(spark):
     the bpe_merges/bpe_tokenize fixtures stay bit-identical."""
     corpus = _paper_corpus(spark)
     assert train_bpe(corpus, "text", n_merges=8) == train_bpe(
-        corpus, "text", n_merges=8, max_vocab_candidates=None
+        corpus, "text", n_merges=8, max_vocab_candidates=_n_words(corpus)
     )

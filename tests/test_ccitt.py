@@ -15,8 +15,8 @@ from covid19_spark.operators.ccitt import g4_decode, g4_encode
 
 def test_all_white_is_pure_v0():
     # each all-white line codes as a single V0 bit "1" (b1 = a1 = w);
-    # 8 lines -> 0b11111111 -> one 0xFF byte without EOFB
-    assert g4_encode(np.zeros((8, 8), np.uint8), eofb=False) == b"\xff"
+    # 8 lines -> 0b11111111 -> one 0xFF byte, then EOFB (two EOLs)
+    assert g4_encode(np.zeros((8, 8), np.uint8)) == b"\xff\x00\x10\x01"
     # and decodes back from that byte alone
     assert np.array_equal(
         g4_decode(b"\xff", 8, 8), np.zeros((8, 8), np.uint8)
@@ -30,7 +30,7 @@ def test_first_line_horizontal_mode_codes():
     black-run(2) '11'."""
     img = np.zeros((1, 20), np.uint8)
     img[0, 2:4] = 1
-    enc = g4_encode(img, eofb=False)
+    enc = g4_encode(img)
     bits = "".join(f"{b:08b}" for b in enc)
     # H + white2 + black2, then the remaining white run to EOL is coded by
     # vertical against b1=w ... the leading 9 bits are fully determined:
@@ -139,7 +139,7 @@ def test_g3_roundtrip_and_structure():
         for _ in range(15):
             h, w = int(rng.integers(1, 30)), int(rng.integers(1, 80))
             img = (rng.random((h, w)) < 0.4).astype(np.uint8)
-            dec = g3_decode(g3_encode(img, two_d=two_d, k=4), w, h, two_d=two_d)
+            dec = g3_decode(g3_encode(img, two_d=two_d), w, h, two_d=two_d)
             assert np.array_equal(dec, img), (two_d, h, w)
 
 

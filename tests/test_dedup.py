@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 from covid19_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
+    lsh_candidate_pair_ids,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
@@ -99,8 +100,8 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     sigs = minhash_signatures(df, "doc_id", "text", num_hashes=32, shingle_n=2).cache()
-    capped = lsh_candidate_pairs(sigs, "doc_id", 32, 8, max_bucket=10).collect()
-    uncapped = lsh_candidate_pairs(sigs, "doc_id", 32, 8, max_bucket=None).collect()
+    capped = lsh_candidate_pair_ids(sigs, "doc_id", 32, 8, max_bucket=10).collect()
+    uncapped = lsh_candidate_pair_ids(sigs, "doc_id", 32, 8, max_bucket=None).collect()
     capped_pairs = {(r.doc_a, r.doc_b) for r in capped}
     uncapped_pairs = {(r.doc_a, r.doc_b) for r in uncapped}
     # degenerate 20-doc cluster: 190 pairs uncapped, none capped
@@ -170,18 +171,28 @@ def test_bucket_cap_reports_dropped_buckets(spark):
     Planting one degenerate identical-hash cluster, the probe must BOTH drop
     its pairs AND surface the dropped (band, key) buckets with their sizes
     via ``dropped_report`` — all four 16-bit sub-bands of the planted hash,
-    each of cluster size."""
+    each of cluster size (the report is read from the guard the probe runs,
+    ``drop_oversized_buckets`` over the Hamming sub-band keys)."""
+    from covid19_spark.operators.dedup import (
+        drop_oversized_buckets,
+        hamming_band_keys,
+    )
+
     rows = [(i, 0x1234_5678_9ABC_0000) for i in range(20)]
     rows += [(100, 0x7FFF_0000_0000_0001), (101, 0x7FFF_0000_0000_0003)]
     sigs = spark.createDataFrame(rows, ["doc_id", "simhash"]).cache()
-    report = []
     pairs = {
         (r.doc_a, r.doc_b)
         for r in simhash_candidate_pairs(
-            sigs, "doc_id", max_hamming=3, max_bucket=10, dropped_report=report
+            sigs, "doc_id", max_hamming=3, max_bucket=10
         ).collect()
     }
     assert pairs == {(100, 101)}  # cluster dropped, genuine pair survives
+    banded = sigs.select(
+        "doc_id", F.explode(hamming_band_keys("simhash")).alias("bb")
+    ).select("doc_id", "bb.band", "bb.key")
+    report = []
+    drop_oversized_buckets(banded, ["band", "key"], 10, report)
     assert len(report) == 1
     dropped = report[0].collect()
     assert set(report[0].columns) == {"band", "key", "bucket_size"}
@@ -201,10 +212,16 @@ def test_bucket_cap_report_empty_when_guard_disabled(spark):
         [(1, 0x7FFF_0000_0000_0001), (2, 0x7FFF_0000_0000_0003)],
         ["doc_id", "simhash"],
     )
+    from covid19_spark.operators.dedup import (
+        drop_oversized_buckets,
+        hamming_band_keys,
+    )
+
+    banded = sigs.select(
+        "doc_id", F.explode(hamming_band_keys("simhash")).alias("bb")
+    ).select("doc_id", "bb.band", "bb.key")
     report = []
-    simhash_candidate_pairs(
-        sigs, "doc_id", max_bucket=None, dropped_report=report
-    ).collect()
+    drop_oversized_buckets(banded, ["band", "key"], None, report)
     assert len(report) == 1
     assert report[0].count() == 0
     assert "bucket_size" in report[0].columns
@@ -223,7 +240,7 @@ def test_lsh_candidate_pairs_reports_dropped_buckets(spark):
     report = []
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in lsh_candidate_pairs(
+        for r in lsh_candidate_pair_ids(
             sigs, "doc_id", 32, 8, max_bucket=10, dropped_report=report
         ).collect()
     }
@@ -563,23 +580,27 @@ def test_bpe_tokenize_matches_fixture(spark):
 
 
 def test_incremental_materialize_equals_lazy(spark):
-    """materialize=True on the incremental screen changes only cache
-    lifecycle (eager evaluation + release), never the screen verdicts."""
-    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
+    """The incremental screen's eager evaluation (localCheckpoint + cache
+    release) changes only cache lifecycle, never the verdicts of the lazy
+    screen it checkpoints."""
+    from covid19_spark.operators.dedup import (
+        _incremental_screen_with_handle,
+        incremental_dedup_against_corpus,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     corpus = docs.filter(F.col("doc_id") < 40)
     batch = docs.filter((F.col("doc_id") >= 40) & (F.col("doc_id") < 80))
-    lazy = sorted(
-        tuple(r)
-        for r in incremental_dedup_against_corpus(
-            corpus, batch, "doc_id", "text"
-        ).collect()
+    screen, caches = _incremental_screen_with_handle(
+        corpus, batch, "doc_id", "text", 32, 8, 3, 0.5
     )
+    lazy = sorted(tuple(r) for r in screen.collect())
+    for c in caches:
+        c.unpersist()
     eager = sorted(
         tuple(r)
         for r in incremental_dedup_against_corpus(
-            corpus, batch, "doc_id", "text", materialize=True
+            corpus, batch, "doc_id", "text"
         ).collect()
     )
     assert lazy == eager

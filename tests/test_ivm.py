@@ -56,23 +56,6 @@ def test_key_only_in_one_batch_survives(spark):
     assert rep[2] == (1, 5.0, 5.0, 5.0, 5.0)
 
 
-def test_hll_distinct_state_merges(spark):
-    """The sketch column merges under ⊕ and estimates the true distinct
-    count exactly at this tiny cardinality (7 distinct u values)."""
-    a = agg_state(_rows(spark, 0, 40), ["k"], "v", with_distinct="u")
-    b = agg_state(_rows(spark, 40, 100), ["k"], "v", with_distinct="u")
-    out = finalize_agg_state(merge_agg_state(a, b, ["k"]))
-    exact = {
-        r.k: r.d
-        for r in _rows(spark, 0, 100)
-        .groupBy("k")
-        .agg(F.countDistinct("u").alias("d"))
-        .collect()
-    }
-    for r in out.collect():
-        assert r.approx_distinct == exact[r.k]
-
-
 def test_lift_is_map_side_combined(spark):
     """Plan shape: the lift aggregates partially before the exchange."""
     plan = (

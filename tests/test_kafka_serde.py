@@ -299,7 +299,6 @@ def test_encode_headers_and_key_routing_wire_shape(spark):
         .select(F.lit("mh").alias("state"), F.col("value").cast("double").alias("rate"))
     )
     writer = build_topic_writer(
-        stream, "covid19-stats", F.col("state"), checkpoint="/tmp/ck2",
-        headers_col=hdrs,
+        stream, "covid19-stats", F.col("state"), checkpoint="/tmp/ck2"
     )
-    assert writer is not None  # full assembly (incl. headers) short of start()
+    assert writer is not None  # full assembly short of start()

@@ -278,24 +278,33 @@ def test_dedup_pipelines_never_go_quadratic(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
     # Both registry queries materialize eagerly for cache hygiene
     # (localCheckpoint truncates the executed plan to the post-checkpoint
-    # tail), so the (band, bucket) probe shape is asserted on the LAZY twin
-    # of the incremental pipeline — pinned result-identical to
-    # materialize=True by test_incremental_materialize_equals_lazy —
-    # whose end-to-end plan exposes the probe join.
-    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
+    # tail), so the (band, bucket) probe shape is asserted on the lazy
+    # screen the incremental pipeline checkpoints — pinned result-identical
+    # by test_incremental_materialize_equals_lazy — whose end-to-end plan
+    # exposes the probe join.
     from covid19_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", SF)
-    lazy = incremental_dedup_against_corpus(
-        docs.filter(F.col("doc_id") % 4 < 3),
-        docs.filter(F.col("doc_id") % 4 == 3),
-        "doc_id", "text", num_hashes=32, bands=8, shingle_n=3,
-        threshold=0.5, materialize=False,
-    )
+    lazy, caches = _incremental_lazy_screen(docs)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
+    for c in caches:
+        c.unpersist()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "band" in plan and "bucket" in plan
+
+
+def _incremental_lazy_screen(docs):
+    """The lazy screen ``incremental_dedup_against_corpus`` evaluates for
+    the registry's ``dedup_incremental`` (same parameters), with its
+    persisted frames."""
+    from covid19_spark.operators.dedup import _incremental_screen_with_handle
+
+    return _incremental_screen_with_handle(
+        docs.filter(F.col("doc_id") % 4 < 3),
+        docs.filter(F.col("doc_id") % 4 == 3),
+        "doc_id", "text", 32, 8, 3, 0.5,
+    )
 
 
 def _e2e_verified_pairs(docs):
@@ -343,17 +352,13 @@ def test_dedup_pipelines_shingle_text_exactly_once(spark):
     # incremental screen: corpus and batch sides each shingle once (cached);
     # the md5-digest probes legitimately scan the text uncached, so only the
     # shingle-expression invariant applies here. The registry query
-    # materializes eagerly (truncated plan), so assert on the lazy twin —
-    # pinned result-identical by test_incremental_materialize_equals_lazy.
-    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
-
-    lazy = incremental_dedup_against_corpus(
-        docs.filter(F.col("doc_id") % 4 < 3),
-        docs.filter(F.col("doc_id") % 4 == 3),
-        "doc_id", "text", num_hashes=32, bands=8, shingle_n=3,
-        threshold=0.5, materialize=False,
-    )
+    # materializes eagerly (truncated plan), so assert on the lazy screen it
+    # checkpoints — pinned result-identical by
+    # test_incremental_materialize_equals_lazy.
+    lazy, caches = _incremental_lazy_screen(docs)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
+    for c in caches:
+        c.unpersist()
     assert plan.count("array_distinct(flatten") > 0
     assert uncached_occurrences(plan, "array_distinct(flatten") == 0
 
@@ -365,21 +370,15 @@ def test_no_exchange_directly_above_cached_shingles(spark):
     re-partition of the cached heavy shingle arrays — the r04 dedup-family
     bench regression (dedup_pipeline_e2e 7.5 s → 23.8 s; VERDICT r04
     §What's wrong #2)."""
-    from covid19_spark.operators.dedup import incremental_dedup_against_corpus
-
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pairs, caches = _e2e_verified_pairs(docs)
+    screen, screen_caches = _incremental_lazy_screen(docs)
     plans = [
         pairs._jdf.queryExecution().executedPlan().toString(),
-        incremental_dedup_against_corpus(
-            docs.filter(F.col("doc_id") % 4 < 3),
-            docs.filter(F.col("doc_id") % 4 == 3),
-            "doc_id", "text", num_hashes=32, bands=8, shingle_n=3,
-            threshold=0.5, materialize=False,
-        )._jdf.queryExecution().executedPlan().toString(),
+        screen._jdf.queryExecution().executedPlan().toString(),
     ]
-    for c in caches:
+    for c in caches + screen_caches:
         c.unpersist()
     for plan in plans:
         lines = plan.splitlines()
@@ -398,20 +397,24 @@ def test_span_queries_tokenize_corpus_exactly_once(spark):
     cached-relation printout. The r04 plans recomputed the gram stream per
     consumer — two corpus scans for duplicated_spans, three for span_dedup
     (VERDICT r04 §What's wrong #1)."""
-    from covid19_spark.operators.spans import duplicated_spans, span_dedup
+    from covid19_spark.operators.spans import (
+        _duplicated_spans_with_handle,
+        _span_dedup_with_handle,
+    )
 
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for build in (duplicated_spans, span_dedup):
-        plan = (
-            build(docs, "doc_id", "text")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("InMemoryTableScan") > 0, build.__name__
+    for name, build in (
+        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs, 8, 2)),
+        ("span_dedup", lambda: _span_dedup_with_handle(docs, 8, 2, True)),
+    ):
+        frame, caches = build()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        for c in caches:
+            c.unpersist()
+        assert plan.count("InMemoryTableScan") > 0, name
         assert uncached_occurrences(plan, "Scan parquet") == 0, (
-            f"{build.__name__}: uncached corpus scan(s) — the gram/token "
+            f"{name}: uncached corpus scan(s) — the gram/token "
             "frames must be persisted, not recomputed per branch"
         )
 
@@ -430,18 +433,22 @@ def test_span_dedup_no_pairwise_stage_and_partitioned_windows(spark):
     partitioned by doc_id (no partitionless global sort)."""
     # the registry queries materialize eagerly (cache hygiene) which
     # truncates their executed plans at the localCheckpoint boundary, so
-    # the shape is asserted on the LAZY operator twins — pinned
+    # the shape is asserted on the LAZY frames they checkpoint — pinned
     # result-identical by tests/test_spans.py::test_materialize_equals_lazy
-    from covid19_spark.operators.spans import duplicated_spans, span_dedup
+    from covid19_spark.operators.spans import (
+        _duplicated_spans_with_handle,
+        _span_dedup_with_handle,
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for build, kwargs in (
-        (duplicated_spans, dict(k=8, min_docs=2)),
-        (span_dedup, dict(k=8, min_docs=2, keep_first=True)),
+    for name, build in (
+        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs, 8, 2)),
+        ("span_dedup", lambda: _span_dedup_with_handle(docs, 8, 2, True)),
     ):
-        lazy = build(docs, "doc_id", "text", materialize=False, **kwargs)
+        lazy, caches = build()
         plan = lazy._jdf.queryExecution().executedPlan().toString()
-        name = build.__name__
+        for c in caches:
+            c.unpersist()
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         # interval merge windows over doc_id partitions
@@ -450,28 +457,26 @@ def test_span_dedup_no_pairwise_stage_and_partitioned_windows(spark):
 
 def test_star_pipeline_releases_caches_without_recompute(spark):
     """lsh_dedup_pipeline unpersists its shingle/signature caches right
-    after connected components — which is only sound if BOTH CC variants
-    sever the verify-join lineage. The star path previously built its node
-    frame from the raw edges, so after unpersist the returned clusters
-    silently re-ran the whole tokenize/minhash/LSH/verify pipeline uncached
-    (r05 code-review finding, verified: 944 xxhash64 nodes in the executed
-    plan). Pinned: the final plan must contain ZERO shingle expressions for
-    either algorithm."""
+    after connected components — which is only sound if connected
+    components severs the verify-join lineage. A node frame built from the
+    raw edges makes the returned clusters silently re-run the whole
+    tokenize/minhash/LSH/verify pipeline uncached after unpersist (r05
+    code-review finding, verified: 944 xxhash64 nodes in the executed
+    plan). Pinned: the final plan must contain ZERO shingle expressions."""
     from covid19_spark.operators.dedup import lsh_dedup_pipeline
 
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for algo in ("label", "star"):
-        plan = (
-            lsh_dedup_pipeline(docs, "doc_id", "text", cc_algorithm=algo)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("array_distinct(flatten") == 0, (
-            f"{algo}: released caches are being recomputed — the CC stage "
-            "did not checkpoint the edge lineage"
-        )
+    plan = (
+        lsh_dedup_pipeline(docs, "doc_id", "text")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("array_distinct(flatten") == 0, (
+        "released caches are being recomputed — the CC stage did not "
+        "checkpoint the edge lineage"
+    )
 
 
 def test_gopher_quality_is_map_only_no_udfs(spark):

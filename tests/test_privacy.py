@@ -40,11 +40,11 @@ def test_anonymity_report_hand_case(spark):
     classes = equivalence_classes(
         _people(spark), ["zip", "age"], sensitive_col="disease"
     )
-    r = anonymity_report(classes, k_threshold=3, l_threshold=2).collect()[0]
+    r = anonymity_report(classes).collect()[0]
     assert (r.n_classes, r.min_k, r.max_k, r.n_rows) == (3, 1, 3, 6)
-    assert r.rows_at_risk == 3  # the k=2 class + the singleton
+    assert r.rows_at_risk == 6  # every class is below k = 5
     assert r.rows_homogeneous == 3  # l=1 classes: 2 + 1 rows
-    assert r.pct_at_risk == 3 / 6
+    assert r.pct_at_risk == 1.0
 
 
 def test_generalization_monotonicity_on_real_data(spark):

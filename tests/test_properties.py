@@ -435,12 +435,8 @@ def test_connected_components_match_union_find(spark, raw_edges):
     expected = {n: find(n) for n in parent}
 
     edges = spark.createDataFrame(raw_edges, "src long, dst long")
-    for algo in ("label", "star"):
-        got = {
-            r.node: r.comp
-            for r in connected_components(edges, algorithm=algo).collect()
-        }
-        assert got == expected, algo
+    got = {r.node: r.comp for r in connected_components(edges).collect()}
+    assert got == expected
 
 
 @given(

@@ -60,6 +60,6 @@ def test_giant_interval_guard(spark, frames):
     wide = intervals.union(
         spark.createDataFrame([(999, 0.0, 1e9)], "iid long, lo double, hi double")
     )
-    joined = binned_range_join(points, wide, "value", "lo", "hi", 1.0, max_bins_per_interval=100)
-    with pytest.raises(Exception, match="spans more than 100 bins"):
+    joined = binned_range_join(points, wide, "value", "lo", "hi", 1.0)
+    with pytest.raises(Exception, match="spans more than 1024 bins"):
         joined.collect()

@@ -20,6 +20,14 @@ A second check fails on any top-level import a package module (other than
 an ``__init__``) binds and never uses.  A name counts as used when the
 module's code loads it, or a string annotation names it; an import line
 marked ``# noqa: F401`` is a deliberate re-export.
+
+A third check fails on any defaulted parameter of a package function or
+method that no program call passes (by keyword or position; the package's
+own code counts as a program), unless ``KEEP_OPTIONS`` names it with a
+reason.  Callees resolve through the same aliases, and methods match by
+name; a def some program call forwards ``*args``/``**kwargs`` to, or that
+program code uses as a value, is exempt, and so are the defs ``KEEP``
+names.
 """
 
 from __future__ import annotations
@@ -63,8 +71,6 @@ KEEP: dict[str, str] = {
     "serving.format.build_district_summary_alert_text": "COVERAGE §2 W6 district summary",
     "serving.format.build_district_zone_text": "COVERAGE §2 J7 zone lookup text",
     "streaming.ivm_stream.make_state_merge_sink": "ROADMAP item 4 replay-safe state merge",
-    "streaming.observability": "ROADMAP item 5 decides: attach observe_stream or delete",
-    "operators.telemetry": "ROADMAP item 5 decides with streaming.observability",
     "operators.similarity.pq_train_codebooks":
         "test reference for the driver-side PQ trainer (_fit_pq_codebooks_driver)",
     "operators.similarity.pq_encode": "test reference for the map-only PQ encode",
@@ -139,16 +145,20 @@ def _import_base(node: ast.ImportFrom, package: str) -> str:
 
 
 class _Module:
-    """One parsed file: its top-level defs, its import aliases (local name
-    -> dotted target, from every import in the file), the code its
-    top-level statements run, and each def's own code."""
+    """One parsed file (from disk, or from ``source``): its syntax tree,
+    its top-level defs and classes, its import aliases (local name ->
+    dotted target, from every import in the file), the code its top-level
+    statements run, and each def's own code."""
 
-    def __init__(self, path: Path):
+    def __init__(self, path: Path, source: str | None = None):
         self.name = _module_name(path)
-        tree = ast.parse(path.read_text(), str(path))
+        self.tree = tree = ast.parse(
+            path.read_text() if source is None else source, str(path)
+        )
         package = self.name if path.name == "__init__.py" else self.name.rpartition(".")[0]
         self.aliases: dict[str, str] = {}
         self.defs: dict[str, _Code] = {}
+        self.classes = {s.name for s in tree.body if isinstance(s, ast.ClassDef)}
         top = []
         for stmt in tree.body:
             if isinstance(stmt, _DEF_TYPES):
@@ -163,11 +173,13 @@ class _Module:
 
 
 class _Graph:
-    def __init__(self):
-        self.modules = {
-            m.name: m for m in map(_Module, sorted((ROOT / PACKAGE).rglob("*.py")))
-        }
-        self.roots = [_Module(p) for p in _program_files()]
+    def __init__(self, modules=None, roots=None):
+        if modules is None:
+            modules = map(_Module, sorted((ROOT / PACKAGE).rglob("*.py")))
+        if roots is None:
+            roots = map(_Module, _program_files())
+        self.modules = {m.name: m for m in modules}
+        self.roots = list(roots)
 
     def resolve(self, dotted: str, seen: frozenset = frozenset()):
         """A dotted target -> ('mod', m) or ('def', m, n), following
@@ -339,3 +351,239 @@ def test_no_unused_package_imports():
         "imported and never used; delete the import, or mark a deliberate "
         "re-export with # noqa: F401:\n  " + "\n  ".join(unused)
     )
+
+
+# Defaulted parameters no program call passes that stay anyway.
+# ``module.def(param)`` under ``covid19_spark`` -> reason: "deployment
+# setting: ..." (a path, master URL or connection a deployment picks) or
+# "test reaches <branch>" (a cap, count or codec setting a test sets so
+# that a branch the program's inputs reach at scale runs at test size).
+KEEP_OPTIONS: dict[str, str] = {
+    "session.get_spark(master)": "deployment setting: the Spark master URL",
+    "sources.index.ensure_inverted_index(path)": "deployment setting: store path",
+    "sources.index.ensure_fielded_index(path)": "deployment setting: store path",
+    "sources.scratch.reap_stale_scratch(root)": "deployment setting: scratch root",
+    "operators.bpe.train_bpe(max_vocab_candidates)":
+        "test reaches the vocabulary cap before the driver collect",
+    "operators.dedup.ngram_jaccard_pairs(max_block)":
+        "test reaches the oversized-block drop",
+    "operators.dedup.blocked_edit_distance_pairs(max_block)":
+        "test reaches the oversized-block drop",
+    "operators.dedup.simhash_candidate_pairs(max_bucket)":
+        "test reaches the oversized-bucket drop of the Hamming probe",
+    "operators.multimodal.video_near_dup_pairs(max_bucket)":
+        "test reaches the oversized (rank, band, key) bucket drop",
+    "operators.similarity.cosine_near_dup_pairs(max_block)":
+        "test reaches the oversized-block drop",
+    "operators.similarity.cosine_near_dup_pairs(allow_full_scan)":
+        "test reaches the unblocked all-pairs scan of a small corpus",
+    "operators.similarity.pq_cosine_topk(train_sample_mod)":
+        "test reaches the hash-sampled quantizer training",
+    "operators.graph.pagerank(checkpoint_every)":
+        "test reaches the per-k-round lineage checkpoint",
+    "operators.graph.label_propagation(checkpoint_every)":
+        "test reaches the per-k-round lineage checkpoint",
+    "operators.jpeg.encode_jpeg(precision)":
+        "test reaches the 12-bit (SOF1) decode branch; ROADMAP item 9 decides 12-bit",
+    "operators.jpeg.encode_jpeg_lossless(precision)":
+        "test reaches the 12-bit lossless decode branch; ROADMAP item 9 decides 12-bit",
+    "operators.jpeg_arith.encode_jpeg_arith(precision)":
+        "test reaches the 12-bit arithmetic decode branch; ROADMAP item 9 decides 12-bit",
+    "operators.jpeg_arith.encode_jpeg_arith(subsampling)":
+        "test reaches the subsampled arithmetic decode branch",
+}
+
+_OPTION_REASON = re.compile(r"^(deployment setting: \S|test reaches \S)")
+# decorators that leave the def called by name (any other hands it to code
+# the walk does not see, like a UDF wrapper)
+_PLAIN_DECORATORS = {"staticmethod", "classmethod", "property", "lru_cache", "cache"}
+
+
+def _decorator_name(node) -> str:
+    node = node.func if isinstance(node, ast.Call) else node
+    return node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", "")
+
+
+class _Def:
+    """A package def's positional parameter names (``self``/``cls``
+    excluded, so index 0 is the first argument a caller passes) and its
+    defaulted parameters."""
+
+    def __init__(self, fn: ast.FunctionDef, is_method: bool):
+        decorators = {_decorator_name(d) for d in fn.decorator_list}
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        if is_method and "staticmethod" not in decorators:
+            positional = positional[1:]
+        self.positional = [p.arg for p in positional]
+        self.options = [p.arg for p in positional[len(positional) - len(a.defaults):]]
+        self.options += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+        self.wrapped = bool(decorators - _PLAIN_DECORATORS)
+
+
+def _package_defs(graph: _Graph) -> dict[tuple[str, str], _Def]:
+    """(module, ``f`` or ``Class.method``) -> _Def, for the top-level
+    functions and the methods of top-level classes of every package module."""
+    out = {}
+    for m in graph.modules.values():
+        for stmt in m.tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[(m.name, stmt.name)] = _Def(stmt, is_method=False)
+            elif isinstance(stmt, ast.ClassDef):
+                for fn in stmt.body:
+                    if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        out[(m.name, f"{stmt.name}.{fn.name}")] = _Def(fn, is_method=True)
+    return out
+
+
+def _named_defs(graph: _Graph, module: _Module, expr, by_method: dict) -> set:
+    """The package defs a name or attribute expression may stand for: the
+    function it resolves to (through aliases and re-exports), a resolved
+    class's ``__init__``, and, for an attribute, every package method of
+    that name."""
+    out = set()
+    dotted = None
+    if isinstance(expr, ast.Name):
+        if expr.id in module.defs and module.name in graph.modules:
+            dotted = f"{module.name}.{expr.id}"
+        elif expr.id in module.aliases:
+            dotted = module.aliases[expr.id]
+    elif isinstance(expr, ast.Attribute):
+        out |= by_method.get(expr.attr, set())
+        attrs, base = [], expr
+        while isinstance(base, ast.Attribute):
+            attrs.append(base.attr)
+            base = base.value
+        if isinstance(base, ast.Name) and base.id in module.aliases:
+            dotted = ".".join([module.aliases[base.id], *reversed(attrs)])
+    key = graph.resolve(dotted) if dotted else None
+    if key and key[0] == "def":
+        is_class = key[2] in graph.modules[key[1]].classes
+        out.add((key[1], f"{key[2]}.__init__" if is_class else key[2]))
+    return out
+
+
+def option_uses(graph: _Graph):
+    """(package defs, the (module, def, param) triples some program call
+    passes, the defs exempt from the check) over every program call: the
+    package's own code and the program roots."""
+    defs = _package_defs(graph)
+    by_method: dict[str, set] = {}
+    for mod, qual in defs:
+        if "." in qual:
+            by_method.setdefault(qual.rpartition(".")[2], set()).add((mod, qual))
+    passed: set[tuple[str, str, str]] = set()
+    exempt = {k for k, d in defs.items() if d.wrapped}
+    for module in [*graph.modules.values(), *graph.roots]:
+        called = set()
+        for node in ast.walk(module.tree):
+            if not isinstance(node, ast.Call):
+                continue
+            called.add(id(node.func))
+            forwards = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            for key in _named_defs(graph, module, node.func, by_method) & defs.keys():
+                if forwards:
+                    exempt.add(key)
+                else:
+                    names = defs[key].positional[: len(node.args)]
+                    names += [k.arg for k in node.keywords]
+                    passed |= {(*key, n) for n in names}
+        for node in ast.walk(module.tree):
+            if (
+                isinstance(node, (ast.Name, ast.Attribute))
+                and isinstance(node.ctx, ast.Load)
+                and id(node) not in called
+            ):
+                exempt |= _named_defs(graph, module, node, by_method) & defs.keys()
+    return defs, passed, exempt
+
+
+def unset_options(graph: _Graph | None = None) -> list[str]:
+    """``module.def(param)`` for each defaulted parameter of a package def
+    that no program call passes.  Defs a ``KEEP`` entry names are skipped,
+    and so is a def some program call forwards ``*args``/``**kwargs`` to or
+    some program code uses as a value (a callback, a registry entry)."""
+    graph = graph or _graph()
+    defs, passed, exempt = option_uses(graph)
+    kept = tuple(f"{PACKAGE}.{entry}" for entry in KEEP)
+    out = []
+    for (mod, qual), d in defs.items():
+        dotted = f"{mod}.{qual}"
+        if (mod, qual) in exempt or any(
+            dotted == k or dotted.startswith(k + ".") for k in kept
+        ):
+            continue
+        out += [
+            f"{dotted[len(PACKAGE) + 1:]}({name})"
+            for name in d.options
+            if (mod, qual, name) not in passed
+        ]
+    return sorted(out)
+
+
+def keep_option_faults(unset: list[str], keep: dict[str, str]) -> list[str]:
+    """``KEEP_OPTIONS`` entries whose reason is not an allowed one, or that
+    name no unset option (a program call now passes it, or it is gone)."""
+    out = []
+    for entry, reason in keep.items():
+        if not _OPTION_REASON.match(reason):
+            out.append(f"{entry}: reason {reason!r}")
+        elif entry not in unset:
+            out.append(f"{entry}: set by a program call or gone; drop it")
+    return out
+
+
+def test_every_option_has_a_program_value():
+    unset = [o for o in unset_options() if o not in KEEP_OPTIONS]
+    assert not unset, (
+        "defaulted parameters no program call passes; delete each and "
+        "inline its default, or KEEP_OPTIONS it with a reason:\n  "
+        + "\n  ".join(unset)
+    )
+
+
+def test_keep_options_are_needed_and_carry_a_reason():
+    faults = keep_option_faults(unset_options(), KEEP_OPTIONS)
+    assert not faults, "\n  ".join(["stale or unexplained KEEP_OPTIONS:", *faults])
+
+
+_SELF_TEST_SOURCE = """
+def by_keyword(x, a=1): ...
+def by_position(x, a=1): ...
+def forwarded(x, a=1): ...
+def as_value(x, a=1): ...
+def nobody(x, a=1, *, b=2): ...
+
+class Store:
+    def get(self, key, default=None): ...
+
+def program(kwargs, store):
+    by_keyword(0, a=2)
+    by_position(0, 2)
+    forwarded(0, **kwargs)
+    register(as_value)
+    nobody(0)
+    store.get("k", 3)
+"""
+
+
+def test_option_gate_self_test():
+    """The option check on a planted module: a keyword pass, a positional
+    pass (a method's ``self`` skipped) and a ``**kwargs`` forward count as
+    set, a def used as a value is exempt, an option nobody passes fails,
+    and a keep entry that names no unset option is a fault."""
+    planted = _Module(ROOT / PACKAGE / "_option_gate_probe.py", _SELF_TEST_SOURCE)
+    graph = _Graph(modules=[planted], roots=[])
+    unset = unset_options(graph)
+    assert unset == ["_option_gate_probe.nobody(a)", "_option_gate_probe.nobody(b)"]
+    keep = {
+        "_option_gate_probe.nobody(a)": "test reaches the probe",
+        "_option_gate_probe.by_keyword(a)": "test reaches the probe",
+        "_option_gate_probe.nobody(b)": "because",
+    }
+    assert keep_option_faults(unset, keep) == [
+        "_option_gate_probe.by_keyword(a): set by a program call or gone; drop it",
+        "_option_gate_probe.nobody(b): reason 'because'",
+    ]

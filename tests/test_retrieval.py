@@ -349,31 +349,6 @@ def test_bm25f_single_field_equals_plain_bm25(spark, tmp_path):
         assert fielded[d] == pytest.approx(plain[d], rel=1e-9), d
 
 
-def test_bm25f_flat_weights_b0_equals_plain_b0(spark, tmp_path):
-    """With b=0 (no length normalization) a field PARTITION of the token
-    stream at equal weights must reproduce plain BM25 at b=0: tfc
-    degenerates to Σ_f tf_f = tf."""
-    from covid19_spark.operators.retrieval import (
-        bm25_scores_from_index, bm25f_scores_from_index,
-    )
-
-    docs, fidx, uidx, _ = _bm25f_env(spark, tmp_path)
-    terms = ["spark", "hash", "join"]
-    plain = {
-        r.doc_id: r.score
-        for r in bm25_scores_from_index(spark, uidx, terms, b=0.0).collect()
-    }
-    fielded = {
-        r.doc_id: r.score
-        for r in bm25f_scores_from_index(
-            spark, fidx, terms, weights={"title": 1.0, "body": 1.0}, b=0.0
-        ).collect()
-    }
-    assert set(plain) == set(fielded)
-    for d in plain:
-        assert fielded[d] == pytest.approx(plain[d], rel=1e-9), d
-
-
 def test_bm25f_title_weight_promotes_title_hits(spark, tmp_path):
     """The point of the field weights: docs hitting in the (short,
     upweighted) title outrank body-only hitters as the title weight
@@ -597,5 +572,3 @@ def test_dismax_guards(spark, tmp_path):
         dismax_scores_from_index(
             spark, fidx, ["spark"], weights={"headline": 1.0}
         )
-
-

@@ -22,14 +22,6 @@ def test_salted_join_matches_plain_join(spark):
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
-def test_salted_left_join_keeps_unmatched(spark):
-    big = spark.createDataFrame([(1, "a", 1.0), (2, "zzz", 2.0)], ["row_id", "k", "v"])
-    small = spark.createDataFrame([("a", "A")], ["k", "label"])
-    out = salted_join(big, small, ["k"], "row_id", buckets=4, how="left").collect()
-    got = {r.row_id: r.label for r in out}
-    assert got == {1: "A", 2: None}
-
-
 def test_two_phase_agg_matches_plain(spark):
     df = spark.createDataFrame(
         [(i, "hot" if i % 5 else f"k{i}", float(i)) for i in range(500)],

@@ -41,7 +41,10 @@ def test_duplicated_spans_merge(spark, docs):
 
 
 def test_keep_first_exempts_min_doc(spark, docs):
-    spans = duplicated_spans(docs, k=4, keep_first=True).collect()
+    """The keep-one policy ``span_dedup(keep_first=True)`` strips by."""
+    from covid19_spark.operators.spans import _spans_from_grams
+
+    spans = _spans_from_grams(kgram_stream(docs, k=4), "doc_id", 4, 2, True).collect()
     got = [(r["doc_id"], r["span_start"], r["span_end"]) for r in spans]
     assert got == [(2, 3, 10)]
 
@@ -97,15 +100,22 @@ def test_detection_is_exact_for_long_duplicates(spark):
 
 
 def test_materialize_equals_lazy(spark):
-    """materialize=True must change only cache lifecycle, never results."""
-    from covid19_spark.operators.spans import duplicated_spans, span_dedup
+    """The eager evaluation (localCheckpoint + cache release) must change
+    only cache lifecycle, never the results of the lazy frame it
+    checkpoints."""
+    from covid19_spark.operators.spans import (
+        _duplicated_spans_with_handle,
+        _span_dedup_with_handle,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for fn, key in ((duplicated_spans, ["doc_id", "span_start"]), (span_dedup, ["doc_id"])):
-        lazy = sorted(
-            (tuple(r) for r in fn(docs, "doc_id", "text").collect())
-        )
-        eager = sorted(
-            (tuple(r) for r in fn(docs, "doc_id", "text", materialize=True).collect())
-        )
+    for fn, lazy_fn in (
+        (duplicated_spans, lambda d: _duplicated_spans_with_handle(d, 8, 2)),
+        (span_dedup, lambda d: _span_dedup_with_handle(d, 8, 2, True)),
+    ):
+        frame, caches = lazy_fn(docs)
+        lazy = sorted(tuple(r) for r in frame.collect())
+        for c in caches:
+            c.unpersist()
+        eager = sorted(tuple(r) for r in fn(docs).collect())
         assert lazy == eager, fn.__name__

@@ -275,7 +275,7 @@ def test_late_data_updates_old_window_within_watermark(stream_env):
         q.processAllAvailable()
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    daily = daily_window_agg(stream, "ts", ["state"], sum_cols=["delta"], watermark="2 days")
+    daily = daily_window_agg(stream, "ts", ["state"], sum_cols=["delta"])
     q = (
         daily.writeStream.format("memory")
         .queryName("late_stream")
@@ -477,7 +477,7 @@ def test_stream_stream_interval_join(stream_env):
     ]
     spark.createDataFrame(rows, EV_SCHEMA).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(EV_SCHEMA).parquet(src)
-    attributed = click_purchase_attribution(stream, attribution_window="30 minutes")
+    attributed = click_purchase_attribution(stream)
     out = run_stream_to_memory(spark, attributed, "attribution_stream", ckpt).collect()
     got = {(r.click_id, r.purchase_id): r.lag_sec for r in out}
     assert got == {(1, 2): 600}
@@ -536,13 +536,9 @@ def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
         {"state": "Assam", "ts": ts("2020-04-09T02:00:00"), "confirmed": 28.0},
     ]
     chunked = [pd.DataFrame(rows[:2]), pd.DataFrame(rows[2:])]
-    out_c, prev_c = delta_kernel(
-        chunked, [5.0], ["state"], "ts", ["confirmed"], "delta_"
-    )
+    out_c, prev_c = delta_kernel(chunked, [5.0], ["state"], "ts", ["confirmed"])
     single = [pd.DataFrame(sorted(rows, key=lambda r: r["ts"]))]
-    out_s, prev_s = delta_kernel(
-        single, [5.0], ["state"], "ts", ["confirmed"], "delta_"
-    )
+    out_s, prev_s = delta_kernel(single, [5.0], ["state"], "ts", ["confirmed"])
     assert prev_c == prev_s == [28.0]
     assert list(out_c["delta_confirmed"]) == list(out_s["delta_confirmed"]) == [
         5.0,  # 10 − 5 (state seed)
@@ -551,7 +547,7 @@ def test_delta_kernel_multichunk_unsorted_matches_single_sorted():
     ]
     assert list(out_c["ts"]) == sorted(r["ts"] for r in rows)
     # empty input: state passes through untouched, no output frame
-    out_e, prev_e = delta_kernel([], [5.0], ["state"], "ts", ["confirmed"], "delta_")
+    out_e, prev_e = delta_kernel([], [5.0], ["state"], "ts", ["confirmed"])
     assert out_e is None and prev_e == [5.0]
 
 
@@ -581,180 +577,3 @@ def test_chained_topology_equals_batch_delta_rollup(stream_env, rocksdb_state_st
         )
 
     assert rows(out) == rows(expected)
-
-
-def test_stream_stream_left_outer_join_flushes_unmatched(stream_env):
-    """Left-outer interval join: unmatched left rows must EMIT with nulls
-    once the watermark passes their join window (the unattributed-click
-    case) — not silently vanish with the state. Two files per side +
-    maxFilesPerTrigger=1 force a second micro-batch whose far-future rows
-    advance the watermark past batch 1's windows."""
-    from pyspark.sql import types as TT
-
-    from covid19_spark.streaming.joins import interval_join
-
-    spark, d, src, ckpt = stream_env
-    S = TT.StructType(
-        [
-            TT.StructField("id", TT.LongType()),
-            TT.StructField("k", TT.LongType()),
-            TT.StructField("ts", TT.TimestampType()),
-        ]
-    )
-    src_l, src_r = f"{d}/lsrc", f"{d}/rsrc"
-    spark.createDataFrame(
-        [(1, 7, ts("2024-01-01T10:00:00")), (4, 8, ts("2024-01-01T10:05:00"))], S
-    ).coalesce(1).write.parquet(f"{src_l}/f1")
-    spark.createDataFrame([(2, 7, ts("2024-01-01T10:10:00"))], S).coalesce(
-        1
-    ).write.parquet(f"{src_r}/f1")
-    # watermark flush: far-future rows on both sides (unmatched themselves)
-    spark.createDataFrame([(99, 99, ts("2024-01-02T10:00:00"))], S).coalesce(
-        1
-    ).write.parquet(f"{src_l}/f2")
-    spark.createDataFrame([(98, 98, ts("2024-01-02T10:00:00"))], S).coalesce(
-        1
-    ).write.parquet(f"{src_r}/f2")
-
-    l = (
-        spark.readStream.schema(S)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_l}/*")
-        .withColumnRenamed("id", "lid")
-    )
-    r = (
-        spark.readStream.schema(S)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_r}/*")
-        .withColumnRenamed("id", "rid")
-    )
-    j = interval_join(
-        l, r, "k", "ts", "ts",
-        max_delay="30 minutes", watermark="10 minutes", how="left_outer",
-    ).select("lid", "rid")
-    out = run_stream_to_memory(spark, j, "outer_join_stream", ckpt).collect()
-    got = sorted((row.lid, row.rid) for row in out)
-    # click 1 attributed to purchase 2; click 4 flushed unmatched;
-    # the flush rows themselves are NOT yet past the watermark -> held
-    assert got == [(1, 2), (4, None)]
-
-
-def test_stream_stream_full_outer_join_flushes_both_sides(stream_env):
-    """Full-outer interval join: watermark-expired unmatched rows emit
-    null-padded from BOTH buffers — the left-outer test's shape plus an
-    unmatched right row (a purchase with no attributable click)."""
-    from pyspark.sql import types as TT
-
-    from covid19_spark.streaming.joins import interval_join
-
-    spark, d, src, ckpt = stream_env
-    S = TT.StructType(
-        [
-            TT.StructField("id", TT.LongType()),
-            TT.StructField("k", TT.LongType()),
-            TT.StructField("ts", TT.TimestampType()),
-        ]
-    )
-    src_l, src_r = f"{d}/lsrc", f"{d}/rsrc"
-    spark.createDataFrame(
-        [(1, 7, ts("2024-01-01T10:00:00")), (4, 8, ts("2024-01-01T10:05:00"))], S
-    ).coalesce(1).write.parquet(f"{src_l}/f1")
-    spark.createDataFrame(
-        [(2, 7, ts("2024-01-01T10:10:00")), (3, 9, ts("2024-01-01T10:06:00"))], S
-    ).coalesce(1).write.parquet(f"{src_r}/f1")
-    spark.createDataFrame([(99, 99, ts("2024-01-02T10:00:00"))], S).coalesce(
-        1
-    ).write.parquet(f"{src_l}/f2")
-    spark.createDataFrame([(98, 98, ts("2024-01-02T10:00:00"))], S).coalesce(
-        1
-    ).write.parquet(f"{src_r}/f2")
-
-    l = (
-        spark.readStream.schema(S)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_l}/*")
-        .withColumnRenamed("id", "lid")
-    )
-    r = (
-        spark.readStream.schema(S)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src_r}/*")
-        .withColumnRenamed("id", "rid")
-    )
-    j = interval_join(
-        l, r, "k", "ts", "ts",
-        max_delay="30 minutes", watermark="10 minutes", how="full_outer",
-    ).select("lid", "rid")
-    out = run_stream_to_memory(spark, j, "full_outer_join_stream", ckpt).collect()
-    got = sorted(
-        ((row.lid, row.rid) for row in out),
-        key=lambda t: (t[0] is None, t),
-    )
-    # 1-2 matched; left 4 flushed null-right; right 3 flushed null-left
-    assert got == [(1, 2), (4, None), (None, 3)]
-
-
-def test_observe_metrics_and_state_store_health(stream_env):
-    """observe() metrics ride each micro-batch's progress event (n_rows,
-    event-time bounds, null-key count) and stateOperators expose the store
-    size — the reference's StateStoresManager warm-up latch + store
-    telemetry, Spark-side (VERDICT r10 stretch #8)."""
-    from covid19_spark.streaming.dedup_stream import dedup_within_watermark
-    from covid19_spark.streaming.observability import (
-        await_stores_ready,
-        observe_stream,
-        observed_history,
-        observed_metrics,
-        state_store_metrics,
-        stores_ready,
-    )
-
-    spark, d, src, ckpt = stream_env
-    import os
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    rows = [
-        (1, ts("2024-01-01T10:00:00")),
-        (1, ts("2024-01-01T10:05:00")),  # dup -> dropped by dedup, counted by observe
-        (2, ts("2024-01-01T10:10:00")),
-        (None, ts("2024-01-01T10:15:00")),  # null key -> n_null_keys
-    ]
-    os.makedirs(src)
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    observed = observe_stream(stream, "ingest", ts_col="ts", key_cols=["doc_id"])
-    q = (
-        dedup_within_watermark(observed, ["doc_id"], "ts", retention="1 hour")
-        .writeStream.format("memory")
-        .queryName("obs_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert await_stores_ready(q, timeout_sec=30) and stores_ready(q)
-        m = observed_metrics(q, "ingest")
-        assert m is not None and m["n_rows"] in (0, 4)  # trailing batch may be empty
-        hist = observed_history(q, "ingest")
-        data = [h for h in hist if h["n_rows"] > 0]
-        assert len(data) == 1 and data[0]["n_rows"] == 4
-        assert data[0]["n_null_keys"] == 1
-        # progress events serialize observed timestamps as strings
-        assert str(data[0]["min_ts"]) == "2024-01-01 10:00:00"
-        assert str(data[0]["max_ts"]) == "2024-01-01 10:15:00"
-        stores = state_store_metrics(q)
-        assert len(stores) == 1
-        # dedup state holds one row per distinct key seen (1, 2, null)
-        assert stores[0]["numRowsTotal"] == 3
-        assert stores[0]["memoryUsedBytes"] is None or stores[0]["memoryUsedBytes"] >= 0
-    finally:
-        q.stop()
-    # dedup output: null keys pass through dropDuplicates as their own key
-    out = {r.doc_id for r in spark.table("obs_dedup").collect()}
-    assert out == {1, 2, None}

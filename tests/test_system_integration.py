@@ -81,13 +81,14 @@ def test_stream_to_store_to_alert(env, rocksdb_state_store):
 
     # --- serve (T7): latest snapshot per state, cross-batch delta correct ---
     reader = StoreReader(spark, d)
-    latest = {r.state: r for r in reader._t("statewise_delta").collect()}
-    assert latest["Assam"].confirmed == 28.0
-    assert latest["Assam"].delta_confirmed == 1.0  # 28 - 27, across micro-batches
-    assert latest["Delhi"].delta_confirmed == 5.0
+    [assam] = reader.delta_stats_for_state("Assam")
+    [delhi] = reader.delta_stats_for_state("Delhi")
+    assert assam["confirmed"] == 28.0
+    assert assam["delta_confirmed"] == 1.0  # 28 - 27, across micro-batches
+    assert delhi["delta_confirmed"] == 5.0
 
     # --- fan-out (§3.3, J2/P4): only subscribed users with matching states ---
-    deltas = reader._t("statewise_delta").select(
+    deltas = spark.read.parquet(os.path.join(d, "statewise_delta")).select(
         "state", "ts", "delta_confirmed", "delta_recovered", "delta_deaths", "confirmed"
     )
     prefs = spark.createDataFrame(

@@ -63,7 +63,6 @@ def test_repetition_stats_hand_case(spark):
 
 def test_tfidf_top_terms_hand_case(spark):
     from covid19_spark.operators.text import tf_idf_top_terms
-    import pytest as _pytest
 
     docs = spark.createDataFrame(
         [(1, "apple banana apple"), (2, "banana cherry"), (3, "durian durian banana")],
@@ -78,8 +77,6 @@ def test_tfidf_top_terms_hand_case(spark):
     assert rows[(2, 1)]["term"] == "cherry"
     # doc 3: durian tf=2 df=1 -> 4.0
     assert rows[(3, 1)]["term"] == "durian" and rows[(3, 1)]["df"] == 1
-    with _pytest.raises(ValueError, match="idf_mode"):
-        tf_idf_top_terms(docs, "doc_id", "text", idf_mode="bm25")
 
 
 def test_chunk_documents_hand_case_and_coverage(spark):

@@ -60,7 +60,7 @@ def _toy(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
     labels = docs.select("doc_id", "y")
     feats = with_intercept(
-        count_features(docs, "doc_id", "text", 8), labels, "doc_id", 8, bias_cnt=2
+        count_features(docs, "doc_id", "text", 8), labels, "doc_id", 8
     )
     return docs, feats, labels
 
@@ -70,7 +70,7 @@ def test_distributed_training_equals_python_replay(spark):
     recurrence produce IDENTICAL integer weights — the reproducibility
     claim the oracle also checks cross-engine."""
     docs, feats, labels = _toy(spark)
-    w_spark = train_quantized_lr(feats, labels, "doc_id", 9, iterations=4, lr_den=8)
+    w_spark = train_quantized_lr(feats, labels, "doc_id", 9)
 
     fd = defaultdict(dict)
     for r in feats.collect():
@@ -78,7 +78,7 @@ def test_distributed_training_equals_python_replay(spark):
     y = {r.doc_id: r.y for r in labels.collect()}
     n = len(y)
     w = [0] * 9
-    for _ in range(4):
+    for _ in range(6):
         grad = [0] * 9
         for did, c in fd.items():
             z = sum(cnt * w[b] for b, cnt in c.items())
@@ -87,7 +87,7 @@ def test_distributed_training_equals_python_replay(spark):
             for b, cnt in c.items():
                 grad[b] += cnt * r
         for b in range(9):
-            w[b] -= math.floor(grad[b] / float(8 * n))
+            w[b] -= math.floor(grad[b] / float(64 * n))
     assert w_spark == w
 
 
