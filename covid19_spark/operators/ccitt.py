@@ -23,11 +23,11 @@ bit-exactly. `operators/multimodal.decode_tiff` dispatches compression 4
 (``g4_*``), 3 (``g3_*`` — EOL-framed lines, T4Options bit 0 selecting 2D
 coding with a 1D line every k-th for error resilience, RTC trailer), and
 2 (``mh_*`` — independent byte-aligned 1D rows). T.4's uncompressed-mode
-extension (T4Options bit 1, §4.2.1.3.5) is supported both ways: the
-decoders accept the 1D/2D enter codes, literal pixel patterns and exit
-tags anywhere a compliant stream may carry them, and ``g3_encode``
-escapes to literal coding per line when run coding would expand
-(``uncompressed=True``).
+extension (T4Options bit 1, §4.2.1.3.5) is supported on 1D-coded lines
+both ways: the decoders accept the 1D enter code, literal pixel patterns
+and exit tags, and ``g3_encode`` escapes to literal coding per line when
+run coding would expand (``uncompressed=True``). The 2D-line enter code
+raises NotImplementedError.
 
 Bit order is MSB-first within each byte (TIFF FillOrder 1, the default).
 """
@@ -129,7 +129,8 @@ _MODE_CODES = {
     "0000011": ("V", 3), "0000010": ("V", -3),
     "001": ("H", None), "0001": ("P", None),
     # T.4 §4.2.1.3.5 2D extension code 0000001xxx, xxx=111: enter
-    # uncompressed mode (prefix-free vs the V3 codes 0000011/0000010)
+    # uncompressed mode (prefix-free vs the V3 codes 0000011/0000010) —
+    # recognized so it is refused, not misread as a corrupt code
     "0000001111": ("U", None),
 }
 _MODE_MAX_BITS = 10
@@ -137,7 +138,6 @@ _MODE_MAX_BITS = 10
 #: 1D extension code 000000001xxx, xxx=111 — enter uncompressed mode from
 #: the 1D (MH-run) coding scheme
 _UNCOMP_ENTER_1D = "000000001111"
-_UNCOMP_ENTER_2D = "0000001111"
 
 
 class _BitWriter:
@@ -173,9 +173,6 @@ class _BitReader:
         bit = (self.data[byte] >> (7 - (self.pos & 7))) & 1
         self.pos += 1
         return bit
-
-    def exhausted(self) -> bool:
-        return (self.pos >> 3) >= len(self.data)
 
 
 def _changes(line: "np.ndarray") -> list:
@@ -264,9 +261,9 @@ def _decode_uncompressed(br: _BitReader, out_row: "np.ndarray", pos: int,
 
 def _emit_uncompressed(bw: _BitWriter, row: "np.ndarray", next_color: int) -> None:
     """Literal-code a whole line in uncompressed mode (enter code NOT
-    included — 1D and 2D use different extension codes) and exit with
-    ``next_color``. White runs longer than the 4-white headroom of the
-    pattern/exit codes chunk through the five-white code 000001."""
+    included) and exit with ``next_color``. White runs longer than the
+    4-white headroom of the pattern/exit codes chunk through the
+    five-white code 000001."""
     zeros = 0
     for px in row:
         if px:
@@ -406,9 +403,8 @@ def _decode_2d_line(br: _BitReader, out_row: "np.ndarray", ref_changes: list,
         else:
             raise ValueError("corrupt G3/G4: bad mode code")
         mode, delta = _MODE_CODES[code]
-        if mode == "U":  # 2D extension: uncompressed until its exit code
-            a0, color = _decode_uncompressed(br, out_row, max(a0, 0), width)
-            continue
+        if mode == "U":
+            raise NotImplementedError("uncompressed mode in 2D-coded lines not supported")
         b1, b2 = _b1_b2(ref_changes, a0, color, width)
         if mode == "P":
             if color:
@@ -446,16 +442,19 @@ def g3_encode(
     against the previous line; every second line is 1D (the fax error-
     resilience ladder, T.4 §4.2.2). Ends with RTC (6 EOLs).
 
-    ``uncompressed=True`` (T4Options bit 1, §4.2.1.3.5): a line whose
-    run/2D coding would be LONGER than its literal form is written in
-    uncompressed mode instead (enter extension code + pixel-pattern codes
-    + exit) — the spec's escape for noisy lines where MH coding expands.
-    Deterministic: strictly-shorter wins, ties keep normal coding."""
+    ``uncompressed=True`` (T4Options bit 1, §4.2.1.3.5; 1D coding only): a
+    line whose run coding would be LONGER than its literal form is written
+    in uncompressed mode instead (enter extension code + pixel-pattern
+    codes + exit) — the spec's escape for noisy lines where MH coding
+    expands. Deterministic: strictly-shorter wins, ties keep normal
+    coding."""
     arr = np.asarray(bitmap)
     if arr.ndim != 2:
         raise ValueError("G3 encodes 2D bilevel arrays")
     if arr.size and int(arr.max()) > 1:
         raise ValueError("G3 samples must be 0/1")
+    if two_d and uncompressed:
+        raise ValueError("uncompressed mode is written on 1D-coded G3 only")
     bw = _BitWriter()
     prev: "np.ndarray | None" = None
 
@@ -471,7 +470,7 @@ def g3_encode(
         if not uncompressed:
             return coded
         tmp2 = _BitWriter()
-        tmp2.put(_UNCOMP_ENTER_1D if one_d else _UNCOMP_ENTER_2D)
+        tmp2.put(_UNCOMP_ENTER_1D)
         _emit_uncompressed(tmp2, row, 0)
         literal = "".join(
             format(b, "08b") for b in tmp2.out

@@ -7,22 +7,20 @@ column mixes JPEG in). Everything here follows the public JPEG standard
 (ITU-T T.81): baseline sequential DCT, Huffman entropy coding, JFIF color
 space.
 
-Decoder (`decode_jpeg`): real decoder for baseline sequential (SOF0/1) AND
-progressive (SOF2) files — it reads quantization and Huffman tables from the
-stream's own DQT/DHT segments (never from the built-in constants), handles
-grayscale and 3-component scans, sampling factors 1-2 per axis (4:4:4,
-4:2:2, 4:2:0), multi-segment tables, DRI/RSTn restart intervals, and the
-full Annex G progressive feature set (spectral-selection bands,
-successive-approximation DC/AC first + refinement scans, EOB runs), and
-lossless SOF3 at the full T.81 precision range 2-16 bits (Annex H
-predictors 1-7, bit-exact incl. the mod-2^16 category-16 wrap —
-`encode_jpeg_lossless` is its round-trip twin), and 12-bit extended
-sequential SOF1 AND progressive SOF2 (uint16 output, 16-bit DQT, level
-shift 2048 — `encode_jpeg(precision=12[, progressive=True])` is the
-round-trip twin; 12-bit progressive==sequential pinned bit-exact).
-Arithmetic coding, hierarchical mode, and >2 sampling factors raise
-NotImplementedError — the documented seam where a production build plugs
-libjpeg-turbo in.
+Decoder (`decode_jpeg`): real decoder for 8-bit baseline sequential
+(SOF0/1) AND progressive (SOF2) files — it reads quantization and Huffman
+tables from the stream's own DQT/DHT segments (never from the built-in
+constants), handles grayscale and 3-component scans, sampling factors 1-2
+per axis (4:4:4, 4:2:2, 4:2:0), multi-segment tables, DRI/RSTn restart
+intervals on sequential streams, and the full Annex G progressive feature
+set (spectral-selection bands, successive-approximation DC/AC first +
+refinement scans, EOB runs) — and 3-component lossless SOF3 at 8 or 16
+bits with predictor 4 (Annex H, bit-exact incl. the mod-2^16 category-16
+wrap — `encode_jpeg_lossless` is its round-trip twin). 12-bit DCT frames,
+16-bit DQT tables, other lossless precisions, predictors and component
+counts, restart intervals in progressive streams, hierarchical mode and
+>2 sampling factors raise NotImplementedError — the documented seam where
+a production build plugs libjpeg-turbo in.
 
 Encoder (`encode_jpeg`): baseline 8-bit encoder with the Annex K example
 tables (embedded into the file via DQT/DHT, so round-trip never depends on
@@ -304,25 +302,6 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def align_and_expect_rst(self, n: int) -> None:
-        """Restart: drop partial bits, consume the RSTn marker."""
-        self.acc = 0
-        self.nbits = 0
-        if self.marker is None:
-            # marker not yet hit while filling: it must be next in the stream
-            if self.pos + 1 >= len(self.data):
-                raise ValueError("corrupt JPEG: truncated stream")
-            if self.data[self.pos] == 0xFF:
-                self.marker = self.data[self.pos + 1]
-                self.pos += 2
-        if self.marker != 0xD0 + (n % 8):
-            raise ValueError(
-                f"corrupt JPEG: expected RST{n % 8}, got {self.marker:#x}"
-                if self.marker is not None
-                else "corrupt JPEG: missing restart marker"
-            )
-        self.marker = None
-
 
 def _extend(v: int, size: int) -> int:
     """DIFF/coefficient sign extension (T.81 F.2.2.1)."""
@@ -358,9 +337,7 @@ def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
     )
 
 
-def _prepare_quantized_coefs(
-    pixels: np.ndarray, quality: int, subsampling: str, precision: int
-):
+def _prepare_quantized_coefs(pixels: np.ndarray, quality: int, subsampling: str):
     """Shared encoder front half: RGB→YCbCr (or grayscale), optional 4:2:0
     chroma averaging, MCU-grid edge padding, FDCT, quality-scaled
     quantization. Returns ``(gray, factors, qtabs, comp_coefs, h0, w0)``
@@ -369,9 +346,7 @@ def _prepare_quantized_coefs(
     and the SOF9 arithmetic twin) all consume this one representation, so
     every entropy mode of one image encodes the SAME quantized
     coefficients."""
-    if precision not in (8, 12):
-        raise ValueError(f"precision must be 8 or 12 (got {precision})")
-    center = float(1 << (precision - 1))
+    center = 128.0
     arr = np.asarray(pixels, dtype=np.float64)
     gray = arr.ndim == 2
     if subsampling not in ("444", "420"):
@@ -398,11 +373,6 @@ def _prepare_quantized_coefs(
     vmax = max(f[1] for f in factors)
 
     qtabs = [_quality_scaled(QUANT_LUMA, quality), _quality_scaled(QUANT_CHROMA, quality)]
-    if precision == 12:
-        # ×16 keeps each table's RELATIVE step at the 12-bit sample scale
-        # (samples span 16× the 8-bit range); entries stay well inside the
-        # 16-bit DQT field.
-        qtabs = [np.clip(q.astype(np.int64) * 16, 1, 65535).astype(np.int32) for q in qtabs]
     # quantized zigzag coefficients per component, as (rows, cols, 64) grids
     comp_coefs = []
     for ci, (plane, (hf, vf)) in enumerate(zip(planes, factors)):
@@ -427,7 +397,6 @@ def encode_jpeg(
     subsampling: str = "444",
     restart_interval: int = 0,
     progressive: bool = False,
-    precision: int = 8,
 ) -> bytes:
     """Encode (H, W, 3) RGB or (H, W) grayscale uint8 pixels as a baseline
     JFIF JPEG — or, with ``progressive=True``, as a progressive (SOF2)
@@ -435,43 +404,24 @@ def encode_jpeg(
     spectral-selection AC first scans, AC refinements, DC refinement) so
     every Annex G decode path has a real test vector. ``subsampling``:
     "444" (no chroma subsampling) or "420" (2x2 chroma averaging).
+    ``restart_interval`` (baseline only) writes DRI + RSTn markers.
     Deterministic for fixed inputs. Both modes produce the SAME quantized
     coefficients, so progressive and baseline encodings of one image decode
-    to bit-identical pixels.
-
-    ``precision=12`` emits a T.81 extended sequential (SOF1) 12-bit stream
-    from uint16 samples in [0, 4095]: level shift 2048, 16-bit DQT entries
-    (pq=1, base tables ×16 to keep relative quality), and fixed-length
-    Huffman tables covering the wider magnitude categories (DC SSSS 0-16,
-    AC 1-14 — Annex K's 8-bit tables stop at 11/10). 12-bit applies to both
-    output modes: ``progressive=True`` emits a 12-bit SOF2 stream (the
-    precision threads into the same scan script)."""
+    to bit-identical pixels."""
     gray, factors, qtabs, comp_coefs, h0, w0 = _prepare_quantized_coefs(
-        pixels, quality, subsampling, precision
+        pixels, quality, subsampling
     )
 
     if progressive:
-        return _encode_progressive(
-            h0, w0, gray, factors, qtabs, comp_coefs, restart_interval, precision
-        )
+        if restart_interval:
+            raise ValueError("restart intervals are written for baseline streams only")
+        return _encode_progressive(h0, w0, gray, factors, qtabs, comp_coefs)
     planes_n = 1 if gray else 3
 
-    if precision == 12:
-        # one fixed-length DC and AC table shared by every component: the
-        # 12-bit magnitude categories (DC SSSS ≤ 16, AC size ≤ 14) overflow
-        # Annex K's 8-bit tables, and a data-independent legal table keeps
-        # the encoder deterministic without a symbol-frequency pass.
-        dc_spec12 = _fixed_length_table(list(range(17)))
-        ac_spec12 = _fixed_length_table(
-            [0x00, 0xF0] + [(r << 4) | s for r in range(16) for s in range(1, 15)]
-        )
-        dc_codes = [_build_huffman_codes(*dc_spec12)] * 2
-        ac_codes = [_build_huffman_codes(*ac_spec12)] * 2
-    else:
-        dc_codes = [_build_huffman_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-                    _build_huffman_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)]
-        ac_codes = [_build_huffman_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-                    _build_huffman_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)]
+    dc_codes = [_build_huffman_codes(DC_LUMA_BITS, DC_LUMA_VALS),
+                _build_huffman_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)]
+    ac_codes = [_build_huffman_codes(AC_LUMA_BITS, AC_LUMA_VALS),
+                _build_huffman_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)]
 
     bw = _BitWriter()
     pred = [0] * planes_n
@@ -524,29 +474,17 @@ def encode_jpeg(
     out = bytearray(b"\xff\xd8")  # SOI
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     for tid, q in enumerate(qtabs[: 1 if gray else 2]):
-        if precision == 12:
-            out += seg(
-                0xFFDB,
-                bytes([0x10 | tid])
-                + b"".join(struct.pack(">H", int(x)) for x in q[ZIGZAG]),
-            )
-        else:
-            out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
+        out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
     ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", precision, h0, w0, ncomp)
+    sof = struct.pack(">BHHB", 8, h0, w0, ncomp)
     for ci in range(ncomp):
         hf, vf = factors[ci]
         sof += bytes([ci + 1, (hf << 4) | vf, 0 if ci == 0 else 1])
-    out += seg(0xFFC0 if precision == 8 else 0xFFC1, sof)
+    out += seg(0xFFC0, sof)
     dht = b""
-    if precision == 12:
-        specs = [(0x00, *dc_spec12), (0x10, *ac_spec12)]
-        if not gray:
-            specs += [(0x01, *dc_spec12), (0x11, *ac_spec12)]
-    else:
-        specs = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS), (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
-        if not gray:
-            specs += [(0x01, DC_CHROMA_BITS, DC_CHROMA_VALS), (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS)]
+    specs = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS), (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
+    if not gray:
+        specs += [(0x01, DC_CHROMA_BITS, DC_CHROMA_VALS), (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS)]
     for tc, bits, vals in specs:
         dht += bytes([tc]) + bytes(bits) + bytes(vals)
     out += seg(0xFFC4, dht)
@@ -581,15 +519,12 @@ def _fixed_length_table(symbols: list[int]) -> tuple[list[int], list[int]]:
     return bits, syms
 
 
-def _ac_scan_entropy(
-    grid, bh_n, bw_n, ss, se, ah, al, tkey,
-    restart_interval, emit_symbol, emit_bits, do_restart,
-):
+def _ac_scan_entropy(grid, bh_n, bw_n, ss, se, ah, al, tkey, emit_symbol, emit_bits):
     """Entropy-code one AC scan (first pass Ah=0 or refinement Ah>0) over a
-    component's real (non-padding) block grid, with EOB-run accumulation and
-    restart support. ``emit_symbol``/``emit_bits``/``do_restart`` abstract
-    the output so the same logic runs the symbol-collection pass (building
-    the scan's Huffman table) and the real bit-writing pass."""
+    component's real (non-padding) block grid, with EOB-run accumulation.
+    ``emit_symbol``/``emit_bits`` abstract the output so the same logic
+    runs the symbol-collection pass (building the scan's Huffman table) and
+    the real bit-writing pass."""
     eobrun = 0
     pending: list[int] = []  # refinement correction bits deferred behind an EOB run
 
@@ -605,12 +540,8 @@ def _ac_scan_entropy(
             emit_bits(b, 1)
         pending = []
 
-    unit = 0
     for by in range(bh_n):
         for bx in range(bw_n):
-            if restart_interval and unit and unit % restart_interval == 0:
-                flush()
-                do_restart(unit // restart_interval - 1)
             zz = grid[by, bx]
             if ah == 0:  # AC first: values scaled by 2^al, EOBn runs
                 r = 0
@@ -671,24 +602,18 @@ def _ac_scan_entropy(
                     pending.extend(br_bits)
                     if eobrun == 0x7FFF or len(pending) > 900:
                         flush()
-            unit += 1
     flush()
 
 
 def _dc_scan_entropy(
-    comp_idx, comp_coefs, factors, mcus_x, mcus_y, ah, al,
-    restart_interval, emit_symbol, emit_bits, do_restart,
+    comp_idx, comp_coefs, factors, mcus_x, mcus_y, ah, al, emit_symbol, emit_bits,
 ):
     """Entropy-code one (possibly interleaved) DC scan: first pass = DPCM of
     the point-transformed (arithmetic >> Al) DC values, refinement = one raw
     bit per block revealing bit Al."""
     pred = {ci: 0 for ci in comp_idx}
-    unit = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
-            if restart_interval and unit and unit % restart_interval == 0:
-                do_restart(unit // restart_interval - 1)
-                pred = {ci: 0 for ci in comp_idx}
             for ci in comp_idx:
                 hf, vf = factors[ci]
                 for by in range(vf):
@@ -704,19 +629,15 @@ def _dc_scan_entropy(
                                 emit_bits(diff if diff >= 0 else diff + (1 << s) - 1, s)
                         else:
                             emit_bits((dc >> al) & 1, 1)
-            unit += 1
 
 
-def _encode_progressive(
-    h0, w0, gray, factors, qtabs, comp_coefs, restart_interval, precision=8
-) -> bytes:
+def _encode_progressive(h0, w0, gray, factors, qtabs, comp_coefs) -> bytes:
     """Assemble a progressive JFIF stream from the quantized coefficient
     grids: SOF2 + per-scan DHT/SOS. Scan script (libjpeg-shaped): DC first
     (all components, Al=1), spectral-selection AC first scans at Al=1, AC
-    refinements to Al=0, DC refinement. Each scan carries its own Huffman
-    table(s), built from that scan's actual symbol set — which is also why
-    12-bit needs no special tables here: the wider magnitude categories
-    simply appear in the derived per-scan sets."""
+    refinements to Al=0, DC refinement; a grayscale image keeps the luma
+    scans. Each scan carries its own Huffman table(s), built from that
+    scan's actual symbol set."""
     ncomp = 1 if gray else 3
     hmax = max(f[0] for f in factors)
     vmax = max(f[1] for f in factors)
@@ -730,22 +651,18 @@ def _encode_progressive(
         real_blocks.append((-(-comp_h // 8), -(-comp_w // 8)))
 
     all_idx = list(range(ncomp))
-    if gray:
-        scans = [
-            (all_idx, 0, 0, 0, 1),
-            ([0], 1, 5, 0, 1), ([0], 6, 63, 0, 1),
-            ([0], 1, 5, 1, 0), ([0], 6, 63, 1, 0),
-            (all_idx, 0, 0, 1, 0),
-        ]
-    else:
-        scans = [
+    scans = [
+        scan
+        for scan in (
             (all_idx, 0, 0, 0, 1),
             ([0], 1, 5, 0, 1), ([0], 6, 63, 0, 1),
             ([1], 1, 63, 0, 1), ([2], 1, 63, 0, 1),
             ([0], 1, 5, 1, 0), ([0], 6, 63, 1, 0),
             ([1], 1, 63, 1, 0), ([2], 1, 63, 1, 0),
             (all_idx, 0, 0, 1, 0),
-        ]
+        )
+        if scan[0][0] < ncomp  # grayscale: the luma scans only
+    ]
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
@@ -753,38 +670,28 @@ def _encode_progressive(
     out = bytearray(b"\xff\xd8")
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     for tid, q in enumerate(qtabs[: 1 if gray else 2]):
-        if precision == 12:
-            out += seg(
-                0xFFDB,
-                bytes([0x10 | tid])
-                + b"".join(struct.pack(">H", int(x)) for x in q[ZIGZAG]),
-            )
-        else:
-            out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
-    sof = struct.pack(">BHHB", precision, h0, w0, ncomp)
+        out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
+    sof = struct.pack(">BHHB", 8, h0, w0, ncomp)
     for ci in range(ncomp):
         hf, vf = factors[ci]
         sof += bytes([ci + 1, (hf << 4) | vf, 0 if ci == 0 else 1])
     out += seg(0xFFC2, sof)
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
 
     for scan_def in scans:
         comp_idx, ss, se, ah, al = scan_def
 
-        def run(emit_symbol, emit_bits, do_restart):
+        def run(emit_symbol, emit_bits):
             if ss == 0:
                 _dc_scan_entropy(
                     comp_idx, comp_coefs, factors, mcus_x, mcus_y, ah, al,
-                    restart_interval, emit_symbol, emit_bits, do_restart,
+                    emit_symbol, emit_bits,
                 )
             else:
                 ci = comp_idx[0]
                 bh_n, bw_n = real_blocks[ci]
                 _ac_scan_entropy(
                     comp_coefs[ci], bh_n, bw_n, ss, se, ah, al,
-                    ("ac", 0 if ci == 0 else 1),
-                    restart_interval, emit_symbol, emit_bits, do_restart,
+                    ("ac", 0 if ci == 0 else 1), emit_symbol, emit_bits,
                 )
 
         # pass 1: collect the symbols this scan actually emits
@@ -792,7 +699,6 @@ def _encode_progressive(
         run(
             lambda key, sym: recorded.setdefault(key, []).append(sym),
             lambda v, n: None,
-            lambda n: None,
         )
         tables = {}
         dht = b""
@@ -812,7 +718,7 @@ def _encode_progressive(
             code, ln = tables[key][sym]
             bw.write(code, ln)
 
-        run(emit_symbol, bw.write, bw.restart)
+        run(emit_symbol, bw.write)
         entropy = bw.flush()
 
         sos = bytes([len(comp_idx)])
@@ -828,49 +734,47 @@ def _encode_progressive(
 # --- decoder -----------------------------------------------------------------
 
 
+def _check_frame(marker: int, prec: int) -> None:
+    """Refuse the SOF variants behind the codec seam: hierarchical and
+    arithmetic progressive/lossless frames, and any precision but 8 bits
+    (16 for lossless SOF3, T.81 Table B.2)."""
+    if marker in _UNSUPPORTED_SOF:
+        raise NotImplementedError(
+            "only sequential/progressive/lossless Huffman JPEG supported "
+            f"(got SOF marker {marker:#x})"
+        )
+    if not (prec == 8 or (prec == 16 and marker == 0xC3)):
+        raise NotImplementedError(f"{prec}-bit precision not supported")
+
+
 def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
-    """Decode a baseline/extended sequential, progressive, or lossless
-    (SOF0/1/2/3) JPEG to (H, W, 3) RGB — uint8 for 8-bit frames, uint16
-    for 12-bit extended sequential (SOF1, T.81 Table B.2: level shift
-    2^(P-1), 16-bit DQT, wider magnitude categories; grayscale replicated
-    to 3 channels). Tables come from the stream's own DQT/DHT; supports
-    1- or 3-component scans, sampling factors 1-2, DRI restarts, and for
-    progressive streams the full Annex G Huffman feature set:
-    spectral-selection bands, successive-approximation DC/AC
-    first+refinement scans, EOB runs. 12-bit applies to progressive
-    (SOF2) frames too; lossless (SOF3) takes the full 2-16 bit range.
-    Raises NotImplementedError on arithmetic-coded/hierarchical variants.
+    """Decode an 8-bit sequential (Huffman SOF0/1 or arithmetic SOF9),
+    progressive (SOF2), or 8/16-bit lossless (SOF3) JPEG to (H, W, 3) RGB —
+    uint8, or uint16 for 16-bit lossless; grayscale replicated to 3
+    channels. Tables come from the stream's own DQT/DHT; supports 1- or
+    3-component scans, sampling factors 1-2, DRI restarts on sequential
+    streams, and for progressive streams the full Annex G Huffman feature
+    set: spectral-selection bands, successive-approximation DC/AC
+    first+refinement scans, EOB runs. Raises NotImplementedError on the
+    variants listed in the module docstring.
 
     ``dc_only=True`` returns the 1/8-scale block-mean image instead —
-    (ceil(H/8), ceil(W/8), 3) uint8 — decoding only DC coefficients on the
-    baseline path (see ``decode_jpeg_dc``); progressive streams fall back
-    to a full decode + 8x8 block means (their DC scan alone is a valid
-    image, but refinement scans shift DC magnitudes, so the honest
-    equivalent is the assembled image's block means)."""
+    (ceil(H/8), ceil(W/8), 3) uint8 — decoding only DC coefficients (see
+    ``decode_jpeg_dc``); it takes sequential Huffman streams only."""
     if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     # Seam rejection at sniff cost (VERDICT r06 task #8): arithmetic-coded/
-    # hierarchical SOFs and non-8-bit precision are identified by a marker
-    # walk BEFORE any DQT/DHT parsing — a stream whose tables precede its
-    # SOF otherwise pays full Huffman-LUT construction just to be refused.
-    # Malformed headers fall through so the main walk reports its precise
-    # corrupt-stream errors.
+    # hierarchical SOFs and unsupported precisions are identified by a
+    # marker walk BEFORE any DQT/DHT parsing — a stream whose tables precede
+    # its SOF otherwise pays full Huffman-LUT construction just to be
+    # refused. Malformed headers fall through so the main walk reports its
+    # precise corrupt-stream errors.
     try:
         _sof_marker, _sof_prec, _, _ = sniff_jpeg_frame(payload)
     except ValueError:
         pass
     else:
-        if _sof_marker in _UNSUPPORTED_SOF:
-            raise NotImplementedError(
-                "only sequential/progressive/lossless Huffman JPEG supported "
-                f"(got SOF marker {_sof_marker:#x})"
-            )
-        if not (
-            _sof_prec == 8
-            or (_sof_prec == 12 and _sof_marker in (0xC1, 0xC2, 0xC9))
-            or (2 <= _sof_prec <= 16 and _sof_marker == 0xC3)
-        ):
-            raise NotImplementedError(f"{_sof_prec}-bit precision not supported")
+        _check_frame(_sof_marker, _sof_prec)
     pos = 2
     qtabs: dict[int, np.ndarray] = {}
     huff_dc: dict[int, _HuffDecoder] = {}
@@ -910,19 +814,13 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                 pq, tq = body[b] >> 4, body[b] & 0x0F
                 if pq not in (0, 1):
                     raise ValueError(f"corrupt JPEG: invalid DQT precision {pq}")
-                # pq=1: 16-bit big-endian table entries — some encoders emit
-                # these even for 8-bit images (T.81 B.2.4.1)
-                width = 2 if pq else 1
-                if b + 1 + 64 * width > len(body):
-                    raise ValueError("corrupt JPEG: truncated stream")
                 if pq:
-                    tab = (
-                        np.frombuffer(body, ">u2", 64, b + 1).astype(np.int32)
-                    )
-                else:
-                    tab = np.frombuffer(body, np.uint8, 64, b + 1).astype(np.int32)
+                    raise NotImplementedError("16-bit DQT tables not supported")
+                if b + 65 > len(body):
+                    raise ValueError("corrupt JPEG: truncated stream")
+                tab = np.frombuffer(body, np.uint8, 64, b + 1).astype(np.int32)
                 qtabs[tq] = tab[UNZIGZAG].reshape(8, 8)
-                b += 1 + 64 * width
+                b += 65
         elif marker == 0xC4:  # DHT
             b = 0
             while b < len(body):
@@ -943,15 +841,11 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
             prec, h0, w0, ncomp = struct.unpack_from(">BHHB", body, 0)
             if len(body) < 6 + 3 * ncomp:
                 raise ValueError("corrupt JPEG: truncated stream")
-            # Per T.81 Table B.2: DCT paths take P=8 everywhere and P=12 in
-            # extended sequential (SOF1) and progressive (SOF2); lossless
-            # (SOF3) takes the full P=2..16 range.
-            if not (
-                prec == 8
-                or (prec == 12 and marker in (0xC1, 0xC2, 0xC9))
-                or (2 <= prec <= 16 and marker == 0xC3)
-            ):
-                raise NotImplementedError(f"{prec}-bit precision not supported")
+            _check_frame(marker, prec)
+            if dc_only and marker not in (0xC0, 0xC1):
+                raise NotImplementedError(
+                    "DC-only decode takes sequential Huffman JPEG only"
+                )
             comps = []
             for i in range(ncomp):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
@@ -1012,6 +906,14 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                     raise ValueError(
                         f"corrupt JPEG: invalid lossless predictor {pred_sel}"
                     )
+                if pred_sel != 4:
+                    raise NotImplementedError(
+                        f"lossless predictor {pred_sel} not supported (only 4)"
+                    )
+                if ns != 3:
+                    raise NotImplementedError(
+                        f"{ns}-component lossless JPEG not supported"
+                    )
                 if pt != 0:
                     raise NotImplementedError(
                         "lossless point transform (Al != 0) not supported"
@@ -1020,20 +922,9 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                     raise NotImplementedError(
                         "restart markers in lossless JPEG not supported"
                     )
-                img = _decode_lossless_scan(data, pos, frame, scan, huff_dc, pred_sel)
-                if dc_only:
-                    imgf = img.astype(np.float64)
-                    hh, ww = imgf.shape[:2]
-                    ph, pw = -(-hh // 8) * 8, -(-ww // 8) * 8
-                    imgf = np.pad(
-                        imgf, ((0, ph - hh), (0, pw - ww), (0, 0)), mode="edge"
-                    )
-                    bm = imgf.reshape(ph // 8, 8, pw // 8, 8, 3).mean(axis=(1, 3))
-                    return np.clip(bm, 0, 255).astype(np.uint8)
-                return img
+                return _decode_lossless_scan(data, pos, frame, scan, huff_dc)
             if arith:
                 from covid19_spark.operators.jpeg_arith import (
-                    ALLOW_FOREIGN_SOF9,
                     SOF9_SELF_SIGNATURE,
                     _decode_arith_scan,
                 )
@@ -1043,17 +934,14 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                 # SOF9 stream could mis-decode silently if its writer used
                 # a different subinterval-ordering/byte-feed convention.
                 # Our encoder stamps a COM signature into the header; an
-                # unsigned stream fails loudly unless the documented
-                # module flag opts in.
+                # unsigned stream fails loudly.
                 sig = struct.pack(
                     ">HH", 0xFFFE, len(SOF9_SELF_SIGNATURE) + 2
                 ) + SOF9_SELF_SIGNATURE
-                if not ALLOW_FOREIGN_SOF9 and sig not in data[:pos]:
+                if sig not in data[:pos]:
                     raise NotImplementedError(
                         "third-party arithmetic-coded JPEG (SOF9): "
-                        "cross-library interop unverified; set "
-                        "jpeg_arith.ALLOW_FOREIGN_SOF9 = True after "
-                        "differential testing against jdarith"
+                        "cross-library interop unverified against jdarith"
                     )
                 # Strictness guard: a truncated arithmetic scan cannot be
                 # detected from the coder itself (the byte feed pads with
@@ -1063,31 +951,18 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                 # stuffing), so finding EOI in the remaining bytes is exact.
                 if b"\xff\xd9" not in data[pos:]:
                     raise ValueError("corrupt JPEG: truncated stream")
-                img = _decode_arith_scan(
+                return _decode_arith_scan(
                     data, pos, frame, scan, qtabs, dc_cond, ac_cond,
                     restart_interval,
                 )
-                if dc_only:
-                    # same honest fallback as progressive: assembled image's
-                    # 8x8 block means (adaptive contexts give no cheap
-                    # DC-only walk — every AC decision must be decoded)
-                    prec_ = frame.get("prec", 8)
-                    maxv = (1 << prec_) - 1
-                    imgf = img.astype(np.float64)
-                    hh, ww = imgf.shape[:2]
-                    ph, pw = -(-hh // 8) * 8, -(-ww // 8) * 8
-                    imgf = np.pad(
-                        imgf, ((0, ph - hh), (0, pw - ww), (0, 0)), mode="edge"
-                    )
-                    bm = imgf.reshape(ph // 8, 8, pw // 8, 8, 3).mean(axis=(1, 3))
-                    return np.clip(bm, 0, maxv).astype(
-                        np.uint8 if prec_ == 8 else np.uint16
-                    )
-                return img
             if not progressive:
                 return _decode_scan(
                     data, pos, frame, scan, qtabs, huff_dc, huff_ac,
                     restart_interval, dc_only=dc_only,
+                )
+            if restart_interval:
+                raise NotImplementedError(
+                    "restart markers in progressive JPEG not supported"
                 )
             if len(body) < 1 + 2 * ns + 3:
                 raise ValueError("corrupt JPEG: truncated stream")
@@ -1103,25 +978,8 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
                 }
             pos = _decode_progressive_scan(
                 data, pos, frame, scan, grids, huff_dc, huff_ac,
-                restart_interval, ss, se, ahal >> 4, ahal & 0x0F,
+                ss, se, ahal >> 4, ahal & 0x0F,
             )
-    if progressive and grids is not None and dc_only:
-        if not saw_eoi:
-            raise ValueError("corrupt JPEG: truncated stream")
-        comps = frame["comps"]
-        prec = frame.get("prec", 8)
-        maxv = (1 << prec) - 1
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        img = _idct_and_assemble(
-            frame["h"], frame["w"], comps,
-            [grids[c["id"]] for c in comps], qtabs, hmax, vmax, prec,
-        ).astype(np.float64)
-        h0, w0 = img.shape[:2]
-        ph, pw = -(-h0 // 8) * 8, -(-w0 // 8) * 8
-        img = np.pad(img, ((0, ph - h0), (0, pw - w0), (0, 0)), mode="edge")
-        bm = img.reshape(ph // 8, 8, pw // 8, 8, 3).mean(axis=(1, 3))
-        return np.clip(bm, 0, maxv).astype(np.uint8 if prec == 8 else np.uint16)
     if progressive and grids is not None:
         # Strict contract: a progressive stream cut off between scans is
         # truncated data, not a smaller-but-valid image (a lenient viewer
@@ -1135,54 +993,40 @@ def decode_jpeg(payload: bytes, dc_only: bool = False) -> np.ndarray:
         return _idct_and_assemble(
             frame["h"], frame["w"], comps,
             [grids[c["id"]] for c in comps], qtabs, hmax, vmax,
-            frame.get("prec", 8),
         )
     raise ValueError("corrupt JPEG: no SOS marker")
 
 
-def _lossless_predict(plane, y: int, x: int, predictor: int, default: int = 128) -> int:
-    """T.81 H.1 sample prediction, shared verbatim by the SOF3 encoder and
-    decoder so round-trips are exact by construction: the scan's first
-    sample predicts 2^(P-1) (``default``), the rest of the first line
-    predicts Ra (left), the first column predicts Rb (above), and interior
-    samples use the selected predictor 1-7."""
+def _lossless_predict(plane, y: int, x: int, default: int) -> int:
+    """T.81 H.1 sample prediction with selector 4 (Ra + Rb - Rc), shared
+    verbatim by the SOF3 encoder and decoder so round-trips are exact by
+    construction: the scan's first sample predicts 2^(P-1) (``default``),
+    the rest of the first line predicts Ra (left), the first column
+    predicts Rb (above)."""
     if y == 0 and x == 0:
         return default
     if y == 0:
         return int(plane[0, x - 1])
     if x == 0:
         return int(plane[y - 1, 0])
-    ra, rb, rc = int(plane[y, x - 1]), int(plane[y - 1, x]), int(plane[y - 1, x - 1])
-    if predictor == 1:
-        return ra
-    if predictor == 2:
-        return rb
-    if predictor == 3:
-        return rc
-    if predictor == 4:
-        return ra + rb - rc
-    if predictor == 5:
-        return ra + ((rb - rc) >> 1)
-    if predictor == 6:
-        return rb + ((ra - rc) >> 1)
-    return (ra + rb) >> 1  # predictor 7
+    return int(plane[y, x - 1]) + int(plane[y - 1, x]) - int(plane[y - 1, x - 1])
 
 
-def _decode_lossless_scan(data, pos, frame, scan, huff_dc, predictor):
-    """SOF3 lossless scan (T.81 Annex H, Huffman): per raster sample, a
-    DC-style Huffman category + magnitude bits gives the prediction
-    difference; reconstruction is (prediction + diff) mod 2^16. Components
-    are interleaved one sample per MCU (sampling factors pinned 1x1 at the
-    SOF parse). Rides the same 16-bit-LUT reader as the baseline path.
-    Precision P is 2-16 (T.81 Table B.2 lossless range): the first sample
-    predicts 2^(P-1), samples clamp to 2^P - 1. Output: (H, W, 3) — uint8
-    for P <= 8, uint16 above — 1 component replicated to gray, 3 components
-    taken as direct RGB (lossless JPEG carries no color transform)."""
+def _decode_lossless_scan(data, pos, frame, scan, huff_dc):
+    """SOF3 lossless scan (T.81 Annex H, Huffman, predictor 4): per raster
+    sample, a DC-style Huffman category + magnitude bits gives the
+    prediction difference; reconstruction is (prediction + diff) mod 2^16.
+    The three components are interleaved one sample per MCU (sampling
+    factors pinned 1x1 at the SOF parse). Rides the same 16-bit-LUT reader
+    as the baseline path. Precision P is 8 or 16: the first sample
+    predicts 2^(P-1), samples clamp to 2^P - 1. Output: (H, W, 3) direct
+    RGB (lossless JPEG carries no color transform) — uint8 for P = 8,
+    uint16 for P = 16."""
     h0, w0 = frame["h"], frame["w"]
-    prec = frame.get("prec", 8)
+    prec = frame["prec"]
     default = 1 << (prec - 1)
     maxv = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
+    dtype = np.uint8 if prec == 8 else np.uint16
     ncomp = len(scan)
     planes = [np.zeros((h0, w0), dtype=np.int32) for _ in range(ncomp)]
     luts = [_huff_lut(*huff_dc[td].spec) for _, td, _ta in scan]
@@ -1240,56 +1084,41 @@ def _decode_lossless_scan(data, pos, frame, scan, huff_dc, predictor):
                         diff += 1 - (1 << s)
                 else:
                     diff = 0
-                px = _lossless_predict(planes[ci], y, x, predictor, default)
+                px = _lossless_predict(planes[ci], y, x, default)
                 planes[ci][y, x] = (px + diff) & 0xFFFF
-    out = [np.clip(p, 0, maxv).astype(dtype) for p in planes]
-    if ncomp == 1:
-        return np.repeat(out[0][:, :, None], 3, axis=2)
-    if ncomp == 3:
-        return np.stack(out, axis=2)
-    raise NotImplementedError(f"{ncomp}-component lossless JPEG not supported")
+    return np.stack([np.clip(p, 0, maxv).astype(dtype) for p in planes], axis=2)
 
 
-def encode_jpeg_lossless(
-    pixels: np.ndarray, predictor: int = 4, precision: int | None = None
-) -> bytes:
-    """Encode (H, W) grayscale or (H, W, 3) RGB pixels as a lossless SOF3
-    JPEG (T.81 Annex H): per-sample prediction differences, DC-style
-    Huffman categories, components interleaved one sample per MCU, NO
-    color transform or subsampling. Round-trips bit-exactly through
-    ``decode_jpeg`` by construction (shared ``_lossless_predict``).
+def encode_jpeg_lossless(pixels: np.ndarray) -> bytes:
+    """Encode (H, W, 3) RGB pixels as a lossless SOF3 JPEG (T.81 Annex H):
+    predictor 4 prediction differences, DC-style Huffman categories,
+    components interleaved one sample per MCU, NO color transform or
+    subsampling. Round-trips bit-exactly through ``decode_jpeg`` by
+    construction (shared ``_lossless_predict``).
 
-    ``precision`` defaults to 8 for uint8 input and 16 for anything wider;
-    any P in 2..16 is accepted (samples must fit in P bits — the DICOM
-    12/16-bit family). P > 8 switches to a fixed-length category table
-    (Annex K's stops at 11) and mod-2^16 difference coding with the
-    category-16 no-extra-bits case (H.2) for the ±32768 wrap."""
-    if predictor < 1 or predictor > 7:
-        raise ValueError(f"invalid lossless predictor {predictor}")
+    The precision follows the input dtype: 8 bits for uint8, 16 for
+    uint16. 16-bit switches to a fixed-length category table (Annex K's
+    stops at 11) and mod-2^16 difference coding with the category-16
+    no-extra-bits case (H.2) for the ±32768 wrap."""
     arr = np.asarray(pixels)
+    precision = {np.dtype(np.uint8): 8, np.dtype(np.uint16): 16}.get(arr.dtype)
     if precision is None:
-        precision = 8 if arr.dtype == np.uint8 else 16
-    if not 2 <= precision <= 16:
-        raise ValueError(f"precision must be in 2..16 (got {precision})")
-    if arr.max(initial=0) > (1 << precision) - 1:
-        raise ValueError(f"samples exceed {precision}-bit range")
+        raise ValueError(f"lossless JPEG takes uint8 or uint16 pixels (got {arr.dtype})")
+    if arr.ndim != 3 or arr.shape[2] != 3:
+        raise ValueError(f"lossless JPEG takes (H, W, 3) pixels (got {arr.shape})")
     default = 1 << (precision - 1)
-    gray = arr.ndim == 2
-    arr3 = arr[:, :, None] if gray else arr
-    h, w, ncomp = arr3.shape
-    if ncomp not in (1, 3):
-        raise ValueError(f"unsupported channel count {ncomp}")
-    if precision <= 8:
+    h, w, ncomp = arr.shape
+    if precision == 8:
         dc_spec = (DC_LUMA_BITS, DC_LUMA_VALS)
     else:
         dc_spec = _fixed_length_table(list(range(17)))
     codes = _build_huffman_codes(*dc_spec)
     bw = _BitWriter()
-    planes = [arr3[:, :, c].astype(np.int32) for c in range(ncomp)]
+    planes = [arr[:, :, c].astype(np.int32) for c in range(ncomp)]
     for y in range(h):
         for x in range(w):
             for ci in range(ncomp):
-                px = _lossless_predict(planes[ci], y, x, predictor, default)
+                px = _lossless_predict(planes[ci], y, x, default)
                 # T.81 H.1.2.1: differences are mod 2^16 — fold into
                 # [-32768, 32767]; the -32768 case is category 16 with no
                 # extra bits (decoder adds +32768 ≡ -32768 mod 2^16)
@@ -1322,7 +1151,7 @@ def encode_jpeg_lossless(
         0xDA,
         bytes([ncomp])
         + b"".join(bytes([1 + c, 0x00]) for c in range(ncomp))
-        + bytes([predictor, 0, 0]),  # Ss=predictor, Se=0, AhAl=0
+        + bytes([4, 0, 0]),  # Ss=predictor 4, Se=0, AhAl=0
     )
     return b"\xff\xd8" + dht + sof + sos + entropy + b"\xff\xd9"
 
@@ -1530,56 +1359,49 @@ def _decode_scan(
                             k += 1
             mcu_count += 1
     comps = [comp for comp, _, _ in scan]
-    prec = frame.get("prec", 8)
     if dc_only:
-        return _dc_assemble(h0, w0, comps, dc_grids, qtabs, hmax, vmax, prec)
-    return _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax, prec)
+        return _dc_assemble(h0, w0, comps, dc_grids, qtabs, hmax, vmax)
+    return _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax)
 
 
-def _planes_to_rgb(planes, prec):
-    """Shared colour tail: grayscale replication or YCbCr→RGB at the frame's
-    sample precision — centre 2^(P-1), clamp to 2^P - 1, uint8 for 8-bit
-    frames and uint16 for 12-bit (T.81 extended sequential)."""
-    center = float(1 << (prec - 1))
-    maxv = (1 << prec) - 1
-    dtype = np.uint8 if prec == 8 else np.uint16
+def _planes_to_rgb(planes):
+    """Shared colour tail of the 8-bit DCT paths: grayscale replication or
+    YCbCr→RGB — centre 128, clamp to 255, uint8."""
     if len(planes) == 1:
-        y = np.clip(planes[0], 0, maxv).astype(dtype)
+        y = np.clip(planes[0], 0, 255).astype(np.uint8)
         return np.repeat(y[:, :, None], 3, axis=2)
     y, cb, cr = planes
-    r = y + 1.402 * (cr - center)
-    g = y - 0.344136 * (cb - center) - 0.714136 * (cr - center)
-    b = y + 1.772 * (cb - center)
-    return np.clip(np.stack([r, g, b], axis=2), 0, maxv).astype(dtype)
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    return np.clip(np.stack([r, g, b], axis=2), 0, 255).astype(np.uint8)
 
 
-def _dc_assemble(h0, w0, comps, dc_grids, qtabs, hmax, vmax, prec=8):
+def _dc_assemble(h0, w0, comps, dc_grids, qtabs, hmax, vmax):
     """Assemble the 1/8-scale block-mean image from DC coefficients: the
     IDCT of a DC-only block is the constant ``dc * q0 / 8`` (orthonormal
     basis), so dequantizing ONE coefficient per block replaces dequant +
     IDCT + full-res upsampling + full-res color transform. Chroma DC grids
     upsample by block replication; output is (ceil(H/8), ceil(W/8), 3)
-    RGB at the frame precision's dtype."""
+    uint8 RGB."""
     bh, bw = -(-h0 // 8), -(-w0 // 8)
-    center = float(1 << (prec - 1))
     planes = []
     for comp, grid in zip(comps, dc_grids):
         if comp["tq"] not in qtabs:
             raise ValueError("corrupt JPEG: missing quantization table")
         q0 = float(qtabs[comp["tq"]][0, 0])
-        plane = grid.astype(np.float64) * (q0 / 8.0) + center
+        plane = grid.astype(np.float64) * (q0 / 8.0) + 128.0
         plane = np.repeat(
             np.repeat(plane, vmax // comp["v"], axis=0), hmax // comp["h"], axis=1
         )
         planes.append(plane[:bh, :bw])
-    return _planes_to_rgb(planes, prec)
+    return _planes_to_rgb(planes)
 
 
-def _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax, prec=8):
+def _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax):
     """Dequantize + batched IDCT per component grid, upsample to full
     resolution, YCbCr→RGB (or replicate grayscale). Shared tail of the
-    baseline and progressive decode paths."""
-    center = float(1 << (prec - 1))
+    baseline, progressive and arithmetic decode paths."""
     planes = []
     for comp, grid in zip(comps, grids):
         if comp["tq"] not in qtabs:
@@ -1590,10 +1412,10 @@ def _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax, prec=8):
         )
         blocks = np.einsum("ji,rcjk,kl->rcil", _A, coefs.astype(np.float64), _A)
         rows, cols = blocks.shape[:2]
-        plane = blocks.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8) + center
+        plane = blocks.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8) + 128.0
         plane = np.repeat(np.repeat(plane, vmax // comp["v"], axis=0), hmax // comp["h"], axis=1)
         planes.append(plane[:h0, :w0])
-    return _planes_to_rgb(planes, prec)
+    return _planes_to_rgb(planes)
 
 
 # --- progressive (SOF2) scan decoding — T.81 Annex G, Huffman ----------------
@@ -1697,10 +1519,7 @@ def _next_marker_pos(br: "_BitReader") -> int:
     raise ValueError("corrupt JPEG: truncated stream")
 
 
-def _decode_progressive_scan(
-    data, pos, frame, scan, grids, huff_dc, huff_ac,
-    restart_interval, ss, se, ah, al,
-):
+def _decode_progressive_scan(data, pos, frame, scan, grids, huff_dc, huff_ac, ss, se, ah, al):
     """Decode ONE progressive scan into the persistent per-component
     coefficient grids; returns the offset of the next marker. DC scans
     (Ss=0) may be interleaved; AC scans are single-component per T.81."""
@@ -1726,13 +1545,8 @@ def _decode_progressive_scan(
         comp_h = -(-(h0 * comp["v"]) // vmax)
         units_x = -(-comp_w // 8)
         units_y = -(-comp_h // 8)
-    unit = 0
     for uy in range(units_y):
         for ux in range(units_x):
-            if restart_interval and unit and unit % restart_interval == 0:
-                br.align_and_expect_rst(unit // restart_interval - 1)
-                pred = [0] * len(scan)
-                eobrun = 0
             if ss == 0:  # DC scan
                 for si, (comp, td, _ta) in enumerate(scan):
                     blocks = (
@@ -1757,5 +1571,4 @@ def _decode_progressive_scan(
                     eobrun = _ac_first_block(br, dec, zz, ss, se, al, eobrun)
                 else:
                     eobrun = _ac_refine_block(br, dec, zz, ss, se, al, eobrun)
-            unit += 1
     return _next_marker_pos(br)

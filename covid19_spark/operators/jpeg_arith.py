@@ -49,19 +49,13 @@ import numpy as np
 
 #: COM-segment payload ``encode_jpeg_arith`` stamps into every stream it
 #: produces. Streams carrying it are round-trip-verified by construction.
+#: Cross-library SOF9 bitstream interop (LPS subinterval ordering, 0xFF
+#: byte-feed convention) is verified only against this module's encoder
+#: twin, with no reference decoder or third-party arithmetic-coded sample
+#: to test against, so ``decode_jpeg`` refuses SOF9 streams that do not
+#: carry the signature, failing loudly instead of risking a silent
+#: mis-decode of a third-party corpus.
 SOF9_SELF_SIGNATURE = b"covid19_spark qm/T.81-D v1"
-
-#: Interop gate. Cross-library SOF9 bitstream interop (LPS subinterval
-#: ordering, 0xFF byte-feed convention) is verified only against this
-#: module's encoder twin — no libjpeg and no external arithmetic-coded
-#: sample files exist in this container. With the gate at False (default),
-#: ``decode_jpeg`` refuses SOF9 streams that do not carry
-#: ``SOF9_SELF_SIGNATURE``, failing loudly instead of risking a silent
-#: mis-decode of a third-party corpus. Flip to True only after
-#: differential-testing against libjpeg-turbo's jdarith on the target
-#: corpus (the production checklist in this docstring's conformance
-#: contract).
-ALLOW_FOREIGN_SOF9 = False
 
 #: T.81 Table D.3 — Qe value, Next_Index_MPS, Next_Index_LPS, Switch_MPS.
 #: 113 adaptive states; index 113 is the frozen equiprobable bin used for
@@ -557,30 +551,25 @@ def _decode_arith_scan(
                         _decode_ac_block(dec, as_, zz, kx)
             mcu_count += 1
     comps = [comp for comp, _, _ in scan]
-    return _idct_and_assemble(
-        h0, w0, comps, grids, qtabs, hmax, vmax, frame.get("prec", 8)
-    )
+    return _idct_and_assemble(h0, w0, comps, grids, qtabs, hmax, vmax)
 
 
 def encode_jpeg_arith(
     pixels: np.ndarray,
     quality: int = 85,
-    subsampling: str = "444",
     restart_interval: int = 0,
-    precision: int = 8,
 ) -> bytes:
-    """Encode (H, W, 3) RGB or (H, W) grayscale samples as an
-    arithmetic-coded extended sequential JPEG (SOF9) with default DAC
-    conditioning (DC L=0/U=1, AC Kx=5). Shares the quantized-coefficient
-    front half with ``encode_jpeg``, so the SOF9 stream decodes
-    bit-identically to the Huffman encodings of the same image —
-    the round-trip twin that makes the Annex D/E/F decode path testable
-    without external sample files. ``precision=12`` takes uint16 samples in
-    [0, 4095] (level shift 2048, 16-bit DQT), like SOF1."""
+    """Encode (H, W, 3) RGB or (H, W) grayscale uint8 samples as an
+    arithmetic-coded 8-bit extended sequential JPEG (SOF9, 4:4:4) with
+    default DAC conditioning (DC L=0/U=1, AC Kx=5). Shares the
+    quantized-coefficient front half with ``encode_jpeg``, so the SOF9
+    stream decodes bit-identically to the Huffman encodings of the same
+    image — the round-trip twin that makes the Annex D/E/F decode path
+    testable without external sample files."""
     from covid19_spark.operators.jpeg import ZIGZAG, _prepare_quantized_coefs
 
     gray, factors, qtabs, comp_coefs, h0, w0 = _prepare_quantized_coefs(
-        pixels, quality, subsampling, precision
+        pixels, quality, "444"
     )
     ncomp = 1 if gray else 3
     hmax = max(f[0] for f in factors)
@@ -623,19 +612,12 @@ def encode_jpeg_arith(
     out = bytearray(b"\xff\xd8")
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
     # provenance stamp consumed by decode_jpeg's SOF9 interop gate (see
-    # ALLOW_FOREIGN_SOF9): marks the stream as produced by the verified
+    # SOF9_SELF_SIGNATURE): marks the stream as produced by the verified
     # encoder twin
     out += seg(0xFFFE, SOF9_SELF_SIGNATURE)
     for tid, q in enumerate(qtabs[: 1 if gray else 2]):
-        if precision == 12:
-            out += seg(
-                0xFFDB,
-                bytes([0x10 | tid])
-                + b"".join(struct.pack(">H", int(x)) for x in q[ZIGZAG]),
-            )
-        else:
-            out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
-    sof = struct.pack(">BHHB", precision, h0, w0, ncomp)
+        out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
+    sof = struct.pack(">BHHB", 8, h0, w0, ncomp)
     for ci in range(ncomp):
         hf, vf = factors[ci]
         sof += bytes([ci + 1, (hf << 4) | vf, 0 if ci == 0 else 1])

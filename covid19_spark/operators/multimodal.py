@@ -1,22 +1,22 @@
 """Multimodal (binary) column plumbing: images/audio/video as opaque BINARY
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The container has no codec libraries, so the REAL decode paths are the
-formats a pure-stdlib reader can handle: uncompressed 24-bpp BMP, full PNG
-(all five color types incl. palette, depths 1-16, Adam7 interlace — the
-chart format the reference serves, covid19-visualizer Visualizer.java:469,520 / ChartRequest.java:23),
-baseline + progressive + lossless-SOF3 JPEG (operators/jpeg.py) plus
-arithmetic-coded JPEG — the full ITU-T T.81 Annex D/E/F decoder+encoder in
-operators/jpeg_arith.py (oracle-green `jpeg_entropy_matrix`) — TIFF
-(incl. tiled + CCITT G3/G4), GIF, RIFF/WAVE audio (PCM 8/16/24/32-bit +
-IEEE float + G.711 A-law/mu-law + IMA ADPCM), and Motion-JPEG AVI video
-(RIFF container walk + per-frame JPEG decode, real frame sampling). The
-seams that truly remain ``NotImplementedError`` are compressed-audio-in-WAV
-(MP3/AAC payloads) and inter-frame video codecs (H.264/VP9) — formats whose
-decoders are out of pure-stdlib reach; a permissive-mode kernel reports
-them as ``unsupported`` rows. Every public kernel decodes: there is no fake
-path. They all run one per-blob loop (``_map_blobs``) that owns the
-fail/permissive policy.
+The package ships no codec libraries, so the REAL decode paths are the
+formats a pure-stdlib reader can handle, each trimmed to the variants the
+registered queries feed it: uncompressed 24-bpp BMP, 8-bit truecolour PNG
+(the chart format the reference serves, covid19-visualizer
+Visualizer.java:469,520 / ChartRequest.java:23), baseline + progressive +
+lossless-SOF3 JPEG (operators/jpeg.py) plus arithmetic-coded JPEG — the
+T.81 Annex D/E/F decoder+encoder in operators/jpeg_arith.py
+(oracle-green `jpeg_entropy_matrix`) — baseline TIFF (incl. tiled, old-
+and new-style JPEG-in-TIFF and CCITT G3/G4), still GIF, RIFF/WAVE audio
+(PCM 16/24/32-bit + IEEE float), and Motion-JPEG AVI video (RIFF
+container walk + per-frame JPEG decode, real frame sampling). Every other
+variant of these formats, compressed audio in WAV (G.711, ADPCM, MP3) and
+inter-frame video codecs (H.264/VP9) raise ``NotImplementedError``; a
+permissive-mode kernel reports them as ``unsupported`` rows. Every public
+kernel decodes: there is no fake path. They all run one per-blob loop
+(``_map_blobs``) that owns the fail/permissive policy.
 
 Scale design: media blobs dominate bytes, not rows — so (1) metadata-only
 predicates must prune *before* any decode (keep metadata in top-level columns,
@@ -77,10 +77,10 @@ def encode_bmp(pixels: "np.ndarray") -> bytes:
 
 
 def decode_bmp(payload: bytes) -> "np.ndarray":
-    """Decode an uncompressed 24-bpp BMP (the one format a pure-numpy reader
-    can handle without a codec library) to an (H, W, 3) uint8 RGB array.
-    Handles bottom-up (positive height) and top-down (negative height) rows
-    and 4-byte row padding; rejects compressed/paletted variants."""
+    """Decode an uncompressed 24-bpp bottom-up BMP (the one format a
+    pure-numpy reader can handle without a codec library) to an (H, W, 3)
+    uint8 RGB array, honouring 4-byte row padding; rejects top-down,
+    compressed and paletted variants."""
     import struct
 
     if payload is None or len(payload) < 54 or payload[:2] != b"BM":
@@ -89,7 +89,7 @@ def decode_bmp(payload: bytes) -> "np.ndarray":
     header_size = struct.unpack_from("<I", payload, 14)[0]
     if header_size < 40:
         raise NotImplementedError("BITMAPCOREHEADER BMPs not supported")
-    w, h_raw = struct.unpack_from("<ii", payload, 18)
+    w, h = struct.unpack_from("<ii", payload, 18)
     bpp = struct.unpack_from("<H", payload, 28)[0]
     compression = struct.unpack_from("<I", payload, 30)[0]
     if bpp != 24 or compression != 0:
@@ -97,15 +97,13 @@ def decode_bmp(payload: bytes) -> "np.ndarray":
             f"only uncompressed 24-bpp BMP supported (got bpp={bpp}, "
             f"compression={compression})"
         )
-    top_down = h_raw < 0
-    h = -h_raw if top_down else h_raw
+    if h < 0:
+        raise NotImplementedError("top-down BMPs not supported")
     row_bytes = w * 3
     stride = row_bytes + ((-row_bytes) % 4)
     data = np.frombuffer(payload, dtype=np.uint8, count=stride * h, offset=pixel_offset)
     rows = data.reshape(h, stride)[:, :row_bytes].reshape(h, w, 3)
-    if not top_down:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR -> RGB
+    return rows[::-1, :, ::-1].copy()  # bottom-up rows, BGR -> RGB
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -122,25 +120,22 @@ def _paeth_predict(a: int, b: int, c: int) -> int:
 
 
 def encode_png(pixels: "np.ndarray", filter_type: int = 0) -> bytes:
-    """Encode a uint8 array as an 8-bit PNG — pure stdlib (struct + zlib),
-    no codec library. (H, W) → grayscale (color type 0), (H, W, 3) → RGB
-    (type 2), (H, W, 4) → RGBA (type 6). ``filter_type`` applies one of the
-    five PNG scanline filters to every row (0=None, 1=Sub, 2=Up, 3=Average,
-    4=Paeth) — used by tests to exercise every unfilter path in
-    ``decode_png``; 0 is the fastest to write."""
+    """Encode an (H, W, 3) uint8 RGB array as an 8-bit truecolour PNG
+    (colour type 2) — pure stdlib (struct + zlib), no codec library. Any
+    other dtype or shape raises: a wider sample would wrap silently.
+    ``filter_type`` applies one of the five PNG scanline filters to every
+    row (0=None, 1=Sub, 2=Up, 3=Average, 4=Paeth), so the queries and tests
+    exercise every unfilter path in ``decode_png``; 0 is the fastest to
+    write."""
     import struct
     import zlib
 
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim == 2:
-        ctype, arr3 = 0, arr[:, :, None]
-    elif arr.shape[2] == 3:
-        ctype, arr3 = 2, arr
-    elif arr.shape[2] == 4:
-        ctype, arr3 = 6, arr
-    else:
-        raise ValueError(f"unsupported channel count {arr.shape[2]}")
-    h, w, nch = arr3.shape
+    arr = np.asarray(pixels)
+    if arr.dtype != np.uint8 or arr.ndim != 3 or arr.shape[2] != 3:
+        raise ValueError(
+            f"encode_png takes (H, W, 3) uint8 pixels (got {arr.dtype} {arr.shape})"
+        )
+    h, w, nch = arr.shape
     if filter_type not in (0, 1, 2, 3, 4):
         raise ValueError(f"invalid PNG filter type {filter_type}")
 
@@ -150,7 +145,7 @@ def encode_png(pixels: "np.ndarray", filter_type: int = 0) -> bytes:
     lines = []
     prev = np.zeros(w * nch, dtype=np.int32)
     for r in range(h):
-        cur = arr3[r].reshape(-1).astype(np.int32)
+        cur = arr[r].reshape(-1).astype(np.int32)
         if filter_type == 0:
             filt = cur
         elif filter_type == 1:
@@ -176,7 +171,7 @@ def encode_png(pixels: "np.ndarray", filter_type: int = 0) -> bytes:
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     return (
         PNG_SIG
         + chunk(b"IHDR", ihdr)
@@ -185,33 +180,17 @@ def encode_png(pixels: "np.ndarray", filter_type: int = 0) -> bytes:
     )
 
 
-# Adam7 pass grid: (x_origin, y_origin, x_step, y_step) per pass, RFC 2083
-# §2.6 — each pass is an independently filtered reduced image.
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _png_unfilter(
-    raw: bytes, rpos: int, width: int, height: int, nch: int, depth: int
-) -> "tuple[np.ndarray, int]":
-    """Unfilter one (sub)image's scanlines starting at ``rpos`` → ``(samples,
-    new_rpos)`` where samples is (height, width, nch) uint16 — per-channel
-    sample values in the source bit depth (0..2^depth-1; 16-bit reduced to
-    the high byte). Filter byte offsets use bpp = the spec's per-pixel byte
-    count (min 1), which differs from nch for sub-byte and 16-bit depths."""
-    bpp = max(1, (nch * depth) // 8)
-    stride = (width * nch * depth + 7) // 8
-    if rpos + (stride + 1) * height > len(raw):
+def _png_unfilter(raw: bytes, width: int, height: int) -> "np.ndarray":
+    """Unfilter the scanlines of an 8-bit RGB image → (height, width, 3)
+    uint8. Filter byte offsets use bpp = 3, the spec's per-pixel byte
+    count."""
+    bpp = 3
+    stride = width * 3
+    if (stride + 1) * height != len(raw):
         raise ValueError("PNG pixel data length mismatch")
     out = np.empty((height, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.int32)
+    rpos = 0
     for r in range(height):
         ftype = raw[rpos]
         line = np.frombuffer(raw, np.uint8, stride, rpos + 1).astype(np.int32)
@@ -236,35 +215,23 @@ def _png_unfilter(
             raise ValueError(f"invalid PNG scanline filter {ftype}")
         out[r] = cur.astype(np.uint8)
         prev = cur
-    if depth == 8:
-        samples = out.reshape(height, width, nch).astype(np.uint16)
-    elif depth == 16:
-        # standard 16→8 reduction: the high byte of each big-endian sample
-        samples = out[:, 0::2].reshape(height, width, nch).astype(np.uint16)
-    else:  # 1/2/4-bit (gray or palette index): MSB-first packed samples
-        bits = np.unpackbits(out, axis=1)  # (height, stride*8)
-        groups = bits[:, : width * depth].reshape(height, width, depth)
-        weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint16)
-        samples = (groups * weights).sum(axis=2, dtype=np.uint16)[:, :, None]
-    return samples, rpos
+    return out.reshape(height, width, 3)
 
 
 def decode_png(payload: bytes) -> "np.ndarray":
-    """Decode a PNG to an (H, W, 3) uint8 RGB array — pure stdlib (struct +
-    zlib + numpy), the format the reference actually serves for charts
-    (covid19-visualizer Visualizer.java:469,520 requests "png" charts (ChartRequest.java:23)). Supports all five
-    color types (0 gray → replicated, 2 RGB, 3 palette via PLTE, 4
-    gray+alpha and 6 RGBA → alpha dropped), every legal bit depth
-    (1/2/4/8/16; 16-bit reduced to the high byte), both interlace methods
-    (none + Adam7 — each of the 7 passes is an independently filtered
-    reduced image scattered onto the pass grid), all five scanline filters,
-    CRC-validated chunks, multi-IDAT streams."""
+    """Decode an 8-bit truecolour (colour type 2), non-interlaced PNG to an
+    (H, W, 3) uint8 RGB array — pure stdlib (struct + zlib + numpy), the
+    format the reference actually serves for charts
+    (covid19-visualizer Visualizer.java:469,520 requests "png" charts
+    (ChartRequest.java:23)). All five scanline filters, CRC-validated
+    chunks, multi-IDAT streams. Gray, palette and alpha colour types, other
+    bit depths and Adam7 interlace raise NotImplementedError."""
     import struct
     import zlib
 
     if payload is None or len(payload) < 8 or payload[:8] != PNG_SIG:
         raise ValueError("not a PNG payload")
-    pos, ihdr, idat, plte = 8, None, [], None
+    pos, ihdr, idat = 8, None, []
     while pos + 12 <= len(payload):
         (ln,) = struct.unpack_from(">I", payload, pos)
         typ = payload[pos + 4 : pos + 8]
@@ -274,8 +241,6 @@ def decode_png(payload: bytes) -> "np.ndarray":
             raise ValueError(f"PNG chunk {typ!r} CRC mismatch")
         if typ == b"IHDR":
             ihdr = struct.unpack(">IIBBBBB", data)
-        elif typ == b"PLTE":
-            plte = data
         elif typ == b"IDAT":
             idat.append(data)
         elif typ == b"IEND":
@@ -291,64 +256,32 @@ def decode_png(payload: bytes) -> "np.ndarray":
         raise ValueError(
             f"invalid PNG depth/color-type combination (depth={depth}, color type={ctype})"
         )
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[ctype]
-    raw = zlib.decompress(b"".join(idat))
-    if interlace == 0:
-        samples, rpos = _png_unfilter(raw, 0, w, h, nch, depth)
-    elif interlace == 1:
-        samples = np.zeros((h, w, nch), dtype=np.uint16)
-        rpos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass for small images: zero scanlines
-            sub, rpos = _png_unfilter(raw, rpos, pw, ph, nch, depth)
-            samples[y0::dy, x0::dx] = sub
-    else:
+    if interlace not in (0, 1):
         raise ValueError(f"invalid PNG interlace method {interlace}")
-    if rpos != len(raw):
-        raise ValueError("PNG pixel data length mismatch")
-    if ctype == 3:
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE chunk")
-        pal = np.frombuffer(plte, dtype=np.uint8)
-        if len(pal) % 3 != 0:
-            raise ValueError("PNG PLTE length not a multiple of 3")
-        pal = pal.reshape(-1, 3)
-        idx = samples[:, :, 0]
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("PNG palette index out of range")
-        return pal[idx].copy()
-    if depth < 8:  # grayscale sub-byte: scale 0..2^depth-1 to 0..255 exactly
-        samples = samples * (255 // ((1 << depth) - 1))
-    px = samples.astype(np.uint8)
-    if ctype == 0:
-        return np.repeat(px, 3, axis=2).copy()
-    if ctype == 4:  # gray+alpha: drop alpha, replicate gray
-        return np.repeat(px[:, :, :1], 3, axis=2).copy()
-    if ctype == 6:
-        return px[:, :, :3].copy()
-    return px.copy()
+    if (ctype, depth, interlace) != (2, 8, 0):
+        raise NotImplementedError(
+            f"only 8-bit truecolour non-interlaced PNG supported (got colour "
+            f"type {ctype}, depth {depth}, interlace {interlace})"
+        )
+    return _png_unfilter(zlib.decompress(b"".join(idat)), w, h)
 
 
 # --- GIF (GIF87a/GIF89a) — pure-stdlib LZW codec -----------------------------
 #
-# Web crawls are full of GIFs, so the multimodal decode path covers them for
-# real: logical screen + global/local color tables, interlaced images, the
-# 89a graphic-control extension (transparency honored, frames composited
-# draw-over), and the variable-code-size LZW decompressor — all straight
-# from the public GIF89a specification, no external tables. `encode_gif`
-# is the deterministic round-trip twin (exact for images with <= 256
-# distinct colors, which is all a GIF can hold).
+# Web crawls are full of GIFs, so the multimodal decode path covers the
+# still-image core for real: logical screen + global colour table, the
+# first image drawn onto the background, and the variable-code-size LZW
+# decompressor — straight from the public GIF89a specification, no
+# external tables. Extension blocks, local colour tables and interlaced
+# images raise NotImplementedError. `encode_gif` is the deterministic
+# round-trip twin (exact for images with <= 256 distinct colors, which is
+# all a GIF can hold).
 
 
-def decode_gif_frames(payload: bytes):
-    """Yield (delay_ms, (H, W, 3) uint8 RGB) per frame, composited onto the
-    logical screen draw-over (disposal "do not dispose" semantics — the
-    common animation case; restore-to-background clears the frame's own
-    rect to the background color first). Transparent pixels keep the
-    underlying canvas. Raises ValueError on corrupt streams."""
+def decode_gif(payload: bytes) -> "np.ndarray":
+    """First image of a GIF, drawn onto the logical screen filled with the
+    background colour, as (H, W, 3) uint8 RGB. Raises ValueError on corrupt
+    streams."""
     import struct
 
     if payload is None or len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
@@ -356,127 +289,57 @@ def decode_gif_frames(payload: bytes):
     w, h = struct.unpack_from("<HH", payload, 6)
     packed, bg_idx, _ar = payload[10], payload[11], payload[12]
     pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
+    if not packed & 0x80:
+        raise NotImplementedError("GIF without a global color table not supported")
+    n = 2 << (packed & 0x07)
+    gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
+    pos += 3 * n
     canvas = np.zeros((h, w, 3), dtype=np.uint8)
-    if gct is not None and bg_idx < len(gct):
+    if bg_idx < len(gct):
         canvas[:, :] = gct[bg_idx]
-    transparent = None
-    delay_ms = 0
-    disposal = 0
-    prev_rect = None
-    prev_disposal = 0
+    if pos >= len(payload):
+        raise ValueError("corrupt GIF: missing trailer")
+    b = payload[pos]
+    pos += 1
+    if b == 0x21:
+        raise NotImplementedError("GIF extension blocks not supported")
+    if b == 0x3B:
+        raise ValueError("corrupt GIF: no image data")
+    if b != 0x2C:  # image descriptor is the only other block type
+        raise ValueError(f"corrupt GIF: unknown block {b:#x}")
+    if pos + 9 > len(payload):
+        raise ValueError("corrupt GIF: truncated image descriptor")
+    ix, iy, iw, ih = struct.unpack_from("<HHHH", payload, pos)
+    ipacked = payload[pos + 8]
+    pos += 9
+    if ix + iw > w or iy + ih > h or iw == 0 or ih == 0:
+        raise ValueError("corrupt GIF: image rect outside logical screen")
+    if ipacked & 0xC0:
+        raise NotImplementedError("GIF local color tables and interlace not supported")
+    if pos >= len(payload):
+        raise ValueError("corrupt GIF: truncated image data")
+    min_code = payload[pos]
+    pos += 1
+    if not 2 <= min_code <= 11:
+        raise ValueError(f"corrupt GIF: LZW minimum code size {min_code}")
+    data = bytearray()
     while True:
         if pos >= len(payload):
-            raise ValueError("corrupt GIF: missing trailer")
-        b = payload[pos]
-        pos += 1
-        if b == 0x3B:  # trailer
-            return
-        if b == 0x21:  # extension
-            if pos + 1 > len(payload):
-                raise ValueError("corrupt GIF: truncated extension")
-            label = payload[pos]
-            pos += 1
-            if label == 0xF9:  # graphic control
-                if pos + 6 > len(payload) or payload[pos] != 4:
-                    raise ValueError("corrupt GIF: bad graphic control block")
-                flags = payload[pos + 1]
-                delay_ms = struct.unpack_from("<H", payload, pos + 2)[0] * 10
-                transparent = payload[pos + 4] if flags & 0x01 else None
-                disposal = (flags >> 2) & 0x07
-                pos += 5
-            # skip remaining sub-blocks (any extension type)
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("corrupt GIF: truncated extension")
-                ln = payload[pos]
-                pos += 1
-                if ln == 0:
-                    break
-                pos += ln
-                if pos > len(payload):
-                    raise ValueError("corrupt GIF: truncated extension")
-            continue
-        if b != 0x2C:  # image descriptor is the only other block type
-            raise ValueError(f"corrupt GIF: unknown block {b:#x}")
-        if pos + 9 > len(payload):
-            raise ValueError("corrupt GIF: truncated image descriptor")
-        ix, iy, iw, ih = struct.unpack_from("<HHHH", payload, pos)
-        ipacked = payload[pos + 8]
-        pos += 9
-        if ix + iw > w or iy + ih > h or iw == 0 or ih == 0:
-            raise ValueError("corrupt GIF: image rect outside logical screen")
-        ct = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            if pos + 3 * n > len(payload):
-                raise ValueError("corrupt GIF: truncated local color table")
-            ct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-            pos += 3 * n
-        if ct is None:
-            raise ValueError("corrupt GIF: no color table")
-        if pos >= len(payload):
             raise ValueError("corrupt GIF: truncated image data")
-        min_code = payload[pos]
+        ln = payload[pos]
         pos += 1
-        if not 2 <= min_code <= 11:
-            raise ValueError(f"corrupt GIF: LZW minimum code size {min_code}")
-        data = bytearray()
-        while True:
-            if pos >= len(payload):
-                raise ValueError("corrupt GIF: truncated image data")
-            ln = payload[pos]
-            pos += 1
-            if ln == 0:
-                break
-            data += payload[pos : pos + ln]
-            pos += ln
-            if pos > len(payload):
-                raise ValueError("corrupt GIF: truncated image data")
-        indices = _gif_lzw_decode(bytes(data), min_code, iw * ih)
-        idx = np.frombuffer(indices, np.uint8).reshape(ih, iw)
-        if ipacked & 0x40:  # interlaced: 4-pass row order
-            order = np.concatenate([
-                np.arange(0, ih, 8), np.arange(4, ih, 8),
-                np.arange(2, ih, 4), np.arange(1, ih, 2),
-            ])
-            deinter = np.empty_like(idx)
-            deinter[order] = idx
-            idx = deinter
-        if idx.max(initial=0) >= len(ct):
-            raise ValueError("corrupt GIF: pixel index outside color table")
-        # A GCE's disposal method says how its OWN image is disposed after
-        # display (GIF89a §23), so before drawing frame N we apply frame
-        # N-1's disposal — not the current GCE's — to frame N-1's rect.
-        if prev_disposal == 2 and prev_rect is not None:
-            py, px_, ph_, pw_ = prev_rect
-            canvas[py : py + ph_, px_ : px_ + pw_] = (
-                gct[bg_idx] if gct is not None and bg_idx < len(gct) else 0
-            )
-        rect = canvas[iy : iy + ih, ix : ix + iw]
-        rgb = ct[idx]
-        if transparent is not None:
-            mask = idx != transparent
-            rect[mask] = rgb[mask]
-        else:
-            rect[:, :] = rgb
-        prev_rect = (iy, ix, ih, iw)
-        prev_disposal = disposal
-        yield delay_ms, canvas.copy()
-        transparent = None
-        delay_ms = 0
-        disposal = 0
-
-
-def decode_gif(payload: bytes) -> "np.ndarray":
-    """First composited frame of a GIF as (H, W, 3) uint8 RGB."""
-    for _delay, frame in decode_gif_frames(payload):
-        return frame
-    raise ValueError("corrupt GIF: no image data")
+        if ln == 0:
+            break
+        data += payload[pos : pos + ln]
+        pos += ln
+        if pos > len(payload):
+            raise ValueError("corrupt GIF: truncated image data")
+    indices = _gif_lzw_decode(bytes(data), min_code, iw * ih)
+    idx = np.frombuffer(indices, np.uint8).reshape(ih, iw)
+    if idx.max(initial=0) >= len(gct):
+        raise ValueError("corrupt GIF: pixel index outside color table")
+    canvas[iy : iy + ih, ix : ix + iw] = gct[idx]
+    return canvas
 
 
 def _gif_lzw_decode(data: bytes, min_code: int, expect: int) -> bytes:
@@ -539,18 +402,17 @@ def _gif_lzw_decode(data: bytes, min_code: int, expect: int) -> bytes:
 
 
 def encode_gif(pixels: "np.ndarray") -> bytes:
-    """Encode one (H, W, 3) uint8 frame — or a list of same-size frames as
-    an animation with zero frame delays — as GIF89a with a shared palette built from the distinct
-    colors (> 256 distinct colors raises: GIF is palette-bound; production
-    quantizes first). Round-trips bit-exactly through ``decode_gif``."""
+    """Encode one (H, W, 3) uint8 frame as GIF89a with a global palette
+    built from the distinct colors (> 256 distinct colors raises: GIF is
+    palette-bound; production quantizes first). Round-trips bit-exactly
+    through ``decode_gif``."""
     import struct
 
-    frames = pixels if isinstance(pixels, (list, tuple)) else [pixels]
-    frames = [np.asarray(f, dtype=np.uint8) for f in frames]
-    h, w = frames[0].shape[:2]
-    if any(f.shape != (h, w, 3) for f in frames):
-        raise ValueError("all GIF frames must be (H, W, 3) and same size")
-    colors = np.unique(np.concatenate([f.reshape(-1, 3) for f in frames]), axis=0)
+    frame = np.asarray(pixels, dtype=np.uint8)
+    if frame.ndim != 3 or frame.shape[2] != 3:
+        raise ValueError("a GIF frame must be (H, W, 3)")
+    h, w = frame.shape[:2]
+    colors = np.unique(frame.reshape(-1, 3), axis=0)
     if len(colors) > 256:
         raise ValueError(f"GIF needs <= 256 distinct colors (got {len(colors)})")
     depth = 1
@@ -565,19 +427,14 @@ def encode_gif(pixels: "np.ndarray") -> bytes:
     out += bytes([0x80 | (depth - 1), 0, 0])  # GCT present, bg 0, square px
     out += palette.tobytes()
     min_code = max(depth, 2)
-    for f in frames:
-        if len(frames) > 1:
-            out += bytes([0x21, 0xF9, 4, 0x00, 0, 0, 0, 0])
-        out += bytes([0x2C]) + struct.pack("<HHHH", 0, 0, w, h) + bytes([0])
-        idx = np.array(
-            [lut[tuple(px)] for px in f.reshape(-1, 3)], dtype=np.uint16
-        )
-        out += bytes([min_code])
-        lzw = _gif_lzw_encode(idx, min_code)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
+    out += bytes([0x2C]) + struct.pack("<HHHH", 0, 0, w, h) + bytes([0])
+    idx = np.array([lut[tuple(px)] for px in frame.reshape(-1, 3)], dtype=np.uint16)
+    out += bytes([min_code])
+    lzw = _gif_lzw_encode(idx, min_code)
+    for i in range(0, len(lzw), 255):
+        chunk = lzw[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    out += b"\x00"
     out += b"\x3b"
     return bytes(out)
 
@@ -635,39 +492,35 @@ def _gif_lzw_encode(indices: "np.ndarray", min_code: int) -> bytes:
 # --- TIFF 6.0 baseline — pure-stdlib strip codec ------------------------------
 #
 # Scanned-document corpora ship as TIFF, so the decode path covers the
-# baseline profile for real: both byte orders, RGB/grayscale/palette at 8
-# or 16 bits per sample (16-bit decodes keep full uint16 precision —
-# `image_features_from_pixels` is peak-aware), chunky AND separate-plane
-# (PlanarConfiguration 2) strip organization, Compression 1 (none), 32773
-# (PackBits) and 5 (LZW — MSB-first bit packing with the spec's "early
-# change" code widening, the documented difference from GIF's LZW), and
-# Predictor 2 (horizontal differencing, per-sample modulo the sample
-# width). TILED organization (TIFF 6.0 §15, tags 322-325 — the layout of
-# satellite/scan corpora) decodes through the same codec kernels over the
-# tile geometry, with the predictor undone per tile (differencing restarts
-# at each tile's left edge). Round 8 additions: new-style JPEG-in-TIFF
-# (compression 7 + tag-347 JPEGTables merge, each chunk decoded by
-# operators/jpeg), Adobe/old deflate (8/32946, stdlib zlib), sub-byte
-# samples (1/2/4-bit bilevel/gray/palette, MSB-first row-aligned packing),
-# and the CCITT fax codecs (compression 4 Group 4 T.6 MMR, compression 3
-# Group 3 T.4 with EOLs incl. 2D mode via T4Options bit 0, compression 2
-# 1D Modified Huffman — operators/ccitt.py, photometric-0 convention).
-# `encode_tiff` is the round-trip twin (8/16-bit by dtype or bits=1|2|4,
-# planar=1|2, strip or tiled, predictor 1|2, none/packbits/lzw/deflate/
-# jpeg/g4/g3/g3_2d/mh). Old-style JPEG (compression 6, §22) decodes in
-# ALL the forms real writers produced: a full interchange stream at tag
-# 513, per-chunk SOI streams via the compression-7 path, and the
-# tables-split variant (tags 519-521 raw tables + bare entropy strips,
-# incl. tag-530 subsampling and tag-515 restarts — round 8). Remaining
-# seams raising NotImplementedError: T.4 uncompressed mode, tiled or
-# RGB-photometric tables-split JPEG, lossless JPEGProc, and
-# non-power-of-two sample widths (e.g. 12-bit).
+# baseline profile for real: little-endian files, 8-bit RGB or grayscale
+# samples, chunky AND separate-plane (PlanarConfiguration 2) strip
+# organization, Compression 1 (none), 32773 (PackBits), 5 (LZW — MSB-first
+# bit packing with the spec's "early change" code widening, the documented
+# difference from GIF's LZW) and 8/32946 (Adobe/old deflate, stdlib zlib),
+# and Predictor 2 (horizontal differencing, per-sample modulo 256). TILED
+# organization (TIFF 6.0 §15, tags 322-325 — the layout of satellite/scan
+# corpora) decodes through the same codec kernels over the tile geometry,
+# with the predictor undone per tile (differencing restarts at each tile's
+# left edge). New-style JPEG-in-TIFF (compression 7, each strip a complete
+# JPEG stream decoded by operators/jpeg) and the CCITT fax codecs on 1-bit
+# WhiteIsZero strips (compression 4 Group 4 T.6 MMR, compression 3 Group 3
+# T.4 with EOLs incl. 2D mode via T4Options bit 0, compression 2 1D
+# Modified Huffman — operators/ccitt.py) complete the strip codecs.
+# Old-style JPEG (compression 6, §22) decodes in the forms real writers
+# produced: a full interchange stream at tag 513, per-strip SOI streams
+# via the compression-7 path, and the tables-split variant (tags 519-521
+# raw tables + bare entropy strips or tiles, incl. tag-530 subsampling and
+# tag-515 restarts). `encode_tiff` is the round-trip twin. Big-endian
+# files, 16-bit and sub-byte samples outside CCITT, palette and
+# WhiteIsZero images outside CCITT, JPEGTables (abbreviated JPEG strips),
+# JPEG or fax tiles, RGB-photometric JPEG and lossless JPEGProc raise
+# NotImplementedError.
 
 _TIFF_TAG_NAMES = {
     256: "width", 257: "height", 258: "bits", 259: "compression",
     262: "photometric", 273: "strip_offsets", 277: "spp",
     278: "rows_per_strip", 279: "strip_counts", 284: "planar",
-    292: "t4_options", 317: "predictor", 320: "colormap",
+    292: "t4_options", 317: "predictor",
     512: "jpeg_proc", 513: "jpeg_if", 514: "jpeg_if_len",
     515: "jpeg_restart", 519: "jpeg_q", 520: "jpeg_dc", 521: "jpeg_ac",
     530: "ycbcr_sub",
@@ -676,13 +529,13 @@ _TIFF_TAG_NAMES = {
 }
 
 
-def _tiff_read_ifd(payload: bytes, endian: str):
+def _tiff_read_ifd(payload: bytes):
     import struct
 
-    (ifd_off,) = struct.unpack_from(endian + "I", payload, 4)
+    (ifd_off,) = struct.unpack_from("<I", payload, 4)
     if ifd_off + 2 > len(payload):
         raise ValueError("corrupt TIFF: IFD offset out of range")
-    (n_tags,) = struct.unpack_from(endian + "H", payload, ifd_off)
+    (n_tags,) = struct.unpack_from("<H", payload, ifd_off)
     tags = {}
     type_size = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1}
     type_fmt = {1: "B", 3: "H", 4: "I", 7: "B"}  # 7 = UNDEFINED (raw bytes)
@@ -690,17 +543,17 @@ def _tiff_read_ifd(payload: bytes, endian: str):
         base = ifd_off + 2 + 12 * i
         if base + 12 > len(payload):
             raise ValueError("corrupt TIFF: truncated IFD")
-        tag, typ, count = struct.unpack_from(endian + "HHI", payload, base)
+        tag, typ, count = struct.unpack_from("<HHI", payload, base)
         if tag not in _TIFF_TAG_NAMES or typ not in type_fmt:
             continue
         sz = type_size[typ] * count
         if sz <= 4:
             off = base + 8
         else:
-            (off,) = struct.unpack_from(endian + "I", payload, base + 8)
+            (off,) = struct.unpack_from("<I", payload, base + 8)
         if off + sz > len(payload):
             raise ValueError("corrupt TIFF: tag value out of range")
-        vals = struct.unpack_from(endian + str(count) + type_fmt[typ], payload, off)
+        vals = struct.unpack_from("<" + str(count) + type_fmt[typ], payload, off)
         tags[_TIFF_TAG_NAMES[tag]] = list(vals)
     return tags
 
@@ -810,27 +663,20 @@ def _decode_old_jpeg_tables_split(payload, t, w, h, spp, photo, rows_per_strip):
         img = np.concatenate(strips, axis=0)
     if photo == 6:
         return np.ascontiguousarray(img[:, :, :3])
-    g = img[:, :, 0]
-    if photo == 0:
-        g = 255 - g
-    return np.repeat(g[:, :, None], 3, axis=2)
+    return np.repeat(img[:, :, :1], 3, axis=2)
 
 
 def decode_tiff(payload: bytes) -> "np.ndarray":
     """Baseline TIFF (strip or tiled organization) → (H, W, 3) uint8 RGB
-    (grayscale replicated, palette expanded). See the section comment for
-    the supported profile."""
-    import struct
-
+    (grayscale replicated). See the section comment for the supported
+    profile."""
     if payload is None or len(payload) < 8:
         raise ValueError("not a TIFF payload")
-    if payload[:4] == b"II*\x00":
-        endian = "<"
-    elif payload[:4] == b"MM\x00*":
-        endian = ">"
-    else:
+    if payload[:4] == b"MM\x00*":
+        raise NotImplementedError("big-endian TIFF not supported")
+    if payload[:4] != b"II*\x00":
         raise ValueError("not a TIFF payload")
-    t = _tiff_read_ifd(payload, endian)
+    t = _tiff_read_ifd(payload)
     tiled = "tile_offsets" in t
     # old-style JPEG via tag 513 carries the whole image in ONE interchange
     # stream — many real writers omitted strip tags entirely
@@ -855,33 +701,31 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
     rows_per_strip = t.get("rows_per_strip", [h])[0] or h
     if planar not in (1, 2):
         raise ValueError(f"corrupt TIFF: unknown planar config {planar}")
-    if any(b not in (1, 2, 4, 8, 16) for b in bits) or len(set(bits)) != 1:
+    if len(set(bits)) != 1 or bits[0] not in (1, 8):
         raise NotImplementedError(f"{bits}-bit TIFF samples not supported")
-    sub_byte = bits[0] < 8
-    if sub_byte:
-        # bilevel/low-depth gray and palette scans (fax/archival corpora):
-        # rows are bit-packed MSB-first and padded to a byte boundary per
-        # strip/tile row (TIFF 6.0 §Image File Directory, BitsPerSample).
-        # Single-sample images only — sub-byte RGB does not occur in the
-        # wild and the spec's chunky packing for it is ambiguous.
-        if spp != 1:
-            raise NotImplementedError("sub-byte TIFF with multiple samples")
-        if predictor == 2:
-            raise NotImplementedError("predictor with sub-byte TIFF samples")
-        if comp == 7:
-            raise ValueError("corrupt TIFF: JPEG compression with sub-byte samples")
-    deep = bits[0] == 16
     if comp not in (1, 2, 3, 4, 5, 32773, 6, 7, 8, 32946):
         raise NotImplementedError(
             f"TIFF compression {comp} needs a codec library (libtiff seam)"
+        )
+    # CCITT codecs (operators/ccitt.py): 2 = 1D Modified Huffman, 3 = Group
+    # 3 T.4 with EOLs (T4Options bit 0 selects 2D lines), 4 = Group 4 T.6
+    # MMR. Bilevel only, in the fax convention photometric 0 (0 = white).
+    fax = comp in (2, 3, 4)
+    if fax and (bits[0] != 1 or spp != 1):
+        raise ValueError(
+            "corrupt TIFF: CCITT compression requires 1-bit single-sample data"
+        )
+    if bits[0] == 1 and not fax:
+        raise NotImplementedError("sub-byte TIFF samples outside CCITT not supported")
+    if (photo == 0) != fax:
+        raise NotImplementedError(
+            f"TIFF photometric {photo} with compression {comp} not supported"
         )
     if comp == 6:
         # Old-style JPEG-in-TIFF (TIFF 6.0 §22, deprecated by TechNote 2
         # for being underspecified). The form real writers produced — a
         # complete JFIF stream at tag 513 JPEGInterchangeFormat, or strips
-        # that each start with SOI — decodes through operators/jpeg; the
-        # tables-split variants (tags 519-521 without a full stream) stay
-        # the documented seam.
+        # that each start with SOI — decodes through operators/jpeg.
         if "jpeg_if" in t:
             off = t["jpeg_if"][0]
             ln = t.get("jpeg_if_len", [len(payload) - off])[0]
@@ -890,18 +734,11 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
             from covid19_spark.operators.jpeg import decode_jpeg
 
             px = decode_jpeg(payload[off : off + ln])
-            if px.ndim == 2:
-                px = px[:, :, None]
             if px.shape[0] < h or px.shape[1] < w:
                 raise ValueError("corrupt TIFF: old-JPEG stream smaller than declared")
             if photo in (2, 6):
-                if px.shape[2] < 3:
-                    raise ValueError("corrupt TIFF: old-JPEG missing color channels")
                 return np.ascontiguousarray(px[:h, :w, :3])
-            g = px[:h, :w, 0]
-            if photo == 0:
-                g = 255 - g
-            return np.repeat(g[:, :, None], 3, axis=2)
+            return np.repeat(px[:h, :w, :1], 3, axis=2)
         if "jpeg_q" in t:
             # §22 tables-split variant: tags 519/520/521 point at RAW table
             # data (64-byte zigzag quant tables; 16-count+values Huffman
@@ -915,9 +752,9 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
             # YCbCr (tag 530 subsampling, spec default 2×2); RGB-in-JPEG
             # (photometric 2) stays a seam — decode_jpeg's 3-component path
             # is YCbCr by JPEG convention and would mis-color it.
-            if photo not in (0, 1, 6):
+            if photo == 2:
                 raise NotImplementedError(
-                    f"tables-split old-style JPEG with photometric {photo}"
+                    "tables-split old-style JPEG with photometric 2"
                 )
             if t.get("jpeg_proc", [1])[0] != 1:
                 raise NotImplementedError(
@@ -927,49 +764,34 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
                 payload, t, w, h, spp, photo, rows_per_strip
             )
         # No interchange stream and no split tables: fall through to the
-        # per-chunk JPEG decode, which requires each strip/tile to be a
-        # complete SOI stream (the required-tags check above already
-        # guaranteed chunks exist); chunks without SOI fail there with
-        # "JPEG strip missing SOI".
+        # per-chunk JPEG decode, which requires each strip to be a complete
+        # SOI stream (the required-tags check above already guaranteed
+        # chunks exist); chunks without SOI fail there with "JPEG strip
+        # missing SOI".
         comp = 7
-    if comp in (2, 3, 4):
-        # CCITT codecs (operators/ccitt.py): 2 = 1D Modified Huffman,
-        # 3 = Group 3 T.4 with EOLs (T4Options bit 0 selects 2D lines),
-        # 4 = Group 4 T.6 MMR. Bilevel only; the fax convention is
-        # photometric 0 (0 = white), which the shared sub-byte tail then
-        # maps to 255/0 gray.
-        if bits[0] != 1 or spp != 1:
-            raise ValueError(
-                "corrupt TIFF: CCITT compression requires 1-bit single-sample data"
-            )
-        # T4Options (tag 292): bit 0 = 2D coding, bit 1 = uncompressed-mode
-        # extension (decoded natively by operators/ccitt), bit 2 = fill
-        # bits before EOL (the EOL scanner consumes leading zeros anyway)
-        # — every defined bit is handled, so no option value is a seam.
     if predictor not in (1, 2):
         raise ValueError(f"corrupt TIFF: unknown predictor {predictor}")
+    if predictor == 2 and (fax or comp == 7):
+        raise ValueError("corrupt TIFF: predictor with JPEG or CCITT compression")
     if comp == 7:
-        # new-style JPEG-in-TIFF (TIFF TechNote 2): every strip/tile is a
-        # JPEG stream decoded by operators/jpeg; tag 347 JPEGTables holds
-        # shared DQT/DHT for abbreviated chunk streams. YCbCr (photo 6) is
-        # the JPEG-internal color space — decode_jpeg already returns RGB.
-        if deep:
-            raise NotImplementedError("12-bit JPEG-in-TIFF not supported")
-        if predictor == 2:
-            raise ValueError("corrupt TIFF: predictor with JPEG compression")
+        # new-style JPEG-in-TIFF (TIFF TechNote 2): every strip is a
+        # complete JPEG stream decoded by operators/jpeg. YCbCr (photo 6)
+        # is the JPEG-internal color space — decode_jpeg already returns
+        # RGB.
         if photo == 2:
             # RGB-stored JPEG scans: decode_jpeg treats every 3-component
             # scan as YCbCr by JPEG convention, so an RGB-photometric
             # JPEG-in-TIFF would decode mis-colored. Same seam (and same
             # guard) as the tables-split old-JPEG path above.
             raise NotImplementedError("RGB-photometric JPEG-in-TIFF not supported")
-    if photo not in (0, 1, 2, 3) and not (photo == 6 and comp == 7):
+        if "jpeg_tables" in t:
+            raise NotImplementedError("JPEGTables (abbreviated JPEG strips) not supported")
+    if photo not in (0, 1, 2) and not (photo == 6 and comp == 7):
         raise NotImplementedError(f"TIFF photometric {photo} not supported")
     if photo in (2, 6) and spp < 3:
         raise ValueError("corrupt TIFF: RGB needs 3 samples per pixel")
-    bps = 2 if deep else 1
-    sample_dtype = np.dtype(endian + ("u2" if deep else "u1"))
-    native_dtype = np.uint16 if deep else np.uint8
+    if tiled and (fax or comp == 7):
+        raise NotImplementedError("JPEG and CCITT compressed TIFF tiles not supported")
     # planar 1 (chunky): samples interleave within each chunk row.
     # planar 2 (separate): all plane-0 chunks, then plane-1, ... — each
     # chunk carries ONE sample plane.
@@ -994,75 +816,41 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
             raise ValueError(f"corrupt TIFF: {what} data short of image size")
         return out[:want]
 
-    def _chunk_bytes(offsets, counts, ci: int, want: int, what: str) -> bytes:
+    def _chunk(offsets, counts, ci: int, what: str) -> bytes:
         off, cnt = offsets[ci], counts[ci]
         if off + cnt > len(payload):
             raise ValueError(f"corrupt TIFF: {what} out of range")
-        return _decompress(payload[off : off + cnt], want, what)
+        return payload[off : off + cnt]
 
-    jpeg_tables = bytes(t["jpeg_tables"]) if "jpeg_tables" in t else None
-
-    def _fax_chunk(offsets, counts, ci: int, rows: int, cols: int, what: str):
+    def _fax_strip(ci: int, rows: int) -> "np.ndarray":
         from covid19_spark.operators.ccitt import g3_decode, g4_decode, mh_decode
 
-        off, cnt = offsets[ci], counts[ci]
-        if off + cnt > len(payload):
-            raise ValueError(f"corrupt TIFF: {what} out of range")
-        chunk = payload[off : off + cnt]
+        chunk = _chunk(t["strip_offsets"], t["strip_counts"], ci, "strip")
         if comp == 4:
-            return g4_decode(chunk, cols, rows)
+            return g4_decode(chunk, w, rows)
         if comp == 3:
             two_d = bool(t.get("t4_options", [0])[0] & 0x1)
-            return g3_decode(chunk, cols, rows, two_d=two_d)
-        return mh_decode(chunk, cols, rows)
+            return g3_decode(chunk, w, rows, two_d=two_d)
+        return mh_decode(chunk, w, rows)
 
-    def _jpeg_chunk(offsets, counts, ci: int, rows: int, cols: int, what: str):
-        """Decode one JPEG-compressed strip/tile to a (rows, cols,
-        row_samples) uint8 array. Abbreviated chunk streams (TechNote 2)
-        are merged with the JPEGTables body: SOI + tables + chunk-after-SOI
-        — a full per-chunk stream (JPEGTables absent) passes through."""
+    def _jpeg_strip(ci: int, rows: int) -> "np.ndarray":
+        """Decode one JPEG-compressed strip to a (rows, w, row_samples)
+        uint8 array."""
         from covid19_spark.operators.jpeg import decode_jpeg
 
-        off, cnt = offsets[ci], counts[ci]
-        if off + cnt > len(payload):
-            raise ValueError(f"corrupt TIFF: {what} out of range")
-        data = payload[off : off + cnt]
+        data = _chunk(t["strip_offsets"], t["strip_counts"], ci, "strip")
         if len(data) < 2 or data[:2] != b"\xff\xd8":
-            raise ValueError(f"corrupt TIFF: JPEG {what} missing SOI")
-        if jpeg_tables is not None and len(jpeg_tables) >= 4:
-            if jpeg_tables[:2] != b"\xff\xd8":
-                raise ValueError("corrupt TIFF: JPEGTables missing SOI")
-            body = jpeg_tables[2:]
-            if body.endswith(b"\xff\xd9"):
-                body = body[:-2]
-            data = b"\xff\xd8" + body + data[2:]
+            raise ValueError("corrupt TIFF: JPEG strip missing SOI")
         px = decode_jpeg(data)
-        if px.ndim == 2:
-            px = px[:, :, None]
-        if px.shape[0] < rows or px.shape[1] < cols or px.shape[2] < row_samples:
-            raise ValueError(f"corrupt TIFF: JPEG {what} smaller than declared")
-        return np.ascontiguousarray(px[:rows, :cols, :row_samples]).astype(native_dtype)
+        if px.shape[0] < rows or px.shape[1] < w or px.shape[2] < row_samples:
+            raise ValueError("corrupt TIFF: JPEG strip smaller than declared")
+        return np.ascontiguousarray(px[:rows, :w, :row_samples])
 
     def _undiff(a: "np.ndarray") -> "np.ndarray":
-        # horizontal differencing is per sample, modulo the sample width;
-        # axis 1 is the scanline axis of the (rows, cols, samples) block
+        # horizontal differencing is per sample, modulo 256; axis 1 is the
+        # scanline axis of the (rows, cols, samples) block
         a = np.cumsum(a.astype(np.int64), axis=1)
-        return (a & (0xFFFF if deep else 0xFF)).astype(native_dtype)
-
-    def _unpack_rows(raw: bytes, rows: int, cols: int, rb: int) -> "np.ndarray":
-        # sub-byte samples: MSB-first bit packing, each row padded to a
-        # byte boundary of rb bytes → (rows, cols) raw sample values
-        b = np.frombuffer(raw, np.uint8).reshape(rows, rb)
-        bit = bits[0]
-        if bit == 1:
-            vals = np.unpackbits(b, axis=1)
-        elif bit == 2:
-            shifts = np.tile(np.array([6, 4, 2, 0], np.uint8), rb)
-            vals = (np.repeat(b, 4, axis=1) >> shifts) & 0x3
-        else:  # 4
-            shifts = np.tile(np.array([4, 0], np.uint8), rb)
-            vals = (np.repeat(b, 2, axis=1) >> shifts) & 0xF
-        return vals[:, :cols].astype(np.uint8)
+        return (a & 0xFF).astype(np.uint8)
 
     if tiled:
         # TIFF 6.0 §15: the image is a grid of tw×th tiles, each compressed
@@ -1082,35 +870,17 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
             raise ValueError("corrupt TIFF: tile offset/count mismatch")
         if n_tiles < tiles_per_plane * n_planes:
             raise ValueError("corrupt TIFF: too few tiles for image size")
-        tile_rb = (tw * bits[0] + 7) // 8 if sub_byte else tw * row_samples * bps
-        want = th * tile_rb
+        want = th * tw * row_samples
         plane_arrs = []
         for p in range(n_planes):
-            canvas = np.zeros((down * th, across * tw, row_samples), native_dtype)
+            canvas = np.zeros((down * th, across * tw, row_samples), np.uint8)
             for ti in range(tiles_per_plane):
-                if comp == 7:
-                    tile = _jpeg_chunk(
-                        t["tile_offsets"], t["tile_counts"],
-                        p * tiles_per_plane + ti, th, tw, "tile",
-                    )
-                elif comp in (2, 3, 4):
-                    tile = _fax_chunk(
-                        t["tile_offsets"], t["tile_counts"],
-                        p * tiles_per_plane + ti, th, tw, "tile",
-                    )[:, :, None]
-                elif sub_byte:
-                    raw = _chunk_bytes(
-                        t["tile_offsets"], t["tile_counts"],
-                        p * tiles_per_plane + ti, want, "tile",
-                    )
-                    tile = _unpack_rows(raw, th, tw, tile_rb)[:, :, None]
-                else:
-                    raw = _chunk_bytes(
-                        t["tile_offsets"], t["tile_counts"],
-                        p * tiles_per_plane + ti, want, "tile",
-                    )
-                    tile = np.frombuffer(raw, sample_dtype).reshape(th, tw, row_samples)
-                    tile = _undiff(tile) if predictor == 2 else tile.astype(native_dtype)
+                raw = _decompress(
+                    _chunk(t["tile_offsets"], t["tile_counts"], p * tiles_per_plane + ti, "tile"),
+                    want, "tile",
+                )
+                tile = np.frombuffer(raw, np.uint8).reshape(th, tw, row_samples)
+                tile = _undiff(tile) if predictor == 2 else tile
                 ty, tx = divmod(ti, across)
                 canvas[ty * th : (ty + 1) * th, tx * tw : (tx + 1) * tw] = tile
             plane_arrs.append(canvas[:h, :w])
@@ -1123,67 +893,39 @@ def decode_tiff(payload: bytes) -> "np.ndarray":
             raise ValueError("corrupt TIFF: strip offset/count mismatch")
         strips_per_plane = -(-h // rows_per_strip)
         samples_per_row = w * row_samples
-        row_bytes = (w * bits[0] + 7) // 8 if sub_byte else samples_per_row * bps
         if n_strips < strips_per_plane * n_planes:
             raise ValueError("corrupt TIFF: too few strips for image size")
         planes = []
         for p in range(n_planes):
-            if comp in (2, 3, 4, 7):
+            if fax or comp == 7:
                 blocks = []
                 for si in range(strips_per_plane):
                     strip_rows = min(rows_per_strip, h - si * rows_per_strip)
-                    if comp == 7:
-                        px = _jpeg_chunk(
-                            t["strip_offsets"], t["strip_counts"],
-                            p * strips_per_plane + si, strip_rows, w, "strip",
-                        )
-                    else:
-                        px = _fax_chunk(
-                            t["strip_offsets"], t["strip_counts"],
-                            p * strips_per_plane + si, strip_rows, w, "strip",
-                        )[:, :, None]
+                    ci = p * strips_per_plane + si
+                    px = _jpeg_strip(ci, strip_rows) if comp == 7 else _fax_strip(ci, strip_rows)
                     blocks.append(px.reshape(strip_rows, samples_per_row))
                 planes.append(np.concatenate(blocks, axis=0))
                 continue
             raw = bytearray()
             for si in range(strips_per_plane):
                 strip_rows = min(rows_per_strip, h - si * rows_per_strip)
-                raw += _chunk_bytes(
-                    t["strip_offsets"], t["strip_counts"],
-                    p * strips_per_plane + si, strip_rows * row_bytes, "strip",
+                ci = p * strips_per_plane + si
+                raw += _decompress(
+                    _chunk(t["strip_offsets"], t["strip_counts"], ci, "strip"),
+                    strip_rows * samples_per_row, "strip",
                 )
-            if sub_byte:
-                planes.append(_unpack_rows(bytes(raw), h, w, row_bytes))
-            else:
-                plane = np.frombuffer(bytes(raw), sample_dtype, h * samples_per_row)
-                planes.append(plane.reshape(h, samples_per_row))
+            plane = np.frombuffer(bytes(raw), np.uint8, h * samples_per_row)
+            planes.append(plane.reshape(h, samples_per_row))
         if planar == 2:
             arr = np.stack(planes, axis=2)  # (h, w, spp)
         else:
             arr = planes[0].reshape(h, w, spp)
-        arr = _undiff(arr) if predictor == 2 else arr.astype(native_dtype)
-    peak = 0xFFFF if deep else 0xFF
+        arr = _undiff(arr) if predictor == 2 else arr
     if photo in (2, 6):  # 6 = YCbCr, already RGB after the JPEG decode
         return np.ascontiguousarray(arr[:, :, :3])
-    if photo == 3:
-        if deep:
-            raise NotImplementedError("16-bit palette TIFF not supported")
-        n_colors = (1 << bits[0]) if sub_byte else 256
-        cmap = t.get("colormap")
-        if not cmap or len(cmap) < 3 * n_colors:
-            raise ValueError("corrupt TIFF: palette image without colormap")
-        # TIFF colormaps are 16-bit per channel, R then G then B planes
-        cm = np.array(cmap[: 3 * n_colors], np.uint32).reshape(3, n_colors) >> 8
-        return cm.T[arr[:, :, 0]].astype(np.uint8)
     gray = arr[:, :, 0]
-    if sub_byte:
-        # scale 0..2^bits-1 to full 8-bit range (exact: 255 divides evenly)
-        sval = (1 << bits[0]) - 1
-        if photo == 0:  # WhiteIsZero
-            gray = sval - gray
-        gray = (gray.astype(np.uint16) * (255 // sval)).astype(np.uint8)
-    elif photo == 0:  # WhiteIsZero
-        gray = peak - gray
+    if fax:  # WhiteIsZero bilevel: 0 = white
+        gray = ((1 - gray) * 255).astype(np.uint8)
     return np.repeat(gray[:, :, None], 3, axis=2)
 
 
@@ -1348,26 +1090,23 @@ def encode_tiff(
     tile: "tuple[int, int] | None" = None,
     predictor: int = 1,
     jpeg_quality: int = 90,
-    bits: "int | None" = None,
 ) -> bytes:
-    """Encode (H, W, 3) RGB or (H, W) grayscale pixels as baseline
-    little-endian TIFF — ``compression``: "none", "packbits",
-    "lzw", "deflate" (Adobe deflate, compression 8: zlib per
-    strip/tile), or "jpeg" (new-style JPEG-in-TIFF, compression 7: every
-    strip/tile is a complete JPEG stream from ``operators/jpeg``; lossy,
-    uint8 only, so the round-trip contract is pixel-equality with the
-    per-chunk JPEG round-trip, not the raw input); uint8 input writes
-    8-bit samples, uint16 writes 16-bit; ``planar=2`` writes separate
-    sample planes (all R chunks, then G, then B); ``tile=(tw, th)``
-    writes a TIFF 6.0 §15 tiled organization (tags 322-325, edge tiles
-    zero-padded to full size) instead of strips; ``predictor=2`` applies
-    horizontal differencing per strip/tile scanline (tag 317; not
-    combinable with "jpeg"); ``bits=1|2|4`` writes sub-byte samples
-    (bilevel/low-depth gray — the fax/archival scan depths) from 2D input
-    whose values fit the depth, rows bit-packed MSB-first and padded to a
-    byte boundary per strip/tile row. Lossless modes round-trip
-    bit-exactly through ``decode_tiff`` (sub-byte gray reads back scaled
-    to the full 8-bit range, e.g. 1-bit → 0/255)."""
+    """Encode uint8 pixels as baseline little-endian TIFF with 8-bit
+    samples — ``compression``: "none", "packbits", "lzw", "deflate" (Adobe
+    deflate, compression 8: zlib per strip/tile) for (H, W, 3) RGB or
+    (H, W) grayscale input; "jpeg" (new-style JPEG-in-TIFF, compression 7:
+    every strip is a complete JPEG stream from ``operators/jpeg``; lossy,
+    so the round-trip contract is pixel-equality with the per-strip JPEG
+    round-trip, not the raw input) for RGB input; or the CCITT bilevel
+    codecs "mh", "g3", "g3_2d", "g3_uncomp", "g4" for (H, W) input of 0/1
+    samples (0 = white, written WhiteIsZero with 1-bit samples).
+    ``planar=2`` writes separate sample planes (all R chunks, then G, then
+    B); ``tile=(tw, th)`` writes a TIFF 6.0 §15 tiled organization (tags
+    322-325, edge tiles zero-padded to full size) instead of strips;
+    ``predictor=2`` applies horizontal differencing per strip/tile
+    scanline (tag 317). Tiles and the predictor go with the lossless byte
+    codecs only. Lossless modes round-trip bit-exactly through
+    ``decode_tiff`` (bilevel reads back as 255/0 gray)."""
     import struct
 
     comp_id = {
@@ -1380,35 +1119,22 @@ def encode_tiff(
         raise ValueError(f"planar must be 1 or 2 (got {planar})")
     if predictor not in (1, 2):
         raise ValueError(f"predictor must be 1 or 2 (got {predictor})")
-    src = np.asarray(pixels)
-    deep = src.dtype == np.uint16
-    if comp_id == 7:
-        if deep:
-            raise ValueError("jpeg compression writes 8-bit samples only")
-        if predictor == 2:
-            raise ValueError("predictor is not combinable with jpeg compression")
-    if bits is not None:
-        if bits not in (1, 2, 4):
-            raise ValueError(f"bits must be 1, 2 or 4 (got {bits})")
-        if src.ndim != 2:
-            raise ValueError("sub-byte encoding requires 2D grayscale input")
-        if deep or comp_id == 7 or predictor == 2:
-            raise ValueError("sub-byte samples: 8-bit input, no jpeg/predictor")
-        if int(src.max(initial=0)) >= (1 << bits):
-            raise ValueError(f"sample values exceed {bits}-bit range")
-    if comp_id in (2, 3, 4) and bits != 1:
-        raise ValueError(f"{compression} compression requires bits=1 bilevel input")
-    arr = src.astype(np.uint16 if deep else np.uint8)
+    arr = np.asarray(pixels)
+    if arr.dtype != np.uint8:
+        raise ValueError(f"encode_tiff takes uint8 pixels (got {arr.dtype})")
+    fax = comp_id in (2, 3, 4)
+    if (fax or comp_id == 7) and (predictor == 2 or tile is not None):
+        raise ValueError(f"{compression} compression writes strips without a predictor")
     gray = arr.ndim == 2
+    if fax and not gray:
+        raise ValueError(f"{compression} compression requires 2D bilevel input")
+    if comp_id == 7 and gray:
+        raise ValueError("jpeg compression requires (H, W, 3) RGB input")
     arr3 = arr[:, :, None] if gray else arr
     h, w, spp = arr3.shape
     if spp not in (1, 3):
         raise ValueError(f"unsupported channel count {spp}")
-    if planar == 2 and spp == 1:
-        planar = 1  # single plane: chunky and separate are identical
-    sample_bits = bits if bits is not None else (16 if deep else 8)
-    # little-endian sample bytes match the II header
-    le = arr3.astype("<u2") if deep else arr3
+    sample_bits = 1 if fax else 8
 
     def _compress(raw: bytes) -> bytes:
         if comp_id == 1:
@@ -1421,25 +1147,13 @@ def encode_tiff(
             return zlib.compress(raw, 6)
         return _tiff_lzw_encode(raw)
 
-    def _pack_rows(block2d: "np.ndarray") -> bytes:
-        # MSB-first sub-byte packing, rows padded to a byte boundary
-        rows, cols = block2d.shape
-        per_byte = 8 // bits
-        pad = (-cols) % per_byte
-        if pad:
-            block2d = np.pad(block2d, ((0, 0), (0, pad)))
-        grouped = block2d.reshape(rows, -1, per_byte).astype(np.uint16)
-        shifts = np.arange(per_byte - 1, -1, -1, dtype=np.uint16) * bits
-        return (grouped << shifts).sum(axis=2).astype(np.uint8).tobytes()
-
     def _encode_block(block: "np.ndarray") -> bytes:
         # block is (rows, cols, s) in file sample order
         if comp_id == 7:
             from covid19_spark.operators.jpeg import encode_jpeg
 
-            img = block[:, :, 0] if block.shape[2] == 1 else block
-            return encode_jpeg(np.ascontiguousarray(img), quality=jpeg_quality)
-        if comp_id in (2, 3, 4):
+            return encode_jpeg(np.ascontiguousarray(block), quality=jpeg_quality)
+        if fax:
             from covid19_spark.operators.ccitt import g3_encode, g4_encode, mh_encode
 
             if comp_id == 4:
@@ -1451,8 +1165,6 @@ def encode_tiff(
                     uncompressed=(compression == "g3_uncomp"),
                 )
             return mh_encode(block[:, :, 0])
-        if bits is not None:
-            return _compress(_pack_rows(block[:, :, 0]))
         return _compress(_maybe_diff(block).tobytes())
 
     def _maybe_diff(block: "np.ndarray") -> "np.ndarray":
@@ -1461,12 +1173,12 @@ def encode_tiff(
             return block
         d = block.astype(np.int64).copy()
         d[:, 1:] -= block.astype(np.int64)[:, :-1]
-        return (d & (0xFFFF if deep else 0xFF)).astype("<u2" if deep else np.uint8)
+        return (d & 0xFF).astype(np.uint8)
 
     planes = (
-        [le]
+        [arr3]
         if planar == 1
-        else [np.ascontiguousarray(le[:, :, p : p + 1]) for p in range(spp)]
+        else [np.ascontiguousarray(arr3[:, :, p : p + 1]) for p in range(spp)]
     )
     strips = []
     if tile is not None:
@@ -1486,12 +1198,12 @@ def encode_tiff(
             for y0 in range(0, h, rows_per_strip):
                 strips.append(_encode_block(pl[y0 : y0 + rows_per_strip]))
     # new-style JPEG writes photometric 6 (YCbCr — the JPEG-internal color
-    # space, per TechNote 2 / libtiff practice) for color, 1 for grayscale;
-    # G4 writes the fax convention 0 (WhiteIsZero: sample 1 = black ink)
-    if comp_id in (2, 3, 4):
+    # space, per TechNote 2 / libtiff practice); the CCITT codecs write the
+    # fax convention 0 (WhiteIsZero: sample 1 = black ink)
+    if fax:
         photometric = 0
     elif comp_id == 7:
-        photometric = 6 if spp == 3 else 1
+        photometric = 6
     else:
         photometric = 2 if spp == 3 else 1
     tags = [
@@ -1534,7 +1246,6 @@ def encode_tiff(
     entries = []
     for tag, typ, vals in tags:
         entries.append(tag_bytes(tag, typ, vals))
-    strip_data_off = data_off + len(extra) + 8 * len(strips) * 0  # placeholder
     # strip offsets array is itself out-of-line when > 1 strip
     counts = [len(s) for s in strips]
     # reserve space for the two arrays if out-of-line
@@ -1563,14 +1274,13 @@ def encode_tiff(
 
 def decode_image(payload: bytes) -> "np.ndarray":
     """Real decode path: pure-stdlib readers for uncompressed 24-bpp BMP,
-    full PNG (gray/RGB/palette/alpha, depths 1-16, Adam7 — the chart format
-    the reference serves), baseline + progressive + lossless JPEG
-    (operators/jpeg.py — tables read from the stream's own DQT/DHT), and
-    GIF87a/89a (LZW, interlace, transparency — first composited frame), and
-    baseline TIFF (both byte orders; none/PackBits/LZW strips, predictor 2,
-    RGB/gray/palette);
-    anything else needs a codec library the container doesn't ship (a
-    production build plugs Pillow/turbojpeg into the fall-through)."""
+    8-bit truecolour PNG (the chart format the reference serves), baseline
+    + progressive + lossless + arithmetic JPEG (operators/jpeg.py — tables
+    read from the stream's own DQT/DHT), still GIF (first image, global
+    colour table), and baseline little-endian TIFF (see the TIFF section
+    comment); anything else needs a codec library the package doesn't
+    ship (a production build plugs Pillow/turbojpeg into the
+    fall-through)."""
     if payload is not None and len(payload) >= 2 and payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload is not None and len(payload) >= 8 and payload[:8] == PNG_SIG:
@@ -1588,49 +1298,16 @@ def decode_image(payload: bytes) -> "np.ndarray":
     )
 
 
-def decode_image_with_peak(payload: bytes) -> "tuple[np.ndarray, float]":
-    """``(pixels, sample_peak)`` — ``decode_image`` plus the true peak
-    sample value the decode can produce, for [0, 1]-normalized feature
-    extraction. Dtype alone cannot carry this: a 12-bit JPEG decodes to
-    uint16 with peak 4095, and normalizing it by 65535 shrinks mean-RGB
-    features ~16x and collapses the gray histogram into the lowest buckets
-    (advisor finding, round 8). JPEG is the only format here whose
-    precision is not implied by the output dtype, and its SOF precision
-    field is an O(header) marker-walk sniff; every other codec's peak is
-    the dtype max."""
-    pixels = decode_image(payload)
-    if (
-        payload is not None
-        and len(payload) >= 2
-        and payload[:2] == b"\xff\xd8"
-        and pixels.dtype != np.uint8
-    ):
-        from covid19_spark.operators.jpeg import sniff_jpeg_frame
-
-        _, precision, _, _ = sniff_jpeg_frame(payload)
-        return pixels, float((1 << precision) - 1)
-    if pixels.dtype.kind in "iu":
-        return pixels, float(np.iinfo(pixels.dtype).max)
-    return pixels, 255.0
-
-
-def image_features_from_pixels(
-    pixels: "np.ndarray", dim: int = 8, peak: float | None = None
-) -> np.ndarray:
+def image_features_from_pixels(pixels: "np.ndarray", dim: int = 8) -> np.ndarray:
     """Fixed-width features from DECODED pixels: mean R/G/B (scaled to [0,1])
     plus a (dim-3)-bucket grayscale histogram, L2-normalized — the
     deterministic stand-in for a CNN embedding on the real-decode path.
-    Precision-aware: for deep decodes (uint16 — e.g. 12-bit SOF1 / 12-16
-    bit SOF3 JPEG) pass the sample ``peak`` (4095 for 12-bit; default
-    65535 for uint16, full-range 16-bit convention) and the [0, 1]
-    contract holds at any depth. The uint8 path (peak 255) is bit-identical
-    to the historical formula; dtype alone cannot distinguish 12- from
-    16-bit data in a uint16 array, hence the explicit parameter."""
+    Every decoder here returns uint8, or uint16 for 16-bit lossless JPEG,
+    at the full range of its dtype, so the dtype max is the sample peak and
+    the [0, 1] contract holds at both depths. The uint8 path (peak 255) is
+    bit-identical to the historical formula."""
     src = np.asarray(pixels)
-    if peak is None:
-        peak = (
-            float(np.iinfo(src.dtype).max) if src.dtype.kind in "iu" else 255.0
-        )
+    peak = float(np.iinfo(src.dtype).max)
     arr = src.astype(np.float32)
     means = arr.reshape(-1, 3).mean(axis=0) / peak
     gray_f = arr.mean(axis=2)
@@ -1762,8 +1439,7 @@ def _image_features(media: DataFrame, featurize, on_error: str = "fail") -> Data
 
 
 def _decoded_image_features(payload: bytes) -> np.ndarray:
-    pixels, peak = decode_image_with_peak(payload)
-    return image_features_from_pixels(pixels, peak=peak)
+    return image_features_from_pixels(decode_image(payload))
 
 
 def extract_image_features(media: DataFrame, on_error: str = "fail") -> DataFrame:
@@ -1985,8 +1661,7 @@ def dhash_pixels(pixels: "np.ndarray") -> int:
     noise, and rescaling — the standard perceptual near-dup key for image
     corpora.  The downstream 4 x 16-bit banded probe assumes EXACTLY these
     64 bits."""
-    arr = np.asarray(pixels, dtype=np.float64)
-    gray = arr.mean(axis=2) if arr.ndim == 3 else arr
+    gray = np.asarray(pixels, dtype=np.float64).mean(axis=2)
     small = _area_resize(gray, 8, 9)
     bits = (small[:, 1:] > small[:, :-1]).reshape(-1)
     v = 0
@@ -2035,11 +1710,7 @@ def image_near_dup_pairs(
     from covid19_spark.operators.dedup import simhash_candidate_pairs
 
     return simhash_candidate_pairs(
-        # a NULL hash is not bandable: excluded so it never masquerades as
-        # a degenerate bucket
-        hash_df.filter(F.col("dhash").isNotNull()).select(
-            F.col(id_col), F.col("dhash").alias("simhash")
-        ),
+        hash_df.select(F.col(id_col), F.col("dhash").alias("simhash")),
         id_col,
         max_hamming=max_hamming,
     )
@@ -2128,9 +1799,7 @@ def video_near_dup_pairs(
 
     bands = hamming_band_keys("dhash")
     banded = (
-        # a NULL frame hash is not bandable
-        frame_hash_df.filter(F.col("dhash").isNotNull())
-        .select(id_col, "frame_rank", "dhash", F.explode(bands).alias("bb"))
+        frame_hash_df.select(id_col, "frame_rank", "dhash", F.explode(bands).alias("bb"))
         .select(id_col, "frame_rank", "dhash", "bb.band", "bb.key")
     )
     banded = drop_oversized_buckets(
@@ -2206,183 +1875,18 @@ def encode_wav(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _g711_tables() -> "tuple[np.ndarray, np.ndarray]":
-    """256-entry expansion tables for the ITU-T G.711 companded encodings,
-    built from the public expansion formulas (A-law: invert the 0x55 XOR
-    mask, reassemble segment+mantissa; mu-law: bias-132 exponential).
-    Output float32 in [-1, 1] (linear range ±32256 / ±32124 over 32768)."""
-    alaw = np.empty(256, np.float32)
-    mulaw = np.empty(256, np.float32)
-    for code in range(256):
-        a = code ^ 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        alaw[code] = (t if a & 0x80 else -t) / 32768.0
-        u = ~code & 0xFF
-        m = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-        mulaw[code] = ((0x84 - m) if u & 0x80 else (m - 0x84)) / 32768.0
-    return alaw, mulaw
-
-
-_ALAW_TABLE, _MULAW_TABLE = _g711_tables()
-
-
-# IMA/DVI ADPCM (public spec; WAV format 0x11): 89-entry step-size table and
-# the 16-entry index-adjustment table, per the IMA Digital Audio Pack (1992).
-_IMA_STEPS = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37, 41,
-    45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173, 190,
-    209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658, 724,
-    796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272,
-    2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132,
-    7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818, 18500,
-    20350, 22385, 24623, 27086, 29794, 32767,
-], dtype=np.int32)
-_IMA_INDEX_ADJ = np.array(
-    [-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32
-)
-
-
-def _ima_decode_nibbles(nibbles, predictor: int, index: int) -> "tuple[list[int], int, int]":
-    """Decode a sequence of 4-bit IMA ADPCM codes given the running
-    predictor/step-index state; returns (samples, predictor, index).
-    Sequential by construction (each sample feeds the next prediction) —
-    per-block Python loop, invoked from Arrow-batched kernels only."""
-    out = []
-    for nib in nibbles:
-        step = int(_IMA_STEPS[index])
-        diff = step >> 3
-        if nib & 1:
-            diff += step >> 2
-        if nib & 2:
-            diff += step >> 1
-        if nib & 4:
-            diff += step
-        predictor = predictor - diff if nib & 8 else predictor + diff
-        predictor = max(-32768, min(32767, predictor))
-        index = max(0, min(88, index + int(_IMA_INDEX_ADJ[nib])))
-        out.append(predictor)
-    return out, predictor, index
-
-
-def _decode_ima_adpcm(data: bytes, ch: int, block_align: int) -> "np.ndarray":
-    """IMA ADPCM 'data' chunk → float32 samples (n, ch) in [-1, 1]. Blocks
-    are independent (each carries its own predictor/step-index header), so
-    a corrupt tail only loses its own block. Stereo interleaves 4-byte
-    nibble groups per channel within each block (IMA spec layout)."""
-    samples_per_ch: list[list[int]] = [[] for _ in range(ch)]
-    for bstart in range(0, len(data) - (len(data) % block_align), block_align):
-        block = data[bstart : bstart + block_align]
-        preds, idxs = [], []
-        for c in range(ch):
-            h = block[c * 4 : c * 4 + 4]
-            pred = int.from_bytes(h[0:2], "little", signed=True)
-            idxs.append(max(0, min(88, h[2])))
-            preds.append(pred)
-            samples_per_ch[c].append(pred)  # header predictor IS sample 0
-        body = block[4 * ch :]
-        # nibble stream: groups of 4 bytes per channel, round-robin
-        per_ch_nibbles: list[list[int]] = [[] for _ in range(ch)]
-        for g in range(0, len(body), 4 * ch):
-            for c in range(ch):
-                for b in body[g + 4 * c : g + 4 * c + 4]:
-                    per_ch_nibbles[c].append(b & 0x0F)
-                    per_ch_nibbles[c].append(b >> 4)
-        for c in range(ch):
-            dec, _p, _i = _ima_decode_nibbles(per_ch_nibbles[c], preds[c], idxs[c])
-            samples_per_ch[c].extend(dec)
-    n = min(len(s) for s in samples_per_ch) if ch else 0
-    arr = np.stack([np.array(s[:n], np.float32) for s in samples_per_ch], axis=1)
-    return arr / 32768.0
-
-
-#: Microsoft ADPCM predictor coefficient pairs and delta adaptation table —
-#: the canonical constants of the public RIFF/WAVE format-2 specification
-#: (shipped in every fmt-chunk extension; kept here as the default set).
-_MS_ADPCM_COEFFS = (
-    (256, 0), (512, -256), (0, 0), (192, 64), (240, 0), (460, -208), (392, -232)
-)
-_MS_ADPCM_ADAPT = (
-    230, 230, 230, 230, 307, 409, 512, 614, 768, 614, 512, 409, 307, 230, 230, 230
-)
-
-
-def _decode_ms_adpcm(
-    data: bytes, ch: int, block_align: int, coeffs
-) -> "np.ndarray":
-    """Microsoft ADPCM (WAV format 0x02) 'data' chunk → float32 (n, ch) in
-    [-1, 1]. Per block and channel: a predictor index into the coefficient
-    pairs, an initial delta, and the two seed samples (iSamp2 is older and
-    emits first); each 4-bit code then reconstructs
-    ``((s1·c1 + s2·c2) >> 8) + signed_nibble·delta`` with the public
-    16-entry delta adaptation. Blocks are independent — corruption loses
-    only its own block. Stereo alternates channels per nibble."""
-    samples_per_ch: list[list[int]] = [[] for _ in range(ch)]
-    for bstart in range(0, len(data) - len(data) % block_align, block_align):
-        block = data[bstart : bstart + block_align]
-        pred = list(block[:ch])
-        if any(p >= len(coeffs) for p in pred):
-            raise ValueError("corrupt WAV: MS ADPCM predictor out of range")
-        off = ch
-        delta = [
-            int.from_bytes(block[off + 2 * c : off + 2 * c + 2], "little", signed=True)
-            for c in range(ch)
-        ]
-        off += 2 * ch
-        s1 = [
-            int.from_bytes(block[off + 2 * c : off + 2 * c + 2], "little", signed=True)
-            for c in range(ch)
-        ]
-        off += 2 * ch
-        s2 = [
-            int.from_bytes(block[off + 2 * c : off + 2 * c + 2], "little", signed=True)
-            for c in range(ch)
-        ]
-        off += 2 * ch
-        for c in range(ch):
-            samples_per_ch[c].append(s2[c])
-            samples_per_ch[c].append(s1[c])
-        i = 0
-        for b in block[off:]:
-            for nib in (b >> 4, b & 0x0F):
-                c = i % ch
-                i += 1
-                c1, c2 = coeffs[pred[c]]
-                predicted = (s1[c] * c1 + s2[c] * c2) >> 8
-                signed = nib - 16 if nib >= 8 else nib
-                new = max(-32768, min(32767, predicted + signed * delta[c]))
-                s2[c], s1[c] = s1[c], new
-                delta[c] = max(16, (_MS_ADPCM_ADAPT[nib] * delta[c]) >> 8)
-                samples_per_ch[c].append(new)
-    n = min(len(s) for s in samples_per_ch) if ch else 0
-    arr = np.stack([np.array(s[:n], np.float32) for s in samples_per_ch], axis=1)
-    return arr / 32768.0
-
-
 def decode_wav(payload: bytes) -> "tuple[np.ndarray, int]":
     """Decode a RIFF/WAVE file to ``(samples, sample_rate)`` — samples as
     float32 in [-1, 1], shape (n, channels). Pure stdlib. Supports PCM
-    (format 1) at 8 (unsigned), 16, 24 (packed), and 32 bits, IEEE float
-    (format 3) at 32/64 bits, the ITU-T G.711 companded formats — A-law
-    (format 6) and mu-law (format 7), decoded by the public expansion
-    formulas — Microsoft ADPCM (format 0x02, the public RIFF coefficient
-    tables, honoring a stream's own fmt-extension table), and IMA/DVI
-    ADPCM (format 0x11, the public 4-bit step-adaptive codec); skips
-    unknown chunks (LIST, cue, ...). The remaining compressed formats
-    (MP3-in-WAV and vendor codecs) raise NotImplementedError — the
-    codec-library seam."""
+    (format 1) at 16, 24 (packed) and 32 bits and IEEE float (format 3)
+    at 32/64 bits; skips unknown chunks (LIST, cue, ...). 8-bit PCM and
+    every compressed format (G.711, ADPCM, MP3-in-WAV, vendor codecs)
+    raise NotImplementedError — the codec-library seam."""
     import struct
 
     if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
-    pos, fmt, data, fact_samples = 12, None, None, None
-    fmt_raw = b""
+    pos, fmt, data = 12, None, None
     while pos + 8 <= len(payload):
         cid = payload[pos : pos + 4]
         (ln,) = struct.unpack_from("<I", payload, pos + 4)
@@ -2393,13 +1897,8 @@ def decode_wav(payload: bytes) -> "tuple[np.ndarray, int]":
             if ln < 16:
                 raise ValueError("corrupt WAV: short fmt chunk")
             fmt = struct.unpack_from("<HHIIHH", payload, pos + 8)
-            fmt_raw = payload[pos + 8 : body_end]
         elif cid == b"data":
             data = payload[pos + 8 : body_end]
-        elif cid == b"fact" and ln >= 4:
-            # true per-channel sample count — authoritative for compressed
-            # formats whose final block pads to a whole nibble body
-            (fact_samples,) = struct.unpack_from("<I", payload, pos + 8)
         pos = body_end + (ln & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("corrupt WAV: missing fmt/data chunk")
@@ -2408,9 +1907,8 @@ def decode_wav(payload: bytes) -> "tuple[np.ndarray, int]":
         raise ValueError("corrupt WAV: zero channels")
     if audio_fmt == 1:  # integer PCM
         if bits == 8:
-            arr = np.frombuffer(data, np.uint8).astype(np.float32)
-            arr = (arr - 128.0) / 128.0
-        elif bits == 16:
+            raise NotImplementedError("8-bit PCM WAV not supported")
+        if bits == 16:
             arr = np.frombuffer(data, "<i2").astype(np.float32) / 32768.0
         elif bits == 24:
             raw = np.frombuffer(data[: len(data) - len(data) % 3], np.uint8).reshape(-1, 3)
@@ -2432,40 +1930,6 @@ def decode_wav(payload: bytes) -> "tuple[np.ndarray, int]":
             arr = np.frombuffer(data, "<f8").astype(np.float32)
         else:
             raise ValueError(f"corrupt WAV: invalid float bit depth {bits}")
-    elif audio_fmt in (6, 7):  # ITU-T G.711 A-law / mu-law, always 8-bit
-        if bits != 8:
-            raise ValueError(f"corrupt WAV: G.711 requires 8-bit samples, got {bits}")
-        arr = (
-            _ALAW_TABLE if audio_fmt == 6 else _MULAW_TABLE
-        )[np.frombuffer(data, np.uint8)]
-    elif audio_fmt == 0x02:  # Microsoft ADPCM (public RIFF spec tables)
-        if bits != 4:
-            raise ValueError(f"corrupt WAV: MS ADPCM requires 4-bit samples, got {bits}")
-        if _align < 7 * ch:
-            raise ValueError("corrupt WAV: MS ADPCM block align below header size")
-        coeffs = _MS_ADPCM_COEFFS
-        # coefficient table travels in the fmt extension (cbSize,
-        # samplesPerBlock, numCoef, pairs) — honor a stream's own table
-        if len(fmt_raw) >= 22:
-            (ncoef,) = struct.unpack_from("<H", fmt_raw, 20)
-            if ncoef and len(fmt_raw) >= 22 + 4 * ncoef:
-                coeffs = tuple(
-                    struct.unpack_from("<hh", fmt_raw, 22 + 4 * i)
-                    for i in range(ncoef)
-                )
-        decoded = _decode_ms_adpcm(data, ch, _align, coeffs)
-        if fact_samples is not None:
-            decoded = decoded[:fact_samples]
-        return decoded, rate
-    elif audio_fmt == 0x11:  # IMA/DVI ADPCM, 4-bit nibble codes
-        if bits != 4:
-            raise ValueError(f"corrupt WAV: IMA ADPCM requires 4-bit samples, got {bits}")
-        if _align < 4 * ch + 4:
-            raise ValueError("corrupt WAV: ADPCM block align below header size")
-        decoded = _decode_ima_adpcm(data, ch, _align)
-        if fact_samples is not None:
-            decoded = decoded[:fact_samples]  # trim final-block zero padding
-        return decoded, rate
     else:
         raise NotImplementedError(
             f"compressed WAV format {audio_fmt} needs a codec library"
@@ -2539,10 +2003,7 @@ def audio_near_dup_pairs(
     from covid19_spark.operators.dedup import simhash_candidate_pairs
 
     return simhash_candidate_pairs(
-        # a NULL fingerprint is not bandable (see image_near_dup_pairs)
-        fp_df.filter(F.col("afp").isNotNull()).select(
-            F.col(id_col), F.col("afp").alias("simhash")
-        ),
+        fp_df.select(F.col(id_col), F.col("afp").alias("simhash")),
         id_col,
         max_hamming=max_hamming,
     )

@@ -1822,9 +1822,7 @@ def q_tiff_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp = ("none", "packbits", "lzw")[d % 3]
         if d % 25 == 21:  # CCITT G4 bilevel scan (compression 4)
             ink = (img.mean(axis=2) < 128).astype(np.uint8)
-            payload = encode_tiff(
-                ink, compression="g4", bits=1, rows_per_strip=4 + d % 5
-            )
+            payload = encode_tiff(ink, compression="g4", rows_per_strip=4 + d % 5)
         elif d % 10 == 7:  # new-style JPEG-in-TIFF (compression 7)
             payload = encode_tiff(img, compression="jpeg", rows_per_strip=8)
         elif d % 10 == 3:  # Adobe deflate strips (compression 8)
@@ -1874,11 +1872,11 @@ _TIFF_MATRIX_VARIANTS = [
 #: identically; baseline is MH (vi 50). g3_uncomp exercises the T.4
 #: uncompressed-mode extension end-to-end (VERDICT r08 task #7).
 _TIFF_BILEVEL_VARIANTS = [
-    ("m_bilevel_mh", dict(compression="mh", bits=1, rows_per_strip=5)),
-    ("n_bilevel_g3", dict(compression="g3", bits=1, rows_per_strip=6)),
-    ("o_bilevel_g3_2d", dict(compression="g3_2d", bits=1, rows_per_strip=4)),
-    ("p_bilevel_g3_uncomp", dict(compression="g3_uncomp", bits=1, rows_per_strip=5)),
-    ("q_bilevel_g4", dict(compression="g4", bits=1, rows_per_strip=7)),
+    ("m_bilevel_mh", dict(compression="mh", rows_per_strip=5)),
+    ("n_bilevel_g3", dict(compression="g3", rows_per_strip=6)),
+    ("o_bilevel_g3_2d", dict(compression="g3_2d", rows_per_strip=4)),
+    ("p_bilevel_g3_uncomp", dict(compression="g3_uncomp", rows_per_strip=5)),
+    ("q_bilevel_g4", dict(compression="g4", rows_per_strip=7)),
 ]
 
 
@@ -1946,11 +1944,13 @@ QUERY_REGISTRY["tiff_codec_matrix"] = QuerySpec(
 
 def q_image_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-FORMAT lossless consistency: the same pixels encoded as BMP,
-    PNG (8- AND 16-bit — the 16-bit image is x*257, whose peak-normalized
-    features are algebraically identical to the 8-bit ones, so this also
-    pins the sample-peak contract), GIF (palette — every image here has
-    < 256 pixels, hence < 256 distinct colors), tiled-LZW TIFF, and
-    lossless SOF3 JPEG at 8 and 16 bits must produce the same features.
+    PNG, GIF (palette — every image here has < 256 pixels, hence < 256
+    distinct colors), tiled-LZW TIFF, and lossless SOF3 JPEG at 8 and 16
+    bits must produce the same features. The 16-bit JPEG image is x*257,
+    whose peak-normalized features are algebraically identical to the
+    8-bit ones, so it also pins the sample-peak contract. The c_png16
+    variant is a second 8-bit PNG of the same pixels (the high byte of
+    x*257 is x).
     Six INDEPENDENT codecs agreeing on every document is a far stronger
     decode-correctness check than any single round-trip. Features compare
     rounded to 4 decimals (the 16-bit JPEG path differs from the others by
@@ -1987,11 +1987,12 @@ def q_image_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             for vi, (vname, payload) in enumerate([
                 ("a_bmp", encode_bmp(img)),
                 ("b_png8", encode_png(img)),
-                ("c_png16", encode_png(img16)),
+                # encode_png writes 8-bit samples: the high byte of x*257
+                ("c_png16", encode_png((img16 >> 8).astype(np.uint8))),
                 ("d_gif", encode_gif(img)),
                 ("e_tiff_lzw_tile", encode_tiff(img, compression="lzw", tile=(6, 5))),
-                ("f_jpeg_lossless8", encode_jpeg_lossless(img, predictor=4)),
-                ("g_jpeg_lossless16", encode_jpeg_lossless(img16, predictor=4)),
+                ("f_jpeg_lossless8", encode_jpeg_lossless(img)),
+                ("g_jpeg_lossless16", encode_jpeg_lossless(img16)),
             ])
         ]
 

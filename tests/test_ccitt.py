@@ -118,10 +118,23 @@ def test_mh_in_tiff():
 
     rng = np.random.default_rng(17)
     img = (rng.random((20, 90)) < 0.4).astype(np.uint8)
-    got = decode_tiff(encode_tiff(img, compression="mh", bits=1, rows_per_strip=6))
+    got = decode_tiff(encode_tiff(img, compression="mh", rows_per_strip=6))
     assert np.array_equal(got[:, :, 0], (1 - img) * 255)
-    got = decode_tiff(encode_tiff(img, compression="mh", bits=1, tile=(8, 16)))
-    assert np.array_equal(got[:, :, 0], (1 - img) * 255)
+    with pytest.raises(ValueError, match="strips"):
+        encode_tiff(img, compression="mh", tile=(8, 16))
+
+
+def test_fax_tiles_are_refused():
+    """CCITT-compressed tiles are outside the supported TIFF profile: a
+    tiled file re-tagged as 1-bit G4 WhiteIsZero raises
+    NotImplementedError."""
+    from covid19_spark.operators.multimodal import decode_tiff, encode_tiff
+    from tests.media_gen import retag_tiff
+
+    tiled = encode_tiff(np.zeros((16, 16), np.uint8), tile=(8, 16))
+    fax = retag_tiff(retag_tiff(retag_tiff(tiled, 259, 4), 258, 1), 262, 0)
+    with pytest.raises(NotImplementedError, match="tiles"):
+        decode_tiff(fax)
 
 
 def test_g3_roundtrip_and_structure():
@@ -149,17 +162,15 @@ def test_g3_in_tiff():
     rng = np.random.default_rng(23)
     img = (rng.random((20, 90)) < 0.4).astype(np.uint8)
     for comp in ("g3", "g3_2d"):
-        got = decode_tiff(encode_tiff(img, compression=comp, bits=1, rows_per_strip=6))
+        got = decode_tiff(encode_tiff(img, compression=comp, rows_per_strip=6))
         assert np.array_equal(got[:, :, 0], (1 - img) * 255), comp
-        got = decode_tiff(encode_tiff(img, compression=comp, bits=1, tile=(8, 16)))
-        assert np.array_equal(got[:, :, 0], (1 - img) * 255), (comp, "tiles")
     # every defined T4Options bit decodes: bit 1 (uncompressed mode
     # allowed) and bit 2 (fill bits) on a stream that carries neither is a
     # no-op, not a seam (the EOL scanner absorbs fill zeros; the run
     # decoder recognizes the T.4 enter codes natively)
     import struct
 
-    p = bytearray(encode_tiff(img, compression="g3", bits=1, rows_per_strip=99))
+    p = bytearray(encode_tiff(img, compression="g3", rows_per_strip=99))
     i = p.find(struct.pack("<HHI", 292, 4, 1))
     assert i > 0
     for opts in (0x2, 0x4, 0x6):
@@ -169,8 +180,8 @@ def test_g3_in_tiff():
 
 
 def test_g4_in_tiff():
-    """TIFF compression 4: strips and tiles through the G4 codec, with the
-    fax photometric-0 convention (sample 1 = black ink decodes dark)."""
+    """TIFF compression 4: strips through the G4 codec, with the fax
+    photometric-0 convention (sample 1 = black ink decodes dark)."""
     from covid19_spark.operators.multimodal import (
         decode_image,
         decode_tiff,
@@ -179,11 +190,9 @@ def test_g4_in_tiff():
 
     rng = np.random.default_rng(9)
     img = (rng.random((30, 200)) < 0.3).astype(np.uint8)
-    got = decode_tiff(encode_tiff(img, compression="g4", bits=1, rows_per_strip=7))
+    got = decode_tiff(encode_tiff(img, compression="g4", rows_per_strip=7))
     assert np.array_equal(got[:, :, 0], (1 - img) * 255)
-    got = decode_tiff(encode_tiff(img, compression="g4", bits=1, tile=(9, 16)))
-    assert np.array_equal(got[:, :, 0], (1 - img) * 255)
-    got = decode_image(encode_tiff(img, compression="g4", bits=1, rows_per_strip=999))
+    got = decode_image(encode_tiff(img, compression="g4", rows_per_strip=999))
     assert np.array_equal(got[:, :, 0], (1 - img) * 255)
     with pytest.raises(ValueError, match="bilevel"):
         encode_tiff(rng.integers(0, 256, (8, 8, 3), dtype=np.uint8), compression="g4")
@@ -200,14 +209,18 @@ def test_t4_uncompressed_mode_roundtrip_and_escape():
     noisy = rng.integers(0, 2, size=(23, 61), dtype=np.uint8)
     smooth = np.zeros((23, 61), np.uint8)
     smooth[:, 20:40] = 1
-    for two_d in (False, True):
-        plain = g3_encode(noisy, two_d=two_d)
-        unc = g3_encode(noisy, two_d=two_d, uncompressed=True)
-        assert len(unc) < len(plain)  # the escape pays off on noise
-        assert np.array_equal(g3_decode(unc, 61, 23, two_d=two_d), noisy)
-        assert g3_encode(smooth, two_d=two_d, uncompressed=True) == g3_encode(
-            smooth, two_d=two_d
-        )
+    plain = g3_encode(noisy)
+    unc = g3_encode(noisy, uncompressed=True)
+    assert len(unc) < len(plain)  # the escape pays off on noise
+    assert np.array_equal(g3_decode(unc, 61, 23), noisy)
+    assert g3_encode(smooth, uncompressed=True) == g3_encode(smooth)
+    # uncompressed mode on 2D-coded lines is outside the supported profile
+    with pytest.raises(ValueError, match="1D"):
+        g3_encode(noisy, two_d=True, uncompressed=True)
+    eol_2d_enter = "000000000001" + "0" + "0000001111"
+    stream = int(eol_2d_enter.ljust(24, "0"), 2).to_bytes(3, "big")
+    with pytest.raises(NotImplementedError, match="2D"):
+        g3_decode(stream, 8, 1, two_d=True)
 
 
 def test_t4_uncompressed_hand_vector():
@@ -241,6 +254,6 @@ def test_t4_uncompressed_in_tiff():
 
     rng = np.random.default_rng(11)
     ink = rng.integers(0, 2, size=(19, 43), dtype=np.uint8)
-    p = encode_tiff(ink, compression="g3_uncomp", bits=1, rows_per_strip=6)
+    p = encode_tiff(ink, compression="g3_uncomp", rows_per_strip=6)
     assert struct.pack("<HHI", 292, 4, 1) + struct.pack("<I", 2) in p
     assert np.array_equal(decode_tiff(p)[:, :, 0], (1 - ink) * 255)

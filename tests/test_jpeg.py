@@ -190,7 +190,6 @@ def test_progressive_matches_baseline_exactly():
         (rng.integers(0, 256, (24, 40, 3), dtype=np.uint8), dict(subsampling="444")),
         (_gradient(17, 13), dict(subsampling="420")),
         ((np.mgrid[0:32, 0:24][0] * 7 % 256).astype(np.uint8), {}),
-        (_gradient(48, 48), dict(subsampling="420", restart_interval=2)),
     ]
     for img, kw in cases:
         base = decode_jpeg(encode_jpeg(img, quality=85, **kw))
@@ -267,10 +266,10 @@ def test_peek_jpeg_dims_contracts():
 
 def test_dc_decode_tracks_block_means_across_variants():
     """decode_jpeg_dc must return (ceil(H/8), ceil(W/8), 3) block means for
-    every supported stream shape — 4:4:4, 4:2:0 (chroma upsample-by-repeat
-    in _dc_assemble), grayscale (replicated), restart markers, and the
-    progressive fallback — each within quantization distance of the full
-    decode's true 8x8 block means."""
+    every sequential Huffman stream shape — 4:4:4, 4:2:0 (chroma
+    upsample-by-repeat in _dc_assemble), grayscale (replicated), restart
+    markers — each within quantization distance of the full decode's true
+    8x8 block means. Progressive streams are refused."""
     from covid19_spark.operators.jpeg import (
         decode_jpeg,
         decode_jpeg_dc,
@@ -286,7 +285,6 @@ def test_dc_decode_tracks_block_means_across_variants():
         ("420", encode_jpeg(img, quality=90, subsampling="420")),
         ("gray", encode_jpeg(gray, quality=90)),
         ("rst", encode_jpeg(img, quality=90, restart_interval=2)),
-        ("prog", encode_jpeg(img, quality=90, progressive=True)),
     ]
     for name, payload in variants:
         dc = decode_jpeg_dc(payload)
@@ -303,13 +301,15 @@ def test_dc_decode_tracks_block_means_across_variants():
             assert np.abs((dc.astype(np.float64) - bm) @ w).max() <= 3.0
         else:
             assert np.abs(dc.astype(np.float64) - bm).max() <= 3.0, name
+    with pytest.raises(NotImplementedError, match="DC-only"):
+        decode_jpeg_dc(encode_jpeg(img, quality=90, progressive=True))
 
 
 def test_lossless_sof3_roundtrip_and_contracts():
-    """Lossless JPEG (SOF3, T.81 Annex H — previously a NotImplementedError
-    seam): bit-exact round-trips for every predictor 1-7, grayscale and
-    RGB, plus the shared-surface contracts (header peek, DC thumbnail
-    fallback, invalid predictor rejection)."""
+    """Lossless JPEG (SOF3, T.81 Annex H): bit-exact RGB round-trip with
+    predictor 4, plus the shared-surface contracts — header peek, the DC
+    thumbnail and the other predictors and component counts refused, gray
+    input rejected by the encoder."""
     import pytest
 
     from covid19_spark.operators.jpeg import (
@@ -321,196 +321,140 @@ def test_lossless_sof3_roundtrip_and_contracts():
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (21, 34, 3), dtype=np.uint8)
-    for pred in range(1, 8):
-        payload = encode_jpeg_lossless(img, predictor=pred)
-        assert np.array_equal(decode_jpeg(payload), img)
     payload = encode_jpeg_lossless(img)
+    assert np.array_equal(decode_jpeg(payload), img)
     assert peek_jpeg_dims(payload) == (21, 34)
-    # DC thumbnail fallback: block means of the (exactly recovered) image
-    dc = decode_jpeg_dc(payload)
-    assert dc.shape == (3, 5, 3)
+    with pytest.raises(NotImplementedError, match="DC-only"):
+        decode_jpeg_dc(payload)
+    sos = payload.index(b"\xff\xda")
+    for pred in (1, 7):
+        other = bytearray(payload)
+        other[sos + 4 + 1 + 2 * 3] = pred  # Ss = predictor selector
+        with pytest.raises(NotImplementedError, match=f"predictor {pred}"):
+            decode_jpeg(bytes(other))
     gray = img.mean(axis=2).astype(np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_lossless(gray, predictor=2)),
-        np.repeat(gray[:, :, None], 3, axis=2),
-    )
-    with pytest.raises(ValueError, match="predictor"):
-        encode_jpeg_lossless(img, predictor=0)
+    with pytest.raises(ValueError, match="H, W, 3"):
+        encode_jpeg_lossless(gray)
 
 
 def test_16bit_quantization_tables_decode_identically():
-    """DQT precision 1 (16-bit entries, T.81 B.2.4.1 — emitted by some
-    encoders even for 8-bit images): rewrite a file's 8-bit DQT as 16-bit
-    with the same values; the decode must be bit-identical."""
-    import struct
-
+    """DQT precision 1 (16-bit entries, T.81 B.2.4.1) is outside the
+    supported profile: rewriting a file's 8-bit DQT as 16-bit makes the
+    decode raise NotImplementedError, while an invalid pq (2) stays a
+    corrupt-stream ValueError."""
     payload = encode_jpeg(_gradient(24, 24), quality=85)
-    out = bytearray()
-    pos = 2
-    out += payload[:2]
-    while pos + 4 <= len(payload):
-        marker = payload[pos + 1]
-        if payload[pos] != 0xFF:
-            break
-        if marker == 0xD9:
-            out += payload[pos:]
-            break
-        if marker == 0xDA:  # entropy data follows: copy the rest verbatim
-            out += payload[pos:]
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            nb = bytearray()
-            b = 0
-            while b < len(body):
-                tq = body[b] & 0x0F
-                nb.append(0x10 | tq)  # pq=1
-                for v in body[b + 1 : b + 65]:
-                    nb += struct.pack(">H", v)
-                b += 65
-            out += bytes([0xFF, 0xDB]) + struct.pack(">H", len(nb) + 2) + bytes(nb)
-        else:
-            out += payload[pos : pos + 2 + seglen]
-        pos += 2 + seglen
-    assert np.array_equal(decode_jpeg(bytes(out)), decode_jpeg(payload))
+    i = payload.find(b"\xff\xdb")
+    wide = bytearray(payload)
+    wide[i + 4] = 0x10 | (wide[i + 4] & 0x0F)  # pq=1
+    with pytest.raises(NotImplementedError, match="16-bit DQT"):
+        decode_jpeg(bytes(wide))
     with pytest.raises(ValueError, match="DQT precision"):
         bad = bytearray(payload)
-        i = bad.find(b"\xff\xdb")
         bad[i + 4] = 0x20 | (bad[i + 4] & 0x0F)  # pq=2: invalid
         decode_jpeg(bytes(bad))
 
 
+def _with_sof(payload: bytes, marker: int, prec: int) -> bytes:
+    """``payload`` with its SOF marker byte and precision byte rewritten."""
+    out = bytearray(payload)
+    i = out.find(b"\xff\xc0")
+    out[i + 1] = marker
+    out[i + 4] = prec
+    return bytes(out)
+
+
 def test_12bit_extended_sequential_roundtrip():
-    """12-bit SOF1 (T.81 extended sequential): encode from uint16 [0,4095],
-    decode back to uint16 RGB with high fidelity; true 12-bit dynamic range
-    survives (values above 255 come back above 255, i.e. no 8-bit clamp
-    anywhere in the pipeline)."""
-    rng = np.random.default_rng(11)
-    h, w = 40, 56
-    yy, xx = np.mgrid[0:h, 0:w]
-    gray12 = ((yy * 60 + xx * 40) % 4096).astype(np.uint16)
-    base = rng.integers(0, 4096, (5, 7, 3), dtype=np.uint16)
-    rgb12 = np.repeat(np.repeat(base, 8, axis=0), 8, axis=1)
-
-    for img in (gray12, rgb12):
-        payload = encode_jpeg(img, quality=92, precision=12)
-        out = decode_jpeg(payload)
-        assert out.dtype == np.uint16 and out.shape == (h, w, 3)
-        ref = img if img.ndim == 3 else np.repeat(img[:, :, None], 3, axis=2)
-        assert _psnr_peak(ref, out, 4095) > 45
-        assert out.max() > 255  # 12-bit range survives end to end
-
-    # subsampling + restart markers compose with 12-bit
-    p420 = encode_jpeg(rgb12, quality=85, precision=12, subsampling="420",
-                       restart_interval=2)
-    assert _psnr_peak(rgb12, decode_jpeg(p420), 4095) > 28
-
-    # DC-only thumbnail path keeps the 12-bit dtype and block geometry
-    dc = decode_jpeg(encode_jpeg(gray12, quality=92, precision=12), dc_only=True)
-    assert dc.dtype == np.uint16 and dc.shape == (5, 7, 3)
-
-
-def _psnr_peak(a, b, peak):
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    return float("inf") if mse == 0 else 10 * np.log10(peak * peak / mse)
+    """12-bit DCT frames are outside the supported profile: a 12-bit SOF1
+    header is refused with NotImplementedError, and the same stream
+    declared 8-bit SOF1 (extended sequential at P=8) decodes exactly like
+    its SOF0 original."""
+    payload = encode_jpeg(_gradient(), quality=92)
+    with pytest.raises(NotImplementedError, match="12-bit"):
+        decode_jpeg(_with_sof(payload, 0xC1, 12))
+    assert np.array_equal(decode_jpeg(_with_sof(payload, 0xC1, 8)), decode_jpeg(payload))
 
 
 def test_12bit_matches_8bit_pipeline_at_same_content():
-    """Encoding an 8-bit image and its exact x16 12-bit lift must decode to
-    the same picture on each path's own scale (within quantization slack of
-    the scaled tables) — pins that level shift, DQT x16 scaling, and the
-    colour transform all moved to the 12-bit centre coherently."""
+    """The encoders write 8-bit frames only: the SOF precision byte of a
+    baseline, progressive and arithmetic encoding of the same content is 8,
+    and all three decode to the same uint8 picture."""
+    from covid19_spark.operators.jpeg import sniff_jpeg_frame
+    from covid19_spark.operators.jpeg_arith import encode_jpeg_arith
+
     rng = np.random.default_rng(13)
     base = rng.integers(0, 256, (4, 5, 3), dtype=np.uint8)
     img8 = np.repeat(np.repeat(base, 8, axis=0), 8, axis=1)
-    img12 = (img8.astype(np.uint16) * 16)
-
-    out8 = decode_jpeg(encode_jpeg(img8, quality=90)).astype(np.float64)
-    out12 = decode_jpeg(encode_jpeg(img12, quality=90, precision=12)).astype(np.float64)
-    assert np.abs(out12 / 16.0 - out8).mean() < 4.0
+    streams = [
+        encode_jpeg(img8, quality=90),
+        encode_jpeg(img8, quality=90, progressive=True),
+        encode_jpeg_arith(img8, quality=90),
+    ]
+    assert [sniff_jpeg_frame(p)[1] for p in streams] == [8, 8, 8]
+    outs = [decode_jpeg(p) for p in streams]
+    assert all(o.dtype == np.uint8 and np.array_equal(o, outs[0]) for o in outs)
 
 
 def test_12bit_rejections_and_truncation_contract():
-    """12-bit baseline (SOF0) stays refused at sniff cost — T.81 restricts
-    baseline to 8-bit — and the truncation sweep contract extends to 12-bit
-    payloads."""
-    gray12 = (np.arange(32 * 40, dtype=np.uint16).reshape(32, 40) * 3) % 4096
-    payload = encode_jpeg(gray12, quality=88, precision=12)
-
-    from covid19_spark.operators.jpeg import sniff_jpeg_frame
-
-    assert sniff_jpeg_frame(payload)[:2] == (0xC1, 12)
-    mutated = bytearray(payload)
-    i = mutated.find(b"\xff\xc1")
-    mutated[i + 1] = 0xC0
-    with pytest.raises(NotImplementedError, match="12-bit"):
-        decode_jpeg(bytes(mutated))
-
-    cuts = list(range(2, min(len(payload), 180))) + list(range(180, len(payload) - 1, 41))
+    """12-bit frames are refused at sniff cost under every DCT SOF marker
+    (baseline, extended sequential, progressive, arithmetic), and the
+    truncation sweep contract holds for the refused payload too."""
+    payload = encode_jpeg(_gradient(32, 40), quality=88)
+    for marker in (0xC0, 0xC1, 0xC2, 0xC9):
+        with pytest.raises(NotImplementedError, match="12-bit"):
+            decode_jpeg(_with_sof(payload, marker, 12))
+    deep = _with_sof(payload, 0xC1, 12)
+    cuts = list(range(2, min(len(deep), 180))) + list(range(180, len(deep) - 1, 41))
     for n in cuts:
         with pytest.raises((ValueError, NotImplementedError)):
-            decode_jpeg(payload[:n])
+            decode_jpeg(deep[:n])
 
 
 def test_12bit_progressive_matches_sequential_exactly():
-    """12-bit progressive (SOF2, P=12 per T.81 Table B.2) shares the same
-    quantized coefficients as the 12-bit sequential encode, so decodes must
-    be bit-identical — the progressive encoder's per-scan derived tables
-    absorb the wider magnitude categories with no special casing."""
-    from covid19_spark.operators.jpeg import sniff_jpeg_frame
+    """Restart intervals are written and read for sequential streams only:
+    the progressive encoder rejects them, and a progressive stream that
+    carries a DRI segment is refused with NotImplementedError."""
+    import struct
 
-    rng = np.random.default_rng(9)
-    base = rng.integers(0, 4096, (5, 7, 3), dtype=np.uint16)
-    rgb12 = np.repeat(np.repeat(base, 8, axis=0), 8, axis=1)
-    for kw in ({}, dict(subsampling="420"), dict(restart_interval=2)):
-        seq = decode_jpeg(encode_jpeg(rgb12, quality=90, precision=12, **kw))
-        prog_payload = encode_jpeg(
-            rgb12, quality=90, precision=12, progressive=True, **kw
-        )
-        assert sniff_jpeg_frame(prog_payload)[:2] == (0xC2, 12)
-        prog = decode_jpeg(prog_payload)
-        assert prog.dtype == np.uint16
-        assert np.array_equal(seq, prog), kw
-    # the DC-only thumbnail path keeps the 12-bit dtype on progressive too
-    dc = decode_jpeg(
-        encode_jpeg(rgb12, quality=90, precision=12, progressive=True), dc_only=True
-    )
-    assert dc.dtype == np.uint16 and dc.shape == (5, 7, 3)
+    img = _gradient(48, 48)
+    with pytest.raises(ValueError, match="baseline"):
+        encode_jpeg(img, quality=90, progressive=True, restart_interval=2)
+    prog = encode_jpeg(img, quality=90, progressive=True)
+    i = prog.find(b"\xff\xc2")
+    dri = b"\xff\xdd" + struct.pack(">HH", 4, 2)
+    with pytest.raises(NotImplementedError, match="progressive"):
+        decode_jpeg(prog[:i] + dri + prog[i:])
 
 
 def test_lossless_high_precision_roundtrips_bit_exact():
-    """SOF3 at the DICOM precisions: 12- and 16-bit samples round-trip
-    bit-exactly through every predictor, including the mod-2^16 wrap case
-    (category 16, no extra bits) that only appears above 8 bits."""
+    """SOF3 at 16 bits: uint16 RGB samples round-trip bit-exactly, including
+    the mod-2^16 wrap case (category 16, no extra bits) that only appears
+    above 8 bits; other lossless precisions are refused at the seam and
+    other input dtypes are rejected by the encoder."""
     from covid19_spark.operators.jpeg import encode_jpeg_lossless, sniff_jpeg_frame
 
     rng = np.random.default_rng(7)
-    g16 = rng.integers(0, 65536, (23, 31), dtype=np.uint16)
-    payload = encode_jpeg_lossless(g16, predictor=1)
+    rgb16 = rng.integers(0, 65536, (23, 31, 3), dtype=np.uint16)
+    payload = encode_jpeg_lossless(rgb16)
     assert sniff_jpeg_frame(payload)[:2] == (0xC3, 16)
     out = decode_jpeg(payload)
     assert out.dtype == np.uint16
-    assert np.array_equal(out[:, :, 0], g16)
+    assert np.array_equal(out, rgb16)
 
     # 0/65535 alternation forces the ±32768 wrap on every sample
-    alt = np.zeros((6, 8), dtype=np.uint16)
+    alt = np.zeros((6, 8, 3), dtype=np.uint16)
     alt[:, 1::2] = 65535
-    for pred in range(1, 8):
-        got = decode_jpeg(encode_jpeg_lossless(alt, predictor=pred))[:, :, 0]
-        assert np.array_equal(got, alt), pred
+    assert np.array_equal(decode_jpeg(encode_jpeg_lossless(alt)), alt)
 
-    rgb12 = rng.integers(0, 4096, (9, 11, 3), dtype=np.uint16)
-    p12 = encode_jpeg_lossless(rgb12, predictor=4, precision=12)
-    assert sniff_jpeg_frame(p12)[:2] == (0xC3, 12)
-    assert np.array_equal(decode_jpeg(p12), rgb12)
+    p12 = bytearray(payload)
+    i = p12.find(b"\xff\xc3")
+    p12[i + 4] = 12
+    with pytest.raises(NotImplementedError, match="12-bit"):
+        decode_jpeg(bytes(p12))
 
     # uint8 input keeps the 8-bit contract (dtype and Annex K table)
-    g8 = rng.integers(0, 256, (12, 12), dtype=np.uint8)
+    g8 = rng.integers(0, 256, (12, 12, 3), dtype=np.uint8)
     o8 = decode_jpeg(encode_jpeg_lossless(g8))
-    assert o8.dtype == np.uint8 and np.array_equal(o8[:, :, 0], g8)
+    assert o8.dtype == np.uint8 and np.array_equal(o8, g8)
 
-    with pytest.raises(ValueError, match="exceed"):
-        encode_jpeg_lossless(rgb12, precision=8)
-    with pytest.raises(ValueError, match="precision"):
-        encode_jpeg_lossless(g8, precision=1)
+    with pytest.raises(ValueError, match="uint8 or uint16"):
+        encode_jpeg_lossless(rgb16.astype(np.int32))

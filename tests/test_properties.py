@@ -267,6 +267,7 @@ def test_incremental_screen_matches_python_model(spark, texts):
 # --- codec round-trip properties (no Spark session needed) -------------------
 
 import numpy as np  # noqa: E402
+import pytest  # noqa: E402
 
 CODEC_SETTINGS = settings(max_examples=12, deadline=None, derandomize=True)
 
@@ -294,15 +295,14 @@ def test_png_roundtrip_property(h, w, seed, ftype):
 )
 @CODEC_SETTINGS
 def test_png_adam7_equals_sequential_property(h, w, seed):
-    """An Adam7-interlaced encoding of the same pixels decodes identically
-    to the sequential encoding — for every (h, w), including sizes where
-    several of the 7 passes are empty."""
+    """Adam7 interlace is outside the supported PNG profile: an interlaced
+    header is refused for every (h, w) — including sizes where several of
+    the 7 passes are empty — while the sequential encoding of the same
+    pixels decodes exactly."""
     import struct
     import zlib
 
-    from covid19_spark.operators.multimodal import (
-        _ADAM7, PNG_SIG, decode_png, encode_png,
-    )
+    from covid19_spark.operators.multimodal import PNG_SIG, decode_png, encode_png
 
     img = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
 
@@ -312,19 +312,15 @@ def test_png_adam7_equals_sequential_property(h, w, seed):
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
-    raw = b""
-    for x0, y0, dx, dy in _ADAM7:
-        sub = img[y0::dy, x0::dx]
-        if sub.shape[0] and sub.shape[1]:
-            for r in range(sub.shape[0]):
-                raw += b"\x00" + sub[r].tobytes()
+    raw = b"".join(b"\x00" + img[r].tobytes() for r in range(h))
     interlaced = (
         PNG_SIG
         + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1))
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
-    assert np.array_equal(decode_png(interlaced), img)
+    with pytest.raises(NotImplementedError, match="interlace"):
+        decode_png(interlaced)
     assert np.array_equal(decode_png(encode_png(img)), img)
 
 
@@ -376,21 +372,16 @@ def test_wav_roundtrip_property(n, ch, rate, seed):
 )
 @CODEC_SETTINGS
 def test_g711_companding_error_bound_property(n, law, seed):
-    """G.711 companding is per-sample, so the round-trip error bound holds
-    for ARBITRARY signals (unlike ADPCM, whose step adaptation lags on
-    discontinuities): |decode(encode(x)) - x| <= max(half the largest
-    segment step, the clip distance above the top codeword) — for mu-law
-    the top codeword is 32124/32768, so inputs near ±1 clip by up to
-    1 - 0.9803 = 0.0197, which dominates the 0.0156 half-step."""
+    """G.711 (A-law format 6, mu-law format 7) is outside the supported WAV
+    profile: a companded file of any length is refused at the format seam
+    with NotImplementedError."""
     from covid19_spark.operators.multimodal import decode_wav
-    from tests.media_gen import encode_wav_g711
+    from tests.media_gen import riff_wav
 
-    sig = (
-        np.random.default_rng(seed).uniform(-1.0, 1.0, size=n).astype(np.float32)
-    )
-    out, rate = decode_wav(encode_wav_g711(sig, law=law, sample_rate=8000))
-    assert rate == 8000 and out.shape == (n, 1)
-    assert np.abs(out[:, 0] - sig).max() <= 0.0198
+    fmt_tag = {"alaw": 6, "mulaw": 7}[law]
+    data = np.random.default_rng(seed).integers(0, 256, n, dtype=np.uint8).tobytes()
+    with pytest.raises(NotImplementedError, match=f"compressed WAV format {fmt_tag}"):
+        decode_wav(riff_wav(fmt_tag, 8, data))
 
 
 # --- connected components vs union-find reference ----------------------------
@@ -448,12 +439,19 @@ def test_connected_components_match_union_find(spark, raw_edges):
 @CODEC_SETTINGS
 def test_lossless_jpeg_roundtrip_property(h, w, pred, seed):
     """SOF3 lossless JPEG must round-trip EVERY image bit-exactly — the
-    defining property of the format, for all 7 predictors and arbitrary
-    pixel content (where the lossy paths only bound error)."""
+    defining property of the format, for arbitrary pixel content (where the
+    lossy paths only bound error). Predictor 4 is the supported one: the
+    same stream declaring any other predictor is refused."""
     from covid19_spark.operators.jpeg import decode_jpeg, encode_jpeg_lossless
 
     img = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(decode_jpeg(encode_jpeg_lossless(img, predictor=pred)), img)
+    payload = encode_jpeg_lossless(img)
+    assert np.array_equal(decode_jpeg(payload), img)
+    if pred != 4:
+        other = bytearray(payload)
+        other[payload.index(b"\xff\xda") + 4 + 1 + 2 * 3] = pred
+        with pytest.raises(NotImplementedError, match="predictor"):
+            decode_jpeg(bytes(other))
 
 
 @given(
@@ -481,20 +479,15 @@ def test_gif_roundtrip_property(h, w, ncolors, seed):
 )
 @CODEC_SETTINGS
 def test_ms_adpcm_length_and_seed_property(n, seed):
-    """For any sample count, MS-ADPCM round-trips to EXACTLY n samples
-    (fact-chunk trim) with the per-block seed samples bit-exact."""
+    """Microsoft ADPCM (format 2) is outside the supported WAV profile: a
+    file of any length is refused at the format seam with
+    NotImplementedError."""
     from covid19_spark.operators.multimodal import decode_wav
-    from tests.media_gen import encode_wav_ms_adpcm
+    from tests.media_gen import riff_wav
 
-    rng = np.random.default_rng(seed)
-    sig = (rng.standard_normal(n) * 3000).astype(np.int16)
-    out, _ = decode_wav(encode_wav_ms_adpcm(sig, block_samples=500))
-    assert out.shape == (n, 1)
-    got = out[:, 0] * 32768.0
-    for b in range(0, n, 500):  # block seeds stored verbatim
-        assert got[b] == float(sig[b])
-        if b + 1 < n:
-            assert got[b + 1] == float(sig[b + 1])
+    data = np.random.default_rng(seed).integers(0, 256, n, dtype=np.uint8).tobytes()
+    with pytest.raises(NotImplementedError, match="compressed WAV format 2"):
+        decode_wav(riff_wav(2, 4, data))
 
 
 @given(
@@ -505,16 +498,21 @@ def test_ms_adpcm_length_and_seed_property(n, seed):
 )
 @CODEC_SETTINGS
 def test_jpeg_12bit_progressive_equals_sequential_property(h, w, seed, quality):
-    """12-bit progressive and sequential encodings share quantized
-    coefficients, so decodes are bit-identical for every size/quality."""
+    """12-bit DCT frames are outside the supported profile: for every
+    size/quality, the sequential and progressive encodings decode
+    bit-identically at 8 bits, and the same streams declared 12-bit are
+    refused."""
     from covid19_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
-    img = np.random.default_rng(seed).integers(0, 4096, (h, w, 3), dtype=np.uint16)
-    seq = decode_jpeg(encode_jpeg(img, quality=quality, precision=12))
-    prog = decode_jpeg(
-        encode_jpeg(img, quality=quality, precision=12, progressive=True)
-    )
-    assert seq.dtype == np.uint16 and np.array_equal(seq, prog)
+    img = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
+    seq = encode_jpeg(img, quality=quality)
+    prog = encode_jpeg(img, quality=quality, progressive=True)
+    assert np.array_equal(decode_jpeg(seq), decode_jpeg(prog))
+    for payload, marker in ((seq, b"\xff\xc0"), (prog, b"\xff\xc2")):
+        deep = bytearray(payload)
+        deep[payload.index(marker) + 4] = 12
+        with pytest.raises(NotImplementedError, match="12-bit"):
+            decode_jpeg(bytes(deep))
 
 
 @given(
@@ -526,17 +524,23 @@ def test_jpeg_12bit_progressive_equals_sequential_property(h, w, seed, quality):
 )
 @CODEC_SETTINGS
 def test_lossless_jpeg_precision_roundtrip_property(h, w, seed, predictor, precision):
-    """Lossless SOF3 is bit-exact for arbitrary images at 8/12/16-bit
-    precision and every predictor — including mod-2^16 wrap diffs."""
+    """Lossless SOF3 is bit-exact for arbitrary RGB images whose samples fit
+    8, 12 or 16 bits — the frame precision follows the dtype (8 for uint8,
+    16 for uint16), including mod-2^16 wrap diffs — and any predictor but 4
+    is refused."""
     from covid19_spark.operators.jpeg import decode_jpeg, encode_jpeg_lossless
 
     rng = np.random.default_rng(seed)
-    hi = 1 << precision
-    img = rng.integers(0, hi, (h, w), dtype=np.uint16)
+    img = rng.integers(0, 1 << precision, (h, w, 3), dtype=np.uint16)
     if precision == 8:
         img = img.astype(np.uint8)
-    out = decode_jpeg(encode_jpeg_lossless(img, predictor=predictor, precision=precision))
-    assert np.array_equal(out[:, :, 0], img)
+    payload = encode_jpeg_lossless(img)
+    assert np.array_equal(decode_jpeg(payload), img)
+    if predictor != 4:
+        other = bytearray(payload)
+        other[payload.index(b"\xff\xda") + 4 + 1 + 2 * 3] = predictor
+        with pytest.raises(NotImplementedError, match="predictor"):
+            decode_jpeg(bytes(other))
 
 
 @given(
@@ -564,22 +568,23 @@ def test_tiff_roundtrip_property(h, w, seed, comp, rps):
 )
 @settings(max_examples=40, deadline=None)
 def test_g3_uncompressed_roundtrip_property(h, w, seed, density):
-    """T.4 uncompressed-mode escape: for ANY bitmap shape/density, G3 with
-    uncompressed=True round-trips bit-exactly in both 1D and 2D coding,
-    and never produces a LONGER stream than plain coding (the escape is
-    taken only when strictly shorter)."""
+    """T.4 uncompressed-mode escape: for ANY bitmap shape/density, 1D G3
+    with uncompressed=True round-trips bit-exactly and never produces a
+    LONGER stream than plain coding (the escape is taken only when strictly
+    shorter); 2D-coded G3 round-trips without it."""
     import numpy as np
 
     from covid19_spark.operators.ccitt import g3_decode, g3_encode
 
     rng = np.random.default_rng(seed)
     bm = (rng.random((h, w)) < density).astype(np.uint8)
-    for two_d in (False, True):
-        plain = g3_encode(bm, two_d=two_d)
-        unc = g3_encode(bm, two_d=two_d, uncompressed=True)
-        assert len(unc) <= len(plain)
-        assert np.array_equal(g3_decode(unc, w, h, two_d=two_d), bm)
-        assert np.array_equal(g3_decode(plain, w, h, two_d=two_d), bm)
+    plain = g3_encode(bm)
+    unc = g3_encode(bm, uncompressed=True)
+    assert len(unc) <= len(plain)
+    assert np.array_equal(g3_decode(unc, w, h), bm)
+    assert np.array_equal(g3_decode(plain, w, h), bm)
+    two_d = g3_encode(bm, two_d=True)
+    assert np.array_equal(g3_decode(two_d, w, h, two_d=True), bm)
 
 
 words_st = st.sampled_from(["a", "b", "c", "d"])

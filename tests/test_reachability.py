@@ -383,14 +383,6 @@ KEEP_OPTIONS: dict[str, str] = {
         "test reaches the per-k-round lineage checkpoint",
     "operators.graph.label_propagation(checkpoint_every)":
         "test reaches the per-k-round lineage checkpoint",
-    "operators.jpeg.encode_jpeg(precision)":
-        "test reaches the 12-bit (SOF1) decode branch; ROADMAP item 9 decides 12-bit",
-    "operators.jpeg.encode_jpeg_lossless(precision)":
-        "test reaches the 12-bit lossless decode branch; ROADMAP item 9 decides 12-bit",
-    "operators.jpeg_arith.encode_jpeg_arith(precision)":
-        "test reaches the 12-bit arithmetic decode branch; ROADMAP item 9 decides 12-bit",
-    "operators.jpeg_arith.encode_jpeg_arith(subsampling)":
-        "test reaches the subsampled arithmetic decode branch",
 }
 
 _OPTION_REASON = re.compile(r"^(deployment setting: \S|test reaches \S)")
