@@ -1089,13 +1089,12 @@ def encode_tiff(
     planar: int = 1,
     tile: "tuple[int, int] | None" = None,
     predictor: int = 1,
-    jpeg_quality: int = 90,
 ) -> bytes:
     """Encode uint8 pixels as baseline little-endian TIFF with 8-bit
     samples — ``compression``: "none", "packbits", "lzw", "deflate" (Adobe
     deflate, compression 8: zlib per strip/tile) for (H, W, 3) RGB or
     (H, W) grayscale input; "jpeg" (new-style JPEG-in-TIFF, compression 7:
-    every strip is a complete JPEG stream from ``operators/jpeg``; lossy,
+    every strip is a complete quality-90 JPEG stream from ``operators/jpeg``; lossy,
     so the round-trip contract is pixel-equality with the per-strip JPEG
     round-trip, not the raw input) for RGB input; or the CCITT bilevel
     codecs "mh", "g3", "g3_2d", "g3_uncomp", "g4" for (H, W) input of 0/1
@@ -1152,7 +1151,7 @@ def encode_tiff(
         if comp_id == 7:
             from covid19_spark.operators.jpeg import encode_jpeg
 
-            return encode_jpeg(np.ascontiguousarray(block), quality=jpeg_quality)
+            return encode_jpeg(np.ascontiguousarray(block), quality=90)
         if fax:
             from covid19_spark.operators.ccitt import g3_encode, g4_encode, mh_encode
 
