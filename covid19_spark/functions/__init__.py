@@ -1,7 +1,1 @@
-from covid19_spark.functions.scalars import (
-    INDIAN_STATES,
-    best_news_source,
-    is_within_past_week,
-)
-
-__all__ = ["INDIAN_STATES", "best_news_source", "is_within_past_week"]
+"""Scalar column functions of the reference helpers."""

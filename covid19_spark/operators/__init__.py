@@ -4,28 +4,3 @@ Each operator is written against unbounded semantics where meaningful, so the
 same function body composes into both batch jobs and Structured Streaming
 queries; sources and sinks bind at the edges (SURVEY §7.1).
 """
-
-from covid19_spark.operators.delta import running_delta
-from covid19_spark.operators.rollup import daily_rollup, grand_total_rollup
-from covid19_spark.operators.rates import (
-    active_cases,
-    doubling_rate,
-    moving_average,
-    positivity_rate,
-)
-from covid19_spark.operators.asof import latest_within_lookback
-from covid19_spark.operators.series import date_spine, pivot_series, top_k
-
-__all__ = [
-    "running_delta",
-    "daily_rollup",
-    "grand_total_rollup",
-    "active_cases",
-    "doubling_rate",
-    "moving_average",
-    "positivity_rate",
-    "latest_within_lookback",
-    "date_spine",
-    "pivot_series",
-    "top_k",
-]

@@ -15,7 +15,7 @@ engine-portable) session can reopen the index:
     <path>/codes/       (id, codes ARRAY<INT>) PARTITIONED BY centroid_id
 
 ``codes`` is partitioned by the IVF list id, which is what makes a probe a
-*file-pruning* operation: a query batch that probes ``n_probes`` of
+*file-pruning* operation: a query batch that probes ``IVF_PROBES`` of
 ``n_centroids`` lists reads only those directories. ``ivfpq_index_topk``
 collects the batch's distinct probed list ids — bounded by ``n_centroids``
 rows, a contract-small driver list regardless of corpus or batch size —
@@ -39,6 +39,10 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from covid19_spark.operators.similarity import (
+    IVF_CENTROIDS,
+    IVF_PROBES,
+    PQ_CODES,
+    PQ_M,
     ivf_assign,
     ivfpq_encode,
     ivfpq_quantizers,
@@ -63,13 +67,11 @@ class IvfPqIndex(NamedTuple):
 def write_ivfpq_index(
     corpus: DataFrame,
     path: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
     attr_cols: "Sequence[str]" = (),
     fingerprint: str = "",
 ) -> dict:
-    """Build the index at ``path`` (overwrite): fit quantizers, encode the
+    """Build the index at ``path`` (overwrite): fit quantizers (``IVF_CENTROIDS``
+    lists, ``PQ_M`` x ``PQ_CODES`` codebooks), encode the
     corpus (``vec_id``, ``embedding``) in one map pass, write codes partitioned by IVF list. The only
     corpus-sized work is the encode scan; everything else is KB-sized.
     Returns the meta dict that was persisted.
@@ -78,7 +80,7 @@ def write_ivfpq_index(
     the id in the build pass) — the filtered-vector-search seam: a serving
     predicate on these columns applies directly to the codes scan, before
     any distance work (see ``ivfpq_index_topk(codes_filter=...)``)."""
-    centroids, codebooks = ivfpq_quantizers(corpus, n_centroids, m, n_codes)
+    centroids, codebooks = ivfpq_quantizers(corpus)
     spark = corpus.sparkSession
     use_fast_committer(spark)
     # meta is ONE row — written driver-side (meta_io); its dim field is
@@ -96,11 +98,11 @@ def write_ivfpq_index(
     # multiple of m this is the ENCODED width (PQ's slice drops the tail,
     # same as the in-memory operators), which is the width that matters to
     # every consumer of the index
-    dim = len(cb_first[0]["cvec"]) * m if cb_first else 0
+    dim = len(cb_first[0]["cvec"]) * PQ_M if cb_first else 0
     meta = {
-        "n_centroids": int(n_centroids),
-        "m": int(m),
-        "n_codes": int(n_codes),
+        "n_centroids": IVF_CENTROIDS,
+        "m": PQ_M,
+        "n_codes": PQ_CODES,
         "dim": int(dim),
         "id_col": "vec_id",
         "vec_col": "embedding",
@@ -129,7 +131,7 @@ def write_ivfpq_index(
             }
         ),
     )
-    encoded = ivfpq_encode(corpus, centroids, codebooks, m)
+    encoded = ivfpq_encode(corpus, centroids, codebooks)
     if attr_cols:
         # one build-time co-shuffle on the id glues the serving attributes
         # onto the code rows; queries then never touch the vector store to
@@ -178,9 +180,6 @@ def ensure_ivfpq_index(
     corpus: DataFrame,
     path: str,
     fingerprint: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
     attr_cols: "Sequence[str]" = (),
 ) -> IvfPqIndex:
     """Open the index at ``path``, (re)building it first iff absent,
@@ -189,9 +188,9 @@ def ensure_ivfpq_index(
     corpus snapshot (file size+mtime locally; the dataset/table version
     id at cluster scale) and must be NON-EMPTY: an empty fingerprint
     would match every prior empty-fingerprint build, silently serving
-    one corpus's queries from another's index.  Params are compared
-    against the persisted meta, so the same path can never serve a
-    mismatched quantizer setup."""
+    one corpus's queries from another's index.  The quantizer setup is
+    compared against the persisted meta, so the same path can never serve
+    a mismatched one."""
     if not fingerprint:
         raise ValueError("ensure_ivfpq_index requires a non-empty fingerprint")
     return ensure_store(
@@ -200,17 +199,15 @@ def ensure_ivfpq_index(
         is_fresh=lambda: meta_matches(
             f"{path}/meta",
             fingerprint=fingerprint,
-            n_centroids=int(n_centroids),
-            m=int(m),
-            n_codes=int(n_codes),
+            n_centroids=IVF_CENTROIDS,
+            m=PQ_M,
+            n_codes=PQ_CODES,
             id_col="vec_id",
             vec_col="embedding",
             attr_cols=",".join(attr_cols),
         ),
         build=lambda tmp: write_ivfpq_index(
-            corpus, tmp, n_centroids=n_centroids, m=m, n_codes=n_codes,
-            attr_cols=attr_cols,
-            fingerprint=fingerprint,
+            corpus, tmp, attr_cols=attr_cols, fingerprint=fingerprint
         ),
         open_store=read_ivfpq_index,
     )
@@ -230,9 +227,6 @@ def ivfpq_index_topk(
     index: IvfPqIndex,
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_probes: int = 3,
-    shortlist: int = 50,
     codes_filter=None,
 ) -> DataFrame:
     """Serve a query batch from a persisted index: probe → ADC over probed
@@ -248,7 +242,8 @@ def ivfpq_index_topk(
     probes exactly as in the unfiltered case; highly selective predicates
     warrant more probes (the standard filtered-ANN tradeoff).
 
-    The batch's DISTINCT probed list ids — at most ``n_centroids`` ints
+    The batch's DISTINCT probed list ids (``IVF_PROBES`` per query) — at
+    most ``n_centroids`` ints
     however large the batch, a contract-small driver list — filter the
     codes with ``isin``, so the parquet scan carries a static
     ``PartitionFilters`` and untouched list directories are never opened.
@@ -258,7 +253,7 @@ def ivfpq_index_topk(
     meta = index.meta
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     probed = ivf_assign(
-        queries, index.centroids, id_col, vec_col, n_probes=n_probes
+        queries, index.centroids, id_col, vec_col, n_probes=IVF_PROBES
     ).select("centroid_id").distinct().collect()
     codes = index.codes.filter(
         F.col("centroid_id").isin(sorted(int(r["centroid_id"]) for r in probed))
@@ -269,6 +264,5 @@ def ivfpq_index_topk(
         )
     return ivfpq_search(
         codes, index.centroids, index.codebooks, corpus, queries,
-        k=k, n_probes=n_probes, m=meta["m"], n_codes=meta["n_codes"],
-        shortlist=shortlist, id_col=id_col, vec_col=vec_col,
+        m=meta["m"], n_codes=meta["n_codes"], id_col=id_col, vec_col=vec_col,
     )

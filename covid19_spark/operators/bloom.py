@@ -10,15 +10,15 @@ positives (a small over-drop, tunable via bits-per-key).
 
 Spark-first construction, no UDFs anywhere:
 
-- build: each key expands to ``k`` positions ``pmod(xxhash64(key, seed_i),
+- build: each key expands to ``K`` positions ``pmod(xxhash64(key, seed_i),
   m)``; positions reduce to a ``(word, bits)`` frame via the ``bit_or``
   aggregate over 64-bit masks — ONE map + one bounded exchange (≤ m/64
   rows regardless of corpus size; m is fixed by contract, so the filter
   frame is broadcast-sized BY CONSTRUCTION, the same contract class as the
   BPE vocabulary cap).
-- probe: candidates expand to the same ``k`` positions, broadcast-join the
+- probe: candidates expand to the same ``K`` positions, broadcast-join the
   filter frame on word index, and a per-candidate ``min(hit)`` aggregate
-  ANDs the ``k`` lookups. Map + broadcast join + one keyed agg — the probe
+  ANDs the ``K`` lookups. Map + broadcast join + one keyed agg — the probe
   never shuffles the filter, and the candidate exchange carries one bit
   per (candidate, seed).
 
@@ -33,14 +33,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+K = 7  # probe bits per key
 
-def _positions(key, m_bits: int, k: int):
-    """Array of the ``k`` bit positions of a key column (xxhash64 family,
-    seeds ``41 .. 40+k``)."""
+
+def _positions(key, m_bits: int):
+    """Array of the ``K`` bit positions of a key column (xxhash64 family,
+    seeds ``41 .. 40+K``)."""
     return F.array(
         *[
             F.pmod(F.xxhash64(key, F.lit(41 + i)), F.lit(m_bits))
-            for i in range(k)
+            for i in range(K)
         ]
     )
 
@@ -49,12 +51,11 @@ def bloom_build(
     df: DataFrame,
     key_col: str,
     m_bits: int = 1 << 20,
-    k: int = 7,
 ) -> DataFrame:
     """``(word, bits)`` Bloom bitmap of ``df[key_col]``: word = position
     div 64 (long), bits = OR of the 64-bit masks landing in that word.
     At most ``m_bits/64`` rows — broadcastable at any corpus size."""
-    pos = F.explode(_positions(F.col(key_col), m_bits, k)).alias("__pos")
+    pos = F.explode(_positions(F.col(key_col), m_bits)).alias("__pos")
     return (
         df.select(pos)
         .select(
@@ -71,19 +72,18 @@ def bloom_might_contain(
     bloom: DataFrame,
     key_col: str,
     m_bits: int = 1 << 20,
-    k: int = 7,
 ) -> DataFrame:
-    """``candidates`` + a ``might_contain`` boolean: true iff ALL ``k``
+    """``candidates`` + a ``might_contain`` boolean: true iff ALL ``K``
     probe bits are set. Guarantees: no false negatives (an indexed key
     always probes true); false positives at the Bloom rate.
 
-    Plan: candidate → k probe rows → broadcast hash join on word →
+    Plan: candidate → K probe rows → broadcast hash join on word →
     per-candidate ``min(hit)``. The filter side never exceeds ``m_bits/64``
-    rows; the only exchange on the candidate side is the k-row fold back
+    rows; the only exchange on the candidate side is the K-row fold back
     to one row per candidate."""
     probe = candidates.select(
         F.col(key_col).alias("__key"),
-        F.posexplode(_positions(F.col(key_col), m_bits, k)).alias(
+        F.posexplode(_positions(F.col(key_col), m_bits)).alias(
             "__i", "__pos"
         ),
     ).select(

@@ -20,7 +20,7 @@ trainer) is two-phase:
      driver-sized even on web text whose distinct-"word" set (typos, URLs,
      numbers) grows without bound.
 
-Encoding is map-only: the merge table broadcasts (it is ``n_merges`` rows)
+Encoding is map-only: the merge table broadcasts (it is at most 120 rows)
 and an Arrow-batched ``mapInPandas`` kernel applies the greedy merge
 procedure per word with a per-batch word cache (natural-language word
 frequency follows Zipf's law, so the cache hit rate is high and the
@@ -70,10 +70,9 @@ def _merge_word(symbols: tuple, pair: tuple) -> tuple:
 def train_bpe(
     df: DataFrame,
     text_col: str = "text",
-    n_merges: int = 200,
     max_vocab_candidates: int = 5_000_000,
 ) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges from a corpus.
+    """Learn 120 BPE merges (fewer if no pair repeats) from a corpus.
 
     Distributed word-count scan, then the classic sequential merge loop on
     the driver over the (vocabulary-sized) frequency table. Returns the
@@ -124,7 +123,7 @@ def train_bpe(
         update_pairs(wi, +1)
 
     merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
+    for _ in range(120):
         # deterministic argmax: full scan with a strict total order on
         # (-count, pair) — iteration order of the dict cannot matter
         best, best_cnt = None, 0
@@ -174,7 +173,7 @@ def bpe_tokenize(
     """``(id_col, n_words, n_tokens, tokens)`` — Arrow-batched encoder.
 
     The merge table broadcasts implicitly through the task closure
-    (``n_merges`` pairs — KBs); each batch keeps a word→tokens cache, so
+    (at most 120 pairs — KBs); each batch keeps a word→tokens cache, so
     Zipf-distributed text amortizes the merge loop to a dict hit per word.
     Map-only: no shuffle at any corpus size.
     """

@@ -259,9 +259,9 @@ def _decode_uncompressed(br: _BitReader, out_row: "np.ndarray", pos: int,
             return pos, br.read_bit()
 
 
-def _emit_uncompressed(bw: _BitWriter, row: "np.ndarray", next_color: int) -> None:
+def _emit_uncompressed(bw: _BitWriter, row: "np.ndarray") -> None:
     """Literal-code a whole line in uncompressed mode (enter code NOT
-    included) and exit with ``next_color``. White runs longer than the
+    included) and exit with white as the next color. White runs longer than the
     4-white headroom of the pattern/exit codes chunk through the
     five-white code 000001."""
     zeros = 0
@@ -281,7 +281,7 @@ def _emit_uncompressed(bw: _BitWriter, row: "np.ndarray", next_color: int) -> No
         bw.put("000001")
         zeros -= 5
     bw.put("000000" + "0" * zeros + "1")
-    bw.put("1" if next_color else "0")
+    bw.put("0")
 
 
 def g4_encode(bitmap: "np.ndarray") -> bytes:
@@ -471,7 +471,7 @@ def g3_encode(
             return coded
         tmp2 = _BitWriter()
         tmp2.put(_UNCOMP_ENTER_1D)
-        _emit_uncompressed(tmp2, row, 0)
+        _emit_uncompressed(tmp2, row)
         literal = "".join(
             format(b, "08b") for b in tmp2.out
         ) + (format(tmp2.acc, f"0{tmp2.n}b") if tmp2.n else "")

@@ -93,39 +93,37 @@ def grouped_split(
     return df.withColumn("split", assigned)
 
 
-def hash_sample(df: DataFrame, id_col: str, rate: float) -> DataFrame:
-    """Deterministic Bernoulli(``rate``) sample keyed on ``md5(id)``.
+def hash_sample(df: DataFrame, id_col: str) -> DataFrame:
+    """Deterministic Bernoulli(0.25) sample keyed on ``md5(id)``.
 
     Map-only (no shuffle, no RNG state): the same ids survive on every run,
     every partition layout, and every engine — the property training-data
-    pipelines need for reproducible corpus freezes. Complementary rates
-    partition the corpus exactly: ``keep(r)`` and ``drop(r)`` are disjoint
-    and their union is the input.
+    pipelines need for reproducible corpus freezes. The kept rows and the
+    rest partition the corpus exactly.
     """
-    return df.filter(md5_uniform(F.col(id_col)) < F.lit(hex_threshold(rate)))
+    return df.filter(md5_uniform(F.col(id_col)) < F.lit(hex_threshold(0.25)))
 
 
 def stratified_quota_sample(
     df: DataFrame,
     strata_cols: Sequence[str],
     id_col: str,
-    quota: int,
 ) -> DataFrame:
-    """Up to ``quota`` rows per stratum, chosen by md5-of-id order — a
+    """Up to 30 rows per stratum, chosen by md5-of-id order — a
     deterministic pseudo-random draw with an *exact* per-stratum count,
     numbered in ``sample_rank``.
 
     One shuffle on the strata key; per-stratum sort is bounded by the stratum
-    size. For massive strata at 100 TB, pre-thin with :func:`hash_sample` at
-    ``~4*quota/|stratum|`` first so the sort sees thousands of rows, not
-    billions — the md5 order of the survivors is a uniform subsample of the
-    md5 order of the stratum, so the final quota set is unchanged as long as
-    the pre-thin keeps ≥ quota rows per stratum.
+    size. For massive strata at 100 TB, pre-thin with :func:`hash_sample`
+    first so the sort sees a quarter of the rows — the md5 order of the
+    survivors is a uniform subsample of the md5 order of the stratum, so the
+    final quota set is unchanged as long as the pre-thin keeps ≥ 30 rows
+    per stratum.
     """
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     w = Window.partitionBy(*strata_cols).orderBy(*order)
     return df.withColumn("sample_rank", F.row_number().over(w)).filter(
-        F.col("sample_rank") <= F.lit(quota)
+        F.col("sample_rank") <= F.lit(30)
     )
 
 
@@ -167,18 +165,18 @@ def pii_counts(text: Column) -> dict[str, Column]:
 # Benchmark decontamination
 # ---------------------------------------------------------------------------
 
-def benchmark_shingles(bench: DataFrame, text_col: str, n: int) -> DataFrame:
+def benchmark_shingles(bench: DataFrame, text_col: str) -> DataFrame:
     """Distinct word-``n``-gram set of a benchmark/eval corpus → one
     ``shingle`` column. Eval suites are tiny relative to the corpus; the
     result is meant to be broadcast."""
     return (
-        bench.select(F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
+        bench.select(F.explode(word_shingles(F.col(text_col), 4)).alias("shingle"))
         .distinct()
     )
 
 
 def contamination_hits(
-    corpus: DataFrame, bench_shingle_df: DataFrame, id_col: str, text_col: str, n: int
+    corpus: DataFrame, bench_shingle_df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Per-document count of benchmark n-grams it contains → rows
     ``(id_col, bench_hits)`` for contaminated documents only.
@@ -188,7 +186,7 @@ def contamination_hits(
     rows (contamination is rare by construction), grouped by doc id.
     """
     corpus_shingles = corpus.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
+        F.col(id_col), F.explode(word_shingles(F.col(text_col), 4)).alias("shingle")
     )
     return (
         corpus_shingles.join(F.broadcast(bench_shingle_df), "shingle")
@@ -201,8 +199,8 @@ def contamination_hits(
 # Line-level corpus dedup (RefinedWeb/MassiveText boilerplate removal)
 # ---------------------------------------------------------------------------
 
-def line_dedup(docs: DataFrame, min_docs: int = 2) -> DataFrame:
-    """Remove lines that appear in ≥ ``min_docs`` distinct documents —
+def line_dedup(docs: DataFrame) -> DataFrame:
+    """Remove lines that appear in ≥ 2 distinct documents —
     corpus-level boilerplate stripping (nav bars, cookie banners, footers),
     the line-dedup stage of RefinedWeb (Penedo et al., 2023) / MassiveText.
 
@@ -227,7 +225,7 @@ def line_dedup(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     boiler = (
         lines.groupBy("line_key")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
         .select("line_key")
     )
     kept = lines.join(F.broadcast(boiler), "line_key", "left_anti")
@@ -437,13 +435,12 @@ def pack_greedy(
     df: DataFrame,
     id_col: str,
     token_col: str,
-    ctx_len: int,
 ) -> DataFrame:
-    """Sequence packing: assign documents to fixed-token-budget bins
+    """Sequence packing: assign documents to 256-token-budget bins
     (``bin``) for training-batch assembly. Documents are split into 16
     independent shards (``shard``) by the first hex char of md5(id),
     ordered deterministically within the shard (md5 order = uniform pseudo-random interleave of domains), and
-    packed contiguously: ``bin = floor(exclusive_prefix_tokens / ctx_len)``,
+    packed contiguously: ``bin = floor(exclusive_prefix_tokens / 256)``,
     i.e. a document opens the next bin once the running total crosses the
     budget.
 
@@ -458,7 +455,7 @@ def pack_greedy(
     cum = F.sum(F.col(token_col)).over(w)
     return out.withColumn(
         "bin",
-        F.floor((cum - F.col(token_col)) / F.lit(float(ctx_len))).cast("long"),
+        F.floor((cum - F.col(token_col)) / F.lit(256.0)).cast("long"),
     )
 
 
@@ -556,9 +553,8 @@ def weighted_sample(
     strata_cols: Sequence[str],
     id_col: str,
     weight_col: str,
-    k: int,
 ) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, ``k`` rows per stratum
+    """Weighted sampling WITHOUT replacement, 20 rows per stratum
     (numbered in ``sample_rank``) —
     Efraimidis & Spirakis 2006: each row draws ``u ~ U(0,1)`` and the top-k
     by ``u^(1/w)`` is an exact weighted sample (a row's inclusion odds are
@@ -585,6 +581,6 @@ def weighted_sample(
     )
     return (
         keyed.withColumn("sample_rank", F.row_number().over(win))
-        .filter(F.col("sample_rank") <= k)
+        .filter(F.col("sample_rank") <= 20)
         .drop("__es_key")
     )

@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 
 from covid19_spark.operators.text import word_shingles
 
+NUM_HASHES = 32  # minhash permutations per signature
+BANDS = 8  # LSH bands of NUM_HASHES // BANDS rows
+SHINGLE_N = 3  # word n-gram of the MinHash shingles
+
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """One row per distinct text: canonical (min) id, duplicate count, digest."""
@@ -45,11 +49,10 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     block_cols: Sequence[str],
-    n: int = 2,
     threshold: float = 0.05,
     max_block: int | None = 10_000,
 ) -> DataFrame:
-    """Exact Jaccard over distinct word n-gram shingles for same-block pairs.
+    """Exact Jaccard over distinct word bigram shingles for same-block pairs.
 
     The block join bounds the candidate space; at scale ``block_cols`` is an
     LSH bucket or a cheap partition key (language, length band). Empty
@@ -78,7 +81,7 @@ def ngram_jaccard_pairs(
     # the self-join probe side reuse this exchange.
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     sh = df.repartition(n_parts, *block_cols).select(
-        F.col(id_col), *[F.col(c) for c in block_cols], word_shingles(F.col(text_col), n).alias("sh")
+        F.col(id_col), *[F.col(c) for c in block_cols], word_shingles(F.col(text_col), 2).alias("sh")
     )
     if max_block is not None:
         oversized = (
@@ -111,11 +114,9 @@ def containment_pairs(
     id_col: str,
     text_col: str,
     block_cols: Sequence[str],
-    n: int = 2,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Directional Jaccard CONTAINMENT ``|A∩B| / |A|`` over distinct word
-    n-gram shingles for same-block pairs — the asymmetric companion of
+    bigram shingles for same-block pairs — the asymmetric companion of
     ``ngram_jaccard_pairs`` (Broder 1997 distinguishes *containment* from
     *resemblance*): a short document quoted whole inside a long one scores
     containment ≈ 1 while resemblance stays low (the union dilutes it) —
@@ -125,7 +126,7 @@ def containment_pairs(
     Same blocked-verify contract as the resemblance operator: empty
     ``block_cols`` refused, blocks over 10,000 rows dropped via the broadcast
     anti-join guard, pairwise work only inside blocks. Emits pairs where
-    ``max(containment_a_in_b, containment_b_in_a) >= threshold``, with both
+    ``max(containment_a_in_b, containment_b_in_a) >= 0.6``, with both
     directions reported.
     """
     block_cols = list(block_cols)
@@ -138,7 +139,7 @@ def containment_pairs(
     # verify stage must not inherit a 1-2-split input partitioning.
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     sh = df.repartition(n_parts, *block_cols).select(
-        F.col(id_col), *[F.col(c) for c in block_cols], word_shingles(F.col(text_col), n).alias("sh")
+        F.col(id_col), *[F.col(c) for c in block_cols], word_shingles(F.col(text_col), 2).alias("sh")
     )
     oversized = (
         sh.groupBy(*block_cols)
@@ -163,7 +164,7 @@ def containment_pairs(
         )
         .filter(
             F.greatest(F.col("containment_a_in_b"), F.col("containment_b_in_a"))
-            >= threshold
+            >= 0.6
         )
     )
 
@@ -173,11 +174,10 @@ def blocked_edit_distance_pairs(
     id_col: str,
     value_col: str,
     block_cols: Sequence[str],
-    max_distance: int = 2,
     max_block: int | None = 10_000,
 ) -> DataFrame:
     """Fuzzy-match (entity-resolution) pairs: same-block rows whose
-    ``value_col`` strings are within ``max_distance`` Levenshtein edits.
+    ``value_col`` strings are within 2 Levenshtein edits.
 
     The ER companion to ``ngram_jaccard_pairs`` with the SAME blocked-verify
     contract: empty ``block_cols`` is refused (unblocked pairwise edit
@@ -215,7 +215,7 @@ def blocked_edit_distance_pairs(
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
     cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     dist = F.levenshtein(
-        F.col(f"a.{value_col}"), F.col(f"b.{value_col}"), max_distance
+        F.col(f"a.{value_col}"), F.col(f"b.{value_col}"), 2
     )
     return (
         a.join(b, cond)
@@ -229,10 +229,9 @@ def blocked_edit_distance_pairs(
     )
 
 
-def shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
-) -> DataFrame:
-    """``(id_col, __sh)`` — each document's distinct word-shingle array.
+def shingle_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id_col, __sh)`` — each document's distinct word-``SHINGLE_N``-gram
+    array.
 
     The SINGLE tokenize+shingle pass the dedup pipelines share: signatures
     (``minhash_signatures_from_shingles``) and the exact-Jaccard verify stage
@@ -251,7 +250,7 @@ def shingle_frame(
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n_parts, id_col).select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__sh")
+        F.col(id_col), word_shingles(F.col(text_col), SHINGLE_N).alias("__sh")
     )
 
 
@@ -259,9 +258,8 @@ def minhash_signatures_from_shingles(
     sh_df: DataFrame,
     id_col: str,
     shingle_col: str = "__sh",
-    num_hashes: int = 32,
 ) -> DataFrame:
-    """id → array of ``num_hashes`` minhash values, from a precomputed
+    """id → array of ``NUM_HASHES`` minhash values, from a precomputed
     shingle-array frame (``shingle_frame``).
 
     Single pass: explode shingles, hash each shingle STRING once
@@ -289,37 +287,32 @@ def minhash_signatures_from_shingles(
     # round-trips each — see similarity._E): same min(xxhash64(h0, i))
     # aggregates, bit-identical signatures
     mins = [
-        F.expr(f"min(xxhash64(h0, {i}))").alias(f"h{i}") for i in range(num_hashes)
+        F.expr(f"min(xxhash64(h0, {i}))").alias(f"h{i}") for i in range(NUM_HASHES)
     ]
     sig = hashed.groupBy(id_col).agg(*mins)
-    arr = ", ".join(f"h{i}" for i in range(num_hashes))
+    arr = ", ".join(f"h{i}" for i in range(NUM_HASHES))
     return sig.select(F.col(id_col), F.expr(f"array({arr})").alias("sig"))
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """id → array of ``num_hashes`` minhash values over word shingles.
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """id → array of ``NUM_HASHES`` minhash values over word shingles.
 
     Thin wrapper: ``shingle_frame`` → ``minhash_signatures_from_shingles``.
     Pipelines that ALSO need the shingle arrays (verify stages) should build
     the shingle frame themselves, persist it, and call the ``_from_shingles``
     variant so the text is shingled once, not twice.
     """
-    return minhash_signatures_from_shingles(
-        shingle_frame(df, id_col, text_col, shingle_n), id_col, "__sh", num_hashes
-    )
+    return minhash_signatures_from_shingles(shingle_frame(df, id_col, text_col), id_col, "__sh")
 
 
-def band_buckets(
-    sig_df: DataFrame, id_col: str, num_hashes: int = 32, bands: int = 8
-) -> DataFrame:
+def band_buckets(sig_df: DataFrame, id_col: str) -> DataFrame:
     """Banded LSH bucket keys for a signature frame: (id, band, bucket) —
-    one row per band, ``bucket = xxhash64`` of the band's signature slice.
+    one row per band (``BANDS`` of them), ``bucket = xxhash64`` of the
+    band's signature slice.
     Map-only; the shared candidate-keying step of the batch self-join
     (``lsh_candidate_pairs``) and the incremental screen
     (``incremental_dedup_against_corpus``)."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // BANDS
     # SQL-text construction (one parse instead of ~8 py4j round-trips per
     # band struct): same per-band xxhash64 over the same element_at slots
     band_structs = F.expr(
@@ -331,7 +324,7 @@ def band_buckets(
                 for j in range(rows_per_band)
             )
             + "))"
-            for bi in range(bands)
+            for bi in range(BANDS)
         )
         + ")"
     )
@@ -340,12 +333,7 @@ def band_buckets(
     )
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
+def lsh_candidate_pairs(sig_df: DataFrame, id_col: str) -> DataFrame:
     """Band the signatures and self-join on (band, bucket-hash).
 
     Returns distinct candidate (doc_a, doc_b) pairs with the fraction of
@@ -358,7 +346,7 @@ def lsh_candidate_pairs(
     scale those are handled by exact-hash dedup first, then sampled (see
     ``lsh_candidate_pair_ids`` for the cap and its report).
     """
-    pairs = lsh_candidate_pair_ids(sig_df, id_col, num_hashes, bands)
+    pairs = lsh_candidate_pair_ids(sig_df, id_col)
     sig_a = sig_df.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
     sig_b = sig_df.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
     scored = pairs.join(sig_a, "doc_a").join(sig_b, "doc_b")
@@ -366,15 +354,13 @@ def lsh_candidate_pairs(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
     )
     return scored.select(
-        "doc_a", "doc_b", (agree / F.lit(num_hashes)).alias("est_jaccard")
+        "doc_a", "doc_b", (agree / F.lit(NUM_HASHES)).alias("est_jaccard")
     )
 
 
 def lsh_candidate_pair_ids(
     sig_df: DataFrame,
     id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
     max_bucket: int | None = 10_000,
     dropped_report: list | None = None,
 ) -> DataFrame:
@@ -392,7 +378,7 @@ def lsh_candidate_pair_ids(
     bucket, bucket_size)`` frame of what the guard removed (see
     ``drop_oversized_buckets``).
     """
-    banded = band_buckets(sig_df, id_col, num_hashes, bands)
+    banded = band_buckets(sig_df, id_col)
     banded = drop_oversized_buckets(
         banded, ["band", "bucket"], max_bucket, dropped_report
     )
@@ -412,15 +398,15 @@ def lsh_candidate_pair_ids(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, shingle_n: int = 2) -> DataFrame:
-    """64-bit SimHash per doc: majority vote over shingle hash bits.
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash per doc: majority vote over word-bigram hash bits.
 
     Computed distributed: explode shingles → per-bit ±1 votes via bit tests →
     sum per doc → sign → reassemble bits. One shuffle keyed by doc id.
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     sh = df.repartition(n_parts, id_col).select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh")
+        F.col(id_col), F.explode(word_shingles(F.col(text_col), 2)).alias("sh")
     )
     def bit_mask(bit: int) -> int:
         # bit 63 must be the sign bit in a signed 64-bit literal
@@ -555,17 +541,11 @@ def simhash_candidate_pairs(
 
 
 def _lsh_verified_pairs_with_handle(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
+    df: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, list[DataFrame]]:
     """MinHash-LSH discovery → exact-Jaccard verification, the pre-clustering
     stage of ``lsh_dedup_pipeline``: (verified pairs ``(doc_a, doc_b,
-    jaccard)`` with jaccard ≥ ``threshold``, persisted-frame handles) — the
+    jaccard)`` with jaccard ≥ 0.5, persisted-frame handles) — the
     handles let a caller that evaluates the pairs eagerly unpersist the
     caches.
 
@@ -573,20 +553,20 @@ def _lsh_verified_pairs_with_handle(
     signature derivation and the two verify-join sides, so the plan contains
     zero uncached shingle computations — every shingle expression sits under
     an ``InMemoryTableScan`` (pinned by ``test_plans.py``)."""
-    sh = shingle_frame(df, id_col, text_col, shingle_n).persist(
+    sh = shingle_frame(df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # The signature frame is consumed FOUR times downstream (both sides of
     # the band self-join + the two per-pair sig re-joins); uncached, the
     # explode + k-hash aggregation would run once per consumer. It is thin
     # (|docs| rows of k longs) — persist it too.
-    sigs = minhash_signatures_from_shingles(sh, id_col, "__sh", num_hashes).persist(
+    sigs = minhash_signatures_from_shingles(sh, id_col, "__sh").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # id pairs only — the exact-Jaccard verify below supersedes the
     # est_jaccard estimator, so the scored form's two signature re-joins
     # would be pure waste (see lsh_candidate_pair_ids)
-    cands = lsh_candidate_pair_ids(sigs, id_col, num_hashes, bands)
+    cands = lsh_candidate_pair_ids(sigs, id_col)
     a = sh.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sh_a"))
     b = sh.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
@@ -595,24 +575,16 @@ def _lsh_verified_pairs_with_handle(
         cands.join(a, "doc_a")
         .join(b, "doc_b")
         .select("doc_a", "doc_b", (inter / union).alias("jaccard"), union.alias("__u"))
-        .filter((F.col("__u") > 0) & (F.col("jaccard") >= threshold))
+        .filter((F.col("__u") > 0) & (F.col("jaccard") >= 0.5))
         .drop("__u")
     )
     return verified, [sh, sigs]
 
 
-def lsh_dedup_pipeline(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def lsh_dedup_pipeline(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """End-to-end near-duplicate removal at corpus scale: MinHash-LSH
-    discovery → exact n-gram-Jaccard verification of ONLY the candidate
-    pairs → connected components → per-document cluster assignment.
+    discovery → exact n-gram-Jaccard (≥ 0.5) verification of ONLY the
+    candidate pairs → connected components → per-document cluster assignment.
 
     This is the composition SCALING.md promises (the reference's
     DeduplicationTransformer generalized from exact-key first-wins to
@@ -629,7 +601,7 @@ def lsh_dedup_pipeline(
       4. verify: candidate pairs (≪ corpus²) join the per-doc shingle
          arrays twice — each surviving pair is scored exactly ONCE. This
          beats re-blocking ``ngram_jaccard_pairs`` on (band, bucket): that
-         would replicate every doc's (large) shingle array ``bands``×
+         would replicate every doc's (large) shingle array ``BANDS``×
          into the self-join shuffle and verify shared-in-many-buckets
          pairs repeatedly; here the heavy arrays ship once per side and
          the pair set is already distinct.
@@ -640,9 +612,7 @@ def lsh_dedup_pipeline(
     cluster_size, is_canonical); singletons keep their own id with
     cluster_size 1. Keep policy: smallest id per cluster.
     """
-    verified, caches = _lsh_verified_pairs_with_handle(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold
-    )
+    verified, caches = _lsh_verified_pairs_with_handle(df, id_col, text_col)
     clusters = dedup_clusters(verified.select("doc_a", "doc_b"))
     # Connected components eagerly localCheckpoints the edge frame, so by
     # now the verify join has fully materialized and nothing downstream reads
@@ -665,10 +635,6 @@ def incremental_dedup_against_corpus(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Screen a NEW batch of documents against an EXISTING deduplicated
     corpus without ever pairing corpus↔corpus or batch↔batch rows — the
@@ -687,7 +653,7 @@ def incremental_dedup_against_corpus(
          DeduplicationTransformer.java:37-88, generalized to a second corpus);
       2. near-dup probe: batch band buckets hash-join the corpus bucket
          index on (band, bucket);
-      3. exact verify on candidates only: n-gram Jaccard; containment
+      3. exact verify on candidates only: n-gram Jaccard ≥ 0.5; containment
          (|batch∩corpus| / |batch|) is reported as ``best_containment`` for
          the Jaccard-verified pairs.
 
@@ -696,9 +662,7 @@ def incremental_dedup_against_corpus(
     where ``near_dup_of`` is the smallest corpus id among verified hits
     (-1 if none), and ``keep`` = not exact-dup and no verified hit.
     """
-    out, caches = _incremental_screen_with_handle(
-        corpus, batch, id_col, text_col, num_hashes, bands, shingle_n, threshold
-    )
+    out, caches = _incremental_screen_with_handle(corpus, batch, id_col, text_col)
     out = out.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()
@@ -710,10 +674,6 @@ def _incremental_screen_with_handle(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    threshold: float,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The lazy screen of ``incremental_dedup_against_corpus`` and its
     persisted-frame handles, which the caller unpersists once it has
@@ -722,7 +682,7 @@ def _incremental_screen_with_handle(
     # ONE shingle pass over the corpus text: the bucket index and the verify
     # shingle store both derive from this persisted frame, so deriving them
     # inline never pays a second corpus scan.
-    c_sh = shingle_frame(corpus, id_col, text_col, shingle_n).persist(
+    c_sh = shingle_frame(corpus, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # The bucket index is consumed twice by the screen (the oversized-bucket
@@ -730,10 +690,10 @@ def _incremental_screen_with_handle(
     # uncached signature lineage would re-run the explode + k-hash
     # aggregation per branch — persist the thin (|docs| x k longs) frame,
     # mirroring the verified-pairs builder.
-    c_sig = minhash_signatures_from_shingles(c_sh, id_col, "__sh", num_hashes).persist(
+    c_sig = minhash_signatures_from_shingles(c_sh, id_col, "__sh").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    c_buckets = band_buckets(c_sig, id_col, num_hashes, bands).select(
+    c_buckets = band_buckets(c_sig, id_col).select(
         F.col(id_col).alias("__cid"), "band", "bucket"
     )
     c_shingles = c_sh.select(
@@ -758,11 +718,11 @@ def _incremental_screen_with_handle(
     # ONE shingle pass over the batch text, persisted: the signature pass and
     # the verify join both read it (the batch side is small relative to the
     # corpus, but the no-double-scan contract is the same as the e2e pipeline).
-    b_shingles = shingle_frame(batch, id_col, text_col, shingle_n).persist(
+    b_shingles = shingle_frame(batch, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    b_sig = minhash_signatures_from_shingles(b_shingles, id_col, "__sh", num_hashes)
-    bb = band_buckets(b_sig, id_col, num_hashes, bands).select(
+    b_sig = minhash_signatures_from_shingles(b_shingles, id_col, "__sh")
+    bb = band_buckets(b_sig, id_col).select(
         F.col(id_col).alias("__bid"), "band", "bucket"
     )
     cands = bb.join(cb, ["band", "bucket"]).select("__bid", "__cid").distinct()
@@ -789,7 +749,7 @@ def _incremental_screen_with_handle(
     # but the ≥-threshold pair set is deterministic (recall ≈ 1 at this
     # banding for the j ≥ 0.9 dups real corpora plant).
     hits = (
-        scored.filter(F.col("__j") >= threshold)
+        scored.filter(F.col("__j") >= 0.5)
         .groupBy("__bid")
         .agg(
             F.min("__cid").alias("__ndof"),
@@ -907,14 +867,16 @@ def prefix_filter_join(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    shingle_n: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs set-similarity join via prefix filtering (PPJoin
     family, Xiao et al. 2008 WWW §3; Chaudhuri et al. 2006 SSJoin) —
     the exactness-guaranteed complement to MinHash-LSH: every pair with
-    word-set Jaccard ≥ ``threshold`` is returned, none missed, none
-    approximate.
+    word-3-gram-set Jaccard ≥ t = 0.6 is returned, none missed, none
+    approximate.  The set elements are ``word_shingles`` 3-grams (the
+    unit of the MinHash/ngram_jaccard family), not words: on a
+    small-vocabulary corpus word SETS saturate (the sf corpus draws from
+    ~31 words: word-set Jaccard ≥ 0.5 holds for 70% of ALL pairs, 3-gram
+    Jaccard for ~1%).
 
     The pruning theorem: order every document's distinct tokens by ONE
     global total order (document frequency ascending, then token — rarest
@@ -931,24 +893,8 @@ def prefix_filter_join(
     candidates only. Nothing is all-pairs; the verify population is the
     candidate set, which J ≥ t bounds. Returns (doc_a, doc_b, jaccard).
     """
-    from covid19_spark.operators.text import tokenize
-
-    if shingle_n is not None:
-        # n-gram shingles as the set elements (``word_shingles`` — same
-        # unit as the MinHash/ngram_jaccard family); essential on
-        # small-vocabulary corpora where word SETS saturate (the sf
-        # corpus draws from ~31 words: word-set Jaccard ≥ 0.5 holds for
-        # 70% of ALL pairs, 3-gram-shingle Jaccard for ~1%)
-        elems = word_shingles(F.col(text_col), shingle_n, distinct=True)
-        toks = df.select(F.col(id_col), F.explode(elems).alias("tok"))
-    else:
-        toks = (
-            df.select(
-                F.col(id_col),
-                F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("tok"),
-            )
-            .filter(F.col("tok") != "")
-        )
+    elems = word_shingles(F.col(text_col), 3, distinct=True)
+    toks = df.select(F.col(id_col), F.explode(elems).alias("tok"))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
     w = Window.partitionBy(id_col).orderBy("__df", "tok")
     ranked = (
@@ -957,7 +903,7 @@ def prefix_filter_join(
         .withColumn("__sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
     )
     prefix = ranked.filter(
-        F.col("__rn") <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
+        F.col("__rn") <= F.col("__sz") - F.ceil(F.lit(0.6) * F.col("__sz")) + 1
     ).select(F.col(id_col), "tok", "__sz")
     a, b = prefix.alias("a"), prefix.alias("b")
     cands = (
@@ -966,8 +912,8 @@ def prefix_filter_join(
             (F.col("a.tok") == F.col("b.tok"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
             # size filter: |b| within [t·|a|, |a|/t] is necessary for J ≥ t
-            & (F.col("b.__sz") >= F.lit(threshold) * F.col("a.__sz"))
-            & (F.col("a.__sz") >= F.lit(threshold) * F.col("b.__sz")),
+            & (F.col("b.__sz") >= F.lit(0.6) * F.col("a.__sz"))
+            & (F.col("a.__sz") >= F.lit(0.6) * F.col("b.__sz")),
         )
         .select(
             F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
@@ -1002,7 +948,7 @@ def prefix_filter_join(
                 "jaccard"
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.6)
     )
     return verified
 
@@ -1010,10 +956,9 @@ def prefix_filter_join(
 def adaptive_block_assignment(
     df: DataFrame,
     key_levels: "Sequence[Column]",
-    max_block: int = 10_000,
 ) -> DataFrame:
-    """Assign each row the COARSEST blocking key whose block fits
-    ``max_block`` — the escalation alternative to the drop-guard used by
+    """Assign each row the COARSEST blocking key whose block fits 300 rows
+    — the escalation alternative to the drop-guard used by
     the verify operators: instead of discarding an oversized block, its
     rows re-block under the next, more specific key level (e.g. name
     prefix 1 char → 2 chars → 4 chars), so recall degrades to
@@ -1031,13 +976,13 @@ def adaptive_block_assignment(
     (string), ``saturated``. Pairing then joins on (block_level,
     block_key): rows pair only within their ASSIGNED level — escalated
     rows never pair against the coarse block they escaped, which keeps
-    the pair space bounded by ``max_block`` per block by construction.
+    the pair space bounded by 300 rows per block by construction.
 
     NULL key values at any level are mapped to the sentinel ``"\\x00null"``
     (one shared block per level) rather than dropped: plain equi-joins
     would silently lose null-keyed rows, and a downstream pairing join on
     ``block_key`` would lose them a second time.  Null-keyed rows
-    therefore block together and stay subject to the same ``max_block``
+    therefore block together and stay subject to the same 300-row
     escalation as every other block.
     """
     levels = list(key_levels)
@@ -1063,7 +1008,7 @@ def adaptive_block_assignment(
         out = out.join(F.broadcast(sizes), f"__k{i}")
     level = None
     for i in range(len(levels)):
-        cond = F.col(f"__s{i}") <= max_block
+        cond = F.col(f"__s{i}") <= 300
         level = F.when(cond, i) if level is None else level.when(cond, i)
     last = len(levels) - 1
     level = level.otherwise(last)
@@ -1074,7 +1019,7 @@ def adaptive_block_assignment(
             if key is None
             else key.when(level == i, F.col(f"__k{i}"))
         )
-    saturated = F.col(f"__s{last}") > max_block
+    saturated = F.col(f"__s{last}") > 300
     result = out.select(
         *[c for c in df.columns],
         level.cast("int").alias("block_level"),

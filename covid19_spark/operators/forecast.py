@@ -30,22 +30,22 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+HORIZON = 7  # forecast steps per key
+
 
 def holt_linear(
     df: DataFrame,
     key_cols: Sequence[str],
     order_col: str,
     y_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    horizon: int = 7,
 ) -> DataFrame:
     """``(key_cols..., n_obs, level, trend, h, forecast)`` — one row per
-    key and forecast step ``h ∈ 1..horizon``. Keys with fewer than two
-    observations are dropped (the trend is undefined)."""
+    key and forecast step ``h ∈ 1..HORIZON``, smoothing with α=0.5 and
+    β=0.25. Keys with fewer than two observations are dropped (the trend
+    is undefined)."""
     key_cols = list(key_cols)
-    a, one_a = float(alpha), 1.0 - float(alpha)
-    b_, one_b = float(beta), 1.0 - float(beta)
+    a, one_a = 0.5, 0.5
+    b_, one_b = 0.25, 0.75
 
     series = (
         df.groupBy(*key_cols)
@@ -74,7 +74,7 @@ def holt_linear(
         folded["l"].alias("level"),
         folded["b"].alias("trend"),
     )
-    h = F.explode(F.sequence(F.lit(1), F.lit(int(horizon)))).alias("h")
+    h = F.explode(F.sequence(F.lit(1), F.lit(HORIZON))).alias("h")
     return fitted.select(*key_cols, "n_obs", "level", "trend", h).select(
         *key_cols,
         "n_obs",
@@ -90,12 +90,10 @@ def holt_winters_additive(
     key_cols: Sequence[str],
     order_col: str,
     y_col: str,
-    period: int = 7,
-    horizon: int = 7,
 ) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing (Winters 1960) — the
     level/trend recurrence of :func:`holt_linear` plus a rolling seasonal
-    state of ``period`` indices:
+    state of m = 7 indices (a weekly period), forecast ``HORIZON`` steps:
 
         lₜ = α·(yₜ − sₜ₋ₘ) + (1−α)·(lₜ₋₁ + bₜ₋₁)
         bₜ = β·(lₜ − lₜ₋₁) + (1−β)·bₜ₋₁
@@ -118,9 +116,7 @@ def holt_winters_additive(
     folds too, NOT avg()), so the DuckDB recursive-CTE replay of the
     textually-identical expressions hash-matches at full precision."""
     key_cols = list(key_cols)
-    m = int(period)
-    if m < 2:
-        raise ValueError(f"holt_winters: period must be >= 2, got {m}")
+    m = 7
     a, one_a = 0.5, 0.5
     b_, one_b = 0.25, 0.75
     g, one_g = 0.25, 0.75
@@ -164,7 +160,7 @@ def holt_winters_additive(
         folded["b"].alias("trend"),
         folded["ss"].alias("season"),
     )
-    h = F.explode(F.sequence(F.lit(1), F.lit(int(horizon)))).alias("h")
+    h = F.explode(F.sequence(F.lit(1), F.lit(HORIZON))).alias("h")
     return fitted.select(
         *key_cols, "n_obs", "level", "trend", "season", h
     ).select(
@@ -189,18 +185,16 @@ def cusum_alarms(
     key_cols: Sequence[str],
     order_col: str,
     y_col: str,
-    baseline: int = 28,
 ) -> DataFrame:
     """One-sided CUSUM changepoint detection (Page 1954) per key:
 
         s₀ = 0;   sₜ = max(0, sₜ₋₁ + (yₜ − μ₀ − k))
 
-    with target μ₀ = mean of the first ``baseline`` observations, slack
+    with target μ₀ = mean of the first 28 observations (the baseline), slack
     ``k = 0.125·μ₀`` and alarm threshold ``h = 1.0·μ₀`` — the
     level-shift monitor that catches a sustained drift long before any
     single point trips a z-score gate.  The recurrence runs from
-    observation ``baseline+1``; keys shorter than ``baseline+1`` are
-    dropped.
+    observation 29; keys shorter than 29 are dropped.
 
     Same per-key JVM fold as ``holt_linear``/``holt_winters_additive``
     (collected ordered series, ``F.aggregate``), state carrying the
@@ -213,9 +207,7 @@ def cusum_alarms(
     Output: key_cols..., n_obs, mu0, s_final, first_alarm, n_alarms.
     """
     key_cols = list(key_cols)
-    b = int(baseline)
-    if b < 1:
-        raise ValueError(f"baseline must be >= 1, got {baseline}")
+    b = 28
 
     series = (
         df.groupBy(*key_cols)

@@ -40,27 +40,15 @@ def _gridsum(col):
     return F.sum(F.floor(col * F.lit(_SCALE)).cast("long")) / F.lit(_SCALE)
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """``(node, rank)`` after ``iterations`` weighted-PageRank rounds over
-    ``(src, dst, w)`` edges.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """``(node, rank)`` after 3 weighted-PageRank rounds (damping 0.85)
+    over ``(src, dst, w)`` edges.
 
     ``edges`` must cover every node with at least one OUT-edge (dangling
     nodes are the caller's modeling decision — the registry query builds a
     symmetrized graph where none exist). The edge frame is evaluated
-    eagerly once; each round is one broadcast-free join + one aggregate.
-
-    ``checkpoint_every`` (VERDICT r10 #3): the rank frame's lineage is cut
-    with an eager localCheckpoint every k rounds — same discipline as
-    ``connected_components`` — so deep runs (``iterations=20``) never
-    build a 20-deep join+agg plan the optimizer must re-walk per action.
-    The default (4) leaves the registry's 3-round query checkpoint-free
-    (plan and timing unchanged); values are unaffected either way because
-    a checkpoint only materializes the exact grid-summed doubles."""
+    eagerly once; each round is one broadcast-free join + one aggregate,
+    so three rounds need no lineage checkpoint."""
     edges = edges.select(
         "src", "dst", F.col("w").cast("double").alias("w")
     ).localCheckpoint(eager=True)
@@ -97,10 +85,10 @@ def pagerank(
     # scalar by contract (|V| is a count, not a frame); observed on the
     # checkpoint job instead of a separate count() action (r14)
     n = int(obs.get["n"])
-    base = (1.0 - damping) / n
+    base = (1.0 - 0.85) / n
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for i in range(iterations):
+    for _ in range(3):
         contribs = (
             edges_n.join(ranks.withColumnRenamed("node", "src"), "src")
             .select(
@@ -112,12 +100,10 @@ def pagerank(
         )
         ranks = nodes.join(contribs, "node", "left").select(
             "node",
-            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))).alias(
+            (F.lit(base) + F.lit(0.85) * F.coalesce(F.col("__in"), F.lit(0.0))).alias(
                 "rank"
             ),
         )
-        if checkpoint_every > 0 and (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
@@ -192,18 +178,15 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 3,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan 2007),
     made DETERMINISTIC: every node starts as its own label; each round a
     node adopts the label with the highest neighbor count, ties broken by
     the SMALLEST label (vanilla LPA tiebreaks randomly, which would be
-    irreproducible across partitionings, let alone engines).  Fixed
-    iteration count — convergence detection would add a count() action per
-    round for no semantic gain at small k.
+    irreproducible across partitionings, let alone engines).  A fixed 3
+    rounds — convergence detection would add a count() action per round
+    for no semantic gain at small k, and three rounds need no lineage
+    checkpoint.
 
     ``edges`` ``(src, dst)`` must already contain both directions of each
     undirected edge (the callers' symmetrized form).  Per round: one edge-list join +
@@ -214,12 +197,8 @@ def label_propagation(
     partially-aggregated maps instead of the previous
     count-agg + argmax-window pair (two exchanges + a per-node sort;
     VERDICT r12 task #2).  Per-node buffer = distinct neighbor labels ≤
-    degree — no worse than what the window sort shuffled as rows.  Label
-    state is checkpointed every ``checkpoint_every`` rounds (the
-    ``connected_components`` / ``pagerank`` lineage rule).
+    degree — no worse than what the window sort shuffled as rows.
     Output: (node, label)."""
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
     # The edge frame is consumed by EVERY round's join plus the node
     # derivation — Spark plans are trees, so an unmaterialized edge
     # lineage (often a join+distinct over fact tables) would be recomputed
@@ -234,12 +213,10 @@ def label_propagation(
     # every node — the former src∪dst union scanned the frame twice.
     nodes = edges.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(iterations):
+    for _ in range(3):
         labels = (
             edges.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node")
             .agg(F.mode("label", deterministic=True).alias("label"))
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = labels.localCheckpoint(eager=True)
     return labels

@@ -317,9 +317,11 @@ def _csize(v: int) -> int:
 
 
 def _quality_scaled(base: np.ndarray, quality: int) -> np.ndarray:
-    """libjpeg-style quality scaling of a base table (public formula)."""
-    quality = min(100, max(1, quality))
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
+    """libjpeg-style quality scaling of a base table (public formula), for
+    quality 50-100."""
+    if quality < 50:
+        raise NotImplementedError(f"JPEG quality below 50 not supported (got {quality})")
+    scale = 200 - 2 * min(100, quality)
     return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int32)
 
 
@@ -329,12 +331,10 @@ def _plane_blocks(plane: np.ndarray) -> np.ndarray:
     return plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3)
 
 
-def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
-    """Edge-replicate pad to multiples of (mh, mw)."""
+def _pad_to(plane: np.ndarray) -> np.ndarray:
+    """Edge-replicate pad to even height and width."""
     h, w = plane.shape
-    return np.pad(
-        plane, ((0, (-h) % mh), (0, (-w) % mw)), mode="edge"
-    )
+    return np.pad(plane, ((0, h % 2), (0, w % 2)), mode="edge")
 
 
 def _prepare_quantized_coefs(pixels: np.ndarray, quality: int, subsampling: str):
@@ -360,8 +360,8 @@ def _prepare_quantized_coefs(pixels: np.ndarray, quality: int, subsampling: str)
         cb = -0.168736 * r - 0.331264 * g + 0.5 * b + center
         cr = 0.5 * r - 0.418688 * g - 0.081312 * b + center
         if subsampling == "420":
-            cbp = _pad_to(cb, 2, 2)
-            crp = _pad_to(cr, 2, 2)
+            cbp = _pad_to(cb)
+            crp = _pad_to(cr)
             cb = cbp.reshape(cbp.shape[0] // 2, 2, cbp.shape[1] // 2, 2).mean(axis=(1, 3))
             cr = crp.reshape(crp.shape[0] // 2, 2, crp.shape[1] // 2, 2).mean(axis=(1, 3))
             factors = [(2, 2), (1, 1), (1, 1)]
@@ -415,7 +415,9 @@ def encode_jpeg(
     if progressive:
         if restart_interval:
             raise ValueError("restart intervals are written for baseline streams only")
-        return _encode_progressive(h0, w0, gray, factors, qtabs, comp_coefs)
+        if gray:
+            raise NotImplementedError("progressive grayscale encoding not supported")
+        return _encode_progressive(h0, w0, factors, qtabs, comp_coefs)
     planes_n = 1 if gray else 3
 
     dc_codes = [_build_huffman_codes(DC_LUMA_BITS, DC_LUMA_VALS),
@@ -631,14 +633,14 @@ def _dc_scan_entropy(
                             emit_bits((dc >> al) & 1, 1)
 
 
-def _encode_progressive(h0, w0, gray, factors, qtabs, comp_coefs) -> bytes:
-    """Assemble a progressive JFIF stream from the quantized coefficient
-    grids: SOF2 + per-scan DHT/SOS. Scan script (libjpeg-shaped): DC first
-    (all components, Al=1), spectral-selection AC first scans at Al=1, AC
-    refinements to Al=0, DC refinement; a grayscale image keeps the luma
-    scans. Each scan carries its own Huffman table(s), built from that
-    scan's actual symbol set."""
-    ncomp = 1 if gray else 3
+def _encode_progressive(h0, w0, factors, qtabs, comp_coefs) -> bytes:
+    """Assemble a 3-component progressive JFIF stream from the quantized
+    coefficient grids: SOF2 + per-scan DHT/SOS. Scan script
+    (libjpeg-shaped): DC first (all components, Al=1), spectral-selection
+    AC first scans at Al=1, AC refinements to Al=0, DC refinement. Each
+    scan carries its own Huffman table(s), built from that scan's actual
+    symbol set."""
+    ncomp = 3
     hmax = max(f[0] for f in factors)
     vmax = max(f[1] for f in factors)
     mcus_x = -(-w0 // (8 * hmax))
@@ -651,25 +653,21 @@ def _encode_progressive(h0, w0, gray, factors, qtabs, comp_coefs) -> bytes:
         real_blocks.append((-(-comp_h // 8), -(-comp_w // 8)))
 
     all_idx = list(range(ncomp))
-    scans = [
-        scan
-        for scan in (
-            (all_idx, 0, 0, 0, 1),
-            ([0], 1, 5, 0, 1), ([0], 6, 63, 0, 1),
-            ([1], 1, 63, 0, 1), ([2], 1, 63, 0, 1),
-            ([0], 1, 5, 1, 0), ([0], 6, 63, 1, 0),
-            ([1], 1, 63, 1, 0), ([2], 1, 63, 1, 0),
-            (all_idx, 0, 0, 1, 0),
-        )
-        if scan[0][0] < ncomp  # grayscale: the luma scans only
-    ]
+    scans = (
+        (all_idx, 0, 0, 0, 1),
+        ([0], 1, 5, 0, 1), ([0], 6, 63, 0, 1),
+        ([1], 1, 63, 0, 1), ([2], 1, 63, 0, 1),
+        ([0], 1, 5, 1, 0), ([0], 6, 63, 1, 0),
+        ([1], 1, 63, 1, 0), ([2], 1, 63, 1, 0),
+        (all_idx, 0, 0, 1, 0),
+    )
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
 
     out = bytearray(b"\xff\xd8")
     out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tid, q in enumerate(qtabs[: 1 if gray else 2]):
+    for tid, q in enumerate(qtabs):
         out += seg(0xFFDB, bytes([tid]) + bytes(int(x) for x in q[ZIGZAG]))
     sof = struct.pack(">BHHB", 8, h0, w0, ncomp)
     for ci in range(ncomp):
@@ -1522,7 +1520,8 @@ def _next_marker_pos(br: "_BitReader") -> int:
 def _decode_progressive_scan(data, pos, frame, scan, grids, huff_dc, huff_ac, ss, se, ah, al):
     """Decode ONE progressive scan into the persistent per-component
     coefficient grids; returns the offset of the next marker. DC scans
-    (Ss=0) may be interleaved; AC scans are single-component per T.81."""
+    (Ss=0) must interleave several components (a single-component DC scan
+    raises NotImplementedError); AC scans are single-component per T.81."""
     h0, w0 = frame["h"], frame["w"]
     hmax = max(c["h"] for c in frame["comps"])
     vmax = max(c["v"] for c in frame["comps"])
@@ -1532,6 +1531,8 @@ def _decode_progressive_scan(data, pos, frame, scan, grids, huff_dc, huff_ac, ss
         raise ValueError("corrupt JPEG: bad spectral band")
     if ss > 0 and len(scan) != 1:
         raise ValueError("corrupt JPEG: interleaved AC scan")
+    if ss == 0 and len(scan) == 1:
+        raise NotImplementedError("non-interleaved progressive DC scans not supported")
     br = _BitReader(data, pos)
     pred = [0] * len(scan)
     eobrun = 0
@@ -1549,11 +1550,10 @@ def _decode_progressive_scan(data, pos, frame, scan, grids, huff_dc, huff_ac, ss
         for ux in range(units_x):
             if ss == 0:  # DC scan
                 for si, (comp, td, _ta) in enumerate(scan):
-                    blocks = (
-                        [(uy * comp["v"] + by, ux * comp["h"] + bx)
-                         for by in range(comp["v"]) for bx in range(comp["h"])]
-                        if interleaved else [(uy, ux)]
-                    )
+                    blocks = [
+                        (uy * comp["v"] + by, ux * comp["h"] + bx)
+                        for by in range(comp["v"]) for bx in range(comp["h"])
+                    ]
                     for by, bx in blocks:
                         zz = grids[comp["id"]][by, bx]
                         if ah == 0:

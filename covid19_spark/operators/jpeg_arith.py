@@ -355,9 +355,7 @@ def _decode_dc(dec, stats, dc_ctx, si, L, U):
                 raise ValueError("corrupt JPEG: arithmetic DC magnitude overflow")
             stx += 1
     # conditioning category for the NEXT block (F.1.4.4.1.2)
-    if m < (1 << L) >> 1:
-        dc_ctx[si] = 0
-    elif m > (1 << U) >> 1:
+    if m > 1:
         dc_ctx[si] = 12 + 4 * sign
     else:
         dc_ctx[si] = 4 + 4 * sign
@@ -371,7 +369,9 @@ def _decode_dc(dec, stats, dc_ctx, si, L, U):
     return -v if sign else v
 
 
-def _encode_dc(enc, stats, dc_ctx, si, diff, L, U):
+def _encode_dc(enc, stats, dc_ctx, si, diff):
+    """Encode one DC difference under the default conditioning bounds
+    (L = 0, U = 1: no "small" class, "large" above 1)."""
     st = dc_ctx[si]
     if diff == 0:
         enc.encode(stats, st, 0)
@@ -396,9 +396,7 @@ def _encode_dc(enc, stats, dc_ctx, si, diff, L, U):
             stx += 1
         enc.encode(stats, stx, 0)
         m = cat
-    if m < (1 << L) >> 1:
-        dc_ctx[si] = 0
-    elif m > (1 << U) >> 1:
+    if m > 1:
         dc_ctx[si] = 12 + 4 * sign
     else:
         dc_ctx[si] = 4 + 4 * sign
@@ -450,7 +448,9 @@ def _decode_ac_block(dec, stats, zz, kx):
         k += 1
 
 
-def _encode_ac_block(enc, stats, zz, kx):
+def _encode_ac_block(enc, stats, zz):
+    """Encode one block's AC coefficients under the default conditioning
+    bound Kx = 5."""
     nz = [k for k in range(1, 64) if zz[k]]
     kmax = nz[-1] if nz else 0
     k = 1
@@ -479,7 +479,7 @@ def _encode_ac_block(enc, stats, zz, kx):
             else:
                 enc.encode(stats, st, 1)
                 cat = 2
-                stx = 189 if k <= kx else 217
+                stx = 189 if k <= 5 else 217
                 while (cat << 1) <= v:
                     enc.encode(stats, stx, 1)
                     cat <<= 1
@@ -599,11 +599,9 @@ def encode_jpeg_arith(
                     for bx in range(hf):
                         zz = comp_coefs[ci][my * vf + by, mx * hf + bx]
                         dc = int(zz[0])
-                        _encode_dc(
-                            enc, dstats[tsel], dc_ctx, ci, dc - pred[ci], 0, 1
-                        )
+                        _encode_dc(enc, dstats[tsel], dc_ctx, ci, dc - pred[ci])
                         pred[ci] = dc
-                        _encode_ac_block(enc, astats[tsel], zz, 5)
+                        _encode_ac_block(enc, astats[tsel], zz)
     entropy += enc.flush()
 
     def seg(marker: int, payload: bytes) -> bytes:

@@ -250,9 +250,11 @@ def hilbert_sql(src: str, x: str, y: str, bits: int, carry: Sequence[str]) -> st
     return f"SELECT {keep}, CAST(__hd AS BIGINT) AS h FROM ({cur})"
 
 
-def _seeded_positions(
-    df: DataFrame, keep: Sequence[str], key_col: str, m_bits: int, k: int
-) -> DataFrame:
+BLOOM_BITS = 8192  # per-file Bloom width, a multiple of the 32-bit lane
+BLOOM_K = 3  # seeded positions per key
+
+
+def _seeded_positions(df: DataFrame, keep: Sequence[str], key_col: str) -> DataFrame:
     """(keep..., seed, __pos) — one row per (input row, seed ordinal) with
     the md5-derived Bloom position.  The seed ordinal is EXPLODED first and
     the hex digest materialized as a real column before the 8-char ascii
@@ -260,7 +262,7 @@ def _seeded_positions(
     (what a naive per-seed expression tree does) recomputes the digest 8×
     per position — measured 7.2 s → 1.2 s on a 150k-row build, the same
     subtree-re-inlining class as the SQ8 64× fix."""
-    seeds = F.explode(F.array(*[F.lit(str(i)) for i in range(k)])).alias("seed")
+    seeds = F.explode(F.array(*[F.lit(str(i)) for i in range(BLOOM_K)])).alias("seed")
     step = df.select(*keep, F.col(key_col).alias("__k"), seeds).withColumn(
         "__h", F.md5(F.concat_ws(":", "seed", F.col("__k").cast("string")))
     )
@@ -271,15 +273,13 @@ def _seeded_positions(
     # its first row (measured on bloom_pruning_gain; the whole-stage source
     # is not reused across plan instances)
     v = F.conv(F.substring("__h", 1, 8), 16, 10).cast("long")
-    return step.select(*keep, "seed", F.pmod(v, F.lit(m_bits)).alias("__pos"))
+    return step.select(*keep, "seed", F.pmod(v, F.lit(BLOOM_BITS)).alias("__pos"))
 
 
 def file_bloom_words(
     df: DataFrame,
     file_col: str,
     key_col: str,
-    m_bits: int = 8192,
-    k: int = 3,
 ) -> DataFrame:
     """Per-file Bloom index over ``key_col``: ``(file, word, bits)`` rows,
     word = position div 32, bits = OR of the 32-bit-lane masks — the file-
@@ -288,23 +288,20 @@ def file_bloom_words(
     file spans the whole key domain; Parquet's column-index blooms and
     Delta's bloom index play exactly this role).
 
-    ≤ m_bits/32 words per file regardless of row count; ONE map +
-    bit_or aggregate per file.  Size ``m_bits`` at ~10 bits per distinct
-    key per file — an undersized filter silently degrades to "touch
+    ≤ BLOOM_BITS/32 words per file regardless of row count; ONE map +
+    bit_or aggregate per file.  ``BLOOM_BITS`` is sized at ~10 bits per
+    distinct key per file — an undersized filter silently degrades to "touch
     everything", never to wrong answers.
 
     Positions are md5-derived (ascii hex arithmetic — engine-portable,
     unlike xxhash64), seeded by prefixing the seed ordinal:
-    position_i = md5_int(i || ':' || key) % m_bits.
+    position_i = md5_int(i || ':' || key) % BLOOM_BITS, for i < BLOOM_K.
     32-bit lanes (not 64) on purpose: the lane shift never reaches the
     BIGINT sign bit, which DuckDB refuses (`1::BIGINT << 63` raises
     Out of Range) — masks stay positive and identical in both engines.
     """
-    if m_bits % 32 != 0:
-        raise ValueError(f"m_bits must be a multiple of 32, got {m_bits}")
     pos = _seeded_positions(
-        df.select(F.col(file_col).alias("file"), key_col), ["file"],
-        key_col, m_bits, k,
+        df.select(F.col(file_col).alias("file"), key_col), ["file"], key_col
     )
     return (
         pos.select(
@@ -317,29 +314,26 @@ def file_bloom_words(
     )
 
 
-def file_bloom_pos_sql(key_expr: str, seed: int, m_bits: int) -> str:
+def file_bloom_pos_sql(key_expr: str, seed: int) -> str:
     """DuckDB replay of one seeded position of :func:`file_bloom_words`."""
     from covid19_spark.operators.train import md5_bucket_sql
 
-    return md5_bucket_sql(f"('{seed}:' || CAST({key_expr} AS VARCHAR))", m_bits)
+    return md5_bucket_sql(f"('{seed}:' || CAST({key_expr} AS VARCHAR))", BLOOM_BITS)
 
 
 def files_bloom_touched(
     words: DataFrame,
     probes: DataFrame,
     key_col: str,
-    m_bits: int = 8192,
-    k: int = 3,
 ) -> DataFrame:
     """Bloom-skipping cost model: per probe key, the count of files whose
-    per-file Bloom passes ALL ``k`` positions — the files a reader would
+    per-file Bloom passes ALL ``BLOOM_K`` positions — the files a reader would
     actually open.  Probe positions broadcast-join the words frame on the
     word index; a file passes when every seed ordinal finds its bit set
-    (count of DISTINCT matched seeds == k, robust to two seeds colliding
+    (count of DISTINCT matched seeds == BLOOM_K, robust to two seeds colliding
     onto one position).  No false skips by Bloom's contract."""
     pos = _seeded_positions(
-        probes.select(F.col(key_col).alias("probe_key")), ["probe_key"],
-        "probe_key", m_bits, k,
+        probes.select(F.col(key_col).alias("probe_key")), ["probe_key"], "probe_key"
     ).select(
         "probe_key",
         "seed",
@@ -351,7 +345,7 @@ def files_bloom_touched(
         .filter(F.col("bits").bitwiseAND(F.col("mask")) != 0)
         .groupBy("probe_key", "file")
         .agg(F.countDistinct("seed").alias("n_seeds"))
-        .filter(F.col("n_seeds") == k)
+        .filter(F.col("n_seeds") == BLOOM_K)
     )
     return hits.groupBy("probe_key").agg(
         F.count(F.lit(1)).cast("long").alias("bloom_files")
@@ -359,7 +353,7 @@ def files_bloom_touched(
 
 
 def zrange_decompose(
-    x0: int, x1: int, y0: int, y1: int, bits: int, max_ranges: int = 64
+    x0: int, x1: int, y0: int, y1: int, bits: int
 ) -> "list[tuple[int, int]]":
     """Decompose the inclusive grid rectangle [x0..x1] × [y0..y1] into
     disjoint Morton-code ranges covering EXACTLY its cells — the quadtree
@@ -370,8 +364,8 @@ def zrange_decompose(
     broadcast against the point table's z column, where a z-sorted layout
     turns each range into parquet min/max file pruning.
 
-    ``max_ranges`` caps fragmentation by STOPPING the recursion early once
-    the budget would overflow, emitting the whole (over-covering) cell
+    A budget of 32 ranges caps fragmentation by STOPPING the recursion
+    early once it would overflow, emitting the whole (over-covering) cell
     range instead — callers keep the exact rectangle predicate as the
     residual filter, so over-coverage costs scan, never correctness.
     Deterministic pure-integer arithmetic; adjacent emitted ranges are
@@ -402,7 +396,7 @@ def zrange_decompose(
         z_lo = morton(lo_x, lo_y)
         z_hi = z_lo + (1 << (2 * cb)) - 1
         fully_inside = x0 <= lo_x and hi_x <= x1 and y0 <= lo_y and hi_y <= y1
-        if fully_inside or cb == 0 or len(out) + len(stack) >= max_ranges:
+        if fully_inside or cb == 0 or len(out) + len(stack) >= 32:
             out.append((z_lo, z_hi))
             continue
         half = cs // 2

@@ -1092,8 +1092,8 @@ def encode_tiff(
 ) -> bytes:
     """Encode uint8 pixels as baseline little-endian TIFF with 8-bit
     samples — ``compression``: "none", "packbits", "lzw", "deflate" (Adobe
-    deflate, compression 8: zlib per strip/tile) for (H, W, 3) RGB or
-    (H, W) grayscale input; "jpeg" (new-style JPEG-in-TIFF, compression 7:
+    deflate, compression 8: zlib per strip/tile) for (H, W, 3) RGB input
+    (8-bit grayscale raises NotImplementedError); "jpeg" (new-style JPEG-in-TIFF, compression 7:
     every strip is a complete quality-90 JPEG stream from ``operators/jpeg``; lossy,
     so the round-trip contract is pixel-equality with the per-strip JPEG
     round-trip, not the raw input) for RGB input; or the CCITT bilevel
@@ -1129,6 +1129,8 @@ def encode_tiff(
         raise ValueError(f"{compression} compression requires 2D bilevel input")
     if comp_id == 7 and gray:
         raise ValueError("jpeg compression requires (H, W, 3) RGB input")
+    if gray and not fax:
+        raise NotImplementedError("8-bit grayscale TIFF encoding not supported")
     arr3 = arr[:, :, None] if gray else arr
     h, w, spp = arr3.shape
     if spp not in (1, 3):
@@ -1204,7 +1206,7 @@ def encode_tiff(
     elif comp_id == 7:
         photometric = 6
     else:
-        photometric = 2 if spp == 3 else 1
+        photometric = 2
     tags = [
         (256, 3, [w]), (257, 3, [h]), (258, 3, [sample_bits] * spp),
         (259, 3, [comp_id]), (262, 3, [photometric]),
@@ -1297,9 +1299,9 @@ def decode_image(payload: bytes) -> "np.ndarray":
     )
 
 
-def image_features_from_pixels(pixels: "np.ndarray", dim: int = 8) -> np.ndarray:
-    """Fixed-width features from DECODED pixels: mean R/G/B (scaled to [0,1])
-    plus a (dim-3)-bucket grayscale histogram, L2-normalized — the
+def image_features_from_pixels(pixels: "np.ndarray") -> np.ndarray:
+    """8 features from DECODED pixels: mean R/G/B (scaled to [0,1])
+    plus a 5-bucket grayscale histogram, L2-normalized — the
     deterministic stand-in for a CNN embedding on the real-decode path.
     Every decoder here returns uint8, or uint16 for 16-bit lossless JPEG,
     at the full range of its dtype, so the dtype max is the sample peak and
@@ -1313,8 +1315,7 @@ def image_features_from_pixels(pixels: "np.ndarray", dim: int = 8) -> np.ndarray
     if peak != 255.0:
         gray_f = gray_f * (255.0 / peak)
     gray = gray_f.astype(np.uint8).reshape(-1)
-    n_hist = dim - 3
-    hist = np.histogram(gray, bins=n_hist, range=(0, 256))[0]
+    hist = np.histogram(gray, bins=5, range=(0, 256))[0]
     feat = np.concatenate([means, hist.astype(np.float32)])
     norm = float(np.linalg.norm(feat))
     return (feat / norm if norm > 0 else feat).astype(np.float32)
@@ -1456,10 +1457,8 @@ def extract_image_features(media: DataFrame, on_error: str = "fail") -> DataFram
     return _image_features(media, _decoded_image_features, on_error)
 
 
-def encode_mjpeg_avi(
-    frames: "list[np.ndarray]", fps: int = 10, quality: int = 85
-) -> bytes:
-    """Encode a list of (H, W, 3) uint8 frames as a Motion-JPEG AVI — pure
+def encode_mjpeg_avi(frames: "list[np.ndarray]", quality: int = 85) -> bytes:
+    """Encode a list of (H, W, 3) uint8 frames as a 4 fps Motion-JPEG AVI — pure
     stdlib RIFF assembly over the module's own JPEG encoder. The one video
     container a no-codec-library environment can produce AND consume for
     real (every frame is a baseline JPEG)."""
@@ -1479,14 +1478,14 @@ def encode_mjpeg_avi(
     def lst(four: bytes, data: bytes) -> bytes:
         return chunk(b"LIST", four + data)
 
-    us_per_frame = int(round(1_000_000 / fps))
+    us_per_frame = 250_000
     avih = struct.pack(
         "<IIIIIIIIII4I",
         us_per_frame, 0, 0, 0x10, len(frames), 0, 1, 0, w, h, 0, 0, 0, 0,
     )
     strh = (
         b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIiI4h", 0, 0, 0, 0, 1, fps, 0, len(frames), 0, -1, 0, 0, 0, 0, 0)
+        + struct.pack("<IHHIIIIIIiI4h", 0, 0, 0, 0, 1, 4, 0, len(frames), 0, -1, 0, 0, 0, 0, 0)
     )
     strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0)
     hdrl = lst(
@@ -1565,14 +1564,15 @@ def decode_avi_frames(payload: bytes) -> "tuple[list[bytes], float]":
     return frames, fps
 
 
-def _sampled_avi_frames(payload: bytes, every_ms: int):
-    """Yield ``(frame_ts_ms, frame_index, jpeg_bytes)`` along the sampled
-    timeline — the SINGLE sampling arithmetic (fps fallback, inclusive
+EVERY_MS = 500  # video sampling interval
+
+
+def _sampled_avi_frames(payload: bytes):
+    """Yield ``(frame_ts_ms, frame_index, jpeg_bytes)`` every ``EVERY_MS``
+    along the timeline — the SINGLE sampling arithmetic (fps fallback, inclusive
     duration bound, index clamp) that feature extraction AND per-frame
     hashing share: ``video_near_dup_pairs`` aligns videos on the sample
     rank, so the two consumers must never drift apart."""
-    if every_ms <= 0:
-        raise ValueError(f"every_ms must be positive (got {every_ms})")
     frames, fps = decode_avi_frames(payload)
     if fps <= 0:
         fps = 10.0
@@ -1581,20 +1581,18 @@ def _sampled_avi_frames(payload: bytes, every_ms: int):
     while ts <= duration_ms:
         idx = min(int(ts * fps / 1000), len(frames) - 1)
         yield ts, idx, frames[idx]
-        ts += every_ms
+        ts += EVERY_MS
 
 
-def video_frame_features(
-    payload: bytes, every_ms: int
-) -> "list[tuple[int, int, np.ndarray]]":
+def video_frame_features(payload: bytes) -> "list[tuple[int, int, np.ndarray]]":
     """Real video path: decode the MJPEG AVI, sample one frame per
-    ``every_ms`` of timeline, decode each sampled JPEG and featurize its
+    ``EVERY_MS`` of timeline, decode each sampled JPEG and featurize its
     pixels (8 x 8 grid). Returns [(frame_ts_ms, frame_index, feature)]."""
     from covid19_spark.operators.jpeg import decode_jpeg
 
     return [
-        (ts, idx, image_features_from_pixels(decode_jpeg(jpeg), 8))
-        for ts, idx, jpeg in _sampled_avi_frames(payload, every_ms)
+        (ts, idx, image_features_from_pixels(decode_jpeg(jpeg)))
+        for ts, idx, jpeg in _sampled_avi_frames(payload)
     ]
 
 
@@ -1603,32 +1601,29 @@ VIDEO_FRAME_SCHEMA = (
 )
 
 
-def extract_video_frames(
-    media: DataFrame,
-    every_ms: int = 1000,
-) -> DataFrame:
+def extract_video_frames(media: DataFrame) -> DataFrame:
     """Sampled-frame feature extraction for video rows via ``mapInPandas``:
     metadata (kind) prunes before any decode; each blob's MJPEG AVI
     container is parsed and each sampled frame decoded with the module's
     own JPEG decoder (``video_frame_features``)."""
-    if every_ms <= 0:
-        raise ValueError(f"every_ms must be positive (got {every_ms})")
     return _map_blobs(
         media.filter(F.col("kind") == "video"),
         VIDEO_FRAME_SCHEMA,
         _media_id_key,
         lambda p: [
             (ts, idx, feat.tolist())
-            for ts, idx, feat in video_frame_features(p, every_ms)
+            for ts, idx, feat in video_frame_features(p)
         ],
         "fail",
         error_column=True,
     )
 
 
-def _area_resize(gray: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
-    """Deterministic area-mean resize via an integral image — the fixed
-    downsampling step of the perceptual hash (no interpolation libraries)."""
+def _area_resize(gray: "np.ndarray") -> "np.ndarray":
+    """Deterministic area-mean resize to 8 x 9 via an integral image — the
+    fixed downsampling step of the perceptual hash (no interpolation
+    libraries)."""
+    out_h, out_w = 8, 9
     h, w = gray.shape
     if h < out_h:
         gray = np.repeat(gray, -(-out_h // h), axis=0)
@@ -1661,7 +1656,7 @@ def dhash_pixels(pixels: "np.ndarray") -> int:
     corpora.  The downstream 4 x 16-bit banded probe assumes EXACTLY these
     64 bits."""
     gray = np.asarray(pixels, dtype=np.float64).mean(axis=2)
-    small = _area_resize(gray, 8, 9)
+    small = _area_resize(gray)
     bits = (small[:, 1:] > small[:, :-1]).reshape(-1)
     v = 0
     for i, b in enumerate(bits):
@@ -1695,13 +1690,13 @@ def image_dhash(media: DataFrame) -> DataFrame:
 def image_near_dup_pairs(
     hash_df: DataFrame,
     id_col: str = "media_id",
-    max_hamming: int = 10,
 ) -> DataFrame:
-    """Perceptual near-duplicate candidate pairs over a dHash frame: the
+    """Perceptual near-duplicate candidate pairs (Hamming <= 10) over a
+    dHash frame: the
     64-bit hashes ride the SAME banded Hamming probe as SimHash text dedup
     (4 x 16-bit sub-bands). Pigeonhole guarantee holds only for Hamming
     <= 3 (a distance-4 pair can spread one bit per band and never meet);
-    pairs at 4..max_hamming are recalled probabilistically — this is a
+    pairs at 4..10 are recalled probabilistically — this is a
     CANDIDATE generator, not a certifier. One thin self-join, never O(n²)
     over the image corpus; the probe's 10,000-row bucket cap guards the
     common degenerate case (black/constant images all share a sub-band key
@@ -1711,14 +1706,11 @@ def image_near_dup_pairs(
     return simhash_candidate_pairs(
         hash_df.select(F.col(id_col), F.col("dhash").alias("simhash")),
         id_col,
-        max_hamming=max_hamming,
+        max_hamming=10,
     )
 
 
-def video_frame_hashes(
-    media: DataFrame,
-    every_ms: int = 1000,
-) -> DataFrame:
+def video_frame_hashes(media: DataFrame) -> DataFrame:
     """``(media_id, frame_rank, dhash)`` — one perceptual hash per sampled
     video frame (real MJPEG-AVI decode; ``frame_rank`` is the 0-based index
     in the sample sequence, the alignment key for video-to-video
@@ -1749,13 +1741,9 @@ def video_frame_hashes(
         peek_jpeg_dims,
     )
 
-    if every_ms <= 0:
-        raise ValueError(f"every_ms must be positive (got {every_ms})")
     def decode(payload):
         hashes = []
-        for rank, (_ts, _idx, jpeg) in enumerate(
-            _sampled_avi_frames(payload, every_ms)
-        ):
+        for rank, (_ts, _idx, jpeg) in enumerate(_sampled_avi_frames(payload)):
             fh, fw = peek_jpeg_dims(jpeg)
             use_dc = fh >= 64 and fw >= 72
             px = decode_jpeg_dc(jpeg) if use_dc else decode_jpeg(jpeg)
@@ -1774,8 +1762,6 @@ def video_frame_hashes(
 def video_near_dup_pairs(
     frame_hash_df: DataFrame,
     id_col: str = "media_id",
-    max_hamming: int = 10,
-    min_matching_frames: int = 3,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Video-level near-duplicates from per-frame perceptual hashes: frames
@@ -1787,8 +1773,7 @@ def video_near_dup_pairs(
     (rank, band, key) groups — black/constant frames at the same rank hash
     identically across a large corpus fraction — see
     ``drop_oversized_buckets``). A pair verifies when
-    >= ``min_matching_frames`` aligned frames are within ``max_hamming``
-    bits (recall guaranteed only for per-frame Hamming <= 3 — the 4-band
+    >= 3 aligned frames are within 10 bits (recall guaranteed only for per-frame Hamming <= 3 — the 4-band
     pigeonhole bound — and probabilistic above). Output:
     (doc_a, doc_b, matching_frames, mean_hamming)."""
     from covid19_spark.operators.dedup import (
@@ -1820,7 +1805,7 @@ def video_near_dup_pairs(
             F.col("a.frame_rank").alias("frame_rank"),
             ham.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 10)
         .dropDuplicates(["doc_a", "doc_b", "frame_rank"])
     )
     return (
@@ -1829,14 +1814,12 @@ def video_near_dup_pairs(
             F.count(F.lit(1)).cast("long").alias("matching_frames"),
             F.round(F.avg("hamming"), 4).alias("mean_hamming"),
         )
-        .filter(F.col("matching_frames") >= min_matching_frames)
+        .filter(F.col("matching_frames") >= 3)
     )
 
 
-def encode_wav(
-    samples: "np.ndarray", sample_rate: int = 16000, dtype: str = "i16"
-) -> bytes:
-    """Encode PCM samples as a RIFF/WAVE file — pure stdlib (struct).
+def encode_wav(samples: "np.ndarray", dtype: str = "i16") -> bytes:
+    """Encode PCM samples as an 8 kHz RIFF/WAVE file — pure stdlib (struct).
     ``samples``: int16 array, (n,) mono or (n, channels). ``dtype`` picks
     the container depth: ``i16`` (default), ``i24``/``i32`` (the int16
     signal shifted into the wider word — decodes to the SAME normalized
@@ -1867,8 +1850,8 @@ def encode_wav(
     else:
         raise ValueError(f"dtype must be i16/i24/i32/f32/f64 (got {dtype!r})")
     step = bits // 8
-    byte_rate = sample_rate * ch * step
-    fmt = struct.pack("<HHIIHH", audio_fmt, ch, sample_rate, byte_rate, ch * step, bits)
+    byte_rate = 8000 * ch * step
+    fmt = struct.pack("<HHIIHH", audio_fmt, ch, 8000, byte_rate, ch * step, bits)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -1992,9 +1975,8 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
 def audio_near_dup_pairs(
     fp_df: DataFrame,
     id_col: str = "media_id",
-    max_hamming: int = 10,
 ) -> DataFrame:
-    """Perceptual audio near-duplicate candidates: the 64-bit fingerprints
+    """Perceptual audio near-duplicate candidates (Hamming <= 8): the 64-bit fingerprints
     ride the same banded 16-bit-sub-band Hamming probe as SimHash/dHash —
     one thin self-join, never O(n²) over the audio corpus (the probe's
     10,000-row bucket cap drops degenerate keys — digital silence
@@ -2004,7 +1986,7 @@ def audio_near_dup_pairs(
     return simhash_candidate_pairs(
         fp_df.select(F.col(id_col), F.col("afp").alias("simhash")),
         id_col,
-        max_hamming=max_hamming,
+        max_hamming=8,
     )
 
 

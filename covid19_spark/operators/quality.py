@@ -46,9 +46,9 @@ def expect_not_null(col: str) -> Rule:
     return Rule(f"{col}_not_null", F.col(col).isNotNull())
 
 
-def expect_in_range(col: str, lo, hi) -> Rule:
+def expect_in_range(col: str) -> Rule:
     c = F.col(col)
-    return Rule(f"{col}_in_range", c.isNotNull() & (c >= lo) & (c <= hi))
+    return Rule(f"{col}_in_range", c.isNotNull() & (c >= 0.0) & (c <= 400000.0))
 
 
 def expect_in_set(col: str, values: Sequence) -> Rule:
@@ -103,9 +103,9 @@ def quality_report(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     )
 
 
-def mad_outlier_report(df, group_col: str, value_col: str, k: float = 3.0):
+def mad_outlier_report(df, group_col: str, value_col: str):
     """Robust per-group outlier report via median absolute deviation (MAD):
-    a value is an outlier when |x - median| > k * 1.4826 * MAD (the 1.4826
+    a value is an outlier when |x - median| > 3 * 1.4826 * MAD (the 1.4826
     factor makes MAD a consistent sigma estimator under normality — the
     standard robust-zscore rule, immune to the outliers themselves unlike
     mean/stddev).
@@ -133,7 +133,7 @@ def mad_outlier_report(df, group_col: str, value_col: str, k: float = 3.0):
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(
                 F.when(
-                    F.col("__absdev") > F.lit(k) * F.lit(1.4826) * F.col("mad"), 1
+                    F.col("__absdev") > F.lit(3.0) * F.lit(1.4826) * F.col("mad"), 1
                 ).otherwise(0)
             ).cast("long").alias("n_outliers"),
             F.min("med").alias("med"),

@@ -9,7 +9,7 @@ each interval into every bin it overlaps, and hash-join on the bin id with
 the exact range predicate as a residual filter.
 
 Cost model: |points| map-only binning + Σ⌈len/bin_width⌉ exploded interval
-rows + ONE hash shuffle on the bin id. Choosing ``bin_width`` ≈ the typical
+rows + ONE hash shuffle on the bin id. A ``BIN_WIDTH`` near the typical
 interval length keeps the explode factor ~2 and each bin's candidate set
 small. Degenerate giant intervals (explode factor → ∞, over 1024 bins) are
 refused in-plan rather than silently going quadratic — same
@@ -29,10 +29,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BIN_COL = "_range_bin"
+BIN_WIDTH = 0.1
 
 
-def _bin_of(col: Column, bin_width: float) -> Column:
-    return F.floor(col.cast("double") / F.lit(float(bin_width))).cast("long")
+def _bin_of(col: Column) -> Column:
+    return F.floor(col.cast("double") / F.lit(BIN_WIDTH)).cast("long")
 
 
 def binned_range_join(
@@ -41,33 +42,30 @@ def binned_range_join(
     value_col: str,
     lo_col: str,
     hi_col: str,
-    bin_width: float,
 ) -> DataFrame:
     """Inner-join each point row to every interval row with
     ``lo <= value <= hi``, as a bin-keyed hash join.
 
     Column names must be disjoint between the two frames (rename before
-    calling). Intervals wider than ``1024 * bin_width`` raise in-plan — widen the bins or route outliers through a broadcast
+    calling). Intervals wider than ``1024 * BIN_WIDTH`` raise in-plan — route outliers through a broadcast
     side-channel instead of letting one 10⁶-bin interval recreate the
     nested loop.
     """
-    if bin_width <= 0:
-        raise ValueError("bin_width must be positive")
-    lo_bin = _bin_of(F.col(lo_col), bin_width)
-    hi_bin = _bin_of(F.col(hi_col), bin_width)
+    lo_bin = _bin_of(F.col(lo_col))
+    hi_bin = _bin_of(F.col(hi_col))
     n_bins = hi_bin - lo_bin + F.lit(1)
     guarded = F.when(
         n_bins > 1024,
         F.raise_error(
             F.format_string(
-                "interval spans more than %d bins; widen bin_width or "
+                "interval spans more than %d bins; "
                 "broadcast outlier intervals separately",
                 F.lit(1024),
             )
         ).cast("long"),
     ).otherwise(hi_bin)
     iv = intervals.withColumn(BIN_COL, F.explode(F.sequence(lo_bin, guarded)))
-    p = points.withColumn(BIN_COL, _bin_of(F.col(value_col), bin_width))
+    p = points.withColumn(BIN_COL, _bin_of(F.col(value_col)))
     return (
         p.join(iv, BIN_COL)
         .filter((F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) <= F.col(hi_col)))

@@ -47,18 +47,17 @@ def moving_average(
     value_col: str,
     key_cols: list[str],
     order_col: str,
-    window_size: int = 5,
     out_col: str | None = None,
 ) -> DataFrame:
-    """Trailing moving average over the last ``window_size`` rows per key.
+    """Trailing moving average over the last 5 rows per key.
 
     Reference: 5-day sliding ``DescriptiveStatistics`` mean
     (``Visualizer.java:300-319``). A rows-window avg needs one exchange on the
-    key columns; the frame is bounded so state per key is O(window_size).
+    key columns; the frame is bounded so state per key is O(5).
     """
     w = (
         Window.partitionBy(*key_cols)
         .orderBy(F.col(order_col).asc())
-        .rowsBetween(-(window_size - 1), 0)
+        .rowsBetween(-4, 0)
     )
-    return df.withColumn(out_col or f"ma{window_size}_{value_col}", F.avg(value_col).over(w))
+    return df.withColumn(out_col or f"ma5_{value_col}", F.avg(value_col).over(w))

@@ -273,29 +273,27 @@ def dismax_scores_from_index(
     index,
     terms: Sequence[str],
     weights: dict,
-    tie_break: float = 0.0,
 ) -> DataFrame:
     """Disjunction-max fielded scoring (Lucene ``DisjunctionMaxQuery``,
     the other half of the fielded surface next to BM25F): per (term,
     doc) the score is the BEST single field's weighted contribution plus
-    ``tie_break`` times the others —
+    a tie-break of 0.3 times the others —
 
-        dmax(t, d) = max_f s_f + tie_break · (Σ_f s_f − max_f s_f),
+        dmax(t, d) = max_f s_f + 0.3 · (Σ_f s_f − max_f s_f),
         s_f = w_f · idf_f-free per-field BM25 kernel
             = w_f · tfn_f·(K1+1)/(K1 + tfn_f),
         tfn_f = tf_f / (1 − B + B·dl_f/avgdl_f)
 
     and the document score is ``Σ_t idf(t) · dmax(t, d)`` (idf over
-    any-field df, as BM25F).  ``tie_break=0`` is pure best-field —
-    a title hit is NOT reinforced by the same word in the body —
-    ``tie_break=1`` degenerates to the SUM of per-field kernels (pinned
-    by test; note BM25F instead sums before saturating).
+    any-field df, as BM25F): a title hit is reinforced by the same word
+    in the body at 0.3 of its kernel (BM25F instead sums before
+    saturating).
 
     Plan shape is ``bm25f_scores_from_index`` exactly: one statically
     pruned fpostings scan, per-field when-chain stats, a (t, doc)
     combine whose max/sum pair is computed from the same DEC-exact
     per-field values, df window, DEC-summed total.  Determinism: the max
-    is over ≤|fields| DEC-cast values, tie_break applies as one fixed
+    is over ≤|fields| DEC-cast values, the tie-break applies as one fixed
     expression."""
     from covid19_spark.sources.index import literal_term_buckets
 
@@ -303,8 +301,6 @@ def dismax_scores_from_index(
     fields = list(weights)
     if not fields:
         raise ValueError("dismax needs at least one weighted field")
-    if not (0.0 <= tie_break <= 1.0):
-        raise ValueError(f"tie_break must be in [0, 1], got {tie_break}")
     b_of = {f: B for f in fields}
     missing = [f for f in fields if f not in index.avgdl]
     if missing:
@@ -339,7 +335,7 @@ def dismax_scores_from_index(
             "doc_id",
             (
                 F.col("mx")
-                + F.lit(float(tie_break)) * (F.col("sm") - F.col("mx"))
+                + F.lit(0.3) * (F.col("sm") - F.col("mx"))
             ).alias("dmax"),
         )
     )
@@ -409,13 +405,12 @@ def bm25_topk_multi(
     spark,
     index,
     queries: DataFrame,
-    k: int = 10,
 ) -> DataFrame:
-    """BM25 top-k for a BATCH of queries from the persisted inverted
+    """BM25 top-10 for a BATCH of queries from the persisted inverted
     index — one pruned postings scan answers every query at once.
     ``queries``: (query_id, terms ARRAY<STRING>).  Output:
     (query_id, doc_id, rank, score), rank 1-based per query
-    (score desc, doc_id asc — fully tiebroken), rows with rank > k
+    (score desc, doc_id asc — fully tiebroken), rows with rank > 10
     dropped.  A query whose terms match no postings contributes no
     output rows.
 
@@ -469,7 +464,7 @@ def bm25_topk_multi(
     )
     return (
         scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .select("query_id", "doc_id", "rank", "score")
     )
 
@@ -478,14 +473,13 @@ def proximity_match_from_index(
     spark,
     index,
     terms: Sequence[str],
-    slop: int = 2,
 ) -> DataFrame:
     """Ordered proximity (sloppy-phrase) retrieval from the positional
-    inverted index — the within-``slop`` companion to
+    inverted index — the within-slop-2 companion to
     ``phrase_match_from_index`` that completes the Lucene PhraseQuery
     surface (VERDICT r12 task #7).  A document matches when the terms
-    appear IN ORDER with at most ``slop`` intervening tokens between each
-    consecutive pair; ``slop=0`` degenerates to the exact phrase.
+    appear IN ORDER with at most 2 intervening tokens between each
+    consecutive pair.
     Returns (doc_id, n_matches) where n_matches counts the DISTINCT
     positions at which a valid match ends — the set-fold generalization
     of the exact-phrase occurrence count (deterministic and
@@ -495,14 +489,12 @@ def proximity_match_from_index(
     postings scan per term (≤|terms| bucket directories opened),
     doc_id inner joins shrink candidates at every step, then a per-row
     array fold — fold_i = filter(pos_i, q → ∃p∈fold_{i-1}: 1 ≤ q−p ≤
-    slop+1) — all JVM array expressions, zero extra shuffles.  Positions
+    3) — all JVM array expressions, zero extra shuffles.  Positions
     are distinct within a doc, so each fold is a set and the final size
     is exact."""
     terms = list(terms)
     if len(terms) < 2:
         raise ValueError(f"a proximity query needs >= 2 terms, got {terms!r}")
-    if slop < 0:
-        raise ValueError(f"slop must be >= 0, got {slop}")
     from covid19_spark.sources.index import literal_term_buckets
 
     literal_term_buckets(spark, terms)  # ONE constant select resolves all
@@ -513,7 +505,7 @@ def proximity_match_from_index(
             F.col("tb").isin(b) & (F.col("t") == F.lit(t))
         ).select("doc_id", F.col("pos").alias(f"__pos{i}"))
         joined = side if joined is None else joined.join(side, "doc_id")
-    gap = slop + 1
+    gap = 3  # slop 2 + 1
 
     # factory (not a default-arg lambda: PySpark introspects lambda ARITY,
     # and a second parameter would select filter's (element, index) form)
@@ -541,13 +533,12 @@ def unordered_window_count_from_index(
     index,
     term_a: str,
     term_b: str,
-    window: int = 8,
 ) -> DataFrame:
     """Unordered-window co-occurrence counts from the positional index —
     the ``uw(N)`` feature of the Sequential Dependence Model (Metzler &
     Croft 2005, "A Markov random field model for term dependencies"):
     for each document, the number of position pairs (p ∈ pos(term_a),
-    q ∈ pos(term_b)) with p ≠ q and |p − q| ≤ window − 1.  Exact integer
+    q ∈ pos(term_b)) with p ≠ q and |p − q| ≤ 7 (window N = 8).  Exact integer
     counts, engine-portable (the DuckDB twin is a position self-join with
     the same predicate — for term_a == term_b both (p, q) and (q, p)
     count, consistently in both engines).
@@ -557,8 +548,6 @@ def unordered_window_count_from_index(
     within-window filter size) — zero shuffles beyond the candidate
     join.  Returns (doc_id, n_uw) for docs containing both terms with at
     least one qualifying pair."""
-    if window < 2:
-        raise ValueError(f"window must be >= 2, got {window}")
     from covid19_spark.sources.index import literal_term_buckets
 
     literal_term_buckets(spark, [term_a, term_b])
@@ -571,7 +560,7 @@ def unordered_window_count_from_index(
             ).select("doc_id", F.col("pos").alias(f"__pos{i}"))
         )
     joined = sides[0].join(sides[1], "doc_id")
-    w = window - 1
+    w = 7
     n_uw = F.aggregate(
         F.col("__pos0"),
         F.lit(0),
@@ -594,12 +583,10 @@ def snippet_windows_from_index(
     index,
     docs: DataFrame,
     terms: Sequence[str],
-    k: int = 10,
-    width: int = 10,
 ) -> DataFrame:
     """Search-result snippet extraction (hit highlighting) from the
-    positional index: for the BM25 top-``k`` documents, find the
-    ``width``-token window containing the MOST query-term occurrences
+    positional index: for the BM25 top-10 documents, find the
+    10-token window containing the MOST query-term occurrences
     (ties → earliest start) and cut the snippet text from the document.
     Output: (doc_id, score, rank, best_start, n_hits, snippet).
 
@@ -614,21 +601,21 @@ def snippet_windows_from_index(
     the index's per-doc start-offset/length arrays (``doclen.toff`` /
     ``doclen.tlen`` — Lucene's stored offsets) and extracted with
     per-token ``substr`` against the document text, so NOTHING is
-    re-tokenized — the serve reads ``width`` tokens' worth of chars from
-    each of the k winners however long the documents are.  Token-wise
+    re-tokenized — the serve reads 10 tokens' worth of chars from
+    each of the 10 winners however long the documents are.  Token-wise
     extraction (not one start-to-end substring) is what keeps the output
     bit-identical to re-tokenizing the ``text``: runs of separators
     collapse to the single spaces ``array_join`` emits (pinned by test
     against a re-tokenize reference).
 
-    The k winners are COLLECTED driver-side (k rows — the sanctioned
+    The 10 winners are COLLECTED driver-side (10 rows — the sanctioned
     bounded class of the PRF term collect / the ANN probed-list collect)
     and re-seeded as a literal frame whose ids prune every downstream
     scan with a static ``doc_id IN (...)``: the doc-store text read and
-    the doclen offset read touch k documents' row groups, not the
+    the doclen offset read touch 10 documents' row groups, not the
     corpus — without the pushdown both stores are corpus-scanned just to
-    keep k rows after the broadcast join, which is the difference between
-    k seeks and a full pass at 100 TB."""
+    keep 10 rows after the broadcast join, which is the difference between
+    10 seeks and a full pass at 100 TB."""
     from covid19_spark.operators.series import top_k
     from covid19_spark.sources.index import literal_term_buckets
 
@@ -637,9 +624,9 @@ def snippet_windows_from_index(
     # the matched-docs frame grows with df at scale
     ranked = top_k(
         bm25_scores_from_index(spark, index, terms),
-        "score", k, tiebreak_cols=["doc_id"],
+        "score", 10, tiebreak_cols=["doc_id"],
     )
-    winners = ranked.collect()  # ≤ k rows, by construction
+    winners = ranked.collect()  # ≤ 10 rows, by construction
     top = spark.createDataFrame(winners, schema=ranked.schema)
     doc_ids = [r["doc_id"] for r in winners]
     # per-term positions for the top docs only (left: a top doc may lack
@@ -665,7 +652,7 @@ def snippet_windows_from_index(
         )
     )
     merged = merged.withColumn("__hits", all_pos)
-    w = width - 1
+    w = 9  # window width 10
     best = F.array_max(
         F.transform(
             F.col("__hits"),
@@ -701,8 +688,8 @@ def snippet_windows_from_index(
     lowered = F.lower(F.col("text"))
     snippet = F.array_join(
         F.zip_with(
-            F.slice("toff", F.col("best_start") + 1, width),
-            F.slice("tlen", F.col("best_start") + 1, width),
+            F.slice("toff", F.col("best_start") + 1, 10),
+            F.slice("tlen", F.col("best_start") + 1, 10),
             lambda o, l: lowered.substr(o + 1, l),
         ),
         " ",
@@ -781,24 +768,23 @@ def rrf_fuse(
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    shortlist: int = 20,
-    lam: float = 0.75,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified re-ranking (Carbonell &
-    Goldstein, SIGIR 1998): greedily pick the candidate maximizing
-    ``λ·sim(q, d) − (1−λ)·max_{s ∈ selected} sim(d, s)`` — the standard
-    redundancy-suppressing re-rank a RAG stack runs after retrieval.
+    Goldstein, SIGIR 1998): greedily pick 8 of a 20-candidate shortlist,
+    each the candidate maximizing
+    ``λ·sim(q, d) − (1−λ)·max_{s ∈ selected} sim(d, s)`` with λ = 0.75 —
+    the standard redundancy-suppressing re-rank a RAG stack runs after
+    retrieval.
 
     Scale shape: the corpus-sized work is the shortlist retrieval
     (``cosine_topk`` here; the persisted ANN index at 100 TB); MMR itself
-    is inherently sequential but only over each query's ≤``shortlist``
+    is inherently sequential but only over each query's ≤20
     candidates, so it runs as a per-row JVM fold (``F.aggregate`` over the
     step sequence, the ``holt_winters`` ring-state discipline) on the
     collected candidate array — zero Python, zero extra shuffles beyond
     the one |queries|-sized groupBy.
 
-    Determinism: binary-exact ``lam`` (default 0.75), left-to-right
+    Determinism: binary-exact λ = 0.75, left-to-right
     double folds for every dot product, and the argmax tiebreaks on
     ``-id`` via lexicographic struct max — the DuckDB twin replays the
     identical list expressions inside a recursive CTE.
@@ -813,19 +799,13 @@ def mmr_rerank(
     """
     from covid19_spark.operators.similarity import cosine, cosine_topk
 
-    if not (0.0 <= lam <= 1.0):
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    if k < 1:
-        # sequence(1, 0) DESCENDS in Spark ([1, 0]) — a k=0 fold would run
-        # two phantom steps instead of zero
-        raise ValueError(f"k must be >= 1, got {k}")
     id_t = dict(corpus.dtypes).get("vec_id")
     if id_t not in {"tinyint", "smallint", "int", "bigint"}:
         raise TypeError(
             "mmr_rerank requires an integral 'vec_id' (fold state is "
             f"struct<id:bigint,...> and the tiebreak negates it); got {id_t}"
         )
-    cands = cosine_topk(corpus, queries, k=shortlist)
+    cands = cosine_topk(corpus, queries, k=20)
     cvecs = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("v"),
@@ -870,7 +850,7 @@ def mmr_rerank(
                 ),
                 F.lit(0.0),
             )
-            sc = F.lit(float(lam)) * cnd["sim"] - F.lit(1.0 - float(lam)) * pen
+            sc = F.lit(0.75) * cnd["sim"] - F.lit(0.25) * pen
             return F.struct(
                 sc.alias("s"), (-cnd["id"]).alias("negid"), cnd.alias("c")
             )
@@ -897,7 +877,7 @@ def mmr_rerank(
         )
         return F.struct(sel2.alias("sel"), out2.alias("out"))
 
-    steps = F.sequence(F.lit(1), F.least(F.lit(int(k)), F.size("cands")))
+    steps = F.sequence(F.lit(1), F.least(F.lit(8), F.size("cands")))
     folded = F.aggregate(steps, init, step)
     return (
         perq.select("query_id", F.explode(folded["out"]).alias("o"))

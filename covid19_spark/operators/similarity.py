@@ -27,6 +27,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+TOPK = 10  # neighbours per query of the ANN operators
+SHORTLIST = 50  # ADC / SQ8 candidates reranked by exact cosine per query
+IVF_CENTROIDS = 16  # coarse-quantizer lists
+IVF_PROBES = 3  # lists each query scores
+PQ_M = 8  # PQ subvectors (code bytes per vector)
+PQ_CODES = 16  # codewords per subvector
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-to-right double-precision dot product of two array columns."""
@@ -271,20 +278,21 @@ def _plane_component(seed: int, i: int, j: int) -> float:
     return (x >> 11) / float(1 << 53) - 0.5
 
 
-def hyperplane_signatures_udf(dim: int, num_planes: int, num_tables: int, seed: int = 42):
-    """Arrow-vectorized signature kernel: one matmul per batch computes all
-    ``num_tables`` sign-bucket signatures at once.
+def hyperplane_signatures_udf(num_planes: int, num_tables: int):
+    """Arrow-vectorized signature kernel over 64-dim vectors: one matmul per
+    batch computes all ``num_tables`` sign-bucket signatures at once.
 
     This is the sanctioned Python slow-path exception: expressing
     tables×planes dot products as per-row SQL folds builds an enormous
     expression tree (measured ~10× slower); a numpy matmul over an Arrow
-    batch is a single BLAS call. Planes derive from ``_plane_component``.
+    batch is a single BLAS call. Planes derive from ``_plane_component``
+    (seed 42, table t at seed 42 + 1000·t).
     """
     planes = np.array(
         [
             [
-                _plane_component(seed + 1000 * t, i, j)
-                for j in range(dim)
+                _plane_component(42 + 1000 * t, i, j)
+                for j in range(64)
             ]
             for t in range(num_tables)
             for i in range(num_planes)
@@ -306,17 +314,15 @@ def hyperplane_signatures_udf(dim: int, num_planes: int, num_tables: int, seed: 
 def ann_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    dim: int = 64,
     num_planes: int = 8,
     num_tables: int = 4,
-    multi_probe: bool = True,
 ) -> DataFrame:
-    """Approximate cosine top-k via multi-table sign-LSH.
+    """Approximate cosine top-``TOPK`` of 64-dim vectors via multi-table
+    sign-LSH.
 
     ``num_tables`` independent hash tables of ``num_planes`` sign bits each;
-    a corpus vector is scored iff it shares a bucket with the query in ≥1
-    table (optionally also Hamming-1 probe buckets per table). Candidate
+    a corpus vector is scored iff it shares a bucket with the query, or
+    one of its Hamming-1 probe buckets, in ≥1 table. Candidate
     matching is a hash equi-join on (table, bucket) with the query side
     broadcast — no shuffle of the corpus beyond the scan.
 
@@ -326,7 +332,7 @@ def ann_cosine_topk(
     construction — the exact ``cosine_topk`` is the gold path; tests assert
     recall on clustered data where locality actually exists.
     """
-    sig_kernel = hyperplane_signatures_udf(dim, num_planes, num_tables, seed=42)
+    sig_kernel = hyperplane_signatures_udf(num_planes, num_tables)
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("cv"),
@@ -338,12 +344,9 @@ def ann_cosine_topk(
         "neighbor_id", "cv", F.posexplode("sigs").alias("tbl", "bucket")
     )
     q_exploded = q.select("query_id", "qv", F.posexplode("sigs").alias("tbl", "sig"))
-    if multi_probe:
-        probes = F.array(
-            F.col("sig"), *[F.col("sig").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
-        )
-    else:
-        probes = F.array(F.col("sig"))
+    probes = F.array(
+        F.col("sig"), *[F.col("sig").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
+    )
     q_banded = q_exploded.select(
         "query_id", "qv", "tbl", F.explode(probes).alias("bucket")
     )
@@ -359,7 +362,7 @@ def ann_cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "rank", "neighbor_id", "sim")
     )
 
@@ -430,24 +433,18 @@ def _elementwise_mean(assigned: DataFrame, group_cols: list[str], arr_col: str) 
 def ivf_train_centroids(
     corpus: DataFrame,
     n_centroids: int,
-    iterations: int = 1,
 ) -> DataFrame:
-    """Deterministic distributed k-means for the IVF coarse quantizer.
+    """Deterministic distributed k-means (one Lloyd round) for the IVF
+    coarse quantizer.
 
     Seeds: the ``n_centroids`` lowest-id corpus vectors (deterministic, no
-    RNG). Each Lloyd iteration is fully distributed: broadcast-assign every
+    RNG). The Lloyd round is fully distributed: broadcast-assign every
     vector to its nearest centroid, then recompute centroids as the
     element-wise mean (``_elementwise_mean`` — posexplode + partial-agg
     shuffle; map-side combine keeps the exchange at |k|·dim partials). At
-    1B vectors per iteration cost is one broadcast-join scan + one
-    partial-agg shuffle; k-means|| seeding would replace the lowest-id
-    seeds at production scale.
-
-    Convergence early-exit (``iterations`` > 1): a round whose assignments
-    equal the previous round's is a fixed point — training stops before the
-    redundant mean recomputation. The stability check costs one
-    localCheckpoint + join-count per round, so single-round callers
-    (the registry default) pay nothing.
+    1B vectors the cost is one broadcast-join scan + one partial-agg
+    shuffle; k-means|| seeding would replace the lowest-id seeds at
+    production scale.
     """
     # TakeOrderedAndProject for the seed rows, then number them via one
     # collected struct array (n_centroids rows) — avoids a global-window
@@ -463,51 +460,32 @@ def ivf_train_centroids(
     centroids = seeds_row.select(
         F.posexplode("__ss").alias("__pos", "__s")
     ).select((F.col("__pos") + 1).alias("centroid_id"), F.col("__s.cvec").alias("cvec"))
-    check_convergence = iterations > 1
-    prev_assign = None
-    for _ in range(iterations):
-        assigned = ivf_assign(corpus, centroids, n_probes=1)
-        if check_convergence:
-            assigned = assigned.localCheckpoint(eager=True)
-            cur = assigned.select("vec_id", "centroid_id")
-            if prev_assign is not None:
-                changed = (
-                    cur.alias("c")
-                    .join(prev_assign.alias("p"), "vec_id")
-                    .filter(F.col("c.centroid_id") != F.col("p.centroid_id"))
-                )
-                if changed.isEmpty():
-                    break  # fixed point: the update would reproduce itself
-            prev_assign = cur
-        means = _elementwise_mean(assigned, ["centroid_id"], "vec")
-        # Empty-cluster guard: keep the previous centroid when no vector
-        # assigned to it this round, so the centroid count never shrinks
-        # (n_probes semantics and downstream blocking assume it).
-        centroids = (
-            centroids.alias("old")
-            .join(means.alias("new"), ["centroid_id"], "left")
-            .select(
-                "centroid_id",
-                F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
-            )
+    assigned = ivf_assign(corpus, centroids, n_probes=1)
+    means = _elementwise_mean(assigned, ["centroid_id"], "vec")
+    # Empty-cluster guard: keep the seed when no vector is assigned to it,
+    # so the centroid count never shrinks (n_probes semantics and
+    # downstream blocking assume it).
+    return (
+        centroids.alias("old")
+        .join(means.alias("new"), ["centroid_id"], "left")
+        .select(
+            "centroid_id",
+            F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
         )
-    return centroids
+    )
 
 
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probes: int = 3,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate nearest neighbours: the clustering twin of the
     sign-hyperplane ANN (SCALING.md's named production path for 1B+ vectors).
 
     Corpus vectors live in centroid partitions (1 probe); each query scores
-    only the lists of its ``n_probes`` nearest centroids — the scan shrinks
-    to ~n_probes/n_centroids of the corpus. The candidate join is a hash
+    only the lists of its ``IVF_PROBES`` nearest centroids — the scan
+    shrinks to ~IVF_PROBES/IVF_CENTROIDS of the corpus. The candidate join is a hash
     join on centroid_id; exact cosine re-ranks the candidates.
 
     Output: query_id, rank, neighbor_id, sim (same shape as ``cosine_topk``
@@ -516,7 +494,7 @@ def ivf_cosine_topk(
     if centroids is None:
         # two consumers (lists + probes) of a k-row frame whose lineage is
         # the whole Lloyd chain — train once (see ivfpq_cosine_topk)
-        centroids = ivf_train_centroids(corpus, n_centroids).localCheckpoint(
+        centroids = ivf_train_centroids(corpus, IVF_CENTROIDS).localCheckpoint(
             eager=False
         )
     # One spark.sql statement for assign + candidate join + rerank (the
@@ -544,7 +522,7 @@ __probes AS (
   SELECT /*+ BROADCAST(c) */ `vec_id` AS query_id, __p.centroid_id AS centroid_id, __v AS qv
   FROM (SELECT `vec_id`, CAST(`embedding` AS ARRAY<DOUBLE>) AS __v FROM {{__queries}}) q
   CROSS JOIN __crow c
-  LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {int(n_probes)})) AS __p
+  LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {IVF_PROBES})) AS __p
 ),
 __scored AS (
   SELECT p.query_id, l.neighbor_id, {_cos_sql('p.qv', 'l.cv')} AS sim
@@ -555,7 +533,7 @@ SELECT query_id, rank, neighbor_id, sim
 FROM (SELECT query_id, neighbor_id, sim,
              row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
       FROM __scored)
-WHERE rank <= {int(k)}
+WHERE rank <= {TOPK}
 """
     return corpus.sparkSession.sql(
         text, __corpus=corpus, __queries=queries, __centroids=centroids
@@ -626,25 +604,20 @@ def _pq_codebooks_from_sorted(v: "np.ndarray", m: int, n_codes: int):
     return codebooks
 
 
-def _fit_pq_codebooks_driver(ids, vecs, m: int, n_codes: int):
-    """Driver-side numpy twin of ``pq_train_codebooks(iterations=1)`` alone
+def _fit_pq_codebooks_driver(ids, vecs):
+    """Driver-side numpy twin of ``pq_train_codebooks(m=PQ_M, k=PQ_CODES,
+    iterations=1)`` alone
     (no IVF tier) — the sanctioned contract-small fit ``pq_cosine_topk``
     uses for its default index build. Sorts by id first so results are
     collect-order-independent."""
     order = np.argsort(np.asarray(ids, dtype=np.int64), kind="stable")
     v = np.asarray([vecs[i] for i in order], dtype=np.float64)
-    return _pq_codebooks_from_sorted(v, m, n_codes)
+    return _pq_codebooks_from_sorted(v, PQ_M, PQ_CODES)
 
 
 def ivfpq_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probes: int = 3,
-    m: int = 8,
-    n_codes: int = 16,
-    shortlist: int = 50,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
@@ -652,14 +625,15 @@ def ivfpq_cosine_topk(
     coarse quantizer + product codes), composed from the two existing tiers:
 
       - IVF partitions the corpus into centroid lists (map-only broadcast
-        assign), shrinking each query's scan to ~n_probes/n_centroids;
-      - inside the probed lists the corpus exists ONLY as m-byte PQ codes —
+        assign), shrinking each query's scan to ~IVF_PROBES/IVF_CENTROIDS;
+      - inside the probed lists the corpus exists ONLY as ``PQ_M``-byte PQ
+        codes —
         ADC table-lookup scoring, no full vectors touched;
       - exact cosine reranks the per-query shortlist.
 
     At 1B vectors: codes (8 GB) + centroids (KB) are the resident index;
-    the full-precision corpus is cold storage hit for ~shortlist rows per
-    query. Both quantizers train deterministically (lowest-id seeds) —
+    the full-precision corpus is cold storage hit for ~``SHORTLIST`` rows
+    per query. Both quantizers train deterministically (lowest-id seeds) —
     or are supplied pre-trained via ``centroids``/``codebooks``, the
     build-index-once-query-many production pattern shared with
     ``ivf_cosine_topk``/``pq_cosine_topk`` (and the seam the
@@ -675,25 +649,20 @@ def ivfpq_cosine_topk(
     # corpus-scale fits through the pre-trained ``centroids=``/
     # ``codebooks=`` seam, which the ``ivfpq_probe_crosscheck`` oracle
     # verifies the composite through.
-    centroids, codebooks = ivfpq_quantizers(
-        corpus, n_centroids, m, n_codes, centroids=centroids, codebooks=codebooks
-    )
-    codes = ivfpq_encode(corpus, centroids, codebooks, m)
+    centroids, codebooks = ivfpq_quantizers(corpus, centroids, codebooks)
+    codes = ivfpq_encode(corpus, centroids, codebooks)
     return ivfpq_search(
-        codes, centroids, codebooks, corpus, queries,
-        k=k, n_probes=n_probes, m=m, n_codes=n_codes, shortlist=shortlist,
+        codes, centroids, codebooks, corpus, queries, m=PQ_M, n_codes=PQ_CODES
     )
 
 
 def ivfpq_quantizers(
     corpus: DataFrame,
-    n_centroids: int,
-    m: int,
-    n_codes: int,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> "tuple[DataFrame, DataFrame]":
-    """Fit (or pass through pre-trained) IVF centroids + PQ codebooks — the
+    """Fit (or pass through pre-trained) ``IVF_CENTROIDS`` IVF centroids +
+    ``PQ_M`` x ``PQ_CODES`` PQ codebooks — the
     driver-side contract-small fit extracted from ``ivfpq_cosine_topk`` so
     the persisted-index build path (operators/ann_index.py) shares one
     trainer. Returns two LocalRelation-backed frames:
@@ -705,7 +674,7 @@ def ivfpq_quantizers(
             .collect()
         )
         cents, cbs = _fit_quantizers_driver(
-            [r["__id"] for r in rows], [r["__v"] for r in rows], n_centroids, m, n_codes
+            [r["__id"] for r in rows], [r["__v"] for r in rows], IVF_CENTROIDS, PQ_M, PQ_CODES
         )
         spark = corpus.sparkSession
         if centroids is None:
@@ -729,7 +698,6 @@ def ivfpq_encode(
     corpus: DataFrame,
     centroids: DataFrame,
     codebooks: DataFrame,
-    m: int,
 ) -> DataFrame:
     """Build the resident IVF-PQ index rows (id, centroid_id, codes) in ONE
     map pass: list assignment (top-1 centroid, identical expression to
@@ -755,7 +723,7 @@ def ivfpq_encode(
             _E(f"element_at({_nearest_centroids_sql()}, 1).centroid_id").alias(
                 "centroid_id"
             ),
-            _pq_codes_expr(m).alias("codes"),
+            _pq_codes_expr(PQ_M).alias("codes"),
         )
     )
 
@@ -766,18 +734,16 @@ def ivfpq_search(
     codebooks: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_probes: int = 3,
-    m: int = 8,
-    n_codes: int = 16,
-    shortlist: int = 50,
+    m: int,
+    n_codes: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The query half of IVF-PQ over an already-built ``codes`` frame
-    (in-memory from ``ivfpq_encode`` or read back from a persisted index):
-    probe assignment, ADC table-lookup scoring of only the probed lists,
-    exact-cosine rerank of the shortlist against the full-precision
+    (in-memory from ``ivfpq_encode`` or read back from a persisted index,
+    whose meta records ``m``/``n_codes``): ``IVF_PROBES`` probes, ADC
+    table-lookup scoring of only the probed lists, exact-cosine rerank of
+    the ``SHORTLIST`` against the full-precision
     ``corpus`` (cold storage). Extracted verbatim from ``ivfpq_cosine_topk``
     so persisted and in-memory paths are the SAME plan, bit-identical.
 
@@ -808,7 +774,7 @@ __probes AS (
   SELECT /*+ BROADCAST(c) */ `{id_col}` AS query_id, __p.centroid_id AS centroid_id
   FROM (SELECT `{id_col}`, CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS __v FROM {{__queries}}) q
   CROSS JOIN __crow c
-  LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {int(n_probes)})) AS __p
+  LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {IVF_PROBES})) AS __p
 ),
 __qtabs AS (
   SELECT /*+ BROADCAST(c) */ query_id, {_adc_tab_sql(m)} AS __tab
@@ -830,7 +796,7 @@ __short AS (
   FROM (SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, neighbor_id ASC) AS __r
         FROM __adc)
-  WHERE __r <= {int(shortlist)}
+  WHERE __r <= {SHORTLIST}
 ),
 __rr AS (
   SELECT /*+ BROADCAST(q) */ s.query_id, s.neighbor_id, {_cos_sql('q.qv', 'c.cv')} AS sim
@@ -844,7 +810,7 @@ SELECT query_id, rank, neighbor_id, sim
 FROM (SELECT query_id, neighbor_id, sim,
              row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
       FROM __rr)
-WHERE rank <= {int(k)}
+WHERE rank <= {TOPK}
 """
     return codes.sparkSession.sql(
         text,
@@ -1105,8 +1071,6 @@ def _sq8_codes_sql(vec_col: str) -> str:
 def sq8_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    shortlist: int = 50,
 ) -> DataFrame:
     """SQ8 ANN: scalar-quantize the corpus to a byte per dimension, scan
     with the FAISS-style ASYMMETRIC distance — full-precision normalized
@@ -1160,7 +1124,7 @@ def sq8_topk(
     )
     short = (
         scored.withColumn("__r", F.row_number().over(w_s))
-        .filter(F.col("__r") <= shortlist)
+        .filter(F.col("__r") <= SHORTLIST)
         .select("query_id", "neighbor_id")
     )
     c_full = corpus.select(
@@ -1177,7 +1141,7 @@ def sq8_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "rank", "neighbor_id", "sim")
     )
 
@@ -1217,20 +1181,17 @@ def quantizer_training_sample(
 def pq_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    n_codes: int = 16,
-    shortlist: int = 50,
     codebooks: DataFrame | None = None,
     train_sample_mod: "int | str | None" = "auto",
 ) -> DataFrame:
-    """PQ-ADC approximate top-k: the memory-scale path for 1B+ vectors.
+    """PQ-ADC approximate top-``TOPK``: the memory-scale path for 1B+ vectors.
 
-    The corpus lives as m-byte PQ codes (64× smaller than raw floats); each
-    query builds an m×k dot-product table against the broadcast codebooks
+    The corpus lives as ``PQ_M``-byte PQ codes (64× smaller than raw
+    floats); each query builds a ``PQ_M`` x ``PQ_CODES`` dot-product table against the broadcast codebooks
     (ADC — asymmetric distance computation, Jégou et al. 2011 §IV), scores
-    every code vector with m table lookups (JVM-side fold, no Python), and
-    exact cosine re-ranks only the ``shortlist`` best candidates. Join
+    every code vector with ``PQ_M`` table lookups (JVM-side fold, no
+    Python), and exact cosine re-ranks only the ``SHORTLIST`` best
+    candidates. Join
     shape: codes ⋈ broadcast(query tables) — the full-precision corpus is
     touched ONLY for the shortlist rows.
 
@@ -1267,9 +1228,7 @@ def pq_cosine_topk(
             )
             .collect()
         )
-        cbs = _fit_pq_codebooks_driver(
-            [r["__id"] for r in rows], [r["__v"] for r in rows], m, n_codes
-        )
+        cbs = _fit_pq_codebooks_driver([r["__id"] for r in rows], [r["__v"] for r in rows])
         codebooks = corpus.sparkSession.createDataFrame(
             [
                 (int(s), int(j), [float(x) for x in cbs[s][j]])
@@ -1291,18 +1250,18 @@ WITH __cbrow AS (
   FROM {{__codebooks}}
 ),
 __codes AS (
-  SELECT /*+ BROADCAST(cb) */ `vec_id`, {_pq_codes_sql(m)} AS codes
+  SELECT /*+ BROADCAST(cb) */ `vec_id`, {_pq_codes_sql(PQ_M)} AS codes
   FROM (SELECT `vec_id`, {_norm_sql("embedding")} AS __nv FROM {{__corpus}}) v
   CROSS JOIN __cbrow cb
 ),
 __qtabs AS (
-  SELECT /*+ BROADCAST(cb) */ query_id, {_adc_tab_sql(m)} AS __tab
+  SELECT /*+ BROADCAST(cb) */ query_id, {_adc_tab_sql(PQ_M)} AS __tab
   FROM (SELECT `vec_id` AS query_id, {_norm_sql("embedding", guard=False)} AS __qn FROM {{__queries}}) q
   CROSS JOIN __cbrow cb
 ),
 __adc AS (
   SELECT /*+ BROADCAST(t) */ t.query_id, c.`vec_id` AS neighbor_id,
-         {_adc_score_sql(m, n_codes, tab='t.__tab')} AS adc_score
+         {_adc_score_sql(PQ_M, PQ_CODES, tab='t.__tab')} AS adc_score
   FROM __codes c CROSS JOIN __qtabs t
   WHERE c.`vec_id` != t.query_id
 ),
@@ -1311,7 +1270,7 @@ __short AS (
   FROM (SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, neighbor_id ASC) AS __r
         FROM __adc)
-  WHERE __r <= {int(shortlist)}
+  WHERE __r <= {SHORTLIST}
 ),
 __rr AS (
   SELECT /*+ BROADCAST(q) */ s.query_id, s.neighbor_id, {_cos_sql('q.qv', 'c.cv')} AS sim
@@ -1325,7 +1284,7 @@ SELECT query_id, rank, neighbor_id, sim
 FROM (SELECT query_id, neighbor_id, sim,
              row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
       FROM __rr)
-WHERE rank <= {int(k)}
+WHERE rank <= {TOPK}
 """
     return corpus.sparkSession.sql(
         text, __corpus=corpus, __queries=queries, __codebooks=codebooks
@@ -1336,10 +1295,9 @@ def ensure_semantic_assignment(
     corpus: DataFrame,
     path: str,
     fingerprint: str,
-    n_centroids: int = 64,
-    iterations: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Persisted k-means clustering for the SemDeDup family — the
+    """Persisted k-means clustering (8 centroids, one Lloyd round) for the
+    SemDeDup family — the
     ``ensure_ivfpq_index`` caching contract applied to the (centroids,
     assignment) pair (VERDICT r12 task #6): ``semantic_dedup`` and
     ``semantic_dedup_paper_policy`` cluster the SAME corpus with the same
@@ -1367,9 +1325,7 @@ def ensure_semantic_assignment(
 
     def _build(tmp: str) -> None:
         use_fast_committer(spark)
-        centroids = ivf_train_centroids(
-            corpus, n_centroids, iterations=iterations
-        ).localCheckpoint(eager=False)
+        centroids = ivf_train_centroids(corpus, 8).localCheckpoint(eager=False)
         centroids.write.mode("overwrite").parquet(f"{tmp}/centroids")
         centroids = spark.read.parquet(f"{tmp}/centroids")
         ivf_assign(corpus, centroids, n_probes=1).write.mode(
@@ -1380,8 +1336,8 @@ def ensure_semantic_assignment(
             pa.table(
                 {
                     "fingerprint": pa.array([fingerprint], pa.string()),
-                    "n_centroids": pa.array([int(n_centroids)], pa.int32()),
-                    "iterations": pa.array([int(iterations)], pa.int32()),
+                    "n_centroids": pa.array([8], pa.int32()),
+                    "iterations": pa.array([1], pa.int32()),
                     "id_col": pa.array(["vec_id"], pa.string()),
                     "vec_col": pa.array(["embedding"], pa.string()),
                 }
@@ -1394,8 +1350,8 @@ def ensure_semantic_assignment(
         is_fresh=lambda: meta_matches(
             f"{path}/meta",
             fingerprint=fingerprint,
-            n_centroids=int(n_centroids),
-            iterations=int(iterations),
+            n_centroids=8,
+            iterations=1,
             id_col="vec_id",
             vec_col="embedding",
         ),
@@ -1413,14 +1369,12 @@ def semantic_dedup(
     vec_col: str = "embedding",
     *,
     assignment: tuple[DataFrame, DataFrame],
-    threshold: float = 0.95,
-    salt_buckets: int | None = None,
     keep_policy: str = "min_id",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
     deduplication", arXiv:2303.09540): k-means-cluster the embeddings, score
-    cosine similarity ONLY within each cluster, connect pairs ≥ threshold
+    cosine similarity ONLY within each cluster, connect pairs ≥ 0.95
     into duplicate groups, keep one representative per group.
 
     Composition of the existing scale-safe stages — nothing new shuffles:
@@ -1430,7 +1384,7 @@ def semantic_dedup(
          seam every keep policy over one corpus reads;
       3. ``cosine_near_dup_pairs`` blocked on ``centroid_id`` — the cluster
          IS the block, so the pair space is Σ|cluster|² ≈ n²/k for balanced
-         clusters, with the degenerate-cluster cap and optional pair-space
+         clusters, with the degenerate-cluster cap and 8-way pair-space
          salting;
       4. ``dedup_clusters`` (min-label connected components) for transitive
          closure + canonical flag.
@@ -1460,9 +1414,9 @@ def semantic_dedup(
         assigned.select(F.col(id_col), "centroid_id", F.col("vec").alias(vec_col)),
         id_col,
         vec_col,
-        threshold,
+        0.95,
         block_cols=["centroid_id"],
-        salt_buckets=salt_buckets,
+        salt_buckets=8,
     )
     clusters = dedup_clusters(pairs.select("id_a", "id_b"), "id_a", "id_b")
     out = corpus.select(F.col(id_col)).join(

@@ -28,8 +28,32 @@ mirroring the ``approx_aggregates`` error-envelope pattern.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def mg_update(counters: dict[str, int], items: Iterable[str], capacity: int) -> None:
+    """Fold ``items`` into the Misra-Gries ``counters`` (at most ``capacity``
+    of them) with the textbook decrement-all step: a new item past capacity
+    shrinks every counter by 1 and drops the zeros."""
+    for item in items:
+        if item is None:
+            continue
+        item = str(item)
+        if item in counters:
+            counters[item] += 1
+        elif len(counters) < capacity:
+            counters[item] = 1
+        else:
+            dead = []
+            for k in counters:
+                counters[k] -= 1
+                if counters[k] == 0:
+                    dead.append(k)
+            for k in dead:
+                del counters[k]
 
 
 def misra_gries_summaries(
@@ -38,10 +62,9 @@ def misra_gries_summaries(
     """``(item, est)`` per partition: ≤ ``capacity`` rows each.
 
     Arrow-batched: one Misra-Gries dict per PARTITION (the ``mapInPandas``
-    iterator spans all of a partition's batches), summary emitted once at
-    iterator exhaustion. Decrement steps use the textbook all-counters
-    form, so estimates are true partition counts minus at most
-    ``N_p / capacity``.
+    iterator spans all of a partition's batches, each folded by
+    ``mg_update``), summary emitted once at iterator exhaustion. Estimates
+    are true partition counts minus at most ``N_p / capacity``.
     """
     from collections.abc import Iterator
 
@@ -50,23 +73,7 @@ def misra_gries_summaries(
     def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}
         for pdf in it:
-            for item in pdf[item_col]:
-                if item is None:
-                    continue
-                item = str(item)
-                if item in counters:
-                    counters[item] += 1
-                elif len(counters) < capacity:
-                    counters[item] = 1
-                else:
-                    # decrement-all: shrink every counter by 1, drop zeros
-                    dead = []
-                    for k in counters:
-                        counters[k] -= 1
-                        if counters[k] == 0:
-                            dead.append(k)
-                    for k in dead:
-                        del counters[k]
+            mg_update(counters, pdf[item_col], capacity)
         if counters:
             yield pd.DataFrame(
                 {"item": list(counters.keys()), "est": list(counters.values())}

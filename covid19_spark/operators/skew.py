@@ -5,12 +5,12 @@ default in `session.get_spark`) covers most runtime skew; these explicit
 operators are for the cases AQE can't fix:
 
 - **salted_join**: a hot key on the big side of a broadcast-infeasible join.
-  The small side is replicated ``buckets`` times (one copy per salt value);
-  the big side derives a deterministic salt from a high-cardinality column,
-  so each hot key's rows spread over ``buckets`` tasks. Cost: small side
-  ×buckets (bounded — the small side is small by contract).
+  The small side is replicated 8 times (one copy per salt value); the big
+  side derives a deterministic salt from a high-cardinality column, so each
+  hot key's rows spread over 8 tasks. Cost: small side ×8 (bounded — the
+  small side is small by contract).
 - **two_phase_agg**: a hot group key in an aggregation whose functions are
-  algebraic (sum/count/min/max). Phase 1 aggregates (key, salt) partials,
+  algebraic (sum/count/min/max). Phase 1 aggregates (key, 16 salts) partials,
   phase 2 combines per key — the classic partial-combine trick made explicit
   when the single hot key exceeds one task's memory even after map-side
   combine.
@@ -34,19 +34,17 @@ def salted_join(
     small: DataFrame,
     key_cols: Sequence[str],
     salt_source: str,
-    buckets: int = 16,
 ) -> DataFrame:
-    """Inner equi-join with the big side's rows spread over ``buckets``
-    salts.
+    """Inner equi-join with the big side's rows spread over 8 salts.
 
     ``salt_source``: a high-cardinality big-side column (row id, event id)
     hashed to derive the salt deterministically — results are reproducible
     under any partitioning, unlike ``rand()``-based salting.
     """
     big_salted = big.withColumn(
-        SALT, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(buckets)).cast("int")
+        SALT, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(8)).cast("int")
     )
-    salts = F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
+    salts = F.explode(F.sequence(F.lit(0), F.lit(7)))
     small_replicated = small.withColumn(SALT, salts)
     joined = big_salted.join(small_replicated, [*key_cols, SALT])
     return joined.drop(SALT)
@@ -57,12 +55,11 @@ def two_phase_agg(
     key_cols: Sequence[str],
     salt_source: str,
     sums: Sequence[str] = (),
-    buckets: int = 16,
 ) -> DataFrame:
-    """Skew-safe sum/count aggregation: (key, salt) partials → key combine;
-    ``n_rows`` counts each key's rows."""
+    """Skew-safe sum/count aggregation: (key, 16 salts) partials → key
+    combine; ``n_rows`` counts each key's rows."""
     salted = df.withColumn(
-        SALT, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(buckets)).cast("int")
+        SALT, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(16)).cast("int")
     )
     partial_aggs = [F.sum(c).alias(f"__p_sum_{c}") for c in sums]
     partial_aggs.append(F.count(F.lit(1)).alias("__p_count"))

@@ -47,53 +47,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+K = 8  # tokens per window
+MIN_DOCS = 2  # a window is duplicated once this many documents carry it
 
-def _kgram_structs_sql(toks_sql: str, k: int) -> str:
-    """ARRAY<STRUCT<pos INT, kh STRING>> of 1-based k-gram window hashes
+
+def _kgram_structs_sql(toks_sql: str) -> str:
+    """ARRAY<STRUCT<pos INT, kh STRING>> of 1-based ``K``-gram window hashes
     (md5 of the space-joined window) over a token-array SQL fragment, as SQL
     text parsed once (construction-cost discipline, see
     operators/similarity._E).
 
     Mirrors operators/text.word_shingles: the index sequence is built only
-    under a ``size >= k`` guard (sequence() steps downward otherwise), and
+    under a ``size >= K`` guard (sequence() steps downward otherwise), and
     the token array is bound through ``transform(array(toks), ...)`` so the
     underlying split() is evaluated once per row — codegen does not share
     common subexpressions inside higher-order-function lambdas."""
     return (
         f"flatten(transform(array({toks_sql}), t -> "
-        f"CASE WHEN size(t) >= {k} THEN transform(sequence(1, size(t) - {k - 1}), "
-        f"i -> named_struct('pos', i, 'kh', md5(concat_ws(' ', slice(t, i, {k}))))) "
+        f"CASE WHEN size(t) >= {K} THEN transform(sequence(1, size(t) - {K - 1}), "
+        f"i -> named_struct('pos', i, 'kh', md5(concat_ws(' ', slice(t, i, {K}))))) "
         f"ELSE CAST(array() AS ARRAY<STRUCT<pos: INT, kh: STRING>>) END))"
     )
 
 
-def kgram_stream_from_tokens(
-    tok_df: DataFrame, id_col: str, tokens_col: str, k: int = 8
-) -> DataFrame:
+def kgram_stream_from_tokens(tok_df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """``(id_col, pos, kh)`` from a precomputed token-array frame — one row
-    per k-gram window occurrence. Map-only explode; lets a caller that also
+    per ``K``-gram window occurrence. Map-only explode; lets a caller that also
     needs the token arrays (``span_dedup``'s rebuild) tokenize once."""
     return (
         tok_df.select(
             id_col,
-            F.explode(F.expr(_kgram_structs_sql(f"`{tokens_col}`", k))).alias("g"),
+            F.explode(F.expr(_kgram_structs_sql(f"`{tokens_col}`"))).alias("g"),
         )
         .select(id_col, F.col("g.pos").alias("pos"), F.col("g.kh").alias("kh"))
     )
 
 
-def kgram_stream(df: DataFrame, k: int = 8) -> DataFrame:
-    """``(doc_id, pos, kh)`` — one row per k-gram window occurrence,
+def kgram_stream(df: DataFrame) -> DataFrame:
+    """``(doc_id, pos, kh)`` — one row per ``K``-gram window occurrence,
     tokenizing ``text`` inline. Map-only explode."""
     toks = F.expr("split(lower(`text`), ' ')")  # tokenize(), one parse
     return kgram_stream_from_tokens(
-        df.select("doc_id", toks.alias("__toks")), "doc_id", "__toks", k
+        df.select("doc_id", toks.alias("__toks")), "doc_id", "__toks"
     )
 
 
-def _spans_from_grams(
-    grams: DataFrame, id_col: str, k: int, min_docs: int, keep_first: bool
-) -> DataFrame:
+def _spans_from_grams(grams: DataFrame, id_col: str, keep_first: bool) -> DataFrame:
     """Core span derivation over a (possibly persisted) gram stream: one
     aggregate on kh (map-side partial distinct-min), one equi-join of the
     gram stream back to the duplicated-hash set, one per-doc window for the
@@ -107,7 +106,7 @@ def _spans_from_grams(
             F.countDistinct(id_col).alias("__nd"),
             F.min(id_col).alias("__owner"),
         )
-        .filter(F.col("__nd") >= min_docs)
+        .filter(F.col("__nd") >= MIN_DOCS)
         .select("kh", "__owner")
     )
     marked = grams.join(dup, "kh")
@@ -116,12 +115,12 @@ def _spans_from_grams(
     w = Window.partitionBy(id_col).orderBy("pos")
     prev = F.lag("pos").over(w)
     island = F.sum(
-        F.when(prev.isNull() | (F.col("pos") > prev + k), 1).otherwise(0)
+        F.when(prev.isNull() | (F.col("pos") > prev + K), 1).otherwise(0)
     ).over(w)
     return (
         marked.withColumn("__isl", island)
         .groupBy(id_col, "__isl")
-        .agg(F.min("pos").alias("span_start"), (F.max("pos") + (k - 1)).alias("span_end"))
+        .agg(F.min("pos").alias("span_start"), (F.max("pos") + (K - 1)).alias("span_end"))
         .select(
             id_col,
             F.col("span_start").cast("long").alias("span_start"),
@@ -131,12 +130,12 @@ def _spans_from_grams(
     )
 
 
-def duplicated_spans(df: DataFrame, k: int = 8, min_docs: int = 2) -> DataFrame:
+def duplicated_spans(df: DataFrame) -> DataFrame:
     """Maximal duplicated spans per document (``doc_id``, ``text``).
 
     Returns ``(doc_id, span_start, span_end, span_tokens)`` (1-based token
     positions, inclusive, BIGINT): every maximal run of tokens covered by
-    k-gram windows whose hash occurs in >= ``min_docs`` distinct documents,
+    ``K``-gram windows whose hash occurs in >= ``MIN_DOCS`` distinct documents,
     reported in every document that carries it (the detection/report
     shape; ``span_dedup`` applies the keep-one-occurrence policy).
 
@@ -148,36 +147,28 @@ def duplicated_spans(df: DataFrame, k: int = 8, min_docs: int = 2) -> DataFrame:
     evaluated eagerly (localCheckpoint) and the gram cache is released at
     once, so no session-lifetime cache entry outlives the call.
     """
-    out, caches = _duplicated_spans_with_handle(df, k, min_docs)
+    out, caches = _duplicated_spans_with_handle(df)
     out = out.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()
     return out
 
 
-def _duplicated_spans_with_handle(
-    df: DataFrame, k: int, min_docs: int
-) -> tuple[DataFrame, list[DataFrame]]:
+def _duplicated_spans_with_handle(df: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     """The lazy spans ``duplicated_spans`` checkpoints, and the persisted
     gram frame the caller unpersists once it has evaluated them."""
-    grams = kgram_stream(df, k).persist(StorageLevel.MEMORY_AND_DISK)
-    return _spans_from_grams(grams, "doc_id", k, min_docs, False), [grams]
+    grams = kgram_stream(df).persist(StorageLevel.MEMORY_AND_DISK)
+    return _spans_from_grams(grams, "doc_id", False), [grams]
 
 
-def span_dedup(
-    df: DataFrame,
-    k: int = 8,
-    min_docs: int = 2,
-    keep_first: bool = True,
-) -> DataFrame:
+def span_dedup(df: DataFrame) -> DataFrame:
     """Strip duplicated spans and report per-doc damage.
 
     Returns ``(doc_id, text, n_tokens, dup_tokens, n_spans, dup_frac)``:
     the rebuilt text with every token inside a duplicated span removed
-    (under the ``keep_first`` policy of :func:`duplicated_spans` — default
-    True, i.e. the min-id copy of each duplicated passage survives intact),
-    plus BIGINT token/span counts and the duplicated-token fraction.
-    ``keep_first=True`` is the Lee et al. keep-one-occurrence policy: for
+    except in the min-id copy of each duplicated passage, which survives
+    intact, plus BIGINT token/span counts and the duplicated-token fraction.
+    That is the Lee et al. keep-one-occurrence policy: for
     each duplicated hash the document with the minimum id is the canonical
     owner and its windows are NOT marked, so the canonical copy of a
     duplicated passage loses nothing while every other copy does.
@@ -195,26 +186,24 @@ def span_dedup(
     spans are computed over the lowercased token stream).  Evaluated
     eagerly, releasing both caches, like ``duplicated_spans``.
     """
-    out, caches = _span_dedup_with_handle(df, k, min_docs, keep_first)
+    out, caches = _span_dedup_with_handle(df)
     out = out.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()
     return out
 
 
-def _span_dedup_with_handle(
-    df: DataFrame, k: int, min_docs: int, keep_first: bool
-) -> tuple[DataFrame, list[DataFrame]]:
+def _span_dedup_with_handle(df: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     """The lazy rebuild ``span_dedup`` checkpoints, and the persisted gram
     and token frames the caller unpersists once it has evaluated it."""
     base = df.select(
         F.col("doc_id"),
         F.expr("split(lower(`text`), ' ')").alias("__toks"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    grams = kgram_stream_from_tokens(base, "doc_id", "__toks", k).persist(
+    grams = kgram_stream_from_tokens(base, "doc_id", "__toks").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    spans = _spans_from_grams(grams, "doc_id", k, min_docs, keep_first)
+    spans = _spans_from_grams(grams, "doc_id", True)
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans"),
         F.count(F.lit(1)).alias("n_spans"),

@@ -157,9 +157,8 @@ def tf_idf_top_terms(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    top_n: int = 3,
 ) -> DataFrame:
-    """Per-document top-N terms by TF-IDF.
+    """Per-document top-3 terms by TF-IDF.
 
     The idf is the rational (N+1)/(df+1), not the textbook
     ln((N+1)/(df+1)): same exact-int inputs, one double division,
@@ -170,7 +169,7 @@ def tf_idf_top_terms(
     frequency is a second partial agg keyed by term; the tf⋈df join is a
     key-key shuffle join on term (both sides pre-aggregated — |doc-term|
     and |vocab| rows, far below corpus token count); the corpus size N is
-    one broadcast scalar row. Final per-doc top-N is a rank window on the
+    one broadcast scalar row. Final per-doc top-3 is a rank window on the
     doc key.
     """
     toks = docs.select(
@@ -195,7 +194,7 @@ def tf_idf_top_terms(
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
+        .filter(F.col("rank") <= 3)
         .select(id_col, "rank", "term", F.col("tf").cast("long").alias("tf"),
                 F.col("df").cast("long").alias("df"), "score")
     )
@@ -205,15 +204,12 @@ def chunk_documents(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    chunk_tokens: int,
-    overlap_tokens: int = 0,
 ) -> DataFrame:
-    """Split documents into fixed-size sliding token windows — the context-
-    window chunking step of an LLM training/retrieval pipeline.
+    """Split documents into 32-token windows that overlap by 16 — the
+    context-window chunking step of an LLM training/retrieval pipeline.
 
-    Chunk i covers tokens ``[i·stride, i·stride + chunk_tokens)`` with
-    ``stride = chunk_tokens − overlap_tokens``. Chunks start at every stride
-    multiple ``s`` with ``s == 0`` or ``s + overlap_tokens < n_tokens`` —
+    Chunk i covers tokens ``[16·i, 16·i + 32)``. Chunks start at every
+    multiple ``s`` of 16 with ``s == 0`` or ``s + 16 < n_tokens`` —
     the second condition drops trailing starts whose window would be fully
     contained in the previous chunk, while guaranteeing every token appears
     in at least one chunk. Empty documents produce no chunks.
@@ -223,24 +219,19 @@ def chunk_documents(
     single-spaced input.
 
     Scale: map-only — scan → project → posexplode → project; no shuffle, no
-    Python. Output rows ≈ n_tokens/stride per doc regardless of corpus size,
+    Python. Output rows ≈ n_tokens/16 per doc regardless of corpus size,
     so this runs at 100 TB as a pure streaming map over parquet splits.
 
     Output: id_col, chunk_id (0-based LONG), chunk_text, chunk_n_tokens.
     """
-    if chunk_tokens <= 0:
-        raise ValueError("chunk_tokens must be positive")
-    if not 0 <= overlap_tokens < chunk_tokens:
-        raise ValueError("overlap_tokens must satisfy 0 <= overlap < chunk_tokens")
-    stride = chunk_tokens - overlap_tokens
     toks = F.filter(tokenize(F.col(text_col), lowercase=False), lambda t: t != "")
     with_toks = docs.select(F.col(id_col), toks.alias("__t")).filter(
         F.size("__t") > 0
     )
     n = F.size("__t")
     starts = F.filter(
-        F.sequence(F.lit(0), n - 1, F.lit(stride)),
-        lambda s: (s == 0) | (s + overlap_tokens < n),
+        F.sequence(F.lit(0), n - 1, F.lit(16)),
+        lambda s: (s == 0) | (s + 16 < n),
     )
     return with_toks.select(
         F.col(id_col),
@@ -249,10 +240,10 @@ def chunk_documents(
     ).select(
         F.col(id_col),
         F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.concat_ws(" ", F.slice("__t", F.col("__s") + 1, chunk_tokens)).alias(
+        F.concat_ws(" ", F.slice("__t", F.col("__s") + 1, 32)).alias(
             "chunk_text"
         ),
-        F.least(F.lit(chunk_tokens), F.size("__t") - F.col("__s"))
+        F.least(F.lit(32), F.size("__t") - F.col("__s"))
         .cast("long")
         .alias("chunk_n_tokens"),
     )

@@ -23,11 +23,11 @@ integer arithmetic in micro-units (scale = 1e6):
   quantized-network surrogate), so activations are exact integers:
   ``p = clamp(S/2 + floor(z/4), 0, S)``;
 - gradients are integer sums of residuals ``p − y·S`` — order-independent;
-- the weight step is ``w −= floor(grad / (lr_den · n))`` — floor of an
+- the weight step is ``w −= floor(grad / (64 · n))`` — floor of an
   IEEE division of <2^53 integers, which is bit-identical in any IEEE
   engine.
 
-Consequence: the full k-iteration training run replays EXACTLY in DuckDB
+Consequence: the full 6-iteration training run replays EXACTLY in DuckDB
 from the SQL generated by :func:`quantized_lr_sql` — the registry oracle
 differentially verifies the TRAINING, not just the scoring.
 """
@@ -40,10 +40,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000  # micro-unit fixed-point scale for weights/activations
+N_BUCKETS = 32  # hashed token buckets; the intercept is bucket N_BUCKETS
 
 
-def md5_bucket(col: Column, n_buckets: int) -> Column:
-    """Deterministic feature bucket in ``[0, n_buckets)`` from the first 8
+def md5_bucket(col: Column) -> Column:
+    """Deterministic feature bucket in ``[0, N_BUCKETS)`` from the first 8
     hex chars of ``md5(value)`` — identical in any engine with md5.  The
     Spark side decodes via one ``conv(hex, 16, 10)`` builtin (same integer
     as the ascii-arithmetic chain ``md5_bucket_sql`` spells out for DuckDB,
@@ -51,7 +52,7 @@ def md5_bucket(col: Column, n_buckets: int) -> Column:
     unit large enough to cost seconds of JIT per fresh plan)."""
     h = F.md5(col.cast("string"))
     v = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    return F.pmod(v, F.lit(n_buckets)).cast("long")
+    return F.pmod(v, F.lit(N_BUCKETS)).cast("long")
 
 
 def md5_bucket_sql(expr: str, n_buckets: int) -> str:
@@ -70,11 +71,10 @@ def count_features(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n_buckets: int,
 ) -> DataFrame:
     """(id, bucket, cnt) hashed bag-of-words COUNT features.  One tokenize
     + explode + count agg (map-side combined); the shuffle carries
-    ≤ n_buckets rows per document.  Counts (not presences) so the margin
+    ≤ ``N_BUCKETS`` rows per document.  Counts (not presences) so the margin
     keeps frequency/length signal — and they stay exact integers."""
     toks = docs.select(
         F.col(id_col),
@@ -83,7 +83,7 @@ def count_features(
         ).alias("__t"),
     )
     return (
-        toks.select(id_col, md5_bucket(F.col("__t"), n_buckets).alias("bucket"))
+        toks.select(id_col, md5_bucket(F.col("__t")).alias("bucket"))
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -93,9 +93,8 @@ def with_intercept(
     feats: DataFrame,
     labels: DataFrame,
     id_col: str,
-    n_buckets: int,
 ) -> DataFrame:
-    """Append the bias feature: virtual bucket ``n_buckets`` with count 16
+    """Append the bias feature: virtual bucket ``N_BUCKETS`` with count 16
     for EVERY labeled doc (docs with no tokens included) — without it a
     count-feature model can only separate through the origin.  The bias
     count sits near the typical per-bucket count magnitude: a unit
@@ -105,7 +104,7 @@ def with_intercept(
     the length-gate task)."""
     bias = labels.select(
         F.col(id_col),
-        F.lit(n_buckets).cast("long").alias("bucket"),
+        F.lit(N_BUCKETS).cast("long").alias("bucket"),
         F.lit(16).cast("long").alias("cnt"),
     )
     return feats.select(id_col, "bucket", "cnt").unionByName(bias)
@@ -122,15 +121,14 @@ def train_quantized_lr(
     feats: DataFrame,
     labels: DataFrame,
     id_col: str,
-    n_buckets: int,
 ) -> list[int]:
     """Full-batch quantized GD; returns the final integer weight vector.
     6 iterations at lr 1/64 reach 0.95-0.97 accuracy on the
     distilled length-gate task at every tested scale (sf0.001-0.1).
 
-    ``feats``: (id, bucket, cnt) rows (run :func:`with_intercept` first —
-    ``n_buckets`` must count the bias bucket too, i.e. pass
-    ``n_raw_buckets + 1``); ``labels``: (id, y) with y in {0, 1}.
+    ``feats``: (id, bucket, cnt) rows (run :func:`with_intercept` first:
+    the weight vector has ``N_BUCKETS + 1`` entries, the bias included);
+    ``labels``: (id, y) with y in {0, 1}.
     Gradient sums stay far inside int64 at any scale (|r| ≤ 1e6, cnt ≤
     doc length, so ~1e9 docs × 1e8 per-doc bound ≈ 1e17 < 2^63).
 
@@ -144,7 +142,7 @@ def train_quantized_lr(
     map-side-combined sum.  The former shape (margins groupBy + residual
     join + gradient groupBy = three shuffles per round, re-reading the
     feature frame twice per round) collapses to ONE shuffle per round over
-    ≤n_buckets-sized aggregates.
+    ≤(N_BUCKETS + 1)-sized aggregates.
 
     The per-iteration gradient plan is built as ONE SQL text parsed in the
     JVM (``spark.sql`` with the cached feature frame templated in) rather
@@ -168,7 +166,7 @@ def train_quantized_lr(
         )
         .localCheckpoint(eager=True)
     )
-    w = [0] * n_buckets
+    w = [0] * (N_BUCKETS + 1)
     scale, half = SCALE, SCALE // 2
     for _ in range(6):
         arr_sql = "array(" + ",".join(f"{v}L" for v in w) + ")"
@@ -229,9 +227,6 @@ def quantized_lr_sql(
     feats_cte: str,
     labels_cte: str,
     id_col: str,
-    n_buckets: int,
-    iterations: int,
-    lr_den: int = 64,
 ) -> str:
     """Generate the unrolled CTE chain replaying the ENTIRE training run +
     scoring pass in DuckDB: w0 = zeros; per iteration k — margins from
@@ -244,11 +239,11 @@ def quantized_lr_sql(
     scale, half = SCALE, SCALE // 2
     parts = [
         f"w0 AS (SELECT CAST(range AS BIGINT) AS bucket, CAST(0 AS BIGINT) AS w "
-        f"FROM range({n_buckets}))",
+        f"FROM range({N_BUCKETS + 1}))",
         f"nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM {labels_cte})",
     ]
     prev = "w0"
-    for k in range(1, iterations + 1):
+    for k in range(1, 7):
         parts.append(
             f"""z{k} AS (
   SELECT f.{id_col}, sum(f.cnt * w.w) AS z FROM {feats_cte} f
@@ -272,7 +267,7 @@ def quantized_lr_sql(
         parts.append(
             f"""w{k} AS (
   SELECT w.bucket,
-         w.w - CAST(floor(COALESCE(g.g, 0) / ({lr_den}.0 * nd.n)) AS BIGINT) AS w
+         w.w - CAST(floor(COALESCE(g.g, 0) / (64.0 * nd.n)) AS BIGINT) AS w
   FROM {prev} w LEFT JOIN g{k} g USING (bucket) CROSS JOIN nd
 )"""
         )

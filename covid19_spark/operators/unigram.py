@@ -38,12 +38,12 @@ from pyspark.sql import functions as F
 from covid19_spark.operators.bpe import word_counts
 
 UNK_LOGPROB = -100.0  # byte-fallback score for chars unseen at training
+MAX_PIECE_LEN = 6
 
 
-def _viterbi(
-    word: str, logp: dict[str, float], max_piece_len: int
-) -> tuple[list[str], float]:
-    """Best segmentation of ``word`` under a unigram LM.
+def _viterbi(word: str, logp: dict[str, float]) -> tuple[list[str], float]:
+    """Best segmentation of ``word`` into pieces of at most ``MAX_PIECE_LEN``
+    chars under a unigram LM.
 
     dp over prefix lengths; ties prefer the longer last piece, then the
     lexicographically smaller one — a strict total order, so the
@@ -57,7 +57,7 @@ def _viterbi(
     dp: list[tuple[float, int]] = [(0.0, 0)] + [(-math.inf, 0)] * n
     for i in range(1, n + 1):
         best_score, best_len, best_piece = -math.inf, 0, ""
-        lo = max(0, i - max_piece_len)
+        lo = max(0, i - MAX_PIECE_LEN)
         for j in range(lo, i):
             piece = word[j:i]
             lp = logp.get(piece)
@@ -92,18 +92,16 @@ def _viterbi(
 def train_unigram(
     df: DataFrame,
     text_col: str = "text",
-    vocab_size: int = 400,
-    max_piece_len: int = 6,
 ) -> list[tuple[str, float]]:
-    """Learn a ``vocab_size`` unigram-LM piece vocabulary from a corpus.
+    """Learn a 300-piece unigram-LM vocabulary from a corpus.
 
-    Seed: every substring of every word up to ``max_piece_len``, scored by
+    Seed: every substring of every word up to ``MAX_PIECE_LEN``, scored by
     occurrence-count × word-frequency; all seen single chars are kept
     unconditionally (coverage guarantee), multi-char seeds keep the top
-    ``8 × vocab_size``. Fit: Viterbi (hard) EM, two rounds at a time —
+    2400 (8 × 300). Fit: Viterbi (hard) EM, two rounds at a time —
     expected counts from each word's best segmentation, weighted by word
     frequency — alternating with pruning multi-char pieces by fitted count
-    (to 3/4 per step) until the vocabulary reaches ``vocab_size``.  The
+    (to 3/4 per step) until the vocabulary reaches 300.  The
     word table is capped to the 5M most frequent words (the ``train_bpe``
     collect bound).
 
@@ -124,13 +122,13 @@ def train_unigram(
         chars.update(word)
         n = len(word)
         for i in range(n):
-            for ln in range(1, min(max_piece_len, n - i) + 1):
+            for ln in range(1, min(MAX_PIECE_LEN, n - i) + 1):
                 piece = word[i : i + ln]
                 seed_scores[piece] = seed_scores.get(piece, 0) + cnt
     multi = sorted(
         ((p, s) for p, s in seed_scores.items() if len(p) > 1),
         key=lambda kv: (-kv[1], kv[0]),
-    )[: 8 * vocab_size]
+    )[:2400]
     vocab: dict[str, float] = {}
     total = float(sum(s for _, s in seed_scores.items())) or 1.0
     for c in chars:
@@ -142,7 +140,7 @@ def train_unigram(
     def em_round(logp: dict[str, float]) -> dict[str, float]:
         counts: dict[str, float] = {}
         for word, cnt in words:
-            pieces, _ = _viterbi(word, logp, max_piece_len)
+            pieces, _ = _viterbi(word, logp)
             for p in pieces:
                 counts[p] = counts.get(p, 0.0) + cnt
         tot = sum(counts.values()) or 1.0
@@ -158,7 +156,7 @@ def train_unigram(
         return out
 
     n_single = len(chars)
-    target_multi = max(0, vocab_size - n_single)
+    target_multi = max(0, 300 - n_single)
     while True:
         for _ in range(2):
             vocab = em_round(vocab)
@@ -181,8 +179,8 @@ def unigram_tokenize(
     text_col: str = "text",
 ) -> DataFrame:
     """``(id_col, n_words, n_tokens, nll, tokens)`` — Arrow-batched Viterbi
-    encoder under a trained unigram LM (pieces of at most 6 chars, the
-    ``train_unigram`` default).
+    encoder under a trained unigram LM (pieces of at most ``MAX_PIECE_LEN``
+    chars).
 
     The vocab ships in the task closure (vocab-sized — KBs); each batch
     keeps a word→segmentation cache. Map-only: no shuffle at any corpus
@@ -201,7 +199,7 @@ def unigram_tokenize(
         def enc(word: str) -> tuple[list[str], float]:
             hit = cache.get(word)
             if hit is None:
-                hit = _viterbi(word, logp, 6)
+                hit = _viterbi(word, logp)
                 cache[word] = hit
             return hit
 

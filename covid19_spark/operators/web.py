@@ -373,7 +373,6 @@ def politeness_schedule(
     urls: DataFrame,
     delays: DataFrame,
     agent: str,
-    default_delay_s: float = 1.0,
     tiebreak_cols: "Sequence[str]" = (),
 ) -> DataFrame:
     """Per-host ``url`` fetch scheduling under Crawl-delay politeness: input rows
@@ -383,7 +382,7 @@ def politeness_schedule(
     order among the duplicates is engine/partitioning-dependent),
     ``delay_s`` (the host's
     effective Crawl-delay: agent-specific group first, else ``*``, else
-    ``default_delay_s``) and ``fetch_offset_s = slot × delay_s`` — the
+    1 s) and ``fetch_offset_s = slot × delay_s`` — the
     earliest time each URL may be fetched relative to the host's first
     fetch.
 
@@ -415,7 +414,7 @@ def politeness_schedule(
         F.row_number().over(Window.partitionBy("_p_host").orderBy(*order)) - 1
     )
     joined = u.join(F.broadcast(pref), u["_p_host"] == pref["host"], "left")
-    eff = F.coalesce(F.col("delay_s"), F.lit(float(default_delay_s)))
+    eff = F.coalesce(F.col("delay_s"), F.lit(1.0))
     return joined.select(
         *[c for c in urls.columns],
         F.col("_p_host").alias("host"),

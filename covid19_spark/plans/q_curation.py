@@ -16,7 +16,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.curation import hash_sample
 
     docs = _t(spark, sf_dir, "documents")
-    return hash_sample(docs, "doc_id", 0.25).select("doc_id", "source").orderBy("doc_id")
+    return hash_sample(docs, "doc_id").select("doc_id", "source").orderBy("doc_id")
 
 
 ORACLE_DETERMINISTIC_SAMPLE = """
@@ -40,7 +40,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.curation import stratified_quota_sample
 
     docs = _t(spark, sf_dir, "documents")
-    out = stratified_quota_sample(docs, ["lang"], "doc_id", 30)
+    out = stratified_quota_sample(docs, ["lang"], "doc_id")
     return out.select(
         "lang", "doc_id", F.col("sample_rank").cast("long").alias("sample_rank")
     ).orderBy("lang", "sample_rank")
@@ -263,7 +263,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread by id first (a real corpus arrives pre-partitioned — drop this).
     corpus = docs.filter(F.col("doc_id") % 13 != 0).repartition(F.col("doc_id"))
     hits = contamination_hits(
-        corpus, benchmark_shingles(bench, "text", 4), "doc_id", "text", 4
+        corpus, benchmark_shingles(bench, "text"), "doc_id", "text"
     )
     return hits.orderBy("doc_id")
 
@@ -301,7 +301,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", block_cols=["lang"], n=2, threshold=0.1
+        docs, "doc_id", "text", block_cols=["lang"], threshold=0.1
     )
     return dedup_clusters(pairs.select("doc_a", "doc_b")).orderBy("doc_id")
 
@@ -354,9 +354,7 @@ def q_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.dedup import lsh_dedup_pipeline
 
     docs = _t(spark, sf_dir, "documents")
-    return lsh_dedup_pipeline(
-        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3, threshold=0.5
-    ).orderBy("doc_id")
+    return lsh_dedup_pipeline(docs, "doc_id", "text").orderBy("doc_id")
 
 
 ORACLE_DEDUP_PIPELINE_E2E = """
@@ -420,10 +418,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 4 == 3)
     # the screen evaluates eagerly for cache hygiene — see
     # tests/test_cache_hygiene.py
-    return incremental_dedup_against_corpus(
-        corpus, batch, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3,
-        threshold=0.5,
-    ).orderBy("doc_id")
+    return incremental_dedup_against_corpus(corpus, batch, "doc_id", "text").orderBy(
+        "doc_id"
+    )
 
 
 ORACLE_DEDUP_INCREMENTAL = """
@@ -485,7 +482,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
     )
-    packed = pack_greedy(docs, "doc_id", "n_tokens", ctx_len=256)
+    packed = pack_greedy(docs, "doc_id", "n_tokens")
     return (
         packed.groupBy("shard", "bin")
         .agg(
@@ -692,7 +689,7 @@ def q_range_join_price_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_retailprice").cast("double") - F.lit(0.05)).alias("lo"),
         (F.col("p_retailprice").cast("double") + F.lit(0.05)).alias("hi"),
     )
-    joined = binned_range_join(li, parts, "unit_price", "lo", "hi", bin_width=0.1)
+    joined = binned_range_join(li, parts, "unit_price", "lo", "hi")
     return (
         joined.groupBy("p_partkey")
         .agg(
@@ -757,7 +754,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("text"),
     )
-    return line_dedup(lined, min_docs=2).orderBy("doc_id")
+    return line_dedup(lined).orderBy("doc_id")
 
 
 ORACLE_LINE_DEDUP = """
@@ -814,7 +811,7 @@ def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.col("c_name"), 1, 15).alias("name_blk"),
     )
     pairs = blocked_edit_distance_pairs(
-        cust, "c_custkey", "c_name", ["c_nationkey", "name_blk"], max_distance=2
+        cust, "c_custkey", "c_name", ["c_nationkey", "name_blk"]
     )
     return pairs.select(
         F.col("id_a").alias("cust_a"),
@@ -2135,8 +2132,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", fingerprint(F.col("text")).alias("__fp")
     )
     holdout = docs.filter(F.col("doc_id") % 10 == 7).select("__fp")
-    bloom = bloom_build(holdout, "__fp", m_bits=1 << 18, k=7)
-    flagged = bloom_might_contain(docs, bloom, "__fp", m_bits=1 << 18, k=7)
+    bloom = bloom_build(holdout, "__fp", m_bits=1 << 18)
+    flagged = bloom_might_contain(docs, bloom, "__fp", m_bits=1 << 18)
     return (
         flagged.select(
             "doc_id",
@@ -2306,7 +2303,7 @@ def q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delays = robots_crawl_delays(robots)
     return (
-        politeness_schedule(urls, delays, agent="crawler", default_delay_s=1.0)
+        politeness_schedule(urls, delays, agent="crawler")
         .select("doc_id", "host", "slot", "delay_s", "fetch_offset_s")
         .orderBy("doc_id")
     )
@@ -2580,7 +2577,7 @@ def q_frontier_policy_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # /p/0) — doc_id tiebreaks the slot order into a total order
     scheduled = politeness_schedule(
         eligible.select("doc_id", "url"), delays, agent="crawler",
-        default_delay_s=1.0, tiebreak_cols=["doc_id"],
+        tiebreak_cols=["doc_id"],
     ).select("doc_id", "slot", "fetch_offset_s")
     return (
         verdicts.join(scheduled, "doc_id", "left")
@@ -2656,7 +2653,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return (
-        weighted_sample(docs, ["source"], "doc_id", "n_chars", k=20)
+        weighted_sample(docs, ["source"], "doc_id", "n_chars")
         .select("source", "doc_id", F.col("n_chars").cast("long").alias("n_chars"),
                 F.col("sample_rank").cast("int").alias("sample_rank"))
         .orderBy("source", "sample_rank")

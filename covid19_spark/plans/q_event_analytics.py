@@ -596,7 +596,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = _t(spark, sf_dir, "orders")
     dim = spark.createDataFrame(_PRIORITY_WEIGHTS, ["o_orderpriority", "weight"])
-    joined = salted_join(orders, dim, ["o_orderpriority"], salt_source="o_orderkey", buckets=8)
+    joined = salted_join(orders, dim, ["o_orderpriority"], salt_source="o_orderkey")
     return (
         joined.groupBy("o_orderpriority")
         .agg(
@@ -640,7 +640,7 @@ def q_skew_two_phase_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
     prepared = events.withColumn("value_dec", F.col("value").cast(DEC))
     out = two_phase_agg(
-        prepared, ["event_type"], salt_source="event_id", sums=["value_dec"], buckets=16
+        prepared, ["event_type"], salt_source="event_id", sums=["value_dec"]
     )
     return (
         out.select(
@@ -1189,9 +1189,10 @@ QUERY_REGISTRY["ivm_stream_replay"] = QuerySpec(
 
 
 def q_mg_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of ``streaming/heavy_hitters_stream``: the stream's OWN
-    shard hash (``pmod(xxhash64(item), shards)``) and its OWN
-    ``mg_update`` fold, replayed over three deterministic micro-batches
+    """Misra-Gries micro-batch stream replay: items shard by
+    ``pmod(xxhash64(item), shards)`` and ``operators/sketch.mg_update`` —
+    the fold ``heavy_hitters`` runs per partition — threads each shard's
+    counters across three deterministic micro-batches
     (event_id % 3, ordered by event_id within each) via one
     ``applyInPandas`` per shard — the same accumulate-across-batches
     state threading the ``applyInPandasWithState`` operator performs,
@@ -1211,7 +1212,7 @@ def q_mg_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     form shards across executors, this replay pins its semantics."""
     import pandas as pd
 
-    from covid19_spark.streaming.heavy_hitters_stream import mg_update
+    from covid19_spark.operators.sketch import mg_update
 
     capacity, shards = 64, 8
     events = _t(spark, sf_dir, "events")

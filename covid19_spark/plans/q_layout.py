@@ -367,7 +367,7 @@ def q_bloom_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    words = file_bloom_words(files, "file", "o_custkey", m_bits=8192, k=3)
+    words = file_bloom_words(files, "file", "o_custkey")
     zone = (
         files.groupBy("file")
         .agg(F.min("o_custkey").alias("lo"), F.max("o_custkey").alias("hi"))
@@ -383,7 +383,7 @@ def q_bloom_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("probe_key")
         .agg(F.countDistinct("file").cast("long").alias("true_files"))
     )
-    bloom = files_bloom_touched(words, probes, "probe_key", m_bits=8192, k=3)
+    bloom = files_bloom_touched(words, probes, "probe_key")
     return (
         true_f.join(zone, "probe_key")
         .join(bloom, "probe_key")
@@ -395,8 +395,8 @@ def q_bloom_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_bloom_pruning_gain() -> str:
     from covid19_spark.operators.layout import file_bloom_pos_sql
 
-    p = [file_bloom_pos_sql("o_custkey", i, 8192) for i in range(3)]
-    q = [file_bloom_pos_sql("probe_key", i, 8192) for i in range(3)]
+    p = [file_bloom_pos_sql("o_custkey", i) for i in range(3)]
+    q = [file_bloom_pos_sql("probe_key", i) for i in range(3)]
     return f"""
 WITH b AS (SELECT min(o_orderkey) AS mn, max(o_orderkey) AS mx FROM orders),
 f AS MATERIALIZED (
@@ -487,7 +487,7 @@ def q_zrange_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _bucketed_orders(spark, sf_dir)
     rows = []
     for rid, x0, x1, y0, y1 in _ZJOIN_RECTS:
-        for lo, hi in zrange_decompose(x0, x1, y0, y1, _BITS, max_ranges=32):
+        for lo, hi in zrange_decompose(x0, x1, y0, y1, _BITS):
             rows.append((rid, x0, x1, y0, y1, lo, hi))
     ranges = spark.createDataFrame(
         rows, "rect_id long, x0 long, x1 long, y0 long, y1 long, lo long, hi long"

@@ -201,7 +201,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return ngram_jaccard_pairs(
-        docs, "doc_id", "text", block_cols=["lang"], n=2, threshold=0.05
+        docs, "doc_id", "text", block_cols=["lang"], threshold=0.05
     ).orderBy("doc_a", "doc_b")
 
 
@@ -465,9 +465,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and are freed by the ContextCleaner once the result frame dies — a
     # registry query must not leave session-lifetime cache entries behind
     # (VERDICT r07 item #2).
-    sigs = minhash_signatures(base, "doc_id", "text", num_hashes=32, shingle_n=3).localCheckpoint(eager=True)
+    sigs = minhash_signatures(base, "doc_id", "text").localCheckpoint(eager=True)
     return (
-        lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8)
+        lsh_candidate_pairs(sigs, "doc_id")
         .filter(F.col("est_jaccard") >= 0.3)
         .orderBy("doc_a", "doc_b")
     )
@@ -509,7 +509,7 @@ def q_lsh_banding_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = docs.select("doc_id", sig.cast("array<long>").alias("sig"))
     return (
-        lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8)
+        lsh_candidate_pairs(sigs, "doc_id")
         .select(
             "doc_a",
             "doc_b",
@@ -588,8 +588,7 @@ def q_lsh_guard_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep: list = []
     # id pairs only (survived/dropped counts, no est_jaccard) — r14
     pairs = lsh_candidate_pair_ids(
-        sigs, "doc_id", num_hashes=32, bands=8, max_bucket=20,
-        dropped_report=rep,
+        sigs, "doc_id", max_bucket=20, dropped_report=rep
     )
     dropped = rep[0].groupBy("bucket_size").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -719,7 +718,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _perturbed_docs(spark, sf_dir)
     # eager localCheckpoint for the same reuse-without-cache-leak reason as
     # q_minhash_lsh
-    sigs = simhash(base, "doc_id", "text", shingle_n=2).localCheckpoint(eager=True)
+    sigs = simhash(base, "doc_id", "text").localCheckpoint(eager=True)
     return simhash_candidate_pairs(sigs, "doc_id", max_hamming=12).orderBy(
         "doc_a", "doc_b"
     )
@@ -733,7 +732,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return ann_cosine_topk(emb, queries, k=10, dim=64, num_planes=12).orderBy(
+    return ann_cosine_topk(emb, queries, num_planes=12).orderBy(
         "query_id", "rank"
     )
 
@@ -778,9 +777,7 @@ def q_pq_adc_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        pq_cosine_topk(
-            emb, queries, k=10, m=8, n_codes=16, shortlist=50, codebooks=cb
-        )
+        pq_cosine_topk(emb, queries, codebooks=cb)
         .select(
             "query_id",
             "rank",
@@ -899,9 +896,7 @@ def q_ivf_probe_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cvec"),
     )
     return (
-        ivf_cosine_topk(
-            emb, queries, k=10, n_centroids=16, n_probes=3, centroids=cents
-        )
+        ivf_cosine_topk(emb, queries, centroids=cents)
         .select(
             "query_id",
             "rank",
@@ -1011,10 +1006,7 @@ def q_ivfpq_probe_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        ivfpq_cosine_topk(
-            emb, queries, k=10, n_centroids=16, n_probes=3, m=8, n_codes=16,
-            shortlist=50, centroids=cents, codebooks=cb,
-        )
+        ivfpq_cosine_topk(emb, queries, centroids=cents, codebooks=cb)
         .select(
             "query_id",
             "rank",
@@ -1157,10 +1149,7 @@ def q_lshann_probe_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < 8)
     return (
-        ann_cosine_topk(
-            emb, queries, k=10, dim=64, num_planes=8, num_tables=2,
-            multi_probe=True,
-        )
+        ann_cosine_topk(emb, queries, num_planes=8, num_tables=2)
         .select(
             "query_id",
             "rank",
@@ -1323,9 +1312,7 @@ def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # away)
     emb = _t(spark, sf_dir, "embeddings").repartition(32, "vec_id")
     queries = emb.filter(F.col("vec_id") < 8)
-    return ivf_cosine_topk(
-        emb, queries, k=10, n_centroids=16, n_probes=3
-    ).orderBy("query_id", "rank")
+    return ivf_cosine_topk(emb, queries).orderBy("query_id", "rank")
 
 
 # Fixture oracle (VERDICT r09 task #1): iterative k-means keeps the ANN
@@ -1363,9 +1350,7 @@ def q_pq_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").repartition(32, "vec_id")
     queries = emb.filter(F.col("vec_id") < 8)
-    return pq_cosine_topk(
-        emb, queries, k=10, m=8, n_codes=16, shortlist=50
-    ).orderBy("query_id", "rank")
+    return pq_cosine_topk(emb, queries).orderBy("query_id", "rank")
 
 
 ORACLE_PQ_COSINE_TOPK = f"""
@@ -1391,9 +1376,7 @@ def q_ivfpq_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").repartition(32, "vec_id")
     queries = emb.filter(F.col("vec_id") < 8)
-    return ivfpq_cosine_topk(
-        emb, queries, k=10, n_centroids=16, n_probes=3, m=8, n_codes=16, shortlist=50
-    ).orderBy("query_id", "rank")
+    return ivfpq_cosine_topk(emb, queries).orderBy("query_id", "rank")
 
 
 ORACLE_IVFPQ_COSINE_TOPK = f"""
@@ -1433,13 +1416,8 @@ def q_ann_index_persist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").repartition(32, "vec_id")
     queries = emb.filter(F.col("vec_id") < 8)
     path = f"/tmp/covid19_spark_ann_index_{os.path.basename(sf_dir.rstrip('/'))}"
-    idx = ensure_ivfpq_index(
-        emb, path, corpus_file_fingerprint(sf_dir),
-        n_centroids=16, m=8, n_codes=16,
-    )
-    return ivfpq_index_topk(
-        idx, emb, queries, k=10, n_probes=3, shortlist=50
-    ).orderBy("query_id", "rank")
+    idx = ensure_ivfpq_index(emb, path, corpus_file_fingerprint(sf_dir))
+    return ivfpq_index_topk(idx, emb, queries).orderBy("query_id", "rank")
 
 
 ORACLE_ANN_INDEX_PERSIST_TOPK = f"""
@@ -1469,7 +1447,7 @@ def q_sq8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     return (
-        sq8_topk(emb, queries, k=10, shortlist=50)
+        sq8_topk(emb, queries)
         .select(
             "query_id",
             "rank",
@@ -2111,7 +2089,7 @@ def q_wav_depth_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).astype(np.int16)
         return [
             (d * 100 + vi, "audio", f"{chr(97 + vi)}_{dt}", None, None, 200,
-             encode_wav(sig, 8000, dtype=dt))
+             encode_wav(sig, dtype=dt))
             for vi, dt in enumerate(("i16", "i24", "i32", "f32", "f64"))
         ]
 
@@ -2255,7 +2233,7 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         tone = (9000 * np.sin(2 * np.pi * freq * t / 8000)).astype(np.int16)
         return [
             (d, "audio", "audio/wav", None, None, int(n * 1000 / 8000),
-             encode_wav(tone, 8000))
+             encode_wav(tone))
         ]
 
     feats = extract_audio_features(media_from_docs(docs, blobs), n_windows=8)
@@ -2305,10 +2283,10 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 axis=2,
             ).astype(np.uint8)
             frames.append(img)
-        payload = encode_mjpeg_avi(frames, fps=4, quality=85)
+        payload = encode_mjpeg_avi(frames, quality=85)
         return [(d, "video", "video/avi", 16, 16, int(n_frames * 250), payload)]
 
-    frames = extract_video_frames(media_from_docs(docs, blobs), every_ms=500)
+    frames = extract_video_frames(media_from_docs(docs, blobs))
     return _feature_columns(
         frames, "media_id", "frame_ts_ms", "frame_index",
         order=("media_id", "frame_ts_ms"),
@@ -2337,7 +2315,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.bpe import train_bpe
 
     docs = _t(spark, sf_dir, "documents")
-    merges = train_bpe(docs, "text", n_merges=120)
+    merges = train_bpe(docs, "text")
     return spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank long, left string, right string",
@@ -2370,7 +2348,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.bpe import bpe_tokenize, train_bpe
 
     docs = _t(spark, sf_dir, "documents")
-    merges = train_bpe(docs, "text", n_merges=120)
+    merges = train_bpe(docs, "text")
     out = bpe_tokenize(docs, merges, "doc_id", "text")
     return out.select(
         "doc_id",
@@ -2441,7 +2419,7 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (KB-scale), while one evaluation costs a full synth+decode pass
     # (the q_minhash_lsh lifecycle — no CacheManager entry left behind)
     hashes = image_dhash(media_from_docs(docs, blobs)).localCheckpoint(eager=True)
-    return image_near_dup_pairs(hashes, "media_id", max_hamming=10).orderBy(
+    return image_near_dup_pairs(hashes, "media_id").orderBy(
         "doc_a", "doc_b"
     )
 
@@ -2504,20 +2482,20 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         s16 = (20000 * sig).astype(np.int16)
         rows = [
             (d, "audio", "audio/wav", None, None, int(n * 1000 / 8000),
-             encode_wav(s16, 8000))
+             encode_wav(s16))
         ]
         if d < 60:  # planted near-dup: half gain + 8-bit requantize
             v16 = ((s16 // 2) // 256 * 256).astype(np.int16)
             rows.append(
                 (100000 + d, "audio", "audio/wav", None, None,
-                 int(n * 1000 / 8000), encode_wav(v16, 8000))
+                 int(n * 1000 / 8000), encode_wav(v16))
             )
         return rows
 
     # eager localCheckpoint: three consumers of a KB-scale frame (see
     # q_image_near_dup)
     fps = audio_fingerprints(media_from_docs(docs, blobs)).localCheckpoint(eager=True)
-    return audio_near_dup_pairs(fps, "media_id", max_hamming=8).orderBy(
+    return audio_near_dup_pairs(fps, "media_id").orderBy(
         "doc_a", "doc_b"
     )
 
@@ -2579,23 +2557,19 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         rows = [
             (d, "video", "video/avi", 80, 64, int(n_frames * 250),
-             encode_mjpeg_avi(frames, fps=4, quality=88))
+             encode_mjpeg_avi(frames, quality=88))
         ]
         if d < 40:  # planted near-dup: same frames, harsher quality
             rows.append(
                 (100000 + d, "video", "video/avi", 80, 64,
-                 int(n_frames * 250), encode_mjpeg_avi(frames, fps=4, quality=70))
+                 int(n_frames * 250), encode_mjpeg_avi(frames, quality=70))
             )
         return rows
 
     # eager localCheckpoint: three consumers of a KB-scale frame (see
     # q_image_near_dup)
-    hashes = video_frame_hashes(
-        media_from_docs(docs, blobs), every_ms=500
-    ).localCheckpoint(eager=True)
-    return video_near_dup_pairs(
-        hashes, "media_id", max_hamming=10, min_matching_frames=3
-    ).orderBy("doc_a", "doc_b")
+    hashes = video_frame_hashes(media_from_docs(docs, blobs)).localCheckpoint(eager=True)
+    return video_near_dup_pairs(hashes, "media_id").orderBy("doc_a", "doc_b")
 
 
 ORACLE_VIDEO_NEAR_DUP = f"""
@@ -3048,12 +3022,12 @@ def q_lsh_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager localCheckpoint: the banded frame feeds the report agg, the
     # guard's own agg, AND both self-join sides — racing consumers would
     # each recompute the shingle+hash pass (the q_minhash_lsh lifecycle)
-    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=32, shingle_n=3).localCheckpoint(eager=True)
+    sigs = minhash_signatures(docs, "doc_id", "text").localCheckpoint(eager=True)
     report: list = []
     # id pairs only (no est_jaccard consumer) — the scored form's two
     # signature re-joins are unprunable inner joins (r14)
     pairs = lsh_candidate_pair_ids(
-        sigs, "doc_id", num_hashes=32, bands=8, max_bucket=40, dropped_report=report
+        sigs, "doc_id", max_bucket=40, dropped_report=report
     )
     kept = pairs.agg(F.count(F.lit(1)).alias("kept_pairs"))
     return (
@@ -3337,11 +3311,7 @@ def q_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _perturbed_docs(spark, sf_dir).filter(
         (F.col("doc_id") % 100000) < 300
     )
-    return prefix_filter_join(
-        docs, "doc_id", "text", threshold=0.6, shingle_n=3
-    ).orderBy(
-        "doc_a", "doc_b"
-    )
+    return prefix_filter_join(docs, "doc_id", "text").orderBy("doc_a", "doc_b")
 
 
 ORACLE_SETSIM_PREFIX_JOIN = """
@@ -3393,7 +3363,7 @@ def q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.unigram import train_unigram
 
     docs = _t(spark, sf_dir, "documents")
-    vocab = train_unigram(docs, "text", vocab_size=300, max_piece_len=6)
+    vocab = train_unigram(docs, "text")
     return spark.createDataFrame(
         vocab, "piece string, logprob double"
     ).orderBy("piece")
@@ -3422,7 +3392,7 @@ def q_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.operators.unigram import train_unigram, unigram_tokenize
 
     docs = _t(spark, sf_dir, "documents")
-    vocab = train_unigram(docs, "text", vocab_size=300, max_piece_len=6)
+    vocab = train_unigram(docs, "text")
     out = unigram_tokenize(docs, vocab, "doc_id", "text")
     return out.select(
         "doc_id",
@@ -3478,7 +3448,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = base.unionByName(excerpts)
     return containment_pairs(
-        corpus, "doc_id", "text", ["lang"], n=2, threshold=0.6
+        corpus, "doc_id", "text", ["lang"]
     ).orderBy("doc_a", "doc_b")
 
 
@@ -3539,13 +3509,11 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8)
     path = f"/tmp/covid19_spark_ann_fidx_{os.path.basename(sf_dir.rstrip('/'))}"
     idx = ensure_ivfpq_index(
-        emb, path, corpus_file_fingerprint(sf_dir),
-        n_centroids=16, m=8, n_codes=16, attr_cols=("label",),
+        emb, path, corpus_file_fingerprint(sf_dir), attr_cols=("label",)
     )
-    return ivfpq_index_topk(
-        idx, emb, queries, k=10, n_probes=3, shortlist=50,
-        codes_filter="label = 2",
-    ).orderBy("query_id", "rank")
+    return ivfpq_index_topk(idx, emb, queries, codes_filter="label = 2").orderBy(
+        "query_id", "rank"
+    )
 
 
 ORACLE_ANN_FILTERED_TOPK = f"""

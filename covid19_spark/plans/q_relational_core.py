@@ -323,7 +323,7 @@ def q_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("daily_n"))
     )
     return (
-        moving_average(daily, "daily_n", ["event_type"], "date", 5, out_col="ma5")
+        moving_average(daily, "daily_n", ["event_type"], "date", out_col="ma5")
         .select(
             F.date_format("date", "yyyy-MM-dd").alias("date"),
             "event_type", "daily_n", "ma5",

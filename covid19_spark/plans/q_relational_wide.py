@@ -471,7 +471,7 @@ def q_pagerank_supply_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
     return (
-        pagerank(edges, iterations=3, damping=0.85)
+        pagerank(edges)
         .select(F.col("node").cast("long").alias("node"), "rank")
         .orderBy("node")
     )
@@ -1244,7 +1244,6 @@ def q_adaptive_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment"),
             F.concat(F.col("c_mktsegment"), F.lit("|"), F.col("c_nationkey").cast("string")),
         ],
-        max_block=300,
     )
     per_block = assigned.groupBy("block_level", "saturated", "block_key").agg(
         F.count(F.lit(1)).alias("bn")
@@ -1895,7 +1894,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return label_propagation(edges, iterations=3).orderBy("node")
+    return label_propagation(edges).orderBy("node")
 
 
 ORACLE_LPA_COMMUNITIES = """

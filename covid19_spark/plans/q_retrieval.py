@@ -163,7 +163,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    return mmr_rerank(emb, queries, k=8, shortlist=20, lam=0.75).orderBy(
+    return mmr_rerank(emb, queries).orderBy(
         "query_id", "mmr_rank"
     )
 
@@ -806,7 +806,7 @@ def q_proximity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_inverted_index(spark, sf_dir)
     return (
         proximity_match_from_index(
-            spark, idx, ["table", "hash", "scan"], slop=2
+            spark, idx, ["table", "hash", "scan"]
         )
         .orderBy(F.col("n_matches").desc(), F.col("doc_id").asc())
         .limit(20)
@@ -871,7 +871,7 @@ def q_bm25_multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id long, terms array<string>",
     )
     return (
-        bm25_topk_multi(spark, idx, queries, k=10)
+        bm25_topk_multi(spark, idx, queries)
         .select(
             "query_id",
             "doc_id",
@@ -954,7 +954,7 @@ def q_sdm_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("n_occurrences").alias("od1")
     )
     uw = unordered_window_count_from_index(
-        spark, idx, "spark", "hash", window=8
+        spark, idx, "spark", "hash"
     ).select("doc_id", F.col("n_uw").alias("uw8"))
     feats = (
         bm25.join(od, "doc_id", "left")
@@ -1052,7 +1052,7 @@ def q_search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_inverted_index(spark, sf_dir)
     return snippet_windows_from_index(
         spark, idx, _t(spark, sf_dir, "documents"),
-        ["spark", "hash"], k=10, width=10,
+        ["spark", "hash"],
     )
 
 
@@ -1389,7 +1389,7 @@ def q_dismax_fielded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = dismax_scores_from_index(
         spark, idx, list(_BM25F_TERMS),
-        weights={"title": 2.0, "body": 1.0}, tie_break=0.3,
+        weights={"title": 2.0, "body": 1.0},
     )
     ranked = top_k(scored, "score", 20, tiebreak_cols=["doc_id"])
     return ranked.select(

@@ -1,4 +1,5 @@
-"""StructTypes for every reference record type (SURVEY §1.2 schema catalog).
+"""StructTypes of the reference record types read off the wire (SURVEY §1.2
+schema catalog).
 
 The reference decodes GSON JSON leniently (unknown fields ignored, missing →
 null) with all-String numerics parsed ad hoc; here numerics are cast once at
@@ -24,59 +25,10 @@ STATEWISE_STATS = _struct(
     "state", "statecode", "active", "confirmed", "deaths", "recovered", "lastupdatedtime"
 )
 
-# StatewiseDelta.java:12-21 (Longs at wire)
-STATEWISE_DELTA = T.StructType(
-    [
-        T.StructField("state", _s),
-        T.StructField("deltaRecovered", T.LongType()),
-        T.StructField("deltaDeaths", T.LongType()),
-        T.StructField("deltaConfirmed", T.LongType()),
-        T.StructField("currentRecovered", T.LongType()),
-        T.StructField("currentDeaths", T.LongType()),
-        T.StructField("currentConfirmed", T.LongType()),
-        T.StructField("lastUpdatedTime", _s),
-    ]
-)
-
-# district/DistrictwiseData.java:12-23
-DISTRICTWISE_DATA = _struct(
-    "state", "district", "confirmed", "active", "recovered", "deceased",
-    "deltaConfirmed", "deltaRecovered", "deltaDeceased", "notes",
-)
-
-# StatewiseTestData.java:14-34 (19 String fields)
-STATEWISE_TEST_DATA = _struct(
-    "negative", "numcallsstatehelpline", "numicubeds", "numisolationbeds",
-    "numventilators", "positive", "source", "source1", "source2", "state",
-    "testpositivityrate", "testsperthousand", "totalpeopleinquarantine",
-    "totalpeoplereleasedfromquarantine", "totaltested", "unconfirmed",
-    "updatedon", "testreportedtoday", "positivereportedtoday",
-)
-
-# PatientInfo.java:10-30 (18 String fields)
-PATIENT_INFO = _struct(
-    "patientnumber", "statepatientnumber", "dateannounced", "agebracket",
-    "gender", "detectedcity", "detecteddistrict", "detectedstate",
-    "currentstatus", "statuschangedate", "nationality", "notes",
-    "backupnotes", "contractedfromwhichpatientsuspected", "estimatedonsetdate",
-    "source1", "source2", "source3",
-)
-
-# UserPrefs.java:14-24
-USER_PREFS = T.StructType(
-    [
-        T.StructField("userId", _s),
-        T.StructField("myStates", T.ArrayType(_s)),
-        T.StructField("subscribed", T.BooleanType()),
-    ]
-)
-
-# UserRequest.java:14-17 / location/UserLocation.java:12-15
+# UserRequest.java:14-17 — the ``user-request`` topic value
 USER_REQUEST = _struct("chatId", "state")
-USER_LOCATION = _struct("latitude", "longitude")
 
 TS_FMT = "d/MM/yyyy HH:mm:ss"  # Utils.java:32
-DATE_FMT = "dd/MM/yyyy"  # Covid19Stats.java:70
 
 
 def cast_statewise(df: DataFrame) -> DataFrame:

@@ -1,3 +1,1 @@
-from covid19_spark.serving import format  # noqa: F401
-
-__all__ = ["format"]
+"""Serving layer: persisted stores, bot replies, alert text, charts."""

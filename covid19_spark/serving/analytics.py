@@ -124,7 +124,7 @@ def testing_trend(
         F.when(F.col("tested") > 0, F.round(100.0 * F.col("positive") / F.col("tested"), 2)),
     )
     return moving_average(
-        in_window, "positivity", [], "date", 5, out_col="positivity_ma5"
+        in_window, "positivity", [], "date", out_col="positivity_ma5"
     ).orderBy("date")
 
 

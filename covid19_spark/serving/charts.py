@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 # Visualizer.java:50-56 — the reference's series palette.
 BLUE = "rgb(54, 162, 235)"
 RED = "rgb(255, 99, 132)"
-GREEN = "rgb(75, 192, 192)"
-ORANGE = "rgb(255, 159, 64)"
-YELLOW = "rgb(255, 205, 86)"
-PURPLE = "rgb(153, 102, 255)"
 GREY = "rgb(201, 203, 207)"
-LINE_COLORS = [RED, YELLOW, GREEN, BLUE, ORANGE, PURPLE]
 
 
 @dataclass(frozen=True)

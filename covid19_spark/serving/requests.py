@@ -19,19 +19,10 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from covid19_spark.schemas import USER_REQUEST
 from covid19_spark.serving import format as fmt
 from covid19_spark.serving.stores import StoreReader
-
-#: the ``user-request`` topic value (reference ``UserRequest.java:14-17``).
-USER_REQUEST_SCHEMA = T.StructType(
-    [
-        T.StructField("chatId", T.StringType()),
-        T.StructField("state", T.StringType()),
-    ]
-)
-
 
 def _delta_row_to_dict(r) -> dict:
     return {
@@ -101,7 +92,7 @@ def handle_user_request(
         )
     }
     districts = sorted(
-        reader.district_stats_for(state, daily=True),
+        reader.district_stats_for(state),
         key=lambda d: (-(d.get("sum_delta_confirmed") or 0), d.get("district") or ""),
     )
     district_dicts = [
@@ -148,7 +139,7 @@ def serve_user_requests_stream(
         read_emulated_topic_stream,
     )
 
-    requests = read_emulated_topic_stream(spark, request_topic_dir, USER_REQUEST_SCHEMA)
+    requests = read_emulated_topic_stream(spark, request_topic_dir, USER_REQUEST)
     produce_reply = emulated_topic_sink(reply_topic_dir, F.col("chatId"))
 
     def dispatch(batch: DataFrame, batch_id: int) -> None:

@@ -188,8 +188,8 @@ class StoreReader:
         return self.rows("news_sources", state=state)
 
     # StateStoresManager.java:129-155
-    def district_stats_for(self, state: str, daily: bool = False) -> list[dict]:
-        return self.rows("districtwise_daily" if daily else "districtwise_delta", state=state)
+    def district_stats_for(self, state: str) -> list[dict]:
+        return self.rows("districtwise_daily", state=state)
 
     # StateStoresManager.java:212-229 — the 14-probe loop as one pick
     def latest_test_data_within_14d(self, state: str, today: dt.date) -> dict | None:

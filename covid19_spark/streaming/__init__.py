@@ -13,15 +13,3 @@ Mapping (SURVEY §1.1, §2.7):
 - dedup T2/T3        → ``dedup_stream`` (dropDuplicatesWithinWatermark)
 - emit control T6    → update output mode + processingTime trigger
 """
-
-from covid19_spark.streaming.stateful_delta import streaming_running_delta
-from covid19_spark.streaming.windowed import daily_window_agg
-from covid19_spark.streaming.dedup_stream import dedup_within_watermark
-from covid19_spark.streaming.table import latest_by_key
-
-__all__ = [
-    "streaming_running_delta",
-    "daily_window_agg",
-    "dedup_within_watermark",
-    "latest_by_key",
-]

@@ -19,14 +19,13 @@ from covid19_spark.operators.similarity import ivf_assign, ivfpq_cosine_topk
 from covid19_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
-PARAMS = dict(k=10, n_probes=3, shortlist=50)
 
 
 @pytest.fixture(scope="module")
 def index_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("annidx") / "ivfpq")
     emb = load_table(spark, "embeddings", SF).repartition(8, "vec_id")
-    meta = write_ivfpq_index(emb, path, n_centroids=16, m=8, n_codes=16)
+    meta = write_ivfpq_index(emb, path)
     assert meta["dim"] == 64 and meta["id_col"] == "vec_id"
     return path
 
@@ -40,11 +39,11 @@ def test_roundtrip_bit_identical_to_inmemory(spark, index_path):
     emb, queries = _emb_and_queries(spark)
     idx = read_ivfpq_index(spark, index_path)
     got = (
-        ivfpq_index_topk(idx, emb, queries, **PARAMS)
+        ivfpq_index_topk(idx, emb, queries)
         .orderBy("query_id", "rank").collect()
     )
     want = (
-        ivfpq_cosine_topk(emb, queries, m=8, n_codes=16, n_centroids=16, **PARAMS)
+        ivfpq_cosine_topk(emb, queries)
         .orderBy("query_id", "rank").collect()
     )
     assert got == want  # bit-exact: same sims, same ranks, same neighbors
@@ -56,7 +55,7 @@ def test_probe_is_static_partition_pruning(spark, index_path):
     emb, queries = _emb_and_queries(spark)
     idx = read_ivfpq_index(spark, index_path)
     plan = (
-        ivfpq_index_topk(idx, emb, queries, **PARAMS)
+        ivfpq_index_topk(idx, emb, queries)
         ._jdf.queryExecution().executedPlan().toString()
     )
     import re
@@ -96,9 +95,9 @@ def test_rebuild_in_place_overwrites(spark, index_path):
     """A second build at the same path replaces the index (mode=overwrite
     everywhere) — the refresh story for a periodically re-encoded corpus."""
     emb, queries = _emb_and_queries(spark)
-    write_ivfpq_index(emb, index_path, n_centroids=16, m=8, n_codes=16)
+    write_ivfpq_index(emb, index_path)
     idx = read_ivfpq_index(spark, index_path)
-    got = ivfpq_index_topk(idx, emb, queries, **PARAMS)
+    got = ivfpq_index_topk(idx, emb, queries)
     assert got.count() == 80  # 8 queries x k=10, unchanged after rebuild
 
 
@@ -198,7 +197,7 @@ ORDER BY query_id, rank
     idx = read_ivfpq_index(spark, index_path)
     got = [
         (r["query_id"], r["rank"], r["neighbor_id"], round(r["sim"] * 1_000_000))
-        for r in ivfpq_index_topk(idx, emb, queries, **PARAMS)
+        for r in ivfpq_index_topk(idx, emb, queries)
         .orderBy("query_id", "rank").collect()
     ]
     assert [tuple(r) for r in duck] == got
@@ -222,21 +221,17 @@ def test_filtered_vector_search_prefilter_semantics(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 4)
     path = str(tmp_path / "fidx")
-    write_ivfpq_index(emb, path, n_centroids=8, m=8, n_codes=16,
-                      attr_cols=("label",))
+    write_ivfpq_index(emb, path, attr_cols=("label",))
     idx = read_ivfpq_index(spark, path)
     assert idx.meta["attr_cols"] == "label"
 
-    got = ivfpq_index_topk(
-        idx, emb, queries, k=5, n_probes=3, shortlist=50,
-        codes_filter="label = 2",
-    ).collect()
+    got = ivfpq_index_topk(idx, emb, queries, codes_filter="label = 2").collect()
     labels = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
     assert got and all(labels[r.neighbor_id] == 2 for r in got)
 
     twin = ivfpq_cosine_topk(
-        emb.filter(F.col("label") == 2), queries, k=5, n_probes=3,
-        shortlist=50, centroids=idx.centroids, codebooks=idx.codebooks,
+        emb.filter(F.col("label") == 2), queries,
+        centroids=idx.centroids, codebooks=idx.codebooks,
     ).collect()
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert sorted(((r.query_id, r.rank, r.neighbor_id, r.sim) for r in got)) == \
@@ -252,13 +247,13 @@ def test_meta_attr_cols_backward_compat(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     path = str(tmp_path / "plain")
-    write_ivfpq_index(emb, path, n_centroids=8, m=8, n_codes=16)
+    write_ivfpq_index(emb, path)
     assert read_ivfpq_index(spark, path).meta["attr_cols"] == ""
 
 
 def test_ensure_reuses_matching_index_and_rebuilds_on_change(spark, tmp_path):
-    """ensure_ivfpq_index contract (r12): reuse iff persisted fingerprint
-    AND quantizer params match; rebuild on either changing; refuse an
+    """ensure_ivfpq_index contract (r12): reuse iff the persisted
+    fingerprint matches; rebuild when it changes; refuse an
     empty fingerprint (it would match every prior empty-fingerprint
     build and silently serve the wrong corpus)."""
     import os
@@ -269,24 +264,17 @@ def test_ensure_reuses_matching_index_and_rebuilds_on_change(spark, tmp_path):
     path = str(tmp_path / "ivfpq")
 
     with pytest.raises(ValueError, match="fingerprint"):
-        ensure_ivfpq_index(emb, path, "", n_centroids=16, m=8, n_codes=16)
+        ensure_ivfpq_index(emb, path, "")
 
-    ensure_ivfpq_index(emb, path, "fp1", n_centroids=16, m=8, n_codes=16)
+    ensure_ivfpq_index(emb, path, "fp1")
     marker = os.path.getmtime(f"{path}/meta")
-    # same fingerprint + params: no rebuild
-    idx = ensure_ivfpq_index(emb, path, "fp1", n_centroids=16, m=8, n_codes=16)
+    # same fingerprint: no rebuild
+    idx = ensure_ivfpq_index(emb, path, "fp1")
     assert os.path.getmtime(f"{path}/meta") == marker
     assert idx.meta["fingerprint"] == "fp1"
     # corpus moved: rebuild
-    ensure_ivfpq_index(emb, path, "fp2", n_centroids=16, m=8, n_codes=16)
-    m2 = os.path.getmtime(f"{path}/meta")
-    assert m2 > marker
-    # param change under the SAME fingerprint: rebuild (never serve a
-    # mismatched quantizer setup from a matching path)
-    ensure_ivfpq_index(emb, path, "fp2", n_centroids=8, m=8, n_codes=16)
-    idx3 = read_ivfpq_index(spark, path)
-    assert idx3.meta["n_centroids"] == 8
-    assert os.path.getmtime(f"{path}/meta") > m2
+    ensure_ivfpq_index(emb, path, "fp2")
+    assert os.path.getmtime(f"{path}/meta") > marker
 
 
 def test_concurrent_cold_ensure_ivfpq(spark, tmp_path):
@@ -304,7 +292,6 @@ def test_concurrent_cold_ensure_ivfpq(spark, tmp_path):
         futs = [
             ex.submit(
                 ensure_ivfpq_index, emb, path, "fpc",
-                n_centroids=16, m=8, n_codes=16,
             )
             for _ in range(2)
         ]

@@ -26,7 +26,7 @@ def _paper_corpus(spark):
 def test_paper_corpus_first_merges(spark):
     """Hand-computed first merges: (e,s) x9 wins (lexicographic tie-break
     against (s,t)/(t,</w>) at the same count), then (es,t), then (est,</w>)."""
-    merges = train_bpe(_paper_corpus(spark), "text", n_merges=3)
+    merges = train_bpe(_paper_corpus(spark), "text")[:3]
     assert merges == [("e", "s"), ("es", "t"), ("est", f"{END}")]
 
 
@@ -38,10 +38,9 @@ def test_word_counts_distributed(spark):
 def test_encode_reconstructs_words(spark):
     """BPE is lossless: concatenating a word's tokens and stripping the
     end-of-word marker reproduces the word, at any number of merges."""
-    corpus = _paper_corpus(spark)
+    merges = train_bpe(_paper_corpus(spark), "text")
     for n in (0, 2, 10, 50):
-        merges = train_bpe(corpus, "text", n_merges=n)
-        ranks = {p: i for i, p in enumerate(merges)}
+        ranks = {p: i for i, p in enumerate(merges[:n])}
         for w in ("low", "lower", "newest", "widest", "slowest"):
             toks = encode_word(w, ranks)
             assert "".join(toks).replace(END, "") == w, (n, w)
@@ -53,7 +52,7 @@ def test_zero_merges_is_characters():
 
 def test_merges_compress_trained_words(spark):
     """Enough merges collapse every frequent training word to one token."""
-    merges = train_bpe(_paper_corpus(spark), "text", n_merges=50)
+    merges = train_bpe(_paper_corpus(spark), "text")
     ranks = {p: i for i, p in enumerate(merges)}
     assert encode_word("newest", ranks) == ["newest" + END]
     assert encode_word("low", ranks) == ["low" + END]
@@ -67,7 +66,7 @@ def test_distributed_encoder_matches_local(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    merges = train_bpe(df, "text", n_merges=30)
+    merges = train_bpe(df, "text")
     ranks = {p: i for i, p in enumerate(merges)}
     out = {r.doc_id: r for r in bpe_tokenize(df, merges).collect()}
     assert len(out) == 40
@@ -81,15 +80,13 @@ def test_distributed_encoder_matches_local(spark):
 
 def test_training_is_deterministic(spark):
     corpus = _paper_corpus(spark)
-    assert train_bpe(corpus, "text", n_merges=20) == train_bpe(
-        corpus, "text", n_merges=20
-    )
+    assert train_bpe(corpus, "text") == train_bpe(corpus, "text")
 
 
 def test_stops_when_no_pair_repeats(spark):
     df = spark.createDataFrame([(0, "ab cd")], "doc_id long, text string")
     # every adjacent pair occurs once -> no merge is worth learning
-    assert train_bpe(df, "text", n_merges=10) == []
+    assert train_bpe(df, "text") == []
 
 
 def test_tokenize_preserves_id_column_type(spark):
@@ -98,7 +95,7 @@ def test_tokenize_preserves_id_column_type(spark):
     df = spark.createDataFrame(
         [("doc-a", "low low"), ("doc-b", "newest")], "doc_id string, text string"
     )
-    merges = train_bpe(df, "text", n_merges=5)
+    merges = train_bpe(df, "text")
     out = {r.doc_id: r for r in bpe_tokenize(df, merges, "doc_id", "text").collect()}
     assert set(out) == {"doc-a", "doc-b"}
     assert out["doc-a"].n_words == 2
@@ -125,18 +122,18 @@ def test_vocab_candidate_cap_engages(spark):
         [(i, w) for i, w in enumerate(["alpha"] * 9 + ["beta"] * 7)],
         "doc_id long, text string",
     )
-    capped = train_bpe(df, "text", n_merges=10, max_vocab_candidates=2)
-    manual = train_bpe(kept, "text", n_merges=10, max_vocab_candidates=_n_words(kept))
+    capped = train_bpe(df, "text", max_vocab_candidates=2)
+    manual = train_bpe(kept, "text", max_vocab_candidates=_n_words(kept))
     assert capped == manual
     # and the cap's tie-break is (cnt desc, word asc): raising it to 3
     # admits exactly 'gamma' (cnt 2 beats the three hapaxes)
-    capped3 = train_bpe(df, "text", n_merges=10, max_vocab_candidates=3)
+    capped3 = train_bpe(df, "text", max_vocab_candidates=3)
     kept3 = spark.createDataFrame(
         [(i, w) for i, w in enumerate(["alpha"] * 9 + ["beta"] * 7 + ["gamma"] * 2)],
         "doc_id long, text string",
     )
     assert capped3 == train_bpe(
-        kept3, "text", n_merges=10, max_vocab_candidates=_n_words(kept3)
+        kept3, "text", max_vocab_candidates=_n_words(kept3)
     )
 
 
@@ -144,6 +141,6 @@ def test_vocab_cap_default_does_not_engage_at_test_scale(spark):
     """The 5M default must leave the sf-scale merge list untouched —
     the bpe_merges/bpe_tokenize fixtures stay bit-identical."""
     corpus = _paper_corpus(spark)
-    assert train_bpe(corpus, "text", n_merges=8) == train_bpe(
-        corpus, "text", n_merges=8, max_vocab_candidates=_n_words(corpus)
+    assert train_bpe(corpus, "text") == train_bpe(
+        corpus, "text", max_vocab_candidates=_n_words(corpus)
     )

@@ -128,10 +128,10 @@ def test_fax_tiles_are_refused():
     """CCITT-compressed tiles are outside the supported TIFF profile: a
     tiled file re-tagged as 1-bit G4 WhiteIsZero raises
     NotImplementedError."""
-    from covid19_spark.operators.multimodal import decode_tiff, encode_tiff
-    from tests.media_gen import retag_tiff
+    from covid19_spark.operators.multimodal import decode_tiff
+    from tests.media_gen import gray_tiff, retag_tiff
 
-    tiled = encode_tiff(np.zeros((16, 16), np.uint8), tile=(8, 16))
+    tiled = gray_tiff(np.zeros((16, 16), np.uint8), tile=(8, 16))
     fax = retag_tiff(retag_tiff(retag_tiff(tiled, 259, 4), 258, 1), 262, 0)
     with pytest.raises(NotImplementedError, match="tiles"):
         decode_tiff(fax)
@@ -236,7 +236,7 @@ def test_t4_uncompressed_hand_vector():
 
     row = np.array([0, 1, 0, 0, 0, 0, 0, 1, 0, 0, 0], np.uint8)
     bw = _BitWriter()
-    _emit_uncompressed(bw, row, 0)
+    _emit_uncompressed(bw, row)
     bits = "".join(format(b, "08b") for b in bw.finish())
     assert bits.startswith("01" + "000001" + "1" + "000000000" + "1" + "0")
     out = np.zeros(11, np.uint8)

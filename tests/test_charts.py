@@ -7,7 +7,7 @@ import json
 
 from covid19_spark.serving.charts import (
     BLUE,
-    GREEN,
+    GREY,
     RED,
     DatasetSpec,
     chart_request,
@@ -61,7 +61,7 @@ def test_chart_request_dual_axis_and_title(spark):
         "bar",
         [
             DatasetSpec("bar", "Positive", "positive", RED),
-            DatasetSpec("bar", "Tested", "tested", GREEN),
+            DatasetSpec("bar", "Tested", "tested", GREY),
             DatasetSpec("line", "5-day Moving Positivity rate", "rate", BLUE, "right-y-axis"),
         ],
         stacked=True,

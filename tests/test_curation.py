@@ -31,8 +31,8 @@ def test_hex_threshold_bounds():
 
 
 def test_hash_sample_deterministic_and_unbiased(ids):
-    a = hash_sample(ids, "doc_id", 0.25)
-    b = hash_sample(ids, "doc_id", 0.25)
+    a = hash_sample(ids, "doc_id")
+    b = hash_sample(ids, "doc_id")
     na, nb = a.count(), b.count()
     assert na == nb
     # md5 uniformity: 10k draws at p=0.25 → ±5 sigma ≈ ±216
@@ -41,14 +41,14 @@ def test_hash_sample_deterministic_and_unbiased(ids):
 
 
 def test_hash_sample_monotone_and_partitioning(ids):
-    small = hash_sample(ids, "doc_id", 0.1)
-    big = hash_sample(ids, "doc_id", 0.5)
-    # a row kept at rate r is kept at every rate ≥ r (nested samples)
-    assert small.exceptAll(big).count() == 0
+    kept = hash_sample(ids, "doc_id")
+    # a row kept at rate 0.25 is kept by every wider md5 threshold
+    wider = ids.filter(md5_uniform(F.col("doc_id")) < F.lit(hex_threshold(0.5)))
+    assert kept.exceptAll(wider).count() == 0
     # complement partitions the input exactly
-    dropped = ids.filter(~(md5_uniform(F.col("doc_id")) < F.lit(hex_threshold(0.1))))
-    assert small.count() + dropped.count() == ids.count()
-    assert hash_sample(ids, "doc_id", 1.0).count() == ids.count()
+    dropped = ids.filter(~(md5_uniform(F.col("doc_id")) < F.lit(hex_threshold(0.25))))
+    assert kept.count() + dropped.count() == ids.count()
+    assert kept.intersect(dropped).count() == 0
 
 
 def test_grouped_split_is_group_atomic_and_deterministic(spark):
@@ -89,11 +89,11 @@ def test_stratified_quota_exact(spark):
     df = spark.range(0, 900).select(
         F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("lang")
     )
-    out = stratified_quota_sample(df, ["lang"], "doc_id", 50)
+    out = stratified_quota_sample(df, ["lang"], "doc_id")
     counts = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"0": 50, "1": 50, "2": 50}
+    assert counts == {"0": 30, "1": 30, "2": 30}
     # deterministic: same draw twice
-    again = stratified_quota_sample(df, ["lang"], "doc_id", 50)
+    again = stratified_quota_sample(df, ["lang"], "doc_id")
     assert out.exceptAll(again).count() == 0
 
 
@@ -101,7 +101,7 @@ def test_stratified_quota_small_stratum(spark):
     df = spark.range(0, 10).select(
         F.col("id").alias("doc_id"), F.lit("only").alias("lang")
     )
-    assert stratified_quota_sample(df, ["lang"], "doc_id", 50).count() == 10
+    assert stratified_quota_sample(df, ["lang"], "doc_id").count() == 10
 
 
 def test_stratified_quota_prethin_stable(spark):
@@ -110,12 +110,12 @@ def test_stratified_quota_prethin_stable(spark):
     df = spark.range(0, 5000).select(
         F.col("id").alias("doc_id"), F.lit("s").alias("lang")
     )
-    full = stratified_quota_sample(df, ["lang"], "doc_id", 20).select("doc_id")
+    full = stratified_quota_sample(df, ["lang"], "doc_id").select("doc_id")
     thinned = stratified_quota_sample(
-        hash_sample(df, "doc_id", 0.2), ["lang"], "doc_id", 20
+        hash_sample(df, "doc_id"), ["lang"], "doc_id"
     ).select("doc_id")
-    # identical iff every final pick survives the pre-thin; with quota 20 and
-    # 0.2*5000=1000 survivors the top-20 md5 prefixes are far below the 0.2
+    # identical iff every final pick survives the pre-thin; with quota 30 and
+    # 0.25*5000=1250 survivors the top-30 md5 prefixes are far below the 0.25
     # threshold, so the sets coincide.
     assert sorted(r.doc_id for r in full.collect()) == sorted(
         r.doc_id for r in thinned.collect()
@@ -167,7 +167,7 @@ def contamination_corpus(spark):
 def test_contamination_hits(contamination_corpus):
     corpus, bench = contamination_corpus
     hits = contamination_hits(
-        corpus, benchmark_shingles(bench, "text", 4), "doc_id", "text", 4
+        corpus, benchmark_shingles(bench, "text"), "doc_id", "text"
     )
     got = {r.doc_id: r.bench_hits for r in hits.collect()}
     assert got == {1: 1}  # only "alpha beta gamma delta"
@@ -178,7 +178,7 @@ def test_decontaminate_empty_benchmark(spark, contamination_corpus):
     corpus, _ = contamination_corpus
     empty_bench = spark.createDataFrame([], "doc_id long, text string")
     hits = contamination_hits(
-        corpus, benchmark_shingles(empty_bench, "text", 4), "doc_id", "text", 4
+        corpus, benchmark_shingles(empty_bench, "text"), "doc_id", "text"
     )
     assert hits.count() == 0
 
@@ -213,7 +213,7 @@ def test_pack_greedy_invariants(spark):
     df = spark.range(0, 300).select(
         F.col("id").alias("doc_id"), (F.col("id") % 90 + 10).cast("long").alias("n_tokens")
     )
-    packed = pack_greedy(df, "doc_id", "n_tokens", ctx_len=128)
+    packed = pack_greedy(df, "doc_id", "n_tokens")
     # every document is assigned exactly once; token mass is preserved
     assert packed.count() == 300
     assert (
@@ -231,11 +231,11 @@ def test_pack_greedy_invariants(spark):
     overfull = (
         packed.groupBy("shard", "bin")
         .agg(F.sum("n_tokens").alias("tok"), F.max("n_tokens").alias("biggest"))
-        .filter(F.col("tok") - F.col("biggest") >= 128 + 99)
+        .filter(F.col("tok") - F.col("biggest") >= 256 + 99)
     )
     assert overfull.count() == 0
     # deterministic
-    again = pack_greedy(df, "doc_id", "n_tokens", ctx_len=128)
+    again = pack_greedy(df, "doc_id", "n_tokens")
     assert packed.exceptAll(again).count() == 0
 
 
@@ -272,7 +272,7 @@ def test_line_dedup_removes_boilerplate(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in line_dedup(docs, min_docs=2).collect()}
+    out = {r.doc_id: r for r in line_dedup(docs).collect()}
     assert out[1].text == "unique one" and out[1].n_lines_removed == 2
     assert out[2].text == "unique two"
     assert out[3].text == "unique three" and out[3].n_lines == 2
@@ -286,8 +286,8 @@ def test_line_dedup_preserves_order_and_handles_fully_removed(spark):
         [(1, "B\na\nB\nz\nB"), (2, "B\nq"), (3, "B\nB")],
         "doc_id long, text string",
     ).repartition(8)
-    out = {r.doc_id: r for r in line_dedup(docs, min_docs=3).collect()}
-    # only 'B' crosses the 3-doc threshold; duplicates within one doc keep order
+    out = {r.doc_id: r for r in line_dedup(docs).collect()}
+    # only 'B' crosses the 2-doc threshold; duplicates within one doc keep order
     assert out[1].text == "a\nz"
     assert out[2].text == "q"
     assert out[3].text == "" and out[3].n_lines_removed == 2
@@ -427,7 +427,7 @@ def test_weighted_sample_matches_python_replay_and_biases_heavy(spark):
     rows = [(i, "s", 10.0 if i % 10 == 0 else 1.0) for i in range(400)]
     df = spark.createDataFrame(rows, "id long, st string, w double")
     got = sorted(
-        r["id"] for r in weighted_sample(df, ["st"], "id", "w", k=40).collect()
+        r["id"] for r in weighted_sample(df, ["st"], "id", "w").collect()
     )
 
     def u01(i):
@@ -437,14 +437,13 @@ def test_weighted_sample_matches_python_replay_and_biases_heavy(spark):
     keyed = sorted(
         ((math.log(u01(i)) / w, -i), i) for i, _, w in rows
     )[::-1]
-    want = sorted(i for _, i in keyed[:40])
+    want = sorted(i for _, i in keyed[:20])
     assert got == want
-    # 40 of 400 drawn; the 40 weight-10 rows should dominate the sample
+    # 20 of 400 drawn; the 40 weight-10 rows should be over-represented
     heavy = sum(1 for i in got if i % 10 == 0)
-    # threshold analysis: solving 40·(1−t^10) + 360·(1−t) = 40 gives t≈0.94,
-    # i.e. ~18-19 heavy rows expected (observed 20); a uniform draw of 40
-    # from 400 would include ~4 of the heavy rows
-    assert heavy >= 12, heavy
+    # observed 12; a uniform draw of 20 from 400 would include ~2 of the
+    # heavy rows
+    assert heavy >= 8, heavy
 
 
 def test_weighted_sample_excludes_nonpositive_weights(spark):
@@ -454,5 +453,5 @@ def test_weighted_sample_excludes_nonpositive_weights(spark):
         [(1, "a", 5.0), (2, "a", 0.0), (3, "a", -1.0), (4, "a", 1.0)],
         "id long, st string, w double",
     )
-    ids = {r["id"] for r in weighted_sample(df, ["st"], "id", "w", k=10).collect()}
+    ids = {r["id"] for r in weighted_sample(df, ["st"], "id", "w").collect()}
     assert ids == {1, 4}

@@ -34,7 +34,7 @@ def test_exact_dedup(spark):
 
 def test_ngram_jaccard_finds_near_dups(spark):
     pairs = ngram_jaccard_pairs(
-        _docs(spark), "doc_id", "text", block_cols=["lang"], n=2, threshold=0.3
+        _docs(spark), "doc_id", "text", block_cols=["lang"], threshold=0.3
     ).collect()
     found = {(r.doc_a, r.doc_b): r.jaccard for r in pairs}
     assert found[(0, 1)] == 1.0
@@ -44,8 +44,8 @@ def test_ngram_jaccard_finds_near_dups(spark):
 
 def test_minhash_lsh_recall(spark):
     docs = _docs(spark)
-    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=32, shingle_n=2)
-    cands = lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8).collect()
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    cands = lsh_candidate_pairs(sigs, "doc_id").collect()
     got = {(r.doc_a, r.doc_b): r.est_jaccard for r in cands}
     # identical docs must collide in every band with est 1.0
     assert got[(0, 1)] == 1.0
@@ -59,7 +59,7 @@ def test_minhash_lsh_recall(spark):
 
 def test_simhash_near_dups(spark):
     docs = _docs(spark)
-    sigs = simhash(docs, "doc_id", "text", shingle_n=2)
+    sigs = simhash(docs, "doc_id", "text")
     rows = {r.doc_id: r.simhash for r in sigs.collect()}
     assert rows[0] == rows[1]  # identical text → identical signature
 
@@ -80,11 +80,11 @@ def test_minhash_est_tracks_exact_jaccard(spark):
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", ["lang"], n=2, threshold=0.0
+            docs, "doc_id", "text", ["lang"], threshold=0.0
         ).collect()
     }
-    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=32, shingle_n=2)
-    for r in lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8).collect():
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    for r in lsh_candidate_pairs(sigs, "doc_id").collect():
         if (r.doc_a, r.doc_b) in exact:
             assert abs(r.est_jaccard - exact[(r.doc_a, r.doc_b)]) < 0.3
 
@@ -99,9 +99,9 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
         (101, "the quick brown fox jumps over the lazy dog tonight", "en"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    sigs = minhash_signatures(df, "doc_id", "text", num_hashes=32, shingle_n=2).cache()
-    capped = lsh_candidate_pair_ids(sigs, "doc_id", 32, 8, max_bucket=10).collect()
-    uncapped = lsh_candidate_pair_ids(sigs, "doc_id", 32, 8, max_bucket=None).collect()
+    sigs = minhash_signatures(df, "doc_id", "text").cache()
+    capped = lsh_candidate_pair_ids(sigs, "doc_id", max_bucket=10).collect()
+    uncapped = lsh_candidate_pair_ids(sigs, "doc_id", max_bucket=None).collect()
     capped_pairs = {(r.doc_a, r.doc_b) for r in capped}
     uncapped_pairs = {(r.doc_a, r.doc_b) for r in uncapped}
     # degenerate 20-doc cluster: 190 pairs uncapped, none capped
@@ -152,13 +152,13 @@ def test_video_near_dup_bucket_cap(spark):
     capped = {
         (r.doc_a, r.doc_b)
         for r in video_near_dup_pairs(
-            fh, max_hamming=3, min_matching_frames=3, max_bucket=10
+            fh, max_bucket=10
         ).collect()
     }
     uncapped = {
         (r.doc_a, r.doc_b)
         for r in video_near_dup_pairs(
-            fh, max_hamming=3, min_matching_frames=3, max_bucket=None
+            fh, max_bucket=None
         ).collect()
     }
     assert sum(1 for a, b in uncapped if a < 100) == 105  # C(15,2) constant videos
@@ -236,12 +236,12 @@ def test_lsh_candidate_pairs_reports_dropped_buckets(spark):
         (101, "the quick brown fox jumps over the lazy dog tonight", "en"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    sigs = minhash_signatures(df, "doc_id", "text", num_hashes=32, shingle_n=2).cache()
+    sigs = minhash_signatures(df, "doc_id", "text").cache()
     report = []
     pairs = {
         (r.doc_a, r.doc_b)
         for r in lsh_candidate_pair_ids(
-            sigs, "doc_id", 32, 8, max_bucket=10, dropped_report=report
+            sigs, "doc_id", max_bucket=10, dropped_report=report
         ).collect()
     }
     assert (100, 101) in pairs and all(a >= 100 for a, _ in pairs)
@@ -333,7 +333,7 @@ def test_blocked_edit_distance_pairs(spark):
         ],
         "id long, blk string, name string",
     )
-    out = blocked_edit_distance_pairs(df, "id", "name", ["blk"], max_distance=2).collect()
+    out = blocked_edit_distance_pairs(df, "id", "name", ["blk"]).collect()
     assert [(r.id_a, r.id_b, r.edit_distance) for r in out] == [(1, 2, 1)]
 
 
@@ -356,7 +356,7 @@ def test_blocked_edit_distance_drops_oversized_blocks(spark):
     ]
     df = spark.createDataFrame(rows, "id long, blk string, name string")
     out = blocked_edit_distance_pairs(
-        df, "id", "name", ["blk"], max_distance=2, max_block=10
+        df, "id", "name", ["blk"], max_block=10
     ).collect()
     # the 50-row block is dropped by the cap; only the small block pairs
     assert [(r.id_a, r.id_b) for r in out] == [(100, 101)]
@@ -397,9 +397,7 @@ def test_lsh_dedup_pipeline_matches_exact_all_pairs(spark):
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     got = {
         r.doc_id: (r.cluster_id, r.cluster_size, r.is_canonical)
-        for r in lsh_dedup_pipeline(
-            docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3, threshold=0.5
-        ).collect()
+        for r in lsh_dedup_pipeline(docs, "doc_id", "text").collect()
     }
 
     # brute-force truth: all-pairs exact Jaccard >= 0.5 -> components
@@ -534,7 +532,7 @@ def test_incremental_dedup_against_corpus(spark):
     out = {
         r.doc_id: r
         for r in incremental_dedup_against_corpus(
-            corpus, batch, "doc_id", "text", shingle_n=2, threshold=0.5
+            corpus, batch, "doc_id", "text"
         ).collect()
     }
     assert out[10].is_exact_dup == 1 and out[10].near_dup_of == 0 and out[10].keep == 0
@@ -592,7 +590,7 @@ def test_incremental_materialize_equals_lazy(spark):
     corpus = docs.filter(F.col("doc_id") < 40)
     batch = docs.filter((F.col("doc_id") >= 40) & (F.col("doc_id") < 80))
     screen, caches = _incremental_screen_with_handle(
-        corpus, batch, "doc_id", "text", 32, 8, 3, 0.5
+        corpus, batch, "doc_id", "text"
     )
     lazy = sorted(tuple(r) for r in screen.collect())
     for c in caches:
@@ -633,14 +631,14 @@ def test_lsh_guard_report_query_surfaces_planted_cluster(spark):
 
 def test_prefix_filter_join_complete_vs_bruteforce(spark):
     """PPJoin completeness: the prefix-filtered result must equal brute-force
-    all-pairs Jaccard exactly (pairs AND values) — the operator's whole
-    contract is exactness."""
+    all-pairs word-3-gram Jaccard exactly (pairs AND values) — the
+    operator's whole contract is exactness."""
     from covid19_spark.operators.dedup import prefix_filter_join
-    from covid19_spark.operators.text import tokenize
+    from covid19_spark.operators.text import word_shingles
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon eta"),      # 5/7 with doc 1
+        (2, "alpha beta gamma delta epsilon eta"),      # 3/5 with doc 1
         (3, "one two three four five six"),
         (4, "one two three four five six"),             # identical to 3
         (5, "alpha beta gamma delta epsilon zeta eta"), # superset of 1
@@ -650,13 +648,11 @@ def test_prefix_filter_join_complete_vs_bruteforce(spark):
     t = 0.6
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in prefix_filter_join(df, "doc_id", "text", threshold=t).collect()
+        for r in prefix_filter_join(df, "doc_id", "text").collect()
     }
     sets = {
         r.doc_id: set(r.s)
-        for r in df.select(
-            "doc_id", F.array_distinct(tokenize(F.col("text"))).alias("s")
-        ).collect()
+        for r in df.select("doc_id", word_shingles(F.col("text"), 3).alias("s")).collect()
     }
     want = {}
     ids = sorted(sets)
@@ -676,13 +672,13 @@ def test_prefix_filter_join_prunes_candidates(spark):
     from covid19_spark.operators.dedup import prefix_filter_join
 
     # 40 docs sharing a universal stopword head + distinct rare tails:
-    # a naive token join would bucket all 40 on 'the'/'of'
+    # a naive 3-gram join would bucket all 40 on 'the of and'
     rows = [
         (i, "the of and " + " ".join(f"w{i}_{j}" for j in range(8)))
         for i in range(40)
     ] + [(100, "the of and " + " ".join(f"w7_{j}" for j in range(8)))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = prefix_filter_join(df, "doc_id", "text", threshold=0.8).collect()
+    out = prefix_filter_join(df, "doc_id", "text").collect()
     assert {(r.doc_a, r.doc_b) for r in out} == {(7, 100)}
 
 
@@ -697,7 +693,7 @@ def test_prefix_filter_join_shingle_mode_matches_word_shingles(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         (r.doc_a, r.doc_b)
-        for r in prefix_filter_join(df, "doc_id", "text", threshold=0.5, shingle_n=3).collect()
+        for r in prefix_filter_join(df, "doc_id", "text").collect()
     }
     assert (1, 2) in out and (1, 3) not in out
 
@@ -714,51 +710,45 @@ def test_containment_asymmetry_and_exactness(spark):
         [(1, "en", long), (2, "en", excerpt), (3, "fr", excerpt)],
         "doc_id long, lang string, text string",
     )
-    rows = containment_pairs(
-        df, "doc_id", "text", ["lang"], n=2, threshold=0.5
-    ).collect()
+    rows = containment_pairs(df, "doc_id", "text", ["lang"]).collect()
     assert len(rows) == 1  # the fr copy is in another block
     r = rows[0]
     assert (r.doc_a, r.doc_b) == (1, 2)
     assert r.containment_b_in_a == 1.0          # excerpt fully contained
     assert r.containment_a_in_b == 3 / 11       # 3 shared of long's 11 bigrams
     jac = ngram_jaccard_pairs(
-        df, "doc_id", "text", ["lang"], n=2, threshold=0.0
+        df, "doc_id", "text", ["lang"], threshold=0.0
     ).collect()[0]
     assert jac.jaccard == 3 / 11                # resemblance diluted by the union
     import pytest
 
     with pytest.raises(ValueError):
-        containment_pairs(df, "doc_id", "text", [], n=2)
+        containment_pairs(df, "doc_id", "text", [])
 
 
 def test_adaptive_block_assignment_escalates_and_saturates(spark):
     from covid19_spark.operators.dedup import adaptive_block_assignment
 
-    # block A: 2 rows (fits at level 1); block B: 4 rows (oversized at
-    # level 1, splits at level 2); block C: 3 identical to the finest
-    # level -> saturated
-    rows = [
-        (1, "A", "A1"), (2, "A", "A2"),
-        (3, "B", "B1"), (4, "B", "B1"), (5, "B", "B2"), (6, "B", "B2"),
-        (7, "C", "C1"), (8, "C", "C1"), (9, "C", "C1"),
-    ]
+    # block A: 2 rows (fits at level 0); block B: 400 rows (over the
+    # 300-row cap at level 0, splits into two 200-row blocks at level 1);
+    # block C: 301 rows identical to the finest level -> saturated
+    rows = [(1, "A", "A1"), (2, "A", "A2")]
+    rows += [(100 + i, "B", f"B{i % 2 + 1}") for i in range(400)]
+    rows += [(1000 + i, "C", "C1") for i in range(301)]
     df = spark.createDataFrame(rows, "id long, coarse string, fine string")
     out = {
         r.id: (r.block_level, r.block_key, r.saturated)
-        for r in adaptive_block_assignment(
-            df, [F.col("coarse"), F.col("fine")], max_block=2
-        ).collect()
+        for r in adaptive_block_assignment(df, [F.col("coarse"), F.col("fine")]).collect()
     }
     assert out[1] == (0, "A", False) and out[2] == (0, "A", False)
-    assert out[3] == (1, "B1", False) and out[5] == (1, "B2", False)
-    # C: coarse block of 3 > 2, fine block of 3 > 2 -> saturated at level 1
-    assert out[7] == (1, "C1", True)
+    assert out[100] == (1, "B1", False) and out[101] == (1, "B2", False)
+    # C: coarse block of 301 > 300, fine block of 301 > 300 -> saturated at level 1
+    assert out[1000] == (1, "C1", True)
     # bound: every non-saturated assigned block fits the cap
     from collections import Counter
 
     sizes = Counter((lvl, key) for lvl, key, sat in out.values() if not sat)
-    assert max(sizes.values()) <= 2
+    assert max(sizes.values()) <= 300
 
 
 def test_adaptive_block_assignment_requires_levels(spark):
@@ -768,31 +758,28 @@ def test_adaptive_block_assignment_requires_levels(spark):
 
     df = spark.createDataFrame([(1, "x")], "id long, k string")
     with pytest.raises(ValueError):
-        adaptive_block_assignment(df, [], max_block=10)
+        adaptive_block_assignment(df, [])
 
 
 def test_adaptive_block_assignment_null_keys_not_dropped(spark):
     """ADVICE r10: a NULL key at any level must not vanish through the
     inner size-join — null-keyed rows block together under the sentinel
-    and stay subject to the max_block escalation/saturation rules."""
+    and stay subject to the 300-row escalation/saturation rules."""
     from covid19_spark.operators.dedup import adaptive_block_assignment
 
-    rows = [
-        (1, "A", "A1"), (2, "A", "A2"),
-        (3, None, "N1"), (4, None, "N1"), (5, None, None),
-    ]
+    rows = [(1, "A", "A1"), (2, "A", "A2")]
+    rows += [(3 + i, None, "N1") for i in range(300)]
+    rows += [(1000, None, None)]
     df = spark.createDataFrame(rows, "id long, coarse string, fine string")
     out = {
         r.id: (r.block_level, r.block_key, r.saturated)
-        for r in adaptive_block_assignment(
-            df, [F.col("coarse"), F.col("fine")], max_block=2
-        ).collect()
+        for r in adaptive_block_assignment(df, [F.col("coarse"), F.col("fine")]).collect()
     }
-    assert set(out) == {1, 2, 3, 4, 5}  # nothing silently dropped
+    assert len(out) == len(rows)  # nothing silently dropped
     assert out[1] == (0, "A", False) and out[2] == (0, "A", False)
-    # the 3 null-coarse rows share one oversized level-0 block -> escalate:
-    # ids 3,4 fit at level 1 ("N1"); id 5's fine key is ALSO null -> the
-    # level-1 sentinel block of size 1 fits the cap
-    assert out[3] == (1, "N1", False) and out[4] == (1, "N1", False)
-    lvl5, key5, sat5 = out[5]
-    assert lvl5 == 1 and sat5 is False and key5 == "\x00null"
+    # the 301 null-coarse rows share one oversized level-0 block -> escalate:
+    # the 300 "N1" rows fit at level 1; id 1000's fine key is ALSO null ->
+    # the level-1 sentinel block of size 1 fits the cap
+    assert out[3] == (1, "N1", False) and out[302] == (1, "N1", False)
+    lvl, key, sat = out[1000]
+    assert lvl == 1 and sat is False and key == "\x00null"

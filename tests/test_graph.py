@@ -12,33 +12,31 @@ def _edges(spark, rows):
 
 
 def test_star_graph_hand_values(spark):
-    """Hub 0 <-> leaves 1..4, unit weights, one iteration: every node has
-    out-edges, so rank'(leaf) = 0.15/5 + 0.85 * (0.2/4) and
-    rank'(hub) = 0.15/5 + 0.85 * (4 * 0.2)."""
+    """Hub 0 <-> leaves 1..4, unit weights, three rounds: every node has
+    out-edges, so rank'(leaf) = 0.15/5 + 0.85 * (rank(hub)/4) and
+    rank'(hub) = 0.15/5 + 0.85 * (4 * rank(leaf))."""
     rows = [(0, i, 1.0) for i in range(1, 5)] + [(i, 0, 1.0) for i in range(1, 5)]
-    out = {r.node: r.rank for r in pagerank(_edges(spark, rows), iterations=1).collect()}
-    assert out[0] == pytest.approx(0.15 / 5 + 0.85 * (4 * 0.2), abs=1e-12)
-    for leaf in range(1, 5):
-        assert out[leaf] == pytest.approx(0.15 / 5 + 0.85 * (0.2 / 4), abs=1e-12)
+    out = {r.node: r.rank for r in pagerank(_edges(spark, rows)).collect()}
+    hub = leaf = 0.2
+    for _ in range(3):
+        hub, leaf = 0.15 / 5 + 0.85 * (4 * leaf), 0.15 / 5 + 0.85 * (hub / 4)
+    assert out[0] == pytest.approx(hub, abs=1e-12)
+    for node in range(1, 5):
+        assert out[node] == pytest.approx(leaf, abs=1e-12)
 
 
 def test_rank_mass_conserved(spark):
     """With no dangling nodes the rank vector stays a probability
-    distribution at every iteration (up to the 1e-15 grid quantization)."""
+    distribution (up to the 1e-15 grid quantization)."""
     rows = [(a, b, float(1 + (a + b) % 3)) for a in range(20) for b in range(20) if (a * 7 + b) % 5 == 0 and a != b]
-    for it in (1, 3, 5):
-        total = (
-            pagerank(_edges(spark, rows), iterations=it)
-            .agg(F.sum("rank").alias("s"))
-            .collect()[0]["s"]
-        )
-        assert total == pytest.approx(1.0, abs=1e-9), (it, total)
+    total = pagerank(_edges(spark, rows)).agg(F.sum("rank").alias("s")).collect()[0]["s"]
+    assert total == pytest.approx(1.0, abs=1e-9), total
 
 
 def test_weights_shift_rank(spark):
     """A node receiving the heavier edge ends up with the higher rank."""
     rows = [(0, 1, 9.0), (0, 2, 1.0), (1, 0, 1.0), (2, 0, 1.0)]
-    out = {r.node: r.rank for r in pagerank(_edges(spark, rows), iterations=3).collect()}
+    out = {r.node: r.rank for r in pagerank(_edges(spark, rows)).collect()}
     assert out[1] > out[2]
 
 
@@ -46,8 +44,8 @@ def test_deterministic_across_partitionings(spark):
     rows = [(a, (a * 13 + 7) % 30, float(1 + a % 4)) for a in range(30)] + [
         ((a * 13 + 7) % 30, a, 1.0) for a in range(30)
     ]
-    a = {r.node: r.rank for r in pagerank(_edges(spark, rows).repartition(1), iterations=3).collect()}
-    b = {r.node: r.rank for r in pagerank(_edges(spark, rows).repartition(17), iterations=3).collect()}
+    a = {r.node: r.rank for r in pagerank(_edges(spark, rows).repartition(1)).collect()}
+    b = {r.node: r.rank for r in pagerank(_edges(spark, rows).repartition(17)).collect()}
     assert a == b  # bit-identical, not approx: the grid sum is exact
 
 
@@ -84,25 +82,25 @@ def test_triangle_count_hub_star_is_triangle_free(spark):
 
 
 def test_pagerank_deep_run_bounded_lineage_and_same_values(spark):
-    """VERDICT r10 #4: iterations=10 must not build a 10-deep join+agg
-    plan — the rank lineage is cut every ``checkpoint_every`` rounds, and
-    the checkpointed run returns bit-identical ranks (the grid sum is
-    exact, a checkpoint only materializes it)."""
+    """The fixed 3 rounds keep the rank lineage to 3 rounds of (edge join +
+    left join) plus the final left join, and the ranks equal a Python
+    replay of the same recurrence."""
     rows = [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0), (2, 1, 1.0)]
-    deep = pagerank(_edges(spark, rows), iterations=10, checkpoint_every=4)
-    plan = deep._jdf.queryExecution().optimizedPlan().toString()
-    # lineage above the last checkpoint: at most (10 mod 4)=2 rounds of
-    # (edge join + left join) plus the final left join -> well under the
-    # 20 joins an uncheckpointed 10-round plan would carry
-    assert plan.count("Join") <= 2 * 4 + 1, plan.count("Join")
-    unchecked = {
-        r.node: r.rank
-        for r in pagerank(
-            _edges(spark, rows), iterations=10, checkpoint_every=0
-        ).collect()
-    }
-    checked = {r.node: r.rank for r in deep.collect()}
-    assert checked == unchecked
+    out = pagerank(_edges(spark, rows))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join") <= 2 * 3 + 1, plan.count("Join")
+    out_w: dict = {}
+    for a, b, w in rows:
+        out_w[a] = out_w.get(a, 0.0) + w
+    rank = {n: 1 / 3 for n in (1, 2, 3)}
+    for _ in range(3):
+        inflow = {n: 0.0 for n in rank}
+        for a, b, w in rows:
+            inflow[b] += rank[a] * w / out_w[a]
+        rank = {n: 0.15 / 3 + 0.85 * inflow[n] for n in rank}
+    got = {r.node: r.rank for r in out.collect()}
+    for n in rank:
+        assert got[n] == pytest.approx(rank[n], abs=1e-12)
 
 
 def test_lpa_two_cliques_with_bridge(spark):
@@ -126,15 +124,14 @@ def test_lpa_two_cliques_with_bridge(spark):
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    got = {r.node: r.label for r in label_propagation(edges, iterations=3).collect()}
+    got = {r.node: r.label for r in label_propagation(edges).collect()}
     assert got[1] == got[2] == got[3] == got[4] == 1
     assert got[10] == got[11] == got[12] == got[13] == 10
 
 
 def test_lpa_deterministic_tiebreak_and_guard(spark):
     """A 2-path node with one neighbor of each label takes the SMALLEST
-    label (the determinism contract); iterations guard fires."""
-    import pytest
+    label (the determinism contract): 9 takes min(5, 7) in rounds 1 and 3."""
     from pyspark.sql import functions as F
 
     from covid19_spark.operators.graph import label_propagation
@@ -143,15 +140,13 @@ def test_lpa_deterministic_tiebreak_and_guard(spark):
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    got = {r.node: r.label for r in label_propagation(edges, iterations=1).collect()}
+    got = {r.node: r.label for r in label_propagation(edges).collect()}
     assert got[9] == 5  # min(5, 7)
-    with pytest.raises(ValueError, match="iterations"):
-        label_propagation(edges, iterations=0)
 
 
 def test_lpa_deep_run_bounded_lineage(spark):
-    """checkpoint_every keeps the plan from growing one join+window per
-    round without bound (the pagerank/components discipline)."""
+    """The fixed 3 rounds bound the plan's joins (the pagerank/components
+    lineage rule needs no checkpoint at this depth)."""
     from pyspark.sql import functions as F
 
     from covid19_spark.operators.graph import label_propagation
@@ -162,9 +157,8 @@ def test_lpa_deep_run_bounded_lineage(spark):
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    out = label_propagation(edges, iterations=9, checkpoint_every=3)
+    out = label_propagation(edges)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # at most ceil(9/3)=3 uncheckpointed rounds of joins in the final plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") <= 8
     assert out.count() == 13
 
@@ -173,8 +167,9 @@ def test_lpa_hub_with_all_distinct_labels(spark):
     """The mode-aggregate skew case: a star hub whose round-1 neighbor
     labels are ALL DISTINCT (the widest possible tie, and the largest
     per-group mode buffer — one entry per neighbor). Round 1: the hub
-    takes the smallest leaf id, every leaf takes the hub's id; a second
-    round then floods the smallest id back — all deterministic."""
+    takes the smallest leaf id, every leaf takes the hub's id; round 2
+    floods the smallest id back to the leaves and the hub's own id to the
+    hub; round 3 swaps them again — all deterministic."""
     from pyspark.sql import functions as F
 
     from covid19_spark.operators.graph import label_propagation
@@ -187,9 +182,6 @@ def test_lpa_hub_with_all_distinct_labels(spark):
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    got = {r.node: r.label for r in label_propagation(edges, iterations=1).collect()}
-    assert got[hub] == 0          # smallest of 20k distinct tied labels
-    assert got[0] == hub and got[n - 1] == hub  # leaves adopt the hub
-    got2 = {r.node: r.label for r in label_propagation(edges, iterations=2).collect()}
-    assert got2[hub] == hub       # hub's only-label neighborhood is now hub
-    assert all(v == 0 for k, v in got2.items() if k != hub)
+    got = {r.node: r.label for r in label_propagation(edges).collect()}
+    assert got[hub] == 0          # the smallest of 20k distinct tied labels
+    assert all(v == hub for k, v in got.items() if k != hub)  # leaves adopt the hub

@@ -173,7 +173,7 @@ def test_phrase_match_positions(spark, sf_dir, tmp_path):
 
 def test_snippet_windows(spark, sf_dir, tmp_path):
     """Best-window snippet extraction hand-checked: max query-term hits,
-    earliest start on ties, snippet cut at the token slice."""
+    snippet cut at the token slice."""
     from covid19_spark.operators.retrieval import snippet_windows_from_index
     from covid19_spark.sources.index import build_inverted_index, read_inverted_index
 
@@ -182,22 +182,11 @@ def test_snippet_windows(spark, sf_dir, tmp_path):
     idx = read_inverted_index(spark, path)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    # width 2 over doc 1 "spark hash spark table": windows [0,1] and [1,2]
-    # both hold 2 hits -> earliest start wins
-    rows = {
-        r.doc_id: (r.best_start, r.n_hits, r.snippet)
-        for r in snippet_windows_from_index(
-            spark, idx, docs, ["spark", "hash"], k=3, width=2
-        ).collect()
-    }
-    assert rows[1] == (0, 2, "spark hash")
-    assert rows[3] == (0, 2, "spark spark")  # spark{0,1,2}: [0,1] first
-    assert rows[2] == (0, 1, "hash window")  # only one hit position
-    # wide window swallows every hit; slice truncates at the doc end
+    # the 10-token window swallows every hit; slice truncates at the doc end
     wide = {
         r.doc_id: (r.best_start, r.n_hits, r.snippet)
         for r in snippet_windows_from_index(
-            spark, idx, docs, ["spark", "hash"], k=3, width=10
+            spark, idx, docs, ["spark", "hash"]
         ).collect()
     }
     assert wide[1] == (0, 3, "spark hash spark table")
@@ -205,10 +194,8 @@ def test_snippet_windows(spark, sf_dir, tmp_path):
 
 
 def test_unordered_window_counts(spark, sf_dir, tmp_path):
-    """SDM uw(N) feature: pair counts hand-checked on the fixture corpus,
+    """SDM uw(8) feature: pair counts hand-checked on the fixture corpus,
     including the same-term case where both (p, q) and (q, p) count."""
-    import pytest as _pytest
-
     from covid19_spark.operators.retrieval import (
         unordered_window_count_from_index,
     )
@@ -219,34 +206,25 @@ def test_unordered_window_counts(spark, sf_dir, tmp_path):
     build_inverted_index(spark, sf_dir, path)
     idx = read_inverted_index(spark, path)
 
-    def uw(a, b, window):
+    def uw(a, b):
         return {
             r.doc_id: r.n_uw
-            for r in unordered_window_count_from_index(
-                spark, idx, a, b, window
-            ).collect()
+            for r in unordered_window_count_from_index(spark, idx, a, b).collect()
         }
 
-    # spark{0,2} x hash{1}: both pairs within any window >= 2
-    assert uw("spark", "hash", 8) == {1: 2}
-    assert uw("spark", "hash", 2) == {1: 2}
+    # spark{0,2} x hash{1}: both pairs within the 8-token window
+    assert uw("spark", "hash") == {1: 2}
     # order of args is symmetric for distinct terms
-    assert uw("hash", "spark", 8) == {1: 2}
-    # same term: ordered pairs both ways — doc3 spark{0,1,2}: 6 pairs
-    # within w=2; doc1 spark{0,2}: 2 pairs
-    assert uw("spark", "spark", 3) == {3: 6, 1: 2}
-    # window 2 (adjacent only): doc3 (0,1),(1,0),(1,2),(2,1) = 4
-    assert uw("spark", "spark", 2) == {3: 4}
-    with _pytest.raises(ValueError, match="window"):
-        unordered_window_count_from_index(spark, idx, "spark", "hash", 1)
+    assert uw("hash", "spark") == {1: 2}
+    # same term: ordered pairs both ways — doc3 spark{0,1,2}: 6 pairs;
+    # doc1 spark{0,2}: 2 pairs
+    assert uw("spark", "spark") == {3: 6, 1: 2}
 
 
 def test_proximity_match_within_slop(spark, sf_dir, tmp_path):
-    """Sloppy-phrase retrieval: within-slop ordered matches hand-checked
-    on the fixture corpus, and slop=0 degenerates to the exact phrase."""
-    from covid19_spark.operators.retrieval import (
-        phrase_match_from_index, proximity_match_from_index,
-    )
+    """Sloppy-phrase retrieval: within-slop-2 ordered matches hand-checked
+    on the fixture corpus."""
+    from covid19_spark.operators.retrieval import proximity_match_from_index
     from covid19_spark.sources.index import build_inverted_index, read_inverted_index
 
     # doc 1: "spark hash spark table"  doc 3: "spark spark spark filter"
@@ -254,31 +232,21 @@ def test_proximity_match_within_slop(spark, sf_dir, tmp_path):
     build_inverted_index(spark, sf_dir, path)
     idx = read_inverted_index(spark, path)
 
-    def prox(terms, slop):
+    def prox(terms):
         return {
             r.doc_id: r.n_matches
-            for r in proximity_match_from_index(spark, idx, terms, slop).collect()
+            for r in proximity_match_from_index(spark, idx, terms).collect()
         }
 
     # "hash … table" needs one intervening token in doc 1 (p=1 → p=3)
-    assert prox(["hash", "table"], 0) == {}
-    assert prox(["hash", "table"], 1) == {1: 1}
-    # 3-term chain across the doc: spark(0) hash(1) table(3) within slop 1
-    assert prox(["spark", "hash", "table"], 1) == {1: 1}
-    # distinct match-END positions: doc 3 "spark spark spark" at slop 1 —
+    assert prox(["hash", "table"]) == {1: 1}
+    # 3-term chain across the doc: spark(0) hash(1) table(3)
+    assert prox(["spark", "hash", "table"]) == {1: 1}
+    # distinct match-END positions: doc 3 "spark spark spark" —
     # ends at p=1 (from 0) and p=2 (from 0 or 1): 2, not 3
-    assert prox(["spark", "spark"], 1) == {3: 2, 1: 1}
-    # slop=0 == exact phrase on every pinned phrase_match case
-    for phrase in (["spark", "hash"], ["spark", "spark"], ["spark", "hash", "spark"]):
-        exact = {
-            r.doc_id: r.n_occurrences
-            for r in phrase_match_from_index(spark, idx, phrase).collect()
-        }
-        assert prox(phrase, 0) == exact
+    assert prox(["spark", "spark"]) == {3: 2, 1: 1}
     with pytest.raises(ValueError, match="proximity"):
         proximity_match_from_index(spark, idx, ["spark"])
-    with pytest.raises(ValueError, match="slop"):
-        proximity_match_from_index(spark, idx, ["spark", "hash"], slop=-1)
 
 
 def test_postings_offsets_substr_roundtrip(spark, tmp_path):
@@ -344,12 +312,9 @@ def test_snippet_offsets_path_equals_retokenize(spark, tmp_path):
     build_inverted_index_from(docs, path)
     idx = read_inverted_index(spark, path)
     text = {r.doc_id: r.text for r in docs.collect()}
-    for width in (2, 4, 50):
-        rows = snippet_windows_from_index(
-            spark, idx, docs, ["hash", "spark"], k=4, width=width
-        ).collect()
-        assert rows  # non-vacuous
-        for r in rows:
-            toks = [t for t in text[r.doc_id].lower().split(" ") if t != ""]
-            want = " ".join(toks[r.best_start:r.best_start + width])
-            assert r.snippet == want, (width, r.doc_id)
+    rows = snippet_windows_from_index(spark, idx, docs, ["hash", "spark"]).collect()
+    assert rows  # non-vacuous
+    for r in rows:
+        toks = [t for t in text[r.doc_id].lower().split(" ") if t != ""]
+        want = " ".join(toks[r.best_start:r.best_start + 10])
+        assert r.snippet == want, r.doc_id

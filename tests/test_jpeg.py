@@ -78,8 +78,11 @@ def test_encode_deterministic():
 
 def test_quality_monotone_size():
     img = _gradient()
-    sizes = [len(encode_jpeg(img, quality=q)) for q in (30, 60, 90)]
+    sizes = [len(encode_jpeg(img, quality=q)) for q in (50, 70, 90)]
     assert sizes[0] < sizes[1] < sizes[2]
+    # below 50 the quality scaling is refused
+    with pytest.raises(NotImplementedError, match="quality below 50"):
+        encode_jpeg(img, quality=30)
 
 
 def test_rejects_arithmetic_and_garbage():
@@ -189,12 +192,15 @@ def test_progressive_matches_baseline_exactly():
         (_gradient(), dict(subsampling="420")),
         (rng.integers(0, 256, (24, 40, 3), dtype=np.uint8), dict(subsampling="444")),
         (_gradient(17, 13), dict(subsampling="420")),
-        ((np.mgrid[0:32, 0:24][0] * 7 % 256).astype(np.uint8), {}),
     ]
     for img, kw in cases:
         base = decode_jpeg(encode_jpeg(img, quality=85, **kw))
         prog = decode_jpeg(encode_jpeg(img, quality=85, progressive=True, **kw))
         assert np.array_equal(base, prog), kw
+    # grayscale progressive is refused at the encoder
+    gray = (np.mgrid[0:32, 0:24][0] * 7 % 256).astype(np.uint8)
+    with pytest.raises(NotImplementedError, match="progressive grayscale"):
+        encode_jpeg(gray, quality=85, progressive=True)
 
 
 def test_progressive_large_smooth_exercises_eob_runs():

@@ -96,7 +96,7 @@ def test_stuffing_invariant_in_entropy_stream():
         ((17, 29), {}),
         ((24, 24, 3), {"quality": 95}),
         ((40, 40, 3), {"restart_interval": 3}),
-        ((56, 72, 3), {"quality": 40, "restart_interval": 5}),
+        ((56, 72, 3), {"quality": 60, "restart_interval": 5}),
     ],
 )
 def test_roundtrip_matches_huffman(shape, kwargs):

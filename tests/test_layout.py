@@ -184,24 +184,25 @@ def test_hilbert_width_guard(spark):
 def test_file_bloom_no_false_skips_and_bounded(spark):
     """Bloom contract on a crafted layout: every file truly containing a
     probe key is touched (no false skips, ever); the words frame stays
-    within m_bits/32 rows per file."""
+    within BLOOM_BITS/32 rows per file."""
     from pyspark.sql import functions as F
 
     from covid19_spark.operators.layout import (
+        BLOOM_BITS,
         file_bloom_words,
         files_bloom_touched,
     )
 
     rows = [(i % 4, 100 + (i * 7) % 50) for i in range(200)]
     files = spark.createDataFrame(rows, "file long, k long")
-    words = file_bloom_words(files, "file", "k", m_bits=1024, k=3)
+    words = file_bloom_words(files, "file", "k")
     per_file = words.groupBy("file").count().collect()
-    assert all(r["count"] <= 1024 // 32 for r in per_file)
+    assert all(r["count"] <= BLOOM_BITS // 32 for r in per_file)
 
     probes = spark.createDataFrame([(105,), (123,), (149,)], "k long")
     touched = {
         r.probe_key: r.bloom_files
-        for r in files_bloom_touched(words, probes, "k", m_bits=1024, k=3).collect()
+        for r in files_bloom_touched(words, probes, "k").collect()
     }
     truth = {
         r.k: r.t
@@ -214,16 +215,6 @@ def test_file_bloom_no_false_skips_and_bounded(spark):
         assert touched.get(key, 0) >= t  # no false skip
 
 
-def test_file_bloom_lane_and_width_guards(spark):
-    import pytest
-
-    from covid19_spark.operators.layout import file_bloom_words
-
-    files = spark.createDataFrame([(0, 1)], "file long, k long")
-    with pytest.raises(ValueError, match="multiple of 32"):
-        file_bloom_words(files, "file", "k", m_bits=100)
-
-
 def test_file_bloom_masks_stay_positive(spark):
     """32-bit lanes: no mask ever reaches the BIGINT sign bit (the DuckDB
     `1 << 63` overflow seam the lane width exists to avoid)."""
@@ -233,13 +224,14 @@ def test_file_bloom_masks_stay_positive(spark):
 
     rows = [(0, i) for i in range(500)]
     files = spark.createDataFrame(rows, "file long, k long")
-    words = file_bloom_words(files, "file", "k", m_bits=256, k=5)
+    words = file_bloom_words(files, "file", "k")
     assert words.filter(F.col("bits") <= 0).count() == 0
 
 
 def test_zrange_decompose_exact_coverage():
-    """Uncapped decomposition covers EXACTLY the rectangle's Morton codes
-    (exhaustive over a grid of rectangles at bits=4)."""
+    """Decomposition within the 32-range budget covers EXACTLY the
+    rectangle's Morton codes (exhaustive over a grid of rectangles at
+    bits=4)."""
     from covid19_spark.operators.layout import zrange_decompose
 
     def morton(x, y, bits=4):
@@ -252,7 +244,7 @@ def test_zrange_decompose_exact_coverage():
         (0, 15, 0, 15), (0, 0, 0, 0), (3, 11, 5, 13), (1, 2, 14, 15),
         (7, 8, 7, 8),  # straddles the top-level quad split
     ]:
-        ranges = zrange_decompose(x0, x1, y0, y1, 4, max_ranges=1000)
+        ranges = zrange_decompose(x0, x1, y0, y1, 4)
         covered = set()
         for lo, hi in ranges:
             assert lo <= hi
@@ -275,12 +267,14 @@ def test_zrange_decompose_cap_overcovers_never_undercovers():
             z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
         return z
 
-    ranges = zrange_decompose(3, 12, 2, 13, 4, max_ranges=4)
+    # this rectangle needs 28 exact ranges: the 32-range budget stops the
+    # recursion early and over-covers
+    ranges = zrange_decompose(3, 12, 2, 13, 4)
     cells = {morton(x, y) for x in range(3, 13) for y in range(2, 14)}
     covered = set()
     for lo, hi in ranges:
         covered |= set(range(lo, hi + 1))
-    assert cells <= covered  # residual filter pays the difference
+    assert cells < covered  # residual filter pays the difference
 
 
 def test_zrange_decompose_guards():

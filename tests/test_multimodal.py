@@ -10,7 +10,13 @@ from covid19_spark.operators.multimodal import (
     extract_image_features,
     fake_image_features,
 )
-from tests.media_gen import frame_sample_plan, retag_tiff, riff_wav, synthesize_media
+from tests.media_gen import (
+    frame_sample_plan,
+    gray_tiff,
+    retag_tiff,
+    riff_wav,
+    synthesize_media,
+)
 
 
 def test_fake_features_deterministic():
@@ -60,7 +66,7 @@ def test_extract_features_end_to_end(spark):
     img = np.random.default_rng(3).integers(0, 256, size=(12, 9, 3), dtype=np.uint8)
     bmp = encode_bmp(img)
     tone = (8000 * np.sin(np.arange(3000) / 7.0)).astype(np.int16)
-    wav = encode_wav(tone, 8000)
+    wav = encode_wav(tone)
     media = spark.createDataFrame(
         [
             (0, "image", "image/bmp", 9, 12, None, bmp),
@@ -103,7 +109,7 @@ def test_audio_features_contract(spark):
     rows = []
     for i in range(5):
         clip = (4000 * np.sin(np.arange(1200 + 300 * i) * (0.05 + 0.02 * i))).astype(np.int16)
-        rows.append((i, "audio", "audio/wav", None, None, 150 + 40 * i, encode_wav(clip, 8000)))
+        rows.append((i, "audio", "audio/wav", None, None, 150 + 40 * i, encode_wav(clip)))
     rows.append((9, "image", "image/bmp", 1, 1, None, b"BM"))  # pruned by kind
     rows_out = extract_audio_features(spark.createDataFrame(rows, MEDIA_SCHEMA), n_windows=8).collect()
     assert sorted(r.media_id for r in rows_out) == list(range(5))
@@ -363,12 +369,12 @@ def test_wav_int16_roundtrip_exact():
 
     rng = np.random.default_rng(5)
     mono = rng.integers(-32768, 32768, size=333, dtype=np.int16)
-    out, rate = decode_wav(encode_wav(mono, 8000))
+    out, rate = decode_wav(encode_wav(mono))
     assert rate == 8000 and out.shape == (333, 1)
     assert np.array_equal((out[:, 0] * 32768.0).astype(np.int16), mono)
     stereo = rng.integers(-32768, 32768, size=(100, 2), dtype=np.int16)
-    out, rate = decode_wav(encode_wav(stereo, 44100))
-    assert rate == 44100 and out.shape == (100, 2)
+    out, rate = decode_wav(encode_wav(stereo))
+    assert rate == 8000 and out.shape == (100, 2)
     assert np.array_equal((out * 32768.0).astype(np.int16), stereo)
 
 
@@ -426,7 +432,7 @@ def test_audio_real_decode_end_to_end(spark):
     for i in range(6):
         t = np.arange(4000 + 500 * i)
         tone = (10000 * np.sin(2 * np.pi * (200 + 50 * i) * t / 8000)).astype(np.int16)
-        payload = encode_wav(tone, 8000)
+        payload = encode_wav(tone)
         wavs[i] = payload
         rows.append((i, "audio", "audio/wav", None, None, 500, payload))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
@@ -461,16 +467,18 @@ def test_avi_roundtrip_and_sampling():
     )
 
     frames = _mk_frames(12)
-    payload = encode_mjpeg_avi(frames, fps=4, quality=88)
+    payload = encode_mjpeg_avi(frames, quality=88)
     jpegs, fps = decode_avi_frames(payload)
     assert len(jpegs) == 12 and fps == 4.0
     for i in (0, 5, 11):  # each frame is an independently decodable JPEG
         out = decode_jpeg(jpegs[i])
         assert out.shape == frames[i].shape
         assert int(np.abs(out.astype(int) - frames[i].astype(int)).max()) <= 8
-    # 12 frames @4fps = 3000 ms -> samples at 0/1000/2000/3000 = idx 0/4/8/11
-    sampled = video_frame_features(payload, every_ms=1000)
-    assert [(ts, idx) for ts, idx, _ in sampled] == [(0, 0), (1000, 4), (2000, 8), (3000, 11)]
+    # 12 frames @4fps = 3000 ms -> samples every 500 ms = idx 0/2/4/.../10/11
+    sampled = video_frame_features(payload)
+    assert [(ts, idx) for ts, idx, _ in sampled] == [
+        (0, 0), (500, 2), (1000, 4), (1500, 6), (2000, 8), (2500, 10), (3000, 11)
+    ]
 
 
 def test_avi_rejects():
@@ -480,7 +488,7 @@ def test_avi_rejects():
 
     with pytest.raises(ValueError, match="not an AVI"):
         decode_avi_frames(b"RIFF\x04\x00\x00\x00WAVE")
-    payload = bytearray(encode_mjpeg_avi(_mk_frames(2), fps=5))
+    payload = bytearray(encode_mjpeg_avi(_mk_frames(2)))
     with pytest.raises(ValueError, match="truncated"):
         decode_avi_frames(bytes(payload[:100]))
     # flip the stream handler to a real codec fourcc -> explicit seam
@@ -504,19 +512,19 @@ def test_video_real_decode_end_to_end(spark):
     rows = []
     for i in range(4):
         n = 6 + 2 * i
-        payload = encode_mjpeg_avi(_mk_frames(n), fps=4)
+        payload = encode_mjpeg_avi(_mk_frames(n))
         payloads[i] = payload
         rows.append((i, "video", "video/avi", 32, 24, int(n * 250), payload))
     # a non-video row that must be pruned before any decode
     rows.append((99, "image", "image/bmp", 8, 8, None, b"garbage"))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = extract_video_frames(media, every_ms=500).collect()
+    out = extract_video_frames(media).collect()
     got = {}
     for r in out:
         got.setdefault(r.media_id, []).append((r.frame_ts_ms, r.frame_index, r.feature))
     assert set(got) == set(payloads)
     for i, payload in payloads.items():
-        expected = video_frame_features(payload, every_ms=500)
+        expected = video_frame_features(payload)
         rows_i = sorted(got[i])
         assert [(ts, idx) for ts, idx, _ in rows_i] == [(ts, idx) for ts, idx, _ in expected]
         for (_, _, f_got), (_, _, f_exp) in zip(rows_i, expected):
@@ -534,29 +542,17 @@ def test_video_frames_fanout_matches_plan(spark):
     )
 
     rows = []
-    for i, (n_frames, fps) in enumerate([(3, 4), (8, 4), (12, 4), (7, 3), (5, 10)]):
-        payload = encode_mjpeg_avi(_mk_frames(n_frames, h=8, w=8), fps=fps)
-        rows.append((i, "video", "video/avi", 8, 8, int(n_frames * 1000 / fps), payload))
+    for i, n_frames in enumerate([3, 8, 12, 7, 5]):
+        payload = encode_mjpeg_avi(_mk_frames(n_frames, h=8, w=8))
+        rows.append((i, "video", "video/avi", 8, 8, int(n_frames * 1000 / 4), payload))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     plan_counts, frame_counts = {}, {}
-    for r in frame_sample_plan(media, every_ms=1000).collect():
+    for r in frame_sample_plan(media, every_ms=500).collect():
         plan_counts[r.media_id] = plan_counts.get(r.media_id, 0) + 1
-    for r in extract_video_frames(media, every_ms=1000).collect():
+    for r in extract_video_frames(media).collect():
         frame_counts[r.media_id] = frame_counts.get(r.media_id, 0) + 1
     assert frame_counts == plan_counts
-    assert set(frame_counts.values()) == {1, 3, 4}  # 750/2000/3000/2333/500 ms
-
-
-def test_video_every_ms_must_be_positive(spark):
-    from covid19_spark.operators.multimodal import (
-        extract_video_frames,
-        video_frame_features,
-    )
-
-    with pytest.raises(ValueError, match="every_ms"):
-        extract_video_frames(synthesize_media(spark, n=3), every_ms=0)
-    with pytest.raises(ValueError, match="every_ms"):
-        video_frame_features(b"RIFF", every_ms=-5)
+    assert set(frame_counts.values()) == {2, 5, 7, 4, 3}  # 750/2000/3000/1750/1250 ms
 
 
 def test_avi_video_stream_not_first():
@@ -649,7 +645,7 @@ def test_image_near_dup_finds_reencodes_distributed(spark):
         rows.append((100 + i, "image", "image/jpeg", 48, 36, None, encode_jpeg(img, quality=80)))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     hashes = image_dhash(media)
-    pairs = {(r.doc_a, r.doc_b) for r in image_near_dup_pairs(hashes, max_hamming=10).collect()}
+    pairs = {(r.doc_a, r.doc_b) for r in image_near_dup_pairs(hashes).collect()}
     for i in range(8):
         assert (i, 100 + i) in pairs, i
     # no unrelated original-original pair sneaks in
@@ -681,7 +677,7 @@ def test_audio_fingerprint_invariances():
     # little more — the planted-copy contract is Hamming <= 8
     assert ham(h, audio_fingerprint(0.5 * s16.astype(np.float64))) <= 2
     assert ham(h, audio_fingerprint((s16 // 256 * 256).astype(np.float64))) <= 8
-    out, _ = decode_wav(encode_wav(s16, 8000))
+    out, _ = decode_wav(encode_wav(s16))
     assert ham(h, audio_fingerprint(out * 32768.0)) <= 2
     # NOTE deliberately absent: sample-repeat "resampling" halves the
     # playback pitch — audibly different content, and the spectral bands
@@ -707,12 +703,12 @@ def test_audio_near_dup_finds_variants_distributed(spark):
             0.5 + 0.5 * np.sin(2 * np.pi * (2 + i % 3) * t / 8000)
         )
         s16 = (20000 * sig).astype(np.int16)
-        rows.append((i, "audio", "audio/wav", None, None, 1000, encode_wav(s16, 8000)))
+        rows.append((i, "audio", "audio/wav", None, None, 1000, encode_wav(s16)))
         v16 = ((s16 // 2) // 256 * 256).astype(np.int16)  # half gain + 8-bit
-        rows.append((100 + i, "audio", "audio/wav", None, None, 1000, encode_wav(v16, 8000)))
+        rows.append((100 + i, "audio", "audio/wav", None, None, 1000, encode_wav(v16)))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     fps = audio_fingerprints(media)
-    pairs = {(r.doc_a, r.doc_b) for r in audio_near_dup_pairs(fps, max_hamming=10).collect()}
+    pairs = {(r.doc_a, r.doc_b) for r in audio_near_dup_pairs(fps).collect()}
     for i in range(6):
         assert (i, 100 + i) in pairs, i
     assert not any(a < 100 and b < 100 for a, b in pairs)
@@ -736,13 +732,13 @@ def test_video_near_dup_finds_reencodes_distributed(spark):
             np.repeat(np.repeat(np.roll(base, k, axis=1), 4, axis=0), 4, axis=1)
             for k in range(5)
         ]
-        rows.append((i, "video", "video/avi", 32, 24, 1250, encode_mjpeg_avi(frames, fps=4, quality=88)))
-        rows.append((100 + i, "video", "video/avi", 32, 24, 1250, encode_mjpeg_avi(frames, fps=4, quality=70)))
+        rows.append((i, "video", "video/avi", 32, 24, 1250, encode_mjpeg_avi(frames, quality=88)))
+        rows.append((100 + i, "video", "video/avi", 32, 24, 1250, encode_mjpeg_avi(frames, quality=70)))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    hashes = video_frame_hashes(media, every_ms=500)
+    hashes = video_frame_hashes(media)
     pairs = {
         (r.doc_a, r.doc_b): r.matching_frames
-        for r in video_near_dup_pairs(hashes, min_matching_frames=3).collect()
+        for r in video_near_dup_pairs(hashes).collect()
     }
     for i in range(5):
         assert (i, 100 + i) in pairs, i
@@ -798,13 +794,13 @@ def test_dc_decode_pair_sets_match_full_decode():
             np.repeat(np.repeat(np.roll(base, i, axis=1), 8, axis=0), 8, axis=1)
             for i in range(n_frames)
         ]
-        vids[d] = encode_mjpeg_avi(frames, fps=4, quality=88)
-        vids[100000 + d] = encode_mjpeg_avi(frames, fps=4, quality=70)
+        vids[d] = encode_mjpeg_avi(frames, quality=88)
+        vids[100000 + d] = encode_mjpeg_avi(frames, quality=70)
 
     def pair_set(decoder):
         by_rank = defaultdict(list)
         for mid, avi in vids.items():
-            for rank, (_ts, _idx, j) in enumerate(_sampled_avi_frames(avi, 500)):
+            for rank, (_ts, _idx, j) in enumerate(_sampled_avi_frames(avi)):
                 by_rank[rank].append((mid, dhash_pixels(decoder(j))))
         agg = defaultdict(int)
         for lst in by_rank.values():
@@ -840,7 +836,7 @@ def test_small_frame_videos_fall_back_to_full_decode(spark):
     )
 
     frames = _mk_frames(3, 24, 32)
-    avi = encode_mjpeg_avi(frames, fps=4, quality=85)
+    avi = encode_mjpeg_avi(frames, quality=85)
     media = spark.createDataFrame(
         [(1, "video", "video/avi", 32, 24, 750, bytearray(avi))],
         "media_id long, kind string, mime string, width int, height int, "
@@ -848,11 +844,11 @@ def test_small_frame_videos_fall_back_to_full_decode(spark):
     )
     got = {
         (r.media_id, r.frame_rank): r.dhash
-        for r in video_frame_hashes(media, every_ms=500).collect()
+        for r in video_frame_hashes(media).collect()
     }
     expected = {
         (1, rank): dhash_pixels(decode_jpeg(j))
-        for rank, (_ts, _idx, j) in enumerate(_sampled_avi_frames(avi, 500))
+        for rank, (_ts, _idx, j) in enumerate(_sampled_avi_frames(avi))
     }
     assert got == expected
 
@@ -903,7 +899,7 @@ def test_ima_adpcm_partial_block_roundtrips_exact_length():
     from covid19_spark.operators.multimodal import decode_wav, encode_wav
 
     sig16 = (1000 * np.sin(np.arange(100) / 5.0)).astype(np.int16)
-    plain = encode_wav(sig16, 8000)
+    plain = encode_wav(sig16)
     i = plain.index(b"data")
     with_fact = plain[:i] + b"fact" + struct.pack("<II", 4, 505) + plain[i:]
     with_fact = b"RIFF" + struct.pack("<I", len(with_fact) - 8) + with_fact[8:]
@@ -1101,18 +1097,18 @@ def test_wav_depth_variants_decode_bit_identically():
         12000 * np.sin(2 * np.pi * 440 * np.arange(2000) / 8000)
         + rng.integers(-500, 500, 2000)
     ).astype(np.int16)
-    base, rate = decode_wav(encode_wav(sig, 8000, dtype="i16"))
+    base, rate = decode_wav(encode_wav(sig, dtype="i16"))
     assert rate == 8000
     for dt in ("i24", "i32", "f32", "f64"):
-        got, _ = decode_wav(encode_wav(sig, 8000, dtype=dt))
+        got, _ = decode_wav(encode_wav(sig, dtype=dt))
         assert np.array_equal(got, base), dt
     # stereo survives every depth too
     st = np.stack([sig[:100], -sig[:100]], axis=1)
     for dt in ("i16", "i24", "i32", "f32", "f64"):
-        got, _ = decode_wav(encode_wav(st, 8000, dtype=dt))
+        got, _ = decode_wav(encode_wav(st, dtype=dt))
         assert got.shape == (100, 2), dt
     with pytest.raises(ValueError, match="dtype"):
-        encode_wav(sig, 8000, dtype="i8")
+        encode_wav(sig, dtype="i8")
 
 
 def test_ms_adpcm_full_range_input_encodes():
@@ -1159,8 +1155,9 @@ def test_ms_adpcm_wav_roundtrip(spark):
 
 
 def test_tiff_roundtrip_all_compressions():
-    """Baseline TIFF strips round-trip exactly under none/PackBits/LZW,
-    RGB and grayscale, across strip boundaries and LZW width growth."""
+    """Baseline TIFF strips round-trip exactly under none/PackBits/LZW
+    across strip boundaries and LZW width growth; 8-bit grayscale decodes
+    (from a hand-built file) but the encoder refuses it."""
     from covid19_spark.operators.multimodal import decode_tiff, encode_tiff
 
     rng = np.random.default_rng(1)
@@ -1170,9 +1167,11 @@ def test_tiff_roundtrip_all_compressions():
             assert np.array_equal(
                 decode_tiff(encode_tiff(img, compression=comp)), img
             ), (comp, shape)
-        gray = rng.integers(0, 256, (11, 6), dtype=np.uint8)
-        out = decode_tiff(encode_tiff(gray, compression=comp))
-        assert np.array_equal(out[:, :, 0], gray)
+    gray = rng.integers(0, 256, (11, 6), dtype=np.uint8)
+    out = decode_tiff(gray_tiff(gray, rows_per_strip=4))
+    assert np.array_equal(out[:, :, 0], gray)
+    with pytest.raises(NotImplementedError, match="grayscale"):
+        encode_tiff(gray)
     big = rng.integers(0, 256, (80, 90, 3), dtype=np.uint8)  # LZW 9->12 bits
     assert np.array_equal(
         decode_tiff(encode_tiff(big, compression="lzw", rows_per_strip=40)), big
@@ -1307,7 +1306,7 @@ def test_tiff_16bit_and_planar():
             assert np.array_equal(got, img8), (comp, planar)
     with pytest.raises(ValueError, match="uint8"):
         encode_tiff(img8.astype(np.uint16))
-    gray = encode_tiff(img8[:, :, 0], compression="packbits")
+    gray = gray_tiff(img8[:, :, 0])
     for bits in (12, 16):
         with pytest.raises(NotImplementedError, match="samples"):
             decode_tiff(retag_tiff(gray, 258, bits))
@@ -1331,7 +1330,7 @@ def test_tiff_tiled_roundtrip():
                     )
                     assert np.array_equal(got, img), (comp, planar, tile, pred)
     gray = rng.integers(0, 256, (9, 9), dtype=np.uint8)
-    out = decode_image(encode_tiff(gray, compression="packbits", tile=(4, 4)))
+    out = decode_image(gray_tiff(gray, tile=(4, 4)))
     assert np.array_equal(out[:, :, 0], gray)
     # strips with predictor 2 through the ENCODER too (the hand-built
     # vectors above cover the decode side only)
@@ -1342,10 +1341,10 @@ def test_tiff_sub_byte_samples():
     """1/2/4-bit samples outside CCITT, WhiteIsZero outside CCITT and
     palette images are outside the supported TIFF profile: each raises
     NotImplementedError."""
-    from covid19_spark.operators.multimodal import decode_tiff, encode_tiff
+    from covid19_spark.operators.multimodal import decode_tiff
 
     rng = np.random.default_rng(41)
-    gray = encode_tiff(rng.integers(0, 256, (17, 23)).astype(np.uint8), rows_per_strip=5)
+    gray = gray_tiff(rng.integers(0, 256, (17, 23)).astype(np.uint8), rows_per_strip=5)
     for bit in (1, 2, 4):
         with pytest.raises(NotImplementedError, match="sub-byte|samples"):
             decode_tiff(retag_tiff(gray, 258, bit))

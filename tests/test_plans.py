@@ -303,7 +303,7 @@ def _incremental_lazy_screen(docs):
     return _incremental_screen_with_handle(
         docs.filter(F.col("doc_id") % 4 < 3),
         docs.filter(F.col("doc_id") % 4 == 3),
-        "doc_id", "text", 32, 8, 3, 0.5,
+        "doc_id", "text",
     )
 
 
@@ -314,9 +314,7 @@ def _e2e_verified_pairs(docs):
     Returns (pairs, the stage's persisted frames)."""
     from covid19_spark.operators.dedup import _lsh_verified_pairs_with_handle
 
-    return _lsh_verified_pairs_with_handle(
-        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=3, threshold=0.5
-    )
+    return _lsh_verified_pairs_with_handle(docs, "doc_id", "text")
 
 
 def test_dedup_pipelines_shingle_text_exactly_once(spark):
@@ -405,8 +403,8 @@ def test_span_queries_tokenize_corpus_exactly_once(spark):
     spark.catalog.clearCache()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for name, build in (
-        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs, 8, 2)),
-        ("span_dedup", lambda: _span_dedup_with_handle(docs, 8, 2, True)),
+        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs)),
+        ("span_dedup", lambda: _span_dedup_with_handle(docs)),
     ):
         frame, caches = build()
         plan = frame._jdf.queryExecution().executedPlan().toString()
@@ -442,8 +440,8 @@ def test_span_dedup_no_pairwise_stage_and_partitioned_windows(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for name, build in (
-        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs, 8, 2)),
-        ("span_dedup", lambda: _span_dedup_with_handle(docs, 8, 2, True)),
+        ("duplicated_spans", lambda: _duplicated_spans_with_handle(docs)),
+        ("span_dedup", lambda: _span_dedup_with_handle(docs)),
     ):
         lazy, caches = build()
         plan = lazy._jdf.queryExecution().executedPlan().toString()

@@ -35,19 +35,18 @@ def naive(points, intervals):
 
 def test_matches_naive_join(spark, frames):
     points, intervals = frames
-    for w in (0.5, 3.0, 100.0):
-        got = sorted(
-            (r.pid, r.iid)
-            for r in binned_range_join(points, intervals, "value", "lo", "hi", w).collect()
-        )
-        want = sorted((r.pid, r.iid) for r in naive(points, intervals).collect())
-        assert got == want, f"bin_width={w}"
+    got = sorted(
+        (r.pid, r.iid)
+        for r in binned_range_join(points, intervals, "value", "lo", "hi").collect()
+    )
+    want = sorted((r.pid, r.iid) for r in naive(points, intervals).collect())
+    assert got == want
 
 
 def test_no_nested_loop_in_plan(spark, frames):
     points, intervals = frames
     plan = (
-        binned_range_join(points, intervals, "value", "lo", "hi", 5.0)
+        binned_range_join(points, intervals, "value", "lo", "hi")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
@@ -60,6 +59,6 @@ def test_giant_interval_guard(spark, frames):
     wide = intervals.union(
         spark.createDataFrame([(999, 0.0, 1e9)], "iid long, lo double, hi double")
     )
-    joined = binned_range_join(points, wide, "value", "lo", "hi", 1.0)
+    joined = binned_range_join(points, wide, "value", "lo", "hi")
     with pytest.raises(Exception, match="spans more than 1024 bins"):
         joined.collect()

@@ -27,7 +27,13 @@ own code counts as a program), unless ``KEEP_OPTIONS`` names it with a
 reason.  Callees resolve through the same aliases, and methods match by
 name; a def some program call forwards ``*args``/``**kwargs`` to, or that
 program code uses as a value, is exempt, and so are the defs ``KEEP``
-names.
+names.  A fourth check, over the same calls and exemptions, fails on any
+int, float or bool parameter (defaulted or required) that every program
+call sets to the same literal — a call that omits a defaulted parameter
+sets its default — unless ``KEEP_OPTIONS`` names it.
+
+A fifth check fails on any top-level assignment of a package module that
+no program-reached code reads (a ``KEEP`` entry may name a constant).
 """
 
 from __future__ import annotations
@@ -40,12 +46,14 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = "covid19_spark"
 
-# Package defs and modules no program code reaches that stay anyway.
+# Package defs, modules and constants no program code reaches that stay anyway.
 # Dotted name under ``covid19_spark`` -> reason: a COVERAGE §2 id, a
 # ROADMAP item (4 or 5), or "test reference for X".  The covid19
 # reference pieces wait for the ROADMAP item 5 app to call them.
 KEEP: dict[str, str] = {
     "functions.scalars.best_news_source": "COVERAGE §2 P8 coalesce news source",
+    "functions.scalars.INDIAN_STATES": "COVERAGE §2 P6 state membership list",
+    "schemas.STATEWISE_STATS": "COVERAGE §2 S1 statewise wire schema",
     "operators.rates.active_cases": "COVERAGE §2 A8 active cases",
     "operators.rates.positivity_rate": "COVERAGE §2 A7 positivity rate",
     "operators.rollup.grand_total_rollup": "COVERAGE §2 A5 grand-total row",
@@ -100,13 +108,15 @@ def _module_name(path: Path) -> str:
 
 class _Code:
     """The raw code references of some AST nodes: loaded names, attribute
-    chains on a name, imported modules, and the names the code binds."""
+    chains on a name, imported modules, and the names the code binds
+    (a ``global`` declaration aside)."""
 
     def __init__(self, nodes, package: str, aliases: dict[str, str]):
         self.names: set[str] = set()
         self.chains: set[tuple[str, ...]] = set()
         self.imports: set[str] = set()
         self.binds: set[str] = set()
+        declared: set[str] = set()  # ``global`` names are the module's, not locals
         for top in nodes:
             for node in ast.walk(top):
                 if isinstance(node, ast.Name):
@@ -116,6 +126,8 @@ class _Code:
                         self.binds.add(node.id)
                 elif isinstance(node, ast.arg):
                     self.binds.add(node.arg)
+                elif isinstance(node, ast.Global):
+                    declared.update(node.names)
                 elif isinstance(node, ast.Attribute):
                     attrs = []
                     while isinstance(node, ast.Attribute):
@@ -134,6 +146,7 @@ class _Code:
                     for a in node.names:
                         self.imports.add(f"{base}.{a.name}")
                         aliases[a.asname or a.name] = f"{base}.{a.name}"
+        self.binds -= declared
 
 
 def _import_base(node: ast.ImportFrom, package: str) -> str:
@@ -146,7 +159,7 @@ def _import_base(node: ast.ImportFrom, package: str) -> str:
 
 class _Module:
     """One parsed file (from disk, or from ``source``): its syntax tree,
-    its top-level defs and classes, its import aliases (local name ->
+    its top-level defs, classes and assigned constants, its import aliases (local name ->
     dotted target, from every import in the file), the code its top-level
     statements run, and each def's own code."""
 
@@ -159,6 +172,14 @@ class _Module:
         self.aliases: dict[str, str] = {}
         self.defs: dict[str, _Code] = {}
         self.classes = {s.name for s in tree.body if isinstance(s, ast.ClassDef)}
+        self.constants = {
+            t.id
+            for stmt in tree.body
+            if isinstance(stmt, (ast.Assign, ast.AnnAssign))
+            for target in (stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target])
+            for t in ast.walk(target)
+            if isinstance(t, ast.Name) and not t.id.startswith("__")
+        }
         top = []
         for stmt in tree.body:
             if isinstance(stmt, _DEF_TYPES):
@@ -182,8 +203,9 @@ class _Graph:
         self.roots = list(roots)
 
     def resolve(self, dotted: str, seen: frozenset = frozenset()):
-        """A dotted target -> ('mod', m) or ('def', m, n), following
-        re-exports through the aliases of the module that holds them."""
+        """A dotted target -> ('mod', m), ('def', m, n) or ('const', m, n),
+        following re-exports through the aliases of the module that holds
+        them."""
         if dotted in self.modules:
             return ("mod", dotted)
         mod, _, name = dotted.rpartition(".")
@@ -194,7 +216,9 @@ class _Graph:
             return ("def", mod, name)
         if name in m.aliases:
             return self.resolve(m.aliases[name], seen | {dotted}) or ("mod", mod)
-        return ("mod", mod)  # a module-level value: the module's code runs
+        if name in m.constants:
+            return ("const", mod, name)
+        return ("mod", mod)  # some other module-level value: the module's code runs
 
     def refs(self, module: _Module, code: _Code, shadow=frozenset()) -> set:
         """Every package def and module ``code`` refers to.  Names the code
@@ -203,6 +227,8 @@ class _Graph:
         for name in code.names - shadow:
             if name in module.defs and module.name in self.modules:
                 out.add(("def", module.name, name))
+            elif name in module.constants and module.name in self.modules:
+                out.add(("const", module.name, name))
             elif name in module.aliases:
                 out.add(self.resolve(module.aliases[name]))
         for base, *attrs in code.chains:
@@ -223,11 +249,14 @@ class _Graph:
 
     def expand(self, key) -> set:
         """The references made by running ``key``: a module's top-level
-        code (and its parent package), or a def's body."""
+        code (and its parent package), or a def's body.  Reading a
+        constant runs its module."""
         m = self.modules[key[1]]
+        if key[0] == "const":
+            return {("mod", key[1])}
         if key[0] == "mod":
             parent = key[1].rpartition(".")[0]
-            return self.refs(m, m.top) | ({("mod", parent)} if parent else set())
+            return self.refs(m, m.top) | ({("mod", parent)} if parent in self.modules else set())
         code = m.defs[key[2]]
         return {("mod", key[1])} | self.refs(m, code, frozenset(code.binds))
 
@@ -262,9 +291,9 @@ def _label(key) -> str:
     return dotted[len(PACKAGE) + 1:]
 
 
-def _keep_roots(graph: _Graph) -> set:
+def _keep_roots(graph: _Graph, keep: dict = KEEP) -> set:
     roots = set()
-    for entry in KEEP:
+    for entry in keep:
         dotted = f"{PACKAGE}.{entry}"
         key = graph.resolve(dotted)
         assert key is not None and _label(key) == entry, f"KEEP names nothing: {entry}"
@@ -279,6 +308,19 @@ def unreached() -> list[str]:
     graph = _graph()
     reached = graph.reach(_keep_roots(graph))
     return sorted(_label(k) for k in graph.all_keys() if k not in reached)
+
+
+def unread_constants(graph: _Graph | None = None, keep: dict = KEEP) -> list[str]:
+    """Top-level assignments of package modules that no program root or
+    keep entry reads (a read in some module's top-level code counts)."""
+    graph = graph or _graph()
+    reached = graph.reach(_keep_roots(graph, keep))
+    return sorted(
+        _label(("const", m.name, c))
+        for m in graph.modules.values()
+        for c in m.constants
+        if ("const", m.name, c) not in reached
+    )
 
 
 def test_every_package_def_has_a_program_caller():
@@ -379,10 +421,6 @@ KEEP_OPTIONS: dict[str, str] = {
         "test reaches the unblocked all-pairs scan of a small corpus",
     "operators.similarity.pq_cosine_topk(train_sample_mod)":
         "test reaches the hash-sampled quantizer training",
-    "operators.graph.pagerank(checkpoint_every)":
-        "test reaches the per-k-round lineage checkpoint",
-    "operators.graph.label_propagation(checkpoint_every)":
-        "test reaches the per-k-round lineage checkpoint",
 }
 
 _OPTION_REASON = re.compile(r"^(deployment setting: \S|test reaches \S)")
@@ -398,8 +436,9 @@ def _decorator_name(node) -> str:
 
 class _Def:
     """A package def's positional parameter names (``self``/``cls``
-    excluded, so index 0 is the first argument a caller passes) and its
-    defaulted parameters."""
+    excluded, so index 0 is the first argument a caller passes), its
+    defaulted parameters, and every parameter's default expression (None
+    for a required one)."""
 
     def __init__(self, fn: ast.FunctionDef, is_method: bool):
         decorators = {_decorator_name(d) for d in fn.decorator_list}
@@ -408,8 +447,10 @@ class _Def:
         if is_method and "staticmethod" not in decorators:
             positional = positional[1:]
         self.positional = [p.arg for p in positional]
-        self.options = [p.arg for p in positional[len(positional) - len(a.defaults):]]
-        self.options += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+        self.defaults = dict.fromkeys(self.positional)
+        self.defaults.update(zip(self.positional[len(positional) - len(a.defaults):], a.defaults))
+        self.defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults))
+        self.options = [name for name, d in self.defaults.items() if d]
         self.wrapped = bool(decorators - _PLAIN_DECORATORS)
 
 
@@ -455,16 +496,32 @@ def _named_defs(graph: _Graph, module: _Module, expr, by_method: dict) -> set:
     return out
 
 
+def _literal(expr):
+    """An int, float or bool literal (a negated number too) as ``(type,
+    value)``, else None."""
+    sign = 1
+    if isinstance(expr, ast.UnaryOp) and isinstance(expr.op, ast.USub):
+        sign, expr = -1, expr.operand
+    if not isinstance(expr, ast.Constant) or type(expr.value) not in (int, float, bool):
+        return None
+    if sign == -1 and isinstance(expr.value, bool):
+        return None
+    return (type(expr.value).__name__, -expr.value if sign < 0 else expr.value)
+
+
 def option_uses(graph: _Graph):
     """(package defs, the (module, def, param) triples some program call
-    passes, the defs exempt from the check) over every program call: the
-    package's own code and the program roots."""
+    passes, each triple's values over all calls, the defs exempt from the
+    check) over every program call: the package's own code and the program
+    roots.  A value is the literal the call passes (an omitted parameter
+    passes its default), or None for any other expression."""
     defs = _package_defs(graph)
     by_method: dict[str, set] = {}
     for mod, qual in defs:
         if "." in qual:
             by_method.setdefault(qual.rpartition(".")[2], set()).add((mod, qual))
     passed: set[tuple[str, str, str]] = set()
+    values: dict[tuple[str, str, str], set] = {}
     exempt = {k for k, d in defs.items() if d.wrapped}
     for module in [*graph.modules.values(), *graph.roots]:
         called = set()
@@ -478,10 +535,14 @@ def option_uses(graph: _Graph):
             for key in _named_defs(graph, module, node.func, by_method) & defs.keys():
                 if forwards:
                     exempt.add(key)
-                else:
-                    names = defs[key].positional[: len(node.args)]
-                    names += [k.arg for k in node.keywords]
-                    passed |= {(*key, n) for n in names}
+                    continue
+                d = defs[key]
+                args = dict(zip(d.positional, node.args))
+                args.update((k.arg, k.value) for k in node.keywords)
+                passed |= {(*key, n) for n in args}
+                for name, default in d.defaults.items():
+                    value = args.get(name, default)
+                    values.setdefault((*key, name), set()).add(value and _literal(value))
         for node in ast.walk(module.tree):
             if (
                 isinstance(node, (ast.Name, ast.Attribute))
@@ -489,7 +550,19 @@ def option_uses(graph: _Graph):
                 and id(node) not in called
             ):
                 exempt |= _named_defs(graph, module, node, by_method) & defs.keys()
-    return defs, passed, exempt
+    return defs, passed, values, exempt
+
+
+def _checked_defs(graph: _Graph, defs: dict, exempt: set):
+    """(label, def) for the defs the option checks cover: not exempt and
+    not under a ``KEEP`` entry."""
+    kept = tuple(f"{PACKAGE}.{entry}" for entry in KEEP)
+    for (mod, qual), d in defs.items():
+        dotted = f"{mod}.{qual}"
+        if (mod, qual) not in exempt and not any(
+            dotted == k or dotted.startswith(k + ".") for k in kept
+        ):
+            yield (mod, qual), dotted[len(PACKAGE) + 1:], d
 
 
 def unset_options(graph: _Graph | None = None) -> list[str]:
@@ -498,21 +571,30 @@ def unset_options(graph: _Graph | None = None) -> list[str]:
     and so is a def some program call forwards ``*args``/``**kwargs`` to or
     some program code uses as a value (a callback, a registry entry)."""
     graph = graph or _graph()
-    defs, passed, exempt = option_uses(graph)
-    kept = tuple(f"{PACKAGE}.{entry}" for entry in KEEP)
-    out = []
-    for (mod, qual), d in defs.items():
-        dotted = f"{mod}.{qual}"
-        if (mod, qual) in exempt or any(
-            dotted == k or dotted.startswith(k + ".") for k in kept
-        ):
-            continue
-        out += [
-            f"{dotted[len(PACKAGE) + 1:]}({name})"
-            for name in d.options
-            if (mod, qual, name) not in passed
-        ]
-    return sorted(out)
+    defs, passed, _, exempt = option_uses(graph)
+    return sorted(
+        f"{label}({name})"
+        for key, label, d in _checked_defs(graph, defs, exempt)
+        for name in d.options
+        if (*key, name) not in passed
+    )
+
+
+def single_literals(graph: _Graph | None = None) -> dict[str, object]:
+    """``module.def(param)`` -> value, for each parameter (defaulted or
+    required) of a package def that every program call sets to the same
+    int, float or bool literal; a call that omits a defaulted parameter
+    sets its default.  A def no program call makes has no values, and the
+    defs ``unset_options`` skips are skipped here too."""
+    graph = graph or _graph()
+    defs, _, values, exempt = option_uses(graph)
+    out = {}
+    for key, label, d in _checked_defs(graph, defs, exempt):
+        for name in d.defaults:
+            seen = values.get((*key, name), set())
+            if len(seen) == 1 and None not in seen:
+                out[f"{label}({name})"] = next(iter(seen))[1]
+    return dict(sorted(out.items()))
 
 
 def keep_option_faults(unset: list[str], keep: dict[str, str]) -> list[str]:
@@ -536,46 +618,93 @@ def test_every_option_has_a_program_value():
     )
 
 
+def test_every_numeric_parameter_takes_more_than_one_value():
+    fixed = {o: v for o, v in single_literals().items() if o not in KEEP_OPTIONS}
+    assert not fixed, (
+        "parameters every program call sets to one literal; delete each and "
+        "write its value at the use site, or KEEP_OPTIONS it with a reason:\n  "
+        + "\n  ".join(f"{o} = {v!r}" for o, v in fixed.items())
+    )
+
+
 def test_keep_options_are_needed_and_carry_a_reason():
-    faults = keep_option_faults(unset_options(), KEEP_OPTIONS)
+    flagged = unset_options() + list(single_literals())
+    faults = keep_option_faults(flagged, KEEP_OPTIONS)
     assert not faults, "\n  ".join(["stale or unexplained KEEP_OPTIONS:", *faults])
 
 
+def test_every_module_constant_is_read():
+    unread = unread_constants()
+    assert not unread, (
+        "module constants only tests (or nothing) read; delete each, or "
+        "KEEP it with a reason:\n  " + "\n  ".join(unread)
+    )
+
+
 _SELF_TEST_SOURCE = """
+USED = 0
+UNREAD = 1
+
 def by_keyword(x, a=1): ...
 def by_position(x, a=1): ...
 def forwarded(x, a=1): ...
 def as_value(x, a=1): ...
 def nobody(x, a=1, *, b=2): ...
+def one_literal(x, n): ...
+def two_literals(x, n): ...
+def not_literal(x, n=3): ...
+def default_and_other(x, n=3): ...
 
 class Store:
     def get(self, key, default=None): ...
 
-def program(kwargs, store):
-    by_keyword(0, a=2)
-    by_position(0, 2)
-    forwarded(0, **kwargs)
+def program(kwargs, store, x):
+    by_keyword(x, a=x)
+    by_position(x, x)
+    forwarded(x, **kwargs)
     register(as_value)
-    nobody(0)
-    store.get("k", 3)
+    nobody(x)
+    store.get("k", x)
+    one_literal(x, 5)
+    one_literal(x, n=5)
+    two_literals(x, 5)
+    two_literals(x, 6)
+    not_literal(x, 3)
+    not_literal(x, n=USED)
+    default_and_other(x)
+    default_and_other(x, n=4)
 """
+_SELF_TEST_ROOT = "from covid19_spark._option_gate_probe import program\nprogram()\n"
 
 
 def test_option_gate_self_test():
-    """The option check on a planted module: a keyword pass, a positional
-    pass (a method's ``self`` skipped) and a ``**kwargs`` forward count as
-    set, a def used as a value is exempt, an option nobody passes fails,
-    and a keep entry that names no unset option is a fault."""
+    """The option checks on a planted module.  Unset options: a keyword
+    pass, a positional pass (a method's ``self`` skipped) and a
+    ``**kwargs`` forward count as set, a def used as a value is exempt, an
+    option nobody passes fails.  Single literals: one literal at every call
+    (an omitted default included) fails; two literals, a non-literal
+    argument, or an omitted default plus another literal pass.  A keep
+    entry that names nothing flagged is a fault.  Constants: one only the
+    unreached code reads fails."""
     planted = _Module(ROOT / PACKAGE / "_option_gate_probe.py", _SELF_TEST_SOURCE)
-    graph = _Graph(modules=[planted], roots=[])
+    root = _Module(ROOT / "tools" / "_option_gate_root.py", _SELF_TEST_ROOT)
+    graph = _Graph(modules=[planted], roots=[root])
     unset = unset_options(graph)
     assert unset == ["_option_gate_probe.nobody(a)", "_option_gate_probe.nobody(b)"]
+    literals = single_literals(graph)
+    assert literals == {
+        "_option_gate_probe.nobody(a)": 1,
+        "_option_gate_probe.nobody(b)": 2,
+        "_option_gate_probe.one_literal(n)": 5,
+    }
     keep = {
         "_option_gate_probe.nobody(a)": "test reaches the probe",
+        "_option_gate_probe.one_literal(n)": "deployment setting: the probe",
         "_option_gate_probe.by_keyword(a)": "test reaches the probe",
         "_option_gate_probe.nobody(b)": "because",
     }
-    assert keep_option_faults(unset, keep) == [
+    assert keep_option_faults(unset + list(literals), keep) == [
         "_option_gate_probe.by_keyword(a): set by a program call or gone; drop it",
         "_option_gate_probe.nobody(b): reason 'because'",
     ]
+    assert unread_constants(graph, keep={}) == ["_option_gate_probe.UNREAD"]

@@ -94,31 +94,14 @@ def test_mmr_suppresses_redundant_candidate(spark):
         (0, q),                         # the query itself (excluded)
         (1, [1.0, 0.1, 0.0, 0.0]),      # best match
         (2, [1.0, 0.11, 0.0, 0.0]),     # near-duplicate of 1
-        (3, [1.0, 0.0, 0.3, 0.0]),      # diverse, still relevant
+        (3, [1.0, 0.0, 0.13, 0.0]),     # diverse, a little less relevant than 2
     ]
     emb = _emb(spark, rows)
-    out = mmr_rerank(
-        emb, emb.filter("vec_id = 0"), k=3, shortlist=10, lam=0.5
-    ).collect()
+    out = mmr_rerank(emb, emb.filter("vec_id = 0")).collect()
     order = [r.doc_id for r in sorted(out, key=lambda r: r.mmr_rank)]
     assert order[0] == 1
     assert order[1] == 3  # NOT the near-duplicate 2
     assert order[2] == 2
-
-
-def test_mmr_lambda_one_is_pure_relevance(spark):
-    """λ=1 disables the diversity penalty: selection order == cosine rank."""
-    from covid19_spark.operators.retrieval import mmr_rerank
-    from covid19_spark.operators.similarity import cosine_topk
-
-    rows = [(i, [float(i + 1), 1.0, float((i * 7) % 5)]) for i in range(8)]
-    emb = _emb(spark, rows)
-    queries = emb.filter("vec_id = 0")
-    mmr = mmr_rerank(emb, queries, k=5, shortlist=7, lam=1.0).collect()
-    ranked = cosine_topk(emb, queries, k=5).collect()
-    assert [r.doc_id for r in sorted(mmr, key=lambda r: r.mmr_rank)] == [
-        r.neighbor_id for r in sorted(ranked, key=lambda r: r.rank)
-    ]
 
 
 def test_mmr_emits_min_of_k_and_candidates(spark):
@@ -126,19 +109,9 @@ def test_mmr_emits_min_of_k_and_candidates(spark):
 
     rows = [(i, [1.0, float(i)]) for i in range(4)]
     emb = _emb(spark, rows)
-    out = mmr_rerank(emb, emb.filter("vec_id = 0"), k=10, shortlist=20).collect()
-    assert len(out) == 3  # corpus minus self
+    out = mmr_rerank(emb, emb.filter("vec_id = 0")).collect()
+    assert len(out) == 3  # corpus minus self, fewer than the 8 picks
     assert sorted(r.mmr_rank for r in out) == [1, 2, 3]
-
-
-def test_mmr_lam_guard(spark):
-    import pytest
-
-    from covid19_spark.operators.retrieval import mmr_rerank
-
-    emb = _emb(spark, [(0, [1.0])])
-    with pytest.raises(ValueError, match="lam"):
-        mmr_rerank(emb, emb, lam=1.5)
 
 
 def _mk_index(spark, tmp_path):
@@ -182,7 +155,7 @@ def test_bm25_topk_multi_matches_single_query(spark, tmp_path):
         ],
         "query_id long, terms array<string>",
     )
-    got = bm25_topk_multi(spark, idx, queries, k=3).collect()
+    got = bm25_topk_multi(spark, idx, queries).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
@@ -192,7 +165,7 @@ def test_bm25_topk_multi_matches_single_query(spark, tmp_path):
         ((r.doc_id, r.score) for r in
          bm25_scores_from_index(spark, idx, ["spark", "hash"]).collect()),
         key=lambda x: (-x[1], x[0]),
-    )[:3]
+    )[:10]
     assert [(d, s) for _, d, s in by_q[10]] == [(d, s) for d, s in want_10]
     assert by_q[10] == by_q[12]  # identical queries, identical answers
     assert [d for _, d, _ in by_q[11]] == [2]  # only doc 2 has "window"
@@ -488,10 +461,9 @@ def test_prefix_expand_cap_and_equivalence(spark, tmp_path):
 
 
 def test_dismax_best_field_and_tiebreak(spark, tmp_path):
-    """DisMax semantics hand-pinned: docs A (term in title only) and B
-    (term in title AND body, same title) — at tie_break=0 the body echo
-    adds NOTHING (scores equal: best-field-wins), at tie_break>0 it
-    does; tie_break=1 degenerates to the per-field kernel SUM."""
+    """DisMax semantics: docs A (term in title only) and B (term in title
+    AND body, same title) — the body echo of B adds 0.3 of its kernel, so
+    B outscores A; a doc without the term scores nothing."""
     from covid19_spark.operators.retrieval import dismax_scores_from_index
     from covid19_spark.sources.index import (
         build_fielded_index_from, read_fielded_index,
@@ -512,25 +484,12 @@ def test_dismax_best_field_and_tiebreak(spark, tmp_path):
     idx = read_fielded_index(spark, path)
     w = {"title": 1.0, "body": 1.0}
 
-    def scores(tie):
-        return {
-            r.doc_id: r.score
-            for r in dismax_scores_from_index(
-                spark, idx, ["x"], weights=w, tie_break=tie
-            ).collect()
-        }
-
-    s0 = scores(0.0)
-    # same title, same title-field dl → identical best-field kernels; the
-    # body echo is suppressed entirely
-    assert s0[1] == s0[2]
-    s5 = scores(0.5)
-    assert s5[2] > s5[1]  # echo now contributes
-    # tie_break=1: dmax = mx + (sm - mx) = sm — the kernel sum; B gains
-    # exactly the body kernel over A (both idf-scaled identically)
-    s1 = scores(1.0)
-    assert s1[2] > s5[2] > s0[2]
-    assert s1[1] == s0[1]  # single-field doc indifferent to tie_break
+    got = {
+        r.doc_id: r.score
+        for r in dismax_scores_from_index(spark, idx, ["x"], weights=w).collect()
+    }
+    assert set(got) == {1, 2}
+    assert got[2] > got[1]  # the body echo contributes
 
 
 def test_dismax_single_field_equals_bm25f_and_plain(spark, tmp_path):
@@ -564,10 +523,6 @@ def test_dismax_guards(spark, tmp_path):
     _, fidx, _, _ = _bm25f_env(spark, tmp_path)
     with pytest.raises(ValueError, match="at least one"):
         dismax_scores_from_index(spark, fidx, ["spark"], weights={})
-    with pytest.raises(ValueError, match="tie_break"):
-        dismax_scores_from_index(
-            spark, fidx, ["spark"], weights={"title": 1.0}, tie_break=1.5
-        )
     with pytest.raises(ValueError, match="absent"):
         dismax_scores_from_index(
             spark, fidx, ["spark"], weights={"headline": 1.0}

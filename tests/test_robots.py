@@ -140,7 +140,7 @@ def test_politeness_schedule_slots_and_group_preference(spark):
     )
     rows = {
         r.id: r
-        for r in politeness_schedule(urls, delays, "Crawler", default_delay_s=1.0).collect()
+        for r in politeness_schedule(urls, delays, "Crawler").collect()
     }
     # agent group (0.5s) preempts the punitive '*' 10s
     assert [rows[i].slot for i in (1, 2, 3)] == [0, 1, 2]

@@ -65,12 +65,10 @@ def _clustered(spark, n_clusters=8, per_cluster=40, dim=16, noise=0.15):
 
 
 def test_ann_recall_on_clustered_data(spark):
-    emb = _clustered(spark)
+    emb = _clustered(spark, dim=64, noise=0.075)
     queries = emb.filter("vec_id IN (0, 40, 80, 120)")
     exact = cosine_topk(emb, queries, k=10).collect()
-    approx = ann_cosine_topk(
-        emb, queries, k=10, dim=16, num_planes=8, num_tables=4
-    ).collect()
+    approx = ann_cosine_topk(emb, queries, num_planes=8, num_tables=4).collect()
     exact_sets, approx_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -85,13 +83,13 @@ def test_ann_recall_on_clustered_data(spark):
 
 def test_ann_sims_are_exact_for_returned_pairs(spark):
     """ANN returns true cosine values (only the candidate set is approximate)."""
-    emb = _clustered(spark, n_clusters=4, per_cluster=20)
+    emb = _clustered(spark, n_clusters=4, per_cluster=20, dim=64, noise=0.075)
     queries = emb.filter("vec_id IN (0, 20)")
     exact = {
         (r.query_id, r.neighbor_id): r.sim
         for r in cosine_topk(emb, queries, k=80).collect()
     }
-    for r in ann_cosine_topk(emb, queries, k=5, dim=16, num_planes=8, num_tables=2).collect():
+    for r in ann_cosine_topk(emb, queries, num_planes=8, num_tables=2).collect():
         key = (r.query_id, r.neighbor_id)
         if key in exact:
             assert abs(r.sim - exact[key]) < 1e-12
@@ -130,7 +128,7 @@ def test_ivf_recall_vs_exact(spark):
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.01")
     queries = emb.filter("vec_id < 8")
     exact = cosine_topk(emb, queries, k=10)
-    approx = ivf_cosine_topk(emb, queries, k=10, n_centroids=16, n_probes=3)
+    approx = ivf_cosine_topk(emb, queries)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -139,7 +137,7 @@ def test_ivf_recall_vs_exact(spark):
     assert recall >= 0.5, recall
     # determinism: same seeds, same result
     a2 = {(r.query_id, r.neighbor_id)
-          for r in ivf_cosine_topk(emb, queries, k=10, n_centroids=16, n_probes=3).collect()}
+          for r in ivf_cosine_topk(emb, queries).collect()}
     assert a == a2
 
 
@@ -148,12 +146,12 @@ def test_ivf_centroids_deterministic_and_refined(spark):
     from covid19_spark.sources.tables import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    c1 = ivf_train_centroids(emb, 8, iterations=1)
+    c1 = ivf_train_centroids(emb, 8)
     assert c1.count() == 8
     vals1 = sorted((r.centroid_id, tuple(r.cvec)) for r in c1.collect())
     vals2 = sorted(
         (r.centroid_id, tuple(r.cvec))
-        for r in ivf_train_centroids(emb, 8, iterations=1).collect()
+        for r in ivf_train_centroids(emb, 8).collect()
     )
     assert vals1 == vals2  # fully deterministic, no RNG
     # every corpus vector lands in exactly one list with 1 probe
@@ -181,7 +179,7 @@ def test_semantic_dedup_hand_clusters(spark):
     ]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = semantic_dedup(
-        corpus, "vec_id", "embedding", threshold=0.99,
+        corpus, "vec_id", "embedding",
         assignment=_inline_assignment(corpus, 2),
     )
     got = {r["vec_id"]: (r["cluster_id"], r["cluster_size"], r["is_canonical"])
@@ -226,31 +224,31 @@ def test_semantic_dedup_cached_assignment_bit_identical(spark, tmp_path):
     path = str(tmp_path / "semassign")
 
     with _pytest.raises(ValueError, match="fingerprint"):
-        ensure_semantic_assignment(corpus, path, "", n_centroids=2)
+        ensure_semantic_assignment(corpus, path, "")
 
-    assignment = ensure_semantic_assignment(corpus, path, "fp1", n_centroids=2)
+    assignment = ensure_semantic_assignment(corpus, path, "fp1")
     marker = os.path.getmtime(f"{path}/meta")
-    # fingerprint + params match: no rebuild, and no Spark job
+    # fingerprint matches: no rebuild, and no Spark job
     j0 = measure.next_job_id(spark)
-    ensure_semantic_assignment(corpus, path, "fp1", n_centroids=2)
+    ensure_semantic_assignment(corpus, path, "fp1")
     assert measure.next_job_id(spark) - j0 == 0
     assert os.path.getmtime(f"{path}/meta") == marker
     for policy in ("min_id", "low_centroid_sim"):
         got = sorted(
             tuple(r) for r in semantic_dedup(
-                corpus, "vec_id", "embedding", threshold=0.99,
+                corpus, "vec_id", "embedding",
                 keep_policy=policy, assignment=assignment,
             ).collect()
         )
         want = sorted(
             tuple(r) for r in semantic_dedup(
-                corpus, "vec_id", "embedding", threshold=0.99,
-                keep_policy=policy, assignment=_inline_assignment(corpus, 2),
+                corpus, "vec_id", "embedding",
+                keep_policy=policy, assignment=_inline_assignment(corpus, 8),
             ).collect()
         )
         assert got == want
-    # param change under the same fingerprint: rebuild
-    ensure_semantic_assignment(corpus, path, "fp1", n_centroids=3)
+    # fingerprint change: rebuild
+    ensure_semantic_assignment(corpus, path, "fp2")
     assert os.path.getmtime(f"{path}/meta") > marker
 
 
@@ -261,7 +259,7 @@ def test_pq_recall_vs_exact_and_determinism(spark):
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.01")
     queries = emb.filter("vec_id < 8")
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, queries, k=10).collect()}
-    approx = pq_cosine_topk(emb, queries, k=10, m=8, n_codes=16, shortlist=50)
+    approx = pq_cosine_topk(emb, queries)
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(exact & a) / len(exact)
     # 8-byte codes + 50-candidate rerank: recall must beat any shortlist-
@@ -269,7 +267,7 @@ def test_pq_recall_vs_exact_and_determinism(spark):
     assert recall >= 0.6, recall
     a2 = {
         (r.query_id, r.neighbor_id)
-        for r in pq_cosine_topk(emb, queries, k=10, m=8, n_codes=16, shortlist=50).collect()
+        for r in pq_cosine_topk(emb, queries).collect()
     }
     assert a == a2
     # reported sims are the EXACT cosine of the reranked pairs
@@ -302,9 +300,7 @@ def test_ivfpq_recall_and_determinism(spark):
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.01")
     queries = emb.filter("vec_id < 8")
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, queries, k=10).collect()}
-    approx = ivfpq_cosine_topk(
-        emb, queries, k=10, n_centroids=16, n_probes=3, m=8, n_codes=16, shortlist=50
-    )
+    approx = ivfpq_cosine_topk(emb, queries)
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     # composed losses (3/16 probes AND 8-byte codes AND 50-shortlist) must
     # still beat the 3/16 ≈ 0.19 probe-only random floor decisively
@@ -312,9 +308,7 @@ def test_ivfpq_recall_and_determinism(spark):
     assert recall >= 0.5, recall
     a2 = {
         (r.query_id, r.neighbor_id)
-        for r in ivfpq_cosine_topk(
-            emb, queries, k=10, n_centroids=16, n_probes=3, m=8, n_codes=16, shortlist=50
-        ).collect()
+        for r in ivfpq_cosine_topk(emb, queries).collect()
     }
     assert a == a2
 
@@ -341,12 +335,12 @@ def test_pq_sample_trained_codebooks(spark):
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, queries, k=10).collect()}
     a = {
         (r.query_id, r.neighbor_id)
-        for r in pq_cosine_topk(emb, queries, k=10, shortlist=50, train_sample_mod=2).collect()
+        for r in pq_cosine_topk(emb, queries, train_sample_mod=2).collect()
     }
     assert len(exact & a) / len(exact) >= 0.4
     a2 = {
         (r.query_id, r.neighbor_id)
-        for r in pq_cosine_topk(emb, queries, k=10, shortlist=50, train_sample_mod=2).collect()
+        for r in pq_cosine_topk(emb, queries, train_sample_mod=2).collect()
     }
     assert a == a2
 
@@ -376,9 +370,7 @@ def test_pq_handles_non_unit_norm_corpus(spark):
     }
     a = {
         (r.query_id, r.neighbor_id)
-        for r in pq_cosine_topk(
-            scaled, queries, k=10, m=8, n_codes=16, shortlist=50
-        ).collect()
+        for r in pq_cosine_topk(scaled, queries).collect()
     }
     recall = len(exact & a) / len(exact)
     assert recall >= 0.6, recall
@@ -431,11 +423,11 @@ def test_semantic_dedup_paper_keep_policy(spark):
     base = {
         r["vec_id"]: (r["cluster_id"], r["cluster_size"])
         for r in semantic_dedup(
-            corpus, "vec_id", "embedding", threshold=0.99, assignment=assignment
+            corpus, "vec_id", "embedding", assignment=assignment
         ).collect()
     }
     out = semantic_dedup(
-        corpus, "vec_id", "embedding", threshold=0.99,
+        corpus, "vec_id", "embedding",
         keep_policy="low_centroid_sim", assignment=assignment,
     )
     got = {r["vec_id"]: (r["cluster_id"], r["cluster_size"], r["is_canonical"]) for r in out.collect()}
@@ -459,23 +451,14 @@ def test_semantic_dedup_paper_keep_policy(spark):
 
 
 def test_lloyd_early_exit_records_rounds_and_matches_full_run(spark):
-    """VERDICT r06 task #5: with iterations > 1 both trainers stop at the
-    assignment fixed point and produce EXACTLY the centroids/codebooks a
-    longer run gives (IVF) or a run pinned to the recorded round count
-    gives (PQ) — the early exit skips only provably-redundant updates."""
-    from covid19_spark.operators.similarity import (
-        ivf_train_centroids,
-        pq_train_codebooks,
-    )
+    """VERDICT r06 task #5: with iterations > 1 the PQ trainer stops at the
+    assignment fixed point and produces EXACTLY the codebooks a run pinned
+    to the recorded round count gives — the early exit skips only
+    provably-redundant updates."""
+    from covid19_spark.operators.similarity import pq_train_codebooks
     from covid19_spark.sources.tables import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-
-    cents = ivf_train_centroids(emb, 8, iterations=12)
-    got = sorted((r.centroid_id, tuple(r.cvec)) for r in cents.collect())
-    # converged before round 12: a longer budget stops at the same fixed point
-    extra = ivf_train_centroids(emb, 8, iterations=13)
-    assert got == sorted((r.centroid_id, tuple(r.cvec)) for r in extra.collect())
 
     pq_rounds = []
     cbs = pq_train_codebooks(emb, m=8, k=8, iterations=12, rounds_out=pq_rounds)
@@ -620,13 +603,13 @@ def test_pq_driver_fit_default_matches_distributed_trainer_results(spark):
     queries = emb.filter("vec_id < 5")
     default = [
         (r.query_id, r.rank, r.neighbor_id)
-        for r in pq_cosine_topk(emb, queries, k=8, shortlist=40)
+        for r in pq_cosine_topk(emb, queries)
         .orderBy("query_id", "rank").collect()
     ]
     dist_cb = pq_train_codebooks(emb, 8, 16)
     seam = [
         (r.query_id, r.rank, r.neighbor_id)
-        for r in pq_cosine_topk(emb, queries, k=8, shortlist=40, codebooks=dist_cb)
+        for r in pq_cosine_topk(emb, queries, codebooks=dist_cb)
         .orderBy("query_id", "rank").collect()
     ]
     assert default == seam
@@ -640,7 +623,7 @@ def test_pq_default_plan_has_no_checkpoint_barrier(spark):
     from covid19_spark.sources.tables import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    out = pq_cosine_topk(emb, emb.filter("vec_id < 3"), k=5)
+    out = pq_cosine_topk(emb, emb.filter("vec_id < 3"))
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Checkpoint" not in plan and "ExistingRDD" not in plan, plan
 
@@ -654,7 +637,7 @@ def test_sq8_recall_and_hand_quantizer(spark):
     emb = _clustered(spark)
     queries = emb.filter("vec_id IN (0, 40, 80, 120)")
     exact = cosine_topk(emb, queries, k=10).collect()
-    approx = sq8_topk(emb, queries, k=10, shortlist=50).collect()
+    approx = sq8_topk(emb, queries).collect()
     exact_sets, approx_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)

@@ -16,7 +16,7 @@ def test_salted_join_matches_plain_join(spark):
         ["k", "label"],
     )
     plain = big.join(small, "k").select("row_id", "k", "v", "label")
-    salted = salted_join(big, small, ["k"], salt_source="row_id", buckets=8).select(
+    salted = salted_join(big, small, ["k"], salt_source="row_id").select(
         "row_id", "k", "v", "label"
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))

@@ -1,8 +1,8 @@
 """Duplicated-substring span dedup (operators/spans.py).
 
 Hand-built corpus with a known shared 8-token run, so expected spans are
-derivable on paper. k=4 throughout: the shared run "a b c d e f g h"
-contributes windows at d1 pos 1..5 and d2 pos 3..7.
+derivable on paper. Windows are 8 tokens: the shared run "a b c d e f g h"
+contributes one window, at d1 pos 1 and d2 pos 3.
 """
 
 import pytest
@@ -24,49 +24,49 @@ def docs(spark):
 
 
 def test_kgram_stream_counts_and_positions(spark, docs):
-    g = kgram_stream(docs, k=4)
-    # windows per doc: max(len - k + 1, 0): 7, 8, 2, 0
+    g = kgram_stream(docs)
+    # windows per doc: max(len - 8 + 1, 0): 3, 4, 0, 0
     counts = {r["doc_id"]: r["n"] for r in g.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
-    assert counts == {1: 7, 2: 8, 3: 2}
+    assert counts == {1: 3, 2: 4}
     # identical windows hash identically across docs
     h1 = {r["pos"]: r["kh"] for r in g.filter("doc_id = 1").collect()}
     h2 = {r["pos"]: r["kh"] for r in g.filter("doc_id = 2").collect()}
-    assert all(h1[i] == h2[i + 2] for i in range(1, 6))
+    assert h1[1] == h2[3] and h1[2] != h2[4]
 
 
 def test_duplicated_spans_merge(spark, docs):
-    spans = duplicated_spans(docs, k=4).orderBy("doc_id").collect()
+    spans = duplicated_spans(docs).orderBy("doc_id").collect()
     got = [(r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"]) for r in spans]
     assert got == [(1, 1, 8, 8), (2, 3, 10, 8)]
 
 
 def test_keep_first_exempts_min_doc(spark, docs):
-    """The keep-one policy ``span_dedup(keep_first=True)`` strips by."""
+    """The keep-one policy ``span_dedup`` strips by."""
     from covid19_spark.operators.spans import _spans_from_grams
 
-    spans = _spans_from_grams(kgram_stream(docs, k=4), "doc_id", 4, 2, True).collect()
+    spans = _spans_from_grams(kgram_stream(docs), "doc_id", True).collect()
     got = [(r["doc_id"], r["span_start"], r["span_end"]) for r in spans]
     assert got == [(2, 3, 10)]
 
 
 def test_two_islands_do_not_merge_across_gap(spark):
-    # shared run A at pos 1-4 and shared run B at pos 10-13; gap of 5 unique
-    # tokens (> k) between them, so two separate spans in doc 1.
+    # shared run A at pos 1-8 and shared run B at pos 18-25; gap of 9 unique
+    # tokens (> 8) between them, so two separate spans in doc 1.
     rows = [
-        (1, "p q r s u1 u2 u3 u4 u5 w x y z"),
-        (2, "p q r s later tokens differ"),
-        (3, "other head w x y z"),
+        (1, "p q r s t u v w u1 u2 u3 u4 u5 u6 u7 u8 u9 a b c d e f g h"),
+        (2, "p q r s t u v w later tokens differ"),
+        (3, "other head a b c d e f g h"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = [
         (r["doc_id"], r["span_start"], r["span_end"])
-        for r in duplicated_spans(df, k=4).orderBy("doc_id", "span_start").collect()
+        for r in duplicated_spans(df).orderBy("doc_id", "span_start").collect()
     ]
-    assert got == [(1, 1, 4), (1, 10, 13), (2, 1, 4), (3, 3, 6)]
+    assert got == [(1, 1, 8), (1, 18, 25), (2, 1, 8), (3, 3, 10)]
 
 
 def test_span_dedup_strip_and_stats(spark, docs):
-    out = {r["doc_id"]: r for r in span_dedup(docs, k=4).collect()}
+    out = {r["doc_id"]: r for r in span_dedup(docs).collect()}
     # doc 1 is the canonical (min-id) owner: untouched
     assert out[1]["text"] == "a b c d e f g h i j"
     assert out[1]["dup_tokens"] == 0 and out[1]["n_spans"] == 0
@@ -79,21 +79,15 @@ def test_span_dedup_strip_and_stats(spark, docs):
     assert out[4]["text"] == "tiny"
 
 
-def test_span_dedup_keep_none_strips_everywhere(spark, docs):
-    out = {r["doc_id"]: r["text"] for r in span_dedup(docs, k=4, keep_first=False).collect()}
-    assert out[1] == "i j"
-    assert out[2] == "x y z"
-
-
 def test_detection_is_exact_for_long_duplicates(spark):
-    # any duplicated run of >= k tokens is fully covered: random-ish filler
+    # any duplicated run of >= 8 tokens is fully covered: random-ish filler
     # around an injected 12-token passage in 3 docs.
     passage = " ".join(f"dup{i}" for i in range(12))
     rows = [
         (i, f"head{i}a head{i}b {passage} tail{i}a tail{i}b") for i in range(1, 4)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    spans = duplicated_spans(df, k=8).collect()
+    spans = duplicated_spans(df).collect()
     assert len(spans) == 3
     for r in spans:
         assert (r["span_start"], r["span_end"]) == (3, 14)
@@ -110,8 +104,8 @@ def test_materialize_equals_lazy(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for fn, lazy_fn in (
-        (duplicated_spans, lambda d: _duplicated_spans_with_handle(d, 8, 2)),
-        (span_dedup, lambda d: _span_dedup_with_handle(d, 8, 2, True)),
+        (duplicated_spans, _duplicated_spans_with_handle),
+        (span_dedup, _span_dedup_with_handle),
     ):
         frame, caches = lazy_fn(docs)
         lazy = sorted(tuple(r) for r in frame.collect())

@@ -77,7 +77,7 @@ def test_materialize_districts_and_dimensions(store_env):
     m.refresh_dimension(zones, "zones")
 
     r = StoreReader(spark, d)
-    dd = {x["district"]: x for x in r.district_stats_for("Maharashtra")}
+    dd = {x["district"]: x for x in r.rows("districtwise_delta", state="Maharashtra")}
     assert dd["Mumbai"]["confirmed"] == 40 and dd["Mumbai"]["delta_confirmed"] == 12
     assert dd["Nagpur"]["confirmed"] == 17
 

@@ -199,10 +199,8 @@ def test_user_request_round_trip_over_emulated_topics(env):
     tests."""
     from pyspark.sql import functions as F
 
-    from covid19_spark.serving.requests import (
-        USER_REQUEST_SCHEMA,
-        serve_user_requests_stream,
-    )
+    from covid19_spark.schemas import USER_REQUEST
+    from covid19_spark.serving.requests import serve_user_requests_stream
     from covid19_spark.serving.stores import Materializer
     from covid19_spark.sources.kafka import emulated_topic_sink, read_emulated_topic
 
@@ -225,7 +223,7 @@ def test_user_request_round_trip_over_emulated_topics(env):
     # produce: two bot commands land on the request topic (S5 point write)
     emulated_topic_sink(req_topic, F.col("chatId"))(
         spark.createDataFrame(
-            [("chat-1", "Summary"), ("chat-2", "Today")], USER_REQUEST_SCHEMA
+            [("chat-1", "Summary"), ("chat-2", "Today")], USER_REQUEST
         ),
         0,
     )

@@ -68,7 +68,7 @@ def test_tfidf_top_terms_hand_case(spark):
         [(1, "apple banana apple"), (2, "banana cherry"), (3, "durian durian banana")],
         "doc_id long, text string",
     )
-    out = tf_idf_top_terms(docs, "doc_id", "text", top_n=2)
+    out = tf_idf_top_terms(docs, "doc_id", "text")
     rows = {(r["doc_id"], r["rank"]): r for r in out.collect()}
     # doc 1: apple tf=2 df=1 -> 2*(4/2)=4.0 beats banana tf=1 df=3 -> 1.0
     assert rows[(1, 1)]["term"] == "apple" and rows[(1, 1)]["score"] == 4.0
@@ -80,32 +80,28 @@ def test_tfidf_top_terms_hand_case(spark):
 
 
 def test_chunk_documents_hand_case_and_coverage(spark):
-    import pytest as _pytest
-
     from covid19_spark.operators.text import chunk_documents
 
-    words = [f"w{i}" for i in range(10)]
+    words = [f"w{i}" for i in range(40)]
     docs = spark.createDataFrame(
         [
-            (1, " ".join(words)),  # 10 tokens
+            (1, " ".join(words)),  # 40 tokens
             (2, "a b c"),  # shorter than one chunk
             (3, ""),  # empty -> no chunks
             (4, "solo"),  # single token
         ],
         "doc_id long, text string",
     )
-    out = chunk_documents(docs, "doc_id", "text", chunk_tokens=4, overlap_tokens=2)
+    out = chunk_documents(docs, "doc_id", "text")
     rows = sorted(
         (r["doc_id"], r["chunk_id"], r["chunk_text"], r["chunk_n_tokens"])
         for r in out.collect()
     )
-    # doc 1, stride 2: starts 0,2,4,6 kept (s+2 < 10), s=8 dropped (8+2 >= 10,
+    # doc 1, stride 16: starts 0,16 kept (s+16 < 40), s=32 dropped (32+16 >= 40,
     # window fully inside previous chunk's coverage)
     assert rows == [
-        (1, 0, "w0 w1 w2 w3", 4),
-        (1, 1, "w2 w3 w4 w5", 4),
-        (1, 2, "w4 w5 w6 w7", 4),
-        (1, 3, "w6 w7 w8 w9", 4),
+        (1, 0, " ".join(words[:32]), 32),
+        (1, 1, " ".join(words[16:]), 24),
         (2, 0, "a b c", 3),
         (4, 0, "solo", 1),
     ]
@@ -113,23 +109,18 @@ def test_chunk_documents_hand_case_and_coverage(spark):
     # (reconstruct token positions covered by each chunk)
     covered = {}
     for doc_id, chunk_id, _text, n in rows:
-        s = chunk_id * 2
+        s = chunk_id * 16
         covered.setdefault(doc_id, set()).update(range(s, s + n))
-    assert covered[1] == set(range(10))
+    assert covered[1] == set(range(40))
     assert covered[2] == set(range(3))
     assert covered[4] == {0}
-
-    with _pytest.raises(ValueError, match="chunk_tokens"):
-        chunk_documents(docs, "doc_id", "text", 0)
-    with _pytest.raises(ValueError, match="overlap"):
-        chunk_documents(docs, "doc_id", "text", 4, 4)
 
 
 def test_chunk_documents_is_map_only(spark):
     from covid19_spark.operators.text import chunk_documents
 
     docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
-    plan = chunk_documents(docs, "doc_id", "text", 4, 2)._jdf.queryExecution(
+    plan = chunk_documents(docs, "doc_id", "text")._jdf.queryExecution(
     ).executedPlan().toString()
     assert "Exchange" not in plan  # chunking must never shuffle
 

@@ -26,7 +26,7 @@ def test_md5_bucket_matches_duckdb_and_python(spark):
 
     vals = ["spark", "hash", "a", "", "Straße", "0"]
     df = spark.createDataFrame([(v,) for v in vals], "t string")
-    got = {r.t: r.b for r in df.select("t", md5_bucket(F.col("t"), 32).alias("b")).collect()}
+    got = {r.t: r.b for r in df.select("t", md5_bucket(F.col("t")).alias("b")).collect()}
     con = duckdb.connect()
     for v in vals:
         (b,) = con.execute(
@@ -60,7 +60,7 @@ def _toy(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
     labels = docs.select("doc_id", "y")
     feats = with_intercept(
-        count_features(docs, "doc_id", "text", 8), labels, "doc_id", 8
+        count_features(docs, "doc_id", "text"), labels, "doc_id"
     )
     return docs, feats, labels
 
@@ -70,23 +70,23 @@ def test_distributed_training_equals_python_replay(spark):
     recurrence produce IDENTICAL integer weights — the reproducibility
     claim the oracle also checks cross-engine."""
     docs, feats, labels = _toy(spark)
-    w_spark = train_quantized_lr(feats, labels, "doc_id", 9)
+    w_spark = train_quantized_lr(feats, labels, "doc_id")
 
     fd = defaultdict(dict)
     for r in feats.collect():
         fd[r.doc_id][r.bucket] = r.cnt
     y = {r.doc_id: r.y for r in labels.collect()}
     n = len(y)
-    w = [0] * 9
+    w = [0] * 33
     for _ in range(6):
-        grad = [0] * 9
+        grad = [0] * 33
         for did, c in fd.items():
             z = sum(cnt * w[b] for b, cnt in c.items())
             p = min(SCALE, max(0, SCALE // 2 + math.floor(z / 4.0)))
             r = p - y[did] * SCALE
             for b, cnt in c.items():
                 grad[b] += cnt * r
-        for b in range(9):
+        for b in range(33):
             w[b] -= math.floor(grad[b] / float(64 * n))
     assert w_spark == w
 
@@ -100,9 +100,9 @@ def test_training_learns_the_gate(spark):
         "doc_id", (F.col("n_chars") >= 300).cast("int").alias("y")
     ).localCheckpoint(eager=True)
     feats = with_intercept(
-        count_features(docs, "doc_id", "text", 32), labels, "doc_id", 32
+        count_features(docs, "doc_id", "text"), labels, "doc_id"
     ).localCheckpoint(eager=True)
-    w = train_quantized_lr(feats, labels, "doc_id", 33)
+    w = train_quantized_lr(feats, labels, "doc_id")
     out = score_quantized_lr(feats, labels, "doc_id", w)
     r = out.agg(
         F.avg((F.col("pred") == F.col("y")).cast("double")).alias("acc"),
@@ -128,4 +128,4 @@ def test_empty_labels_guard(spark):
     feats = spark.createDataFrame([], "doc_id long, bucket long, cnt long")
     labels = spark.createDataFrame([], "doc_id long, y int")
     with pytest.raises(ValueError, match="empty label set"):
-        train_quantized_lr(feats, labels, "doc_id", 4)
+        train_quantized_lr(feats, labels, "doc_id")

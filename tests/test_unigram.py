@@ -23,7 +23,7 @@ def _corpus(spark, texts):
 
 def test_viterbi_prefers_high_probability_pieces():
     logp = {"a": -3.0, "b": -3.0, "ab": -1.0, "abab": -5.0}
-    pieces, score = _viterbi("abab", logp, max_piece_len=4)
+    pieces, score = _viterbi("abab", logp)
     assert pieces == ["ab", "ab"]
     assert score == pytest.approx(-2.0)
 
@@ -31,25 +31,25 @@ def test_viterbi_prefers_high_probability_pieces():
 def test_viterbi_tie_prefers_longer_last_piece():
     # two segmentations with EXACTLY equal scores: ['ab','c'] vs ['a','bc']
     logp = {"a": -1.0, "ab": -1.0, "bc": -1.0, "c": -1.0, "b": -1.0}
-    pieces, _ = _viterbi("abc", logp, max_piece_len=2)
+    pieces, _ = _viterbi("abc", logp)
     # backward dp: last piece 'bc' (len 2) wins the tie over 'c' (len 1)
     assert pieces == ["a", "bc"]
 
 
 def test_viterbi_unknown_chars_fall_back_to_singletons():
     logp = {"x": -1.0}
-    pieces, score = _viterbi("xqx", logp, max_piece_len=3)
+    pieces, score = _viterbi("xqx", logp)
     assert pieces == ["x", "q", "x"]
     assert score == pytest.approx(-2.0 + UNK_LOGPROB)
 
 
 def test_round_trip_over_trained_corpus(spark):
     texts = ["the quick brown fox", "the slow brown dog", "quick quick fox"]
-    vocab = train_unigram(_corpus(spark, texts), vocab_size=40)
+    vocab = train_unigram(_corpus(spark, texts))
     logp = dict(vocab)
     for t in texts:
         for w in t.split(" "):
-            pieces, score = _viterbi(w, logp, max_piece_len=6)
+            pieces, score = _viterbi(w, logp)
             assert "".join(pieces) == w
             assert score > 10 * UNK_LOGPROB  # no fallback needed on train words
 
@@ -57,7 +57,7 @@ def test_round_trip_over_trained_corpus(spark):
 def test_training_is_deterministic(spark):
     texts = ["aluminium amalgam alabama", "alabama aluminium", "amalgam amalgam"]
     df = _corpus(spark, texts)
-    assert train_unigram(df, vocab_size=30) == train_unigram(df, vocab_size=30)
+    assert train_unigram(df) == train_unigram(df)
 
 
 def test_vocab_respects_size_and_keeps_all_chars(spark):
@@ -67,12 +67,12 @@ def test_vocab_respects_size_and_keeps_all_chars(spark):
         "abcdefg abcdefg bcdefgh cdefghi",
     ]
     chars = {c for t in texts for c in t if c != " "}
-    small = train_unigram(_corpus(spark, texts), vocab_size=len(chars) + 3)
+    small = train_unigram(_corpus(spark, texts))
     pieces = [p for p, _ in small]
     # every seen char survives pruning (coverage guarantee) ...
     assert chars <= set(pieces)
     # ... and the multi-char budget is respected
-    assert sum(1 for p in pieces if len(p) > 1) <= 3
+    assert sum(1 for p in pieces if len(p) > 1) <= 300 - len(chars)
     # logprobs are a (sub)distribution: all negative
     assert all(lp < 0 for _, lp in small)
 
@@ -80,14 +80,14 @@ def test_vocab_respects_size_and_keeps_all_chars(spark):
 def test_encoder_matches_trainer_segmentation(spark):
     texts = ["tokenize tokens token", "tokenize the token stream"]
     df = _corpus(spark, texts)
-    vocab = train_unigram(df, vocab_size=50)
+    vocab = train_unigram(df)
     logp = dict(vocab)
     out = {r.doc_id: r for r in unigram_tokenize(df, vocab).collect()}
     for i, t in enumerate(texts):
         words = t.split(" ")
         pieces, nll = [], 0.0
         for w in words:
-            ps, s = _viterbi(w, logp, max_piece_len=6)
+            ps, s = _viterbi(w, logp)
             pieces.extend(ps)
             nll -= s
         row = out[i]
@@ -99,7 +99,7 @@ def test_encoder_matches_trainer_segmentation(spark):
 
 def test_encoder_handles_unseen_text(spark):
     train = _corpus(spark, ["seen words only"])
-    vocab = train_unigram(train, vocab_size=30)
+    vocab = train_unigram(train)
     novel = spark.createDataFrame(
         [(0, "UNSEEN @#$ 象形文字")], "doc_id long, text string"
     )
@@ -112,7 +112,7 @@ def test_nll_orders_in_domain_before_gibberish(spark):
     train = _corpus(
         spark, ["data table scan join", "table scan filter join", "data join"]
     )
-    vocab = train_unigram(train, vocab_size=60)
+    vocab = train_unigram(train)
     probe = spark.createDataFrame(
         [(0, "data table join"), (1, "zqxv wkjy pfft")],
         "doc_id long, text string",
@@ -123,7 +123,7 @@ def test_nll_orders_in_domain_before_gibberish(spark):
 
 def test_empty_and_null_text(spark):
     train = _corpus(spark, ["some training words"])
-    vocab = train_unigram(train, vocab_size=30)
+    vocab = train_unigram(train)
     df = spark.createDataFrame(
         [(0, ""), (1, None)], "doc_id long, text string"
     )

@@ -53,13 +53,10 @@ def ann_recall_report(spark, sf_dir: str):
     )
     n_truth = F.broadcast(exact.groupBy().agg(F.count(F.lit(1)).alias("n_truth")))
     variants = {
-        "lsh": ann_cosine_topk(emb, queries, k=10, dim=64, num_planes=12),
-        "ivf": ivf_cosine_topk(emb, queries, k=10, n_centroids=16, n_probes=3),
-        "pq": pq_cosine_topk(emb, queries, k=10, m=8, n_codes=16, shortlist=50),
-        "ivfpq": ivfpq_cosine_topk(
-            emb, queries, k=10, n_centroids=16, n_probes=3, m=8, n_codes=16,
-            shortlist=50,
-        ),
+        "lsh": ann_cosine_topk(emb, queries, num_planes=12),
+        "ivf": ivf_cosine_topk(emb, queries),
+        "pq": pq_cosine_topk(emb, queries),
+        "ivfpq": ivfpq_cosine_topk(emb, queries),
     }
     reports = []
     for name, df in variants.items():

@@ -221,7 +221,7 @@ def image_probe(spark, n_ids: int):
 
     hashes = image_dhash(media_from_docs(ids, blobs)).cache()
     hashes.count()
-    return image_near_dup_pairs(hashes, "media_id", max_hamming=10)
+    return image_near_dup_pairs(hashes, "media_id")
 
 
 def _crawl_docs(spark, sf_dir: str):
