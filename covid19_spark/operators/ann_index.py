@@ -16,8 +16,8 @@ engine-portable) session can reopen the index:
 
 ``codes`` is partitioned by the IVF list id, which is what makes a probe a
 *file-pruning* operation: a query batch that probes ``IVF_PROBES`` of
-``n_centroids`` lists reads only those directories. ``ivfpq_index_topk``
-collects the batch's distinct probed list ids — bounded by ``n_centroids``
+``IVF_CENTROIDS`` lists reads only those directories. ``ivfpq_index_topk``
+collects the batch's distinct probed list ids — bounded by ``IVF_CENTROIDS``
 rows, a contract-small driver list regardless of corpus or batch size —
 and pushes them as a static ``centroid_id IN (...)`` partition filter, so
 the scan's ``PartitionFilters`` prune at planning time (pinned in
@@ -243,7 +243,7 @@ def ivfpq_index_topk(
     warrant more probes (the standard filtered-ANN tradeoff).
 
     The batch's DISTINCT probed list ids (``IVF_PROBES`` per query) — at
-    most ``n_centroids`` ints
+    most ``IVF_CENTROIDS`` ints
     however large the batch, a contract-small driver list — filter the
     codes with ``isin``, so the parquet scan carries a static
     ``PartitionFilters`` and untouched list directories are never opened.
@@ -264,5 +264,5 @@ def ivfpq_index_topk(
         )
     return ivfpq_search(
         codes, index.centroids, index.codebooks, corpus, queries,
-        m=meta["m"], n_codes=meta["n_codes"], id_col=id_col, vec_col=vec_col,
+        id_col=id_col, vec_col=vec_col,
     )

@@ -13,7 +13,7 @@ Spark-first construction, no UDFs anywhere:
 - build: each key expands to ``K`` positions ``pmod(xxhash64(key, seed_i),
   m)``; positions reduce to a ``(word, bits)`` frame via the ``bit_or``
   aggregate over 64-bit masks — ONE map + one bounded exchange (≤ m/64
-  rows regardless of corpus size; m is fixed by contract, so the filter
+  rows regardless of corpus size; m is ``M_BITS``, fixed, so the filter
   frame is broadcast-sized BY CONSTRUCTION, the same contract class as the
   BPE vocabulary cap).
 - probe: candidates expand to the same ``K`` positions, broadcast-join the
@@ -34,28 +34,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 K = 7  # probe bits per key
+M_BITS = 1 << 18  # filter width m
 
 
-def _positions(key, m_bits: int):
+def _positions(key):
     """Array of the ``K`` bit positions of a key column (xxhash64 family,
-    seeds ``41 .. 40+K``)."""
+    seeds ``41 .. 40+K``, modulo ``M_BITS``)."""
     return F.array(
         *[
-            F.pmod(F.xxhash64(key, F.lit(41 + i)), F.lit(m_bits))
+            F.pmod(F.xxhash64(key, F.lit(41 + i)), F.lit(M_BITS))
             for i in range(K)
         ]
     )
 
 
-def bloom_build(
-    df: DataFrame,
-    key_col: str,
-    m_bits: int = 1 << 20,
-) -> DataFrame:
+def bloom_build(df: DataFrame, key_col: str) -> DataFrame:
     """``(word, bits)`` Bloom bitmap of ``df[key_col]``: word = position
     div 64 (long), bits = OR of the 64-bit masks landing in that word.
-    At most ``m_bits/64`` rows — broadcastable at any corpus size."""
-    pos = F.explode(_positions(F.col(key_col), m_bits)).alias("__pos")
+    At most ``M_BITS/64`` rows — broadcastable at any corpus size."""
+    pos = F.explode(_positions(F.col(key_col))).alias("__pos")
     return (
         df.select(pos)
         .select(
@@ -71,19 +68,18 @@ def bloom_might_contain(
     candidates: DataFrame,
     bloom: DataFrame,
     key_col: str,
-    m_bits: int = 1 << 20,
 ) -> DataFrame:
     """``candidates`` + a ``might_contain`` boolean: true iff ALL ``K``
     probe bits are set. Guarantees: no false negatives (an indexed key
     always probes true); false positives at the Bloom rate.
 
     Plan: candidate → K probe rows → broadcast hash join on word →
-    per-candidate ``min(hit)``. The filter side never exceeds ``m_bits/64``
+    per-candidate ``min(hit)``. The filter side never exceeds ``M_BITS/64``
     rows; the only exchange on the candidate side is the K-row fold back
     to one row per candidate."""
     probe = candidates.select(
         F.col(key_col).alias("__key"),
-        F.posexplode(_positions(F.col(key_col), m_bits)).alias(
+        F.posexplode(_positions(F.col(key_col))).alias(
             "__i", "__pos"
         ),
     ).select(

@@ -114,11 +114,10 @@ def stratified_quota_sample(
     numbered in ``sample_rank``.
 
     One shuffle on the strata key; per-stratum sort is bounded by the stratum
-    size. For massive strata at 100 TB, pre-thin with :func:`hash_sample`
-    first so the sort sees a quarter of the rows — the md5 order of the
-    survivors is a uniform subsample of the md5 order of the stratum, so the
-    final quota set is unchanged as long as the pre-thin keeps ≥ 30 rows
-    per stratum.
+    size. :func:`hash_sample` keeps a fixed quarter of the rows (the lowest
+    md5 prefixes), so as a pre-thin it cuts a massive stratum's sort by 4x
+    and no more; the quota set is unchanged wherever the pre-thin keeps
+    ≥ 30 rows of the stratum, because both draws take the lowest md5s.
     """
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
     w = Window.partitionBy(*strata_cols).orderBy(*order)
@@ -166,7 +165,7 @@ def pii_counts(text: Column) -> dict[str, Column]:
 # ---------------------------------------------------------------------------
 
 def benchmark_shingles(bench: DataFrame, text_col: str) -> DataFrame:
-    """Distinct word-``n``-gram set of a benchmark/eval corpus → one
+    """Distinct word-4-gram set of a benchmark/eval corpus → one
     ``shingle`` column. Eval suites are tiny relative to the corpus; the
     result is meant to be broadcast."""
     return (

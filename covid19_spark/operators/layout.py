@@ -25,6 +25,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+Z_BITS = 8  # bits per dimension of the Z-order / Hilbert grid (256 cells)
+TARGET_BYTES = 65536  # 64 KiB compaction target
+
 
 def int_bucket(col: Column, vmin: Column, vmax: Column, bits: int) -> Column:
     """Rank-free quantization of ``col`` into ``[0, 2^bits)``:
@@ -39,19 +42,19 @@ def int_bucket(col: Column, vmin: Column, vmax: Column, bits: int) -> Column:
     ).cast("long")
 
 
-def morton_interleave(cols: Sequence[Column], bits: int) -> Column:
-    """Morton (Z-order) code: interleave ``bits`` low bits of each input
-    round-robin — column j's bit i lands at output position
+def morton_interleave(cols: Sequence[Column]) -> Column:
+    """Morton (Z-order) code: interleave the ``Z_BITS`` low bits of each
+    input round-robin — column j's bit i lands at output position
     ``i·n_cols + j``, so consecutive codes walk a Z-shaped curve through
-    the key grid. Pure shift/mask expression: ``n_cols × bits`` codegen'd
+    the key grid. Pure shift/mask expression: ``n_cols × Z_BITS`` codegen'd
     integer terms, no UDF, no shuffle."""
     cols = list(cols)
     n = len(cols)
     if not cols:
         raise ValueError("morton_interleave requires at least one column")
-    _check_morton_width(n, bits)
+    _check_morton_width(n)
     acc: Column | None = None
-    for i in range(bits):
+    for i in range(Z_BITS):
         for j, c in enumerate(cols):
             term = F.shiftleft(
                 F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1)), i * n + j
@@ -60,32 +63,30 @@ def morton_interleave(cols: Sequence[Column], bits: int) -> Column:
     return acc.cast("long")
 
 
-def _check_morton_width(n_cols: int, bits: int) -> None:
+def _check_morton_width(n_cols: int) -> None:
     """The interleaved code must fit the POSITIVE range of a 64-bit long:
-    bit position ``n_cols·bits − 1`` may not reach 63 (the sign bit breaks
-    range ordering) and certainly not 64+ (JVM shift amounts wrap mod 64,
-    silently COLLIDING distinct coordinates onto one code). Fail loudly
-    instead — callers trade ``bits`` down when interleaving many columns."""
-    if bits < 1:
-        raise ValueError(f"morton: bits must be >= 1, got {bits}")
-    if n_cols * bits > 63:
+    bit position ``n_cols·Z_BITS − 1`` may not reach 63 (the sign bit
+    breaks range ordering) and certainly not 64+ (JVM shift amounts wrap
+    mod 64, silently COLLIDING distinct coordinates onto one code). Fail
+    loudly instead: at most 7 columns interleave."""
+    if n_cols * Z_BITS > 63:
         raise ValueError(
-            f"morton: {n_cols} cols x {bits} bits = {n_cols * bits} code bits "
-            "exceeds the 63-bit positive-long budget (JVM shifts wrap mod 64, "
-            "which would alias distinct keys); reduce bits"
+            f"morton: {n_cols} cols x {Z_BITS} bits = {n_cols * Z_BITS} code "
+            "bits exceeds the 63-bit positive-long budget (JVM shifts wrap "
+            "mod 64, which would alias distinct keys)"
         )
 
 
-def morton_interleave_sql(col_names: Sequence[str], bits: int) -> str:
+def morton_interleave_sql(col_names: Sequence[str]) -> str:
     """The EXACT DuckDB/ANSI replay of ``morton_interleave`` — generated
     from the same (i, j) walk so the two engines agree bit for bit; used
     by the registry oracles."""
     names = list(col_names)
     n = len(names)
-    _check_morton_width(n, bits)
+    _check_morton_width(n)
     terms = [
         f"((({names[j]} >> {i}) & 1) << {i * n + j})"
-        for i in range(bits)
+        for i in range(Z_BITS)
         for j in range(n)
     ]
     return " + ".join(terms)
@@ -95,11 +96,10 @@ def compaction_bins(
     files: DataFrame,
     size_col: str,
     order_cols: Sequence[str],
-    target_bytes: int,
 ) -> DataFrame:
     """Assign manifest rows (files) to compaction bins (``bin``): walk
     files in ``order_cols`` order, cut a new bin whenever the running byte
-    total crosses ``target_bytes`` — ``bin = floor(cum_bytes_before / target)``,
+    total crosses ``TARGET_BYTES`` — ``bin = floor(cum_bytes_before / target)``,
     the streaming first-fit plan every table-maintenance service runs.
 
     Deliberately a GLOBAL-ORDER window: the input is a file MANIFEST
@@ -115,7 +115,7 @@ def compaction_bins(
     cum_before = F.sum(size_col).over(w) - F.col(size_col)
     return files.withColumn(
         "bin",
-        F.floor(cum_before.cast("double") / F.lit(float(target_bytes))).cast("long"),
+        F.floor(cum_before.cast("double") / F.lit(float(TARGET_BYTES))).cast("long"),
     )
 
 
@@ -157,15 +157,16 @@ def buckets_touched(
     )
 
 
-def _hilbert_level_exprs(s: int, side: int):
+def _hilbert_level_exprs(s: int):
     """The (rx, ry, quadrant, next-x, next-y) arithmetic of one Hilbert
-    xy2d level at sub-square size ``s`` in a ``side``×``side`` grid —
+    xy2d level at sub-square size ``s`` in the ``2^Z_BITS``-side grid —
     written ONCE as floor-division/CASE logic shared verbatim by the
     Column builder and the SQL generator, so the engines cannot drift.
     (rx, ry) extraction avoids bit operators on purpose:
     ``floor(x / s) % 2`` is plain portable arithmetic, and the rotation
     reflects against the FULL grid side (``side − 1``), per the standard
     xy2d recurrence."""
+    side = 1 << Z_BITS
     rx = f"(CAST(floor(__hx / {s}.0) AS BIGINT) % 2)"
     ry = f"(CAST(floor(__hy / {s}.0) AS BIGINT) % 2)"
     # d-contribution: s^2 * ((3*rx) XOR ry), spelled as the CASE square
@@ -188,11 +189,11 @@ def _hilbert_level_exprs(s: int, side: int):
     return quad, nx, ny
 
 
-def hilbert_code(df: DataFrame, x: str, y: str, bits: int) -> DataFrame:
+def hilbert_code(df: DataFrame, x: str, y: str) -> DataFrame:
     """Hilbert-curve index ``h`` of the 2-D grid cell (``x``, ``y``), both in
-    ``[0, 2^bits)`` (quantize with ``int_bucket`` first): the standard
+    ``[0, 2^Z_BITS)`` (quantize with ``int_bucket`` first): the standard
     iterative xy2d walk (one rotate/reflect step per bit level, MSB
-    down), unrolled as ``bits`` chained projections — linear expression
+    down), unrolled as ``Z_BITS`` chained projections — linear expression
     growth, whole-stage codegen'd, no UDF.
 
     Z-order (``morton_interleave``) jumps across the grid at every power-
@@ -202,8 +203,7 @@ def hilbert_code(df: DataFrame, x: str, y: str, bits: int) -> DataFrame:
     pruning model (``bucket_stats``/``buckets_touched``) skips more files
     on 2-D predicates. The trade: ~4 CASE expressions per level instead
     of Morton's pure shift/mask — identical scan shape, slightly wider
-    codegen. Fit guard shared with Morton: 2·bits ≤ 63."""
-    _check_morton_width(2, bits)
+    codegen."""
     # double-underscore work columns: a caller frame with its own hx/hy/hd
     # must not be clobbered by the unrolled walk
     work = df.withColumns(
@@ -213,9 +213,9 @@ def hilbert_code(df: DataFrame, x: str, y: str, bits: int) -> DataFrame:
             "__hd": F.lit(0).cast("long"),
         }
     )
-    for level in reversed(range(bits)):
+    for level in reversed(range(Z_BITS)):
         s = 1 << level
-        quad, nx, ny = _hilbert_level_exprs(s, 1 << bits)
+        quad, nx, ny = _hilbert_level_exprs(s)
         work = work.withColumns(
             {
                 "__hd": F.expr(f"__hd + {s * s} * {quad}"),
@@ -228,21 +228,20 @@ def hilbert_code(df: DataFrame, x: str, y: str, bits: int) -> DataFrame:
     )
 
 
-def hilbert_sql(src: str, x: str, y: str, bits: int, carry: Sequence[str]) -> str:
+def hilbert_sql(src: str, x: str, y: str, carry: Sequence[str]) -> str:
     """The EXACT DuckDB/ANSI replay of ``hilbert_code``: the same per-level
     expressions (shared ``_hilbert_level_exprs``) stacked as nested
     SELECTs — one subquery per bit level, linear SQL growth. ``src`` is
     the inner relation (a CTE name or ``(subquery)``), ``carry`` the
     passthrough columns; the result exposes ``carry + [h]``."""
-    _check_morton_width(2, bits)
     keep = ", ".join(carry)
     cur = (
         f"SELECT {keep}, CAST({x} AS BIGINT) AS __hx, "
         f"CAST({y} AS BIGINT) AS __hy, CAST(0 AS BIGINT) AS __hd FROM {src}"
     )
-    for level in reversed(range(bits)):
+    for level in reversed(range(Z_BITS)):
         s = 1 << level
-        quad, nx, ny = _hilbert_level_exprs(s, 1 << bits)
+        quad, nx, ny = _hilbert_level_exprs(s)
         cur = (
             f"SELECT {keep}, {nx} AS __hx, {ny} AS __hy, "
             f"__hd + {s * s} * {quad} AS __hd FROM ({cur})"
@@ -352,13 +351,11 @@ def files_bloom_touched(
     )
 
 
-def zrange_decompose(
-    x0: int, x1: int, y0: int, y1: int, bits: int
-) -> "list[tuple[int, int]]":
-    """Decompose the inclusive grid rectangle [x0..x1] × [y0..y1] into
-    disjoint Morton-code ranges covering EXACTLY its cells — the quadtree
-    walk behind every space-filling-curve spatial join: cells fully inside
-    the rectangle emit their whole contiguous z-range, straddling cells
+def zrange_decompose(x0: int, x1: int, y0: int, y1: int) -> "list[tuple[int, int]]":
+    """Decompose the inclusive rectangle [x0..x1] × [y0..y1] of the
+    ``Z_BITS`` grid into disjoint Morton-code ranges covering EXACTLY its
+    cells — the quadtree walk behind every space-filling-curve spatial
+    join: cells fully inside the rectangle emit their whole contiguous z-range, straddling cells
     recurse into 4 children.  Runs driver-side per QUERY rectangle (the
     contract-small side — a handful of integers each), and the ranges then
     broadcast against the point table's z column, where a z-sorted layout
@@ -370,22 +367,20 @@ def zrange_decompose(
     residual filter, so over-coverage costs scan, never correctness.
     Deterministic pure-integer arithmetic; adjacent emitted ranges are
     coalesced."""
-    if bits < 1 or 2 * bits > 63:
-        raise ValueError(f"bits out of range: {bits}")
-    side = 1 << bits
+    side = 1 << Z_BITS
     if not (0 <= x0 <= x1 < side and 0 <= y0 <= y1 < side):
         raise ValueError("rectangle out of grid bounds")
 
     def morton(x: int, y: int) -> int:
         z = 0
-        for i in range(bits):
+        for i in range(Z_BITS):
             z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
         return z
 
     out: list[tuple[int, int]] = []
     # stack of quadtree cells: (cell_x, cell_y, cell_bits) — a cell spans
     # 2^cell_bits per side and its codes are one contiguous z block
-    stack = [(0, 0, bits)]
+    stack = [(0, 0, Z_BITS)]
     while stack:
         cx, cy, cb = stack.pop()
         cs = 1 << cb

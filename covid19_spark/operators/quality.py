@@ -46,11 +46,6 @@ def expect_not_null(col: str) -> Rule:
     return Rule(f"{col}_not_null", F.col(col).isNotNull())
 
 
-def expect_in_range(col: str) -> Rule:
-    c = F.col(col)
-    return Rule(f"{col}_in_range", c.isNotNull() & (c >= 0.0) & (c <= 400000.0))
-
-
 def expect_in_set(col: str, values: Sequence) -> Rule:
     c = F.col(col)
     return Rule(f"{col}_in_set", c.isNotNull() & c.isin(*values))

@@ -34,6 +34,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+LMD_MU = 2000.0  # Dirichlet smoothing mass (Zhai & Lafferty's default)
+PREFIX_CAP = 8  # terms a prefix query expands to
+RRF_K0 = 60  # RRF constant (Cormack et al. 2009)
+RRF_TOP = 15  # fused rows kept per query
+
 #: BM25 term-frequency saturation and length normalization (the Robertson
 #: defaults), shared by every index scorer below.
 K1, B = 1.2, 0.75
@@ -93,11 +98,10 @@ def lm_dirichlet_scores_from_index(
     spark,
     index,
     terms: Sequence[str],
-    mu: float = 2000.0,
 ) -> DataFrame:
     """Query-likelihood ranking with Dirichlet smoothing (Zhai &
     Lafferty, SIGIR 2001 — Lucene's ``LMDirichletSimilarity``) served
-    from the persisted inverted index:
+    from the persisted inverted index, μ = ``LMD_MU``:
 
         score(q, d) = Σ_{t ∈ q∩C} log(1 + tf(t,d) / (μ·p(t|C)))
                       + |q| · log(μ / (dl + μ))
@@ -123,8 +127,6 @@ def lm_dirichlet_scores_from_index(
     )
 
     terms = list(dict.fromkeys(terms))
-    if mu <= 0:
-        raise ValueError(f"mu must be positive, got {mu}")
     if not index.total_tokens:
         raise ValueError(
             "index carries no total_tokens scalar (pre-v4 build?)"
@@ -137,7 +139,7 @@ def lm_dirichlet_scores_from_index(
     nq = float(len(terms))
     # μ·p(t|C) — exact integral cg over exact integral total, one IEEE
     # division then one multiply, identical order in the oracle
-    mu_pc = F.lit(float(mu)) * (
+    mu_pc = F.lit(LMD_MU) * (
         F.col("cg").cast("double") / F.lit(index.total_tokens)
     )
     per_term = tf.join(F.broadcast(cg), "t").select(
@@ -150,7 +152,7 @@ def lm_dirichlet_scores_from_index(
             (
                 F.sum(F.col("s").cast("decimal(38,18)")).cast("double")
                 + F.lit(nq)
-                * F.log(F.lit(float(mu)) / (F.max("dl") + F.lit(float(mu))))
+                * F.log(F.lit(LMD_MU) / (F.max("dl") + F.lit(LMD_MU)))
             ),
             6,
         ).alias("score")
@@ -161,11 +163,10 @@ def prefix_expand_terms(
     spark,
     index,
     prefix: str,
-    max_expansions: int = 10,
 ) -> DataFrame:
     """Prefix-query term expansion (Lucene ``PrefixQuery`` with the
     blended-rewrite cap): every indexed term starting with ``prefix``,
-    capped at the ``max_expansions`` highest-df terms (ties → term asc —
+    capped at the ``PREFIX_CAP`` highest-df terms (ties → term asc —
     fully deterministic, unlike Lucene's seg-order tiebreak).  Returns a
     one-column frame ``t`` for the data-dependent BM25 path
     (``bm25_scores_from_index`` broadcasts it onto the postings scan).
@@ -175,7 +176,7 @@ def prefix_expand_terms(
     ``termstats`` — VOCABULARY-sized, not corpus-sized (the reason the
     stats dataset exists separately from postings; Lucene walks its term
     dictionary the same way).  The cap is a two-stage top-k, so the
-    driver never sees more than ``max_expansions`` terms anywhere."""
+    driver never sees more than ``PREFIX_CAP`` terms anywhere."""
     from covid19_spark.operators.series import top_k
 
     if not prefix:
@@ -183,7 +184,7 @@ def prefix_expand_terms(
     matched = index.termstats.filter(
         F.col("t").startswith(prefix)
     ).select("t", "df")
-    capped = top_k(matched, "df", max_expansions, tiebreak_cols=["t"])
+    capped = top_k(matched, "df", PREFIX_CAP, tiebreak_cols=["t"])
     return capped.select("t")
 
 
@@ -705,12 +706,9 @@ def snippet_windows_from_index(
     )
 
 
-def rrf_fuse(
-    ranked: Sequence[tuple[str, DataFrame]],
-    k0: int = 60,
-    top_k: int = 10,
-) -> DataFrame:
-    """Fuse named rank lists into one RRF-ordered list per query.
+def rrf_fuse(ranked: Sequence[tuple[str, DataFrame]]) -> DataFrame:
+    """Fuse named rank lists into one RRF-ordered list per query
+    (``1 / (RRF_K0 + rank)`` per list).
 
     ``ranked``: (name, frame) pairs; each frame has ``query_id``,
     ``doc_id`` and an integer ``rank`` (1-based, UNIQUE per query —
@@ -719,8 +717,8 @@ def rrf_fuse(
     Output: one row per (query, doc) seen by ANY retriever, with each
     retriever's rank as ``<name>_rank`` (NULL where it did not rank the
     doc), the fused ``rrf_score``, and ``fused_rank`` (row_number over
-    score desc, id asc — fully tiebroken); rows with fused_rank > top_k
-    are dropped.
+    score desc, id asc — fully tiebroken); rows with fused_rank >
+    ``RRF_TOP`` are dropped.
 
     The join is full-outer on (query, id) so a doc surfaced by only one
     retriever still competes — that is RRF's point; an inner join would
@@ -730,8 +728,6 @@ def rrf_fuse(
     """
     if not ranked:
         raise ValueError("rrf_fuse needs at least one ranked list")
-    if k0 <= 0:
-        raise ValueError(f"k0 must be positive, got {k0}")
     names = [name for name, _ in ranked]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate retriever names: {names}")
@@ -750,7 +746,7 @@ def rrf_fuse(
     score: Column | None = None
     for name in names:
         term = F.coalesce(
-            F.lit(1.0) / (F.lit(float(k0)) + F.col(f"{name}_rank")),
+            F.lit(1.0) / (F.lit(float(RRF_K0)) + F.col(f"{name}_rank")),
             F.lit(0.0),
         )
         score = term if score is None else score + term
@@ -761,7 +757,7 @@ def rrf_fuse(
     )
     return (
         out.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= top_k)
+        .filter(F.col("fused_rank") <= RRF_TOP)
     )
 
 

@@ -182,9 +182,9 @@ def top_k(
     k: int,
     partition_cols: Sequence[str] = (),
     tiebreak_cols: Sequence[str] = (),
-    rank_col: str = "rank",
 ) -> DataFrame:
-    """True top-k by measure (W3's rank variant, vs the hardcoded list).
+    """True top-k by measure (W3's rank variant, vs the hardcoded list),
+    ranked 1..k in an int ``rank`` column.
 
     Partitioned top-k is a rank window (one exchange on the partition keys).
 
@@ -203,11 +203,11 @@ def top_k(
         top = df.orderBy(*order).limit(k)
         # Ranking the ≤ k survivors through the ordered-index path keeps the
         # whole operator free of partition-less WindowExec nodes.
-        return with_ordered_index(top, order, idx_col=rank_col).withColumn(
-            rank_col, F.col(rank_col).cast("int")
+        return with_ordered_index(top, order, idx_col="rank").withColumn(
+            "rank", F.col("rank").cast("int")
         )
     w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def interpolate_series(

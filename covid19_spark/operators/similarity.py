@@ -121,22 +121,22 @@ def _pq_codes_sql(m: int) -> str:
     )
 
 
-def _adc_tab_sql(m: int) -> str:
+def _adc_tab_sql() -> str:
     """Flat ADC lookup table over the normalized query ``__qn`` and the
     codebook column ``__cb``: dot(q_sub(s), codeword) ordered by (sub,
     code)."""
     return (
         f"transform(sort_array(transform(__cb, e -> struct(e.sub, e.code, e.cvec))), "
-        f"e -> aggregate(zip_with({_sub_slice_sql('__qn', m, 'e.sub')}, e.cvec, "
+        f"e -> aggregate(zip_with({_sub_slice_sql('__qn', PQ_M, 'e.sub')}, e.cvec, "
         f"(a, b) -> a * b), 0.0D, (a, x) -> a + x))"
     )
 
 
-def _adc_score_sql(m: int, n_codes: int, tab: str) -> str:
-    """Σ_s tab[s * n_codes + codes[s]] — the m-lookup ADC score fold."""
+def _adc_score_sql(tab: str) -> str:
+    """Σ_s tab[s * PQ_CODES + codes[s]] — the PQ_M-lookup ADC score fold."""
     return (
-        f"aggregate(sequence(0, {m - 1}), 0.0D, (acc, s) -> acc + element_at({tab}, "
-        f"CAST(s * {n_codes} + element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))"
+        f"aggregate(sequence(0, {PQ_M - 1}), 0.0D, (acc, s) -> acc + element_at({tab}, "
+        f"CAST(s * {PQ_CODES} + element_at(codes, CAST(s + 1 AS INT)) + 1 AS INT)))"
     )
 
 
@@ -540,7 +540,7 @@ WHERE rank <= {TOPK}
     )
 
 
-def _fit_quantizers_driver(ids, vecs, n_centroids: int, m: int, n_codes: int):
+def _fit_quantizers_driver(ids, vecs):
     """Driver-side numpy twin of one Lloyd round of ``ivf_train_centroids``
     + ``pq_train_codebooks``, semantics replicated exactly: lowest-id seeds,
     assign by max dot (IVF) / min squared L2 on normalize-then-slice
@@ -553,13 +553,13 @@ def _fit_quantizers_driver(ids, vecs, n_centroids: int, m: int, n_codes: int):
     than an ulp for real embeddings; the registry fixture pins the final
     top-k bit-exactly either way.
 
-    Returns (centroids, codebooks): (k, dim) array and (m, k', sub_dim)
-    array, k and k' capped at the sample size like the distributed twins
-    (limit(k) of a smaller frame)."""
+    Returns (centroids, codebooks): (k, dim) array and (PQ_M, k', sub_dim)
+    array, k = ``IVF_CENTROIDS`` and k' = ``PQ_CODES`` capped at the sample
+    size like the distributed twins (limit(k) of a smaller frame)."""
     order = np.argsort(np.asarray(ids, dtype=np.int64), kind="stable")
     v = np.asarray([vecs[i] for i in order], dtype=np.float64)
     n, dim = v.shape
-    kc = min(n_centroids, n)
+    kc = min(IVF_CENTROIDS, n)
     seeds = v[:kc].copy()  # rows already in ascending-id order
     assign = np.argmax(v @ seeds.T, axis=1)  # first max → lowest centroid_id
     centroids = seeds.copy()
@@ -568,16 +568,16 @@ def _fit_quantizers_driver(ids, vecs, n_centroids: int, m: int, n_codes: int):
         if mask.any():
             centroids[c] = v[mask].mean(axis=0)
 
-    codebooks = _pq_codebooks_from_sorted(v, m, n_codes)
-    return centroids, codebooks
+    return centroids, _pq_codebooks_from_sorted(v)
 
 
-def _pq_codebooks_from_sorted(v: "np.ndarray", m: int, n_codes: int):
+def _pq_codebooks_from_sorted(v: "np.ndarray"):
     """PQ half of the driver fit, over an ascending-id-sorted (n, dim)
     matrix: normalize-then-slice subvectors, lowest-id seeds, one Lloyd
     round with first-min (lowest-code) ties and empty-cluster-keeps-seed —
-    the exact ``pq_train_codebooks(iterations=1)`` semantics (see
-    ``_fit_quantizers_driver`` for the ulp caveat on numpy sum order)."""
+    the exact ``pq_train_codebooks(m=PQ_M, k=PQ_CODES, iterations=1)``
+    semantics (see ``_fit_quantizers_driver`` for the ulp caveat on numpy
+    sum order)."""
     n, dim = v.shape
     norms = np.sqrt((v * v).sum(axis=1))
     # zero-norm guard (ADVICE r09): a zero embedding normalizes to ITSELF
@@ -586,9 +586,10 @@ def _pq_codebooks_from_sorted(v: "np.ndarray", m: int, n_codes: int):
     # the same rule the distributed ``_normalized_vec`` twin applies.
     norms[norms == 0] = 1.0
     nv = v / norms[:, None]
+    m = PQ_M
     d = dim // m  # Spark's (size/m).cast("int") slice width; tail dropped
     subs = nv[:, : m * d].reshape(n, m, d)
-    kq = min(n_codes, n)
+    kq = min(PQ_CODES, n)
     codebooks = np.empty((m, kq, d), dtype=np.float64)
     for s in range(m):
         x = subs[:, s, :]
@@ -612,7 +613,7 @@ def _fit_pq_codebooks_driver(ids, vecs):
     collect-order-independent."""
     order = np.argsort(np.asarray(ids, dtype=np.int64), kind="stable")
     v = np.asarray([vecs[i] for i in order], dtype=np.float64)
-    return _pq_codebooks_from_sorted(v, PQ_M, PQ_CODES)
+    return _pq_codebooks_from_sorted(v)
 
 
 def ivfpq_cosine_topk(
@@ -651,9 +652,7 @@ def ivfpq_cosine_topk(
     # verifies the composite through.
     centroids, codebooks = ivfpq_quantizers(corpus, centroids, codebooks)
     codes = ivfpq_encode(corpus, centroids, codebooks)
-    return ivfpq_search(
-        codes, centroids, codebooks, corpus, queries, m=PQ_M, n_codes=PQ_CODES
-    )
+    return ivfpq_search(codes, centroids, codebooks, corpus, queries)
 
 
 def ivfpq_quantizers(
@@ -674,7 +673,7 @@ def ivfpq_quantizers(
             .collect()
         )
         cents, cbs = _fit_quantizers_driver(
-            [r["__id"] for r in rows], [r["__v"] for r in rows], IVF_CENTROIDS, PQ_M, PQ_CODES
+            [r["__id"] for r in rows], [r["__v"] for r in rows]
         )
         spark = corpus.sparkSession
         if centroids is None:
@@ -734,14 +733,12 @@ def ivfpq_search(
     codebooks: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
-    m: int,
-    n_codes: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The query half of IVF-PQ over an already-built ``codes`` frame
     (in-memory from ``ivfpq_encode`` or read back from a persisted index,
-    whose meta records ``m``/``n_codes``): ``IVF_PROBES`` probes, ADC
+    whose meta must record ``PQ_M``/``PQ_CODES``): ``IVF_PROBES`` probes, ADC
     table-lookup scoring of only the probed lists, exact-cosine rerank of
     the ``SHORTLIST`` against the full-precision
     ``corpus`` (cold storage). Extracted verbatim from ``ivfpq_cosine_topk``
@@ -777,7 +774,7 @@ __probes AS (
   LATERAL VIEW explode(slice({_nearest_centroids_sql()}, 1, {IVF_PROBES})) AS __p
 ),
 __qtabs AS (
-  SELECT /*+ BROADCAST(c) */ query_id, {_adc_tab_sql(m)} AS __tab
+  SELECT /*+ BROADCAST(c) */ query_id, {_adc_tab_sql()} AS __tab
   FROM (SELECT `{id_col}` AS query_id, {_norm_sql(vec_col, guard=False)} AS __qn FROM {{__queries}}) q
   CROSS JOIN __cbrow c
 ),
@@ -787,7 +784,7 @@ __ptabs AS (
 ),
 __adc AS (
   SELECT /*+ BROADCAST(pt) */ pt.query_id, c.`{id_col}` AS neighbor_id,
-         {_adc_score_sql(m, n_codes, tab='pt.__tab')} AS adc_score
+         {_adc_score_sql('pt.__tab')} AS adc_score
   FROM {{__codes}} c JOIN __ptabs pt USING (centroid_id)
   WHERE c.`{id_col}` != pt.query_id
 ),
@@ -1255,13 +1252,13 @@ __codes AS (
   CROSS JOIN __cbrow cb
 ),
 __qtabs AS (
-  SELECT /*+ BROADCAST(cb) */ query_id, {_adc_tab_sql(PQ_M)} AS __tab
+  SELECT /*+ BROADCAST(cb) */ query_id, {_adc_tab_sql()} AS __tab
   FROM (SELECT `vec_id` AS query_id, {_norm_sql("embedding", guard=False)} AS __qn FROM {{__queries}}) q
   CROSS JOIN __cbrow cb
 ),
 __adc AS (
   SELECT /*+ BROADCAST(t) */ t.query_id, c.`vec_id` AS neighbor_id,
-         {_adc_score_sql(PQ_M, PQ_CODES, tab='t.__tab')} AS adc_score
+         {_adc_score_sql('t.__tab')} AS adc_score
   FROM __codes c CROSS JOIN __qtabs t
   WHERE c.`vec_id` != t.query_id
 ),

@@ -7,9 +7,9 @@ shape, VERDICT r09 task #4):
 
   1. DISTRIBUTED: one corpus scan aggregating word frequencies
      (``bpe.word_counts`` — map-side combined, vocabulary-sized output),
-     capped to the top ``max_vocab_candidates`` rows by (count desc, word
-     asc) BEFORE the collect, so the driver frame is bounded by contract
-     even on web text whose distinct-"word" set grows without bound.
+     capped to the top 5M rows by (count desc, word asc) BEFORE the
+     collect, so the driver frame is bounded by contract even on web text
+     whose distinct-"word" set grows without bound.
   2. DRIVER: seed extraction + EM + pruning run over that aggregate. EM
      is inherently sequential (each iteration's expected counts depend on
      the previous iteration's probabilities) and touches only the capped

@@ -2122,7 +2122,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle joins to the live doc domain, the ``png_image_features``
     pattern).
 
-    Scale shape: one holdout scan → ≤ m/64-row bitmap (ONE bounded
+    Scale shape: one holdout scan → ≤ M_BITS/64-row bitmap (ONE bounded
     exchange), broadcast probe join + per-doc k-bit fold — the corpus is
     never joined against the holdout set row-for-row."""
     from covid19_spark.operators.bloom import bloom_build, bloom_might_contain
@@ -2132,8 +2132,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", fingerprint(F.col("text")).alias("__fp")
     )
     holdout = docs.filter(F.col("doc_id") % 10 == 7).select("__fp")
-    bloom = bloom_build(holdout, "__fp", m_bits=1 << 18)
-    flagged = bloom_might_contain(docs, bloom, "__fp", m_bits=1 << 18)
+    bloom = bloom_build(holdout, "__fp")
+    flagged = bloom_might_contain(docs, bloom, "__fp")
     return (
         flagged.select(
             "doc_id",

@@ -399,13 +399,13 @@ def _morton_col(x: Column, y: Column) -> Column:
     between consumers). x occupies even bit positions, y odd."""
     from covid19_spark.operators.layout import morton_interleave
 
-    return morton_interleave([x, y], 8)
+    return morton_interleave([x, y])
 
 
 def _morton_sql(x: str, y: str) -> str:
     from covid19_spark.operators.layout import morton_interleave_sql
 
-    return morton_interleave_sql([x, y], 8)
+    return morton_interleave_sql([x, y])
 
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:

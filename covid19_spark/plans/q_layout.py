@@ -27,10 +27,11 @@ from covid19_spark.operators.layout import (
     int_bucket,
     morton_interleave,
     morton_interleave_sql,
+    TARGET_BYTES,
+    Z_BITS,
 )
 from covid19_spark.plans.base import QUERY_REGISTRY, QuerySpec, _t
 
-_BITS = 8  # 256 buckets per dimension; z in [0, 65536)
 
 # 64 coarse "files": z >> 10. Shared by the clustering + pruning queries.
 _Z_SHIFT = 10
@@ -51,7 +52,7 @@ q AS (
   FROM orders CROSS JOIN b
 ),
 z AS (
-  SELECT cb, db, CAST({morton_interleave_sql(["cb", "db"], _BITS)} AS BIGINT) AS z FROM q
+  SELECT cb, db, CAST({morton_interleave_sql(["cb", "db"])} AS BIGINT) AS z FROM q
 )
 """
 
@@ -66,11 +67,11 @@ def _bucketed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("days").alias("mnd"), F.max("days").alias("mxd"),
     )
     coded = src.crossJoin(F.broadcast(bounds)).select(
-        int_bucket(F.col("o_custkey"), F.col("mnc"), F.col("mxc"), _BITS).alias("cb"),
-        int_bucket(F.col("days"), F.col("mnd"), F.col("mxd"), _BITS).alias("db"),
+        int_bucket(F.col("o_custkey"), F.col("mnc"), F.col("mxc"), Z_BITS).alias("cb"),
+        int_bucket(F.col("days"), F.col("mnd"), F.col("mxd"), Z_BITS).alias("db"),
     )
     return coded.withColumn(
-        "z", morton_interleave([F.col("cb"), F.col("db")], _BITS)
+        "z", morton_interleave([F.col("cb"), F.col("db")])
     )
 
 
@@ -114,9 +115,6 @@ ORDER BY 1
 """
 
 
-_TARGET_BYTES = 65536  # 64 KiB compaction target for the doc manifest
-
-
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction planner over the documents "manifest" (each doc stands
     in for a small file, its byte size = octet length): walk files in
@@ -128,7 +126,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.octet_length("text").cast("long").alias("bytes")
     )
-    binned = compaction_bins(docs, "bytes", ["doc_id"], _TARGET_BYTES)
+    binned = compaction_bins(docs, "bytes", ["doc_id"])
     return (
         binned.groupBy("bin")
         .agg(
@@ -156,7 +154,7 @@ c AS (
   SELECT doc_id, bytes,
          CAST(floor(CAST(sum(bytes) OVER (ORDER BY doc_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - bytes
-                AS DOUBLE) / {float(_TARGET_BYTES)}) AS BIGINT) AS bin
+                AS DOUBLE) / {float(TARGET_BYTES)}) AS BIGINT) AS bin
   FROM m
 )
 SELECT bin,
@@ -281,7 +279,7 @@ def q_hilbert_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped.  Plan shape is identical to Z-order: scan → broadcast one-row
     bounds → map (8 unrolled rotate/reflect levels, pure CASE/floor
     arithmetic, codegen'd) → 64-group agg."""
-    coded = hilbert_code(_bucketed_orders(spark, sf_dir), "cb", "db", _BITS)
+    coded = hilbert_code(_bucketed_orders(spark, sf_dir), "cb", "db")
     return (
         coded.withColumn("hfile", F.shiftright("h", _Z_SHIFT))
         .groupBy("hfile")
@@ -302,7 +300,7 @@ def q_hilbert_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_HILBERT_CLUSTERING = f"""
 WITH {_BUCKETED_ORDERS_SQL},
-h AS ({hilbert_sql("q", "cb", "db", _BITS, ["cb", "db"])})
+h AS ({hilbert_sql("q", "cb", "db", ["cb", "db"])})
 SELECT CAST(h >> {_Z_SHIFT} AS BIGINT) AS hfile,
        CAST(count(*) AS BIGINT) AS n_orders,
        CAST(max(cb) - min(cb) + 1 AS BIGINT) AS cust_span,
@@ -330,7 +328,7 @@ def q_bloom_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens, files a Bloom reader opens (⊇ truth by the no-false-skip
     contract; both pinned in tests).
 
-    Scale: the index build is one map + bit_or agg (≤ m_bits/32 words per
+    Scale: the index build is one map + bit_or agg (≤ BLOOM_BITS/32 words per
     file); probing broadcast-joins 3 positions per probe against the words
     frame.  All arithmetic md5/integer — full cross-engine value oracle."""
     from covid19_spark.operators.layout import (
@@ -487,7 +485,7 @@ def q_zrange_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _bucketed_orders(spark, sf_dir)
     rows = []
     for rid, x0, x1, y0, y1 in _ZJOIN_RECTS:
-        for lo, hi in zrange_decompose(x0, x1, y0, y1, _BITS):
+        for lo, hi in zrange_decompose(x0, x1, y0, y1):
             rows.append((rid, x0, x1, y0, y1, lo, hi))
     ranges = spark.createDataFrame(
         rows, "rect_id long, x0 long, x1 long, y0 long, y1 long, lo long, hi long"

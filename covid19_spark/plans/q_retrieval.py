@@ -23,8 +23,6 @@ from covid19_spark.plans.base import QUERY_REGISTRY, QuerySpec, _t
 _TERMS = ("spark", "hash", "window", "vector")
 _QVEC = 3  # embeddings row serving as the dense form of the user query
 _LIST_K = 50  # depth of each retriever's rank list
-_K0 = 60  # RRF constant (Cormack et al. 2009)
-_TOP = 15
 
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,9 +65,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, emb.filter(F.col("vec_id") == _QVEC), k=_LIST_K
     ).select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
     lex = _bm25_ranked(spark, sf_dir)
-    fused = rrf_fuse(
-        [("lex", lex), ("dense", dense)], k0=_K0, top_k=_TOP
-    )
+    fused = rrf_fuse([("lex", lex), ("dense", dense)])
     return fused.select(
         "query_id", "doc_id", "lex_rank", "dense_rank", "rrf_score", "fused_rank"
     ).orderBy("fused_rank")
@@ -1236,7 +1232,6 @@ QUERY_REGISTRY["bm25f_ranking"] = QuerySpec(
 
 
 _LMD_TERMS = ("spark", "hash", "join")
-_LMD_MU = 2000.0
 
 
 def q_lm_dirichlet_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,9 +1249,7 @@ def q_lm_dirichlet_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.sources.index import ensure_inverted_index
 
     idx = ensure_inverted_index(spark, sf_dir)
-    scored = lm_dirichlet_scores_from_index(
-        spark, idx, list(_LMD_TERMS), mu=_LMD_MU
-    )
+    scored = lm_dirichlet_scores_from_index(spark, idx, list(_LMD_TERMS))
     ranked = top_k(scored, "score", 20, tiebreak_cols=["doc_id"])
     return ranked.select(
         "doc_id", "score", F.col("rank").cast("long").alias("rank")
@@ -1311,7 +1304,6 @@ QUERY_REGISTRY["lm_dirichlet_ranking"] = QuerySpec(
 
 
 _PREFIX = "s"
-_PREFIX_CAP = 8
 
 
 def q_prefix_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,9 +1320,7 @@ def q_prefix_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid19_spark.sources.index import ensure_inverted_index
 
     idx = ensure_inverted_index(spark, sf_dir)
-    expansion = prefix_expand_terms(
-        spark, idx, _PREFIX, max_expansions=_PREFIX_CAP
-    )
+    expansion = prefix_expand_terms(spark, idx, _PREFIX)
     scored = bm25_scores_from_index(spark, idx, expansion)
     ranked = top_k(scored, "score", 20, tiebreak_cols=["doc_id"])
     return ranked.select(

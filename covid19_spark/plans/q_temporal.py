@@ -1007,7 +1007,7 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     then stacked long-form. The quarantine row-split twin is pinned by
     tests/test_quality.py."""
     from covid19_spark.operators.quality import (
-        expect_in_range,
+        Rule,
         expect_in_set,
         expect_matches,
         expect_not_null,
@@ -1016,10 +1016,14 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = _t(spark, sf_dir, "orders")
+    price = F.col("o_totalprice")
     rules = [
         expect_not_null("o_custkey"),
         expect_unique("o_orderkey"),
-        expect_in_range("o_totalprice"),
+        Rule(
+            "o_totalprice_in_range",
+            price.isNotNull() & (price >= 0.0) & (price <= 400000.0),
+        ),
         expect_in_set("o_orderstatus", ["O", "F", "P"]),
         expect_matches("o_orderpriority", "^[1-5]-"),
     ]

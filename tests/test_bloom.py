@@ -4,7 +4,7 @@ partitionings."""
 
 from pyspark.sql import functions as F
 
-from covid19_spark.operators.bloom import K, bloom_build, bloom_might_contain
+from covid19_spark.operators.bloom import K, M_BITS, bloom_build, bloom_might_contain
 
 
 def _keys(spark, lo, hi, parts=4):
@@ -15,18 +15,20 @@ def _keys(spark, lo, hi, parts=4):
 
 def test_no_false_negatives(spark):
     indexed = _keys(spark, 0, 2000)
-    bloom = bloom_build(indexed, "key", m_bits=1 << 15)
-    flagged = bloom_might_contain(indexed, bloom, "key", m_bits=1 << 15)
+    bloom = bloom_build(indexed, "key")
+    flagged = bloom_might_contain(indexed, bloom, "key")
     assert flagged.filter(~F.col("might_contain")).count() == 0
 
 
 def test_false_positive_rate_within_bound(spark):
     import math
 
-    n, m, k = 2000, 1 << 15, K
-    bloom = bloom_build(_keys(spark, 0, n), "key", m_bits=m)
+    # ~10 bits per key, the design point: a ~0.8 % rate is measurable on
+    # 10k outsiders
+    n, m, k = 26_000, M_BITS, K
+    bloom = bloom_build(_keys(spark, 0, n), "key")
     outsiders = _keys(spark, 100_000, 110_000)
-    fp = bloom_might_contain(outsiders, bloom, "key", m_bits=m).filter(
+    fp = bloom_might_contain(outsiders, bloom, "key").filter(
         F.col("might_contain")
     ).count()
     theory = (1 - math.exp(-k * n / m)) ** k
@@ -36,14 +38,14 @@ def test_false_positive_rate_within_bound(spark):
 
 
 def test_bitmap_is_contract_bounded(spark):
-    m = 1 << 12
-    bloom = bloom_build(_keys(spark, 0, 50_000), "key", m_bits=m)
-    assert bloom.count() <= m // 64  # words only, regardless of corpus size
+    # 350k probe bits fold into at most M_BITS/64 = 4096 words
+    bloom = bloom_build(_keys(spark, 0, 50_000), "key")
+    assert bloom.count() <= M_BITS // 64  # words only, regardless of corpus size
 
 
 def test_deterministic_across_partitionings(spark):
-    a = bloom_build(_keys(spark, 0, 500, parts=1), "key", m_bits=1 << 14)
-    b = bloom_build(_keys(spark, 0, 500, parts=13), "key", m_bits=1 << 14)
+    a = bloom_build(_keys(spark, 0, 500, parts=1), "key")
+    b = bloom_build(_keys(spark, 0, 500, parts=13), "key")
     ra = {r.word: r.bits for r in a.collect()}
     rb = {r.word: r.bits for r in b.collect()}
     assert ra == rb
@@ -52,10 +54,8 @@ def test_deterministic_across_partitionings(spark):
 def test_probe_misses_empty_words(spark):
     """A candidate probing a word absent from the bitmap frame must read
     as bit-not-set (left join null path), not null-poison the AND."""
-    bloom = bloom_build(_keys(spark, 0, 4), "key", m_bits=1 << 20)
-    out = bloom_might_contain(
-        _keys(spark, 1_000_000, 1_000_050), bloom, "key", m_bits=1 << 20
-    )
+    bloom = bloom_build(_keys(spark, 0, 4), "key")
+    out = bloom_might_contain(_keys(spark, 1_000_000, 1_000_050), bloom, "key")
     rows = out.collect()
     assert len(rows) == 50
     assert all(r.might_contain is False for r in rows)  # sparse bitmap, no FPs here
@@ -66,20 +66,15 @@ def test_probe_handles_awkward_column_names(spark):
     """A key column whose name needs backticks in SQL (space, hyphen)
     binds correctly in the probe and gives the same verdicts as a plainly
     named column."""
-    m = 1 << 13
-    bloom = bloom_build(_keys(spark, 0, 500), "key", m_bits=m)
+    bloom = bloom_build(_keys(spark, 0, 500), "key")
     cands = _keys(spark, 0, 1000).withColumnRenamed("key", "doc key-1")
     got = {
         r["doc key-1"]: r.might_contain
-        for r in bloom_might_contain(
-            cands, bloom, "doc key-1", m_bits=m
-        ).collect()
+        for r in bloom_might_contain(cands, bloom, "doc key-1").collect()
     }
     ref = {
         r.key: r.might_contain
-        for r in bloom_might_contain(
-            _keys(spark, 0, 1000), bloom, "key", m_bits=m
-        ).collect()
+        for r in bloom_might_contain(_keys(spark, 0, 1000), bloom, "key").collect()
     }
     assert got == ref
     assert all(got[f"doc:{i}"] for i in range(500))

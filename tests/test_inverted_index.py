@@ -193,6 +193,44 @@ def test_snippet_windows(spark, sf_dir, tmp_path):
     assert wide[3] == (0, 3, "spark spark spark filter")
 
 
+def _doc_of(length, hits):
+    """A ``length``-token text: ``hits`` maps position -> term, filler
+    tokens ``f<pos>`` elsewhere."""
+    return " ".join(hits.get(p, f"f{p}") for p in range(length))
+
+
+def test_snippet_window_choice(spark, tmp_path):
+    """The best 10-token window has the most hits, and the earliest start
+    among windows that tie on the most.  Doc 1 hits at 0 4 | 15 19 24 26
+    29: the window at 0 holds 2, the windows at 15, 19 and 24 hold 3 each
+    (the one at 15 only because its last token, 24, is in), so 15 wins;
+    a 9-token window would pick 19.  Doc 2 hits at 2 5 | 16 19: two
+    windows tie at 2 hits, the earlier (2) wins."""
+    from covid19_spark.operators.retrieval import snippet_windows_from_index
+    from covid19_spark.sources.index import (
+        build_inverted_index_from, read_inverted_index,
+    )
+
+    a, b = "alpha", "beta"
+    text = {
+        1: _doc_of(30, {0: a, 4: b, 15: a, 19: b, 24: a, 26: b, 29: a}),
+        2: _doc_of(25, {2: a, 5: b, 16: a, 19: b}),
+    }
+    docs = spark.createDataFrame(sorted(text.items()), "doc_id long, text string")
+    path = str(tmp_path / "winidx")
+    build_inverted_index_from(docs, path)
+    idx = read_inverted_index(spark, path)
+    got = {
+        r.doc_id: (r.best_start, r.n_hits, r.snippet)
+        for r in snippet_windows_from_index(spark, idx, docs, [a, b]).collect()
+    }
+    words = {i: t.split(" ") for i, t in text.items()}
+    assert got == {
+        1: (15, 3, " ".join(words[1][15:25])),
+        2: (2, 2, " ".join(words[2][2:12])),
+    }
+
+
 def test_unordered_window_counts(spark, sf_dir, tmp_path):
     """SDM uw(8) feature: pair counts hand-checked on the fixture corpus,
     including the same-term case where both (p, q) and (q, p) count."""
@@ -219,6 +257,46 @@ def test_unordered_window_counts(spark, sf_dir, tmp_path):
     # same term: ordered pairs both ways — doc3 spark{0,1,2}: 6 pairs;
     # doc1 spark{0,2}: 2 pairs
     assert uw("spark", "spark") == {3: 6, 1: 2}
+
+
+def test_window_edges(spark, tmp_path):
+    """The 8-token uw window counts pairs at distance 7 but not 8, and
+    slop 2 proximity matches a gap of 3 positions but not 4.  Doc 1:
+    apple 0, berry 7, cherry 10, apple 15; doc 2: berry 0, cherry 4."""
+    from covid19_spark.operators.retrieval import (
+        proximity_match_from_index, unordered_window_count_from_index,
+    )
+    from covid19_spark.sources.index import (
+        build_inverted_index_from, read_inverted_index,
+    )
+
+    text = {
+        1: _doc_of(16, {0: "apple", 7: "berry", 10: "cherry", 15: "apple"}),
+        2: _doc_of(5, {0: "berry", 4: "cherry"}),
+    }
+    docs = spark.createDataFrame(sorted(text.items()), "doc_id long, text string")
+    path = str(tmp_path / "edgeidx")
+    build_inverted_index_from(docs, path)
+    idx = read_inverted_index(spark, path)
+
+    def uw(a, b):
+        return {
+            r.doc_id: r.n_uw
+            for r in unordered_window_count_from_index(spark, idx, a, b).collect()
+        }
+
+    def prox(terms):
+        return {
+            r.doc_id: r.n_matches
+            for r in proximity_match_from_index(spark, idx, terms).collect()
+        }
+
+    # apple{0,15} x berry{7}: distance 7 counts, distance 8 does not
+    assert uw("apple", "berry") == {1: 1}
+    # apple 0 and 15 are 15 apart: no same-term pair in the window
+    assert uw("apple", "apple") == {}
+    # berry -> cherry: 3 positions on in doc 1 (2 tokens between), 4 in doc 2
+    assert prox(["berry", "cherry"]) == {1: 1}
 
 
 def test_proximity_match_within_slop(spark, sf_dir, tmp_path):

@@ -15,13 +15,13 @@ from covid19_spark.operators.layout import (
 
 
 def test_morton_interleave_hand_case(spark):
-    # cb=0b011, db=0b101, bits=3: cb bits land at even positions, db at
-    # odd -> z = 1 + 2 + 4 + 32 = 39
-    df = spark.createDataFrame([(3, 5)], "cb long, db long")
+    # cb=0b011, db=0b101: cb bits land at even positions, db at odd ->
+    # z = 1 + 2 + 4 + 32 = 39; cb=db=255 fills all 16 code bits
+    df = spark.createDataFrame([(3, 5), (255, 255)], "cb long, db long")
     out = df.select(
-        morton_interleave([F.col("cb"), F.col("db")], 3).alias("z")
+        morton_interleave([F.col("cb"), F.col("db")]).alias("z")
     ).collect()
-    assert out[0].z == 39
+    assert [r.z for r in out] == [39, 65535]
 
 
 def test_morton_sql_twin_matches_spark(spark):
@@ -34,11 +34,11 @@ def test_morton_sql_twin_matches_spark(spark):
     got = {
         (r.cb, r.db): r.z
         for r in df.select(
-            "cb", "db", morton_interleave([F.col("cb"), F.col("db")], 8).alias("z")
+            "cb", "db", morton_interleave([F.col("cb"), F.col("db")]).alias("z")
         ).collect()
     }
     con = duckdb.connect()
-    expr = morton_interleave_sql(["cb", "db"], 8)
+    expr = morton_interleave_sql(["cb", "db"])
     for (a, b), z in got.items():
         assert con.execute(f"SELECT {expr} FROM (SELECT {a} cb, {b} db)").fetchone()[0] == z
 
@@ -55,13 +55,13 @@ def test_int_bucket_bounds_and_monotonicity(spark):
 
 def test_compaction_bins_first_fit_hand_case(spark):
     files = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, 30), (4, 40)], "fid long, bytes long"
+        [(1, 20000), (2, 30000), (3, 20000), (4, 40000)], "fid long, bytes long"
     )
     out = {
         r.fid: r.bin
-        for r in compaction_bins(files, "bytes", ["fid"], target_bytes=50).collect()
+        for r in compaction_bins(files, "bytes", ["fid"]).collect()
     }
-    # cum_before: 0, 10, 30, 60 -> bins 0, 0, 0, 1
+    # 64 KiB target; cum_before: 0, 20000, 50000, 70000 -> bins 0, 0, 0, 1
     assert out == {1: 0, 2: 0, 3: 0, 4: 1}
 
 
@@ -91,27 +91,27 @@ def test_morton_width_guard(spark):
     from pyspark.sql import functions as F
 
     with pytest.raises(ValueError, match="63-bit"):
-        morton_interleave([F.col("a")] * 8, bits=8)  # 64 code bits
+        morton_interleave([F.col("a")] * 8)  # 64 code bits
     with pytest.raises(ValueError, match="63-bit"):
-        morton_interleave_sql(["a"] * 9, bits=8)
-    with pytest.raises(ValueError, match="bits"):
-        morton_interleave([F.col("a")], bits=0)
-    # 63 code bits (positions 0..62) is the last legal width
-    assert morton_interleave_sql(["a"] * 7, bits=9).count("<<") == 63
+        morton_interleave_sql(["a"] * 8)
+    # 7 columns (56 code bits) is the widest legal interleave
+    assert morton_interleave_sql(["a"] * 7).count("<<") == 56
 
 
 def test_hilbert_bijective_and_continuous(spark):
-    """The defining Hilbert properties on the full 16x16 grid: every cell
-    gets a distinct code in [0, 256) (bijection) and consecutive codes are
-    grid NEIGHBORS (|dx|+|dy| == 1) — the continuity Z-order lacks."""
+    """The defining Hilbert properties on the full 256x256 grid: every
+    cell gets a distinct code in [0, 65536) (bijection) and consecutive
+    codes are grid NEIGHBORS (|dx|+|dy| == 1) — the continuity Z-order
+    lacks."""
     from covid19_spark.operators.layout import hilbert_code
 
-    rows = [(a, b) for a in range(16) for b in range(16)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    got = {(r.x, r.y): r.h for r in hilbert_code(df, "x", "y", 4).collect()}
-    assert sorted(got.values()) == list(range(256))
+    df = spark.range(256 * 256).select(
+        (F.col("id") % 256).alias("x"), (F.col("id") / 256).cast("long").alias("y")
+    )
+    got = {(r.x, r.y): r.h for r in hilbert_code(df, "x", "y").collect()}
+    assert sorted(got.values()) == list(range(256 * 256))
     inv = {v: k for k, v in got.items()}
-    for d in range(255):
+    for d in range(256 * 256 - 1):
         (x1, y1), (x2, y2) = inv[d], inv[d + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1
 
@@ -126,7 +126,7 @@ def test_hilbert_sql_twin_matches_spark(spark):
     rows = [(a, b) for a in (0, 1, 7, 128, 255) for b in (0, 3, 64, 200, 255)]
     df = spark.createDataFrame(rows, "x long, y long")
     got = {
-        (r.x, r.y): r.h for r in hilbert_code(df, "x", "y", 8).collect()
+        (r.x, r.y): r.h for r in hilbert_code(df, "x", "y").collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -137,24 +137,25 @@ def test_hilbert_sql_twin_matches_spark(spark):
     twin = {
         (x, y): h
         for x, y, h in con.execute(
-            hilbert_sql("g", "x", "y", 8, ["x", "y"])
+            hilbert_sql("g", "x", "y", ["x", "y"])
         ).fetchall()
     }
     assert twin == got
 
 
 def test_hilbert_locality_beats_morton_on_equal_cuts(spark):
-    """Cut both curves over the full 16x16 grid into 16 equal files: the
-    Hilbert files' summed per-dimension spans must be at most Morton's
-    (continuity -> tighter footer stats on the same data)."""
+    """Cut both curves over the 16x16 low corner of the grid (codes 0..255
+    on both curves) into 16 equal files: the Hilbert files' summed
+    per-dimension spans must be at most Morton's (continuity -> tighter
+    footer stats on the same data)."""
     from pyspark.sql import functions as F
 
     from covid19_spark.operators.layout import hilbert_code, morton_interleave
 
     rows = [(a, b) for a in range(16) for b in range(16)]
     df = spark.createDataFrame(rows, "x long, y long")
-    coded = hilbert_code(df, "x", "y", 4).withColumn(
-        "z", morton_interleave([F.col("x"), F.col("y")], 4)
+    coded = hilbert_code(df, "x", "y").withColumn(
+        "z", morton_interleave([F.col("x"), F.col("y")])
     )
 
     def span_total(col):
@@ -172,13 +173,17 @@ def test_hilbert_locality_beats_morton_on_equal_cuts(spark):
 
 
 def test_hilbert_width_guard(spark):
-    import pytest
+    """Hilbert codes of the 256x256 grid fill exactly 2·Z_BITS = 16 bits:
+    the curve starts at (0, 0) with code 0 and ends at the other bottom
+    corner (255, 0) with code 65535, far inside the positive long range."""
+    from covid19_spark.operators.layout import Z_BITS, hilbert_code
 
-    from covid19_spark.operators.layout import hilbert_code
-
-    df = spark.createDataFrame([(1, 1)], "x long, y long")
-    with pytest.raises(ValueError, match="63-bit"):
-        hilbert_code(df, "x", "y", 32)
+    corners = [(0, 0), (0, 255), (255, 255), (255, 0)]
+    df = spark.createDataFrame(corners, "x long, y long")
+    got = {(r.x, r.y): r.h for r in hilbert_code(df, "x", "y").collect()}
+    assert got[(0, 0)] == 0
+    assert got[(255, 0)] == (1 << 2 * Z_BITS) - 1 == 65535
+    assert all(0 <= h < 1 << 2 * Z_BITS for h in got.values())
 
 
 def test_file_bloom_no_false_skips_and_bounded(spark):
@@ -230,21 +235,21 @@ def test_file_bloom_masks_stay_positive(spark):
 
 def test_zrange_decompose_exact_coverage():
     """Decomposition within the 32-range budget covers EXACTLY the
-    rectangle's Morton codes (exhaustive over a grid of rectangles at
-    bits=4)."""
+    rectangle's Morton codes (exhaustive over each rectangle's cells)."""
     from covid19_spark.operators.layout import zrange_decompose
 
-    def morton(x, y, bits=4):
+    def morton(x, y, bits=8):
         z = 0
         for i in range(bits):
             z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
         return z
 
     for x0, x1, y0, y1 in [
-        (0, 15, 0, 15), (0, 0, 0, 0), (3, 11, 5, 13), (1, 2, 14, 15),
-        (7, 8, 7, 8),  # straddles the top-level quad split
+        (0, 255, 0, 255), (0, 15, 0, 15), (0, 0, 0, 0), (3, 11, 5, 13),
+        (1, 2, 14, 15), (200, 255, 64, 127),
+        (127, 128, 127, 128),  # straddles the top-level quad split
     ]:
-        ranges = zrange_decompose(x0, x1, y0, y1, 4)
+        ranges = zrange_decompose(x0, x1, y0, y1)
         covered = set()
         for lo, hi in ranges:
             assert lo <= hi
@@ -261,7 +266,7 @@ def test_zrange_decompose_exact_coverage():
 def test_zrange_decompose_cap_overcovers_never_undercovers():
     from covid19_spark.operators.layout import zrange_decompose
 
-    def morton(x, y, bits=4):
+    def morton(x, y, bits=8):
         z = 0
         for i in range(bits):
             z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
@@ -269,7 +274,7 @@ def test_zrange_decompose_cap_overcovers_never_undercovers():
 
     # this rectangle needs 28 exact ranges: the 32-range budget stops the
     # recursion early and over-covers
-    ranges = zrange_decompose(3, 12, 2, 13, 4)
+    ranges = zrange_decompose(3, 12, 2, 13)
     cells = {morton(x, y) for x in range(3, 13) for y in range(2, 14)}
     covered = set()
     for lo, hi in ranges:
@@ -283,6 +288,6 @@ def test_zrange_decompose_guards():
     from covid19_spark.operators.layout import zrange_decompose
 
     with pytest.raises(ValueError, match="out of grid"):
-        zrange_decompose(0, 16, 0, 3, 4)
-    with pytest.raises(ValueError, match="bits"):
-        zrange_decompose(0, 1, 0, 1, 40)
+        zrange_decompose(0, 256, 0, 3)
+    with pytest.raises(ValueError, match="out of grid"):
+        zrange_decompose(5, 4, 0, 3)

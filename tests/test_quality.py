@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from covid19_spark.operators.quality import (
-    expect_in_range,
+    Rule,
     expect_in_set,
     expect_matches,
     expect_not_null,
@@ -26,7 +26,7 @@ def rules():
     return [
         expect_not_null("email"),
         expect_unique("id"),
-        expect_in_range("price"),
+        Rule("price_in_range", F.col("price").isNotNull() & (F.col("price") >= 0.0)),
         expect_in_set("status", ["O", "F"]),
         expect_matches("email", "^[^@]+@[^@]+$"),
     ]

@@ -26,11 +26,13 @@ method that no program call passes (by keyword or position; the package's
 own code counts as a program), unless ``KEEP_OPTIONS`` names it with a
 reason.  Callees resolve through the same aliases, and methods match by
 name; a def some program call forwards ``*args``/``**kwargs`` to, or that
-program code uses as a value, is exempt, and so are the defs ``KEEP``
-names.  A fourth check, over the same calls and exemptions, fails on any
-int, float or bool parameter (defaulted or required) that every program
-call sets to the same literal — a call that omits a defaulted parameter
-sets its default — unless ``KEEP_OPTIONS`` names it.
+program code uses as a value (a name no enclosing function rebinds), is
+exempt, and so are the defs ``KEEP`` names.  A fourth check, over the same
+calls and exemptions, fails on any int, float or bool parameter
+(defaulted or required) that every program call sets to the same literal
+— a call that omits a defaulted parameter sets its default; arithmetic
+over literals is folded (``1 << 18``), and a module constant bound once
+to such a value counts as that value — unless ``KEEP_OPTIONS`` names it.
 
 A fifth check fails on any top-level assignment of a package module that
 no program-reached code reads (a ``KEEP`` entry may name a constant).
@@ -40,6 +42,7 @@ from __future__ import annotations
 
 import ast
 import functools
+import operator
 import re
 from pathlib import Path
 
@@ -179,6 +182,22 @@ class _Module:
             for target in (stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target])
             for t in ast.walk(target)
             if isinstance(t, ast.Name) and not t.id.startswith("__")
+        }
+        # NAME = <literal arithmetic>, bound once and never rebound by a
+        # ``global`` (the values the option check sees through a name)
+        assigned = [
+            (s.targets[0] if isinstance(s, ast.Assign) else s.target, s.value)
+            for s in tree.body
+            if isinstance(s, (ast.Assign, ast.AnnAssign)) and s.value is not None
+            and (isinstance(s, ast.AnnAssign) or len(s.targets) == 1)
+        ]
+        rebound = {n for node in ast.walk(tree) if isinstance(node, ast.Global) for n in node.names}
+        once = [t.id for t, _ in assigned if isinstance(t, ast.Name)]
+        self.literals = {
+            t.id: lit
+            for t, v in assigned
+            if isinstance(t, ast.Name) and once.count(t.id) == 1
+            and t.id not in rebound and (lit := _literal(v))
         }
         top = []
         for stmt in tree.body:
@@ -496,17 +515,62 @@ def _named_defs(graph: _Graph, module: _Module, expr, by_method: dict) -> set:
     return out
 
 
-def _literal(expr):
-    """An int, float or bool literal (a negated number too) as ``(type,
-    value)``, else None."""
-    sign = 1
-    if isinstance(expr, ast.UnaryOp) and isinstance(expr.op, ast.USub):
-        sign, expr = -1, expr.operand
-    if not isinstance(expr, ast.Constant) or type(expr.value) not in (int, float, bool):
+_FOLD = {
+    ast.Add: operator.add, ast.Sub: operator.sub, ast.Mult: operator.mul,
+    ast.Div: operator.truediv, ast.FloorDiv: operator.floordiv,
+    ast.Mod: operator.mod, ast.Pow: operator.pow, ast.LShift: operator.lshift,
+    ast.RShift: operator.rshift, ast.BitOr: operator.or_,
+    ast.BitAnd: operator.and_, ast.BitXor: operator.xor,
+    ast.USub: operator.neg, ast.UAdd: operator.pos, ast.Invert: operator.invert,
+}
+
+
+def _literal(expr, name=lambda expr: None):
+    """An int, float or bool literal as ``(type, value)``, else None.
+    Arithmetic over such literals (``-1``, ``1 << 18``, ``2 ** 20``) is
+    folded to its value; bool operands only pass through unchanged.
+    ``name`` gives the literal a name or attribute expression stands for,
+    if any."""
+    if isinstance(expr, ast.Constant):
+        v = expr.value
+        return (type(v).__name__, v) if type(v) in (int, float, bool) else None
+    if isinstance(expr, (ast.Name, ast.Attribute)):
+        return name(expr)
+    if isinstance(expr, ast.UnaryOp) and type(expr.op) in _FOLD:
+        operands = [_literal(expr.operand, name)]
+    elif isinstance(expr, ast.BinOp) and type(expr.op) in _FOLD:
+        operands = [_literal(expr.left, name), _literal(expr.right, name)]
+    else:
         return None
-    if sign == -1 and isinstance(expr.value, bool):
+    if any(o is None or o[0] == "bool" for o in operands):
         return None
-    return (type(expr.value).__name__, -expr.value if sign < 0 else expr.value)
+    try:
+        v = _FOLD[type(expr.op)](*(o[1] for o in operands))
+    except (ArithmeticError, ValueError):
+        return None
+    return (type(v).__name__, v)
+
+
+def _constant_literals(graph: _Graph, module: _Module):
+    """The ``name`` hook of ``_literal`` for code in ``module``: a name or
+    ``alias.NAME`` chain that resolves to a literal module constant (its
+    own, an imported one, or one behind a module alias) stands for its
+    value."""
+
+    def look(expr):
+        dotted = None
+        if isinstance(expr, ast.Name):
+            if expr.id in module.literals:
+                return module.literals[expr.id]
+            dotted = module.aliases.get(expr.id)
+        elif isinstance(expr.value, ast.Name) and expr.value.id in module.aliases:
+            dotted = f"{module.aliases[expr.value.id]}.{expr.attr}"
+        key = graph.resolve(dotted) if dotted else None
+        if key and key[0] == "const":
+            return graph.modules[key[1]].literals.get(key[2])
+        return None
+
+    return look
 
 
 def option_uses(graph: _Graph):
@@ -514,7 +578,8 @@ def option_uses(graph: _Graph):
     passes, each triple's values over all calls, the defs exempt from the
     check) over every program call: the package's own code and the program
     roots.  A value is the literal the call passes (an omitted parameter
-    passes its default), or None for any other expression."""
+    passes its default), a literal module constant it names, or None for
+    any other expression."""
     defs = _package_defs(graph)
     by_method: dict[str, set] = {}
     for mod, qual in defs:
@@ -524,6 +589,7 @@ def option_uses(graph: _Graph):
     values: dict[tuple[str, str, str], set] = {}
     exempt = {k for k, d in defs.items() if d.wrapped}
     for module in [*graph.modules.values(), *graph.roots]:
+        here = _constant_literals(graph, module)
         called = set()
         for node in ast.walk(module.tree):
             if not isinstance(node, ast.Call):
@@ -540,17 +606,37 @@ def option_uses(graph: _Graph):
                 args = dict(zip(d.positional, node.args))
                 args.update((k.arg, k.value) for k in node.keywords)
                 passed |= {(*key, n) for n in args}
+                home = _constant_literals(graph, graph.modules[key[0]])
                 for name, default in d.defaults.items():
-                    value = args.get(name, default)
-                    values.setdefault((*key, name), set()).add(value and _literal(value))
-        for node in ast.walk(module.tree):
-            if (
-                isinstance(node, (ast.Name, ast.Attribute))
-                and isinstance(node.ctx, ast.Load)
-                and id(node) not in called
-            ):
-                exempt |= _named_defs(graph, module, node, by_method) & defs.keys()
+                    value = (
+                        _literal(args[name], here) if name in args
+                        else default and _literal(default, home)
+                    )
+                    values.setdefault((*key, name), set()).add(value)
+        for node in _value_uses(module.tree, called):
+            exempt |= _named_defs(graph, module, node, by_method) & defs.keys()
     return defs, passed, values, exempt
+
+
+def _value_uses(node, called: set, shadow=frozenset()):
+    """The name and attribute loads under ``node`` that are not a call's
+    callee, skipping those whose base name an enclosing function binds (a
+    local ``top_k = 15`` is not the imported ``top_k``)."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            yield from _value_uses(child, called, shadow | _Code([child], "", {}).binds)
+            continue
+        if (
+            isinstance(child, (ast.Name, ast.Attribute))
+            and isinstance(child.ctx, ast.Load)
+            and id(child) not in called
+        ):
+            base = child
+            while isinstance(base, ast.Attribute):
+                base = base.value
+            if not (isinstance(base, ast.Name) and base.id in shadow):
+                yield child
+        yield from _value_uses(child, called, shadow)
 
 
 def _checked_defs(graph: _Graph, defs: dict, exempt: set):
@@ -642,8 +728,9 @@ def test_every_module_constant_is_read():
 
 
 _SELF_TEST_SOURCE = """
-USED = 0
+USED = 1 << 4
 UNREAD = 1
+REBOUND = 2
 
 def by_keyword(x, a=1): ...
 def by_position(x, a=1): ...
@@ -654,6 +741,14 @@ def one_literal(x, n): ...
 def two_literals(x, n): ...
 def not_literal(x, n=3): ...
 def default_and_other(x, n=3): ...
+def folded(x, n): ...
+def by_constant(x, n): ...
+def by_rebound(x, n): ...
+def shadowed(x, a=1): ...
+
+def rebind():
+    global REBOUND
+    REBOUND = 3
 
 class Store:
     def get(self, key, default=None): ...
@@ -670,9 +765,19 @@ def program(kwargs, store, x):
     two_literals(x, 5)
     two_literals(x, 6)
     not_literal(x, 3)
-    not_literal(x, n=USED)
+    not_literal(x, n=x)
     default_and_other(x)
     default_and_other(x, n=4)
+    folded(x, 1 << 4)
+    folded(x, n=16)
+    by_constant(x, n=USED)
+    by_constant(x, 16)
+    by_rebound(x, REBOUND)
+    by_rebound(x, 2)
+    shadowed(x)
+
+def local_name(shadowed):
+    return shadowed
 """
 _SELF_TEST_ROOT = "from covid19_spark._option_gate_probe import program\nprogram()\n"
 
@@ -682,20 +787,30 @@ def test_option_gate_self_test():
     pass, a positional pass (a method's ``self`` skipped) and a
     ``**kwargs`` forward count as set, a def used as a value is exempt, an
     option nobody passes fails.  Single literals: one literal at every call
-    (an omitted default included) fails; two literals, a non-literal
-    argument, or an omitted default plus another literal pass.  A keep
-    entry that names nothing flagged is a fault.  Constants: one only the
-    unreached code reads fails."""
+    (an omitted default included, arithmetic folded, a constant read
+    through its name) fails; two literals, a non-literal argument, an
+    omitted default plus another literal, or a constant some ``global``
+    rebinds pass.  A def whose name only a function's own local of that
+    name loads is not used as a value.  A keep entry that names nothing
+    flagged is a fault.  Constants: one only the unreached code reads
+    fails."""
     planted = _Module(ROOT / PACKAGE / "_option_gate_probe.py", _SELF_TEST_SOURCE)
     root = _Module(ROOT / "tools" / "_option_gate_root.py", _SELF_TEST_ROOT)
     graph = _Graph(modules=[planted], roots=[root])
     unset = unset_options(graph)
-    assert unset == ["_option_gate_probe.nobody(a)", "_option_gate_probe.nobody(b)"]
+    assert unset == [
+        "_option_gate_probe.nobody(a)",
+        "_option_gate_probe.nobody(b)",
+        "_option_gate_probe.shadowed(a)",
+    ]
     literals = single_literals(graph)
     assert literals == {
         "_option_gate_probe.nobody(a)": 1,
         "_option_gate_probe.nobody(b)": 2,
+        "_option_gate_probe.shadowed(a)": 1,
         "_option_gate_probe.one_literal(n)": 5,
+        "_option_gate_probe.folded(n)": 16,
+        "_option_gate_probe.by_constant(n)": 16,
     }
     keep = {
         "_option_gate_probe.nobody(a)": "test reaches the probe",

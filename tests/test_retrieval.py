@@ -25,7 +25,7 @@ def test_rrf_hand_case(spark):
     lex, dense = _lists(spark)
     rows = {
         r.doc_id: r
-        for r in rrf_fuse([("lex", lex), ("dense", dense)], top_k=10).collect()
+        for r in rrf_fuse([("lex", lex), ("dense", dense)]).collect()
     }
     assert rows[20].rrf_score == pytest.approx(1 / 62 + 1 / 61, abs=0)
     assert rows[10].rrf_score == pytest.approx(1 / 61 + 1 / 63, abs=0)
@@ -42,7 +42,7 @@ def test_rrf_full_outer_not_consensus(spark):
     inner): with disjoint lists every doc survives."""
     a = spark.createDataFrame([(1, 1, 1)], "query_id long, doc_id long, rank long")
     b = spark.createDataFrame([(1, 2, 1)], "query_id long, doc_id long, rank long")
-    out = rrf_fuse([("a", a), ("b", b)], top_k=10).collect()
+    out = rrf_fuse([("a", a), ("b", b)]).collect()
     assert sorted(r.doc_id for r in out) == [1, 2]
     # equal scores tiebreak on doc_id ascending
     by_id = {r.doc_id: r.fused_rank for r in out}
@@ -50,22 +50,22 @@ def test_rrf_full_outer_not_consensus(spark):
 
 
 def test_rrf_top_k_and_per_query_isolation(spark):
-    """fused_rank restarts per query; top_k truncates within each query."""
-    rows = [(q, d, r) for q in (1, 2) for r, d in enumerate([5, 6, 7], 1)]
+    """fused_rank restarts per query; the top 15 survive within each
+    query (17 ranked docs per query here)."""
+    rows = [(q, d, r) for q in (1, 2) for r, d in enumerate(range(100, 117), 1)]
     lst = spark.createDataFrame(rows, "query_id long, doc_id long, rank long")
-    out = rrf_fuse([("only", lst)], top_k=2).collect()
-    assert len(out) == 4
+    out = rrf_fuse([("only", lst)]).collect()
+    assert len(out) == 30
     assert {(r.query_id, r.fused_rank) for r in out} == {
-        (1, 1), (1, 2), (2, 1), (2, 2)
+        (q, k) for q in (1, 2) for k in range(1, 16)
     }
+    assert max(r.doc_id for r in out) == 114  # docs ranked 16, 17 dropped
 
 
 def test_rrf_guards(spark):
     lex, _ = _lists(spark)
     with pytest.raises(ValueError, match="at least one"):
         rrf_fuse([])
-    with pytest.raises(ValueError, match="k0"):
-        rrf_fuse([("lex", lex)], k0=0)
     with pytest.raises(ValueError, match="duplicate"):
         rrf_fuse([("lex", lex), ("lex", lex)])
 
@@ -381,9 +381,10 @@ def _mk_lmd_index(spark, tmp_path):
 
 def test_lm_dirichlet_hand_case(spark, tmp_path):
     """Zhai-Lafferty hand computation: corpus {1: 'a b a', 2: 'b c'},
-    total=5, cg(a)=2, cg(c)=1; query ['a','c'], mu=2:
-    doc1 = ln(1 + 2/(2*0.4)) + 2*ln(2/(3+2)); doc2 = ln(1 + 1/(2*0.2))
-    + 2*ln(2/(2+2)) — both per-term logs happen to be ln(3.5)."""
+    total=5, cg(a)=2, cg(c)=1; query ['a','c'], mu=2000:
+    doc1 = ln(1 + 2/(2000*0.4)) + 2*ln(2000/(3+2000)); doc2 =
+    ln(1 + 1/(2000*0.2)) + 2*ln(2000/(2+2000)) — both per-term logs are
+    ln(1.0025)."""
     import math
 
     from covid19_spark.operators.retrieval import (
@@ -394,12 +395,10 @@ def test_lm_dirichlet_hand_case(spark, tmp_path):
     assert idx.total_tokens == 5.0
     got = {
         r.doc_id: r.score
-        for r in lm_dirichlet_scores_from_index(
-            spark, idx, ["a", "c"], mu=2.0
-        ).collect()
+        for r in lm_dirichlet_scores_from_index(spark, idx, ["a", "c"]).collect()
     }
-    want1 = round(math.log(3.5) + 2.0 * math.log(2.0 / 5.0), 6)
-    want2 = round(math.log(3.5) + 2.0 * math.log(2.0 / 4.0), 6)
+    want1 = round(math.log(1.0025) + 2.0 * math.log(2000.0 / 2003.0), 6)
+    want2 = round(math.log(1.0025) + 2.0 * math.log(2000.0 / 2002.0), 6)
     assert got == {1: pytest.approx(want1, abs=1e-9),
                    2: pytest.approx(want2, abs=1e-9)}
 
@@ -416,44 +415,49 @@ def test_lm_dirichlet_oov_shifts_never_reorders(spark, tmp_path):
     idx = _mk_lmd_index(spark, tmp_path)
     base = {
         r.doc_id: r.score
-        for r in lm_dirichlet_scores_from_index(spark, idx, ["a"], mu=2.0).collect()
+        for r in lm_dirichlet_scores_from_index(spark, idx, ["a"]).collect()
     }
     oov = {
         r.doc_id: r.score
-        for r in lm_dirichlet_scores_from_index(
-            spark, idx, ["a", "zzz"], mu=2.0
-        ).collect()
+        for r in lm_dirichlet_scores_from_index(spark, idx, ["a", "zzz"]).collect()
     }
     assert set(base) == set(oov) == {1}  # only doc 1 contains 'a'
     assert oov[1] < base[1]  # extra |q| count deepens the correction
-    with pytest.raises(ValueError, match="mu"):
-        lm_dirichlet_scores_from_index(spark, idx, ["a"], mu=0.0)
 
 
 def test_prefix_expand_cap_and_equivalence(spark, tmp_path):
-    """Prefix expansion: highest-df terms win the cap (df desc, t asc
-    tiebreak), and prefix BM25 == literal BM25 over the expanded set."""
+    """Prefix expansion: the 8 highest-df terms win the cap (df desc, t
+    asc tiebreak), and prefix BM25 == literal BM25 over the expanded set."""
     from covid19_spark.operators.retrieval import (
         bm25_scores_from_index, prefix_expand_terms,
     )
-
-    idx_path, idx = _mk_index(spark, tmp_path)
-    # corpus terms: spark(df 2), scan(1), hash(2), window(1), row(1), ...
-    exp = [r.t for r in prefix_expand_terms(spark, idx, "s", max_expansions=1).collect()]
-    assert exp == ["spark"]  # df 2 beats scan's df 1
-    exp2 = sorted(
-        r.t for r in prefix_expand_terms(spark, idx, "s", max_expansions=10).collect()
+    from covid19_spark.sources.index import (
+        build_inverted_index_from, read_inverted_index,
     )
-    assert exp2 == ["scan", "spark"]
+
+    # s1..s6 in 2 docs each, sa..sd in 1 doc each, plus non-s terms
+    docs = spark.createDataFrame(
+        [
+            (1, "s1 s2 s3 s4 s5 s6 sa sb hash"),
+            (2, "s1 s2 s3 s4 s5 s6 sc sd window"),
+        ],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "pfxidx")
+    build_inverted_index_from(docs, path)
+    idx = read_inverted_index(spark, path)
+    exp = sorted(r.t for r in prefix_expand_terms(spark, idx, "s").collect())
+    # df 2 beats df 1; among the df-1 terms sa, sb win on term order
+    assert exp == ["s1", "s2", "s3", "s4", "s5", "s6", "sa", "sb"]
     via_frame = {
         r.doc_id: r.score
         for r in bm25_scores_from_index(
-            spark, idx, prefix_expand_terms(spark, idx, "s", max_expansions=10)
+            spark, idx, prefix_expand_terms(spark, idx, "s")
         ).collect()
     }
     via_literal = {
         r.doc_id: r.score
-        for r in bm25_scores_from_index(spark, idx, ["scan", "spark"]).collect()
+        for r in bm25_scores_from_index(spark, idx, exp).collect()
     }
     assert via_frame == via_literal
     with pytest.raises(ValueError, match="prefix"):

@@ -519,7 +519,7 @@ def test_driver_fit_matches_distributed_trainers(spark):
         F.col("embedding").cast("array<double>").alias("__v"),
     ).collect()
     cents, cbs = _fit_quantizers_driver(
-        [r["__id"] for r in rows], [r["__v"] for r in rows], 16, 8, 16
+        [r["__id"] for r in rows], [r["__v"] for r in rows]
     )
     dist_c = {r.centroid_id: np.array(r.cvec) for r in ivf_train_centroids(emb, 16).collect()}
     assert sorted(dist_c) == list(range(1, 17))
@@ -545,22 +545,22 @@ def test_driver_fit_zero_norm_vector_matches_distributed(spark):
         pq_train_codebooks,
     )
 
+    # 40 rows of 16 dims: 16 IVF centroids, 8 PQ subvectors of 2 dims with
+    # 16 codes each (the registry's shape), so clusters hold several rows
     rng = np.random.default_rng(7)
-    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(12)]
-    rows[3] = (3, [0.0] * 8)  # the zero-norm row
+    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(40)]
+    rows[3] = (3, [0.0] * 16)  # the zero-norm row, one of the seeds
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    cents, cbs = _fit_quantizers_driver(
-        [r[0] for r in rows], [r[1] for r in rows], 4, 2, 4
-    )
+    cents, cbs = _fit_quantizers_driver([r[0] for r in rows], [r[1] for r in rows])
     assert np.isfinite(cents).all() and np.isfinite(cbs).all()
 
-    dist_c = {r.centroid_id: np.array(r.cvec) for r in ivf_train_centroids(emb, 4).collect()}
-    for i in range(4):
+    dist_c = {r.centroid_id: np.array(r.cvec) for r in ivf_train_centroids(emb, 16).collect()}
+    for i in range(16):
         assert np.allclose(cents[i], dist_c[i + 1], rtol=0, atol=1e-12), i
-    dist_cb = {(r.sub, r.code): np.array(r.cvec) for r in pq_train_codebooks(emb, 2, 4).collect()}
-    for s in range(2):
-        for j in range(4):
+    dist_cb = {(r.sub, r.code): np.array(r.cvec) for r in pq_train_codebooks(emb, 8, 16).collect()}
+    for s in range(8):
+        for j in range(16):
             assert np.isfinite(dist_cb[(s, j)]).all(), (s, j)
             assert np.allclose(cbs[s][j], dist_cb[(s, j)], rtol=0, atol=1e-12), (s, j)
 
